@@ -19,42 +19,64 @@ import org.apache.spark.sql.SparkSession
   * tail still carries the totals.
   */
 object Bench {
+  /** Seconds to run query `name` through the `noop` sink, then release
+    * whatever it persisted. Isolation hygiene: queries that
+    * localCheckpoint (dup clusters, keeper selection) leave blocks pinned
+    * in the block manager until the RDD is GC'd; 90 queries in, that
+    * stolen execution memory made q88 7x slower in the r5 full run than
+    * in isolation. The release runs even when the query throws. */
+  private[graft] def runOnce(spark: SparkSession, sfDir: String,
+      name: String): Double = {
+    val t0 = System.nanoTime()
+    try {
+      SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    } finally release(spark)
+  }
+
+  /** Unpersist every RDD and clear the cache so the next query starts
+    * with the block manager's memory free. */
+  private[graft] def release(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    spark.catalog.clearCache()
+  }
+
+  /** Round number of a board artifact: `BENCH_r22.json` → 22. */
+  private[graft] def roundOf(f: java.io.File): Int =
+    "\\d+".r.findFirstIn(f.getName).get.toInt
+
+  /** Retest reference in `dir` and, for the staleness warning, the newest
+    * round artifact written after it. The committed `bench_ref.json`
+    * snapshot outranks the round artifacts; without it the newest
+    * `BENCH_r<N>.json` by round number is the reference. "Newest" is by
+    * round number, not file name: `BENCH_r9` sorts after `BENCH_r22`. */
+  private[graft] def refIn(dir: java.io.File)
+      : (Option[java.io.File], Option[java.io.File]) = {
+    val snap = new java.io.File(dir, "bench_ref.json")
+    val rounds = Option(dir.listFiles()).toSeq.flatten
+      .filter(_.getName.matches("BENCH_r\\d+\\.json"))
+    if (snap.isFile)
+      (Some(snap), rounds.filter(_.lastModified() > snap.lastModified())
+        .maxByOption(roundOf))
+    else (rounds.maxByOption(roundOf), None)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.builder(cpus.toInt).getOrCreate()
     // ERROR, not WARN: the one JSON result line must stay the only stdout
     // payload (executor WARN chatter otherwise floods the captured tail).
     spark.sparkContext.setLogLevel("ERROR")
 
-    def runOnce(name: String): Double = {
-      val t0 = System.nanoTime()
-      val sec =
-        try {
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          -1.0
-        }
-      // Isolation hygiene: queries that localCheckpoint (dup clusters,
-      // keeper selection) leave blocks pinned in the block manager until
-      // the RDD is GC'd; 90 queries in, that stolen execution memory
-      // made q88 7x slower in the r5 full run than in isolation. Release
-      // everything a finished query persisted before timing the next.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
-      sec
-    }
+    def runOnce(name: String): Double =
+      try Bench.runOnce(spark, sfDir, name)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        -1.0
+      }
 
     // Contention index (r12 judge item 2): the host's 1-min load average
     // over its core count, sampled before warmup and after the last timed
@@ -210,13 +232,9 @@ object Bench {
         "q25_quality_score", "q154_containment",
         "q259_containment_onesided", "q90_streaming_agg",
         "q148_streaming_join").foreach { n =>
-        try SparkEntry.queries(n)(spark, warmDir)
-          .write.format("noop").mode("overwrite").save()
+        try Bench.runOnce(spark, warmDir, n)
         catch { case e: Throwable =>
           System.err.println(s"[bench] warmup $n skipped: ${e.getMessage}") }
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.catalog.clearCache()
       }
       warmSec = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[bench] jit warmup done in $warmSec%.1f s")
@@ -334,23 +352,15 @@ object Bench {
       //      from target/bench_last.json at round close);
       //   3. the newest BENCH_r*.json (legacy fallback, truncated).
       val refPath = sys.env.get("SPARK_GRAFT_BENCH_REF").orElse {
-        val snap = new java.io.File("bench_ref.json")
-        val drivers = Option(new java.io.File(".").listFiles()).toSeq.flatten
-          .filter(_.getName.matches("BENCH_r\\d+\\.json"))
-        if (snap.isFile) {
-          // staleness guard (r21 ADVICE): the committed snapshot outranks
-          // the driver artifacts, so a snapshot NOT refreshed at the last
-          // round close would silently adjudicate against stale bands —
-          // say so when a newer BENCH_r*.json exists in cwd.
-          drivers.filter(_.lastModified() > snap.lastModified())
-            .sortBy(_.getName).lastOption.foreach(d => System.err.println(
-              s"[bench] WARNING: ${d.getName} is newer than bench_ref.json " +
-                "— the snapshot may be stale; refresh it from " +
-                "target/bench_last.json at round close"))
-          Some(snap.getPath)
-        } else if (drivers.isEmpty) None
-        else Some(drivers.maxBy(f =>
-          "\\d+".r.findFirstIn(f.getName).get.toInt).getPath)
+        val (ref, newer) = refIn(new java.io.File("."))
+        // staleness guard (r21 ADVICE): a snapshot NOT refreshed at the
+        // last round close would silently adjudicate against stale bands —
+        // say so when a newer BENCH_r*.json exists in cwd.
+        newer.foreach(d => System.err.println(
+          s"[bench] WARNING: ${d.getName} is newer than bench_ref.json " +
+            "— the snapshot may be stale; refresh it from " +
+            "target/bench_last.json at round close"))
+        ref.map(_.getPath)
       }
       refPath.flatMap { p =>
         try {

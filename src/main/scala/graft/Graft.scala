@@ -1,330 +1,29 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-/** Single-import facade over the engine: `import graft.Graft` and every
-  * operator family is one call away. Thin delegation only — each method is
-  * documented at its implementation site.
+/** The one session policy every engine main, tool and test session starts
+  * from. Callers add `.withExtensions(new GraftExtensions)`, an app name or
+  * extra `.config(...)` lines themselves; a later `.config` of the same key
+  * overrides the policy's value. On a real cluster pass the same configs to
+  * spark-submit instead.
   *
   * {{{
-  * val spark = Graft.session()                  // tuned local session
-  * val docs  = Graft.table(spark, sfDir, "documents")
-  * val dups  = Graft.minhashCandidates(docs, "doc_id", "text")
-  * val knn   = Graft.knnJoin(cust, supp, 3, 2e6, "c", "s", "lat", "lon", "slat", "slon")
+  * val spark = Graft.builder(8).getOrCreate()
+  * val docs  = Tables.table(spark, sfDir, "documents")
+  * val dups  = operators.Dedup.minhashCandidates(docs, "doc_id", "text")
   * }}}
   */
 object Graft {
-
-  /** A session tuned the way the engine's own mains configure it; on a real
-    * cluster pass the same configs to spark-submit instead. */
-  def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession =
+  /** `local[cores]`, one shuffle partition per core, AQE on, UTC session
+    * time zone, nanosecond parquet timestamps read as longs (the
+    * `events.ts` encoding `Tables.normalizeEventTime` expects), UI off. */
+  def builder(cores: Int): SparkSession.Builder =
     SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toLong)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .getOrCreate()
-
-  // ---- sources ----
-  def table(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
-  def readFixedWidth(s: SparkSession, path: String,
-      layout: Seq[(String, Int)], skipLines: Int = 0): DataFrame =
-    sources.FixedWidthReader.read(s, path, layout, skipLines)
-  def readBinaryFiles(s: SparkSession, glob: String): DataFrame =
-    operators.Multimodal.readBinaryFiles(s, glob)
-
-  // ---- relational operators ----
-  def watermarks(df: DataFrame, key: String, ts: String): DataFrame =
-    operators.Transforms.watermarks(df, key, ts)
-  def watermarkFilter(incoming: DataFrame, wm: DataFrame, keys: Seq[String],
-      eventCol: String, wmCol: String): DataFrame =
-    operators.Transforms.watermarkFilter(incoming, wm, keys, eventCol, wmCol)
-  def topKPerGroup(df: DataFrame, partitionBy: Seq[Column], order: Seq[Column],
-      k: Int): DataFrame =
-    operators.Transforms.topKPerGroup(df, partitionBy, order, k)
-  def carryForward(df: DataFrame, valueCol: String, partitionBy: Seq[Column],
-      order: Seq[Column], out: String): DataFrame =
-    operators.Transforms.carryForward(df, valueCol, partitionBy, order, out)
-  def melt(df: DataFrame, ids: Seq[String], values: Seq[String],
-      varName: String, valName: String): DataFrame =
-    operators.Transforms.melt(df, ids, values, varName, valName)
-  def pivotAgg(df: DataFrame, groupCols: Seq[Column], pivotCol: String,
-      values: Seq[String], aggs: Seq[Column]): DataFrame =
-    operators.Transforms.pivotAgg(df, groupCols, pivotCol, values, aggs)
-  def asofJoin(left: DataFrame, right: DataFrame, key: String, ts: String,
-      payloadCols: Seq[String]): DataFrame =
-    operators.Transforms.asofJoin(left, right, key, ts, payloadCols)
-  def intervalJoin(left: DataFrame, ts: String, right: DataFrame,
-      lo: String, hi: String, bandSeconds: Long): DataFrame =
-    operators.Transforms.intervalJoin(left, ts, right, lo, hi, bandSeconds)
-  def categorize(rules: Seq[(String, String)], default: String)(c: Column): Column =
-    operators.Transforms.categorize(rules, default)(c)
-
-  // ---- geo ----
-  def radiusJoin(left: DataFrame, right: DataFrame, radiusM: Double,
-      lat1: String, lon1: String, lat2: String, lon2: String): DataFrame =
-    operators.GeoJoin.radiusJoin(left, right, radiusM, lat1, lon1, lat2, lon2)
-  def knnJoin(left: DataFrame, right: DataFrame, k: Int, radiusM: Double,
-      leftKey: String, rightKey: String,
-      lat1: String, lon1: String, lat2: String, lon2: String): DataFrame =
-    operators.GeoJoin.knnJoin(left, right, k, radiusM, leftKey, rightKey,
-      lat1, lon1, lat2, lon2)
-  def haversineMeters(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column =
-    functions.GeoFunctions.haversineMeters(lat1, lon1, lat2, lon2)
-
-  // ---- dedup / similarity (LLM-pipeline north stars) ----
-  def dedupExact(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    operators.Dedup.exact(docs, idCol, textCol)
-  def minhashCandidates(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    operators.Dedup.minhashCandidates(docs, idCol, textCol)
-  def simhashNearDups(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    operators.Dedup.simhashNearDups(docs, idCol, textCol)
-  def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-      blockCol: String, shingleK: Int): DataFrame =
-    operators.Dedup.ngramJaccardPairs(docs, idCol, textCol, blockCol, shingleK)
-  def connectedComponents(nodes: DataFrame, idCol: String,
-      pairs: DataFrame): DataFrame =
-    operators.Dedup.connectedComponents(nodes, idCol, pairs)
-  def selectKeepers(members: DataFrame, idCol: String, weightCol: String,
-      clusterCol: String = "cluster"): DataFrame =
-    operators.Dedup.selectKeepers(members, idCol, weightCol, clusterCol)
-  def sharedPassagePairs(docs: DataFrame, idCol: String, textCol: String,
-      gram: Int = 16, win: Int = 8, minShared: Int = 8,
-      maxDocsPerFp: Int = 10): DataFrame =
-    operators.Dedup.sharedPassagePairs(docs, idCol, textCol, gram, win,
-      minShared, maxDocsPerFp)
-  def prefixJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 8, numT: Int = 3, denT: Int = 5,
-      maxDocsPerTok: Int = 20, templateShare: Double = 0.5): DataFrame =
-    operators.Dedup.prefixJaccardPairs(docs, idCol, textCol, shingleK, numT,
-      denT, maxDocsPerTok, templateShare)
-  def prefixHotness(docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 8, numT: Int = 3, denT: Int = 5): DataFrame =
-    operators.Dedup.prefixHotness(docs, idCol, textCol, shingleK, numT, denT)
-  def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 8, numT: Int = 3, denT: Int = 4,
-      maxDocsPerTok: Int = 20, templateShare: Double = 0.5): DataFrame =
-    operators.Dedup.containmentPairs(docs, idCol, textCol, shingleK, numT,
-      denT, maxDocsPerTok, templateShare)
-  def editDistanceJoin(rows: DataFrame, idCol: String,
-      strCol: String): DataFrame =
-    operators.Dedup.editDistanceJoin(rows, idCol, strCol)
-  def leakageSafeSplit(members: DataFrame, clusterCol: String = "cluster",
-      train256: Int = 204, val256: Int = 26): DataFrame =
-    operators.Dedup.leakageSafeSplit(members, clusterCol, train256, val256)
-  def lineDedup(docs: DataFrame, idCol: String, textCol: String,
-      minDocs: Int = 2, delim: String = "\n"): DataFrame =
-    operators.Dedup.lineDedup(docs, idCol, textCol, minDocs, delim)
-  def duplicatedSpanRemoval(docs: DataFrame, idCol: String, textCol: String,
-      gramN: Int = 5, minDocs: Int = 2): DataFrame =
-    operators.Dedup.duplicatedSpanRemoval(docs, idCol, textCol, gramN, minDocs)
-  def bloomSemiJoin(big: DataFrame, keys: DataFrame, keyCol: String,
-      bitsPerKey: Int = 10, numHashes: Int = 5,
-      expectedKeys: Long = -1L): DataFrame =
-    operators.Blocklist.bloomSemiJoin(big, keys, keyCol, bitsPerKey,
-      numHashes, expectedKeys)
-  def bloomAntiJoin(big: DataFrame, keys: DataFrame, keyCol: String,
-      bitsPerKey: Int = 10, numHashes: Int = 5,
-      expectedKeys: Long = -1L): DataFrame =
-    operators.Blocklist.bloomAntiJoin(big, keys, keyCol, bitsPerKey,
-      numHashes, expectedKeys)
-  def hashStratifiedSample(df: DataFrame, idCol: String, stratumCol: String,
-      rates: Map[String, Long], defaultThreshold: Long): DataFrame =
-    operators.Transforms.hashStratifiedSample(df, idCol, stratumCol, rates,
-      defaultThreshold)
-  def cosine(a: Column, b: Column): Column = operators.Similarity.cosine(a, b)
-  def meanPool(vectors: DataFrame, groupCol: String, vecCol: String): DataFrame =
-    operators.Similarity.meanPool(vectors, groupCol, vecCol)
-  def snapshotDiff(oldDocs: DataFrame, newDocs: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    operators.Corpus.snapshotDiff(oldDocs, newDocs, idCol, textCol)
-  def changelogApply(snapshot: DataFrame, changes: DataFrame, idCol: String,
-      seqCol: String, opCol: String): DataFrame =
-    operators.Corpus.changelogApply(snapshot, changes, idCol, seqCol, opCol)
-  def distributionDrift(dfA: DataFrame, dfB: DataFrame,
-      catCol: String): DataFrame =
-    operators.Corpus.distributionDrift(dfA, dfB, catCol)
-  def temperatureRebalance(docs: DataFrame, groupCol: String, idCol: String,
-      totalOut: Long, temperature: Int = 2): DataFrame =
-    operators.Corpus.temperatureRebalance(docs, groupCol, idCol, totalOut,
-      temperature)
-  def unicodeFold(text: Column): Column =
-    functions.UnicodeOps.foldCol(text)
-  def deflateRatio(text: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(functions.DeflateRatio(
-      org.apache.spark.sql.GraftBridge.expression(text)))
-  def dictScan(text: Column, terms: Seq[String], mask: String): Column =
-    org.apache.spark.sql.GraftBridge.column(functions.DictScan(
-      org.apache.spark.sql.GraftBridge.expression(text),
-      new functions.DictTrie(terms, mask)))
-  def bruteForceTopK(vectors: DataFrame, idCol: String, vecCol: String,
-      queryVec: DataFrame, k: Int): DataFrame =
-    operators.Similarity.bruteForceTopK(vectors, idCol, vecCol, queryVec, k)
-  def embeddingNearDup(vectors: DataFrame, idCol: String, vecCol: String,
-      bits: Int = 16, minSim: Double = 0.9,
-      maxBucket: Int = Int.MaxValue): DataFrame =
-    operators.Similarity.embeddingNearDup(vectors, idCol, vecCol, bits, minSim,
-      maxBucket = maxBucket)
-  def hardNegatives(vectors: DataFrame, idCol: String, vecCol: String,
-      anchorIds: Seq[Long], k: Int,
-      bits: Int = 16, minSim: Double = 0.9): DataFrame =
-    operators.Similarity.hardNegatives(vectors, idCol, vecCol, anchorIds, k,
-      bits, minSim)
-  def boilerplateSpans(docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 5, minDocs: Int = 2): DataFrame =
-    operators.Dedup.boilerplateSpans(docs, idCol, textCol, shingleN, minDocs)
-  def deterministicShuffle(df: DataFrame, idCol: String,
-      shards: Int = 32): DataFrame =
-    operators.Transforms.deterministicShuffle(df, idCol, shards)
-  def skewProfile(df: DataFrame, key: Column): DataFrame =
-    operators.Transforms.skewProfile(df, key)
-  def funnel(events: DataFrame, userCol: String, typeCol: String,
-      tsCol: String, stages: Seq[String]): DataFrame =
-    operators.Transforms.funnel(events, userCol, typeCol, tsCol, stages)
-  def timeDecayedAgg(events: DataFrame, groupCol: String, tsCol: String,
-      valueCol: String, halfLifeSeconds: Long): DataFrame =
-    operators.Transforms.timeDecayedAgg(events, groupCol, tsCol, valueCol,
-      halfLifeSeconds)
-  def cohortRetention(events: DataFrame, userCol: String,
-      tsCol: String): DataFrame =
-    operators.Transforms.cohortRetention(events, userCol, tsCol)
-  def eventTransitions(events: DataFrame, userCol: String, typeCol: String,
-      tsCol: String, tieCol: String): DataFrame =
-    operators.Transforms.eventTransitions(events, userCol, typeCol, tsCol,
-      tieCol)
-  def percentileFilter(df: DataFrame, partitionBy: Seq[Column],
-      order: Seq[Column], keepFrac: Double): DataFrame =
-    operators.Transforms.percentileFilter(df, partitionBy, order, keepFrac)
-  def lshNearPairs(vectors: DataFrame, idCol: String, vecCol: String,
-      bits: Int, minSim: Double, maxBucket: Int = Int.MaxValue): DataFrame =
-    operators.Similarity.lshNearPairs(vectors, idCol, vecCol, bits, minSim,
-      maxBucket = maxBucket)
-  def bucketHotness(vectors: DataFrame, idCol: String, vecCol: String,
-      bits: Int = 16): DataFrame =
-    operators.Similarity.bucketHotness(vectors, idCol, vecCol, bits)
-  def ivfIndex(vectors: DataFrame, idCol: String, vecCol: String,
-      nLists: Int): (org.apache.spark.ml.clustering.KMeansModel, DataFrame) =
-    operators.Similarity.ivfIndex(vectors, idCol, vecCol, nLists)
-  def ivfTopK(model: org.apache.spark.ml.clustering.KMeansModel,
-      indexed: DataFrame, idCol: String, vecCol: String,
-      queryVec: Seq[Double], k: Int, nProbe: Int): DataFrame =
-    operators.Similarity.ivfTopK(model, indexed, idCol, vecCol, queryVec, k, nProbe)
-
-  // ---- binary workbook / JDBC sources ----
-  def readXlsxSheet(bytes: Array[Byte], sheet: String): Seq[sources.XlsxSheetRow] =
-    sources.XlsxReader.readSheet(bytes, sheet)
-  def scanXlsx(s: SparkSession, glob: String,
-      sheet: Option[String] = None): DataFrame =
-    sources.XlsxReader.scan(s, glob, sheet)
-  def selectZipMember(zip: Array[Byte], nameSubstring: String = ".xls"): Array[Byte] =
-    sources.XlsxReader.selectZipMember(zip, nameSubstring)
-  def writeXlsx(sheets: Seq[sources.XlsxSheet]): Array[Byte] =
-    sources.XlsxWriter.write(sheets)
-  def jdbcQuery(s: SparkSession, url: String, sql: String): DataFrame =
-    sources.JdbcIngest.readQuery(s, url, sql)
-  def jdbcPartitioned(s: SparkSession, url: String, table: String,
-      partitionColumn: String, lower: Long, upper: Long, n: Int): DataFrame =
-    sources.JdbcIngest.readPartitioned(s, url, table, partitionColumn,
-      lower, upper, n)
-
-  // ---- sheet-table parsers ----
-  def parseSupplyUse(rows: DataFrame): DataFrame =
-    pipelines.WasdeTransforms.parseSupplyUse(rows)
-  def parseWorldSupplyUse(rows: DataFrame): DataFrame =
-    pipelines.WasdeTransforms.parseWorldSupplyUse(rows)
-  def parseWorldByReportDate(rows: DataFrame): DataFrame =
-    pipelines.WasdeTransforms.parseWorldByReportDate(rows)
-  def transposeBlock(block: DataFrame, attrCol: String,
-      yearCols: Seq[String]): DataFrame =
-    pipelines.WasdeTransforms.transposeBlock(block, attrCol, yearCols)
-
-  // ---- corpus statistics / curation (LLM-pipeline north stars) ----
-  def bigramSurprisal(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    operators.Corpus.bigramSurprisal(docs, idCol, textCol)
-  def chunkWithOverlap(docs: DataFrame, idCol: String, textCol: String,
-      size: Int, stride: Int): DataFrame =
-    operators.Corpus.chunkWithOverlap(docs, idCol, textCol, size, stride)
-  def budgetSample(docs: DataFrame, groupCol: String, idCol: String,
-      weight: Column, budget: Long): DataFrame =
-    operators.Corpus.budgetSample(docs, groupCol, idCol, weight, budget)
-  def sequencePacking(docs: DataFrame, sourceCol: String, idCol: String,
-      textCol: String, seqLen: Int = 2048): DataFrame =
-    operators.Corpus.sequencePacking(docs, sourceCol, idCol, textCol, seqLen)
-  def waterfillAllocation(perGroup: DataFrame, keyCol: String, capCol: String,
-      wCol: String, budgetCol: String): DataFrame =
-    operators.Corpus.waterfillAllocation(perGroup, keyCol, capCol, wCol,
-      budgetCol)
-  def wordEntropy(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    operators.Corpus.wordEntropy(docs, idCol, textCol)
-  def importanceWeights(docs: DataFrame, idCol: String, textCol: String,
-      isTarget: Column): DataFrame =
-    operators.Corpus.importanceWeights(docs, idCol, textCol, isTarget)
-  def groupMinhashSketch(docs: DataFrame, groupCol: String,
-      textCol: String): DataFrame =
-    operators.Corpus.groupMinhashSketch(docs, groupCol, textCol)
-  def cmsHeavyHitters(docs: DataFrame, textCol: String, k: Int): DataFrame =
-    operators.Corpus.cmsHeavyHitters(docs, textCol, k)
-  def pmiTopPairs(docs: DataFrame, idCol: String, textCol: String,
-      minCount: Int = 5, k: Int = 50): DataFrame =
-    operators.Corpus.pmiTopPairs(docs, idCol, textCol, minCount, k)
-  def integerPageRank(pairs: DataFrame, iters: Int = 3): DataFrame =
-    operators.Graph.integerPageRank(pairs, iters)
-  def triangleCounts(pairs: DataFrame): DataFrame =
-    operators.Graph.triangleCounts(pairs)
-
-  def tableFingerprint(df: DataFrame, cols: Seq[String]): DataFrame =
-    operators.Maintenance.tableFingerprint(df, cols)
-  def dqRuleReport(df: DataFrame,
-      rules: Seq[(String, String, String)]): DataFrame =
-    operators.Maintenance.dqRuleReport(df, rules)
-
-  // ---- round-10 additions ----
-  def cdcChunkStats(docs: DataFrame, idCol: String, textCol: String,
-      window: Int = 8, divisor: Int = 64): DataFrame =
-    operators.Corpus.cdcChunkStats(docs, idCol, textCol, window, divisor)
-  def cdcChunks(text: Column, window: Int = 8, divisor: Int = 64): Column =
-    functions.CdcOps.cdcChunksCol(text, window, divisor)
-  def jaroWinkler(a: Column, b: Column): Column =
-    functions.JaroWinklerOps.jaroWinklerCol(a, b)
-  def categorizePoi(nameCol: Column, typeCol: Column): Column =
-    pipelines.SiteScoringPipeline.categorizePoi(nameCol, typeCol)
-
-  def invertedIndex(docs: DataFrame, idCol: String, textCol: String,
-      topK: Int = 3): DataFrame =
-    operators.Corpus.invertedIndex(docs, idCol, textCol, topK)
-  def readability(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    operators.Corpus.readability(docs, idCol, textCol)
-
-  // ---- site-scoring serving contracts (reference deployment variants) ----
-  def siteVariants: Map[String, pipelines.SiteScoringPipeline.SiteVariant] =
-    pipelines.SiteScoringPipeline.variants
-  def featureVectorFor(prepared: DataFrame,
-      v: pipelines.SiteScoringPipeline.SiteVariant): DataFrame =
-    pipelines.SiteScoringPipeline.featureVectorFor(prepared, v)
-  def globalCountsFor(prepared: DataFrame,
-      v: pipelines.SiteScoringPipeline.SiteVariant): DataFrame =
-    pipelines.SiteScoringPipeline.globalCountsFor(prepared, v)
-
-  // ---- streaming ----
-  def windowedEventAgg(events: DataFrame, windowDur: String,
-      watermarkDelay: String): DataFrame =
-    streaming.StreamingOps.windowedEventAgg(events, windowDur, watermarkDelay)
-  def dedupStream(docs: DataFrame, idCol: String, textCol: String):
-      org.apache.spark.sql.Dataset[streaming.StreamingDedup.DedupVerdict] =
-    streaming.StreamingDedup.dedupStream(docs, idCol, textCol)
-  /** Watermark-BOUNDED streaming dedup — the shape whose state flat-lines
-    * at ~one batch of keys (proven at 10× in StreamStateRehearsal);
-    * [[dedupStream]] keeps all-time signature state by design. */
-  def dedupWithinWatermark(events: DataFrame, watermarkDelay: String,
-      idCols: Seq[String]): DataFrame =
-    streaming.StreamingOps.dedupWithinWatermark(events, watermarkDelay,
-      idCols)
-  def sessionize(events: org.apache.spark.sql.Dataset[
-        streaming.StatefulSessionize.Event],
-      gapSeconds: Long): org.apache.spark.sql.Dataset[
-        streaming.StatefulSessionize.Session] =
-    streaming.StatefulSessionize.sessionize(events, gapSeconds)
+      .config("spark.ui.enabled", "false")
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.util.concurrent.{Callable, ExecutionException, Executors}
+import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, Executors}
 
 /** Run INDEPENDENT Spark jobs concurrently from a small driver pool
   * (guide §2.6): actions are only sequential because driver code calls
@@ -11,13 +11,16 @@ import java.util.concurrent.{Callable, ExecutionException, Executors}
   *
   * One shared implementation for the r21 overlap sites (q208's format
   * writes, q192's bucketed writes, q255's two streams, the two-batch
-  * runner's phase writes) instead of four hand-rolled pools, fixing two
-  * r21 ADVICE items in one place:
+  * runner's phase writes) instead of four hand-rolled pools, fixing the
+  * ADVICE items on them in one place:
   *
   *  - failures rethrow the ORIGINAL exception (the
   *    `ExecutionException` wrapper is unwrapped), so callers see the
   *    same exception type the sequential form threw (e.g. writePhase's
   *    `require`);
+  *  - results come back in submission order, but the pool is drained
+  *    in completion order, so the first failure is rethrown at once
+  *    even while an earlier-submitted job is still running;
   *  - on the first failure the sibling futures are cancelled
   *    (best-effort interrupt) and the pool is shut down with
   *    `shutdownNow`, instead of letting siblings run to completion
@@ -36,24 +39,24 @@ object Overlap {
     val pool = Executors.newFixedThreadPool(
       math.min(jobs.size, maxConcurrent))
     try {
-      val futures = jobs.map(j =>
-        pool.submit(new Callable[A] { def call(): A = j() }))
-      val out = Seq.newBuilder[A]
-      var failed: Throwable = null
-      futures.foreach { f =>
-        if (failed == null)
-          try out += f.get()
-          catch {
-            case e: ExecutionException =>
-              failed = Option(e.getCause).getOrElse(e)
-              futures.foreach(_.cancel(true))
-            case e: Throwable =>
-              failed = e
-              futures.foreach(_.cancel(true))
-          }
+      // Wait in COMPLETION order, not submission order: a failure is seen
+      // as soon as it happens even while an earlier job is still running.
+      val done = new ExecutorCompletionService[(Int, A)](pool)
+      val futures = jobs.zipWithIndex.map { case (j, i) =>
+        done.submit(new Callable[(Int, A)] { def call(): (Int, A) = (i, j()) })
       }
-      if (failed != null) throw failed
-      out.result()
+      val out = new Array[Any](jobs.size)
+      try jobs.foreach { _ =>
+        val (i, a) = done.take().get()
+        out(i) = a
+      } catch { case e: Throwable =>
+        futures.foreach(_.cancel(true))
+        throw (e match {
+          case ee: ExecutionException => Option(ee.getCause).getOrElse(ee)
+          case other => other
+        })
+      }
+      out.toSeq.map(_.asInstanceOf[A])
     } finally pool.shutdownNow()
   }
 }

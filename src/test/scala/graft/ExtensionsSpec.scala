@@ -202,24 +202,24 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(got == Set(("2026-01", 1.0), ("2026-02", 99.0)))
   }
 
-  test("Graft facade delegates across operator families") {
+  test("operator families answer through their own objects") {
     import spark.implicits._
     val docs = Seq((1L, "a b c d e"), (2L, "a b c d e"), (3L, "x y z w v"))
       .toDF("doc_id", "text")
-    val exact = graft.Graft.dedupExact(docs, "doc_id", "text").collect()
+    val exact = operators.Dedup.exact(docs, "doc_id", "text").collect()
     assert(exact.length == 2)           // two distinct normalized texts
     val pts = Seq((1L, 10.0, 10.0), (2L, 50.0, 50.0)).toDF("id", "lat", "lon")
-    val r = graft.Graft.knnJoin(pts, pts.toDF("rid", "rlat", "rlon"),
+    val r = operators.GeoJoin.knnJoin(pts, pts.toDF("rid", "rlat", "rlon"),
       1, 1e7, "id", "rid", "lat", "lon", "rlat", "rlon").collect()
     assert(r.length == 2)               // nearest neighbor of each point
-    val m = Seq(1).toDF("x").select(graft.Graft.haversineMeters(
+    val m = Seq(1).toDF("x").select(functions.GeoFunctions.haversineMeters(
       lit(0.0), lit(0.0), lit(0.0), lit(1.0)).as("d")).as[Double].head()
     assert(math.abs(m - 111194.9) < 1.0)   // one equatorial degree
-    // corpus/graph families route through the same front door
-    val chunks = graft.Graft.chunkWithOverlap(docs, "doc_id", "text", 3, 2)
+    // corpus and graph families
+    val chunks = operators.Corpus.chunkWithOverlap(docs, "doc_id", "text", 3, 2)
       .collect()
     assert(chunks.length == 6)          // 5 tokens, size 3, stride 2 → 2/doc
-    val pr = graft.Graft.integerPageRank(
+    val pr = operators.Graph.integerPageRank(
       Seq((1L, 2L)).toDF("id_a", "id_b"), iters = 1).collect()
     assert(pr.length == 2)
   }

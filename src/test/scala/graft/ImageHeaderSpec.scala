@@ -142,20 +142,7 @@ class ImageHeaderSpec extends AnyFunSuite {
   }
 
   test("SQL registration via GraftExtensions: image_meta callable from SQL") {
-    // same session discipline as ScaleSpec's extension test: a sibling
-    // session on the shared SparkContext, built WITH the extensions
-    import org.apache.spark.sql.SparkSession
-    SparkTestBase.session // ensure the shared context exists
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-imgext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
+    SparkTestBase.withExtensions { s =>
       val hex = png(3, 4, 2).map(b => f"$b%02x").mkString
       val r = s.sql(
         s"SELECT image_meta(unhex('$hex')) AS m, " +
@@ -164,11 +151,6 @@ class ImageHeaderSpec extends AnyFunSuite {
         .collect().head
       assert(r.getString(0) === "png" && r.getInt(1) === 3 &&
         r.getInt(2) === 4 && r.getInt(3) === 3 && r.isNullAt(4))
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(SparkTestBase.session)
-      SparkSession.setActiveSession(SparkTestBase.session)
     }
   }
 }

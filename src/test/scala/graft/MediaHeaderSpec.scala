@@ -505,21 +505,7 @@ class MediaHeaderSpec extends AnyFunSuite {
   }
 
   test("media_meta is SQL-registered via GraftExtensions") {
-    // same session discipline as ImageHeaderSpec's extension test: a
-    // sibling session on the shared SparkContext, built WITH the
-    // extensions
-    import org.apache.spark.sql.SparkSession
-    SparkTestBase.session // ensure the shared context exists
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-mediaext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
+    SparkTestBase.withExtensions { s =>
       val hex = wav(1, 2, 44100, 16, 8820).map(b => f"$b%02x").mkString
       val r = s.sql(
         s"SELECT media_meta(unhex('$hex')) AS m, " +
@@ -530,11 +516,6 @@ class MediaHeaderSpec extends AnyFunSuite {
       assert(r.getString(0) === "wav" && r.getLong(1) === 50L &&
         r.getInt(2) === 2 && r.getInt(3) === 44100 && r.getInt(4) === 16 &&
         r.getString(5) === "pcm" && r.isNullAt(6))
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(SparkTestBase.session)
-      SparkSession.setActiveSession(SparkTestBase.session)
     }
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Corpus, Transforms}
@@ -12,17 +11,7 @@ class ScaleSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("GraftExtensions registers SQL functions in a fresh session") {
-    val prev = SparkTestBase.session // shares this SparkContext
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
+    SparkTestBase.withExtensions { s =>
       val r = s.sql(
         """SELECT haversine_m(19.4326, -99.1332, 19.4326, -99.1332) AS d,
           |       simhash64(array('a','b')) AS h,
@@ -66,10 +55,6 @@ class ScaleSpec extends AnyFunSuite {
       assert(e.getMessage.contains("out of range") ||
         Option(e.getCause).exists(_.getMessage.contains("out of range")),
         e.getMessage)
-    } finally {
-      // do NOT stop: the SparkContext is shared with every other suite
-      SparkSession.setDefaultSession(prev)
-      SparkSession.setActiveSession(prev)
     }
   }
 
@@ -114,17 +99,7 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("BandedDistanceJoinRule rewrites SQL cross join + haversine filter") {
-    val prev = SparkTestBase.session
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-rule-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
+    SparkTestBase.withExtensions { s =>
       import s.implicits._
       (1 to 300).map(i =>
         (i.toLong, ((i * 37) % 17000) / 100.0 - 85, ((i * 91) % 35000) / 100.0 - 175))
@@ -154,9 +129,6 @@ class ScaleSpec extends AnyFunSuite {
         assert(got == brute,
           s"r=$r missing=${(brute -- got).take(5)} extra=${(got -- brute).take(5)}")
       }
-    } finally {
-      SparkSession.setDefaultSession(prev)
-      SparkSession.setActiveSession(prev)
     }
   }
 

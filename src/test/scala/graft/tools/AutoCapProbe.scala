@@ -1,17 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Disposable bisect for the r15 skew-autocap spike: stage timings of the
   * autoCap q121 chain on the skew rehearsal corpus. */
 object AutoCapProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val skew = spark.read.parquet("target/scale_rehearsal_skew.parquet")
 

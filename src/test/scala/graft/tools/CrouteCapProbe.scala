@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -15,17 +14,16 @@ import graft.operators.Dedup
   * supposed to prevent (q121 is immune: its cap comes from the PREFIX
   * table where hot shingles are pruned by construction).
   *
-  * Run: tools/run_snap.sh CrouteCapProbe target/scale_rehearsal_100x_500000.parquet
+  * Run: SNAP_HEAP=48g tools/run_snap.sh -Dspark.driver.maxResultSize=12g \
+  *   graft.tools.CrouteCapProbe target/scale_rehearsal_100x_500000.parquet
   */
 object CrouteCapProbe {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption
       .getOrElse("target/scale_rehearsal_100x_500000.parquet")
-    val spark = SparkSession.builder()
-      .master("local[16]")
+    val spark = graft.Graft.builder(16)
       .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
       .appName("croute-cap-probe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = spark.read.parquet(dir)

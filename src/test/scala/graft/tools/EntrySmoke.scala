@@ -1,17 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Driver-contract smoke: SparkEntry.entry(spark) must return rows > 0 on
   * sf0.001 (dev probe mirroring the driver's check). */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val n = graft.SparkEntry.entry(spark).count()
     println(s"[entry-smoke] rows=$n")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe for the q257 two-batch eviction oracle (r18 VERDICT item 2):
@@ -18,11 +17,8 @@ object EvictionProbe {
 
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
+    val spark = graft.Graft.builder(8)
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .appName("eviction-probe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

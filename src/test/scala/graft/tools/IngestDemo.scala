@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 import java.time.LocalDate
-import org.apache.spark.sql.SparkSession
 import graft.sources.StagedIngest
 import graft.sources.StagedIngest.LocalFileFetcher
 
@@ -10,10 +9,8 @@ import graft.sources.StagedIngest.LocalFileFetcher
   * staged landing → schema'd read → relational re-filter. */
 object IngestDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-ingest-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.builder(4)
+      .appName("graft-ingest-demo").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe for the q260 two-batch stream-stream JOIN eviction oracle
@@ -26,11 +25,8 @@ object JoinEvictionProbe {
 
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
+    val spark = graft.Graft.builder(8)
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .appName("join-eviction-probe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

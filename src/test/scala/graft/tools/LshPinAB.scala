@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -33,11 +32,9 @@ object LshPinAB {
   def main(args: Array[String]): Unit = {
     val nVec = args.headOption.map(_.toInt).getOrElse(400000)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = graft.Graft.builder(cpus.toInt)
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "64"))
-      .config("spark.ui.enabled", "false")
       .config("spark.local.dir", "target/lshpin_scratch")
       .appName("lsh-pin-ab").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

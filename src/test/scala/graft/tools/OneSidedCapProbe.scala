@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -18,10 +17,8 @@ object OneSidedCapProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption
       .getOrElse("target/scale_rehearsal_100x_300000.parquet")
-    val spark = SparkSession.builder()
-      .master("local[16]")
+    val spark = graft.Graft.builder(16)
       .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
       .appName("onesided-cap-probe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = spark.read.parquet(dir)

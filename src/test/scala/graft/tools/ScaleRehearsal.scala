@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Similarity}
@@ -20,10 +19,7 @@ object ScaleRehearsal {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // NOTE: driver heap comes from the launching JVM (sbt's -Xmx) —
     // spark.driver.memory set here would be a silent no-op in local mode
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Graft.builder(cpus.toInt)
       .appName("scale-rehearsal").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

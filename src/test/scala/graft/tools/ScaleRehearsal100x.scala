@@ -6,7 +6,6 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -134,15 +133,13 @@ object ScaleRehearsal100x {
     val budgetGb = sys.env.getOrElse("SPARK_GRAFT_SCRATCH_GB", "30").toLong
     val budget = budgetGb << 30
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = graft.Graft.builder(cpus.toInt)
       // 100x shuffles need partitions sized to fit task memory — 128 keeps
       // ~1.6M tok rows per aggregate partition (AQE coalesces the small
       // stages back down); 32 put the PrefixMinK partial over the
       // aggregation floor at practical heaps
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "128"))
-      .config("spark.sql.adaptive.enabled", "true")
       // the verify-side arrs broadcast at 500k docs collects ~1.7 GB to
       // the driver — raise maxResultSize so the dispatch can take the
       // broadcast path (the operator gates on this conf; the 1 GB
@@ -165,7 +162,6 @@ object ScaleRehearsal100x {
       // all block-manager + shuffle scratch under ONE dir so the budget
       // poller sees the true live footprint
       .config("spark.local.dir", scratchRoot.toString)
-      .config("spark.ui.enabled", "false")
       .appName("scale-rehearsal-100x").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_ROUTE_PERDOC: second-budget-value runs for the r20

@@ -27,12 +27,10 @@ object StreamStateRehearsal {
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark: SparkSession = graft.Graft.builder(cpus.toInt)
       // few distinct keys per batch: 32 state-store partitions would pay
       // 32 store open/commits per batch for no parallelism win (q90 note)
       .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
       .appName("stream-state-rehearsal").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

@@ -6,7 +6,6 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -90,13 +89,10 @@ object VectorScaleRehearsal {
     val budgetGb = sys.env.getOrElse("SPARK_GRAFT_SCRATCH_GB", "30").toLong
     val budget = budgetGb << 30
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = graft.Graft.builder(cpus.toInt)
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "64"))
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.local.dir", scratchRoot.toString)
-      .config("spark.ui.enabled", "false")
       .appName("vector-scale-rehearsal").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.{GeoFunctions, TextFunctions}
 import graft.operators.{Blocklist, Corpus, Dedup, Multimodal, Similarity, Transforms}
+import graft.streaming.StreamingOps
 
 /** Driver contract (SURVEY §7 + builder prompt): one `queries` entry per
   * implemented operator from SURVEY §2 (+ the north-star dedup / similarity /
@@ -1375,12 +1376,7 @@ object SparkEntry {
       val sch = s.read.parquet(path).schema
       val qname = s"q90_mem_$tok"
       s.catalog.dropTempView(qname)
-      // a 3-group aggregate doesn't need 32 state-store partitions — the
-      // per-partition store open/commit is the dominant fixed cost of the
-      // run; restore the session conf afterwards
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      StreamingOps.withStreamConf(s) {
         val q = s.readStream.schema(sch).parquet(srcDir.toString)
           .groupBy(col("l_returnflag"))
           .agg(count(lit(1)).cast("long").as("n"),
@@ -1390,7 +1386,7 @@ object SparkEntry {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       s.table(qname)
     }),
 
@@ -1406,12 +1402,8 @@ object SparkEntry {
       val tok = datasetTok(d)
       val qname = s"q148_mem_$tok"
       s.catalog.dropTempView(qname)
-      // join state for ~minutes of events doesn't need 32 state-store
-      // partitions; the per-partition store open/commit dominates
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        graft.streaming.StreamingOps.runAvailableNow(
+      StreamingOps.withStreamConf(s) {
+        StreamingOps.runAvailableNow(
             s, s"$d/events.parquet", qname) { ev =>
           val v = ev.filter(col("event_type") === "view")
             .select(col("event_id").as("v_event_id"),
@@ -1429,7 +1421,7 @@ object SparkEntry {
               (unix_micros(col("cts")) - unix_micros(col("vts")))
                 .as("delta_us"))
         }
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     }),
 
     // W-family depth — calendar gap-fill with LOCF over each user's daily
@@ -1907,11 +1899,7 @@ object SparkEntry {
       s.catalog.dropTempView(qname)
       val stream = s.readStream.schema(sch).parquet(srcDir.toString)
         .filter(length(trim(col("text"))) > 0)
-      // same state-store partition trim as q90 (few thousand signature
-      // groups; 32 store instances are pure fixed cost)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      StreamingOps.withStreamConf(s) {
         val q = graft.streaming.StreamingDedup
           .dedupStream(stream, "doc_id", "text")
           .writeStream.format("memory").queryName(qname)
@@ -1919,7 +1907,7 @@ object SparkEntry {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       s.table(qname)
     }),
 
@@ -2518,10 +2506,8 @@ object SparkEntry {
       val tok = datasetTok(d)
       val qname = s"q191_mem_$tok"
       s.catalog.dropTempView(qname)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        graft.streaming.StreamingOps.runAvailableNow(
+      StreamingOps.withStreamConf(s) {
+        StreamingOps.runAvailableNow(
             s, s"$d/events.parquet", qname, outputMode = "complete") { ev =>
           val ord = struct(col("ts"), col("event_id"))
           ev.filter(col("value").isNotNull)
@@ -2535,7 +2521,7 @@ object SparkEntry {
               count(lit(1)).cast("long").as("n"),
               sum(col("c")).cast("long").as("vol_c"))
         }
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     }),
 
     // North star: growth report — q185's lifetime table segmented at the
@@ -3811,11 +3797,9 @@ object SparkEntry {
       val tok = datasetTok(d)
       val qname = s"q230_mem_$tok"
       s.catalog.dropTempView(qname)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
       val streamed =
-        try {
-          graft.streaming.StreamingOps.runAvailableNow(
+        StreamingOps.withStreamConf(s) {
+          StreamingOps.runAvailableNow(
               s, s"$d/events.parquet", qname) { ev =>
             val v = ev.filter(col("event_type") === "view")
               .select(col("event_id").as("v_event_id"),
@@ -3834,7 +3818,7 @@ object SparkEntry {
                 (unix_micros(col("cts")) - unix_micros(col("vts")))
                   .as("delta_us"))
           }
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+        }
       // Spark's EXACT outer-eviction boundary is an internal detail
       // (observed between wm−60m and wm−45m on this corpus — conservative
       // beyond the wm−30m the join condition implies). Report the
@@ -4131,8 +4115,6 @@ object SparkEntry {
       rmTree(outDir); rmTree(ckpt)
       writeOne(base.filter(col("ts") >= lit(tsplit)), "0001.parquet", 1000000L)
       val sch = s.read.parquet(dir.toString).schema
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
       // two INCREMENTAL AvailableNow runs against one checkpoint: run 1
       // sees only the tail file (watermark persists to state); run 2 sees
       // only the early file with the RESTORED watermark — every row late
@@ -4151,12 +4133,12 @@ object SparkEntry {
           .start()
         q.awaitTermination()
       }
-      try {
+      StreamingOps.withStreamConf(s) {
         runOnce()
         writeOne(base.filter(col("ts") < lit(tsplit)), "0002.parquet",
           2000000L)
         runOnce()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       s.read.parquet(outDir.toString)
     }),
 
@@ -4489,11 +4471,9 @@ object SparkEntry {
     // rewritten on every run (r17 VERDICT item 7) — observability is
     // not lost, it is just not pretending to be oracle-checkable.
     "q255_stream_state_metrics" -> ((s, d) => {
-      import graft.streaming.{StreamingDedup, StreamingOps}
+      import graft.streaming.StreamingDedup
       val tok = datasetTok(d)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      StreamingOps.withStreamConf(s) {
         val dq = s"q255_dedup_$tok"; val jq = s"q255_join_$tok"
         s.catalog.dropTempView(dq); s.catalog.dropTempView(jq)
         // r21 (guide §2.6): the dedup stream and the join stream are
@@ -4536,7 +4516,7 @@ object SparkEntry {
           Seq("dedup" -> dedupProg, "join" -> joinProg))
         StreamingOps.firstBatchStateCounts(s,
           Seq("dedup" -> dedupProg, "join" -> joinProg))
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     }),
 
     // The NEX variant's exact serving contract under the oracle (r13
@@ -4665,13 +4645,8 @@ object SparkEntry {
     // windows (nonzero rows_removed — the item's "done" bar), batch 2
     // evicts all but the last.
     "q257_stream_state_eviction" -> ((s, d) => {
-      import graft.streaming.StreamingOps
       val tok = datasetTok(d)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      // hundreds of hour-windows don't need 32 state-store partitions —
-      // same fixed-cost note as q90/q255
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      StreamingOps.withStreamConf(s) {
         val qn = s"q257_agg_$tok"
         s.catalog.dropTempView(qn)
         val (_, progs) = StreamingOps.runAvailableNowDateSplitProgress(
@@ -4692,7 +4667,7 @@ object SparkEntry {
           }
         }.toDF("batch_seq", "input_rows", "rows_total", "rows_updated",
           "rows_removed")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     }),
 
     // Stream-stream JOIN state eviction, oracle-checked (r19 VERDICT
@@ -4719,11 +4694,8 @@ object SparkEntry {
     // evictions are phase-A rows only and arrivals are never
     // drop-on-arrival — the oracle counts stay clean corpus aggregates.
     "q260_stream_join_eviction" -> ((s, d) => {
-      import graft.streaming.StreamingOps
       val tok = datasetTok(d)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      StreamingOps.withStreamConf(s) {
         val qn = s"q260_join_$tok"
         s.catalog.dropTempView(qn)
         val (_, progs) = StreamingOps.runAvailableNowDateSplitProgress(
@@ -4752,7 +4724,7 @@ object SparkEntry {
           }
         }.toDF("batch_seq", "input_rows", "rows_total", "rows_updated",
           "rows_removed")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     }),
 
     // native pdf_meta expression over literal PDF bytes built in-process

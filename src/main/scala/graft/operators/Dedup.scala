@@ -52,7 +52,12 @@ object Dedup {
     * job) — runs as ONE task while the other cores idle (measured: q121's
     * per-job timeline showed a 3.3 s single-task broadcast build as the
     * query's long pole). A real corpus has plenty of scan partitions and
-    * skips this shuffle entirely, so the at-scale plan is unchanged. */
+    * skips this shuffle entirely, so the at-scale plan is unchanged.
+    *
+    * The width is read from `df`'s physical plan ([[scanPartitions]])
+    * rather than from `df.rdd`, so an adaptive plan is never executed
+    * just to count its partitions, and a streaming frame passes through
+    * unchanged. */
   private[graft] def fanOutScan(df: DataFrame,
       key: org.apache.spark.sql.Column): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
@@ -63,7 +68,30 @@ object Dedup {
     // §2.5), and on a 1-partition scan that sort of the full text
     // payloads is itself a serial pass. Hash placement is deterministic
     // by value, so it needs no sort and is retry-safe by construction.
-    if (df.rdd.getNumPartitions < par) df.repartition(par, key) else df
+    if (df.isStreaming) df
+    else scanPartitions(df) match {
+      case Some(n) if n < par => df.repartition(par, key)
+      case _ => df
+    }
+  }
+
+  /** The partition count `df` runs at when its physical plan is one leaf
+    * (file scan, cached frame, checkpoint, local rows, range) under narrow
+    * operators only: that leaf's RDD width. Building the leaf's RDD runs
+    * no job, except for a not-yet-built cache over a shuffling plan, which
+    * `df.rdd` built too. None when the plan has an exchange, is adaptive,
+    * or has several leaves. */
+  private[graft] def scanPartitions(df: DataFrame): Option[Int] = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val plan = df.queryExecution.executedPlan
+    val shuffles = plan.exists(_.isInstanceOf[Exchange])
+    plan.collectLeaves() match {
+      // an adaptive plan is itself a leaf, and executing it runs its stages
+      case Seq(_: AdaptiveSparkPlanExec) => None
+      case Seq(leaf) if !shuffles => Some(leaf.execute().getNumPartitions)
+      case _ => None
+    }
   }
 
   /** Exact dedup: group on the MD5 of normalized text, keep the smallest id.

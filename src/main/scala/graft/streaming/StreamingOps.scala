@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -17,6 +18,59 @@ import org.apache.spark.sql.streaming.Trigger
   * the reference approximates by re-fetching a 60-day overlap.
   */
 object StreamingOps {
+
+  private val FileSystemManager = "org.apache.spark.sql.execution.streaming." +
+    "checkpointing.FileSystemBasedCheckpointFileManager"
+
+  /** Runs `body` under the session settings every engine stream uses, then
+    * puts each key back to its earlier value, or unsets it if it was unset,
+    * also when `body` throws:
+    *
+    *  - `spark.sql.shuffle.partitions` = 4. A stream fixes its state-store
+    *    partition count at its first batch, the engine's streams hold small
+    *    state, and at one store per core the per-store open/commit is their
+    *    dominant fixed cost.
+    *  - When the session's checkpoint root is local, checkpoint and
+    *    state-store files go through Spark's
+    *    `FileSystemBasedCheckpointFileManager`. The default
+    *    `FileContextBasedCheckpointFileManager` renames through
+    *    `AbstractFileSystem.rename`, which on a local path without libhadoop
+    *    forks `readlink` on every rename (OPTIMIZATION_r23.md).
+    *    `FileSystem.rename` is a POSIX rename(2), atomic and
+    *    target-replacing; the file system stays Hadoop's `LocalFileSystem`,
+    *    so the `.crc` sidecars are still written and verified, and Spark's
+    *    checkpoint checksums still wrap the manager.
+    *
+    * Only the session-level root is checked: a body that gives a stream its
+    * own `checkpointLocation` must keep it local. */
+  def withStreamConf[T](spark: SparkSession)(body: => T): T = {
+    val settings = Seq("spark.sql.shuffle.partitions" -> "4") ++
+      (if (checkpointRootIsLocal(spark))
+        Seq("spark.sql.streaming.checkpointFileManagerClass" -> FileSystemManager)
+      else Nil)
+    val set = spark.conf.getAll // explicitly set keys only, no defaults
+    val prev = settings.map { case (k, _) => k -> set.get(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** True when the session's streams checkpoint on the local file system:
+    * `spark.sql.streaming.checkpointLocation` is a `file:` URI, or it is a
+    * path without a scheme or unset (Spark then uses a temp dir under
+    * `java.io.tmpdir`) and the default file system is local. A conf check
+    * only; no file system is touched. */
+  private[graft] def checkpointRootIsLocal(spark: SparkSession): Boolean = {
+    val root = spark.conf.getOption("spark.sql.streaming.checkpointLocation")
+      .filter(_.nonEmpty)
+    val scheme = root.flatMap(r => Option(new Path(r).toUri.getScheme))
+      .getOrElse(FileSystem.getDefaultUri(
+        spark.sparkContext.hadoopConfiguration).getScheme)
+    scheme == "file"
+  }
 
   /** Watermarked tumbling-window aggregation; same code path works for both
     * batch DataFrames and streaming DataFrames. */

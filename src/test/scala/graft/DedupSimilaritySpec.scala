@@ -18,6 +18,35 @@ class DedupSimilaritySpec extends AnyFunSuite {
     (4L, "totally unrelated text about cooking pasta with tomatoes and basil leaves for dinner tonight yum", "en"))
     .toDF("doc_id", "text", "lang")
 
+  test("fanOutScan sizes from the plan: a narrow single-leaf input spreads, " +
+      "a streaming frame passes through") {
+    val dir = java.nio.file.Files.createTempDirectory("fanout").toString
+    docs.repartition(1).write.mode("overwrite").parquet(dir)
+    val scan = spark.read.parquet(dir)
+    assert(Dedup.scanPartitions(scan) == Some(1))
+    assert(Dedup.scanPartitions(scan.filter(col("lang") === "en")) == Some(1))
+    // an exchange decides the width, not the scan
+    assert(Dedup.scanPartitions(scan.groupBy("lang").count()).isEmpty)
+    val spread = Dedup.fanOutScan(scan, col("doc_id"))
+    assert(spread.rdd.getNumPartitions ==
+      spark.sparkContext.defaultParallelism)
+    assert(spread.collect().toSet == scan.collect().toSet)
+    // any single leaf sizes, not only a file scan: a cached frame, a
+    // local checkpoint, local rows and a range spread like the scan
+    val cached = scan.cache()
+    try {
+      assert(Dedup.scanPartitions(cached) == Some(1))
+      assert(Dedup.fanOutScan(cached, col("doc_id")).rdd.getNumPartitions ==
+        spark.sparkContext.defaultParallelism)
+    } finally cached.unpersist()
+    assert(Dedup.scanPartitions(scan.localCheckpoint()) == Some(1))
+    assert(Dedup.scanPartitions(docs.limit(1)) == Some(1))
+    assert(Dedup.scanPartitions(spark.range(0, 10, 1, 1).toDF()) == Some(1))
+    // df.rdd on a streaming frame throws; the plan-based probe never asks
+    val stream = spark.readStream.schema(scan.schema).parquet(dir)
+    assert(Dedup.fanOutScan(stream, col("doc_id")) eq stream)
+  }
+
   test("exact dedup groups case/whitespace-normalized duplicates") {
     val out = Dedup.exact(docs, "doc_id", "text")
     val dupGroup = out.filter(col("n_dups") === 2).collect()

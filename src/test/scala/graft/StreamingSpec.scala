@@ -656,4 +656,108 @@ class StreamingSpec extends AnyFunSuite {
       }
     }
   }
+
+  // ---- withStreamConf ---------------------------------------------------
+
+  private val partsKey = "spark.sql.shuffle.partitions"
+  private val mgrKey = "spark.sql.streaming.checkpointFileManagerClass"
+  private val ckptKey = "spark.sql.streaming.checkpointLocation"
+  private val fsManager = "org.apache.spark.sql.execution.streaming." +
+    "checkpointing.FileSystemBasedCheckpointFileManager"
+
+  /** Runs `f`, then puts `keys` back as they were (set or unset). */
+  private def keepingConf[T](keys: String*)(f: => T): T = {
+    val before = keys.map(k => k -> spark.conf.getAll.get(k))
+    try f
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("withStreamConf sets both keys inside and restores set and unset " +
+      "keys afterwards, also when the body throws") {
+    keepingConf(partsKey, mgrKey, ckptKey) {
+      spark.conf.unset(ckptKey)
+      // earlier state: partitions set to a non-default value, manager unset
+      spark.conf.set(partsKey, "7")
+      spark.conf.unset(mgrKey)
+      val inside = StreamingOps.withStreamConf(spark) {
+        (spark.conf.get(partsKey), spark.conf.getOption(mgrKey))
+      }
+      assert(inside == (("4", Some(fsManager))))
+      assert(spark.conf.get(partsKey) == "7")
+      assert(!spark.conf.getAll.contains(mgrKey), "unset key left set")
+
+      // a throwing body restores too; a set manager gets its value back
+      val fileContext = "org.apache.spark.sql.execution.streaming." +
+        "checkpointing.FileContextBasedCheckpointFileManager"
+      spark.conf.set(mgrKey, fileContext)
+      val e = intercept[IllegalStateException] {
+        StreamingOps.withStreamConf(spark) {
+          assert(spark.conf.get(mgrKey) == fsManager)
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(e.getMessage == "body failed")
+      assert(spark.conf.get(partsKey) == "7")
+      assert(spark.conf.get(mgrKey) == fileContext)
+    }
+  }
+
+  test("withStreamConf keeps Spark's default manager for a non-local " +
+      "checkpoint root (conf check only)") {
+    keepingConf(partsKey, mgrKey, ckptKey) {
+      spark.conf.unset(mgrKey)
+      spark.conf.set(ckptKey, "hdfs://nn/ckpt")
+      assert(!StreamingOps.checkpointRootIsLocal(spark))
+      StreamingOps.withStreamConf(spark) {
+        assert(spark.conf.get(partsKey) == "4")
+        assert(spark.conf.getOption(mgrKey).isEmpty)
+      }
+      for (local <- Seq("file:/data/ckpt", "/data/ckpt")) {
+        spark.conf.set(ckptKey, local)
+        assert(StreamingOps.checkpointRootIsLocal(spark), local)
+      }
+      spark.conf.unset(ckptKey)
+      assert(StreamingOps.checkpointRootIsLocal(spark))
+    }
+  }
+
+  test("stateful stream under withStreamConf equals the batch result and " +
+      "keeps both checksum layers in its state dir") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    val batches = Seq(
+      Seq((1L, "a"), (2L, "b"), (1L, "a"), (3L, "c")),
+      Seq((2L, "b"), (4L, "d"), (4L, "d"), (5L, "e")))
+    val in = MemoryStream[(Long, String)]
+    StreamingOps.withStreamConf(spark) {
+      val q = in.toDF.toDF("id", "v").dropDuplicates("id")
+        .writeStream.outputMode("append").format("memory")
+        .queryName("ckpt_dedup")
+        .option("checkpointLocation", ckpt.toString)
+        .start()
+      try batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
+    }
+    val streamed = spark.table("ckpt_dedup").as[(Long, String)].collect()
+    val batch = batches.flatten.toDF("id", "v").dropDuplicates("id")
+      .as[(Long, String)].collect()
+    assert(streamed.sorted.toSeq == batch.sorted.toSeq)
+    assert(streamed.length == 5)
+    // one store per shuffle partition; every one commits version 1 and 2
+    val stores = ckpt.resolve("state/0").toFile.listFiles()
+      .filter(f => f.isDirectory && f.getName.forall(_.isDigit))
+    assert(stores.length == 4, stores.map(_.getName).toSeq)
+    for (st <- stores; v <- Seq(1, 2)) {
+      val names = st.list().toSet
+      assert(names.contains(s"$v.delta"), (st, names))
+      // Spark's checkpoint checksum file and Hadoop LocalFileSystem's sidecar
+      assert(names.contains(s"$v.delta.crc"), (st, names))
+      assert(names.contains(s".$v.delta.crc"), (st, names))
+    }
+  }
 }

@@ -3,11 +3,21 @@
 # keeps the build free for other work and gives fresh-JVM timings.
 # test-classes join the classpath when present, so graft.tools.* mains
 # (rehearsals, Probe) run the same way as graft.Bench or graft.Verify.
-# Usage: tools/run_snap.sh [-Dsys.prop=...]* <fully.qualified.Main> [args...]
+# Usage: tools/run_snap.sh [-Dsys.prop=... | -XX:jvm-option]* <fully.qualified.Main> [args...]
 # Env: SNAP_HEAP (default 8g), plus the main's own SPARK_GRAFT_* knobs.
+# Leading -D and -XX: options go to the JVM, before the main class. A
+# -Dspark.* property becomes a Spark conf, so two runs differing in one
+# -Dspark.k=v are a conf A/B; -XX:StartFlightRecording=... records a JFR.
 # Long rehearsals: SNAP_HEAP=48g tools/run_snap.sh \
 #   -Dspark.driver.maxResultSize=12g graft.tools.ScaleRehearsal100x ...
 set -euo pipefail
+JVM_OPTS=()
+while [[ "${1:-}" == -D* || "${1:-}" == -XX:* ]]; do JVM_OPTS+=("$1"); shift; done
+if [[ $# -eq 0 || "$1" == -* ]]; then
+  echo "usage: $0 [-Dprop=v | -XX:opt]* <fully.qualified.Main> [args...]" >&2
+  exit 2
+fi
+MAIN="$1"; shift
 cd "$(dirname "$0")/.."
 SNAP=/tmp/graft_snap
 mkdir -p "$SNAP"
@@ -24,11 +34,8 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-PROPS=()
-while [[ "${1:-}" == -D* ]]; do PROPS+=("$1"); shift; done
-MAIN="$1"; shift
 exec java -Xmx"${SNAP_HEAP:-8g}" $ADD_OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  "${PROPS[@]}" \
+  "${JVM_OPTS[@]}" \
   -cp "/opt/spark/jars/*:$SNAP/classes:$SNAP/test-classes" \
   "$MAIN" "$@"

@@ -316,9 +316,7 @@ object Bench {
     // definition, and 3 samples on a quiet host sit within ~0.1 s.
     val canaryFloor: Double =
       if (!fullRun) -1.0 else (1 to 3).map(_ => canaryOnce()).min
-    // probe cadence override for burst-replay tests and local iteration
-    val ioEvery = sys.env.get("SPARK_GRAFT_IO_EVERY")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(25)
+    val ioEvery = 25 // timed queries between I/O probes
     val canarySamples = scala.collection.mutable.ArrayBuffer[(Int, Double)]()
     val ioSamples = scala.collection.mutable.ArrayBuffer[(Int, Double)]()
     val loadSamples = scala.collection.mutable.ArrayBuffer[Double]()
@@ -417,8 +415,7 @@ object Bench {
       s"[bench] retest references resolved for " +
         s"${ordered.count(n => refTimes.contains(shortKey(n)))}/" +
         s"${ordered.size} queries")
-    val retestBudgetS = sys.env.get("SPARK_GRAFT_RETEST_BUDGET_S")
-      .flatMap(_.toDoubleOption).getOrElse(60.0)
+    val retestBudgetS = 60.0
     val outliers: Seq[(String, Double)] =
       if (!fullRun || refTimes.isEmpty) Seq.empty
       else results

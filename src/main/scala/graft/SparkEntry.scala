@@ -221,9 +221,10 @@ object SparkEntry {
     * deletion cannot happen inside a query whose returned DataFrame reads
     * the dir lazily). Lives under a per-process `graft-fmt-tmp-<pidhex>`
     * parent in java.io.tmpdir so the dead-pid [[scratchSweep]] reclaims it
-    * after a SIGKILL/OOM run (which tools/SpillRehearsal deliberately
-    * drives) — the shutdown hook never fires on those, and the previous
-    * target/tmp location had no crash-leak reclamation (r14 ADVICE). */
+    * after a SIGKILL/OOM run (BASELINE.md "Tight-memory spill
+    * rehearsal" drove such runs) — the shutdown hook never fires on
+    * those, and the previous target/tmp location had no crash-leak
+    * reclamation (r14 ADVICE). */
   private def tmpScratch(name: String): java.nio.file.Path = {
     val parent = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
       s"graft-fmt-tmp-$scratchNonce")
@@ -246,12 +247,13 @@ object SparkEntry {
   private lazy val scratchHook: Unit = Runtime.getRuntime.addShutdownHook(
     new Thread(() => scratchCreated.forEach(deleteRecursively)))
   // Crash-leak sweep (r14 review): a shutdown hook never runs under
-  // SIGKILL / OOM-kill — and tools/SpillRehearsal deliberately drives
-  // such crashes — so orphaned per-pid dirs would otherwise accumulate
-  // until the tmp filesystem fills. Once per JVM, before the first dir is
-  // created, remove any sibling graft-fmt-* dir whose pid-hex suffix
-  // names a process that no longer exists (or exists but is dead); live
-  // concurrent runs and unparseable names are left untouched.
+  // SIGKILL / OOM-kill — the BASELINE.md "Tight-memory spill rehearsal"
+  // drove such crashes — so orphaned per-pid dirs would otherwise
+  // accumulate until the tmp filesystem fills. Once per JVM, before the
+  // first dir is created, remove any sibling graft-fmt-* dir whose
+  // pid-hex suffix names a process that no longer exists (or exists but
+  // is dead); live concurrent runs and unparseable names are left
+  // untouched.
   private lazy val scratchSweep: Unit =
     try {
       import scala.jdk.CollectionConverters._
@@ -4676,7 +4678,7 @@ object SparkEntry {
     // 0 by construction). q255's view⋈click interval join through the
     // same two-batch date-split runner. The per-batch state transitions
     // are pure corpus functions under rules pinned empirically
-    // (JoinEvictionProbe; boundary cases in StreamingSpec):
+    // (q260's oracle; boundary cases in StreamingSpec):
     //   wm(b) = floor-ms(min(max vts, max cts) of batches < b) − 2 h —
     //     the MIN across the two watermark columns, each max over that
     //     side's FILTERED rows;
@@ -6692,7 +6694,7 @@ object SparkEntry {
     // q260: join-state eviction — phase split at the epoch-us midpoint
     // (nulls to phase A), wm(b) = floor-ms(min of the two sides' prior
     // maxes) - 2 h, eviction thresholds wm - 1 ms (µs-exact; pinned by
-    // JoinEvictionProbe + StreamingSpec), input = 2 × raw phase rows
+    // this oracle + StreamingSpec), input = 2 × raw phase rows
     // (one per join branch of the fanned-out file source)
     "q260_stream_join_eviction" ->
       """WITH e AS (SELECT event_type, user_id, epoch_us(ts) AS us

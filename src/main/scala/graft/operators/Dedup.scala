@@ -323,49 +323,20 @@ object Dedup {
     * capacity instead of inheriting that host's constant). */
   private[graft] val VerifyScratchBytesPerCandidate = 900.0
 
-  /** The routed chains' candidate-volume budget, in candidate rows —
-    * conf-overridable (r20) with [[RouteCandidatesPerDoc]] as the
-    * measured default:
-    *
-    *  - `spark.graft.route.candidatesPerDoc` (double): per-doc budget;
-    *    default 20 (see [[RouteCandidatesPerDoc]]'s calibration note).
-    *  - `spark.graft.route.scratchBytes` (long): the host's usable
-    *    scratch capacity; budget = scratchBytes /
-    *    [[VerifyScratchBytesPerCandidate]]. Stated ALONE it is the
-    *    budget outright — larger OR smaller than the calibration
-    *    default (r20 ADVICE: the knob must be able to raise the budget,
-    *    or the portability story is one-directional). When BOTH knobs
-    *    are set the tighter one binds (stating a big disk must not
-    *    override an explicit per-doc bound, and vice versa); the
-    *    [[RouteCandidatesPerDoc]] default applies only when neither is
-    *    stated.
-    *
+  /** The routed chains' candidate-volume budget, in candidate rows:
+    * `spark.graft.route.scratchBytes` (long, the host's usable scratch
+    * capacity) / [[VerifyScratchBytesPerCandidate]] when stated — larger
+    * or smaller than the default — else [[RouteCandidatesPerDoc]]·nDocs.
     * Always floored at [[MinRouteCandidates]] (the recall floor is a
     * contract, not a budget line). */
   private[graft] def routeCandidateBudget(
       spark: org.apache.spark.sql.SparkSession, nDocs: Long): Double = {
-    val perDocOpt = spark.conf.getOption("spark.graft.route.candidatesPerDoc")
-      .map(_.toDouble)
-    perDocOpt.foreach(p => require(p > 0,
-      s"spark.graft.route.candidatesPerDoc must be > 0: $p"))
-    val scratchOpt = spark.conf.getOption("spark.graft.route.scratchBytes")
-      .map { b =>
+    val capped = spark.conf.getOption("spark.graft.route.scratchBytes") match {
+      case Some(b) =>
         val bytes = b.toDouble
         require(bytes > 0, s"spark.graft.route.scratchBytes must be > 0: $b")
         bytes / VerifyScratchBytesPerCandidate
-      }
-    // r20 ADVICE: a host stating ONLY its scratch capacity must be able
-    // to RAISE the budget past the calibration default, not just lower
-    // it — that is the portability point of the knob. So scratchBytes
-    // alone IS the budget; the per-doc DEFAULT applies only when neither
-    // knob is stated, and min() binds only when the caller stated BOTH
-    // (a big disk must not override an explicit per-doc bound, and vice
-    // versa).
-    val capped = (perDocOpt.map(_ * nDocs), scratchOpt) match {
-      case (Some(pd), Some(sc)) => math.min(pd, sc)
-      case (Some(pd), None) => pd
-      case (None, Some(sc)) => sc
-      case (None, None) => RouteCandidatesPerDoc * nDocs
+      case None => RouteCandidatesPerDoc * nDocs
     }
     math.max(capped, MinRouteCandidates)
   }
@@ -1351,10 +1322,11 @@ object Dedup {
     * leg's recall is budget-shaped — quotes whose every rarest-k
     * witness is hotter than the budget-derived dfreq cap are lost
     * (measured: the cap rides at the dfreq-20 default posture when the
-    * 2× stretch affords it; `spark.graft.route.candidatesPerDoc`
-    * buys more — 200/doc moved the 300k cap to 394 and recovered
-    * 500/500) — and rarest-k is blind to pairs whose missing fraction
-    * is exactly the sub's rarest shingles (a template-cleaned copy).
+    * 2× stretch affords it; a larger `spark.graft.route.scratchBytes`
+    * budget buys more — 200 candidates/doc moved the 300k cap to 394
+    * and recovered 500/500) — and rarest-k is blind to pairs whose
+    * missing fraction is exactly the sub's rarest shingles (a
+    * template-cleaned copy).
     * When full asymmetric recall matters more than the scratch
     * envelope, set an absolute `maxDocsPerTok` instead of routing. */
   /** Shared token-table front of the containment joins (r20, extracted
@@ -1471,7 +1443,7 @@ object Dedup {
               "bound) — autoRoute engaging: banded-minhash ∪ one-sided " +
               "rarest-k candidates, one exact verify; recall above the " +
               "budget-derived caps is bought with " +
-              "spark.graft.route.candidatesPerDoc (see Scaladoc)")
+              "spark.graft.route.scratchBytes (see Scaladoc)")
           else
             log.warn(f"containmentPairs autoCap=$cap admits up to " +
               f"$bound%.3e candidate rows (${bound / math.max(nDocs, 1)}%.0f " +
@@ -1585,8 +1557,8 @@ object Dedup {
     * admitted an UNCOUNTED candidate volume and blew a 40 GB scratch
     * budget at 44.7 GB — the same uncounted-override failure class the
     * r19 banded-cap fix closed, one leg over. Recall above the derived
-    * cap is bought explicitly with `spark.graft.route.candidatesPerDoc`
-    * (measured: 300k cap 20→394 at 200/doc recovered 500/500). */
+    * cap is bought explicitly with `spark.graft.route.scratchBytes`
+    * (measured: 300k cap 20→394 at a 200/doc budget recovered 500/500). */
   private[graft] val OneSidedCapFloor = 2
 
   /** The exact join's default `maxDocsPerTok` — the recall posture a
@@ -1646,7 +1618,7 @@ object Dedup {
         "candidates (≤ 2× budget posture stretch, exact pre-join " +
         "count) — below the default dfreq-20 posture; quotes with no " +
         f"witness at dfreq ≤ $eff are lost; raise " +
-        "spark.graft.route.candidatesPerDoc to buy them back")
+        "spark.graft.route.scratchBytes to buy them back")
     else
       log.info(f"$label: one-sided probe cap $eff admits ${cum}%.3e " +
         "candidates (exact pre-join count" +

@@ -23,23 +23,13 @@ object Similarity {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Checkpoint a bucket-size table when the caller is in autocap mode
-    * (r19, overturning the r18 same-JVM A/B): autocap collects a driver
-    * rollup from this table — a SEPARATE action — and exchange reuse
-    * never spans query executions, so without the pin the keep join
-    * recomputes the full corpus signature pass a second time. The
-    * fresh-JVM-per-arm A/B (LshPinAB, 400k vectors, 3 samples/arm)
-    * reads pin 15.4/16.8/18.4 s vs no-pin 76.8/31.2/33.2 s on the
-    * single-table chain; the pinned table is at most 2^bits (per-table)
-    * rows, so the materialization itself is free. Explicit-cap mode has
-    * no rollup action — sizes has ONE consumer inside the main job —
-    * so pinning there would only add a pass.
-    * `-Dgraft.lsh.pinSizes=true/false` forces either shape (the A/B
-    * harness's knob). */
+  /** Checkpoint a bucket-size table in autocap mode only: the autocap
+    * rollup is a separate action, so without the pin the keep join
+    * recomputes the signature pass; explicit-cap mode has one consumer
+    * and pinning would only add a pass (BASELINE.md "r19: the LSH
+    * autocap pin, settled fresh-JVM"). */
   private def maybePinSizes(sizes: DataFrame, autoCap: Boolean): DataFrame =
-    if (sys.props.get("graft.lsh.pinSizes").map(_.toBoolean)
-      .getOrElse(autoCap)) sizes.localCheckpoint()
-    else sizes
+    if (autoCap) sizes.localCheckpoint() else sizes
 
   /** Element-wise dot product — native compiled loop
     * ([[graft.functions.VectorOps]]), sequential left fold so results are
@@ -317,23 +307,7 @@ object Similarity {
     val sig =
       if (maxBucket == Int.MaxValue) sig0
       else {
-        // The bucket-size table IS checkpointed in autocap mode (r19,
-        // overturning the r18 same-JVM reading): the autocap rollup
-        // collect is a SEPARATE ACTION, and exchange reuse never spans
-        // query executions — so the no-pin shape pays one full
-        // signature pass for the rollup and ANOTHER for the keep
-        // semi-join's sizes recompute inside the main job. The
-        // fresh-JVM-per-arm A/B (LshPinAB, 400k vectors, 3 samples per
-        // arm) reads pin 15.4/16.8/18.4 s vs no-pin 76.8/31.2/33.2 s —
-        // ~2× at the no-pin arm's BEST, with the checkpointed table at
-        // most 2^bits rows (65k at 16 bits: pinning it is free). The
-        // r18 1M same-JVM A/B that rejected the pin was confounded by a
-        // preceding 45 GB spill arm + ContextCleaner lag (BASELINE r18);
-        // the clean number wins. Explicit-cap mode keeps the no-pin
-        // shape: no rollup action exists there, sizes has exactly one
-        // consumer inside the main job, and an eager checkpoint would
-        // only ADD a pass. -Dgraft.lsh.pinSizes=true/false overrides
-        // either way (the A/B harness's knob).
+        // pinned in autocap mode only, see [[maybePinSizes]]
         val sizes = maybePinSizes(
           sig0.groupBy(col("bucket")).agg(count(lit(1)).as("m")),
           autoCap = maxBucket == 0)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Dedup, Similarity}
@@ -180,6 +181,30 @@ class DedupSimilaritySpec extends AnyFunSuite {
         bits = 8, minSim = 0.99)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(off.size == clusterPairs.size + 40 * 39 / 2, s"off size: ${off.size}")
+  }
+
+  test("LSH autocap reads the bucket-size table from a checkpoint; an " +
+      "explicit cap recomputes it in the main job (BASELINE r19)") {
+    val vecs = ((0L until 6L).map(i => (i, Array.tabulate(8)(j => (j + 1).toFloat))) ++
+      (10L until 13L).map(i => (i, Array.tabulate(8)(j =>
+        if (j % 2 == 0) -2f else 1f)))).toDF("vec_id", "embedding")
+    // the checkpointed scans that carry a bucket-size column `m`
+    def sizeScans(pairs: DataFrame): Seq[Boolean] =
+      pairs.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD
+            if r.output.exists(_.name == "m") => r.rdd.isCheckpointed
+      }
+    Seq[Int => DataFrame](
+      c => Similarity.lshNearPairs(vecs, "vec_id", "embedding", bits = 8,
+        maxBucket = c),
+      c => Similarity.lshNearPairsTables(vecs, "vec_id", "embedding",
+        bits = 8, maxBucket = c),
+      c => Similarity.lshNearPairsMultiProbe(vecs, "vec_id", "embedding",
+        bits = 8, maxBucket = c)).foreach { lsh =>
+      // one scan per side of the candidate self-join
+      assert(sizeScans(lsh(0)).distinct == Seq(true), "autocap must pin")
+      assert(sizeScans(lsh(4)).isEmpty, "explicit cap must not pin")
+    }
   }
 
   test("multi-table LSH: table 0 reproduces the single table, OR lifts " +
@@ -565,7 +590,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("volume-capped route bucket cap: families within budget admitted, " +
       "corpus-share accident classes refused, floors respected (r19)") {
-    // the measured 500k rollup shape (CrouteCapProbe): smooth Zipf dfreq
+    // the measured 500k rollup shape (BASELINE r19 croute): smooth Zipf dfreq
     // made the family estimate corpus-scale (498488); the accident
     // classes 51828/15677 must be refused by the volume budget while the
     // genuine-family classes stay admitted
@@ -1107,46 +1132,26 @@ class DedupSimilaritySpec extends AnyFunSuite {
   test("routeCandidateBudget: conf-overridable, scratch-derived, floored " +
       "(r20 portability)") {
     val s = spark
-    def cleanup(): Unit = {
-      s.conf.unset("spark.graft.route.candidatesPerDoc")
-      s.conf.unset("spark.graft.route.scratchBytes")
-    }
+    def cleanup(): Unit = s.conf.unset("spark.graft.route.scratchBytes")
     cleanup()
     try {
       // default: 20/doc, floored at MinRouteCandidates = 5e6
       assert(graft.operators.Dedup.routeCandidateBudget(s, 1000000L)
         == 2e7)
       assert(graft.operators.Dedup.routeCandidateBudget(s, 1000L) == 5e6)
-      // scratchBytes ALONE is the budget outright — including RAISING it
+      // scratchBytes is the budget outright — including RAISING it
       // past the calibration default (r20 ADVICE: the portability knob
-      // must work in both directions; min() only when both are stated)
+      // must work in both directions)
       s.conf.set("spark.graft.route.scratchBytes",
         (90L << 30).toString) // 90 GiB -> ~1.07e8 > the 2e7 default
       val scratchOnly = graft.operators.Dedup.routeCandidateBudget(s, 1000000L)
       assert(math.abs(scratchOnly - (90L << 30) / 900.0) < 1.0,
         scratchOnly.toString)
-      s.conf.unset("spark.graft.route.scratchBytes")
-      // per-doc override moves the budget as stated
-      s.conf.set("spark.graft.route.candidatesPerDoc", "60")
-      assert(graft.operators.Dedup.routeCandidateBudget(s, 1000000L)
-        == 6e7)
-      // scratch capacity derives a budget through the calibrated
-      // 900 B/candidate verify cost; the TIGHTER of the two binds
-      s.conf.set("spark.graft.route.scratchBytes",
-        (9L << 30).toString) // 9 GiB -> ~1.07e7 candidates
-      val both = graft.operators.Dedup.routeCandidateBudget(s, 1000000L)
-      assert(math.abs(both - (9L << 30) / 900.0) < 1.0, both.toString)
-      // a huge disk does not override the per-doc bound
-      s.conf.set("spark.graft.route.scratchBytes",
-        (900L << 30).toString)
-      assert(graft.operators.Dedup.routeCandidateBudget(s, 1000000L)
-        == 6e7)
-      // and the floor survives any override
-      s.conf.set("spark.graft.route.candidatesPerDoc", "1")
+      // the floor survives any override
       s.conf.set("spark.graft.route.scratchBytes", "900")
       assert(graft.operators.Dedup.routeCandidateBudget(s, 1000L) == 5e6)
       // invalid values fail loudly, never a silent default
-      s.conf.set("spark.graft.route.candidatesPerDoc", "0")
+      s.conf.set("spark.graft.route.scratchBytes", "0")
       intercept[IllegalArgumentException] {
         graft.operators.Dedup.routeCandidateBudget(s, 1000L)
       }

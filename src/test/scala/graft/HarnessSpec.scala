@@ -11,8 +11,9 @@ import org.scalatest.time.SpanSugar._
 import graft.operators.Overlap
 
 /** The run harness around the queries: the one session policy, the
-  * query/oracle contract, the bench's retest-reference resolution and
-  * `Overlap.runAll`'s failure handling. */
+  * query/oracle contract, the bench's retest-reference resolution,
+  * `Overlap.runAll`'s failure handling and the census of main-code
+  * knobs. */
 class HarnessSpec extends AnyFunSuite with TimeLimits {
   implicit val signaler: Signaler = ThreadSignaler
 
@@ -96,5 +97,23 @@ class HarnessSpec extends AnyFunSuite with TimeLimits {
     assert(thrown eq boom)
     // the still-running sibling was cancelled, not left behind
     assert(interrupted.await(10, TimeUnit.SECONDS))
+  }
+
+  test("knob census: main code reads no graft.* system property and no " +
+      "spark.graft.* key but spark.graft.route.scratchBytes") {
+    import scala.jdk.CollectionConverters._
+    val files = Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 10, "src/main/scala not found from the working dir")
+    val sysProp = ("""(?:sys\.props|getProperty|getBoolean|getInteger|getLong)""" +
+      """[\w.]*\(\s*"(graft\.[\w.]+)"""").r
+    val confKey = """spark\.graft\.[\w.]*\w""".r
+    val knobs = files.flatMap { f =>
+      val src = Files.readString(f)
+      (sysProp.findAllMatchIn(src).map(_.group(1)) ++ confKey.findAllIn(src))
+        .filter(_ != "spark.graft.route.scratchBytes")
+        .map(k => s"${f.getFileName}: $k")
+    }.distinct
+    assert(knobs.isEmpty, "an experiment came back as a knob")
   }
 }

@@ -139,7 +139,7 @@ class StreamingSpec extends AnyFunSuite {
     // cts ∈ [vts, vts + 60m] gives per-side death rules:
     //   view dead once vts + 60m can no longer reach a future cts,
     //   click dead once cts can no longer reach a future vts.
-    // Probe-pinned exact form (JoinEvictionProbe): dead iff
+    // Exact form (the q260 oracle's rule): dead iff
     // expiry ≤ wm − 1 ms at MICROsecond precision, where expiry is
     // vts + 60m (views) / cts (clicks). The rows below kill the three
     // competing hypotheses at once:

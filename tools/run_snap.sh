@@ -2,14 +2,12 @@
 # Run a graft main OUTSIDE sbt from a snapshot of the compiled classes:
 # keeps the build free for other work and gives fresh-JVM timings.
 # test-classes join the classpath when present, so graft.tools.* mains
-# (rehearsals, Probe) run the same way as graft.Bench or graft.Verify.
+# (Probe and the demos) run the same way as graft.Bench or graft.Verify.
 # Usage: tools/run_snap.sh [-Dsys.prop=... | -XX:jvm-option]* <fully.qualified.Main> [args...]
 # Env: SNAP_HEAP (default 8g), plus the main's own SPARK_GRAFT_* knobs.
 # Leading -D and -XX: options go to the JVM, before the main class. A
 # -Dspark.* property becomes a Spark conf, so two runs differing in one
 # -Dspark.k=v are a conf A/B; -XX:StartFlightRecording=... records a JFR.
-# Long rehearsals: SNAP_HEAP=48g tools/run_snap.sh \
-#   -Dspark.driver.maxResultSize=12g graft.tools.ScaleRehearsal100x ...
 set -euo pipefail
 JVM_OPTS=()
 while [[ "${1:-}" == -D* || "${1:-}" == -XX:* ]]; do JVM_OPTS+=("$1"); shift; done

@@ -1,18 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.{GeoFunctions, TextFunctions}
-import graft.operators.{Blocklist, Corpus, Dedup, Multimodal, Similarity, Transforms}
-import graft.streaming.StreamingOps
+import graft.contract._
 
 /** Driver contract (SURVEY §7 + builder prompt): one `queries` entry per
   * implemented operator from SURVEY §2 (+ the north-star dedup / similarity /
   * text-analysis / multimodal operators), and a DuckDB-equivalent `oracleSql`
-  * for every SQL-expressible one.
+  * for every SQL-expressible one. Each query is one [[Contract]] record —
+  * plan and oracle side by side — in its family's file under
+  * `graft/contract/`; both maps are derived from the records.
   *
   * Determinism rules used throughout so the Spark result hash-matches DuckDB:
   *  - double SUMs go through `CAST(x AS DECIMAL(18,2))` so summation is
@@ -24,10258 +21,22 @@ import graft.streaming.StreamingOps
   *  - no `current_timestamp` in compared output.
   */
 object SparkEntry {
-  import Tables._
 
-  private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
-  private def sumd(c: Column): Column = sum(dec(c)).cast("double")
+  /** Every contract record, family by family. */
+  val contracts: Seq[Contract] =
+    RelationalQueries.contracts ++ TransformQueries.contracts ++
+      IngestQueries.contracts ++ StreamingQueries.contracts ++
+      DedupQueries.contracts ++ VectorQueries.contracts ++
+      CorpusQueries.contracts ++ BinaryQueries.contracts ++
+      MaintenanceQueries.contracts
 
-  /** nDCG@10 position discounts 1/log2(i+1), i = 1..10 — shared by the
-    * q199 Spark plan and its oracle SQL so both sides add the identical
-    * doubles in the identical fixed order. */
-  private val ndcgConsts: Seq[Double] =
-    (1 to 10).map(i => 1.0 / (math.log(i + 1.0) / math.log(2.0)))
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    contracts.map(c => c.name -> c.plan).toMap
 
-  /** q232's convex test polygon, CCW in (x=lon, y=lat) — shared by the
-    * Spark plan and the generated oracle SQL so the half-plane constants
-    * cannot drift. */
-  private val polyVerts: Seq[(Double, Double)] =
-    Seq((0.0, 0.0), (60.0, 20.0), (40.0, 70.0), (-20.0, 50.0))
-  private def polyEdges: Seq[((Double, Double), (Double, Double))] =
-    polyVerts.zip(polyVerts.tail :+ polyVerts.head)
-
-  /** Declarative data-quality suite (q223) — constraints as DATA, shared
-    * verbatim by the Spark one-pass evaluator and the generated oracle.
-    * Predicates are engine-portable SQL (both Spark `expr` and DuckDB
-    * parse them identically). qty_le_30 violates on purpose (~40% of
-    * lineitem) so the report exercises a non-zero lane. */
-  private val dqRules: Seq[(String, String, String)] = Seq(
-    ("qty_positive", "l_quantity > 0", "error"),
-    ("qty_le_30", "l_quantity <= 30", "warn"),
-    ("discount_range", "l_discount BETWEEN 0.00 AND 0.10", "error"),
-    ("tax_range", "l_tax BETWEEN 0.00 AND 0.08", "error"),
-    ("price_positive", "l_extendedprice > 0", "error"),
-    ("ship_in_era", "l_shipdate >= DATE '1992-01-01'", "error"),
-    ("linenumber_positive", "l_linenumber >= 1", "error"),
-    ("returnflag_domain", "l_returnflag IN ('A','N','R')", "error"),
-    ("linestatus_domain", "l_linestatus IN ('O','F')", "error"),
-    ("keys_positive", "l_orderkey > 0 AND l_partkey > 0 AND l_suppkey > 0",
-      "error"))
-
-  /** DuckDB CASE mapping `keyCol % n -> probe field` over
-    * [[graft.pipelines.SiteScoringPipeline.ruleProbes]] (shared by the
-    * q217/q218 oracles — generated from the one probe table). */
-  private def poiProbeCaseSql(keyCol: String,
-      sel: ((String, String)) => String, as: String): String = {
-    val probes = graft.pipelines.SiteScoringPipeline.ruleProbes
-    probes.zipWithIndex
-      .map { case (p, i) => s"WHEN $i THEN '${sel(p)}'" }
-      .mkString(s"CASE $keyCol % ${probes.size} ", " ", s" END AS $as")
-  }
-
-  /** DuckDB categorizer: the REVERSED
-    * [[graft.pipelines.SiteScoringPipeline.fullRules]] as a first-match-wins
-    * CASE over `poi_name`/`poi_type` — equals Spark's last-writer-wins
-    * chain by construction (shared by the q217/q218 oracles). */
-  private lazy val categorizeCaseSql: String = {
-    import graft.pipelines.SiteScoringPipeline.{fullRules, defaultCategory}
-    fullRules.reverse.map { case (f, pat, cat) =>
-      val in = if (f == "type") "poi_type" else "poi_name"
-      s"WHEN regexp_matches($in, '$pat') THEN '$cat'"
-    }.mkString("CASE ", " ", s" ELSE '$defaultCategory' END")
-  }
-
-  /** Generated q246/q247 oracle: the [[variantFixture]] prepared frame and
-    * the full variant serving contract — per-category `value > 0`-guarded
-    * metrics plus the variant-dispatched global counts (NEX's 300M filter
-    * vs PL's plain row count) — as one DuckDB aggregate. The SQL is
-    * DERIVED from the same [[graft.pipelines.SiteScoringPipeline
-    * .SiteVariant]] data the Spark side pivots over, so a drifted
-    * category table breaks both engines together, not silently one. */
-  private def variantContractSql(
-      v: graft.pipelines.SiteScoringPipeline.SiteVariant): String = {
-    val cats = v.featureCategories.distinct
-    val pick = cats :+ "ACADEMIA"
-    val list = pick.map(c => s"'$c'").mkString("[", ", ", "]")
-    val suf = v.countSuffix
-    def q(name: String) = "\"" + name + "\""
-    val catCols = cats.flatMap { cat =>
-      val ref = "GEO_" + cat.replace(' ', '_')
-      def m(agg: String) =
-        s"$agg(CASE WHEN poi_category = '$cat' THEN distance_mtrs END)"
-      def guarded(agg: String, fill: String, as: String) =
-        s"CASE WHEN ${m(agg)} > 0 THEN ${m(agg)} " +
-          s"ELSE CAST($fill AS DOUBLE) END AS ${q(as)}"
-      val common = Seq(
-        s"CAST(count(CASE WHEN poi_category = '$cat' THEN 1 END) AS BIGINT)" +
-          s" AS ${q(s"${ref}_300M_$suf")}",
-        "CAST(count(CASE WHEN poi_category = " +
-          s"'$cat' AND distance_mtrs <= 100 THEN 1 END) AS BIGINT)" +
-          s" AS ${q(s"${ref}_100M_$suf")}")
-      val dists =
-        if (v.fiveMetrics) Seq(
-          guarded("max", "0", s"${ref}_MAX_DIST"),
-          guarded("min", v.minDistFill.toInt.toString, s"${ref}_MIN_DIST"),
-          guarded("avg", "0", s"${ref}_MEAN_DIST"))
-        else
-          Seq(guarded("min", v.minDistFill.toInt.toString, s"${ref}_MIN_DIST"))
-      common ++ dists
-    }
-    val g300 =
-      if (v.globalCap300)
-        "CAST(count(CASE WHEN distance_mtrs <= 300 THEN 1 END) AS BIGINT)" +
-          s" AS GEO_POI_300M_$suf"
-      else s"CAST(count(*) AS BIGINT) AS GEO_POI_300M_$suf"
-    val g100 =
-      "CAST(count(CASE WHEN distance_mtrs <= 100 THEN 1 END) AS BIGINT)" +
-        s" AS GEO_POI_100M_$suf"
-    s"""WITH prep AS (
-       |  SELECT o_orderkey % 20 AS rst_cd,
-       |    list_extract($list,
-       |      CAST((o_orderkey * 13) % ${pick.size} + 1 AS INT))
-       |      AS poi_category,
-       |    CAST((o_orderkey * 7919) % 601 AS DOUBLE) AS distance_mtrs
-       |  FROM orders)
-       |SELECT rst_cd,
-       |  ${(catCols :+ g300 :+ g100).mkString(",\n  ")}
-       |FROM prep GROUP BY rst_cd""".stripMargin
-  }
-
-  /** Water-filling CTE chain (shared by q198 and q207): per-source caps,
-    * suffix-weight ratios, integer saturation prefix-AND, and the final
-    * one-divide allocation as `wf_alloc(source, cap, w, sat, alloc)`. */
-  private val waterfillCtes: String =
-    """caps AS (
-      |  SELECT source,
-      |    CAST(sum(len(string_split_regex(trim(lower(text)), '\s+')))
-      |      AS BIGINT) AS cap,
-      |    CAST(CAST(regexp_extract(source, '(\d+)$', 1) AS BIGINT) + 1
-      |      AS BIGINT) AS w
-      |  FROM documents GROUP BY source),
-      |b AS (SELECT CAST(sum(cap) // 2 AS BIGINT) AS budget FROM caps),
-      |o AS (SELECT c.*, b.budget,
-      |    sum(w) OVER () AS w_tot,
-      |    coalesce(sum(cap) OVER (ORDER BY CAST(cap AS DOUBLE) / CAST(w AS DOUBLE), source
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS c_before,
-      |    coalesce(sum(w) OVER (ORDER BY CAST(cap AS DOUBLE) / CAST(w AS DOUBLE), source
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS w_before
-      |  FROM caps c CROSS JOIN b),
-      |f AS (SELECT *, CASE WHEN cap * (w_tot - w_before)
-      |      <= (budget - c_before) * w THEN 1 ELSE 0 END AS cond
-      |  FROM o),
-      |g AS (SELECT *,
-      |    min(cond) OVER (ORDER BY CAST(cap AS DOUBLE) / CAST(w AS DOUBLE), source
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sat
-      |  FROM f),
-      |h AS (SELECT *,
-      |    coalesce(sum(CASE WHEN sat = 1 THEN cap END) OVER (), 0) AS c_sat,
-      |    coalesce(sum(CASE WHEN sat = 1 THEN w END) OVER (), 0) AS w_sat
-      |  FROM g),
-      |wf_alloc AS (SELECT source, cap, w, sat,
-      |  CASE WHEN sat = 1 THEN CAST(cap AS DOUBLE)
-      |       ELSE CAST(budget - c_sat AS DOUBLE) * CAST(w AS DOUBLE)
-      |            / CAST(w_tot - w_sat AS DOUBLE) END AS alloc
-      |FROM h)""".stripMargin
-
-  /** Exact scale-2 sums via integer cents: the multiply/convert happens in
-    * LONG (one codegen'd round+cast per row instead of a decimal conversion),
-    * only the accumulator is DECIMAL(18,0) → no overflow at any row count.
-    * For 2-decimal-exact inputs this is bit-identical to [[sumd]] (AggProbe
-    * verified per group at sf0.1): the final decimal division by 100 is
-    * exact, and decimal→double is a single nearest-rounding both ways.
-    * NOT used for columns with >2dp precision (o_totalprice). */
-  private def cents(c: Column): Column = round(c * 100).cast("long")
-  private def sumc(c: Column): Column =
-    (sum(cents(c).cast(DecimalType(18, 0))) / lit(100)).cast("double")
+  def oracleSql: Map[String, String] =
+    contracts.map(c => c.name -> c.oracle).toMap
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
-
-  // ---- write-scratch dirs for the format round-trip queries ----
-  // Keyed by an MD5 of the FULL dataset path (a 32-bit String.hashCode can
-  // collide across datasets) plus a per-PROCESS nonce, so two concurrent
-  // runs — even over the SAME dataset — never share a dir between the
-  // overwrite-write and the timed read-back (r13 ADVICE; the r12 keying
-  // only separated different datasets). Deletion cannot happen inside the
-  // query (the returned DataFrame reads the dir lazily), so every dir is
-  // registered for recursive removal at JVM exit — bench/verify runs no
-  // longer litter the tmpdir across invocations.
-  private val scratchNonce: String =
-    java.lang.Long.toHexString(ProcessHandle.current().pid())
-
-  /** Per-dataset + per-process token for the streaming queries' scratch
-    * symlink dirs and sink view names — the same keying discipline as
-    * [[scratchDir]] (r13 ADVICE): MD5 of the full path (a 32-bit
-    * String.hashCode can collide across datasets) plus the process nonce
-    * (two concurrent runs over the SAME dataset must not race on a
-    * shared symlink or an in-memory sink view). Hex only, so it stays a
-    * valid temp-view identifier fragment. */
-  private def datasetTok(dataset: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(dataset.getBytes("UTF-8")).take(6)
-      .map(b => f"$b%02x").mkString + scratchNonce
-
-  /** Scratch dir registered for JVM-exit removal: datasetTok carries the
-    * process nonce, so without registration every run would leave fresh
-    * `q*_src_*` dirs behind (same lifecycle rule as [[scratchDir]] —
-    * deletion cannot happen inside a query whose returned DataFrame reads
-    * the dir lazily). Lives under a per-process `graft-fmt-tmp-<pidhex>`
-    * parent in java.io.tmpdir so the dead-pid [[scratchSweep]] reclaims it
-    * after a SIGKILL/OOM run (BASELINE.md "Tight-memory spill
-    * rehearsal" drove such runs) — the shutdown hook never fires on
-    * those, and the previous target/tmp location had no crash-leak
-    * reclamation (r14 ADVICE). */
-  private def tmpScratch(name: String): java.nio.file.Path = {
-    val parent = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft-fmt-tmp-$scratchNonce")
-    val p = java.nio.file.Files.createDirectories(parent.resolve(name))
-    scratchSweep
-    scratchHook
-    scratchCreated.add(parent)
-    p
-  }
-  private val scratchCreated =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
-  private def deleteRecursively(root: java.nio.file.Path): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(p => try java.nio.file.Files.deleteIfExists(p)
-          catch { case _: java.io.IOException => })
-    } catch { case _: java.io.IOException => }
-  private lazy val scratchHook: Unit = Runtime.getRuntime.addShutdownHook(
-    new Thread(() => scratchCreated.forEach(deleteRecursively)))
-  // Crash-leak sweep (r14 review): a shutdown hook never runs under
-  // SIGKILL / OOM-kill — the BASELINE.md "Tight-memory spill rehearsal"
-  // drove such crashes — so orphaned per-pid dirs would otherwise
-  // accumulate until the tmp filesystem fills. Once per JVM, before the
-  // first dir is created, remove any sibling graft-fmt-* dir whose
-  // pid-hex suffix names a process that no longer exists (or exists but
-  // is dead); live concurrent runs and unparseable names are left
-  // untouched.
-  private lazy val scratchSweep: Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-      java.nio.file.Files.list(tmp).iterator().asScala.toSeq
-        .filter(p => java.nio.file.Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("graft-fmt-"))
-        .foreach { p =>
-          val pidHex = p.getFileName.toString.split('-').last
-          val orphaned =
-            try {
-              val pid = java.lang.Long.parseLong(pidHex, 16)
-              val h = ProcessHandle.of(pid)
-              pid != ProcessHandle.current().pid() &&
-                (h.isEmpty || !h.get().isAlive)
-            } catch { case _: NumberFormatException => false }
-          if (orphaned) deleteRecursively(p)
-        }
-    } catch { case _: java.io.IOException => }
-  private def scratchDir(tag: String, dataset: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dataset.getBytes("UTF-8")).take(6)
-      .map(b => f"$b%02x").mkString
-    val p = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft-fmt-$tag-$key-$scratchNonce")
-    scratchSweep
-    scratchHook
-    scratchCreated.add(p)
-    p.toString
-  }
-
-  /** Gated pin for a subtree consumed more than once inside one query
-    * (r21, guide §1.2 "don't compute things twice"): localCheckpoint when
-    * the SOURCE table is provably small (the same 512 MB bound the dedup
-    * fronts use — see [[graft.operators.Dedup.shingleToksPlan]]'s
-    * dispatch rationale), recompute at scale so nothing corpus-sized is
-    * ever pinned in the block manager. Bench/Verify release all
-    * persistent RDDs after each query. */
-  private def ckptIfSmall(base: DataFrame)(df: DataFrame): DataFrame =
-    if (base.queryExecution.optimizedPlan.stats.sizeInBytes <
-      BigInt(512L << 20)) df.localCheckpoint()
-    else df
-
-  // ---- deterministic synthetic geo points (no lat/lon in the corpus) ----
-  private def custPoints(s: SparkSession, d: String): DataFrame =
-    customer(s, d).select(col("c_custkey"),
-      (((col("c_custkey") * 37) % 17000).cast("double") / lit(100) - lit(85)).as("lat"),
-      (((col("c_custkey") * 91) % 35000).cast("double") / lit(100) - lit(175)).as("lon"))
-
-  private def suppPoints(s: SparkSession, d: String): DataFrame =
-    supplier(s, d).select(col("s_suppkey"),
-      (((col("s_suppkey") * 53) % 17000).cast("double") / lit(100) - lit(85)).as("s_lat"),
-      (((col("s_suppkey") * 71) % 35000).cast("double") / lit(100) - lit(175)).as("s_lon"))
-
-  /** Regex categorizer rules, LAST-writer-wins like the reference's 40-rule
-    * chain (`PGSITE/__init__.py:144-281`). */
-  private val partRules: Seq[(String, String)] = Seq(
-    "(?i)widget" -> "WIDGETRY",
-    "(?i)(bolt|nut|screw)" -> "FASTENER",
-    "(?i)rod" -> "RODWARE",
-    "(?i)(small|mini)" -> "SMALLGOODS",
-    "(?i)cold" -> "COLDCHAIN")
-  private val rulesDefault = "OTROS SIN CLASIFICACION"
-
-  /** q124 dictionary — overlapping terms on purpose (longest-match). The
-    * oracle's regex alternation lists these length-descending so RE2's
-    * first-alternative choice equals the trie's longest-match. */
-  private val DictTerms = Seq("customer query", "sort table", "hash join",
-    "customer", "stream", "window", "spark", "hash")
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // A1/A2 — grouped sums/counts (TPC-H Q1 shape; reference A2:
-    // `HTGPIPROPHEDEX/__init__.py:502`).
-    "q01_pricing_summary" -> ((s, d) => {
-      // Money columns are exact 2-decimal values, so all row arithmetic
-      // happens in integer cents (LONG multiplies — the decimal conversion
-      // per row was 40% of the query, AggProbe) with DECIMAL accumulators;
-      // exact, order-independent, bit-identical to the oracle's decimal
-      // formulation. p·d ≤ 1e9·100, p·d·t ≤ 1e11·100 — far inside LONG.
-      val p100 = cents(col("l_extendedprice"))
-      val d100 = lit(100L) - cents(col("l_discount"))
-      val t100 = lit(100L) + cents(col("l_tax"))
-      lineitem(s, d).groupBy(col("l_returnflag"), col("l_linestatus")).agg(
-        sumc(col("l_quantity")).as("sum_qty"),
-        sumc(col("l_extendedprice")).as("sum_base_price"),
-        (sum((p100 * d100).cast(DecimalType(18, 0))) / lit(10000))
-          .cast("double").as("sum_disc_price"),
-        (sum((p100 * d100 * t100).cast(DecimalType(18, 0))) / lit(1000000))
-          .cast("double").as("sum_charge"),
-        count(lit(1)).as("count_order"))
-    }),
-
-    // A1 — watermark derivation: GROUP BY key, MAX(ts)
-    // (`HTGPIYAHOO/__init__.py:38`).
-    "q02_watermark_max" -> ((s, d) =>
-      Transforms.watermarks(orders(s, d), "o_custkey", "o_orderdate")),
-
-    // J1 — per-entity watermark application as broadcast join + predicate
-    // (`HTGPIYAHOO/__init__.py:74-96`).
-    "q03_watermark_join" -> ((s, d) => {
-      val o = orders(s, d)
-      val wm = Transforms.watermarks(
-        o.filter(col("o_orderdate") < lit("1998-01-01").cast("timestamp")),
-        "o_custkey", "o_orderdate", "wm_date")
-      Transforms.watermarkFilter(o, wm, Seq("o_custkey"), "o_orderdate", "wm_date")
-        .filter(col("o_orderdate").isNotNull)
-        .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
-    }),
-
-    // J2 — small-dimension lookup enrichment via broadcast joins
-    // (`HTGPIENSO/__init__.py:75,82` dict lookups → dim joins).
-    "q04_lookup_enrich" -> ((s, d) => {
-      val c = customer(s, d); val n = nation(s, d); val r = region(s, d)
-      c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(count(lit(1)).as("n_customers"), sumc(col("c_acctbal")).as("total_acctbal"))
-    }),
-
-    // P4/P1/P2/F7-ish — range predicate + projection + derived column
-    // (`HTGPISNP500/__init__.py:90-91`).
-    "q05_filter_project" -> ((s, d) =>
-      orders(s, d)
-        .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-          year(col("o_orderdate")).cast("long").as("o_year"),
-          substring(col("o_orderpriority"), 1, 1).as("priority_code"))),
-
-    // W1/W2 — grouped top-k (generated T-SQL TOP 3 + ROW_NUMBER,
-    // `HTIPNEXSITE/__init__.py:106-122`).
-    "q06_topk_per_group" -> ((s, d) =>
-      Transforms.topKPerGroup(customer(s, d), Seq(col("c_mktsegment")),
-          Seq(col("c_acctbal").desc, col("c_custkey").asc), 3)
-        .select(col("c_mktsegment"), col("rnk"), col("c_custkey"), col("c_name"),
-          col("c_acctbal"))),
-
-    // A6/A7 — DISTINCT (`PGSITE/__init__.py:284,298`).
-    "q07_distinct" -> ((s, d) =>
-      customer(s, d).select(col("c_mktsegment"), col("c_nationkey")).distinct()),
-
-    // SO2 — unpivot/melt (`HTGPIINFLATUS/__init__.py:91`).
-    "q08_unpivot" -> ((s, d) =>
-      Transforms.melt(
-        part(s, d).select(col("p_partkey"), col("p_size").cast("double").as("p_size"),
-          col("p_retailprice")),
-        Seq("p_partkey"), Seq("p_size", "p_retailprice"), "attr", "val")),
-
-    // SO3 — pivot (`HTGPIPROPHEDEX/__init__.py:392,854`).
-    "q09_pivot" -> ((s, d) =>
-      Transforms.pivotAgg(
-        lineitem(s, d)
-          .select(year(col("l_shipdate")).cast("long").as("ship_year"),
-            col("l_returnflag"), col("l_quantity")),
-        Seq(col("ship_year")), "l_returnflag", Seq("A", "N", "R"),
-        Seq(sumc(col("l_quantity"))))),
-
-    // SO1 — UNION ALL append-merge (`HTGPIYAHOO/__init__.py:96`).
-    "q10_union" -> ((s, d) => {
-      val o = orders(s, d)
-      val f = o.filter(col("o_orderstatus") === "F")
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-        .withColumn("src", lit("F_SET"))
-      val p = o.filter(col("o_orderstatus") === "O")
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-        .withColumn("src", lit("O_SET"))
-      f.unionByName(p)
-    }),
-
-    // F1-F5 — string transform family (`HTGPIENSO/__init__.py:81-84`,
-    // `PGSITE/__init__.py:129-140`).
-    "q11_string_clean" -> ((s, d) =>
-      part(s, d).select(col("p_partkey"),
-        upper(trim(col("p_name"))).as("name_uc"),
-        substring(col("p_name"), 1, 5).as("name5"),
-        concat_ws("-", col("p_brand"), col("p_type")).as("brand_type"),
-        regexp_replace(col("p_name"), "[aeiou]", "").as("name_novowel"),
-        translate(col("p_name"), "abc", "xyz").as("name_tr"),
-        length(col("p_name")).cast("long").as("name_len"))),
-
-    // F8/F9/F10 — date functions (`HTGPICFT/__init__.py:50-54`,
-    // `HTGPIINFLATUS/__init__.py:112`).
-    "q12_date_funcs" -> ((s, d) =>
-      orders(s, d).select(col("o_orderkey"),
-        year(col("o_orderdate")).cast("long").as("o_year"),
-        month(col("o_orderdate")).cast("long").as("o_month"),
-        dayofmonth(col("o_orderdate")).cast("long").as("o_day"),
-        weekofyear(col("o_orderdate")).cast("long").as("o_week"),
-        date_format(col("o_orderdate"), "yyyy-MM").as("ym"),
-        date_add(col("o_orderdate"), 1).as("next_day"),
-        add_months(col("o_orderdate"), 6).as("plus_6m"),
-        last_day(col("o_orderdate")).as("eom"))),
-
-    // F7 — CASE WHEN bucketing + aggregation
-    // (`HTGPIPROPHEDEX/__init__.py:78-87`).
-    "q13_case_when" -> ((s, d) =>
-      customer(s, d)
-        .withColumn("balance_band",
-          when(col("c_acctbal") < 0, "NEGATIVE")
-            .when(col("c_acctbal") < 1000, "LOW")
-            .when(col("c_acctbal") < 5000, "MID")
-            .otherwise("HIGH"))
-        .groupBy(col("balance_band"))
-        .agg(count(lit(1)).as("n"), min(col("c_acctbal")).as("min_bal"),
-          max(col("c_acctbal")).as("max_bal"))),
-
-    // F14 — null repair: nullif/coalesce fills
-    // (`HTGPIYAHOO/__init__.py:52-53`, `HTGPIWASDE/__init__.py:1204-1207`).
-    "q14_null_repair" -> ((s, d) =>
-      events(s, d).select(col("event_id"),
-        coalesce(nullif(col("event_type"), lit("error")), lit("UNKNOWN")).as("etype"),
-        coalesce(when(col("value") > 150, lit(null)).otherwise(col("value")), lit(0.0))
-          .as("value_capped"))),
-
-    // A5 — row-wise horizontal arithmetic (`HTGPIPROPHEDEX/__init__.py:426-428`).
-    "q15_horizontal_sum" -> ((s, d) =>
-      lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
-        (col("l_quantity") + col("l_extendedprice") + col("l_tax") + col("l_discount"))
-          .as("row_total"),
-        (col("l_extendedprice") - col("l_quantity")).as("price_minus_qty"))),
-
-    // F13 — guarded derived measure (Stocks-to-Use,
-    // `HTGPIWASDE/__init__.py:714-718`).
-    "q16_derived_measure" -> ((s, d) => {
-      val g = lineitem(s, d).groupBy(col("l_orderkey")).agg(
-        (coalesce(
-          sum(when(col("l_returnflag") === "R",
-            cents(col("l_extendedprice")).cast(DecimalType(18, 0)))),
-          lit(0).cast(DecimalType(28, 0))) / lit(100))
-          .cast("double").as("returned"),
-        sumc(col("l_extendedprice")).as("total"))
-      g.select(col("l_orderkey"), col("returned"), col("total"),
-        Transforms.guardedRatio(col("returned"), col("total"), lit(100)).as("return_pct"))
-    }),
-
-    // F17 — haversine distance (geopy geodesic `PGSITE/__init__.py:289`;
-    // composed-builtin formula mirrored by the oracle).
-    "q17_haversine" -> ((s, d) =>
-      custPoints(s, d).select(col("c_custkey"), col("lat"), col("lon"),
-        round(GeoFunctions.haversineMeters(col("lat"), col("lon"),
-          lit(19.4326), lit(-99.1332)), 1).as("dist_m"))),
-
-    // J3/W1/W2 — distance theta-join + per-point top-3 nearest
-    // (`HTIPNEXSITE/__init__.py:92-131`), via the exact two-phase kNN join:
-    // banded radius pass + brute-force fallback for isolated points — same
-    // rows as the cross join (the oracle IS the cross join), ~O(|L|·|R|)
-    // work removed.
-    "q18_geo_topk" -> ((s, d) =>
-      graft.operators.GeoJoin.knnJoin(
-        custPoints(s, d), suppPoints(s, d), 3, 2000000.0,
-        "c_custkey", "s_suppkey", "lat", "lon", "s_lat", "s_lon")
-        .select(col("c_custkey"), col("knn_rank").as("pos_rank"),
-          col("s_suppkey"), round(col("dist_m"), 1).as("dist_m"))),
-
-    // A3/A4 — per-category feature aggregation pivoted wide
-    // (`PGSITE/__init__.py:302-357`).
-    "q19_feature_pivot" -> ((s, d) => {
-      val piv = Transforms.pivotAgg(events(s, d), Seq(col("user_id")), "event_type",
-        Seq("click", "error", "purchase", "signup", "view"),
-        Seq(count(lit(1)).as("n"), count(when(col("value") > 100, 1)).as("hi")))
-      piv.na.fill(0L)
-    }),
-
-    // W4 — last-non-null carry-forward (`HTGPIWASDE/__init__.py:807-808`).
-    "q20_carry_forward" -> ((s, d) => {
-      val e = events(s, d).withColumn("v",
-        when(col("value") < 40, lit(null)).otherwise(col("value")))
-      Transforms.carryForward(e, "v", Seq(col("user_id")),
-          Seq(col("ts"), col("event_id")), "filled")
-        .select(col("event_id"), col("user_id"), col("ts"), col("v"), col("filled"))
-    }),
-
-    // Streaming-shaped tumbling-window aggregation (SURVEY §2.8: the batch
-    // form of `groupBy(window($"ts", "1 hour"))` — same code runs under
-    // Trigger.AvailableNow).
-    "q21_window_agg" -> ((s, d) =>
-      events(s, d)
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"), sumc(col("value")).as("total"))
-        .select(col("window.start").as("hour_start"), col("event_type"),
-          col("n"), col("total"))),
-
-    // F6 — ordered regex-rule categorizer, last-writer-wins
-    // (`PGSITE/__init__.py:144-281`).
-    "q22_categorize" -> ((s, d) =>
-      part(s, d).select(col("p_partkey"), col("p_name"),
-        Transforms.categorize(partRules, rulesDefault)(col("p_name")).as("category"))),
-
-    // North star: exact dedup by normalized-text digest.
-    "q23_dedup_exact" -> ((s, d) =>
-      Dedup.exact(documents(s, d), "doc_id", "text")),
-
-    // North star: token counting.
-    "q24_token_stats" -> ((s, d) => {
-      val t = TextFunctions.tokens(col("text"))
-      documents(s, d).select(col("doc_id"),
-        TextFunctions.tokenCount(col("text")).as("n_tokens"),
-        length(col("text")).cast("long").as("len_chars"),
-        (length(regexp_replace(col("text"), "\\s+", "")).cast("double") /
-          size(t).cast("double")).as("avg_token_len"))
-    }),
-
-    // North star: quality scoring (length/punct/stopword ratios).
-    "q25_quality_score" -> ((s, d) => {
-      val toks = TextFunctions.tokens(lower(col("text")))
-      documents(s, d).select(col("doc_id"),
-        length(col("text")).cast("long").as("len"),
-        TextFunctions.punctCount(col("text")).as("n_punct"),
-        TextFunctions.stopwordCount(toks, TextFunctions.EnglishStopwords).as("n_stop"),
-        size(toks).cast("long").as("n_tokens"))
-        .withColumn("stop_ratio",
-          col("n_stop").cast("double") / col("n_tokens").cast("double"))
-        .withColumn("punct_ratio",
-          col("n_punct").cast("double") / col("len").cast("double"))
-    }),
-
-    // North star: n-gram-heuristic language ID.
-    "q26_langid" -> ((s, d) => {
-      val lo = lower(col("text"))
-      documents(s, d).select(col("doc_id"),
-        TextFunctions.matchCount(lo, "\\b(the|and|of|to|is)\\b").as("s_en"),
-        TextFunctions.matchCount(lo, "\\b(el|la|de|que|los|por)\\b").as("s_es"),
-        TextFunctions.matchCount(lo, "\\b(der|die|und|das|ist|nicht)\\b").as("s_de"),
-        TextFunctions.matchCount(lo, "\\b(le|les|et|des|est|une)\\b").as("s_fr"),
-        TextFunctions.matchCount(col("text"), "[一-鿿]").as("s_zh"))
-        .withColumn("pred_lang",
-          when(col("s_zh") > 0, "zh")
-            .when(col("s_en") >= col("s_es") && col("s_en") >= col("s_de") &&
-              col("s_en") >= col("s_fr"), "en")
-            .when(col("s_es") >= col("s_de") && col("s_es") >= col("s_fr"), "es")
-            .when(col("s_de") >= col("s_fr"), "de")
-            .otherwise("fr"))
-    }),
-
-    // North star: document fingerprinting (digest of normalized text).
-    "q27_fingerprint" -> ((s, d) =>
-      documents(s, d).select(col("doc_id"),
-        TextFunctions.fingerprint(col("text")).as("fp"))),
-
-    // North star: n-gram Jaccard near-dup scoring on a sampled,
-    // language-blocked candidate set (distributed shingle join — no
-    // cross-join; see Dedup.ngramJaccardPairs).
-    "q28_ngram_jaccard" -> ((s, d) =>
-      Dedup.ngramJaccardPairs(
-        documents(s, d).filter(col("doc_id") % 20 === 0),
-        "doc_id", "text", "lang", 3)),
-
-    // North star: MinHash+LSH candidate pairs. Portable md5 lanes
-    // (lexicographic string MIN — identical semantics in DuckDB) so the
-    // whole LSH pipeline is oracle-checked; Dedup.XxLane (xxhash64) is the
-    // faster production default, same plan shape (DedupSimilaritySpec).
-    "q29_minhash_lsh" -> ((s, d) =>
-      Dedup.minhashCandidatesPortable(documents(s, d), "doc_id", "text")),
-
-    // North star: SimHash signatures, portable md5 form — per-token md5
-    // bits vote per position, emitted as 4×16-bit chunks (the banding
-    // layout simhashNearDups joins on). Fully mirrored in DuckDB; the
-    // native xxhash64 SimHash64 expression stays the production default
-    // (TextHashSpec).
-    "q30_simhash" -> ((s, d) => {
-      // SimHash is a scalar function of the document — ONE native compiled
-      // pass per row (tokenize, md5 bits, vote, pack 4×16-bit chunks), no
-      // explode, no shuffle. Bit j set iff 2·Σbit_j ≥ n_tokens; the DuckDB
-      // oracle replays the identical integer lattice from md5 hex nibbles.
-      // Empty/whitespace-only docs are excluded on both sides — the two
-      // engines' tokenizers disagree only there ('' vs zero tokens).
-      val chunks = org.apache.spark.sql.GraftBridge.column(
-        graft.functions.Md5SimHashChunks(
-          org.apache.spark.sql.GraftBridge.expression(col("text"))))
-      documents(s, d).filter(length(trim(col("text"))) > 0)
-        .select(col("doc_id"), chunks.as("cs"))
-        .select(col("doc_id") +:
-          (0 until 4).map(c => element_at(col("cs"), c + 1).as(s"chunk$c")): _*)
-    }),
-
-    // North star: brute-force cosine top-10 against a query vector.
-    // Global top-k goes through orderBy+limit — Spark plans that as
-    // TakeOrderedAndProject (per-partition heap top-k, merged at the driver),
-    // NOT a single-partition window; the rank window then runs over the 10
-    // survivors only.
-    "q31_ann_cosine" -> ((s, d) => {
-      val e = embeddings(s, d)
-      val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
-      val scored = e.crossJoin(broadcast(q))
-        .select(col("vec_id"), Similarity.cosine(col("embedding"), col("qe")).as("sim"))
-      Transforms.globalTopK(scored, Seq(col("sim").desc, col("vec_id").asc), 10)
-        .select(col("vec_id"), round(col("sim"), 6).as("sim_r"), col("rnk"))
-    }),
-
-    // North star: LSH-bucketed near-neighbor pairs — the scale path for
-    // all-pairs similarity. Lattice hyperplanes (integer coefficients) so
-    // the DuckDB oracle reproduces bucketing AND scores exactly; the
-    // hash-derived hyperplane variant stays available for production.
-    "q32_ann_lsh" -> ((s, d) =>
-      Similarity.lshNearPairs(embeddings(s, d), "vec_id", "embedding",
-        bits = 4, minSim = 0.1,
-        signature = Similarity.hyperplaneSignatureLattice)
-        .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim_r"))),
-
-    // S2 — fixed-width layout parse (round-trip built from orders so the
-    // oracle can mirror it; file-based reader covered by FixedWidthReader
-    // + its spec).
-    "q33_fixed_width" -> ((s, d) => {
-      val fw = orders(s, d).select(concat(
-        rpad(col("o_orderstatus"), 4, " "),
-        lpad(col("o_orderkey").cast("string"), 12, "0"),
-        rpad(col("o_orderpriority"), 16, " ")).as("line"))
-      fw.select(Transforms.parseFixedWidth(col("line"),
-          Seq(("status", 4), ("okey", 12), ("priority", 16))): _*)
-        .select(col("status"), col("okey").cast("long").as("okey"), col("priority"))
-    }),
-
-    // North star: multimodal binary-column plumbing with stubbed decode.
-    // The decode itself runs per-partition over the binary payload (see
-    // Multimodal scaladoc); the output flattens the feature vector to scalar
-    // columns so the driver's oracle compare (which sorts rows by every
-    // column) can hash it — the length-derived stub is mirrored in DuckDB.
-    "q34_multimodal" -> ((s, d) => {
-      val dec = Multimodal.decodeFeatures(
-        Multimodal.withBinaryPayload(documents(s, d), "doc_id", "text"))
-      dec.select(Seq(col("doc_id"), col("n_bytes"),
-        col("width").cast("long").as("width"),
-        col("height").cast("long").as("height")) ++
-        (1 to 8).map(i => element_at(col("feature"), i).as(s"f$i")): _*)
-    }),
-
-    // S2/J2/F2/F10 end-to-end — ENSO pipeline over synthesized fixed-width
-    // lines (`HTGPIENSO/__init__.py:74-88`): build the `.for` layout from
-    // orders, parse it back through the layout, derive date parts via the
-    // month map. String-only output → engine-exact.
-    "q36_enso_pipeline" -> ((s, d) => {
-      val o = orders(s, d)
-      val sst = concat(((col("o_orderkey") % 30) + 10).cast("string"),
-        lit("."), (col("o_orderkey") % 10).cast("string"))
-      val ssta = concat((col("o_custkey") % 10).cast("string"),
-        lit("."), (col("o_orderkey") % 7).cast("string"))
-      // tail: constant SST/SSTA/DEL cells for the remaining three regions
-      val tail = "  1.1 0.1   x  2.2 0.2   x  3.3 0.3   x"
-      val lines = o.select(concat(
-        rpad(upper(date_format(col("o_orderdate"), "ddMMMyyyy")), 10, " "),
-        rpad(sst, 5, " "), rpad(ssta, 4, " "), lit("   x"), lit(tail)).as("value"))
-      val parsed = lines.select(
-        graft.operators.Transforms.parseFixedWidth(col("value"),
-          graft.pipelines.EnsoPipeline.layout): _*)
-      graft.pipelines.EnsoPipeline.transform(parsed)
-        .select(col("WEEK"), col("SST_NINO12"), col("SSTA_NINO12"),
-          col("SST_NINO3"), col("DAY"), col("MONTH"), col("YEAR"), col("DATE"))
-    }),
-
-    // The WASDE supply/use parser (SURVEY §7.4 risk 1) over a literal sheet
-    // fixture — header/group detection, EST/PROJ split, geography
-    // carry-forward, footnote strip, NA repair, Total Use / Stocks-to-Use —
-    // fully mirrored in the DuckDB oracle.
-    "q37_wasde_parse" -> ((s, d) => {
-      val rows = s.createDataFrame(wasdeFixture)
-        .toDF("sheet", "rowIdx", "geo", "beginning", "production", "imports",
-          "dom_feed", "dom_total", "exports", "ending")
-      graft.pipelines.WasdeTransforms.parseSupplyUse(rows)
-        .select(col("sheet"), col("grupo"), col("tipo"), col("harvest"),
-          col("geography"), col("orden").cast("long").as("orden"),
-          col("beginning"), col("production"), col("imports"), col("dom_feed"),
-          col("dom_total"), col("exports"), col("ending"),
-          col("total_use"), col("stocks_to_use"))
-    }),
-
-    // S5/S6 end-to-end — BINARY XLSX decode (sources/XlsxReader: zip+XML,
-    // shared strings, merged cells, ragged rows) feeding the same WASDE
-    // parse as q37. The fixture workbook's p18/p19 sheets hold exactly the
-    // q37 VALUES content (numbers as numeric cells, NA as a shared string,
-    // blanks absent), so q37's oracle re-proves the byte-level decode.
-    // Decode runs in an executor task (the per-file shape of
-    // XlsxReader.scan), not on the driver.
-    "q73_xlsx_wasde" -> ((s, d) => {
-      import s.implicits._
-      val bytes = wasdeXlsxBytes
-      val rows = s.createDataset(Seq(bytes))(
-        org.apache.spark.sql.Encoders.BINARY).flatMap { b =>
-        graft.sources.XlsxReader.readSheet(b, "p18") ++
-          graft.sources.XlsxReader.readSheet(b, "p19")
-      }
-      wasdeFromDecodedRows(rows.toDF())
-    }),
-
-    // S5 end-to-end — the CFTC archive shape (HTGPICFT/__init__.py:92-100):
-    // a zip whose first ".xls"-named member is the workbook, with a decoy
-    // member ahead of it. Member selection AND byte-level decode both run
-    // inside the executor task; same supply/use content, so q37's oracle
-    // proves the whole zip→member→decode→parse chain.
-    "q74_zip_xlsx_wasde" -> ((s, d) => {
-      import s.implicits._
-      val zipBytes = {
-        val bout = new java.io.ByteArrayOutputStream()
-        val zout = new java.util.zip.ZipOutputStream(bout)
-        zout.putNextEntry(new java.util.zip.ZipEntry("readme.txt"))
-        zout.write("decoy".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        zout.closeEntry()
-        zout.putNextEntry(new java.util.zip.ZipEntry("wasde_report.xlsx"))
-        zout.write(wasdeXlsxBytes)
-        zout.closeEntry()
-        zout.close()
-        bout.toByteArray
-      }
-      val rows = s.createDataset(Seq(zipBytes))(
-        org.apache.spark.sql.Encoders.BINARY).flatMap { z =>
-        val b = graft.sources.XlsxReader.selectZipMember(z, ".xls")
-        graft.sources.XlsxReader.readSheet(b, "p18") ++
-          graft.sources.XlsxReader.readSheet(b, "p19")
-      }
-      wasdeFromDecodedRows(rows.toDF())
-    }),
-
-    // S5/S6 legacy-format parity — BINARY `.xls` (BIFF8 in a CFB
-    // container) decode: the reference reads REAL xls workbooks via xlrd
-    // (HTGPIWASDE/__init__.py:8, HTGPICFT/__init__.py:100), which the
-    // zip+XML XlsxReader cannot open. The committed BIFF8 fixture holds
-    // exactly the q37 VALUES content (RK/MULRK runs for integer cells,
-    // SST strings, merges, CFB ministream), so q37's oracle proves the
-    // byte-level decode end-to-end. Decode runs in an executor task.
-    "q142_xls_wasde" -> ((s, d) => {
-      import s.implicits._
-      val bytes = wasdeXlsBytes
-      val rows = s.createDataset(Seq(bytes))(
-        org.apache.spark.sql.Encoders.BINARY).flatMap { b =>
-        graft.sources.XlsReader.readSheet(b, "p18") ++
-          graft.sources.XlsReader.readSheet(b, "p19")
-      }
-      wasdeFromDecodedRows(rows.toDF())
-    }),
-
-    // SO4 — the p11 block transpose (HTGPIWASDE/__init__.py:358,369):
-    // attributes-as-rows × years-as-columns flips to one row per year.
-    // Literal fixture; the oracle performs the same flip in SQL
-    // (UNION-ALL unpivot + conditional-aggregate pivot).
-    "q75_transpose" -> ((s, d) => {
-      import s.implicits._
-      val block = Seq(
-        ("planted", "10.1", "10.5", "10.9"),
-        ("harvested", "9.7", "10.0", "10.2"),
-        ("yld", "49.8", "50.1", "52.0"),
-        ("production", "483.1", "501.0", "530.4"))
-        .toDF("attr", "y2425", "y2526", "y2627")
-      graft.pipelines.WasdeTransforms.transposeBlock(block, "attr",
-        Seq("y2425", "y2526", "y2627"))
-    }),
-
-    // §2.9d — model-inference determinism (PGSITE/__init__.py:361-370):
-    // a fixed-seed RandomForest trained on a cleanly-separable literal
-    // fixture scores probe points far inside each cluster; every tree
-    // votes the cluster label, so the predictions are stable and the
-    // oracle can hold them as literals. Scoring itself is model.transform
-    // — broadcast model, map-side, distributed.
-    "q76_model_scoring" -> ((s, d) => {
-      import s.implicits._
-      val train = (0 until 20).flatMap { i =>
-        Seq((Array(i * 0.1, i * 0.05), 0),
-          (Array(10.0 + i * 0.1, 5.0 + i * 0.05), 1))
-      }.toDF("embedding", "label")
-      val model = graft.serving.ModelScoring.trainOnArrays(
-        train, "embedding", "label", numTrees = 20, seed = 42L)
-      val probe = Seq(
-        (1L, Array(0.2, 0.1)), (2L, Array(0.9, 0.4)),
-        (3L, Array(1.5, 0.8)), (4L, Array(10.2, 5.1)),
-        (5L, Array(11.0, 5.5)), (6L, Array(9.9, 5.0)),
-        (7L, Array(0.0, 0.0)), (8L, Array(11.9, 5.95)))
-        .toDF("point_id", "embedding")
-      graft.serving.ModelScoring.score(model, probe, "embedding")
-        .select(col("point_id"), col("prediction").cast("long").as("pred"))
-    }),
-
-    // P7 — empty-result guard (HTGPIOILWTI/__init__.py:90-91): a watermark
-    // past all data must return None (sink skipped), not an empty write.
-    // Both outcomes are encoded in the result so the oracle checks the
-    // guard itself: the stale branch contributes its marker row ONLY via
-    // the None arm.
-    "q77_empty_guard" -> ((s, d) => {
-      import s.implicits._
-      val pairs = (1 to 10)
-        .map(i => (f"2026-01-$i%02d", 70.0 + i)).toDF("Date", "Close")
-      val cases = Seq(
-        "fresh" -> java.sql.Date.valueOf("2026-01-05"),
-        "stale" -> java.sql.Date.valueOf("2026-01-10"))
-      cases.map { case (label, wm) =>
-        graft.pipelines.MarketPipelines.oilWti(pairs, wm) match {
-          case Some(out) =>
-            out.select(lit(label).as("which"), col("Date"), col("Close"),
-              lit(true).as("sink_ran"))
-          case None =>
-            Seq(label).toDF("which").select(col("which"),
-              lit(null).cast("date").as("Date"),
-              lit(null).cast("double").as("Close"),
-              lit(false).as("sink_ran"))
-        }
-      }.reduce(_ unionByName _)
-    }),
-
-    // F19 — contract symbol calendar (HTGPIPROPHEDEX/__init__.py:90-194):
-    // per-day expiration symbols with the 20th-of-month rollover, compressed
-    // into (from, to, symbols) ranges. Pure domain functions; the oracle
-    // holds the independently-derived ranges as literals.
-    "q78_symbol_calendar" -> ((s, d) => {
-      import s.implicits._
-      val start = java.time.LocalDate.of(2026, 2, 25)
-      val end = java.time.LocalDate.of(2026, 3, 25)
-      Seq("C" -> 2, "S" -> 3).flatMap { case (commodity, n) =>
-        graft.pipelines.ProphedexCalendar.symbolRanges(start, end, commodity, n)
-          .map { case (from, to, syms) =>
-            (commodity, java.sql.Date.valueOf(from), java.sql.Date.valueOf(to),
-              syms.mkString(","))
-          }
-      }.toDF("commodity", "from_date", "to_date", "symbols")
-    }),
-
-    // S4 — HTML link discovery (HTGPIWASDE/__init__.py:54-68): all hrefs
-    // matching the report pattern, in document order.
-    "q79_html_links" -> ((s, d) => {
-      import s.implicits._
-      val html =
-        """<html><body>
-          |<a href="/files/wasde0526.xls">May</a>
-          |<a class="c" href='/files/wasde0626.xlsx'>Jun</a>
-          |<a href="/about.html">About</a>
-          |<A HREF="/files/oce-wasde-2026-07.xls">Jul</A>
-          |</body></html>""".stripMargin
-      graft.sources.HtmlTableReader.discoverLinks(html, "\\.xlsx?$")
-        .zipWithIndex.map { case (h, i) => (i.toLong, h) }
-        .toDF("ord", "href")
-    }),
-
-    // S8 — staged paginated/bounded ingest (HTGPIPROPHEDEX/__init__.py:
-    // 174-212): watermarks → fetch plan (entity at/past today skipped),
-    // offline fetcher lands over-delivering CSVs, relational watermark
-    // re-filter on read. The oracle mirrors plan + filter in SQL.
-    "q80_staged_ingest" -> ((s, d) => {
-      import s.implicits._
-      val today = java.time.LocalDate.of(2026, 1, 6)
-      val wm = Seq(("A", "2026-01-03"), ("B", "2026-01-05"), ("C", "2026-01-10"))
-        .toDF("entity", "max_date")
-      // per-process scratch dirs, removed at JVM exit (tmpScratch): two
-      // concurrent runs must not race on a shared fixture file
-      val srcDir = tmpScratch(s"q80_src_$scratchNonce")
-      val stageDir = tmpScratch(s"q80_stage_$scratchNonce")
-      val fetcher = new graft.sources.StagedIngest.LocalFileFetcher(spec => {
-        // upstream over-delivers: the whole window regardless of `from`
-        val p = srcDir.resolve(s"${spec.entity}.csv")
-        val rows = (1 to 6).map(i =>
-          s"${spec.entity},2026-01-0$i,${i * 10.0}").mkString("\n")
-        java.nio.file.Files.writeString(p, s"entity,d,v\n$rows")
-        p
-      })
-      val specs = graft.sources.StagedIngest.planFetches(wm, today)
-      graft.sources.StagedIngest.ingest(s, fetcher, specs, stageDir.toString,
-        "entity STRING, d DATE, v DOUBLE", wm, "entity", "d")
-        .select(col("entity"), col("d"), col("v"))
-    }),
-
-    // The reference's main COMMODITIES_PRICE_HISTORY flow as ONE composed
-    // chain (HTGPIPROPHEDEX/__init__.py:542-627): expiration calendar →
-    // active symbols → per-symbol watermarks → bounded staged fetch →
-    // relational watermark re-filter → append-ready table. Each stage is
-    // proven alone (q78, q80, q02/q03); this proves the composition.
-    "q92_price_history_pipeline" -> ((s, d) => {
-      import s.implicits._
-      val start = java.time.LocalDate.of(2026, 2, 25)
-      val today = java.time.LocalDate.of(2026, 3, 25)
-      // calendar drives WHICH symbols exist over the window
-      val symbols = graft.pipelines.ProphedexCalendar
-        .symbolRanges(start, today, "C", 2)
-        .flatMap(_._3).distinct.sorted
-      // per-symbol watermarks: the front month loaded recently, the rest
-      // never (epoch sentinel — the bootstrap contract)
-      val wm = symbols.map { sym =>
-        (sym, if (sym == "CH26") "2026-03-20" else "1970-01-01")
-      }.toDF("entity", "max_date")
-      val srcDir = tmpScratch(s"q92_src_$scratchNonce")
-      val stageDir = tmpScratch(s"q92_stage_$scratchNonce")
-      // upstream synthesizes quotes for 2026-03-18..24, close = a
-      // deterministic function of (symbol, day) mirrored in the oracle
-      val fetcher = new graft.sources.StagedIngest.LocalFileFetcher(spec => {
-        val p = srcDir.resolve(s"${spec.entity}.csv")
-        val rows = (18 to 24).map(i =>
-          s"${spec.entity},2026-03-$i,${i * 10.0 + spec.entity.length}")
-          .mkString("\n")
-        java.nio.file.Files.writeString(p, s"entity,d,close\n$rows")
-        p
-      })
-      val specs = graft.sources.StagedIngest.planFetches(wm, today)
-      graft.sources.StagedIngest.ingest(s, fetcher, specs, stageDir.toString,
-        "entity STRING, d DATE, close DOUBLE", wm, "entity", "d")
-        .select(col("entity").as("symbol"), col("d"), col("close"))
-    }),
-
-    // S12+S6 — binary sink/source roundtrip: XlsxWriter encodes literal
-    // typed sheets to workbook BYTES, XlsxReader decodes them back; the
-    // oracle holds the rendered cell strings.
-    "q81_xlsx_roundtrip" -> ((s, d) => {
-      import s.implicits._
-      val sheets = Seq(graft.sources.XlsxSheet("data", Seq(
-        Seq(graft.sources.XlsxCell.Str("k"), graft.sources.XlsxCell.Str("x & <y>")),
-        Seq(graft.sources.XlsxCell.Num(1.5), graft.sources.XlsxCell.Blank,
-          graft.sources.XlsxCell.Num(42)),
-        Seq(graft.sources.XlsxCell.Bool(true),
-          graft.sources.XlsxCell.Date(java.time.LocalDate.of(2026, 2, 28)),
-          graft.sources.XlsxCell.DateTime(
-            java.time.LocalDateTime.of(2026, 2, 28, 23, 59, 59))))))
-      val bytes = graft.sources.XlsxWriter.write(sheets)
-      val rows = s.createDataset(Seq(bytes))(
-        org.apache.spark.sql.Encoders.BINARY).flatMap { b =>
-        graft.sources.XlsxReader.readSheet(b, "data")
-      }
-      rows.toDF().select(col("rowIdx"),
-        coalesce(try_element_at(col("cells"), lit(1)), lit("")).as("c0"),
-        coalesce(try_element_at(col("cells"), lit(2)), lit("")).as("c1"),
-        coalesce(try_element_at(col("cells"), lit(3)), lit("")).as("c2"))
-    }),
-
-    // S13 — idempotent month re-load (HTGPIWASDE/__init__.py:124-134):
-    // dynamic partition overwrite re-delivers one month without touching
-    // the others — DELETE+INSERT semantics, proven by writing twice.
-    "q82_idempotent_reload" -> ((s, d) => {
-      import s.implicits._
-      // per-process scratch dir, removed at JVM exit (tmpScratch): the
-      // dynamic month-overwrite semantics stay within one run
-      val dir = tmpScratch(s"q82_reload_$scratchNonce").toString
-      val batch1 = Seq(("2026-01", "a", 1.0), ("2026-01", "b", 2.0),
-        ("2026-02", "c", 3.0)).toDF("month", "k", "v")
-      val batch2 = Seq(("2026-02", "c", 30.0), ("2026-02", "d", 4.0))
-        .toDF("month", "k", "v")
-      graft.pipelines.WasdeTransforms.writeMonthOverwrite(batch1, dir, "month")
-      graft.pipelines.WasdeTransforms.writeMonthOverwrite(batch2, dir, "month")
-      s.read.parquet(dir)
-        .select(col("month").cast("string").as("month"), col("k"), col("v"))
-    }),
-
-    // ANN IVF with nProbe = nLists: probing every cell makes the result
-    // EXACT regardless of how KMeans partitioned the space, so the
-    // brute-force SQL oracle applies — proving the index/probe plumbing
-    // (cell assignment, center ranking, per-cell scoring, global top-k).
-    // Recall-vs-nProbe at nProbe < nLists stays covered by
-    // DedupSimilaritySpec; partition pruning by cell is the 100 TB path.
-    "q83_ann_ivf" -> ((s, d) => {
-      val e = embeddings(s, d)
-      val qvec = e.filter(col("vec_id") === 0)
-        .select(Similarity.toDoubleArray(col("embedding")))
-        .head().getSeq[Double](0)
-      val (model, indexed) = Similarity.ivfIndex(
-        e, "vec_id", "embedding", nLists = 8, maxIter = 5, fitSample = 0.25)
-      Similarity.ivfTopK(model, indexed, "vec_id", "embedding",
-        qvec, k = 10, nProbe = 8)
-        .select(col("vec_id"), round(col("sim"), 6).as("sim_r"))
-    }),
-
-    // The p22-family WASDE world page (HTGPIWASDE/__init__.py:621-833):
-    // per-block header rows define the measure-column POSITIONS (shifted
-    // one right in this fixture vs p18 — proving dynamic detection), and
-    // sheet cells carry report/commodity/unit metadata. The oracle mirrors
-    // the full pipeline (footnote strip, group carry, NA/'' repair,
-    // n-alternation, derived measures) over the same data rows.
-    "q84_wasde_world" -> ((s, d) => {
-      import s.implicits._
-      val hdr = Seq("", "%s", "Beginning\nStocks", "Production", "Imports",
-        "Domestic\nFeed", "Domestic\nTotal", "Exports", "Ending\nStocks")
-      def header(year: String) = hdr.map(c => if (c == "%s") year else c)
-      val rows: Seq[(String, Long, Seq[String])] = Seq(
-        ("p22", 0L, Seq("WASDE-672")),
-        ("p22", 1L, Seq("World Corn Supply and Use 1/")),
-        ("p22", 2L, Seq("", "Million Metric Tons")),
-        ("p22", 3L, header("2025/26 (Est.) 2/")),
-        ("p22", 4L, Seq("", "World 3/", "10", "20", "5", "8", "15", "7", "13")),
-        ("p22", 5L, Seq("", "Major Exporters", "1", "2", "NA", "4", "5", "6", "7")),
-        ("p22", 6L, Seq("", "Argentina", "2", "4", "0", "1", "2", "2", "8")),
-        ("p22", 7L, Seq("", "Selected Other", "0", "0", "0", "0", "0", "0", "0")),
-        ("p22", 8L, Seq("", "")),
-        ("p22", 9L, header("2025/26 (Proj.)")),
-        ("p22", 10L, Seq("", "World", "11", "21", "6", "9", "16", "8", "14")),
-        ("p22", 11L, Seq("", "Major Importers", "0", "1", "9", "3", "10", "", "2")),
-        ("p22", 12L, Seq("", "Mexico 4/", "1", "0", "18", "2", "20", "0", "1")),
-        ("p22", 13L, Seq("", "1/ Aggregate of local marketing years.")))
-      graft.pipelines.WasdeTransforms.parseWorldSupplyUse(
-        rows.toDF("sheet", "rowIdx", "cells"))
-    }),
-
-    // The p23-family by-report-date page (HTGPIWASDE/__init__.py:724-833):
-    // report-date column left of Beginning Stocks, several rows per
-    // geography (blank continuation carried), orden=1 at each new
-    // geography run. Oracle re-applies carry/skip/orden/repair in SQL.
-    "q85_wasde_report_dates" -> ((s, d) => {
-      import s.implicits._
-      val rows: Seq[(String, Long, Seq[String])] = Seq(
-        ("p23", 0L, Seq("WASDE-672", "World Soybean Supply and Use")),
-        ("p23", 1L, Seq("Million Metric Tons")),
-        ("p23", 2L, Seq("2025/26 (Proj.)", "", "Beginning\nStocks",
-          "Production", "Imports", "Domestic\nFeed", "Domestic\nTotal",
-          "Exports", "Ending\nStocks")),
-        ("p23", 3L, Seq("World", "Apr", "1", "2", "3", "4", "5", "6", "7")),
-        ("p23", 4L, Seq("", "May", "2", "3", "NA", "5", "6", "7", "8")),
-        ("p23", 5L, Seq("Major Exporters", "Apr", "0", "1", "2", "3", "4", "5", "6")),
-        ("p23", 6L, Seq("Brazil", "Apr", "9", "8", "7", "6", "5", "4", "3")),
-        ("p23", 7L, Seq("", "May", "9", "9", "9", "", "9", "9", "9")),
-        ("p23", 8L, Seq("Selected Other", "Apr", "0", "0", "0", "0", "0", "0", "0")),
-        ("p23", 9L, Seq("", "", "", "", "", "", "", "", "")),
-        ("p23", 10L, Seq("1/ Aggregate of local marketing years.", "")))
-      graft.pipelines.WasdeTransforms.parseWorldByReportDate(
-        rows.toDF("sheet", "rowIdx", "cells"))
-    }),
-
-    // J3 at scale — banded radius join (SURVEY §4 custom piece 3): same
-    // result set as crossJoin+filter, shuffle-hash-join plan on a band key.
-    "q38_geo_radius_join" -> ((s, d) =>
-      graft.operators.GeoJoin.radiusJoin(
-        custPoints(s, d), suppPoints(s, d), 1000000.0,
-        "lat", "lon", "s_lat", "s_lon")
-        .select(col("c_custkey"), col("s_suppkey"),
-          round(col("dist_m"), 1).as("dist_m"))),
-
-    // A-family extension — ROLLUP hierarchy totals (Spark/DuckDB built-in).
-    "q39_rollup" -> ((s, d) =>
-      lineitem(s, d)
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(sumc(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))),
-
-    // A-family extension — CUBE over two dimensions.
-    "q45_cube" -> ((s, d) =>
-      orders(s, d)
-        .cube(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"), sumd(col("o_totalprice")).as("total"))),
-
-    // A-family extension — exact distinct counting per group.
-    "q40_count_distinct" -> ((s, d) =>
-      lineitem(s, d).groupBy(col("l_returnflag"))
-        .agg(countDistinct(col("l_partkey")).as("n_parts"),
-          countDistinct(col("l_suppkey")).as("n_supps"),
-          count(lit(1)).as("n_rows"))),
-
-    // North star: BPE-ish regex tokenization (word / digit / punct classes —
-    // the pre-tokenizer shape LLM pipelines count against).
-    "q43_bpe_tokens" -> ((s, d) => {
-      val pat = "[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]"
-      documents(s, d).select(col("doc_id"),
-        TextFunctions.matchCount(col("text"), pat).as("n_bpe"),
-        TextFunctions.tokenCount(col("text")).as("n_ws"))
-        .withColumn("bpe_per_ws",
-          col("n_bpe").cast("double") / col("n_ws").cast("double"))
-    }),
-
-    // §2.3 extension — as-of join (latest purchase at-or-before each event,
-    // per user) via the scalable union + carry-forward plan; oracle is
-    // DuckDB's native ASOF LEFT JOIN.
-    "q44_asof_join" -> ((s, d) => {
-      val ev = events(s, d)
-      val left = ev.select(col("event_id"), col("user_id"), col("ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("ts").as("pts"),
-          col("value").as("pval"))
-      Transforms.asofJoin(left, purchases, "user_id", "ts", Seq("pts", "pval"))
-        .select(col("event_id"), col("user_id"), col("ts"), col("pts"), col("pval"))
-    }),
-
-    // §2.9 custom UDAF — typed moments Aggregator (skewness); oracle mirrors
-    // the finish formula over decimal-exact raw moments.
-    "q41_skewness_udaf" -> ((s, d) =>
-      events(s, d).groupBy(col("event_type"))
-        .agg(round(graft.functions.SkewnessAgg.column(col("value")), 6)
-          .as("skew"), count(lit(1)).as("n"))),
-
-    // S1/S11 — CSV sink + scan round-trip through real files.
-    "q42_csv_roundtrip" -> ((s, d) => {
-      // per-dataset AND per-process scratch (see scratchDir): concurrent
-      // runs must not clobber each other between write and read-back
-      val tmp = scratchDir("q42", d)
-      orders(s, d).select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-        .write.mode("overwrite").option("header", "true").csv(tmp)
-      s.read.option("header", "true")
-        .schema("o_orderkey LONG, o_orderstatus STRING, o_totalprice DOUBLE")
-        .csv(tmp)
-    }),
-
-    // Sessionization — gap-based session ids via lag + running sum
-    // (extends W-family to the events stream table).
-    "q35_sessionize" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      events(s, d)
-        .withColumn("prev", lag(col("ts"), 1).over(w))
-        .withColumn("flag",
-          when(col("prev").isNull ||
-            unix_micros(col("ts")) - unix_micros(col("prev")) > 300000000L, 1)
-            .otherwise(0))
-        .withColumn("session_id", sum(col("flag")).over(run).cast("long"))
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(count(lit(1)).as("n_events"), sumc(col("value")).as("total"))
-    }),
-
-    // J-family widening — LEFT SEMI + LEFT ANTI as one tagged output
-    // (the reference filters "entities with/without prior loads" in Python
-    // loops; these are the join forms that replace that at scale).
-    "q46_semi_anti" -> ((s, d) => {
-      val c = customer(s, d).select(col("c_custkey"), col("c_name"))
-      val o = orders(s, d).select(col("o_custkey"))
-      val has = c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
-        .withColumn("status", lit("HAS_ORDERS"))
-      val not = c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        .withColumn("status", lit("NO_ORDERS"))
-      has.unionByName(not)
-    }),
-
-    // SO-family widening — INTERSECT / EXCEPT (distinct set semantics).
-    "q47_set_ops" -> ((s, d) => {
-      val o = orders(s, d)
-      val f = o.filter(col("o_orderstatus") === "F").select(col("o_custkey"))
-      val p = o.filter(col("o_orderstatus") === "O").select(col("o_custkey"))
-      f.intersect(p).withColumn("tag", lit("BOTH"))
-        .unionByName(f.except(p).withColumn("tag", lit("F_ONLY")))
-    }),
-
-    // W-family widening — bounded moving window (3-row sum/avg) + lag delta
-    // per user. Decimal-exact sums; the average divides two exact values as
-    // doubles so both engines produce identical bits.
-    "q48_moving_avg" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val w3 = w.rowsBetween(-2, Window.currentRow)
-      events(s, d).select(col("event_id"), col("user_id"), col("ts"), col("value"))
-        .withColumn("mov_sum3", sum(dec(col("value"))).over(w3).cast("double"))
-        .withColumn("mov_n3", count(lit(1)).over(w3))
-        .withColumn("mov_avg3", col("mov_sum3") / col("mov_n3").cast("double"))
-        .withColumn("delta", col("value") - lag(col("value"), 1).over(w))
-    }),
-
-    // F-family widening — fuzzy matching: blocked levenshtein pairs on a
-    // sampled slice (edit-distance dedup, the classic fuzzy-join shape;
-    // blocking key = brand keeps the pair space linear-ish).
-    "q49_fuzzy_match" -> ((s, d) => {
-      val p = part(s, d).filter(col("p_partkey") % 50 === 0)
-        .select(col("p_partkey"), col("p_brand"), col("p_name"))
-      val a = p.as("a"); val b = p.as("b")
-      a.join(b, col("a.p_brand") === col("b.p_brand") &&
-          col("a.p_partkey") < col("b.p_partkey"))
-        .select(col("a.p_partkey").as("id_a"), col("b.p_partkey").as("id_b"),
-          levenshtein(col("a.p_name"), col("b.p_name")).cast("long").as("dist"))
-        .filter(col("dist") <= 12)
-    }),
-
-    // J-family widening — interval join without an equi-key: every event
-    // inside any purchase's 10-minute window, via the banded time join
-    // (Transforms.intervalJoin) — never a cross join.
-    "q50_interval_join" -> ((s, d) => {
-      val ev = events(s, d)
-      val purch = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_event_id"), col("ts").as("pts"),
-          (col("ts") + expr("INTERVAL 10 MINUTES")).as("pte"))
-      Transforms.intervalJoin(
-          ev.select(col("event_id"), col("ts")), "ts", purch, "pts", "pte", 600L)
-        .select(col("event_id"), col("p_event_id"),
-          (unix_micros(col("ts")) - unix_micros(col("pts"))).as("delta_us"))
-    }),
-
-    // F15 widening — JSON path extraction (props = {"k": N}) + aggregation,
-    // now oracle-checked (DuckDB json_extract_string).
-    "q51_json_extract" -> ((s, d) =>
-      events(s, d)
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .groupBy(col("event_type"))
-        .agg(count(col("k")).as("n"), sum(col("k")).as("sum_k"),
-          min(col("k")).as("min_k"), max(col("k")).as("max_k"))),
-
-    // A-family widening — exact interpolated percentiles (median / p95).
-    "q52_percentiles" -> ((s, d) =>
-      events(s, d).groupBy(col("event_type"))
-        .agg(
-          round(expr("percentile(value, 0.5D)"), 6).as("p50"),
-          round(expr("percentile(value, 0.95D)"), 6).as("p95"),
-          count(lit(1)).as("n"))),
-
-    // F16/S14 — JSON construction (the reference's HTTP response assembly,
-    // `HTIPNEXSITE` JSON result), now oracle-checked: both engines emit
-    // identical compact struct JSON.
-    "q54_json_build" -> ((s, d) =>
-      events(s, d).select(col("event_id"),
-        // emit null fields like DuckDB's to_json does (Spark's default
-        // ignoreNullFields=true would drop them and break parity on nulls)
-        to_json(struct(col("event_type"), col("user_id")),
-          Map("ignoreNullFields" -> "false")).as("j"))),
-
-    // S-family — multimodal chunk plumbing under oracle check: fixed-size
-    // chunking + stride sampling of the binary payload, aggregated to
-    // (sampled chunk count, sampled bytes) the oracle derives from length
-    // arithmetic.
-    "q55_chunk_stats" -> ((s, d) => {
-      val chunks = Multimodal.sampleChunks(
-        Multimodal.withBinaryPayload(
-          documents(s, d).filter(length(col("text")) > 0), "doc_id", "text"),
-        chunkBytes = 64, stride = 2)
-      chunks.groupBy(col("doc_id")).agg(
-        count(lit(1)).as("n_sampled"),
-        sum(length(col("chunk")).cast("long")).as("bytes_sampled"))
-    }),
-
-    // A/F-family — z-score outlier flagging: population mean/std from
-    // exact integer-cents sums, per-row z in doubles with mirrored
-    // operation order.
-    "q56_zscore_outliers" -> ((s, d) => {
-      val stats = events(s, d).groupBy(col("event_type")).agg(
-        sumc(col("value")).as("s1"),
-        (sum((cents(col("value")) * cents(col("value")))
-          .cast(DecimalType(18, 0))) / lit(10000)).cast("double").as("s2"),
-        count(lit(1)).cast("double").as("n"))
-        .select(col("event_type"),
-          (col("s1") / col("n")).as("m"),
-          sqrt(col("s2") / col("n") - (col("s1") / col("n")) * (col("s1") / col("n")))
-            .as("sd"))
-      events(s, d).join(broadcast(stats), Seq("event_type"))
-        .select(col("event_id"), col("event_type"),
-          round((col("value") - col("m")) / col("sd"), 6).as("z"))
-        .filter(abs((col("value") - col("m")) / col("sd")) > 2.5)
-    }),
-
-    // S3 — HTML-table scan over a literal fixture (the reference's
-    // `pd.read_html(url, header=1)[0]`, `HTGPIINFLATUS/__init__.py:82`),
-    // parsed by the dependency-free HtmlTableReader, then typed + derived.
-    "q57_html_table" -> ((s, d) => {
-      val html =
-        """<html><body><p>junk</p><table class="infl">
-          |<tr><th>ignored</th><th>header</th></tr>
-          |<tr><th>Year</th><th>Jan</th><th>Feb</th></tr>
-          |<tr><td>2023</td><td>6.4</td><td>6.0</td></tr>
-          |<tr><td>2024</td><td>3.1</td><td>3.2</td></tr>
-          |<tr><td>2025</td><td>2.9</td><td>&nbsp;</td></tr>
-          |</table><table><tr><td>second table ignored</td></tr></table>
-          |</body></html>""".stripMargin
-      graft.sources.HtmlTableReader.read(s, html, headerRow = 1)
-        .select(col("Year").cast("long").as("year"),
-          col("Jan").try_cast("double").as("jan"),
-          col("Feb").try_cast("double").as("feb"))
-        .withColumn("h1_avg", (col("jan") + col("feb")) / 2)
-    }),
-
-    // S7/F15 — nested JSON roundtrip: serialize rows to nested JSON docs,
-    // re-parse with an explicit schema (the REST-payload shape of
-    // `HTGPISNP500`), extract nested fields.
-    "q58_json_roundtrip" -> ((s, d) => {
-      val j = orders(s, d).select(
-        to_json(struct(col("o_orderkey"),
-          struct(col("o_orderstatus").as("st"),
-            col("o_totalprice").as("tp")).as("nest"))).as("doc"))
-      j.select(from_json(col("doc"),
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "o_orderkey BIGINT, nest STRUCT<st: STRING, tp: DOUBLE>")).as("p"))
-        .select(col("p.o_orderkey").as("o_orderkey"),
-          col("p.nest.st").as("st"), col("p.nest.tp").as("tp"))
-    }),
-
-    // North star: near-dup CLUSTER assignment — connected components over
-    // the MinHash candidate pairs (min reachable doc id = cluster id;
-    // "keep one per cluster" is then a filter). Oracle replays the same
-    // reachability with a recursive CTE.
-    "q63_dup_clusters" -> ((s, d) => {
-      val docs = documents(s, d)
-      val pairs = Dedup.minhashCandidatesPortable(docs, "doc_id", "text")
-      Dedup.connectedComponents(docs, "doc_id", pairs)
-    }),
-
-    // North star: keeper selection — clusters become an actual deduped
-    // corpus. Weight = token count (integer-exact cross-engine), ties →
-    // smallest doc_id; the oracle re-derives clusters (recursive CTE) and
-    // keepers (same window) in SQL.
-    "q86_dedup_keepers" -> ((s, d) => {
-      val docs = documents(s, d)
-      val pairs = Dedup.minhashCandidatesPortable(docs, "doc_id", "text")
-      val clusters = Dedup.connectedComponents(docs, "doc_id", pairs)
-      val weights = docs.select(col("doc_id").as("w_doc"),
-        TextFunctions.tokenCount(col("text")).as("n_tok"))
-      val members = clusters
-        .join(weights, col("doc_id") === col("w_doc")).drop("w_doc")
-      Dedup.selectKeepers(members, "doc_id", "n_tok")
-    }),
-
-    // S12→S6→SO4 chained end-to-end: XlsxWriter encodes the p11 block as
-    // workbook BYTES, XlsxReader decodes in an executor task, and the
-    // year×attribute transpose flips it — the full reference p11 path
-    // (HTGPIWASDE/__init__.py:203-245,358,369) over the wire format.
-    // Same content as q75, so its oracle re-proves the chain.
-    "q89_xlsx_transpose" -> ((s, d) => {
-      import s.implicits._
-      import graft.sources.{XlsxCell => C}
-      val bytes = graft.sources.XlsxWriter.write(Seq(graft.sources.XlsxSheet(
-        "p11", Seq(
-          Seq(C.Str("attr"), C.Str("y2425"), C.Str("y2526"), C.Str("y2627")),
-          Seq(C.Str("planted"), C.Num(10.1), C.Num(10.5), C.Num(10.9)),
-          Seq(C.Str("harvested"), C.Num(9.7), C.Num(10.0), C.Num(10.2)),
-          Seq(C.Str("yld"), C.Num(49.8), C.Num(50.1), C.Num(52.0)),
-          Seq(C.Str("production"), C.Num(483.1), C.Num(501.0), C.Num(530.4))))))
-      val rows = s.createDataset(Seq(bytes))(
-        org.apache.spark.sql.Encoders.BINARY).flatMap { b =>
-        graft.sources.XlsxReader.readSheet(b, "p11")
-      }
-      val block = rows.toDF().filter(col("rowIdx") > 0).select(
-        Seq("attr", "y2425", "y2526", "y2627").zipWithIndex.map { case (n, i) =>
-          coalesce(try_element_at(col("cells"), lit(i + 1)), lit("")).as(n)
-        }: _*)
-      graft.pipelines.WasdeTransforms.transposeBlock(block, "attr",
-        Seq("y2425", "y2526", "y2627"))
-    }),
-
-    // §2.8 under the oracle: a REAL Structured Streaming execution —
-    // AvailableNow over the parquet source, complete-mode aggregation into
-    // the memory sink — must produce exactly the batch answer. (Complete
-    // mode + memory sink is the test harness shape; a cluster deployment
-    // appends watermarked updates to a real sink, see streaming/.)
-    "q90_streaming_agg" -> ((s, d) => {
-      val path = s"$d/lineitem.parquet"
-      // FileStreamSource lists a DIRECTORY; the sf dirs hold single files —
-      // expose the table through a symlinked scratch dir. Path and view
-      // names carry a per-dataset token so concurrent sessions over
-      // different sf dirs don't race on the symlink or the sink view.
-      val tok = datasetTok(d)
-      val srcDir = tmpScratch(s"q90_src_$tok")
-      val link = srcDir.resolve("lineitem.parquet")
-      java.nio.file.Files.deleteIfExists(link)
-      java.nio.file.Files.createSymbolicLink(
-        link, java.nio.file.Paths.get(path).toAbsolutePath)
-      val sch = s.read.parquet(path).schema
-      val qname = s"q90_mem_$tok"
-      s.catalog.dropTempView(qname)
-      StreamingOps.withStreamConf(s) {
-        val q = s.readStream.schema(sch).parquet(srcDir.toString)
-          .groupBy(col("l_returnflag"))
-          .agg(count(lit(1)).cast("long").as("n"),
-            sumc(col("l_quantity")).as("sum_qty"))
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(qname)
-    }),
-
-    // §2.8 depth — STREAM-STREAM watermarked interval join (view→click
-    // attribution within 60 minutes per user). Both sides derive from ONE
-    // AvailableNow file stream, each branch carries its own event-time
-    // watermark, and the time-range predicate is what lets the join state
-    // store evict rows older than the watermark horizon (bounded state at
-    // any stream length — the 100 TB requirement). Inner-join matches emit
-    // eagerly (no watermark wait), so the streaming result is exactly the
-    // batch interval join the oracle computes.
-    "q148_streaming_join" -> ((s, d) => {
-      val tok = datasetTok(d)
-      val qname = s"q148_mem_$tok"
-      s.catalog.dropTempView(qname)
-      StreamingOps.withStreamConf(s) {
-        StreamingOps.runAvailableNow(
-            s, s"$d/events.parquet", qname) { ev =>
-          val v = ev.filter(col("event_type") === "view")
-            .select(col("event_id").as("v_event_id"),
-              col("user_id").as("v_user"), col("ts").as("vts"))
-            .withWatermark("vts", "2 hours")
-          val c = ev.filter(col("event_type") === "click")
-            .select(col("event_id").as("c_event_id"),
-              col("user_id").as("c_user"), col("ts").as("cts"))
-            .withWatermark("cts", "2 hours")
-          v.join(c, col("v_user") === col("c_user") &&
-              col("cts") >= col("vts") &&
-              col("cts") <= col("vts") + expr("INTERVAL 60 MINUTES"))
-            .select(col("v_user").as("user_id"), col("v_event_id"),
-              col("c_event_id"),
-              (unix_micros(col("cts")) - unix_micros(col("vts")))
-                .as("delta_us"))
-        }
-      }
-    }),
-
-    // W-family depth — calendar gap-fill with LOCF over each user's daily
-    // value series: dense date spine per key (bounded by keys × days, not
-    // events), carried totals, gap flags. The resample step in front of
-    // any moving-window feature.
-    "q151_gap_fill" -> ((s, d) => {
-      val daily = events(s, d)
-        .groupBy(col("user_id"), to_date(col("ts")).as("day"))
-        .agg(sumc(col("value")).as("total"))
-      Transforms.calendarFill(daily, "user_id", "day", "total")
-    }),
-
-    // W-family depth — truncated EWMA smoothing per user's event-value
-    // series: exact-integer geometric weights (α=1/2 rational, trailing 8
-    // rows), one key exchange + one sort for the whole lag chain. The
-    // timestamp goes out as unix micros (engine-neutral).
-    "q153_ewma" -> ((s, d) => {
-      val ev = events(s, d)
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("event_id"), col("value"))
-      Transforms.ewmaSmooth(ev, "user_id", "ts_us", "event_id", "value")
-    }),
-
-    // North star: interpolated Kneser-Ney bigram LM — continuation-count
-    // backoff (Chen & Goodman d=0.75), the smoothing step the add-one
-    // surprisal LM (q108) skips. Counts exact; p_kn is a fixed double
-    // operation tree mirrored in the oracle.
-    "q155_kn_bigram" -> ((s, d) =>
-      Corpus.knBigramModel(documents(s, d), "doc_id", "text", minCount = 3L)),
-
-    // North star: directed containment join — quote/partial-copy/expansion
-    // pairs Jaccard can't see (short doc inside long doc: high containment,
-    // low Jaccard). Asymmetric prefix filter: probe = rarest prefix, index
-    // = full capped token table; exact merge-scan verify.
-    "q154_containment" -> ((s, d) =>
-      Dedup.containmentPairs(documents(s, d), "doc_id", "text",
-        shingleK = 8, numT = 3, denT = 4, maxDocsPerTok = 20)),
-
-    // North star (r20): the ONE-SIDED containment route — candidates
-    // from each prospective sub's rarest-k shingles only (native bounded
-    // rarest_min_k aggregate), against the full capped token index; the
-    // same exact merge-scan verify as q154. This is the asymmetric-recall
-    // path the banded route measurably lacks (BASELINE casym: 0.2%
-    // routed recall at J≈0.03 vs 100% here) at a candidate volume that
-    // is EXACTLY Σ dfreq over ≤ k probe rows per doc. Explicit-cap mode
-    // so the candidate set is oracle-mirrorable (rn ≤ 8 AND dfreq ≤ 20).
-    "q259_containment_onesided" -> ((s, d) =>
-      Dedup.containmentPairsOneSided(documents(s, d), "doc_id", "text",
-        shingleK = 8, numT = 3, denT = 4, probeK = 8, maxDocsPerTok = 20)),
-
-    // North star (r20): the UNION route's oracle-portable twin — md5-lane
-    // banded candidates (q29's portable family) in BOTH directions ∪ the
-    // one-sided rarest-8 candidates (q259's explicit cap), distinct, one
-    // exact verify. Pins the union ASSEMBLY (cross-generator dedupe,
-    // verify-once, both-direction banded emit) under the oracle; the
-    // production autoRoute keeps xxhash64 lanes + volume-derived caps.
-    "q261_containment_union" -> ((s, d) =>
-      Dedup.containmentUnionPortable(documents(s, d), "doc_id", "text",
-        shingleK = 8, numT = 3, denT = 4, probeK = 8, maxDocsPerTok = 20)),
-
-    // North star: SCD Type-2 dimension build — full version history with
-    // validity intervals from a deterministic changelog (q130's family plus
-    // a seq-0 initial load), the warehouse counterpart of q130's
-    // latest-state MERGE. All window work is log-sized and per-id; deletes
-    // close intervals without emitting rows.
-    "q152_scd2_history" -> ((s, d) => {
-      val docs = documents(s, d).select(col("doc_id"), col("text"))
-      val base = docs.filter(col("doc_id") % 10 <= 1)
-        .select(col("doc_id"), lit(0L).as("seq"), lit("upsert").as("op"),
-          col("text"))
-      val del = docs.filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), lit(1L).as("seq"), lit("delete").as("op"),
-          lit(null).cast("string").as("text"))
-      val up1 = docs.filter(col("doc_id") % 10 === 1)
-        .select(col("doc_id"), lit(1L).as("seq"), lit("upsert").as("op"),
-          concat(col("text"), lit(" rev one")).as("text"))
-      val up2 = docs.filter(col("doc_id") % 10 === 1)
-        .select(col("doc_id"), lit(2L).as("seq"), lit("upsert").as("op"),
-          concat(col("text"), lit(" rev two")).as("text"))
-      val log = base.unionByName(del).unionByName(up1).unionByName(up2)
-      Corpus.scd2Build(log, "doc_id", "seq", "op")
-    }),
-
-    // North star: benchmark decontamination — flag training documents
-    // sharing word-3-gram shingles with a benchmark set (here: docs 0-1
-    // standing in for the eval suite). Benchmark shingles broadcast (small
-    // by construction); the corpus side is a map-side explode + broadcast
-    // hash join. Shuffles: the bench-side distinct (tiny), the local-mode
-    // fan-out repartition below, and the final per-doc count.
-    "q88_decontamination" -> ((s, d) => {
-      val docs = documents(s, d).filter(length(trim(col("text"))) > 0)
-      // RAW shingles corpus-side: array_distinct is O(n²) per doc and the
-      // broadcast join drops non-matches anyway — countDistinct dedups the
-      // few survivors with map-side partial aggregation. Native compiled
-      // shingling (same tokenization the oracle mirrors); the HOF spelling
-      // evaluates interpreted.
-      def sh3 = explode(graft.functions.ShingleOps.wordShinglesCol(
-        col("text"), 3)).as("s")
-      val bench = docs.filter(col("doc_id") < 2).select(sh3).distinct()
-      // the shingle explode is CPU-bound: fan a narrower-than-cores scan
-      // out first (test parquet is one row group; a real corpus already
-      // has plenty of scan partitions and skips this shuffle)
-      val par = s.sparkContext.defaultParallelism
-      val spread =
-        if (docs.rdd.getNumPartitions < par) docs.repartition(par) else docs
-      spread.select(col("doc_id"), sh3)
-        .join(broadcast(bench), "s")
-        .groupBy(col("doc_id"))
-        .agg(countDistinct(col("s")).cast("long").as("n_hits"))
-    }),
-
-    // Incremental aggregate maintenance — the partial-agg algebra behind
-    // every incremental load: merging per-batch partial aggregates
-    // (sum-of-sums, sum-of-counts) must equal the full recompute. At
-    // 100 TB this is how a materialized rollup absorbs a delta without
-    // rescanning history; the oracle is the single-pass answer.
-    "q93_incremental_agg" -> ((s, d) => {
-      val li = lineitem(s, d)
-      def partial(df: DataFrame) = df.groupBy(col("l_returnflag"))
-        .agg(sum(cents(col("l_quantity")).cast(DecimalType(18, 0))).as("qty_c"),
-          count(lit(1)).as("n"))
-      val history = partial(li.filter(col("l_orderkey") % 10 =!= 0))
-      val delta = partial(li.filter(col("l_orderkey") % 10 === 0))
-      history.unionByName(delta)
-        .groupBy(col("l_returnflag"))
-        .agg(sum(col("qty_c")).as("qty_c"), sum(col("n")).as("n"))
-        .select(col("l_returnflag"),
-          (col("qty_c") / lit(100)).cast("double").as("sum_qty"),
-          col("n").cast("long").as("n"))
-    }),
-
-    // North star: sequence packing — greedy sequential fill of documents
-    // into fixed token-budget bins (the pretraining context-window packing
-    // step). Each of 32 hash buckets packs independently (one worker's
-    // shard), so the cumulative-sum window is partitioned, never global;
-    // bin id and in-bin offset derive from the running sum before the doc.
-    "q91_sequence_packing" -> ((s, d) => {
-      val budget = 512L
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("bucket")).orderBy(col("doc_id"))
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)
-      documents(s, d).filter(length(trim(col("text"))) > 0)
-        .select(col("doc_id"),
-          pmod(col("doc_id"), lit(32)).cast("long").as("bucket"),
-          TextFunctions.tokenCount(col("text")).as("n_tok"))
-        .withColumn("cum", sum(col("n_tok")).over(w))
-        .select(col("doc_id"), col("bucket"), col("n_tok"),
-          ((col("cum") - col("n_tok")) / budget).cast("long").as("bin"),
-          ((col("cum") - col("n_tok")) % budget).cast("long").as("offset"))
-    }),
-
-    // North star: deterministic hash-stratified sampling — per-language
-    // keep rates for training-data mixing, decided map-side by an md5
-    // bucket of doc_id (reproducible, shuffle-free, oracle-checkable).
-    "q87_stratified_sample" -> ((s, d) => {
-      val rates = Map("en" -> 2048L, "de" -> 1024L, "es" -> 1024L,
-        "fr" -> 512L, "zh" -> 512L) // thresholds out of 4096
-      Transforms.hashStratifiedSample(
-        documents(s, d), "doc_id", "lang", rates, defaultThreshold = 256L)
-        .select(col("doc_id"), col("lang"), col("bucket"))
-    }),
-
-    // North star: TF-IDF salient terms — top-3 per document. Ranking is
-    // integer-exact (tf DESC, df ASC, term ASC) so cross-engine libm ulp
-    // differences in ln() can't flip ranks; the tf-idf value itself is
-    // emitted rounded.
-    "q64_tfidf_terms" -> ((s, d) => {
-      val docs = documents(s, d).filter(length(trim(col("text"))) > 0)
-      // corpus size folds in as a broadcast 1-row aggregate — one lazy DAG,
-      // no driver-side count() pre-scan of the corpus at construction time
-      val nd = docs.agg(count(lit(1)).cast("double").as("n_docs"))
-      val toks = docs.select(col("doc_id"),
-        explode(TextFunctions.tokens(TextFunctions.normalize(col("text")))).as("term"))
-      val tf = toks.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      val df_ = toks.select(col("doc_id"), col("term")).distinct()
-        .groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val scored = tf.join(df_, Seq("term")).crossJoin(broadcast(nd))
-        .withColumn("tfidf_r", round(col("tf") *
-          log((col("n_docs") + 1.0) / (col("df").cast("double") + 1.0)), 6))
-        .drop("n_docs")
-      Transforms.topKPerGroup(scored, Seq(col("doc_id")),
-          Seq(col("tf").desc, col("df").asc, col("term").asc), 3)
-        .select(col("doc_id"), col("rnk"), col("term"), col("tf"), col("df"),
-          col("tfidf_r"))
-    }),
-
-    // North star: int8-quantized ANN — the memory-lean scale path (4 bytes →
-    // 1 byte per dim): per-vector symmetric scalar quantization
-    // (scale = 127/max|x|), integer dot-product ranking (exact, portable —
-    // no float ordering involved), exact float rescoring of the winners.
-    "q65_ann_quantized" -> ((s, d) => {
-      val e = embeddings(s, d)
-      val vd = Similarity.toDoubleArray(col("embedding"))
-      val scale = lit(127.0) / array_max(transform(vd, x => abs(x)))
-      val quant = e.select(col("vec_id"), col("embedding"),
-        transform(vd, x => round(x * scale).cast("long")).as("qv"))
-      val qrow = quant.filter(col("vec_id") === 0)
-        .select(col("qv").as("qq"), col("embedding").as("qe"))
-      val scored = quant.crossJoin(broadcast(qrow))
-        .select(col("vec_id"), col("embedding"), col("qe"),
-          aggregate(zip_with(col("qv"), col("qq"), (a, b) => a * b),
-            lit(0L), (acc, x) => acc + x).as("qdot"))
-      Transforms.globalTopK(scored, Seq(col("qdot").desc, col("vec_id").asc), 10)
-        .select(col("vec_id"), col("qdot"),
-          round(Similarity.cosine(col("embedding"), col("qe")), 6).as("sim_r"),
-          col("rnk"))
-    }),
-
-    // North star: BM25 retrieval scoring for a fixed query — the ranking
-    // function quality-filtering / retrieval pipelines use. Per-term
-    // contributions land in separate columns and add in a fixed order
-    // (no aggregation-order nondeterminism); ranking uses the rounded
-    // score + doc id so cross-engine ulp noise can't flip ranks.
-    "q66_bm25" -> ((s, d) => {
-      val (k1, b) = (1.2, 0.75)
-      val qTerms = Seq("data", "join", "stream")
-      val docs = documents(s, d).filter(length(trim(col("text"))) > 0)
-      val toks = docs.select(col("doc_id"),
-        explode(TextFunctions.tokens(TextFunctions.normalize(col("text")))).as("t"))
-      val dl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-      // corpus stats (n_docs, avgdl) fold in as a broadcast 1-row aggregate
-      // crossJoin — one lazy DAG, no count()/head() pre-scans on the driver
-      val stats = docs.agg(count(lit(1)).cast("double").as("n_docs"))
-        .crossJoin(dl.agg(sum(col("dl")).cast("double").as("sum_dl")))
-        .select(col("n_docs"), (col("sum_dl") / col("n_docs")).as("avgdl"))
-      val tf = toks.filter(col("t").isin(qTerms: _*))
-        .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf"))
-      val df_ = tf.groupBy(col("t")).agg(count(lit(1)).as("df"))
-      val contr = tf.join(df_, Seq("t")).join(dl, Seq("doc_id"))
-        .crossJoin(broadcast(stats))
-        .withColumn("idf",
-          log((col("n_docs") - col("df").cast("double") + 0.5) /
-            (col("df").cast("double") + 0.5) + 1.0))
-        .withColumn("w",
-          col("tf").cast("double") * (k1 + 1.0) /
-            (col("tf").cast("double") +
-              lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl"))))
-        .withColumn("c", col("idf") * col("w"))
-      val wideAggs = qTerms.map(t => max(when(col("t") === t, col("c"))).as(s"c_$t"))
-      val wide = contr.groupBy(col("doc_id")).agg(wideAggs.head, wideAggs.tail: _*)
-      val scored = wide.withColumn("score_r",
-        round(qTerms.map(t => coalesce(col(s"c_$t"), lit(0.0)))
-          .reduce(_ + _), 6))
-      Transforms.globalTopK(scored, Seq(col("score_r").desc, col("doc_id").asc), 10)
-        .select(col("doc_id"), col("score_r"), col("rnk"))
-    }),
-
-    // North star: winnowing fingerprints (MOSS-style): positional char
-    // 5-grams, portable md5-window hashes, min over each 4-gram window,
-    // distinct mins = the document's fingerprint set. Robust to local
-    // edits, guaranteed match coverage — the document-fingerprint scheme
-    // plagiarism/near-dup pipelines use.
-    "q67_winnow_fp" -> ((s, d) => {
-      // The fingerprint set is a SCALAR of the document
-      // (functions/PortableHashExpressions.winnowFingerprints): one native
-      // pass per doc computes gram hashes + window minima + distinct in
-      // place of the former posexplode → window → distinct plan, which
-      // shuffled ~|text| rows per doc twice. Zero shuffles remain — the
-      // query is a map-side projection. (The earlier explode spelling is
-      // preserved semantically: the oracle SQL is unchanged.)
-      val docs0 = documents(s, d)
-      val par = s.sparkContext.defaultParallelism
-      val docs = if (docs0.rdd.getNumPartitions < par) docs0.repartition(par)
-                 else docs0
-      import org.apache.spark.sql.GraftBridge
-      val fps = GraftBridge.column(graft.functions.WinnowFingerprints(
-        GraftBridge.expression(TextFunctions.normalize(col("text"))), 5, 4))
-      docs.select(col("doc_id"), fps.as("fps"))
-        .select(col("doc_id"), size(col("fps")).cast("long").as("n_fp"),
-          array_min(col("fps")).as("min_fp"), array_max(col("fps")).as("max_fp"))
-    }),
-
-    // North star: PII detection + redaction — the scrubbing pass every
-    // training corpus goes through. Deterministic synthetic PII is grafted
-    // onto the text (the corpus itself is clean) so detection/redaction
-    // are exercised end-to-end; output = per-doc counts + the fingerprint
-    // of the REDACTED text, proving the masking itself matches.
-    "q71_pii_redact" -> ((s, d) => {
-      val emailRx = "[a-z0-9._]+@[a-z0-9.-]+\\.[a-z]{2,}"
-      val phoneRx = "\\+\\d{3}-\\d{4}-\\d{4}"
-      val withPii = documents(s, d).select(col("doc_id"),
-        concat(col("text"),
-          lit(" contact user"), col("doc_id"), lit("@example.com or tel "),
-          lit("+502-"), lpad((col("doc_id") % 10000).cast("string"), 4, "0"),
-          lit("-"), lpad(((col("doc_id") * 7) % 10000).cast("string"), 4, "0"))
-          .as("text"))
-      withPii.select(col("doc_id"),
-        TextFunctions.matchCount(col("text"), emailRx).as("n_email"),
-        TextFunctions.matchCount(col("text"), phoneRx).as("n_phone"),
-        md5(regexp_replace(regexp_replace(col("text"), emailRx, "<EMAIL>"),
-          phoneRx, "<PHONE>")).as("redacted_fp"))
-    }),
-
-    // North star: repetition-ratio quality signal — the fraction of
-    // duplicated word 3-grams per document (boilerplate / degenerate
-    // generation detector in corpus filtering).
-    "q72_repetition" -> ((s, d) => {
-      // empty/whitespace-only docs excluded on BOTH sides: DuckDB's
-      // string_split_regex('') yields [''] (one shingle) while wordShingles
-      // yields none — same tokenizer divergence q29/q30/q64/q66 filter out
-      val sh = documents(s, d).filter(length(trim(col("text"))) > 0)
-        .select(col("doc_id"),
-          explode(graft.functions.ShingleOps.wordShinglesCol(col("text"), 3)).as("g"))
-      sh.groupBy(col("doc_id")).agg(
-        count(lit(1)).as("n_grams"),
-        countDistinct(col("g")).as("n_distinct"))
-        .withColumn("dup_ratio",
-          lit(1.0) - col("n_distinct").cast("double") / col("n_grams").cast("double"))
-    }),
-
-    // S-family widening — partitioned parquet sink + partition-PRUNED read
-    // through real files (the layout that makes year-scoped queries touch
-    // 1/Nth of a 100 TB table; .explain shows PartitionFilters, proven in
-    // ScaleSpec).
-    "q70_partitioned_write" -> ((s, d) => {
-      // NOTE: constructing this query performs the write eagerly (same
-      // trade-off as q42's CSV roundtrip) — the sink IS the operator under
-      // test. Keyed per dataset AND per process (tmpScratch, removed at
-      // exit): concurrent runs at different SFs — or over the SAME
-      // dataset — can't clobber each other between write and read-back.
-      val tmp = tmpScratch("orders_by_year_" +
-        d.replaceAll("[^A-Za-z0-9]", "_") + s"_$scratchNonce").toString
-      orders(s, d)
-        .withColumn("o_year", year(col("o_orderdate")).cast("int"))
-        // co-locate each partition's rows first: one right-sized file per
-        // year directory instead of shufflePartitions tiny files apiece
-        .repartition(col("o_year"))
-        .write.mode("overwrite").partitionBy("o_year").parquet(tmp)
-      s.read.parquet(tmp)
-        .filter(col("o_year") === 1997) // partition pruning: one directory
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-          col("o_year").cast("long").as("o_year"))
-    }),
-
-    // Scale widening — Z-order layout key: Morton interleave of
-    // (custkey, order epoch-day), each RANGE-NORMALIZED onto the full
-    // 16-bit domain first (raw keys with unequal bit-widths degenerate to
-    // sorting by the wider dimension — see Transforms.zorder16 scaladoc;
-    // the span test in ScaleSpec measures it).
-    "q69_zorder_key" -> ((s, d) => {
-      val o = orders(s, d).withColumn("day",
-        datediff(col("o_orderdate").cast("date"),
-          lit("1970-01-01").cast("date")).cast("long"))
-      // min/max fold in as a broadcast 1-row aggregate (the q64/q66 lazy
-      // corpus-stats shape) — no driver pre-scan job at construction time,
-      // the whole query is one DAG.
-      val stats = o.agg(min("o_custkey").as("ck_lo"), max("o_custkey").as("ck_hi"),
-        min("day").as("d_lo"), max("day").as("d_hi"))
-      def scale16(c: Column, lo: Column, hi: Column): Column =
-        (((c - lo) * lit(65535L)) / (hi - lo)).cast("long")
-      o.crossJoin(broadcast(stats)).select(col("o_orderkey"),
-        Transforms.zorder16(scale16(col("o_custkey"), col("ck_lo"), col("ck_hi")),
-          scale16(col("day"), col("d_lo"), col("d_hi"))).as("z"))
-    }),
-
-    // Pipeline widening — data-quality constraint report (the Deequ-shaped
-    // validation step a training-data pipeline runs before ingestion):
-    // one pass computes null rates, range violations, and key uniqueness,
-    // emitted as a long (check, value, pass) table.
-    "q68_data_quality" -> ((s, d) => {
-      val o = orders(s, d)
-      val metrics = o.agg(
-        count(lit(1)).as("n_rows"),
-        count(when(col("o_custkey").isNull, 1)).as("null_custkey"),
-        count(when(col("o_totalprice") <= 0, 1)).as("nonpos_price"),
-        count(when(col("o_orderdate") < lit("1990-01-01").cast("timestamp") ||
-          col("o_orderdate") > lit("2030-01-01").cast("timestamp"), 1))
-          .as("date_out_of_range"),
-        (count(lit(1)) - countDistinct(col("o_orderkey"))).as("dup_keys"),
-        count(when(!col("o_orderstatus").isin("F", "O", "P"), 1))
-          .as("bad_status"))
-      val checks = Seq("n_rows", "null_custkey", "nonpos_price",
-        "date_out_of_range", "dup_keys", "bad_status")
-      val long = checks.map { c =>
-        metrics.select(lit(c).as("check"), col(c).cast("long").as("value"),
-          (col(c) === 0 || lit(c) === "n_rows").as("pass"))
-      }.reduce(_ unionByName _)
-      long
-    }),
-
-    // §2.9 skew control in the checked path — two-phase salted aggregation
-    // (same result as a plain groupBy, different physical distribution:
-    // the hot key spreads over 8 reducers before the merge).
-    "q59_salted_agg" -> ((s, d) => {
-      val merged = Transforms.saltedAggregate(events(s, d), "event_type", 8,
-        partials = Seq(
-          ("n", c => count(c), lit(1)),
-          ("sc", c => sum(cents(c).cast(DecimalType(18, 0))), col("value"))),
-        merges = Seq(
-          ("n", c => sum(c)),
-          ("sc", c => sum(c))))
-      merged.select(col("event_type"), col("n"),
-        (col("sc") / lit(100)).cast("double").as("total"))
-    }),
-
-    // W-family — full ranking family with a total tiebreak order.
-    "q60_rank_family" -> ((s, d) => {
-      val w = Window.partitionBy(col("c_mktsegment"))
-        .orderBy(col("c_acctbal").desc, col("c_custkey"))
-      customer(s, d).select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"),
-        dense_rank().over(w).cast("long").as("drnk"),
-        round(percent_rank().over(w), 6).as("prnk"),
-        round(cume_dist().over(w), 6).as("cdist"),
-        ntile(4).over(w).cast("long").as("quartile"))
-    }),
-
-    // F-family — wider string-function surface.
-    "q61_string_funcs" -> ((s, d) =>
-      part(s, d).select(col("p_partkey"),
-        lpad(col("p_brand"), 12, "."). as("brand_pad"),
-        rpad(col("p_type"), 18, "_").as("type_pad"),
-        split_part(col("p_type"), lit(" "), lit(1)).as("type_head"),
-        reverse(col("p_name")).as("name_rev"),
-        repeat(lit("*"), (col("p_size") % 5).cast("int")).as("stars"),
-        regexp_replace(col("p_name"), " ", "_").as("name_us"),
-        col("p_name").startsWith("a").as("starts_a"),
-        col("p_name").contains("ol").as("has_ol"))),
-
-    // F20 — array-function surface over embeddings (scalar outputs only:
-    // the driver compare sorts rows by every column).
-    "q62_array_funcs" -> ((s, d) =>
-      embeddings(s, d).select(col("vec_id"),
-        size(col("embedding")).cast("long").as("dim"),
-        array_min(col("embedding")).cast("double").as("vmin"),
-        array_max(col("embedding")).cast("double").as("vmax"),
-        element_at(col("embedding"), 1).cast("double").as("first"),
-        element_at(array_sort(col("embedding")), 3).cast("double").as("third_smallest"),
-        element_at(reverse(array_sort(col("embedding"))), 1).cast("double").as("largest"))),
-
-    // North-star widening — per-vector norms (L2/L1/Linf) over the
-    // embedding column, sequential-fold exact, plus the label column.
-    "q53_vector_stats" -> ((s, d) => {
-      val vd = Similarity.toDoubleArray(col("embedding"))
-      embeddings(s, d).select(col("vec_id"), col("label"),
-        round(sqrt(Similarity.dot(col("embedding"), col("embedding"))), 6).as("l2_r"),
-        round(aggregate(vd, lit(0.0), (acc, x) => acc + abs(x)), 6).as("l1_r"),
-        round(array_max(transform(vd, x => abs(x))), 6).as("linf_r"))
-    }),
-
-    // North star: embedding-cosine near-dup — semantic-dedup verdicts from
-    // LSH-bucketed candidates (lattice hyperplanes so the oracle reproduces
-    // bucketing AND scores exactly; the hash-derived-plane variant stays
-    // the production default). A doc is a dup when an EARLIER doc sits
-    // within 0.35 cosine in its bucket; dup_of = earliest such neighbor.
-    "q94_embedding_neardup" -> ((s, d) =>
-      Similarity.embeddingNearDup(embeddings(s, d), "vec_id", "embedding",
-        bits = 4, minSim = 0.35,
-        signature = Similarity.hyperplaneSignatureLattice)),
-
-    // North star: C4-style corpus-frequency boilerplate — word-5-gram
-    // spans repeating across >=2 documents, per-doc span counts + share.
-    "q95_boilerplate_spans" -> ((s, d) =>
-      Dedup.boilerplateSpans(documents(s, d), "doc_id", "text",
-        shingleN = 5, minDocs = 2)),
-
-    // §2.8 under the oracle, stateful flavor: a REAL streaming execution
-    // of the MinHash exact-signature dedup — AvailableNow over a file
-    // source, flatMapGroupsWithState keeper state, append-mode memory
-    // sink — must equal the batch min-per-signature answer (single batch
-    // here; across micro-batches the state carries earlier keepers).
-    "q96_streaming_dedup" -> ((s, d) => {
-      val path = s"$d/documents.parquet"
-      // same symlinked-scratch-dir shape as q90 (FileStreamSource lists a
-      // directory; per-dataset token keeps concurrent sessions apart)
-      val tok = datasetTok(d)
-      val srcDir = tmpScratch(s"q96_src_$tok")
-      val link = srcDir.resolve("documents.parquet")
-      java.nio.file.Files.deleteIfExists(link)
-      java.nio.file.Files.createSymbolicLink(
-        link, java.nio.file.Paths.get(path).toAbsolutePath)
-      val sch = s.read.parquet(path).schema
-      val qname = s"q96_mem_$tok"
-      s.catalog.dropTempView(qname)
-      val stream = s.readStream.schema(sch).parquet(srcDir.toString)
-        .filter(length(trim(col("text"))) > 0)
-      StreamingOps.withStreamConf(s) {
-        val q = graft.streaming.StreamingDedup
-          .dedupStream(stream, "doc_id", "text")
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(qname)
-    }),
-
-    // North star: deterministic corpus shuffle — reproducible global
-    // permutation via hashed shuffle keys; shard-partitioned ranking.
-    "q97_corpus_shuffle" -> ((s, d) =>
-      Transforms.deterministicShuffle(documents(s, d), "doc_id", shards = 32)),
-
-    // North star: per-language quality-percentile cutoff — keep each
-    // language's top half by stopword density. Exact ranks (percent_rank
-    // over a LANG-partitioned window with a unique tiebreak), not approx
-    // percentile sketches, so the boundary is reproducible cross-engine.
-    "q98_quality_percentile" -> ((s, d) => {
-      val toks = TextFunctions.tokens(lower(col("text")))
-      val scored = documents(s, d).select(col("doc_id"), col("lang"),
-        TextFunctions.stopwordCount(toks, TextFunctions.EnglishStopwords)
-          .as("n_stop"),
-        size(toks).cast("long").as("n_tokens"))
-        .withColumn("stop_ratio",
-          col("n_stop").cast("double") / col("n_tokens").cast("double"))
-      Transforms.percentileFilter(scored, Seq(col("lang")),
-        Seq(col("stop_ratio").desc, col("doc_id").asc), keepFrac = 0.5)
-        .select(col("doc_id"), col("lang"), round(col("pr"), 6).as("pr_r"))
-    }),
-
-    // North star: incremental dedup — flag a NEW batch of documents
-    // against the signature index of the already-ingested corpus, then
-    // within-batch earliest-wins for unseen signatures. At 100 TB the
-    // index is a stored (sig → keeper) table maintained across loads
-    // (the dedup analogue of q93's partial-aggregate merge); here the
-    // "old" half derives it. Shuffles carry (sig, id) only.
-    "q100_incremental_dedup" -> ((s, d) => {
-      val docs = documents(s, d).filter(length(trim(col("text"))) > 0)
-      def signed(df: DataFrame) = df.select(col("doc_id"),
-        graft.streaming.StreamingDedup.signature(col("text")).as("sig"))
-      val index = signed(docs.filter(col("doc_id") < 250))
-        .groupBy(col("sig")).agg(min(col("doc_id")).as("corpus_keeper"))
-      val batch = signed(docs.filter(col("doc_id") >= 250))
-      val batchMin = batch.groupBy(col("sig"))
-        .agg(min(col("doc_id")).as("batch_keeper"))
-      batch.join(index, Seq("sig"), "left")
-        .join(batchMin, Seq("sig"))
-        .select(col("doc_id"),
-          coalesce(col("corpus_keeper"), col("batch_keeper")).as("keeper"),
-          (col("doc_id") =!=
-            coalesce(col("corpus_keeper"), col("batch_keeper"))).as("is_dup"),
-          col("corpus_keeper").isNotNull.as("known_sig"))
-    }),
-
-    // North star: training-mixture report — per (source, lang) doc and
-    // token counts plus corpus shares. The share window runs over the
-    // ROLLUP OUTPUT (bounded by |sources|x|langs| rows), never the corpus;
-    // count/token sums are integer-valued doubles, so the global sum is
-    // order-independent and the shares bit-exact cross-engine.
-    "q99_mixture_report" -> ((s, d) => {
-      val agg = documents(s, d).groupBy(col("source"), col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(TextFunctions.tokenCount(col("text"))).as("n_tokens"))
-      val all = org.apache.spark.sql.expressions.Window.partitionBy()
-      agg.select(col("source"), col("lang"),
-        col("n_docs").cast("long").as("n_docs"),
-        col("n_tokens").cast("long").as("n_tokens"),
-        round(col("n_docs").cast("double") /
-          sum(col("n_docs").cast("double")).over(all), 6).as("doc_share"),
-        round(col("n_tokens").cast("double") /
-          sum(col("n_tokens").cast("double")).over(all), 6).as("tok_share"))
-    }),
-
-    // Robustness: corrupt-record quarantine — the malformed-input routing
-    // every ingestion pipeline needs. JSON rows (one in seven truncated
-    // mid-object, deterministically) parse PERMISSIVE; bad rows surface
-    // as is_corrupt=true with null fields instead of failing the load.
-    // The oracle re-parses the same strings with DuckDB's json_valid /
-    // json_extract — an independent parser agreeing on every verdict.
-    "q102_corrupt_quarantine" -> ((s, d) => {
-      val raw = orders(s, d).select(col("o_orderkey"),
-        when(col("o_orderkey") % 7 === 0,
-          concat(lit("{\"k\":"), col("o_orderkey"), lit(",\"p\":")))
-          .otherwise(concat(lit("{\"k\":"), col("o_orderkey"),
-            lit(",\"p\":\""), col("o_orderpriority"), lit("\"}")))
-          .as("r"))
-      raw.select(col("o_orderkey"),
-          from_json(col("r"), org.apache.spark.sql.types.StructType
-            .fromDDL("k BIGINT, p STRING")).as("j"))
-        .select(col("o_orderkey"), col("j.k").as("k"), col("j.p").as("p"),
-          col("j.k").isNull.as("is_corrupt"))
-    }),
-
-    // Robustness: schema evolution — a second batch adds a column; the
-    // mergeSchema read unifies both, back-filling null. The on-disk layout
-    // (two incremental loads under one dataset dir) is built eagerly at
-    // query-construction time, the operator-under-test trade-off q42/q70
-    // also take.
-    "q103_schema_evolution" -> ((s, d) => {
-      val tok = datasetTok(d)
-      val dir = tmpScratch(s"q103_data_$tok").toString
-      val o = orders(s, d)
-      o.filter(col("o_orderkey") % 2 === 0)
-        .select(col("o_orderkey"), col("o_totalprice"))
-        .write.mode("overwrite").parquet(s"$dir/b=1")
-      o.filter(col("o_orderkey") % 2 === 1)
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-        .write.mode("overwrite").parquet(s"$dir/b=2")
-      s.read.option("mergeSchema", "true").parquet(s"$dir/b=1", s"$dir/b=2")
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-    }),
-
-    // North star: sketch accuracy — for every LSH candidate pair, the
-    // MinHash lane-agreement Jaccard ESTIMATE (n_agree/16) next to the
-    // EXACT shingle-set Jaccard, the empirical form of the MinHash
-    // guarantee E[agree/k] = J. Estimates fold 16-lane arrays per pair
-    // (tiny); the exact side joins distinct (doc, shingle) rows only.
-    "q107_minhash_estimate" -> ((s, d) => {
-      val docs = documents(s, d).filter(length(trim(col("text"))) > 0)
-      // one shared lane count: the signature pass, the banding, and the
-      // estimate divisor must agree or est_r silently scales wrong
-      val numHashes = 16
-      // ONE signature pass over the text, checkpointed (tiny table), feeds
-      // both the candidate bands and the lane-agreement estimates
-      val sig = Dedup.md5MinhashSignatures(docs, "doc_id", "text",
-          numHashes = numHashes)
-        .localCheckpoint()
-      val pairs = Dedup.candidatesFromSignatures(sig, numHashes = numHashes)
-      val agree = pairs
-        .join(sig.as("sa"), col("id_a") === col("sa.doc_id"))
-        .join(sig.as("sb"), col("id_b") === col("sb.doc_id"))
-        .select(col("id_a"), col("id_b"),
-          aggregate(zip_with(col("sa.ls"), col("sb.ls"),
-              (x, y) => when(x === y, 1L).otherwise(0L)),
-            lit(0L), (acc, v) => acc + v).as("n_agree"))
-      // r21 (guide §1.2): shd feeds sizes AND both endpoints of the
-      // intersection join — three consumers, so the explode + distinct
-      // pass ran 3× per query. Pinned once under the same input-size
-      // gate as the dedup fronts; a caller at scale recomputes.
-      // fanOutScan measured ~neutral here (r22): the explode feeds the
-      // distinct's exchange either way — left unspread
-      val shd = ckptIfSmall(docs)(docs.select(col("doc_id"),
-        explode(graft.functions.ShingleOps.wordShinglesCol(col("text"), 3))
-          .as("sh")).distinct())
-      val sizes = shd.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      // candidate pairs are LSH-bounded (tiny vs the shingle table) —
-      // broadcast them so the exact side prunes map-side instead of
-      // shuffling every (doc, shingle) row by doc twice
-      val inter = broadcast(pairs)
-        .join(shd.as("ha"), col("id_a") === col("ha.doc_id"))
-        .join(shd.as("hb"),
-          col("id_b") === col("hb.doc_id") && col("ha.sh") === col("hb.sh"))
-        .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("n_inter"))
-      agree
-        .join(inter, Seq("id_a", "id_b"), "left")
-        .join(sizes.as("za"), col("id_a") === col("za.doc_id"))
-        .join(sizes.as("zb"), col("id_b") === col("zb.doc_id"))
-        .select(col("id_a"), col("id_b"),
-          col("n_agree").cast("long").as("n_agree"),
-          round(col("n_agree").cast("double") / lit(numHashes), 6).as("est_r"),
-          coalesce(col("n_inter"), lit(0L)).cast("long").as("n_inter"),
-          (col("za.n") + col("zb.n") - coalesce(col("n_inter"), lit(0L)))
-            .cast("long").as("n_union"),
-          round(coalesce(col("n_inter"), lit(0L)).cast("double") /
-            (col("za.n") + col("zb.n") - coalesce(col("n_inter"), lit(0L)))
-              .cast("double"), 6).as("jac_r"))
-    }),
-
-    // North star: bigram continuation statistics — the n-gram LM view of
-    // the corpus (count(w1,w2), count(w1), the conditional ratio). Two
-    // hash aggregates over exploded native 2-gram shingles; the ratio is
-    // integer-derived and bit-exact. Low-frequency tail cut at n >= 5
-    // keeps the result a statistics table, not a corpus copy.
-    "q105_bigram_stats" -> ((s, d) => {
-      val bi = documents(s, d)
-        .filter(length(trim(col("text"))) > 0)
-        .select(explode(graft.functions.ShingleOps.wordShinglesCol(
-          col("text"), 2)).as("s"))
-        .filter(size(split(col("s"), " ")) === 2)
-        .select(split_part(col("s"), lit(" "), lit(1)).as("w1"),
-          split_part(col("s"), lit(" "), lit(2)).as("w2"))
-      val pair = bi.groupBy(col("w1"), col("w2"))
-        .agg(count(lit(1)).as("n"))
-      val uni = pair.groupBy(col("w1")).agg(sum(col("n")).as("n_w1"))
-      pair.join(uni, Seq("w1"))
-        .filter(col("n") >= 5)
-        .select(col("w1"), col("w2"), col("n").cast("long").as("n"),
-          col("n_w1").cast("long").as("n_w1"),
-          round(col("n").cast("double") / col("n_w1").cast("double"), 6)
-            .as("cond_r"))
-    }),
-
-    // F20 widening — higher-order array predicates/folds over embeddings,
-    // scalar outputs only (exists / filter-count / clamped sum).
-    "q106_hof_arrays" -> ((s, d) => {
-      val vd = Similarity.toDoubleArray(col("embedding"))
-      embeddings(s, d).select(col("vec_id"),
-        size(filter(vd, x => x > 0)).cast("long").as("n_pos"),
-        exists(vd, x => x > lit(2.0)).as("any_gt2"),
-        forall(vd, x => abs(x) < lit(10.0)).as("all_lt10"),
-        round(aggregate(vd, lit(0.0),
-          (acc, x) => acc + least(greatest(x, lit(-1.0)), lit(1.0))), 6)
-          .as("clamped_sum_r"))
-    }),
-
-    // Maintenance under the oracle: small-file compaction must be
-    // lossless — 64 accreted files rewritten to the byte-derived target
-    // sizing (atomic dir swap), then read back and compared row-for-row
-    // against the source table. File-count collapse is asserted in
-    // ScaleSpec; this query pins the data.
-    "q104_compact_lossless" -> ((s, d) => {
-      val tok = datasetTok(d)
-      val dir = tmpScratch(s"q104_data_$tok").resolve("t").toString
-      orders(s, d)
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-        .repartition(64).write.mode("overwrite").parquet(dir)
-      graft.operators.Maintenance.compact(s, dir)
-      s.read.parquet(dir)
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-    }),
-
-    // A-family extension — explicit GROUPING SETS (the rollup/cube
-    // generalization; one pass, Expand-based like q39/q45).
-    "q101_grouping_sets" -> ((s, d) =>
-      lineitem(s, d)
-        .groupingSets(
-          Seq(Seq(col("l_returnflag")), Seq(col("l_linestatus")),
-            Seq(col("l_returnflag"), col("l_linestatus"))),
-          col("l_returnflag"), col("l_linestatus"))
-        .agg(sumc(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))),
-
-    // North star: corpus-fit bigram-LM surprisal per document — fit (two
-    // hash aggregates; model is vocab²-bounded) + transform (equi-hash join
-    // of doc bigram instances against the model; AQE broadcasts the model
-    // when small). The per-doc score is an exact LONG micro-bits sum, so
-    // partial-aggregation order can't perturb it.
-    "q108_bigram_lm" -> ((s, d) =>
-      Corpus.bigramSurprisal(documents(s, d), "doc_id", "text")),
-
-    // North star: sliding token-window chunking with overlap (64-token
-    // windows every 48 tokens — the training-example packing shape). Pure
-    // narrow map: sequence + slice + md5 inside whole-stage codegen, zero
-    // shuffles at any corpus size.
-    "q109_chunk_overlap" -> ((s, d) =>
-      Corpus.chunkWithOverlap(documents(s, d), "doc_id", "text",
-        size = 64, stride = 48)),
-
-    // North star: per-source token-budget curation — deterministic hash
-    // order inside each source, O(1)-state running-sum window, admit while
-    // the budget isn't exhausted before the document. One shuffle on the
-    // group key.
-    "q110_source_budget" -> ((s, d) =>
-      Corpus.budgetSample(documents(s, d), "source", "doc_id",
-        col("n_chars"), budget = 2500L)),
-
-    // North star: lexical quality signals — token/type counts, type-token
-    // ratio, word-distribution Shannon entropy (exact micro-bits carrier).
-    // Two partial-aggregatable hash aggregates.
-    "q111_word_entropy" -> ((s, d) =>
-      Corpus.wordEntropy(documents(s, d), "doc_id", "text")),
-
-    // North star: mergeable MinHash sketches — per-doc signatures (one
-    // native text pass) MIN-merged into per-source sketches map-side, then
-    // pairwise lane-agreement similarity on the sketch table alone, with
-    // the exact shingle-set Jaccard joined in as verification (blocked
-    // equi-join on the shingle, q107-style).
-    "q112_source_sketch" -> ((s, d) => {
-      val docs = documents(s, d).filter(length(trim(col("text"))) > 0)
-      val sim = Corpus.sketchPairSimilarity(
-        Corpus.groupMinhashSketch(docs, "source", "text"), "source")
-      // r21: same three-consumer pin as q107's shd (sizes + both sides
-      // of the intersection self-join) — one explode+distinct pass, not
-      // three, under the small-input gate.
-      val shd = ckptIfSmall(docs)(docs.select(col("source"),
-          explode(graft.functions.ShingleOps.wordShinglesCol(col("text"), 3))
-            .as("sh")).distinct())
-      val sizes = shd.groupBy(col("source")).agg(count(lit(1)).as("n"))
-      val inter = shd.as("ha")
-        .join(shd.as("hb"),
-          col("ha.sh") === col("hb.sh") && col("ha.source") < col("hb.source"))
-        .groupBy(col("ha.source").as("grp_a"), col("hb.source").as("grp_b"))
-        .agg(count(lit(1)).as("n_inter"))
-      sim
-        .join(inter, Seq("grp_a", "grp_b"), "left")
-        .join(sizes.as("za"), col("grp_a") === col("za.source"))
-        .join(sizes.as("zb"), col("grp_b") === col("zb.source"))
-        .select(col("grp_a"), col("grp_b"), col("n_agree"), col("est_r"),
-          coalesce(col("n_inter"), lit(0L)).cast("long").as("n_inter"),
-          (col("za.n") + col("zb.n") - coalesce(col("n_inter"), lit(0L)))
-            .cast("long").as("n_union"),
-          Corpus.ratioRound6(coalesce(col("n_inter"), lit(0L)),
-            col("za.n") + col("zb.n") - coalesce(col("n_inter"), lit(0L)))
-            .as("jac_r"))
-    }),
-
-    // North star: count-min-sketch frequency estimation — a (4×1024)-cell
-    // mergeable sketch (partial-aggregatable; the corpus never shuffles,
-    // only bucket partials do) with its one-sided error made visible:
-    // exact top-20 words joined against their CMS estimates.
-    "q113_cms_heavyhitters" -> ((s, d) =>
-      Corpus.cmsHeavyHitters(documents(s, d), "text", k = 20)),
-
-    // North star: incremental LM maintenance — the bigram model fit on two
-    // disjoint corpus slices and MERGED (sum pair counts, re-derive context
-    // totals) must equal the model refit on the whole corpus; the oracle IS
-    // the whole-corpus fit. One model-sized aggregate, no corpus refit.
-    "q114_incremental_lm" -> ((s, d) => {
-      val docs = documents(s, d)
-      val slices = Seq(docs.filter(col("doc_id") % 2 === 0),
-        docs.filter(col("doc_id") % 2 === 1))
-      val merged = Corpus.mergeBigramModels(slices.map(sl =>
-        Corpus.bigramModel(Corpus.docBigrams(sl, "doc_id", "text"))))
-      merged.filter(col("n") >= 5)
-        .select(col("w1"), col("w2"), col("n").cast("long").as("n"),
-          col("n_w1").cast("long").as("n_w1"),
-          Corpus.ratioRound6(col("n"), col("n_w1")).as("cond_r"))
-    }),
-
-    // North star: centrality over the near-dup similarity graph —
-    // deterministic integer PageRank (exact LONG rank units, floor-divided
-    // contributions) on the q29 LSH candidate pairs; the keeper-selection
-    // signal CC can't provide. Three edge-partitioned join+sum iterations
-    // over a checkpointed candidate-sized edge list.
-    "q115_pagerank" -> ((s, d) =>
-      graft.operators.Graph.integerPageRank(
-        Dedup.minhashCandidatesPortable(documents(s, d), "doc_id", "text"))
-        .select(col("id").as("doc_id"), col("d"), col("units"))),
-
-    // North star: PMI association mining — top-50 word pairs by pointwise
-    // mutual information in exact micro-bits; marginals and the corpus
-    // total all live on the vocab²-bounded pair table.
-    "q116_pmi_pairs" -> ((s, d) =>
-      Corpus.pmiTopPairs(documents(s, d), "doc_id", "text")),
-
-    // North star: passage-level duplication — pairs sharing >= 8 winnowed
-    // 16-char-gram fingerprints (a copied span inside otherwise-different
-    // documents, invisible to whole-doc MinHash). Boilerplate fingerprints
-    // are capped before the self-join; only (doc_id, 8-hex fp) rows shuffle.
-    "q119_shared_passages" -> ((s, d) =>
-      Dedup.sharedPassagePairs(documents(s, d), "doc_id", "text")),
-
-    // North star: Bloom-pre-pruned decontamination — keep documents whose
-    // content digest is NOT in a blocklist (here: digests of doc_id%37==0
-    // docs, standing in for an external bad-hash list). The corpus side is
-    // filtered by a broadcast Bloom blob inside whole-stage codegen; only
-    // might-contain candidates reach the exact anti-join, so false
-    // positives cost a shuffle row, never correctness.
-    "q120_bloom_blocklist" -> ((s, d) => {
-      val digested = documents(s, d).select(col("doc_id"),
-        TextFunctions.fingerprint(col("text")).as("digest"))
-      val block = digested.filter(col("doc_id") % 37 === 0).select(col("digest"))
-      Blocklist.bloomAntiJoin(digested, block, "digest")
-        .select(col("doc_id"), col("digest"))
-    }),
-
-    // North star: PPJoin-style prefix filtering — char-8-gram Jaccard ≥ 3/5
-    // pairs where each doc joins only on its rarest 2/5 of shingles, so the
-    // candidate join never touches hot shingles. Integer threshold math on
-    // both engines. Recall is exact up to the maxDocsPerTok skew cap (a
-    // pair is found iff it shares ≥1 sub-cap prefix shingle — see the
-    // prefixJaccardPairs docstring); the oracle mirrors the cap.
-    "q121_prefix_jaccard" -> ((s, d) =>
-      Dedup.prefixJaccardPairs(documents(s, d), "doc_id", "text")),
-
-    // Incremental-ingest primitive: snapshot diff between two corpus
-    // versions (v2 derived deterministically: %41 removed, %43 edited,
-    // %47 re-added under a shifted id) — added/removed/changed/unchanged
-    // per doc id; only (id, digest) rows ever shuffle.
-    "q122_corpus_diff" -> ((s, d) => {
-      val v1 = documents(s, d).select(col("doc_id"), col("text"))
-      val kept = v1.filter(col("doc_id") % 41 =!= 0)
-        .withColumn("text", when(col("doc_id") % 43 === 0,
-          concat(col("text"), lit(" v2"))).otherwise(col("text")))
-      val added = v1.filter(col("doc_id") % 47 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(col("text"), lit(" new")).as("text"))
-      Corpus.snapshotDiff(v1, kept.unionByName(added), "doc_id", "text")
-    }),
-
-    // Repetition signal (Gopher-style quality filter), fully under the
-    // oracle: the distinct-8gram ratio is the engine-portable proxy for
-    // compressibility (repetitive text has few distinct char 8-shingles).
-    // The deflate-ratio variant (functions.DeflateRatio) stays available —
-    // DEFLATE byte counts are a zlib implementation detail no SQL engine
-    // reproduces, so its behavior is locked by TextHashSpec instead of the
-    // driver compare. Threshold math is integer-only on both engines.
-    "q123_compression_signal" -> ((s, d) => {
-      val n = length(col("text")).cast("long")
-      documents(s, d).select(col("doc_id"),
-          n.as("n_chars"),
-          greatest(n - 7L, lit(1L)).as("n_grams"),
-          size(TextFunctions.charShingles(col("text"), 8))
-            .cast("long").as("n_distinct"))
-        .withColumn("is_repetitive",
-          col("n_distinct") * 10L < col("n_grams") * 3L)
-    }),
-
-    // Gopher repetition gate (Rae et al. 2021 table A1): top-{2,3,4}-gram
-    // and duplicated-{5,10}-gram char masses + keep verdict at the paper's
-    // thresholds, all exact integers. One compiled map-only pass per doc
-    // (functions.GopherRepetition), ZERO shuffle — vs the explode →
-    // groupBy(doc, n, gram) plan the oracle mirrors, which shuffles ~5×
-    // the corpus token count. q72's distinct-3gram ratio is the cheap
-    // cousin; this is the full multi-n gate used by real curation stacks.
-    "q143_gopher_gate" -> ((s, d) =>
-      Corpus.repetitionGate(documents(s, d), "doc_id", "text")),
-
-    // Per-source content novelty: distinct char-8-shingles per source,
-    // split into shared-with-other-sources vs unique — which sources ADD
-    // content vs re-serve it. One corpus-sized distinct, then per-shingle
-    // aggregates only; uniques come from (count=1, min source), never a
-    // corpus-sized join-back. hashed=false here so the oracle mirrors the
-    // exact strings; hashed=true is the 8-byte-key production posture.
-    "q144_source_novelty" -> ((s, d) =>
-      Corpus.sourceNovelty(documents(s, d), "source", "text")),
-
-    // S-family: ORC columnar round-trip (write zlib ORC, read back with a
-    // pushed-down predicate — PushedFilters asserted in ScaleSpec). ORC is
-    // the other lakehouse columnar format next to parquet; the oracle
-    // recomputes the same selection from the parquet base table, proving
-    // the ORC write+read is lossless for longs/doubles/timestamps.
-    "q145_orc_roundtrip" -> ((s, d) => {
-      // per-dataset and per-process scratch (see scratchDir): concurrent
-      // runs must not clobber each other's ORC output between the write
-      // and the timed read-back
-      val tmp = scratchDir("q145", d)
-      lineitem(s, d)
-        .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"),
-          col("l_shipdate"))
-        .write.mode("overwrite").option("compression", "zlib").orc(tmp)
-      s.read.orc(tmp).filter(col("l_quantity") >= 45.0)
-    }),
-
-    // Inverted index — the retrieval-side transpose of q64's tf-idf view:
-    // per term, df + corpus tf + top-3 postings by tf (doc-id tiebreak).
-    // One corpus pass, one term-keyed exchange, df/total/rank as three
-    // windows over the same partitioning — no self-join.
-    "q146_inverted_index" -> ((s, d) =>
-      Corpus.invertedIndex(documents(s, d), "doc_id", "text")),
-
-    // HTML → text extraction (the web-corpus step in front of every text
-    // operator here): script/style/comment/tag strip + one-level entity
-    // decode + whitespace collapse, all RE2-subset regexes so the oracle
-    // runs the byte-identical chain. Literal fixture (the synthetic
-    // documents table holds no markup), q75-style.
-    "q149_html_extract" -> ((s, d) => {
-      import s.implicits._
-      val rows = Seq(
-        1L -> """<html><head><title>T</title></head><body><p>Hello <b>world</b></p></body></html>""",
-        2L -> """<SCRIPT type="x">var a = "<p>not text</p>";</SCRIPT>After""",
-        3L -> """<style media=all>p > a {color:red}</style><div>styled</div>""",
-        4L -> """A &amp;amp; B&nbsp;&lt;tag&gt; &quot;q&quot; &#39;s&#39;""",
-        5L -> """<!-- hidden --><p class="big">kept</p><br/>""",
-        6L -> "no markup at   all")
-      rows.toDF("doc_id", "html").select(col("doc_id"),
-          TextFunctions.htmlToText(col("html")).as("text_out"))
-        .withColumn("n_chars", length(col("text_out")).cast("long"))
-    }),
-
-    // URL canonicalization — the crawl-dedup key (two URLs fetching the
-    // same resource must collapse BEFORE content hashing). Literal fixture
-    // (q75/q149 precedent); grouping by the canonical form demonstrates
-    // the dedup: 8 raw URLs → canonical groups with counts.
-    "q150_url_canonical" -> ((s, d) => {
-      import s.implicits._
-      val urls = Seq(
-        "HTTP://Example.COM:80/a/b/?utm_source=x&b=2&a=1#frag",
-        "http://example.com/a//b?a=1&b=2",
-        "https://Site.org:443//x//y/",
-        "https://site.org/x/y",
-        "https://site.org:8443/Keep/Case",
-        "http://host",
-        "https://host/?utm_campaign=z&gclid=123",
-        "https://host/")
-      urls.toDF("url")
-        .select(TextFunctions.canonicalUrl(col("url")).as("url_canon"))
-        .groupBy(col("url_canon"))
-        .agg(count(lit(1)).cast("long").as("n_raw"))
-    }),
-
-    // Large-dictionary masking: one trie pass per doc (vs K regex passes),
-    // leftmost-longest = RE2 with a length-desc alternation, so the masked
-    // text is proved byte-identical via md5. Overlapping terms (customer
-    // query ⊃ customer, hash join ⊃ hash) exercise longest-match.
-    "q124_dict_mask" -> ((s, d) => {
-      import org.apache.spark.sql.GraftBridge
-      val trie = new graft.functions.DictTrie(DictTerms, "<TERM>")
-      documents(s, d).select(col("doc_id"),
-          GraftBridge.column(graft.functions.DictScan(
-            GraftBridge.expression(col("text")), trie)).as("sc"))
-        .select(col("doc_id"), col("sc.n_hits").as("n_hits"),
-          md5(col("sc.masked")).as("masked_digest"))
-    }),
-
-    // Label prototypes: element-wise mean pooling of embeddings per label
-    // in exact integer micro-units — associative-exact under any partial-
-    // aggregation order, so distributed sums hash-match the oracle.
-    "q125_embedding_pool" -> ((s, d) =>
-      Similarity.meanPool(embeddings(s, d), "label", "embedding")),
-
-    // Deterministic integer random projection (64 -> 8 dims): stateless
-    // hash-free ± coefficients, exact micro-unit integer sums — map-only,
-    // zero shuffle, bit-identical on any engine. The cheap front end of
-    // the ANN stack (project, then bucket/index in the reduced space).
-    "q147_random_projection" -> ((s, d) =>
-      Similarity.randomProjection(embeddings(s, d), "vec_id", "embedding")),
-
-    // The whole curation flow in ONE declarative plan: near-dup candidates →
-    // clusters → best-weight keepers → leakage-safe split → per-split
-    // mixture report. Every stage is an already-verified operator; this
-    // pins that they COMPOSE (one Catalyst plan, no materialization
-    // between stages except the CC iteration's own checkpoints).
-    "q141_curation_pipeline" -> ((s, d) => {
-      val docs = documents(s, d)
-      val pairs = Dedup.minhashCandidatesPortable(docs, "doc_id", "text")
-      val clusters = Dedup.connectedComponents(docs, "doc_id", pairs)
-      val weights = docs.select(col("doc_id"),
-        TextFunctions.tokenCount(col("text")).as("n_tok"))
-      val keepers = Dedup.selectKeepers(
-        clusters.join(weights, "doc_id"), "doc_id", "n_tok")
-      Dedup.leakageSafeSplit(keepers, "cluster")
-        .groupBy(col("split"))
-        .agg(count(lit(1)).cast("long").as("n_docs"),
-          sum(col("keeper_weight")).cast("long").as("total_tokens"))
-    }),
-
-    // Recency sequence features: per-user last-5 event-type ids as fixed
-    // columns (alphabetical broadcast dictionary) — the model-input
-    // featurizer; window and aggregate share one user exchange.
-    "q194_sequence_features" -> ((s, d) =>
-      Transforms.sequenceFeatures(events(s, d), "user_id", "event_type",
-        "ts", "event_id", k = 5)),
-
-    // Fingerprint mergeability as a QUERY: fingerprint two disjoint
-    // halves, fold them, emit alongside the direct whole-table
-    // fingerprint — the rows must be identical (incremental maintenance
-    // of the q140 sketch, per-partition fold instead of full recompute).
-    "q193_fingerprint_merge" -> ((s, d) => {
-      val cols = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber")
-      val li = lineitem(s, d)
-      val even = li.filter(col("l_orderkey") % 2 === 0)
-      val odd = li.filter(col("l_orderkey") % 2 === 1)
-      val merged = graft.operators.Maintenance.mergeFingerprints(
-        graft.operators.Maintenance.tableFingerprint(even, cols),
-        graft.operators.Maintenance.tableFingerprint(odd, cols))
-      val direct = graft.operators.Maintenance.tableFingerprint(li, cols)
-      merged.select(lit("merged").as("method"), col("n_rows"),
-          col("lane_a"), col("lane_b"))
-        .unionByName(direct.select(lit("direct").as("method"),
-          col("n_rows"), col("lane_a"), col("lane_b")))
-    }),
-
-    // Bucketed co-located join as a QUERY: both fact tables written
-    // bucketBy(8) on the join key, then joined WITHOUT a join-side
-    // exchange (the 100 TB co-location strategy the ScaleSpec bucketing
-    // test proves; here it carries a driver-checked result too). The
-    // only shuffle in the plan is the final small groupBy.
-    "q192_bucketed_join" -> ((s, d) => {
-      val tok = datasetTok(d)
-      val tOrders = s"q192_orders_$tok"
-      val tItems = s"q192_items_$tok"
-      // idempotent re-run: drop catalog entries AND any orphaned warehouse
-      // dirs (a killed prior run leaves the location without metadata)
-      Seq(tOrders, tItems).foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir"))
-        val loc = java.nio.file.Paths.get(
-          Option(wh.getPath).getOrElse(wh.toString)).resolve(t)
-        if (java.nio.file.Files.exists(loc))
-          java.nio.file.Files.walk(loc)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      }
-      // r21 (guide §2.6): the two bucketed writes are independent jobs —
-      // overlap them so the second table's scan back-fills the first
-      // write's task tail. Same tables, same bucket layout, same join.
-      graft.operators.Overlap.runAll(Seq[() => Unit](
-        () => orders(s, d).select(col("o_orderkey"), col("o_orderpriority"))
-          .write.mode("overwrite").format("parquet")
-          .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-          .saveAsTable(tOrders),
-        () => lineitem(s, d).select(col("l_orderkey"), col("l_quantity"))
-          .write.mode("overwrite").format("parquet")
-          .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-          .saveAsTable(tItems)))
-      s.table(tOrders)
-        .join(s.table(tItems), col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).cast("long").as("n_items"),
-          sumc(col("l_quantity")).as("sum_qty"))
-    }),
-
-    // §2.8 depth — STREAMING OHLC bars: the q161 resample as a REAL
-    // AvailableNow streaming aggregation (complete mode). Ordered
-    // open/close come from min_by/max_by over the (ts, event_id) struct
-    // — aggregate functions the state store can fold incrementally,
-    // where window-function first/last would be unsupported in
-    // streaming. The oracle is q161's batch SQL: stream/batch parity is
-    // the assertion.
-    "q191_streaming_ohlc" -> ((s, d) => {
-      val tok = datasetTok(d)
-      val qname = s"q191_mem_$tok"
-      s.catalog.dropTempView(qname)
-      StreamingOps.withStreamConf(s) {
-        StreamingOps.runAvailableNow(
-            s, s"$d/events.parquet", qname, outputMode = "complete") { ev =>
-          val ord = struct(col("ts"), col("event_id"))
-          ev.filter(col("value").isNotNull)
-            .withColumn("day", to_date(col("ts")))
-            .withColumn("c", round(col("value") * 100).cast("long"))
-            .groupBy(col("event_type"), col("day"))
-            .agg(min_by(col("c"), ord).cast("long").as("open_c"),
-              max_by(col("c"), ord).cast("long").as("close_c"),
-              max(col("c")).cast("long").as("high_c"),
-              min(col("c")).cast("long").as("low_c"),
-              count(lit(1)).cast("long").as("n"),
-              sum(col("c")).cast("long").as("vol_c"))
-        }
-      }
-    }),
-
-    // North star: growth report — q185's lifetime table segmented at the
-    // data's anchor (churned / customer / prospect) and rolled up, all
-    // in ONE plan; proves the analytics family COMPOSES.
-    "q190_growth_report" -> ((s, d) => {
-      val lt = Transforms.userLifetime(events(s, d), "user_id", "ts",
-        "event_type", "value", "purchase")
-      val anchor = lt.agg(max(to_date(col("last_ts"))).as("anchor"))
-      lt.crossJoin(broadcast(anchor))
-        .withColumn("segment",
-          when(datediff(col("anchor"), to_date(col("last_ts"))) > 14,
-            "churned")
-            .when(col("revenue_c") >= 75000L, "vip")
-            .when(col("n_conversions") > 0L, "customer")
-            .otherwise("prospect"))
-        .groupBy(col("segment"))
-        .agg(count(lit(1)).cast("long").as("n_users"),
-          sum(col("revenue_c")).cast("long").as("revenue_c"),
-          sum(col("active_days")).cast("long").as("active_days"))
-        .withColumn("mean_active_r",
-          Corpus.ratioRound6(col("active_days"), col("n_users")))
-    }),
-
-    // Numeric distribution drift: first vs second half of the period on
-    // SHARED global bin edges, PSI contributions per bin.
-    "q188_numeric_drift" -> ((s, d) =>
-      graft.operators.Maintenance.numericDrift(events(s, d), "value", "ts",
-        bins = 10)),
-
-    // Lagged cross-correlation view→purchase at 7 days: signed r² from
-    // exact integer moments over calendar-paired daily counts.
-    "q189_lagged_corr" -> ((s, d) =>
-      Transforms.laggedCrossCorrelation(events(s, d), "event_type", "ts",
-        "view", "purchase", lagDays = 7)),
-
-    // Linear multi-touch attribution: equal split across the last 5
-    // in-horizon touches — q157's window, micro-unit credit quanta, no
-    // touch×conversion join.
-    "q186_linear_attribution" -> ((s, d) =>
-      Transforms.linearAttribution(events(s, d), "user_id", "event_type",
-        "ts", "event_id", "value", Seq("view", "click"), "purchase",
-        lookbackSeconds = 604800L, maxTouches = 5)),
-
-    // Churn snapshot: inactivity decay curve at the data's own anchor,
-    // exact shares, 14-day churn line.
-    "q187_churn_snapshot" -> ((s, d) =>
-      Transforms.churnSnapshot(events(s, d), "user_id", "ts", 14)),
-
-    // Winsorized summary of event values: exact-rank p1/p99 thresholds,
-    // clip counts, outlier-robust mean — all over the distinct-cents
-    // table.
-    "q183_winsorize" -> ((s, d) =>
-      graft.operators.Maintenance.winsorizedStats(events(s, d), "value",
-        pLow = 1, pHigh = 99)),
-
-    // Event-type co-occurrence: user-day baskets, within-basket pairs,
-    // support + lift — the (user, day)-keyed self-join with |types|²
-    // bounded fanout.
-    "q184_cooccurrence" -> ((s, d) =>
-      Transforms.typeCooccurrence(events(s, d), "user_id", "ts",
-        "event_type")),
-
-    // Per-user lifetime rollup: first/last/active-days/conversions/
-    // revenue in ONE map-side-combining aggregate.
-    "q185_user_lifetime" -> ((s, d) =>
-      Transforms.userLifetime(events(s, d), "user_id", "ts", "event_type",
-        "value", "purchase")),
-
-    // Reciprocal-rank fusion of two deterministic top-50 rankings
-    // (chars-desc and distinct-words-desc): micro-rounded reciprocals,
-    // exact fused order, absent-rank contributes nothing.
-    "q180_rrf_fusion" -> ((s, d) => {
-      val docs = documents(s, d)
-      val rankA = docs.select(col("doc_id"),
-        row_number().over(Window.orderBy(col("n_chars").desc,
-          col("doc_id"))).cast("long").as("rank"))
-        .filter(col("rank") <= 50)
-      val rankB = docs.filter(length(trim(col("text"))) > 0)
-        .select(col("doc_id"),
-          explode(split(trim(lower(col("text"))), "\\s+")).as("w"))
-        .groupBy(col("doc_id")).agg(countDistinct(col("w")).as("types"))
-        .select(col("doc_id"),
-          row_number().over(Window.orderBy(col("types").desc,
-            col("doc_id"))).cast("long").as("rank"))
-        .filter(col("rank") <= 50)
-      Corpus.rrfFuse(rankA, rankB, "doc_id", topK = 50)
-    }),
-
-    // Conditional next-event entropy per from-state: the q138 transition
-    // counts through the exact micro-bit entropy identity.
-    "q181_transition_entropy" -> ((s, d) =>
-      Transforms.transitionEntropy(events(s, d), "user_id", "event_type",
-        "ts", "event_id")),
-
-    // Fano-factor burstiness of daily counts per event type: exact
-    // integer moment identity, no windows.
-    "q182_fano" -> ((s, d) =>
-      Transforms.fanoBurstiness(events(s, d), "event_type", "ts")),
-
-    // Day-of-week seasonality index per event type (Monday=1 ISO
-    // numbering — the one stable across engines); ≤ types×7 cells.
-    "q177_dow_seasonality" -> ((s, d) =>
-      Transforms.dowSeasonality(events(s, d), "event_type", "ts")),
-
-    // Grid-cell density map over the synthetic customer points: 5-degree
-    // cells, exact shares, observed bounding boxes — the spatial GROUP BY
-    // that replaces point-level joins.
-    "q178_grid_density" -> ((s, d) =>
-      graft.operators.GeoJoin.gridDensity(custPoints(s, d), "lat", "lon",
-        5.0)),
-
-    // k-core peeling (k=2, 3 unrolled rounds) over the near-dup
-    // candidate graph: dense-community extraction with a bounded,
-    // oracle-unrollable plan.
-    "q179_kcore" -> ((s, d) =>
-      graft.operators.Graph.kCorePeel(
-        Dedup.minhashCandidatesPortable(documents(s, d), "doc_id", "text"),
-        k = 2, rounds = 3)),
-
-    // Token-mass Gini over documents: grouped-data identity, exact
-    // integer moments, one doc-table sort.
-    "q174_gini" -> ((s, d) =>
-      Corpus.giniConcentration(documents(s, d), "doc_id", "text")),
-
-    // Zipf-law fit: slope of log2(freq) vs log2(rank) over the vocab
-    // table — micro-bit axes, decimal moment sums, one row out.
-    "q175_zipf_fit" -> ((s, d) => Corpus.zipfFit(documents(s, d), "text")),
-
-    // Cross-source near-dup leakage matrix over the q29 candidates:
-    // which source pairs share duplicated content, with exact shares.
-    "q176_leakage_matrix" -> ((s, d) => {
-      val docs = documents(s, d)
-      Dedup.crossGroupPairMatrix(
-        Dedup.minhashCandidatesPortable(docs, "doc_id", "text"),
-        docs, "doc_id", "source")
-    }),
-
-    // Column completeness/cardinality profile (Deequ-style): one pruned
-    // single-column aggregate per column, unioned — never a multi-
-    // distinct row expansion.
-    "q171_column_profile" -> ((s, d) =>
-      graft.operators.Maintenance.columnProfile(events(s, d),
-        Seq("event_id", "ts", "user_id", "event_type", "value", "props"))),
-
-    // Rolling 7-day active users: DAU/WAU/stickiness via W× explode of
-    // the DISTINCT (day, user) table — no sliding-window distinct state.
-    "q172_rolling_active" -> ((s, d) =>
-      Transforms.rollingActiveUsers(events(s, d), "user_id", "ts", 7)),
-
-    // Inter-event gap profile: per-user consecutive gaps in exponential
-    // buckets (pure integer comparisons, no floor(log2) hazard).
-    "q173_gap_profile" -> ((s, d) =>
-      Transforms.interEventGaps(events(s, d), "user_id", "ts", "event_id",
-        20)),
-
-    // Vocabulary coverage curve: top-100 words by frequency with
-    // cumulative token share — the tokenizer-design query; both windows
-    // sort the vocab table only.
-    "q168_vocab_coverage" -> ((s, d) =>
-      Corpus.vocabCoverage(documents(s, d), "text", topK = 100)),
-
-    // Week-over-week deltas per event type: calendar equi-join against
-    // day−7 (honest NULL when no prior week, unlike a lag-7 row window).
-    "q169_wow_delta" -> ((s, d) =>
-      Transforms.weekOverWeek(events(s, d), "event_type", "ts", "value")),
-
-    // Per-source quality scorecard: exact shares of docs passing the
-    // English / Flesch≥60 / ≥50-words gates — map-side indicators, ONE
-    // hash aggregate, no per-gate subquery joins.
-    "q170_source_scorecard" -> ((s, d) =>
-      Corpus.sourceScorecard(documents(s, d), "source", "text", "lang",
-        "n_chars")),
-
-    // Clickstream path mining: each user's first-3-events path with
-    // exact frequency shares — one user-keyed window + aggregate on a
-    // shared exchange, alphabet-bounded path table.
-    "q167_path_mining" -> ((s, d) =>
-      Transforms.pathMining(events(s, d), "user_id", "event_type", "ts",
-        "event_id", k = 3)),
-
-    // Calibration curve over the q158 score: equi-depth score deciles
-    // with exact per-bucket positive rates — the reliability diagram
-    // that tells you whether the score's ranking is trustworthy.
-    "q165_calibration" -> ((s, d) => {
-      val e = embeddings(s, d)
-      graft.serving.ModelScoring.calibrationCurve(e,
-        Similarity.intProjection(col("embedding"), 0),
-        (col("label") >= 5).cast("long"), 10)
-    }),
-
-    // Flesch reading-ease per document: integer regex counts (vowel-group
-    // syllable proxy, [.!?]+ sentences floored at 1), per-term half-up
-    // micro rounding — map-only, zero shuffle.
-    "q166_readability" -> ((s, d) =>
-      Corpus.readability(documents(s, d), "doc_id", "text")),
-
-    // Pairwise Jensen-Shannon divergence between source unigram
-    // distributions — bounded symmetric drift measure; inner word join +
-    // closed-form private-mass remainder, exact 0 for identical inputs.
-    "q164_js_divergence" -> ((s, d) =>
-      Corpus.jsDivergence(documents(s, d), "source", "text")),
-
-    // Equi-depth histogram of event values: quantile buckets from the
-    // strictly-below cumulative over the distinct-value table — the
-    // profiling twin of q156's equi-width bins.
-    "q163_equidepth" -> ((s, d) =>
-      graft.operators.Maintenance.equiDepthHistogram(events(s, d), "value",
-        16)),
-
-    // Benford first-digit profile of event values: integer-cents string
-    // head (no log10 float hazard), observed vs log10(1+1/d) shares —
-    // map-only extraction, ≤9-row aggregate.
-    "q162_benford" -> ((s, d) =>
-      graft.operators.Maintenance.benfordProfile(events(s, d), "value")),
-
-    // OHLC daily bars per event type: first/last in strict (ts, id)
-    // order + min/max/count/sum cents — per-bucket window and the bar
-    // aggregate share ONE (key, day) shuffle.
-    "q161_ohlc_bars" -> ((s, d) =>
-      Transforms.ohlcBars(events(s, d), "event_type", "ts", "event_id",
-        "value")),
-
-    // Chi-squared contingency profile lang × source: per-cell counts,
-    // marginals, and the integer-exact (N·O−R·C)²/(N·R·C) contribution —
-    // corpus collapses to the cell table before any window touches it.
-    "q160_chi_square" -> ((s, d) =>
-      graft.operators.Maintenance.chiSquareCells(
-        documents(s, d), "lang", "source")),
-
-    // Per-group OLS trend: closed-form slope of value-cents vs hours-
-    // since-anchor from four exact integer moment sums — one broadcast
-    // anchor + one map-side-combining aggregate, no windows.
-    "q159_ols_trend" -> ((s, d) =>
-      Transforms.olsTrend(events(s, d), "event_type", "ts", "value")),
-
-    // Exact ROC AUC — Mann-Whitney rank-sum over the DISTINCT-score
-    // aggregate (ties count half, all-integer until one exact rounding).
-    // Score = the deterministic integer projection p0; labels binarized
-    // at >= 5. The sort touches |distinct scores| rows, never the corpus.
-    "q158_roc_auc" -> ((s, d) => {
-      val e = embeddings(s, d)
-      graft.serving.ModelScoring.rocAuc(e,
-        Similarity.intProjection(col("embedding"), 0),
-        (col("label") >= 5).cast("long"))
-    }),
-
-    // Last-touch attribution: each purchase credited to the user's most
-    // recent view/click within 7 days, else 'direct' — one user-keyed
-    // window, no touch×conversion self-join.
-    "q157_attribution" -> ((s, d) =>
-      Transforms.lastTouchAttribution(events(s, d), "user_id", "event_type",
-        "ts", "event_id", "value", Seq("view", "click"), "purchase",
-        lookbackSeconds = 604800L)),
-
-    // Profiling depth — exact equi-width histogram of event values:
-    // integer-cent binning ((c-min)*B DIV (max-min+1)), observed per-bin
-    // extremes, cents-exact per-bin sums. Two column scans + one ≤B-key
-    // exchange; the load-time distribution-drift gate.
-    "q156_histogram" -> ((s, d) =>
-      graft.operators.Maintenance.equiWidthHistogram(events(s, d), "value", 16)),
-
-    // Order-independent table fingerprint — migration/replication equality
-    // without sorting either side: two 60-bit row-hash lanes, exact sums
-    // reduced mod 2^61 so the output is plain int64s on every engine.
-    "q140_table_fingerprint" -> ((s, d) =>
-      graft.operators.Maintenance.tableFingerprint(lineitem(s, d),
-        Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber"))),
-
-    // Triangle participation in the near-dup candidate graph — cluster
-    // cohesion (cliques are safe to dedup on transitivity; chains aren't).
-    "q139_triangles" -> ((s, d) =>
-      graft.operators.Graph.triangleCounts(
-        Dedup.minhashCandidatesPortable(documents(s, d), "doc_id", "text"))
-        .select(col("id").as("doc_id"), col("triangles"))),
-
-    // Cohort retention: first-activity-day cohorts × day offsets, exact
-    // integer retention shares.
-    "q137_cohort_retention" -> ((s, d) =>
-      Transforms.cohortRetention(events(s, d), "user_id", "ts")),
-
-    // First-order Markov transition matrix over per-user clickstreams;
-    // one bounded per-user window, type²-bounded aggregate.
-    "q138_event_transitions" -> ((s, d) =>
-      Transforms.eventTransitions(events(s, d), "user_id", "event_type",
-        "ts", "event_id")),
-
-    // Time-decayed per-type event aggregates, 7-day half-life — recency-
-    // weighted features with per-event micro-unit rounding before the sum.
-    "q136_time_decay" -> ((s, d) =>
-      Transforms.timeDecayedAgg(events(s, d), "event_type", "ts", "value",
-        halfLifeSeconds = 604800L)),
-
-    // Ordered conversion funnel view → click → purchase: strict event-order
-    // semantics, one user-keyed aggregate per stage, no windows.
-    "q135_funnel" -> ((s, d) =>
-      Transforms.funnel(events(s, d), "user_id", "event_type", "ts",
-        Seq("view", "click", "purchase"))),
-
-    // Shuffle-key skew diagnostic over the natural join key: per-key count
-    // distribution (exact percentiles), hottest-key share — what bounds a
-    // join's parallelism at 100 TB.
-    "q134_skew_profile" -> ((s, d) =>
-      Transforms.skewProfile(lineitem(s, d), col("l_orderkey"))),
-
-    // North star: temperature-rebalanced mixture (τ=2, XLM-R style) — 250
-    // docs drawn with quotas ∝ sqrt(n_lang) via integer largest-remainder
-    // apportionment and md5-rank member selection.
-    "q133_temperature_mix" -> ((s, d) =>
-      Corpus.temperatureRebalance(documents(s, d), "lang", "doc_id",
-        totalOut = 250L, temperature = 2)),
-
-    // North star: Unicode canonicalization — case + accent folding as a
-    // native expression, proven on an accent-heavy literal fixture (the
-    // synthetic corpus is ASCII); folded keys collapse 'Café'/'cafe' for
-    // dedup/joins. Exactly strip_accents(nfc_normalize(lower(x))) in the
-    // oracle.
-    "q132_unicode_fold" -> ((s, d) => {
-      import s.implicits._
-      val rows = Seq(
-        (1L, "Café crème"), (2L, "cafe creme"), (3L, "NAÏVE approach"),
-        (4L, "naive approach"), (5L, "ÅNGSTRÖM units"), (6L, "señor São Paulo"),
-        (7L, "ße öl stays ß"), (8L, "plain ascii text"))
-        .toDF("id", "raw")
-      rows.select(col("id"),
-          graft.functions.UnicodeOps.foldCol(col("raw")).as("folded"))
-        .withColumn("fold_key", md5(col("folded")))
-    }),
-
-    // North star: distribution-drift monitor (PSI per language) between two
-    // deterministic corpus halves — the pre-training check that a new crawl
-    // hasn't shifted the language mixture.
-    "q131_psi_drift" -> ((s, d) => {
-      val docs = documents(s, d)
-      Corpus.distributionDrift(
-        docs.filter(col("doc_id") % 2 === 0),
-        docs.filter(col("doc_id") % 2 === 1), "lang")
-    }),
-
-    // North star: CDC MERGE — replay a changelog (latest-per-id upserts +
-    // deletes + inserts) onto the corpus snapshot; the inverse of q122's
-    // diff. The changelog is derived deterministically from the corpus so
-    // both engines construct the identical log.
-    "q130_changelog_apply" -> ((s, d) => {
-      val docs = documents(s, d).select(col("doc_id"), col("text"))
-      val del = docs.filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), lit(1L).as("seq"), lit("delete").as("op"),
-          lit(null).cast("string").as("text"))
-      val up1 = docs.filter(col("doc_id") % 10 === 1)
-        .select(col("doc_id"), lit(1L).as("seq"), lit("upsert").as("op"),
-          concat(col("text"), lit(" rev one")).as("text"))
-      val up2 = docs.filter(col("doc_id") % 10 === 1)
-        .select(col("doc_id"), lit(2L).as("seq"), lit("upsert").as("op"),
-          concat(col("text"), lit(" rev two")).as("text"))
-      val ins = docs.filter(col("doc_id") % 100 === 2)
-        .select((col("doc_id") + 1000000L).as("doc_id"), lit(1L).as("seq"),
-          lit("upsert").as("op"),
-          concat(lit("fresh insert "), col("doc_id")).as("text"))
-      val log = del.unionByName(up1).unionByName(up2).unionByName(ins)
-      Corpus.changelogApply(docs, log, "doc_id", "seq", "op")
-    }),
-
-    // North star: line-level dedup (CCNet-style REWRITE, not just a
-    // measurement) — corpus-hot lines dropped, survivors reassembled in
-    // order. The synthetic corpus has no line structure, so the operator is
-    // proven on a literal multi-line fixture (the q75 pattern): shared
-    // boilerplate lines around distinct bodies, one all-boilerplate doc.
-    "q129_line_dedup" -> ((s, d) => {
-      import s.implicits._
-      val docs = Seq(
-        (1L, "welcome to example news\nstoryline one body text\nall rights reserved"),
-        (2L, "welcome to example news\nanother unique article body\nall rights reserved"),
-        (3L, "welcome to example news\nall rights reserved"),
-        (4L, "a fully original document\nwith nothing shared at all"),
-        (5L, "subscribe to the newsletter\nunique closing thought"),
-        (6L, "subscribe to the newsletter\nanother standalone body line"))
-        .toDF("doc_id", "text")
-      Dedup.lineDedup(docs, "doc_id", "text", minDocs = 2)
-    }),
-
-    // North star: contrastive hard-negative mining — per anchor, the k most
-    // similar candidates that are NOT near-dups (lattice-LSH positives
-    // excluded symmetrically). Anchors broadcast; salted two-phase top-k.
-    "q128_hard_negatives" -> ((s, d) =>
-      Similarity.hardNegatives(embeddings(s, d), "vec_id", "embedding",
-        anchorIds = Seq(0L, 1L, 2L, 3L, 4L), k = 5,
-        bits = 4, minSim = 0.35,
-        signature = Similarity.hyperplaneSignatureLattice)),
-
-    // North star: DSIR importance weights — per-doc target-vs-corpus unigram
-    // log-likelihood ratio in exact micro-bits; target slice = English docs.
-    // One model aggregate fits both LMs, totals broadcast, no windows.
-    "q127_dsir_weights" -> ((s, d) =>
-      Corpus.importanceWeights(documents(s, d), "doc_id", "text",
-        col("lang") === "en")),
-
-    // North star: leakage-safe splitting — near-dup clusters (q63's CC over
-    // portable MinHash pairs) each land whole in train/val/test via an
-    // md5-hex-range bucket of the cluster label. Narrow map after the
-    // cluster step; no per-doc RNG, no shuffle.
-    "q126_leakage_split" -> ((s, d) => {
-      val docs = documents(s, d)
-      val pairs = Dedup.minhashCandidatesPortable(docs, "doc_id", "text")
-      val clusters = Dedup.connectedComponents(docs, "doc_id", pairs)
-      Dedup.leakageSafeSplit(clusters)
-        .select(col("doc_id"), col("cluster").cast("long").as("cluster"),
-          col("split"))
-    }),
-
-    // North star: weight-proportional reproducible sampling (A-ES) — the
-    // mixture-construction primitive; md5-seeded keys, one shuffle, map-
-    // side WindowGroupLimit top-k. Longer documents are proportionally
-    // likelier to be drawn.
-    "q118_weighted_sample" -> ((s, d) =>
-      Corpus.weightedSample(documents(s, d), "source", "doc_id",
-        col("n_chars"), k = 5)),
-
-    // Robust per-group outlier statistics: median + MAD (both exact
-    // interpolated percentiles, rounded to 6dp BEFORE reuse so both engines
-    // thresholded with identical doubles), outlier count at the standard
-    // 3σ-equivalent 3·1.4826·MAD fence.
-    "q117_mad_outliers" -> ((s, d) => {
-      val ev = events(s, d)
-      val med = ev.groupBy(col("event_type"))
-        .agg(round(expr("percentile(value, 0.5D)"), 6).as("med_r"))
-      val stats = ev.join(broadcast(med), "event_type")
-        .groupBy(col("event_type"))
-        .agg(first(col("med_r")).as("med_r"),
-          round(expr("percentile(abs(value - med_r), 0.5D)"), 6).as("mad_r"),
-          count(lit(1)).as("n"))
-      ev.join(broadcast(stats), "event_type")
-        .groupBy(col("event_type"), col("med_r"), col("mad_r"), col("n"))
-        .agg(sum(when(abs(col("value") - col("med_r")) >
-          lit(4.4478) * col("mad_r"), 1L).otherwise(0L)).as("n_outlier"))
-        .select(col("event_type"), col("med_r"), col("mad_r"),
-          col("n").cast("long").as("n"),
-          col("n_outlier").cast("long").as("n_outlier"))
-    }),
-
-    // ANN QUALITY as a query (VERDICT r8 item 8): recall@10 of the two
-    // deterministic approximate rankings — int8 symmetric quantization
-    // (q65 family: integer dot replaces double cosine) and lattice-LSH
-    // bucket restriction (q32 family: candidates limited to the query's
-    // 8-bit hyperplane bucket) — against the exact brute-force cosine
-    // top-10, for 10 query vectors. Both approximations are exact integer
-    // arithmetic, so DuckDB reproduces the approximate sets and the
-    // recall column is computed exactly ((hits in top-10)/10). The IVF
-    // path (q83) stays exactness-configured: KMeans centroids aren't
-    // SQL-reproducible. Scale: queries broadcast, one n×10 scored pass,
-    // per-qid windows — never all-pairs over the corpus.
-    "q195_ann_recall" -> ((s, d) => {
-      val k = 10
-      val e = embeddings(s, d)
-      val vd = Similarity.toDoubleArray(col("embedding"))
-      val scale = lit(127.0) / array_max(transform(vd, x => abs(x)))
-      val base = e.select(col("vec_id"), col("embedding"),
-        transform(vd, x => round(x * scale).cast("long")).as("iv"),
-        Similarity.hyperplaneSignatureLattice(col("embedding"), 8)
-          .as("bucket"))
-      val qs = base.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-          col("iv").as("qv"), col("bucket").as("qbucket"))
-      val pairs = base.crossJoin(broadcast(qs))
-        .select(col("qid"), col("vec_id"), col("bucket"), col("qbucket"),
-          Similarity.cosine(col("embedding"), col("qe")).as("sim"),
-          aggregate(zip_with(col("iv"), col("qv"), (a, b) => a * b),
-            lit(0L), (acc, x) => acc + x).as("qdot"))
-      def topK(df: DataFrame, order: Seq[Column]) = df.withColumn("rnk",
-          row_number().over(Window.partitionBy(col("qid")).orderBy(order: _*)))
-        .filter(col("rnk") <= k).select(col("qid"), col("vec_id"))
-      val exactTop = topK(pairs, Seq(col("sim").desc, col("vec_id").asc))
-      val int8Top = topK(pairs, Seq(col("qdot").desc, col("vec_id").asc))
-      val lshTop = topK(pairs.filter(col("bucket") === col("qbucket")),
-        Seq(col("sim").desc, col("vec_id").asc))
-      def recallOf(approx: DataFrame, m: String) = qs.select(col("qid"))
-        .join(exactTop.join(approx, Seq("qid", "vec_id"))
-            .groupBy(col("qid")).agg(count(lit(1)).as("h")),
-          Seq("qid"), "left")
-        .select(col("qid").cast("long").as("qid"), lit(m).as("method"),
-          coalesce(col("h"), lit(0L)).cast("long").as("n_hit"),
-          (coalesce(col("h"), lit(0L)) / lit(k.toDouble)).as("recall"))
-      recallOf(int8Top, "int8").unionByName(recallOf(lshTop, "lsh"))
-    }),
-
-    // Exact duplicated-span REMOVAL (ExactSubstr rewrite, word-aligned):
-    // 5-word grams shared by ≥2 docs mark their covered tokens; docs are
-    // rewritten without them. The rewrite arm the detection-only passage
-    // operators (q119 winnowing, q95 boilerplate measure) were missing.
-    "q196_span_removal" -> ((s, d) =>
-      Dedup.duplicatedSpanRemoval(documents(s, d), "doc_id", "text",
-        gramN = 5, minDocs = 2)),
-
-    // Sequence-packing layout: concat-and-cut every 256 tokens per source,
-    // each doc reported with its pack span + straddle count (the packing
-    // job's attention-mask accounting). Per-source prefix sum — one
-    // exchange, O(1)-state window. Terminal orderBy (r10): outputs are
-    // ≤5k rows and the driver's hash proved order-sensitive in r9 even
-    // though sorted-row content was judge-verified exact at both SFs —
-    // a deterministic produced order removes the last degree of freedom.
-    "q197_sequence_packing" -> ((s, d) =>
-      Corpus.sequencePacking(documents(s, d), "source", "doc_id", "text",
-        seqLen = 256).orderBy(col("source"), col("doc_id"))),
-
-    // Water-filling mixture solve: per-source token caps, weight = numeric
-    // source suffix + 1 (deterministic unequal weights), budget = half the
-    // corpus tokens. Saturated sources take capacity; the shortfall
-    // redistributes in weight proportion (exact integer membership test,
-    // one-divide allocation).
-    "q198_waterfill" -> ((s, d) => {
-      val caps = documents(s, d)
-        .groupBy(col("source"))
-        .agg(sum(Corpus.wordsCount(col("text"))).as("cap"))
-        .withColumn("w",
-          (regexp_extract(col("source"), "(\\d+)$", 1).cast("long") + 1L)
-            .as("w"))
-      val budget = caps.agg((sum(col("cap")) / 2L).cast("long").as("budget"))
-      val withB = caps.crossJoin(broadcast(budget))
-      Corpus.waterfillAllocation(withB, "source", "cap", "w", "budget")
-        .select(col("source"), col("cap").cast("long").as("cap"),
-          col("w").cast("long").as("w"), col("is_saturated"),
-          col("alloc"))
-    }),
-
-    // Retrieval-quality metrics for the approximate ranking (q195's
-    // companion): per query vector, MRR and nDCG@10 of the int8-quantized
-    // ranking, with relevance = membership in the exact cosine top-10.
-    // IDCG is the fixed all-relevant prefix sum, so nDCG is comparable
-    // across queries; transcendental outputs rounded to 6dp (house rule).
-    "q199_ranking_quality" -> ((s, d) => {
-      val k = 10
-      val e = embeddings(s, d)
-      val vd = Similarity.toDoubleArray(col("embedding"))
-      val scale = lit(127.0) / array_max(transform(vd, x => abs(x)))
-      val base = e.select(col("vec_id"), col("embedding"),
-        transform(vd, x => round(x * scale).cast("long")).as("iv"))
-      val qs = base.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-          col("iv").as("qv"))
-      val pairs = base.crossJoin(broadcast(qs))
-        .select(col("qid"), col("vec_id"),
-          Similarity.cosine(col("embedding"), col("qe")).as("sim"),
-          aggregate(zip_with(col("iv"), col("qv"), (a, b) => a * b),
-            lit(0L), (acc, x) => acc + x).as("qdot"))
-      val exactTop = pairs.withColumn("rnk",
-          row_number().over(Window.partitionBy(col("qid"))
-            .orderBy(col("sim").desc, col("vec_id").asc)))
-        .filter(col("rnk") <= k).select(col("qid"), col("vec_id"))
-      val ranked = pairs.withColumn("pos",
-          row_number().over(Window.partitionBy(col("qid"))
-            .orderBy(col("qdot").desc, col("vec_id").asc)))
-        .filter(col("pos") <= k)
-        .join(exactTop.withColumn("rel", lit(1L)), Seq("qid", "vec_id"),
-          "left")
-        .withColumn("rel", coalesce(col("rel"), lit(0L)))
-      // DCG in FIXED term order (q66 bm25 precedent): per-position terms
-      // rel_i · c_i with Scala-computed constants c_i = 1/log2(i+1) added
-      // left-to-right — no aggregation-order nondeterminism, and the SQL
-      // oracle embeds the SAME double constants (shortest round-trip repr,
-      // parsed back to identical bits).
-      val dcgExpr = ndcgConsts.zipWithIndex.map { case (c, i) =>
-        max(when(col("pos") === (i + 1), col("rel"))).cast("double") * lit(c)
-      }.reduce(_ + _)
-      ranked.groupBy(col("qid"))
-        .agg(
-          coalesce(min(when(col("rel") === 1L, col("pos"))), lit(0))
-            .cast("long").as("first_rel_pos"),
-          round(coalesce(max(when(col("rel") === 1L,
-              lit(1.0) / col("pos").cast("double"))), lit(0.0)), 6).as("mrr"),
-          round(dcgExpr / lit(ndcgConsts.sum), 6).as("ndcg"))
-        .select(col("qid").cast("long").as("qid"), col("first_rel_pos"),
-          col("mrr"), col("ndcg"))
-    }),
-
-    // Curation v2 — ONE plan composing the round-9 operators: duplicated-
-    // span removal rewrites the corpus, a post-rewrite quality gate drops
-    // docs left with < 10 surviving tokens (boilerplate shells), and the
-    // survivors get their sequence-packing layout on the CLEANED token
-    // stream. The composition is the point: the rewrite feeds the gate
-    // feeds the layout without materializing between stages.
-    "q200_curation_v2" -> ((s, d) => {
-      val cleaned = Dedup.duplicatedSpanRemoval(documents(s, d), "doc_id",
-          "text", gramN = 5, minDocs = 2)
-        .filter(col("n_tokens") - col("n_dropped") >= 10)
-        // the layout needs the CLEANED token count, not the rewritten
-        // string — selecting only the count lets Catalyst prune the
-        // text_clean concat out of the plan entirely
-        .select(col("doc_id"),
-          (col("n_tokens") - col("n_dropped")).as("n_tokens"))
-      val src = documents(s, d).select(col("doc_id"), col("source"))
-      val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      cleaned.join(src, "doc_id")
-        .withColumn("start_off",
-          coalesce(sum(col("n_tokens")).over(w), lit(0L)))
-        .select(col("source"), col("doc_id"), col("n_tokens"),
-          col("start_off"),
-          expr("start_off DIV 256").as("pack_first"),
-          expr("(start_off + n_tokens - 1) DIV 256").as("pack_last"),
-          (expr("(start_off + n_tokens - 1) DIV 256") -
-            expr("start_off DIV 256") + 1L).as("n_packs"))
-        // deterministic produced order — see q197's r10 note
-        .orderBy(col("source"), col("doc_id"))
-    }),
-
-    // Directional as-of (pandas merge_asof parity): every event matched to
-    // its NEAREST same-user purchase within a 6h tolerance — backward wins
-    // ties. Same one-exchange union+carry plan as q44's backward as-of.
-    "q201_asof_directional" -> ((s, d) => {
-      val ev = events(s, d)
-      val left = ev.select(col("event_id"), col("user_id"), col("ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("value").as("pval"))
-      Transforms.asofJoinDirectional(left, purchases, "user_id", "ts",
-          Seq("pval"), direction = "nearest", toleranceSeconds = 21600L)
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("asof_ts"), col("pval"))
-    }),
-
-    // Character-level edit-distance-1 join WITHOUT a blocking key (q49's
-    // scalable complement): customer-name pairs via the exact deletion-
-    // neighborhood scheme (SymSpell) — no frequency caps, no recall loss.
-    "q202_editdist_join" -> ((s, d) =>
-      Dedup.editDistanceJoin(customer(s, d), "c_custkey", "c_name")),
-
-    // Incremental JOIN maintenance — the materialized-view delta algebra:
-    // with base/delta splits L = L0 ∪ ΔL, R = R0 ∪ ΔR, the join of the
-    // full inputs equals J0 ∪ (ΔL⋈R0) ∪ (L0⋈ΔR) ∪ (ΔL⋈ΔR). The query
-    // computes the union-of-four-joins form; the ORACLE computes the
-    // direct join of the unioned inputs — an independent derivation, not
-    // a mirror, so the compare proves the maintenance identity itself.
-    // At scale this is how a 100 TB join view absorbs a day's delta
-    // without re-joining history: three small joins instead of one
-    // full-history one.
-    "q204_join_maintenance" -> ((s, d) => {
-      val o = orders(s, d).select(col("o_orderkey"), col("o_orderpriority"))
-      val l = lineitem(s, d).select(col("l_orderkey"),
-        col("l_extendedprice"), col("l_quantity"))
-      val o0 = o.filter(col("o_orderkey") % 10 < 8)
-      val dO = o.filter(col("o_orderkey") % 10 >= 8)
-      val l0 = l.filter(col("l_orderkey") % 7 < 5)
-      val dL = l.filter(col("l_orderkey") % 7 >= 5)
-      def j(a: DataFrame, b: DataFrame) =
-        a.join(b, col("o_orderkey") === col("l_orderkey"))
-      val inc = j(o0, l0).unionByName(j(dO, l0))
-        .unionByName(j(o0, dL)).unionByName(j(dO, dL))
-      inc.groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).cast("long").as("n"),
-          sumd(col("l_extendedprice")).as("revenue"),
-          sum(col("l_quantity").cast("long")).as("qty"))
-    }),
-
-    // Cross-table referential-integrity report (q68's single-table
-    // sibling): orphan-FK counts across the star schema via anti-joins —
-    // the distributed shape of a constraint checker (parents broadcast
-    // when small, shuffle otherwise; only counts move to the driver).
-    // The current corpus is fully intact (all five relations 0 orphans,
-    // including events.user_id→customer) — the report derives that
-    // rather than assuming it, and flags drift on regeneration.
-    "q205_fk_integrity" -> ((s, d) => {
-      def rel(name: String, child: DataFrame, fk: String, parent: DataFrame,
-          pk: String) = {
-        val orphans = child.filter(col(fk).isNotNull)
-          .join(parent.select(col(pk)), col(fk) === col(pk), "left_anti")
-          .agg(count(lit(1)).as("n_orphan"))
-        child.agg(count(lit(1)).as("n_child"),
-            sum(when(col(fk).isNull, 1L).otherwise(0L)).as("n_null_fk"))
-          .crossJoin(orphans)
-          .select(lit(name).as("relation"), col("n_child").cast("long"),
-            col("n_null_fk").cast("long"), col("n_orphan").cast("long"))
-      }
-      rel("lineitem.orderkey->orders", lineitem(s, d), "l_orderkey",
-          orders(s, d), "o_orderkey")
-        .unionByName(rel("orders.custkey->customer", orders(s, d),
-          "o_custkey", customer(s, d), "c_custkey"))
-        .unionByName(rel("customer.nationkey->nation", customer(s, d),
-          "c_nationkey", nation(s, d), "n_nationkey"))
-        .unionByName(rel("supplier.nationkey->nation", supplier(s, d),
-          "s_nationkey", nation(s, d), "n_nationkey"))
-        .unionByName(rel("events.user_id->customer", events(s, d),
-          "user_id", customer(s, d), "c_custkey"))
-    }),
-
-    // STL-lite daily decomposition (q177's DOW index taken to the full
-    // classical decomposition): per day, trend = centered 7-day moving
-    // average, seasonal = DOW mean minus overall mean, residual = the
-    // rest — each a single divide (or divide-difference in fixed order)
-    // over exact integer window sums, so doubles are bit-equal
-    // cross-engine. Scale-safe by construction: the windows run over the
-    // DAILY AGGREGATE (bounded by calendar days), never event rows.
-    "q215_stl_decompose" -> ((s, d) => {
-      val daily = events(s, d)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-      val wT = Window.orderBy(col("day")).rowsBetween(-3, 3)
-      val wAll = Window.orderBy(col("day")).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)
-      val trend = col("trend_sum").cast("double") /
-        col("trend_cnt").cast("double")
-      val seasonal = col("dow_sum").cast("double") /
-        col("dow_cnt").cast("double") -
-        col("tot_sum").cast("double") / col("tot_cnt").cast("double")
-      daily
-        .withColumn("dow", (weekday(col("day")) + lit(1)).cast("long"))
-        .withColumn("trend_sum", sum(col("n")).over(wT))
-        .withColumn("trend_cnt", count(lit(1)).over(wT))
-        .withColumn("dow_sum",
-          sum(col("n")).over(Window.partitionBy(col("dow"))))
-        .withColumn("dow_cnt",
-          count(lit(1)).over(Window.partitionBy(col("dow"))))
-        .withColumn("tot_sum", sum(col("n")).over(wAll))
-        .withColumn("tot_cnt", count(lit(1)).over(wAll))
-        .select(col("day"), col("dow"), col("n").cast("long").as("n"),
-          round(trend, 6).as("trend_r"),
-          round(seasonal, 6).as("seasonal_r"),
-          round(col("n").cast("double") - trend - seasonal, 6)
-            .as("residual_r"))
-    }),
-
-    // Residual anomaly days — q215's decomposition closed into an
-    // actionable detector with q117's robust fence: a day is anomalous
-    // when its residual sits more than 3σ-equivalent (4.4478·MAD) from
-    // the residual median. Medians are exact interpolated percentiles
-    // rounded to 6dp BEFORE reuse (q117 pattern) so both engines
-    // threshold with identical doubles.
-    "q216_residual_anomalies" -> ((s, d) => {
-      val daily = events(s, d)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-      val wT = Window.orderBy(col("day")).rowsBetween(-3, 3)
-      val wAll = Window.orderBy(col("day")).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)
-      val trend = col("trend_sum").cast("double") /
-        col("trend_cnt").cast("double")
-      val seasonal = col("dow_sum").cast("double") /
-        col("dow_cnt").cast("double") -
-        col("tot_sum").cast("double") / col("tot_cnt").cast("double")
-      val resid = daily
-        .withColumn("dow", (weekday(col("day")) + lit(1)).cast("long"))
-        .withColumn("trend_sum", sum(col("n")).over(wT))
-        .withColumn("trend_cnt", count(lit(1)).over(wT))
-        .withColumn("dow_sum",
-          sum(col("n")).over(Window.partitionBy(col("dow"))))
-        .withColumn("dow_cnt",
-          count(lit(1)).over(Window.partitionBy(col("dow"))))
-        .withColumn("tot_sum", sum(col("n")).over(wAll))
-        .withColumn("tot_cnt", count(lit(1)).over(wAll))
-        .select(col("day"), col("n").cast("long").as("n"),
-          (col("n").cast("double") - trend - seasonal).as("resid"))
-      val med = resid.agg(
-        round(expr("percentile(resid, 0.5D)"), 6).as("med_r"))
-      val stats = resid.crossJoin(broadcast(med))
-        .agg(first(col("med_r")).as("med_r"),
-          round(expr("percentile(abs(resid - med_r), 0.5D)"), 6).as("mad_r"))
-      resid.crossJoin(broadcast(stats))
-        .select(col("day"), col("n"), round(col("resid"), 6).as("resid_r"),
-          col("med_r"), col("mad_r"),
-          (abs(col("resid") - col("med_r")) >
-            lit(4.4478) * col("mad_r")).as("is_anomaly"))
-    }),
-
-    // Pairwise dimension covariance screen (q206's bivariate sibling):
-    // for every dim pair j1 < j2, exact micro-unit sums (n, Σx1, Σx2,
-    // Σx1·x2) — the redundant-feature / dead-correlation screen run
-    // before PCA or feature pruning. Integer sums are order-independent
-    // and engine-exact; consumers derive cov/corr. The self-join is
-    // keyed on vec_id with |dims|² fanout per row — never row×row.
-    "q214_dim_covariance" -> ((s, d) => {
-      val ex = embeddings(s, d).select(col("vec_id"),
-        posexplode(transform(Similarity.toDoubleArray(col("embedding")),
-          x => round(x * lit(1000000.0)).cast("long"))).as(Seq("j", "xm")))
-      ex.as("a").join(ex.as("b"),
-          col("a.vec_id") === col("b.vec_id") && col("a.j") < col("b.j"))
-        .groupBy(col("a.j").as("j1"), col("b.j").as("j2"))
-        .agg(count(lit(1)).cast("long").as("n"),
-          sum(col("a.xm")).cast("long").as("sum1_micro"),
-          sum(col("b.xm")).cast("long").as("sum2_micro"),
-          sum(col("a.xm") * col("b.xm")).cast("long").as("sum12_micro2"))
-        .select(col("j1").cast("long").as("j1"),
-          col("j2").cast("long").as("j2"), col("n"),
-          col("sum1_micro"), col("sum2_micro"), col("sum12_micro2"))
-    }),
-
-    // The COMPLETE 47-rule POI categorizer (`PGSITE/__init__.py:144-281`)
-    // under the oracle: every part row gets a probe (name, type) pair
-    // cycling through one probe per reference rule + the no-match default,
-    // then the full last-writer-wins chain categorizes over BOTH columns.
-    // The oracle SQL is GENERATED from the same rule table
-    // (reversed-order first-match-wins CASE), so rule data cannot drift
-    // between the two sides. One codegen'd projection, no shuffle.
-    "q217_poi_categorize_full" -> ((s, d) => {
-      import graft.pipelines.SiteScoringPipeline
-      val probes = SiteScoringPipeline.ruleProbes
-      val n = probes.size
-      val names = array(probes.map(p => lit(p._1)): _*)
-      val types = array(probes.map(p => lit(p._2)): _*)
-      val idx = (col("p_partkey") % n).cast("int") + 1
-      part(s, d).select(col("p_partkey"),
-          element_at(names, idx).as("poi_name"),
-          element_at(types, idx).as("poi_type"))
-        .withColumn("poi_category", SiteScoringPipeline.categorizePoi(
-          col("poi_name"), col("poi_type")))
-    }),
-
-    // The reference's SERVING path end to end as ONE plan
-    // (`HTIPNEXSITE/__init__.py:133-375`): site → nearby-POI set (broadcast
-    // theta-join + per-site top-20, the q18/J3 shape) → 47-rule categorize
-    // → pivoted per-category feature vector → model score (broadcast
-    // per-category weight fold over the PIVOTED columns — the sklearn
-    // stand-in kept linear so the oracle derives the same score
-    // INDEPENDENTLY from the long form, proving pivot+fold end to end)
-    // → top-3 close points as ranked columns. Sites are every 97th
-    // customer; POIs are the suppliers wearing the rule-probe names.
-    // One broadcast join, one window, one pivot — no corpus shuffle.
-    "q218_serving_path" -> ((s, d) => {
-      import graft.pipelines.SiteScoringPipeline
-      val probes = SiteScoringPipeline.ruleProbes
-      val np = probes.size
-      val names = array(probes.map(p => lit(p._1)): _*)
-      val types = array(probes.map(p => lit(p._2)): _*)
-      val pidx = (col("s_suppkey") % np).cast("int") + 1
-      val sites = custPoints(s, d).filter(col("c_custkey") % 97 === 0)
-        .select(col("c_custkey").as("rst_cd"), col("lat"), col("lon"))
-      val pois = suppPoints(s, d).select(col("s_suppkey"),
-        element_at(names, pidx).as("poi_name"),
-        element_at(types, pidx).as("poi_type"),
-        col("s_lat"), col("s_lon"))
-      val w = Window.partitionBy(col("rst_cd"))
-        .orderBy(col("dist").asc, col("s_suppkey").asc)
-      val nearby = sites.crossJoin(broadcast(pois))
-        .withColumn("dist", GeoFunctions.haversineMeters(
-          col("lat"), col("lon"), col("s_lat"), col("s_lon")))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 20)
-        .withColumn("poi_category", SiteScoringPipeline.categorizePoi(
-          col("poi_name"), col("poi_type")))
-      val cats = (SiteScoringPipeline.fullRules.map(_._3).distinct :+
-        SiteScoringPipeline.defaultCategory)
-      val piv = nearby.groupBy(col("rst_cd"))
-        .pivot("poi_category", cats).agg(count(lit(1)))
-        .na.fill(0L, cats)
-      val score = cats.map(c => col(c) * lit((c.length % 7) + 1L))
-        .reduce(_ + _)
-      val top3 = nearby.groupBy(col("rst_cd")).agg(
-        count(lit(1)).cast("long").as("n_pois"),
-        max(when(col("rk") === 1, col("s_suppkey"))).cast("long").as("pos1_id"),
-        round(max(when(col("rk") === 1, col("dist"))), 1).as("pos1_m"),
-        max(when(col("rk") === 2, col("s_suppkey"))).cast("long").as("pos2_id"),
-        round(max(when(col("rk") === 2, col("dist"))), 1).as("pos2_m"),
-        max(when(col("rk") === 3, col("s_suppkey"))).cast("long").as("pos3_id"),
-        round(max(when(col("rk") === 3, col("dist"))), 1).as("pos3_m"))
-      piv.select(col("rst_cd"), score.cast("long").as("score"))
-        .join(top3, "rst_cd")
-        .orderBy(col("rst_cd"))
-    }),
-
-    // Dup-cluster SIZE histogram — how duplicate mass is structured:
-    // many 2-doc pairs dedup cheaply, one giant boilerplate cluster is a
-    // different problem (transitivity over-merge risk, q139's cohesion
-    // concern). Composition: q63's clusters → size rollup → histogram;
-    // exact integer shares of docs captured per cluster size.
-    "q243_cluster_size_histogram" -> ((s, d) => {
-      val docs = documents(s, d)
-      val clusters = Dedup.connectedComponents(docs, "doc_id",
-        Dedup.minhashCandidatesPortable(docs, "doc_id", "text"))
-      val sizes = clusters.groupBy(col("cluster"))
-        .agg(count(lit(1)).as("sz"))
-      val tot = sizes.agg(sum(col("sz")).as("n_docs"))
-      sizes.groupBy(col("sz").cast("long").as("cluster_size"))
-        .agg(count(lit(1)).cast("long").as("n_clusters"))
-        .crossJoin(broadcast(tot))
-        .select(col("cluster_size"), col("n_clusters"),
-          (col("cluster_size") * col("n_clusters")).cast("long")
-            .as("n_docs_at_size"),
-          Corpus.ratioRound6(col("cluster_size") * col("n_clusters"),
-            col("n_docs")).as("doc_share_r"))
-    }),
-
-    // Per-source embedding CENTROID similarity matrix — corpus
-    // cartography: mean-pool each source's vectors (q125's pool), then
-    // pairwise cosine over the |sources|-bounded centroid table — which
-    // sources say the same thing in embedding space (merge candidates /
-    // mixture redundancy), never touching row×row vectors.
-    "q244_source_centroid_matrix" -> ((s, d) => {
-      // embeddings carry no source; derive a deterministic 8-way source
-      // id from vec_id (the corpus-sharding convention). Per-dimension
-      // sums are EXACT micro-unit longs (q65/q206 lane pattern) so
-      // partial-aggregation order cannot perturb the centroids; the one
-      // double division per pair uses identical operands on both engines.
-      val e = embeddings(s, d).select(
-        (col("vec_id") % 8).cast("long").as("src"),
-        transform(Similarity.toDoubleArray(col("embedding")),
-          x => round(x * lit(1000000.0)).cast("long")).as("v"))
-      val dim = e.select(size(col("v")).as("n")).head().getInt(0)
-      val lanes = (0 until dim).map(j =>
-        sum(element_at(col("v"), j + 1)).as(s"s$j"))
-      val cent = e.groupBy(col("src")).agg(lanes.head, lanes.tail: _*)
-      // DECIMAL(38,0) lanes for the pairwise reduction: a long lane
-      // product crosses Long.MaxValue at ~100x this vector count
-      // (worst term ~6e17 at sf0.1); decimal keeps the dot/norm EXACT
-      // (max ~6e20 << 1e38) and mirrors the oracle's HUGEINT sum, so
-      // both engines round to double exactly once, at the end.
-      val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-      val dot = (0 until dim).map(j =>
-        col(s"a.s$j").cast(d38) * col(s"b.s$j")).reduce(_ + _)
-      def nrm(p: String) = sqrt((0 until dim).map(j =>
-        col(s"$p.s$j").cast(d38) * col(s"$p.s$j")).reduce(_ + _)
-        .cast("double"))
-      // RAW double output (no 6dp round): the operands are exact integer
-      // lanes, so both engines compute the identical IEEE double — while
-      // the two engines' round(x, 6) implementations can disagree by one
-      // ulp at a decimal boundary (observed on one pair at sf0.01)
-      cent.as("a").join(cent.as("b"), col("a.src") < col("b.src"))
-        .select(col("a.src").as("src_a"), col("b.src").as("src_b"),
-          (dot.cast("double") / (nrm("a") * nrm("b"))).as("cos"))
-    }),
-
-    // Join-cardinality identity — the statistic a cost-based optimizer
-    // lives on, PROVEN: |A ⋈_k B| == Σ_k na_k·nb_k, where the right side
-    // comes only from the two per-key COUNT tables (what ANALYZE
-    // collects), never from executing the join. The query computes both
-    // sides independently (the oracle repeats both independently again);
-    // equality shows per-key histograms predict equi-join size exactly —
-    // and why a hot key's na·nb term is the skew bomb q225 defuses.
-    "q241_join_cardinality" -> ((s, d) => {
-      val la = orders(s, d).groupBy(col("o_orderkey").as("k"))
-        .agg(count(lit(1)).as("na"))
-      val lb = lineitem(s, d).groupBy(col("l_orderkey").as("k"))
-        .agg(count(lit(1)).as("nb"))
-      val est = la.join(lb, "k")
-        .agg(sum(col("na") * col("nb")).cast("long").as("n"))
-        .select(lit("histogram_product").as("method"), col("n"))
-      val actual = orders(s, d).select(col("o_orderkey"))
-        .join(lineitem(s, d).select(col("l_orderkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .agg(count(lit(1)).cast("long").as("n"))
-        .select(lit("actual_join").as("method"), col("n"))
-      est.unionByName(actual)
-    }),
-
-    // Near-dup MINUS exact-dup delta — what the LSH pass adds beyond
-    // fingerprint dedup: candidate near-dup pairs partitioned into
-    // same-fingerprint (exact dups the cheap pass already catches) vs
-    // genuinely-near (the reason to pay for MinHash at all). One-row
-    // integer report.
-    "q242_near_vs_exact" -> ((s, d) => {
-      val docs = documents(s, d)
-      val fp = docs.select(col("doc_id"),
-        TextFunctions.fingerprint(col("text")).as("h"))
-      val pairs = Dedup.minhashCandidatesPortable(docs, "doc_id", "text")
-        .join(fp.select(col("doc_id").as("id_a"), col("h").as("ha")), "id_a")
-        .join(fp.select(col("doc_id").as("id_b"), col("h").as("hb")), "id_b")
-      pairs.agg(count(lit(1)).cast("long").as("n_near_pairs"),
-          sum(when(col("ha") === col("hb"), 1L).otherwise(0L)).cast("long")
-            .as("n_exact"),
-          sum(when(col("ha") =!= col("hb"), 1L).otherwise(0L)).cast("long")
-            .as("n_genuinely_near"))
-        .withColumn("near_only_share_r", Corpus.ratioRound6(
-          col("n_genuinely_near"), col("n_near_pairs")))
-    }),
-
-    // Exact-dedup ROI summary — the one-row answer to "what does the
-    // dedup pass buy us": corpus docs/tokens, surviving keeper
-    // docs/tokens (min-id per normalized-text fingerprint), and the
-    // removed token share. The number that justifies (or kills) a
-    // pipeline stage at 100 TB.
-    "q240_dedup_impact" -> ((s, d) => {
-      val docs = documents(s, d).select(col("doc_id"),
-        Corpus.wordsCount(col("text")).as("tok"),
-        TextFunctions.fingerprint(col("text")).as("h"))
-      docs.withColumn("rk", row_number().over(
-          Window.partitionBy(col("h")).orderBy(col("doc_id"))))
-        .agg(count(lit(1)).cast("long").as("n_docs"),
-          sum(col("tok")).cast("long").as("tokens"),
-          sum(when(col("rk") === 1, 1L).otherwise(0L)).cast("long")
-            .as("n_kept"),
-          sum(when(col("rk") === 1, col("tok")).otherwise(0L)).cast("long")
-            .as("tokens_kept"))
-        .withColumn("removed_share_r", Corpus.ratioRound6(
-          col("tokens") - col("tokens_kept"), col("tokens")))
-    }),
-
-    // Bot-rate session gate — the crawl/abuse filter a clickstream feeds
-    // through before analytics: q35's gap sessionization, then a flag for
-    // sessions sustaining > 6 events/minute, tested cross-multiplied in
-    // exact integers (n·60s > dur·6 — no float rate, no div-by-zero on
-    // single-event sessions). One user exchange shared by the lag window
-    // and the session rollup.
-    "q239_bot_rate_gate" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      events(s, d)
-        .withColumn("prev", lag(col("ts"), 1).over(w))
-        .withColumn("flag",
-          when(col("prev").isNull ||
-            unix_micros(col("ts")) - unix_micros(col("prev")) > 300000000L, 1)
-            .otherwise(0))
-        .withColumn("session_id", sum(col("flag")).over(run).cast("long"))
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(count(lit(1)).cast("long").as("n"),
-          expr("(max(unix_micros(ts)) - min(unix_micros(ts))) DIV 1000000")
-            .cast("long").as("dur_s"))
-        // single/short sessions can't establish a RATE — require volume
-        .withColumn("is_bot",
-          col("n") >= 10L && col("n") * 60L > col("dur_s") * 6L)
-    }),
-
-    // Percent-of-parent hierarchy report over the region → nation →
-    // customer → orders chain (the BI drill-down shape; the only query
-    // family the region dimension anchors): per nation, revenue share of
-    // its region and of the world, exact integer-cents shares. Both dims
-    // broadcast; one fact exchange for the nation rollup.
-    "q238_hierarchy_shares" -> ((s, d) => {
-      val rev = orders(s, d).select(col("o_custkey"),
-          cents(col("o_totalprice")).as("c"))
-        .join(customer(s, d).select(col("c_custkey").as("o_custkey"),
-          col("c_nationkey")), "o_custkey")
-        .groupBy(col("c_nationkey")).agg(sum(col("c")).as("nc"))
-      val dims = nation(s, d)
-        .select(col("n_nationkey").as("c_nationkey"), col("n_name"),
-          col("n_regionkey"))
-        .join(region(s, d).select(col("r_regionkey").as("n_regionkey"),
-          col("r_name")), "n_regionkey")
-      val wReg = Window.partitionBy(col("r_name"))
-      val wAll = Window.partitionBy()
-      rev.join(broadcast(dims), "c_nationkey")
-        .withColumn("rc", sum(col("nc")).over(wReg))
-        .withColumn("tc", sum(col("nc")).over(wAll))
-        .select(col("r_name"), col("n_name"),
-          (col("nc").cast("double") / 100).as("nation_rev"),
-          Corpus.ratioRound6(col("nc"), col("rc")).as("of_region_r"),
-          Corpus.ratioRound6(col("nc"), col("tc")).as("of_world_r"))
-    }),
-
-    // Largest-remainder (Hamilton) apportionment — exact-integer quota
-    // allocation: distribute a fixed sample budget across sources in
-    // proportion to token mass such that Σ alloc == budget EXACTLY
-    // (proportional rounding breaks this; floor + largest-fractional-
-    // remainder repair fixes it deterministically). remainder comparison
-    // is pure integers (w·B mod T), tiebreak on source — no floats
-    // anywhere. The quota solver behind every fixed-size stratified
-    // sample this engine draws.
-    "q237_apportionment" -> ((s, d) => {
-      val budget = 10000L
-      val w = documents(s, d).groupBy(col("source"))
-        .agg(sum(Corpus.wordsCount(col("text"))).as("w"))
-      val tot = w.agg(sum(col("w")).as("t"))
-      val base = w.crossJoin(broadcast(tot))
-        .select(col("source"), col("w").cast("long").as("w"),
-          col("t").cast("long").as("t"),
-          expr(s"(w * ${budget}L) DIV t").as("fl"),
-          expr(s"(w * ${budget}L) % t").as("rem"))
-      val deficit = base.agg((lit(budget) - sum(col("fl"))).as("k"))
-      base.crossJoin(broadcast(deficit))
-        .withColumn("rk", row_number().over(
-          Window.orderBy(col("rem").desc, col("source").asc)))
-        .select(col("source"), col("w"),
-          (col("fl") + when(col("rk") <= col("k"), 1L).otherwise(0L))
-            .cast("long").as("alloc"))
-    }),
-
-    // LSH band-sensitivity SWEEP — the tuning curve behind q235's single
-    // operating point: the same 16 minhash lanes banded as 2×8, 4×4, and
-    // 8×2 produce monotonically more candidates (and recall) as bands
-    // shrink; per configuration the exact candidate count and recall
-    // against the q235 ground truth. How an operator picks the
-    // bands/rows trade before a 100 TB dedup run.
-    "q236_lsh_band_sweep" -> ((s, d) => {
-      val docs = documents(s, d).filter(col("doc_id") % 10 === 0)
-      val sh = docs.filter(length(trim(col("text"))) > 0)
-        .select(col("doc_id"), explode(array_distinct(
-          graft.functions.ShingleOps.wordShinglesCol(col("text"), 3)))
-          .as("s"))
-      val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val truth = sh.as("a")
-        .join(sh.as("b"), col("a.s") === col("b.s") &&
-          col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-        .agg(count(lit(1)).as("ni"))
-        .join(sizes.select(col("doc_id").as("d1"), col("n").as("n1")), "d1")
-        .join(sizes.select(col("doc_id").as("d2"), col("n").as("n2")), "d2")
-        .filter(col("ni") * 2 >= col("n1") + col("n2") - col("ni"))
-        .select(col("d1"), col("d2"))
-        .localCheckpoint() // consumed by all three sweep arms
-      Seq(2, 4, 8).map { b =>
-        val cand = Dedup.minhashCandidatesPortable(docs, "doc_id", "text",
-          bands = b).select(col("id_a"), col("id_b"))
-        val hit = cand.join(truth,
-          col("id_a") === col("d1") && col("id_b") === col("d2"))
-        cand.agg(count(lit(1)).as("n_cand"))
-          .crossJoin(truth.agg(count(lit(1)).as("n_true")))
-          .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
-          .select(lit(b.toLong).as("bands"),
-            col("n_cand").cast("long").as("n_cand"),
-            col("n_true").cast("long").as("n_true"),
-            col("n_hit").cast("long").as("n_hit"),
-            when(col("n_true") > 0,
-              Corpus.ratioRound6(col("n_hit"), col("n_true")))
-              .otherwise(lit(null).cast("double")).as("recall_r"))
-      }.reduce(_ unionByName _)
-    }),
-
-    // LSH candidate QUALITY report (the q195/q199 measurement posture for
-    // MinHash): on a deterministic doc subset, exact word-3-gram Jaccard
-    // ≥ 1/2 (integer cross-multiplied — no float threshold) is the ground
-    // truth; the oracle-portable MinHash LSH candidates are scored
-    // against it with exact precision/recall counts. The number a dedup
-    // pipeline must publish before anyone trusts its near-dup pass.
-    "q235_lsh_quality" -> ((s, d) => {
-      val docs = documents(s, d).filter(col("doc_id") % 10 === 0)
-      val cand = Dedup.minhashCandidatesPortable(docs, "doc_id", "text")
-        .select(col("id_a"), col("id_b"))
-      val sh = docs.filter(length(trim(col("text"))) > 0)
-        .select(col("doc_id"), explode(array_distinct(
-          graft.functions.ShingleOps.wordShinglesCol(col("text"), 3)))
-          .as("s"))
-      val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val inter = sh.as("a")
-        .join(sh.as("b"), col("a.s") === col("b.s") &&
-          col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-        .agg(count(lit(1)).as("ni"))
-      val truth = inter
-        .join(sizes.select(col("doc_id").as("d1"), col("n").as("n1")), "d1")
-        .join(sizes.select(col("doc_id").as("d2"), col("n").as("n2")), "d2")
-        .filter(col("ni") * 2 >= col("n1") + col("n2") - col("ni"))
-        .select(col("d1"), col("d2"))
-      val hit = cand.join(truth,
-        col("id_a") === col("d1") && col("id_b") === col("d2"))
-      cand.agg(count(lit(1)).as("n_cand"))
-        .crossJoin(truth.agg(count(lit(1)).as("n_true")))
-        .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
-        .select(col("n_cand").cast("long").as("n_cand"),
-          col("n_true").cast("long").as("n_true"),
-          col("n_hit").cast("long").as("n_hit"),
-          when(col("n_cand") > 0,
-            Corpus.ratioRound6(col("n_hit"), col("n_cand")))
-            .otherwise(lit(null).cast("double")).as("precision_r"),
-          when(col("n_true") > 0,
-            Corpus.ratioRound6(col("n_hit"), col("n_true")))
-            .otherwise(lit(null).cast("double")).as("recall_r"))
-    }),
-
-    // Repeated-PASSAGE detection over CDC chunk runs — the scalable
-    // approximation of suffix-array exact-substring dedup: two documents
-    // sharing K CONSECUTIVE content-defined chunks share one contiguous
-    // passage spanning them (chunk boundaries are content-anchored, so a
-    // shared passage yields aligned chunk runs regardless of position).
-    // Shared chunks join on hash (dfreq-capped, never all-pairs); runs
-    // are diagonal groups (d1, d2, j1−j2) segmented by the classic
-    // j − row_number trick. Reports pairs with a run ≥ 2 chunks.
-    "q234_repeated_chunk_runs" -> ((s, d) => {
-      val ch = documents(s, d).filter(length(trim(col("text"))) > 0)
-        .select(col("doc_id"), posexplode(graft.functions.CdcOps
-          .cdcChunksCol(col("text"), 8, 64)).as(Seq("j", "c")))
-        .select(col("doc_id"), col("j").cast("long").as("j"),
-          md5(col("c")).as("ch"))
-      val capped = ch.groupBy(col("ch"))
-        .agg(count(lit(1)).as("n"), countDistinct(col("doc_id")).as("nd"))
-        .filter(col("n") <= 20 && col("nd") >= 2).select("ch")
-      val cIn = ch.join(capped, "ch")
-      val p = cIn.select(col("ch"), col("doc_id").as("d1"), col("j").as("j1"))
-        .join(cIn.select(col("ch"), col("doc_id").as("d2"),
-          col("j").as("j2")), "ch")
-        .filter(col("d1") < col("d2"))
-        .select("d1", "d2", "j1", "j2").distinct()
-      val r = p.withColumn("diag", col("j1") - col("j2"))
-        .withColumn("rn", row_number().over(Window
-          .partitionBy(col("d1"), col("d2"), col("diag"))
-          .orderBy(col("j1"))))
-        .withColumn("grp", col("j1") - col("rn"))
-      val runs = r.groupBy(col("d1"), col("d2"), col("diag"), col("grp"))
-        .agg(count(lit(1)).as("len"))
-        .groupBy(col("d1"), col("d2")).agg(max(col("len")).as("max_run"))
-      val shared = p.groupBy(col("d1"), col("d2"))
-        .agg(countDistinct(col("j1")).as("n_shared"))
-      runs.join(shared, Seq("d1", "d2")).filter(col("max_run") >= 2)
-        .select(col("d1").cast("long").as("d1"),
-          col("d2").cast("long").as("d2"),
-          col("max_run").cast("long").as("max_run"),
-          col("n_shared").cast("long").as("n_shared"))
-    }),
-
-    // Entity resolution end to end — the MDM "golden record" build:
-    // blocked candidate pairs gated by Jaro-Winkler ≥ 0.9375 (15/16,
-    // EXACTLY representable in binary, so the threshold compare cannot
-    // straddle an ulp on either engine), transitive closure into
-    // identity clusters, then one canonical record per cluster (most
-    // frequent name, lexicographic tiebreak). The oracle rebuilds the
-    // whole chain independently: DuckDB's own jaro_winkler + a recursive
-    // CTE closure.
-    "q233_golden_record" -> ((s, d) => {
-      val p = part(s, d).filter(col("p_partkey") % 4 === 0)
-        .select(col("p_partkey"), col("p_name"),
-          split(col("p_name"), " ").getItem(0).as("blk"))
-      val pairs = p.as("a").join(p.as("b"), col("a.blk") === col("b.blk") &&
-          col("a.p_partkey") < col("b.p_partkey"))
-        .filter(graft.functions.JaroWinklerOps.jaroWinklerCol(
-          col("a.p_name"), col("b.p_name")) >= 0.9375)
-        .select(col("a.p_partkey").as("id_a"), col("b.p_partkey").as("id_b"))
-      val clusters = Dedup.connectedComponents(
-        p.select(col("p_partkey")), "p_partkey", pairs)
-      val m = clusters
-        .join(p.select(col("p_partkey"), col("p_name")), "p_partkey")
-      val freq = m.groupBy(col("cluster"), col("p_name"))
-        .agg(count(lit(1)).as("cnt"))
-      val w = Window.partitionBy(col("cluster"))
-        .orderBy(col("cnt").desc, col("p_name").asc)
-      val golden = freq.withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select(col("cluster"), col("p_name").as("golden_name"))
-      m.groupBy(col("cluster"))
-        .agg(count(lit(1)).cast("long").as("n_members"),
-          countDistinct(col("p_name")).cast("long").as("n_names"))
-        .join(golden, "cluster")
-        .select(col("cluster").cast("long").as("cluster"),
-          col("golden_name"), col("n_members"), col("n_names"))
-    }),
-
-    // Point-in-polygon containment (geofencing — the spatial predicate the
-    // geo family lacked): a convex CCW polygon membership test as the
-    // conjunction of per-edge cross-product signs. Identical double
-    // arithmetic on both engines (same operands, same order), so the
-    // boundary is bit-deterministic; the polygon is literal DATA shared
-    // with the generated oracle. Map-only until a 10-key aggregate.
-    "q232_point_in_polygon" -> ((s, d) => {
-      val inside = polyEdges.map { case ((x1, y1), (x2, y2)) =>
-        (lit(x2 - x1) * (col("lat") - lit(y1)) -
-          lit(y2 - y1) * (col("lon") - lit(x1))) >= 0
-      }.reduce(_ && _)
-      custPoints(s, d)
-        .groupBy((col("c_custkey") % 10).cast("long").as("grp"))
-        .agg(count(lit(1)).cast("long").as("n"),
-          sum(when(inside, 1L).otherwise(0L)).cast("long").as("n_inside"))
-        .withColumn("inside_share_r",
-          Corpus.ratioRound6(col("n_inside"), col("n")))
-    }),
-
-    // Aggregate maintenance under RETRACTIONS (q204's sibling for deletes):
-    // a maintained SUM/COUNT absorbs a retraction batch as NEGATIVE deltas
-    // — maintained = full-history agg + (−1)·retracted agg — while the
-    // ORACLE computes the direct agg over surviving rows only. Equality
-    // proves the retraction algebra (the streaming/update-mode and
-    // changelog-fold foundation): a 100 TB maintained view subtracts the
-    // day's deletes instead of re-aggregating history. Exact integer/
-    // decimal lanes so +/− cancellation is lossless.
-    "q231_agg_retraction" -> ((s, d) => {
-      val li = lineitem(s, d).select(col("l_returnflag"), col("l_quantity"),
-        col("l_extendedprice"), col("l_linenumber"))
-      val retracted = li.filter(col("l_linenumber") === 7)
-      def agg(df: DataFrame, sign: Long) = df.groupBy(col("l_returnflag"))
-        .agg((count(lit(1)) * sign).as("n"),
-          (sum(cents(col("l_quantity"))) * sign).as("q100"),
-          (sum(dec(col("l_extendedprice"))) * sign).as("p"))
-      agg(li, 1L).unionByName(agg(retracted, -1L))
-        .groupBy(col("l_returnflag"))
-        .agg(sum(col("n")).cast("long").as("n"),
-          (sum(col("q100")) / 100).cast("double").as("sum_qty"),
-          sum(col("p")).cast("double").as("sum_price"))
-    }),
-
-    // §2.8 depth — stream-stream LEFT OUTER join: the semantics q148's
-    // inner join cannot show. Matches emit eagerly; an UNMATCHED view can
-    // only emit its null row once the watermark proves no purchase can
-    // still arrive for it (vts + 30min band fully behind the final
-    // watermark) — and views younger than that are discarded unemitted at
-    // AvailableNow shutdown. The oracle derives the identical set: all
-    // banded matches UNION the null rows for watermark-closed unmatched
-    // views. This is the outer-join state-eviction contract a 100 TB
-    // attribution stream relies on, proven against an independent batch
-    // derivation.
-    "q230_streaming_outer_join" -> ((s, d) => {
-      val tok = datasetTok(d)
-      val qname = s"q230_mem_$tok"
-      s.catalog.dropTempView(qname)
-      val streamed =
-        StreamingOps.withStreamConf(s) {
-          StreamingOps.runAvailableNow(
-              s, s"$d/events.parquet", qname) { ev =>
-            val v = ev.filter(col("event_type") === "view")
-              .select(col("event_id").as("v_event_id"),
-                col("user_id").as("v_user"), col("ts").as("vts"))
-              .withWatermark("vts", "2 hours")
-            val c = ev.filter(col("event_type") === "purchase")
-              .select(col("event_id").as("c_event_id"),
-                col("user_id").as("c_user"), col("ts").as("cts"))
-              .withWatermark("cts", "2 hours")
-            v.join(c, col("v_user") === col("c_user") &&
-                col("cts") >= col("vts") &&
-                col("cts") <= col("vts") + expr("INTERVAL 30 MINUTES"),
-                "leftOuter")
-              .select(col("v_user").as("user_id"), col("v_event_id"),
-                col("c_event_id"),
-                (unix_micros(col("cts")) - unix_micros(col("vts")))
-                  .as("delta_us"))
-          }
-        }
-      // Spark's EXACT outer-eviction boundary is an internal detail
-      // (observed between wm−60m and wm−45m on this corpus — conservative
-      // beyond the wm−30m the join condition implies). Report the
-      // boundary-ROBUST subset both derivations agree on: every match,
-      // plus null rows whose whole band is ≥2h behind the final watermark
-      // (wm − 2h30m on vts — comfortably inside anything Spark evicts).
-      // Every reported row is a real streaming emission.
-      val mx = events(s, d).agg(max(col("ts"))).head().getTimestamp(0)
-      val safe = new java.sql.Timestamp(
-        mx.getTime - (2L * 3600 + 1800 + 2L * 3600) * 1000)
-      val vtsMap = events(s, d)
-        .select(col("event_id").as("v_event_id"), col("ts").as("vts"))
-      streamed.join(vtsMap, "v_event_id")
-        .filter(col("c_event_id").isNotNull || col("vts") < lit(safe))
-        .select(col("user_id"), col("v_event_id"), col("c_event_id"),
-          col("delta_us"))
-    }),
-
-    // Exact WEIGHTED percentiles — "the price level at which a quarter /
-    // half / three quarters of the QUANTITY transacted": the q52/q183
-    // distinct-value-table pattern with the cumulative running over
-    // weights instead of row counts. Everything integer until the final
-    // /100; the only sort touches the distinct-cents table.
-    "q229_weighted_percentiles" -> ((s, d) => {
-      val li = lineitem(s, d).select(cents(col("l_extendedprice")).as("c"),
-        col("l_quantity").cast("long").as("w"))
-      val byC = li.groupBy(col("c")).agg(sum(col("w")).as("wc"))
-      val cumW = Window.orderBy(col("c"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val all = Window.partitionBy()
-      val cum = byC.withColumn("cw", sum(col("wc")).over(cumW))
-        .withColumn("tw", sum(col("wc")).over(all))
-      def pick(p: Int) =
-        min(when(col("cw") * 100 >= col("tw") * p, col("c")))
-      cum.agg(max(col("tw")).cast("long").as("total_w"),
-        (pick(25).cast("double") / 100).as("p25"),
-        (pick(50).cast("double") / 100).as("median_w"),
-        (pick(75).cast("double") / 100).as("p75"))
-    }),
-
-    // Rendezvous (highest-random-weight) shard assignment + resize
-    // rebalance report: shard(d) = argmax_s md5(d#s), so growing the
-    // cluster N→N+1 moves ONLY the docs the new shard wins (expected
-    // 1/(N+1) ≈ 11.1% here) — the partitioning-story query: consistent
-    // assignment bounds data movement on resize, where mod-N hashing
-    // reshuffles ~everything. Both assignments per doc come from ONE
-    // map-side struct-argmax over the shard list — no explode, no
-    // shuffle until the ≤N-row report aggregate.
-    "q228_rendezvous_shards" -> ((s, d) => {
-      def assign(n: Int) = expr(
-        s"""array_max(transform(sequence(0, ${n - 1}), sid ->
-           |  struct(md5(concat(cast(doc_id as string), '#',
-           |    cast(sid as string))) as h, sid))).sid""".stripMargin)
-        .cast("long")
-      documents(s, d)
-        .select(col("doc_id"), assign(8).as("old_shard"),
-          assign(9).as("new_shard"))
-        .groupBy(col("old_shard"))
-        .agg(count(lit(1)).cast("long").as("n_docs"),
-          sum(when(col("old_shard") =!= col("new_shard"), 1L).otherwise(0L))
-            .cast("long").as("n_moved"))
-        .withColumn("moved_share_r",
-          Corpus.ratioRound6(col("n_moved"), col("n_docs")))
-    }),
-
-    // Jaro-Winkler name-similarity profile — the record-linkage metric
-    // Spark lacks (levenshtein exists; JW weights shared prefixes and
-    // tolerates transpositions, the name/address-matching standard) as a
-    // native codegen'd expression, fixture-matched against DuckDB's
-    // jaro_winkler_similarity exactly. Blocked self-join (first name
-    // token), per-block pair profile; min/max survive the driver's
-    // tolerant float compare, counts are integers.
-    "q227_jw_profile" -> ((s, d) => {
-      val p = part(s, d).filter(col("p_partkey") % 4 === 0)
-        .select(col("p_partkey"), col("p_name"),
-          split(col("p_name"), " ").getItem(0).as("blk"))
-      p.as("a").join(p.as("b"), col("a.blk") === col("b.blk") &&
-          col("a.p_partkey") < col("b.p_partkey"))
-        .select(col("a.blk").as("blk"),
-          graft.functions.JaroWinklerOps.jaroWinklerCol(
-            col("a.p_name"), col("b.p_name")).as("jw"))
-        .groupBy(col("blk"))
-        .agg(count(lit(1)).cast("long").as("n_pairs"),
-          round(min(col("jw")), 6).as("min_jw_r"),
-          round(max(col("jw")), 6).as("max_jw_r"))
-    }),
-
-    // Salted skew join as a QUERY: half the fact lands on ONE key (the
-    // 100 TB hot-key shape); the plan salts the fact side (linenumber mod
-    // S) and explodes the dim side ×S so the hot key spreads over S
-    // reducers — and the ORACLE computes the UNSALTED join, so the compare
-    // proves the salting transformation is result-identical, not just
-    // that it runs. AQE skew-split is the automatic cousin; salting is
-    // the form that also survives non-AQE engines and stateful joins.
-    "q225_salted_join" -> ((s, d) => {
-      val saltN = 8
-      val f = lineitem(s, d).select(
-          when(col("l_orderkey") % 10 < 5, lit(1L))
-            .otherwise(col("l_partkey")).as("k"),
-          col("l_extendedprice"), col("l_linenumber"))
-        .withColumn("salt",
-          pmod(col("l_linenumber").cast("long"), lit(saltN.toLong)))
-      val dim = part(s, d).select(col("p_partkey").as("k"), col("p_brand"))
-        .withColumn("salt",
-          explode(array((0 until saltN).map(i => lit(i.toLong)): _*)))
-      f.join(dim, Seq("k", "salt"))
-        .groupBy(col("p_brand"))
-        .agg(count(lit(1)).cast("long").as("n"),
-          sumd(col("l_extendedprice")).as("revenue"))
-    }),
-
-    // Linear-counting distinct sketch with the MERGE identity proven (the
-    // q193 posture for approximate distinct): occupied md5-bucket sets of
-    // two disjoint halves union-merge into exactly the direct sketch, and
-    // the -m·ln(empty/m) estimate is deterministic (integer occupancy,
-    // one libm ln, 6dp round) — a cardinality sketch both engines compute
-    // bit-identically, unlike HLL implementations.
-    "q226_linear_counting" -> ((s, d) => {
-      val m = 4096L
-      def bucket(c: Column) =
-        conv(substring(md5(c.cast("string")), 1, 15), 16, 10)
-          .cast("long") % m
-      val li = lineitem(s, d).select(col("l_orderkey"),
-        bucket(col("l_partkey")).as("b"))
-      def est(occ: Column) = round(lit(-4096.0) *
-        log((lit(m) - occ).cast("double") / lit(4096.0)), 6)
-      val aHalf = li.filter(col("l_orderkey") % 2 === 0).select("b").distinct()
-      val bHalf = li.filter(col("l_orderkey") % 2 === 1).select("b").distinct()
-      val merged = aHalf.unionByName(bHalf).distinct()
-        .agg(count(lit(1)).as("occ"))
-        .select(lit("merged").as("method"),
-          col("occ").cast("long").as("occupied"), est(col("occ")).as("est_r"))
-      val direct = li.select("b").distinct().agg(count(lit(1)).as("occ"))
-        .select(lit("direct").as("method"),
-          col("occ").cast("long").as("occupied"), est(col("occ")).as("est_r"))
-      merged.unionByName(direct)
-    }),
-
-    // XML source/sink round-trip under the q208 fingerprint gate: the same
-    // projection writes through Spark 4's built-in XML format and reads
-    // back with the explicit schema; the order-invariant fingerprint must
-    // equal the oracle's fingerprint of the source table (a lossy XML
-    // writer/reader — entity escaping, type coercion, dropped rows — goes
-    // red). Same fixed scratch dir discipline as q208.
-    "q224_xml_roundtrip" -> ((s, d) => {
-      // 10% deterministic slice: XML is ~10x parquet bytes per row, and
-      // the parity proof needs row coverage, not volume
-      val base = lineitem(s, d).filter(col("l_orderkey") % 10 === 0)
-        .select(col("l_orderkey"), col("l_partkey"),
-        col("l_returnflag"), col("l_linestatus"),
-        col("l_quantity").cast("long").as("qty"))
-      // same dataset+process-keyed scratch discipline as q208 (scratchDir)
-      val tmp = scratchDir("q224", d)
-      base.write.mode("overwrite").format("xml")
-        .option("rootTag", "rows").option("rowTag", "row")
-        .save(s"$tmp/x")
-      val back = s.read.format("xml").option("rowTag", "row")
-        .schema(base.schema).load(s"$tmp/x")
-      graft.operators.Maintenance.tableFingerprint(back, back.columns.toSeq)
-        .select(lit("xml").as("format"), col("n_rows"), col("lane_a"),
-          col("lane_b"))
-    }),
-
-    // Declarative data-quality rule suite: N constraints-as-data evaluated
-    // in ONE aggregate pass (per-rule conditional sums; a NULL predicate
-    // counts as a violation). The Deequ shape without a job per rule; the
-    // oracle re-evaluates each predicate independently from the same rule
-    // table.
-    "q223_dq_rules" -> ((s, d) =>
-      graft.operators.Maintenance.dqRuleReport(lineitem(s, d), dqRules)),
-
-    // Content-defined chunking dedup profile (Rabin-style CDC): boundaries
-    // anchored to content via an exact-integer rolling hash, so an edit
-    // shifts only the chunks it touches — the chunk-level dup report
-    // fixed-stride chunking (q55) cannot give. All-long output.
-    "q219_cdc_chunks" -> ((s, d) =>
-      Corpus.cdcChunkStats(documents(s, d), "doc_id", "text",
-        window = 8, divisor = 64)),
-
-    // SemDeDup end to end: the embedding-space analogue of q63/q86 —
-    // LSH-bucketed cosine near-dup pairs (never all-pairs) → connected
-    // components (bounded dispatch) → keeper = min-id member. Semantic
-    // clusters deduplicate to ONE representative each; the per-vector
-    // verdict (cluster, keeper flag, cluster size) is the curation list a
-    // semantic-dedup pass feeds downstream. The oracle re-derives the
-    // transitive closure with a recursive CTE — an independent algorithm,
-    // not a mirror of the label-propagation/union-find path.
-    "q220_semantic_dedup" -> ((s, d) => {
-      val e = embeddings(s, d)
-      val pairs = Similarity.lshNearPairs(e, "vec_id", "embedding",
-          bits = 4, minSim = 0.35,
-          signature = Similarity.hyperplaneSignatureLattice)
-        .select(col("id_a"), col("id_b"))
-      val clusters = Dedup.connectedComponents(e, "vec_id", pairs)
-      val sizes = clusters.groupBy(col("cluster"))
-        .agg(count(lit(1)).cast("long").as("cluster_size"))
-      clusters.join(sizes, "cluster")
-        .select(col("vec_id").cast("long").as("vec_id"),
-          col("cluster").cast("long").as("cluster"),
-          (col("vec_id") === col("cluster")).as("is_keeper"),
-          col("cluster_size"))
-    }),
-
-    // Full-domain k-anonymity generalization — the privacy gate a dataset
-    // release runs before publication: quasi-identifier (nation, balance
-    // bin) is generalized UP a fixed ladder (decile → quintile → nation
-    // only → whole table) to the FIRST level where every nonempty group
-    // holds ≥ k rows. ALL ladder levels' group sizes come from ONE
-    // grouping-sets pass (no per-level scans); the 4-row level-minimum
-    // table broadcasts back to pick the chosen level. Exact integer bin
-    // math (cents + integer DIV) on both engines.
-    "q221_k_anonymity" -> ((s, d) => {
-      val kAnon = 25L
-      val base = customer(s, d).select(
-          col("c_nationkey").cast("long").as("nation"),
-          (cents(col("c_acctbal")) + lit(100000L) - lit(1L)).as("sh"))
-        .select(col("nation"),
-          expr("(sh * 10) DIV 1099999").as("decile"))
-        .withColumn("quintile", expr("decile DIV 2"))
-      val gs = base
-        .groupingSets(Seq(
-            Seq(col("nation"), col("decile")),
-            Seq(col("nation"), col("quintile")),
-            Seq(col("nation")),
-            Seq()),
-          col("nation"), col("decile"), col("quintile"))
-        .agg(count(lit(1)).cast("long").as("n"),
-          grouping(col("nation")).as("gn"),
-          grouping(col("decile")).as("gd"),
-          grouping(col("quintile")).as("gq"))
-        .withColumn("level",
-          when(col("gn") === 1, lit(3L))
-            .when(col("gd") === 0, lit(0L))
-            .when(col("gq") === 0, lit(1L))
-            .otherwise(lit(2L)))
-        // group-bounded (≤ |nations|·|bins| rows) and consumed by BOTH the
-        // level-minimum pick and the final filter — materialize once so
-        // the grouping-sets pass over customer truly runs ONCE
-        .localCheckpoint()
-      val chosen = gs.groupBy(col("level")).agg(min(col("n")).as("min_n"))
-        .filter(col("min_n") >= kAnon)
-        .agg(min(col("level")).as("chosen"))
-      gs.crossJoin(broadcast(chosen))
-        .filter(col("level") === col("chosen"))
-        .select(col("level"),
-          coalesce(col("nation"), lit(-1L)).as("nation"),
-          coalesce(col("decile"), lit(-1L)).as("decile"),
-          coalesce(col("quintile"), lit(-1L)).as("quintile"),
-          col("n"))
-    }),
-
-    // §2.8 depth — append-mode WATERMARK LATE-DROP semantics as a REAL
-    // two-micro-batch execution under the oracle: the corpus's last-48h
-    // tail arrives in batch 1 (advancing the watermark to max(ts) − 1h);
-    // everything earlier arrives in batch 2 and is late by construction —
-    // every batch-2 row's window closed long before, so Structured
-    // Streaming must DROP them all and the output holds ONLY batch-1
-    // windows closed by the final watermark. The oracle computes exactly
-    // that tail-only window set; had the engine admitted late rows (or
-    // emitted unclosed windows), the row set itself would differ.
-    "q222_watermark_late_drop" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val tok = datasetTok(d)
-      val base = events(s, d).select(col("event_id"), col("ts"),
-        col("event_type"))
-      val mx = base.agg(max(col("ts"))).head().getTimestamp(0)
-      val tsplit = new java.sql.Timestamp(mx.getTime - 48L * 3600 * 1000)
-      val dir = tmpScratch(s"q222_src_$tok")
-      def rmTree(p: java.nio.file.Path): Unit = {
-        if (java.nio.file.Files.isDirectory(p))
-          java.nio.file.Files.list(p).forEach(rmTree(_))
-        java.nio.file.Files.deleteIfExists(p)
-      }
-      rmTree(dir); java.nio.file.Files.createDirectories(dir)
-      // one plain parquet FILE per micro-batch, name- and mtime-ordered so
-      // the file source's batch order is deterministic either way it sorts
-      def writeOne(df: DataFrame, name: String, mtime: Long): Unit = {
-        val tmp = dir.resolve(name + "_stage")
-        // repartition(1), not coalesce(1): coalesce would pull the whole
-        // scan+filter into one task (r21; same fix as the two-batch
-        // runner's writePhase) — the single part file the batch-order
-        // contract needs comes from the exchange, not a serial plan
-        df.repartition(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = java.nio.file.Files.list(tmp)
-          .filter(p => p.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get()
-        val dst = dir.resolve(name)
-        java.nio.file.Files.move(part, dst)
-        rmTree(tmp)
-        dst.toFile.setLastModified(mtime)
-      }
-      val outDir = tmpScratch(s"q222_out_$tok")
-      val ckpt = tmpScratch(s"q222_ck_$tok")
-      rmTree(outDir); rmTree(ckpt)
-      writeOne(base.filter(col("ts") >= lit(tsplit)), "0001.parquet", 1000000L)
-      val sch = s.read.parquet(dir.toString).schema
-      // two INCREMENTAL AvailableNow runs against one checkpoint: run 1
-      // sees only the tail file (watermark persists to state); run 2 sees
-      // only the early file with the RESTORED watermark — every row late
-      def runOnce(): Unit = {
-        val q = s.readStream.schema(sch).parquet(dir.toString)
-          .withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(col("window.start").as("window_start"), col("event_type"),
-            col("n").cast("long").as("n"))
-          .writeStream.format("parquet")
-          .option("path", outDir.toString)
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      StreamingOps.withStreamConf(s) {
-        runOnce()
-        writeOne(base.filter(col("ts") < lit(tsplit)), "0002.parquet",
-          2000000L)
-        runOnce()
-      }
-      s.read.parquet(outDir.toString)
-    }),
-
-    // Leakage-safe k-FOLD assignment (q126's 3-way split generalized):
-    // near-dup cluster members share a fold, fold id from the cluster
-    // md5 mod 5 — no fold's validation half shares a near-duplicate with
-    // its training half.
-    "q213_kfold_split" -> ((s, d) => {
-      val docs = documents(s, d)
-      val pairs = Dedup.minhashCandidatesPortable(docs, "doc_id", "text")
-      val clusters = Dedup.connectedComponents(docs, "doc_id", pairs)
-      Dedup.leakageSafeKFold(clusters, k = 5)
-        .select(col("doc_id"), col("cluster").cast("long").as("cluster"),
-          col("fold").cast("long").as("fold"))
-    }),
-
-    // Time-bounded conversion funnel (q135's windowed sibling): each
-    // stage must land within 30 minutes of the previous stage's earliest
-    // qualifying event — the funnel semantics product analytics actually
-    // uses (an unbounded funnel credits conversions months later).
-    "q212_funnel_within" -> ((s, d) =>
-      Transforms.funnelWithin(events(s, d), "user_id", "event_type", "ts",
-        Seq("view", "click", "purchase"), maxGapSeconds = 1800L)),
-
-    // Frequency-of-frequencies spectrum over word TRIGRAMS (Good–Turing
-    // input): N_r = number of trigram types occurring exactly r times,
-    // r ≤ 10 plus a tail bucket, each bucket's token mass, and the
-    // Good–Turing adjusted count r* = (r+1)·N_{r+1}/N_r (one divide of
-    // exact ints → bit-equal doubles). Trigrams, not unigrams: the
-    // corpus's unigram vocabulary is ~31 types all far into the tail,
-    // while the trigram spectrum has the hapax-heavy head GT smoothing
-    // actually consumes. Two aggregates, both map-side partial.
-    "q211_frequency_spectrum" -> ((s, d) => {
-      val tf = documents(s, d)
-        .filter(length(trim(col("text"))) > 0)
-        .select(split(trim(lower(col("text"))), "\\s+").as("toks"))
-        .filter(size(col("toks")) >= 3)
-        .select(explode(expr(
-          "transform(sequence(0, size(toks) - 3), " +
-            "i -> concat_ws(' ', slice(toks, i + 1, 3)))")).as("term"))
-        .groupBy(col("term")).agg(count(lit(1)).as("r"))
-      val spec = tf
-        .groupBy(when(col("r") <= 10, col("r")).otherwise(lit(-1L))
-          .as("r_bucket"))
-        .agg(count(lit(1)).as("n_types"), sum(col("r")).as("token_mass"))
-      val next = spec.select((col("r_bucket") - 1L).as("r_bucket"),
-        col("n_types").as("n_next"))
-      spec.join(next, Seq("r_bucket"), "left")
-        .select(col("r_bucket").cast("long").as("r_bucket"),
-          col("n_types").cast("long").as("n_types"),
-          col("token_mass").cast("long").as("token_mass"),
-          when(col("r_bucket").between(1L, 9L) && col("n_next").isNotNull,
-            round((col("r_bucket") + 1L).cast("double") *
-              col("n_next").cast("double") /
-              col("n_types").cast("double"), 6)).as("gt_r"))
-    }),
-
-    // Curation WATERFALL — the per-stage survival funnel every dataset
-    // paper publishes: raw → non-empty → ≥10 tokens → exact-dedup keeper
-    // (earliest per digest) → duplicated-span rewrite survivors. Each
-    // stage applies to the previous stage's survivors, token counts use
-    // the shared tokenizer, and the span stage counts KEPT tokens — so
-    // the report states exactly what a training run would consume.
-    "q210_curation_waterfall" -> ((s, d) => {
-      val raw = documents(s, d).select(col("doc_id"), col("text"),
-        Corpus.wordsCount(col("text")).as("n_tok"))
-      // r21 (guide §1.2/§2.4): the five stage rows used to be five
-      // independent agg branches over NESTED lineages — the scan +
-      // wordsCount ran 5×, the fingerprint window 2× (once for stage 3,
-      // again under stage 4's span-removal input). Stages 0–2 are pure
-      // row filters, so their three (n_docs, n_tokens) rows fold into
-      // ONE conditional-aggregation pass (eagerly collapsed to its one
-      // row so the three projections don't re-run it); stage 3's keeper
-      // table is localCheckpoint'd so stage 4 reuses it instead of
-      // re-running the window. Plan: 5 scans + 2 windows → 2 scans +
-      // 1 window; values identical (min-of-3 A/B: 2.23 → 1.79 s).
-      val nonEmpty = length(trim(col("text"))) > 0
-      val minTok = nonEmpty && col("n_tok") >= 10
-      val s012 = raw.agg(
-          count(lit(1)).cast("long").as("n0"),
-          coalesce(sum(col("n_tok")), lit(0L)).cast("long").as("t0"),
-          // n1/n2 coalesced like the token sums (r21 ADVICE): on an EMPTY
-          // documents table sum(when(...)) is NULL where the per-stage
-          // count() this fold replaced — and the oracle's count(*) — give 0
-          coalesce(sum(when(nonEmpty, 1L).otherwise(0L)), lit(0L))
-            .cast("long").as("n1"),
-          coalesce(sum(when(nonEmpty, col("n_tok"))), lit(0L))
-            .cast("long").as("t1"),
-          coalesce(sum(when(minTok, 1L).otherwise(0L)), lit(0L))
-            .cast("long").as("n2"),
-          coalesce(sum(when(minTok, col("n_tok"))), lit(0L))
-            .cast("long").as("t2"))
-        .localCheckpoint()
-      val s3 = ckptIfSmall(documents(s, d))(
-        raw.filter(nonEmpty).filter(col("n_tok") >= 10)
-          .withColumn("_rn", row_number().over(
-            Window.partitionBy(TextFunctions.fingerprint(col("text")))
-              .orderBy(col("doc_id"))))
-          .filter(col("_rn") === 1).drop("_rn"))
-      val s4 = Dedup.duplicatedSpanRemoval(s3, "doc_id", "text",
-          gramN = 5, minDocs = 2)
-        .select(col("doc_id"),
-          (col("n_tokens") - col("n_dropped")).as("n_tok"))
-        .filter(col("n_tok") >= 10)
-      def stage(i: Int, name: String, df: DataFrame) =
-        df.agg(count(lit(1)).cast("long").as("n_docs"),
-            coalesce(sum(col("n_tok")), lit(0L)).cast("long").as("n_tokens"))
-          .select(lit(i.toLong).as("stage"), lit(name).as("name"),
-            col("n_docs"), col("n_tokens"))
-      def stageRow(i: Int, name: String, n: Column, t: Column) =
-        s012.select(lit(i.toLong).as("stage"), lit(name).as("name"),
-          n.as("n_docs"), t.as("n_tokens"))
-      stageRow(0, "raw", col("n0"), col("t0"))
-        .unionByName(stageRow(1, "non_empty", col("n1"), col("t1")))
-        .unionByName(stageRow(2, "min_tokens", col("n2"), col("t2")))
-        .unionByName(stage(3, "exact_keeper", s3))
-        .unionByName(stage(4, "span_clean", s4))
-    }),
-
-    // Decile lift/gains table — the model-eval report scoring pipelines
-    // ship with every propensity model: rank by score into deciles, then
-    // per-decile and cumulative lift vs the base rate. All rates are
-    // single divides of exact integer cross-products (n_pos·N vs n·N_pos),
-    // so the doubles are bit-equal cross-engine; ntile is total-ordered by
-    // (score desc, event_id). Complements q158 (exact ROC AUC) and q165
-    // (calibration curve) as the third standard scoring diagnostic.
-    // Scale note: exact ntile is a global sort — correct for report-sized
-    // scored sets; at 100 TB bucket by equi-depth score boundaries
-    // (q163's percentile approach) instead of ranking every row.
-    "q209_lift_table" -> ((s, d) => {
-      val ev = events(s, d).select(col("event_id"),
-        col("value").as("score"),
-        when(col("event_type") === "purchase", 1L).otherwise(0L).as("label"))
-      val decd = ev.withColumn("decile",
-        ntile(10).over(Window.orderBy(col("score").desc, col("event_id"))))
-      val per = decd.groupBy(col("decile"))
-        .agg(count(lit(1)).as("n"), sum(col("label")).as("n_pos"))
-      val tot = per.agg(sum(col("n")).as("nn"), sum(col("n_pos")).as("np"))
-      val w = Window.orderBy(col("decile"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      per.crossJoin(broadcast(tot))
-        .withColumn("cum_n", sum(col("n")).over(w))
-        .withColumn("cum_pos", sum(col("n_pos")).over(w))
-        .select(col("decile").cast("long").as("decile"),
-          col("n").cast("long").as("n"),
-          col("n_pos").cast("long").as("n_pos"),
-          round(col("n_pos").cast("double") / col("n").cast("double"), 6)
-            .as("rate_r"),
-          round((col("n_pos") * col("nn")).cast("double") /
-            (col("n") * col("np")).cast("double"), 6).as("lift_r"),
-          round((col("cum_pos") * col("nn")).cast("double") /
-            (col("cum_n") * col("np")).cast("double"), 6).as("cum_lift_r"))
-    }),
-
-    // Format-parity proof as a QUERY: the same projection round-trips
-    // through parquet, CSV, JSON, and ORC, and each copy's
-    // order-invariant content fingerprint (q140's two mod-2^61 lanes)
-    // must equal the oracle's fingerprint of the source table — a lossy
-    // writer/reader in ANY format goes red. Integer/string columns only
-    // (the fingerprint contract; CSV/JSON carry no type metadata, so the
-    // read-back applies the explicit schema).
-    "q208_format_parity" -> ((s, d) => {
-      // NOTE (r21, measured and rejected): respreading the one-partition
-      // sf scan to core count before the writes — so each text encode
-      // parallelizes — measured SLOWER (min 3.38 → 6.02 s, 3× A/B): 4
-      // concurrent 32-task write jobs oversubscribe the cores and the
-      // per-file commit overhead of 32 parts × 4 formats beats the
-      // encode win at this row count. The 4-way job overlap below is
-      // the measured optimum; a at-scale table arrives multi-partition
-      // anyway.
-      val base = lineitem(s, d).select(col("l_orderkey"), col("l_partkey"),
-        col("l_returnflag"), col("l_linestatus"),
-        col("l_quantity").cast("long").as("qty"))
-      // Scratch keyed by dataset + process (see scratchDir): a concurrent
-      // run at another scale factor — or over the SAME dataset — cannot
-      // overwrite data under a still-unconsumed lazy DataFrame (the dir
-      // cannot be deleted inside the query; a shutdown hook removes it).
-      val tmp = scratchDir("q208", d)
-      // The four format writes are INDEPENDENT jobs over the same
-      // projection — submit them from a small pool so each job's task
-      // tail back-fills cores freed by the others (guide §2.6 overlap;
-      // r21: wall = max(write) instead of Σ write, measured min 4.0 →
-      // 1.9 s warm for the write+fingerprint body). Same files, same
-      // contents, same fingerprint result — scheduling only.
-      graft.operators.Overlap.runAll(Seq[() => Unit](
-        () => base.write.mode("overwrite").parquet(s"$tmp/p"),
-        () => base.write.mode("overwrite")
-          .option("header", "true").csv(s"$tmp/c"),
-        () => base.write.mode("overwrite").json(s"$tmp/j"),
-        () => base.write.mode("overwrite").orc(s"$tmp/o")))
-      val sch = base.schema
-      def fp(df: DataFrame, label: String) =
-        graft.operators.Maintenance.tableFingerprint(df, df.columns.toSeq)
-          .select(lit(label).as("format"), col("n_rows"), col("lane_a"),
-            col("lane_b"))
-      fp(s.read.parquet(s"$tmp/p"), "parquet")
-        .unionByName(fp(
-          s.read.schema(sch).option("header", "true").csv(s"$tmp/c"), "csv"))
-        .unionByName(fp(s.read.schema(sch).json(s"$tmp/j"), "json"))
-        .unionByName(fp(s.read.orc(s"$tmp/o"), "orc"))
-    }),
-
-    // Mixture DRAW — the consumption step closing q198's loop: water-fill
-    // the per-source allocations, then admit each source's documents in
-    // the deterministic md5 order until its OWN allocation is exhausted
-    // (low-water mark, as budgetSample). Solve → draw in one plan.
-    "q207_mixture_draw" -> ((s, d) => {
-      val docs = documents(s, d).select(col("source"), col("doc_id"),
-        Corpus.wordsCount(col("text")).as("n_tok"))
-      val caps = docs.groupBy(col("source"))
-        .agg(sum(col("n_tok")).cast("long").as("cap"))
-        .withColumn("w",
-          regexp_extract(col("source"), "(\\d+)$", 1).cast("long") + 1L)
-      val budget = caps.agg((sum(col("cap")) / 2L).cast("long").as("budget"))
-      val alloc = Corpus.waterfillAllocation(
-          caps.crossJoin(broadcast(budget)), "source", "cap", "w", "budget")
-        .select(col("source"), col("alloc"))
-      Corpus.allocatedSample(docs.join(broadcast(alloc), "source"),
-          "source", "doc_id", col("n_tok"), "alloc")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).cast("long").as("n_docs"),
-          sum(col("wt")).cast("long").as("tokens_drawn"))
-    }),
-
-    // Per-dimension embedding profile — the drift monitor an embedding
-    // pipeline runs before/after a model swap: for each vector dimension,
-    // exact micro-unit sums (count, Σx, Σx²) plus raw min/max. Integer
-    // sums are order-independent and engine-exact (the q65 micro-unit
-    // pattern); consumers derive mean/std without the engine committing
-    // to a division order. One narrow posexplode + one aggregate — no
-    // shuffle of vectors, only (dim, partial-sum) rows.
-    "q206_embedding_profile" -> ((s, d) =>
-      embeddings(s, d)
-        .select(posexplode(Similarity.toDoubleArray(col("embedding")))
-          .as(Seq("j", "x")))
-        .withColumn("xm", round(col("x") * lit(1000000.0)).cast("long"))
-        .groupBy(col("j"))
-        .agg(count(lit(1)).cast("long").as("n"),
-          sum(col("xm")).cast("long").as("sum_micro"),
-          sum(col("xm") * col("xm")).cast("long").as("sumsq_micro"),
-          min(col("x")).as("min_x"), max(col("x")).as("max_x"))
-        .select(col("j").cast("long").as("j"), col("n"), col("sum_micro"),
-          col("sumsq_micro"), col("min_x"), col("max_x"))),
-
-    // Hilbert layout key (q69's Z-order sibling): locality-preserving
-    // space-filling index over the same (custkey, day) normalization —
-    // native codegen'd expression (per-level rotation state can't be a
-    // Column tree without exponential subtree replication).
-    "q203_hilbert_key" -> ((s, d) => {
-      val o = orders(s, d).withColumn("day",
-        datediff(col("o_orderdate").cast("date"),
-          lit("1970-01-01").cast("date")).cast("long"))
-      val stats = o.agg(min("o_custkey").as("ck_lo"),
-        max("o_custkey").as("ck_hi"),
-        min("day").as("d_lo"), max("day").as("d_hi"))
-      def scale16(c: Column, lo: Column, hi: Column): Column =
-        (((c - lo) * lit(65535L)) / (hi - lo)).cast("long")
-      o.crossJoin(broadcast(stats)).select(col("o_orderkey"),
-        graft.functions.HilbertOps.hilbert16(
-          scale16(col("o_custkey"), col("ck_lo"), col("ck_hi")),
-          scale16(col("day"), col("d_lo"), col("d_hi"))).as("h"))
-    }),
-
-    // prefixHotness under the oracle (r13 judge item 4): the cap-choice
-    // diagnostic for q121's prefix-Jaccard join — distribution of
-    // nd = how many documents' rarest-prefix slices carry each shingle,
-    // as (nd, n_toks). Aggregates only (tok-keyed then nd-keyed, both
-    // with map-side partials): linear in corpus shingles, safe to run
-    // before committing to the quadratic-in-cluster candidate join.
-    "q245_prefix_hotness" -> ((s, d) =>
-      Dedup.prefixHotness(documents(s, d), "doc_id", "text")),
-
-    // q245's sampled mode under the oracle (r15 judge depth item 8): the
-    // same diagnostic over a DETERMINISTIC quarter of the corpus — the
-    // sample predicate is a row filter pushed to the scan, so the
-    // diagnostic stays linear in the SAMPLE at any corpus size. The
-    // oracle mirrors doc_id % 4 = 0 exactly; at 100 TB the Scaladoc's
-    // hash-mod predicate (pmod(xxhash64(id), 100) < 5) is the same
-    // mechanism over non-numeric ids.
-    "q253_prefix_hotness_sampled" -> ((s, d) =>
-      Dedup.prefixHotness(documents(s, d), "doc_id", "text",
-        sample = Some(pmod(col("doc_id"), lit(4)) === 0))),
-
-    // Multi-table (OR-construction) hyperplane LSH (r16 VERDICT item 2):
-    // q32's lattice chain with a SECOND independent plane table — a pair
-    // is a candidate when it collides in either table, deduped across
-    // tables before the exact cosine verify. Table 0's planes are q32's
-    // exactly (plane index = tbl·bits + i), so q32's pair set is a
-    // subset of this one by construction and the output is the recall
-    // lift itself; DuckDB mirrors both tables, the OR-dedup, and the
-    // verify bit-for-bit.
-    "q254_ann_lsh_multitable" -> ((s, d) =>
-      Similarity.lshNearPairsTables(embeddings(s, d), "vec_id", "embedding",
-        bits = 4, minSim = 0.1, tables = 2,
-        signatureAt = Similarity.hyperplaneSignatureLatticeAt)
-        .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim_r"))),
-
-    // Multi-probe LSH (the memory-cheap recall knob, q254's complement):
-    // ONE q32 lattice table probed at the home bucket plus every
-    // Hamming-1 neighbor — a pair is a candidate when its 4-bit
-    // signatures differ in at most one bit, then the identical exact
-    // cosine verify. Each pair is emitted exactly once by construction
-    // (home×probe with vid order — see the operator Scaladoc), so the
-    // DuckDB mirror is simply "popcount(xor(sig_a, sig_b)) <= 1" over
-    // q32's signature CTE: the board proves the bucketing trick equals
-    // the declarative Hamming predicate.
-    "q256_ann_lsh_multiprobe" -> ((s, d) =>
-      Similarity.lshNearPairsMultiProbe(embeddings(s, d), "vec_id",
-        "embedding", bits = 4, minSim = 0.1,
-        signature = Similarity.hyperplaneSignatureLattice)
-        .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim_r"))),
-
-    // Streaming state-store observability, ORACLE-CHECKABLE core (r17
-    // VERDICT item 1 — this was the board's only rows-only row). Runs
-    // the two stateful stream classes the board exercises — signature-
-    // keyed dedup state (q96's shape) and symmetric stream-stream join
-    // state (q148's shape) — under single-batch AvailableNow (the whole
-    // corpus is ONE data micro-batch: watermark starts at 0, so nothing
-    // evicts within it) and returns the FIRST data batch's state counts
-    // per stream, which are plain functions of the corpus:
-    //   dedup — flatMapGroupsWithState keyed by the minhash signature:
-    //     rows_total = rows_updated = distinct signatures (the exact
-    //     count q96's oracle already mirrors), rows_removed = 0;
-    //   join — every non-null-key, non-null-time row of both sides is
-    //     inserted into its side's store: rows_total = rows_updated =
-    //     n_view + n_click, rows_removed = 0.
-    // The store-impl-dependent metrics (mem_bytes, operator names,
-    // per-batch timings/rates, the post-watermark eviction batch) move
-    // to the verify-artifact sidecar target/q255_state_sidecar.json,
-    // rewritten on every run (r17 VERDICT item 7) — observability is
-    // not lost, it is just not pretending to be oracle-checkable.
-    "q255_stream_state_metrics" -> ((s, d) => {
-      import graft.streaming.StreamingDedup
-      val tok = datasetTok(d)
-      StreamingOps.withStreamConf(s) {
-        val dq = s"q255_dedup_$tok"; val jq = s"q255_join_$tok"
-        s.catalog.dropTempView(dq); s.catalog.dropTempView(jq)
-        // r21 (guide §2.6): the dedup stream and the join stream are
-        // INDEPENDENT queries over different tables — run them
-        // concurrently from two driver threads so the second stream's
-        // micro-batch back-fills cores the first one's tail leaves idle
-        // (each stream's own batches stay sequential; progress objects
-        // and sink tables are per-stream, so the result is unchanged).
-        val Seq(dedupProg, joinProg) = graft.operators.Overlap.runAll(Seq(
-          () => StreamingOps.runAvailableNowProgress(
-            s, s"$d/documents.parquet", dq) { docs =>
-            StreamingDedup.dedupStream(
-              docs.filter(length(trim(col("text"))) > 0),
-              "doc_id", "text").toDF()
-          }._2,
-          () => StreamingOps.runAvailableNowProgress(
-            s, s"$d/events.parquet", jq) { ev =>
-            // null join keys / event times are filtered EXPLICITLY so the
-            // state-row count is a clean SQL quantity (what the symmetric
-            // hash join would do with a null-keyed row is an impl detail
-            // the oracle must not depend on)
-            val v = ev.filter(col("event_type") === "view" &&
-                col("user_id").isNotNull && col("ts").isNotNull)
-              .select(col("event_id").as("v_event_id"),
-                col("user_id").as("v_user"), col("ts").as("vts"))
-              .withWatermark("vts", "2 hours")
-            val c = ev.filter(col("event_type") === "click" &&
-                col("user_id").isNotNull && col("ts").isNotNull)
-              .select(col("event_id").as("c_event_id"),
-                col("user_id").as("c_user"), col("ts").as("cts"))
-              .withWatermark("cts", "2 hours")
-            v.join(c, col("v_user") === col("c_user") &&
-              col("cts") >= col("vts") &&
-              col("cts") <= col("vts") + expr("INTERVAL 60 MINUTES"))
-              .select(col("v_user").as("user_id"), col("v_event_id"),
-                col("c_event_id"))
-          }._2))
-        StreamingOps.writeStateSidecar(
-          "target/q255_state_sidecar.json",
-          Seq("dedup" -> dedupProg, "join" -> joinProg))
-        StreamingOps.firstBatchStateCounts(s,
-          Seq("dedup" -> dedupProg, "join" -> joinProg))
-      }
-    }),
-
-    // The NEX variant's exact serving contract under the oracle (r13
-    // judge item 8): 40-distinct-category × 3-metric frame with `CANT`
-    // count naming, the `value > 0`-guarded 10000 MIN_DIST fill, and the
-    // variant-dispatched global counts — NEX alone filters the global
-    // 300M count by distance <= 300 (`HTIPNEXSITE/__init__.py:318`, r13
-    // ADVICE). Deterministic synthetic prepared frame over orders: the
-    // category cycles through the variant list PLUS one category outside
-    // it (which only the global counts may see), integer-valued
-    // distances 0..600 m cover the <=100 / <=300 / beyond-300 bands and
-    // the distance-0 fill quirk.
-    "q246_nex_contract" -> ((s, d) => {
-      import graft.pipelines.SiteScoringPipeline._
-      val v = variants("NEX")
-      val prep = variantFixture(orders(s, d), v)
-      featureVectorFor(prep, v)
-        .join(globalCountsFor(prep, v), Seq("rst_cd"))
-    }),
-
-    // The PL (Honduras) contract, same fixture recipe: 39 categories ×
-    // 5 metrics, `CNT` naming, 0.0 fills, and UNFILTERED global 300M
-    // count (`HTIPPLSITE/__init__.py:335` counts every row — the
-    // contrast with q246 is the r13 ADVICE medium item, pinned here
-    // under the oracle from both sides).
-    "q247_pl_contract" -> ((s, d) => {
-      import graft.pipelines.SiteScoringPipeline._
-      val v = variants("PL")
-      val prep = variantFixture(orders(s, d), v)
-      featureVectorFor(prep, v)
-        .join(globalCountsFor(prep, v), Seq("rst_cd"))
-    }),
-
-    // The PLCR (Costa Rica) contract closing the variant triple: PL's
-    // 5-metric `CNT` shape over the 38-category CR list (= PL minus
-    // ESTACION DE BOMBEROS — `HTIPPLSITECR/__init__.py:324`), same
-    // unfiltered global 300M count. With q246/q247 this puts ALL three
-    // deployment variants' serving frames under the oracle.
-    "q250_plcr_contract" -> ((s, d) => {
-      import graft.pipelines.SiteScoringPipeline._
-      val v = variants("PLCR")
-      val prep = variantFixture(orders(s, d), v)
-      featureVectorFor(prep, v)
-        .join(globalCountsFor(prep, v), Seq("rst_cd"))
-    }),
-
-    // bucketHotness under the oracle: the embedding-side mirror of q245 —
-    // the LSH bucket-size distribution that prices q32's within-bucket
-    // self-join (quadratic in m) before running it. Lattice hyperplanes
-    // so DuckDB reproduces the bucketing bit-for-bit.
-    "q248_bucket_hotness" -> ((s, d) =>
-      Similarity.bucketHotness(embeddings(s, d), "vec_id", "embedding",
-        bits = 4, signature = Similarity.hyperplaneSignatureLattice)),
-
-    // q32's pair join with the hot-bucket cap engaged (aggregate +
-    // semi-join, never a count window): buckets above 40 vectors are
-    // refused — the signature-collapse guard every text-side candidate
-    // generator carries, here exact under the oracle (the cap binds at
-    // every SF: the two hottest buckets exceed 40 at sf0.001/0.01, eight
-    // do at sf0.1).
-    "q249_lsh_capped" -> ((s, d) =>
-      Similarity.lshNearPairs(embeddings(s, d), "vec_id", "embedding",
-        bits = 4, minSim = 0.1,
-        signature = Similarity.hyperplaneSignatureLattice, maxBucket = 40)
-        .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim_r"))),
-
-    // Real multimodal header decode (r14 VERDICT missing-item 1): the
-    // native image_meta expression over literal image bytes built
-    // in-process — well-formed PNG/JPEG/GIF headers parse to (format,
-    // width, height, channels); a truncated SOF, a CRC-flipped IHDR, a
-    // scan-before-frame marker stream and plain non-image bytes each parse
-    // to NULL, never throw (the 100 TB posture: one corrupt blob = one
-    // null row). q149 posture: expected rows carried in the oracle VALUES.
-    "q251_image_meta" -> ((s, d) => {
-      import s.implicits._
-      imageFixture.toDF("img_id", "payload")
-        .select(col("img_id"),
-          graft.functions.ImageMeta.column(col("payload")).as("m"))
-        .select(col("img_id"), col("m.format").as("format"),
-          col("m.width").cast("long").as("width"),
-          col("m.height").cast("long").as("height"),
-          col("m.channels").cast("long").as("channels"))
-    }),
-
-    // native media_meta expression over literal WAV/MP4 container bytes
-    // built in-process (the audio/video sibling of q251, r15 VERDICT depth
-    // item 7) — well-formed RIFF/WAVE and ISO-BMFF headers parse to
-    // (format, duration_ms, channels, sample_rate, bits, brand); a
-    // truncated RIFF payload, a missing data chunk, a zero-channel fmt, a
-    // box-size overrun and a corrupt moov interior each parse to NULL,
-    // never throw; a brand-only ftyp fragment (streaming init segment)
-    // keeps duration null without failing the row.
-    "q252_media_meta" -> ((s, d) => {
-      import s.implicits._
-      mediaFixture.toDF("media_id", "payload")
-        .select(col("media_id"),
-          graft.functions.MediaMeta.column(col("payload")).as("m"))
-        .select(col("media_id"), col("m.format").as("format"),
-          col("m.duration_ms").as("duration_ms"),
-          col("m.channels").cast("long").as("channels"),
-          col("m.sample_rate").cast("long").as("sample_rate"),
-          col("m.bits").cast("long").as("bits"),
-          col("m.brand").as("brand"),
-          col("m.codec").as("codec"))
-    }),
-
-    // Streaming state EVICTION, oracle-checked (r18 VERDICT item 2 —
-    // q255's single-batch design makes rows_removed = 0 by construction,
-    // so the eviction half of the bounded-state claim was spec-asserted
-    // but never oracle-seen). A deterministic TWO-batch AvailableNow run:
-    // the events corpus is split at the midpoint of its event-time range
-    // (epoch-microsecond (min+max)/2, integer division — a pure corpus
-    // function) into two phase files consumed one per micro-batch, so
-    // the watermark provably advances between batches and every per-batch
-    // state transition is computable from the corpus:
-    //   wm(batch b) = floor(max event-time of batches < b, ms) − 37 min
-    //     (0 for the first batch);
-    //   hourly-window agg state: a window [w, w+1h) is evicted in the
-    //     first batch whose wm satisfies w+1h <= wm (the <= boundary is
-    //     pinned empirically by StreamingSpec's exact-boundary case);
-    //   the trailing NO-data micro-batch Spark runs under AvailableNow
-    //     (noDataMicroBatches) is batch_seq 2 — where the final
-    //     watermark's evictions land.
-    // Window choice (1 h windows, 37 min delay over a 30-day corpus)
-    // makes all three transitions non-trivial: batch 1 evicts ~half the
-    // windows (nonzero rows_removed — the item's "done" bar), batch 2
-    // evicts all but the last.
-    "q257_stream_state_eviction" -> ((s, d) => {
-      val tok = datasetTok(d)
-      StreamingOps.withStreamConf(s) {
-        val qn = s"q257_agg_$tok"
-        s.catalog.dropTempView(qn)
-        val (_, progs) = StreamingOps.runAvailableNowDateSplitProgress(
-          s, s"$d/events.parquet", qn) { ev =>
-          ev.filter(col("ts").isNotNull)
-            .withWatermark("ts", "37 minutes")
-            .groupBy(window(col("ts"), "1 hour"))
-            .agg(count(lit(1)).as("n"))
-            .select(col("window.start").as("ws"), col("n"))
-        }
-        import s.implicits._
-        // batch_seq re-indexes sorted batchIds so the oracle never
-        // depends on Spark's internal batch numbering
-        progs.sortBy(_.batchId).zipWithIndex.flatMap { case (p, seq) =>
-          p.stateOperators.headOption.map { so =>
-            (seq.toLong, p.numInputRows, so.numRowsTotal,
-              so.numRowsUpdated, so.numRowsRemoved)
-          }
-        }.toDF("batch_seq", "input_rows", "rows_total", "rows_updated",
-          "rows_removed")
-      }
-    }),
-
-    // Stream-stream JOIN state eviction, oracle-checked (r19 VERDICT
-    // item 2 — q257 closed eviction for the windowed AGGREGATE; the
-    // symmetric hash join's rows_removed was still first-batch-only,
-    // 0 by construction). q255's view⋈click interval join through the
-    // same two-batch date-split runner. The per-batch state transitions
-    // are pure corpus functions under rules pinned empirically
-    // (q260's oracle; boundary cases in StreamingSpec):
-    //   wm(b) = floor-ms(min(max vts, max cts) of batches < b) − 2 h —
-    //     the MIN across the two watermark columns, each max over that
-    //     side's FILTERED rows;
-    //   a view row is evicted once vts + 60 min ≤ wm − 1 ms (its
-    //     condition upper bound cts ≤ vts + 60 min can no longer match
-    //     a future click), a click row once cts ≤ wm − 1 ms (cts ≥ vts
-    //     can no longer match a future view) — both thresholds are
-    //     µs-exact with the −1 ms offset (a row at wm − 1 µs SURVIVES;
-    //     pinned against both the ms-grain and sub-ms hypotheses);
-    //   numInputRows counts the phase's RAW rows once per join branch
-    //     (the file source fans out into the view and click legs) = 2 ×
-    //     phase rows, nulls included;
-    //   batch_seq 2 is the trailing no-data finalization batch.
-    // Phase-B rows are ≥ split > wm(1) by construction, so batch 1's
-    // evictions are phase-A rows only and arrivals are never
-    // drop-on-arrival — the oracle counts stay clean corpus aggregates.
-    "q260_stream_join_eviction" -> ((s, d) => {
-      val tok = datasetTok(d)
-      StreamingOps.withStreamConf(s) {
-        val qn = s"q260_join_$tok"
-        s.catalog.dropTempView(qn)
-        val (_, progs) = StreamingOps.runAvailableNowDateSplitProgress(
-          s, s"$d/events.parquet", qn) { ev =>
-          val v = ev.filter(col("event_type") === "view" &&
-              col("user_id").isNotNull && col("ts").isNotNull)
-            .select(col("event_id").as("v_event_id"),
-              col("user_id").as("v_user"), col("ts").as("vts"))
-            .withWatermark("vts", "2 hours")
-          val c = ev.filter(col("event_type") === "click" &&
-              col("user_id").isNotNull && col("ts").isNotNull)
-            .select(col("event_id").as("c_event_id"),
-              col("user_id").as("c_user"), col("ts").as("cts"))
-            .withWatermark("cts", "2 hours")
-          v.join(c, col("v_user") === col("c_user") &&
-            col("cts") >= col("vts") &&
-            col("cts") <= col("vts") + expr("INTERVAL 60 MINUTES"))
-            .select(col("v_user").as("user_id"), col("v_event_id"),
-              col("c_event_id"))
-        }
-        import s.implicits._
-        progs.sortBy(_.batchId).zipWithIndex.flatMap { case (p, seq) =>
-          p.stateOperators.headOption.map { so =>
-            (seq.toLong, p.numInputRows, so.numRowsTotal,
-              so.numRowsUpdated, so.numRowsRemoved)
-          }
-        }.toDF("batch_seq", "input_rows", "rows_total", "rows_updated",
-          "rows_removed")
-      }
-    }),
-
-    // native pdf_meta expression over literal PDF bytes built in-process
-    // (the document sibling of q251/q252, r18 VERDICT depth item 6 — the
-    // highest-volume crawl document family had no header reader).
-    // Well-formed classic-trailer AND cross-reference-stream files parse
-    // to (version, pages, encrypted, linearized); incremental updates
-    // resolve to the NEWEST object definitions; fields degrade
-    // independently (a truncated trailer keeps version+linearized with
-    // null pages/encrypted); a truncated header, non-PDF bytes, a
-    // header past the 1024-byte window, a reference-valued /Count and a
-    // dangling /Root each null exactly what they break, never throw.
-    "q258_pdf_meta" -> ((s, d) => {
-      import s.implicits._
-      pdfFixture.toDF("pdf_id", "payload")
-        .select(col("pdf_id"),
-          graft.functions.PdfMeta.column(col("payload")).as("m"))
-        .select(col("pdf_id"), col("m.version").as("version"),
-          col("m.pages").cast("long").as("pages"),
-          col("m.encrypted").as("encrypted"),
-          col("m.linearized").as("linearized"))
-    })
-  )
-
-  // ---- q258 pdf fixtures: real header/trailer bytes, built not copied --
-  private def pdfClassic(version: String, pages: Int,
-      encrypted: Boolean = false, linearized: Boolean = false,
-      countAsRef: Boolean = false, brokenRoot: Boolean = false)
-      : Array[Byte] = {
-    val sb = new StringBuilder
-    sb.append(s"%PDF-$version\n")
-    if (linearized)
-      sb.append(s"1 0 obj\n<< /Linearized 1 /L 1234 /N $pages >>\nendobj\n")
-    sb.append("2 0 obj\n<< /Type /Catalog /PageLabels 7 0 R /Pages 3 0 R " +
-      ">>\nendobj\n")
-    sb.append("3 0 obj\n<< /Type /Pages /Kids [4 0 R] /Count " +
-      (if (countAsRef) "6 0 R" else pages.toString) + " >>\nendobj\n")
-    sb.append("4 0 obj\n<< /Type /Page /Parent 3 0 R >>\nendobj\n")
-    sb.append("xref\n0 5\ntrailer\n<< /Size 5 /ID [<41> <42>] /Root " +
-      (if (brokenRoot) "9" else "2") + " 0 R" +
-      (if (encrypted) " /Encrypt 5 0 R" else "") +
-      " >>\nstartxref\n9\n%%EOF\n")
-    sb.toString.getBytes("US-ASCII")
-  }
-  /** PDF 1.5+ shape: no `trailer` keyword — /Root and /Encrypt live in
-    * the cross-reference STREAM's dictionary, located via startxref. */
-  private def pdfXrefStream(version: String, pages: Int,
-      encrypted: Boolean = false, offsetPastEof: Boolean = false)
-      : Array[Byte] = {
-    val head = s"%PDF-$version\n" +
-      "1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n" +
-      s"2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count $pages >>\nendobj\n"
-    val xrefObj = "4 0 obj\n<< /Type /XRef /Size 5 /Root 1 0 R" +
-      (if (encrypted) " /Encrypt 5 0 R" else "") +
-      " /W [1 2 1] /Length 0 >>\nstream\nendstream\nendobj\n"
-    val off = if (offsetPastEof) 999999 else head.length
-    (head + xrefObj + s"startxref\n$off\n%%EOF\n").getBytes("US-ASCII")
-  }
-  /** Incremental update (ISO 32000-1 §7.5.6): the original page tree
-    * (/Count 3) plus an APPENDED newer definition of the same object
-    * (/Count 8) and a second trailer — the reader must report the
-    * newest. */
-  private def pdfIncremental: Array[Byte] = {
-    val orig = "%PDF-1.4\n" +
-      "1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n" +
-      "2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 3 >>\nendobj\n" +
-      "trailer\n<< /Size 4 /Root 1 0 R >>\nstartxref\n9\n%%EOF\n"
-    val update =
-      "2 0 obj\n<< /Type /Pages /Kids [3 0 R 5 0 R] /Count 8 >>\nendobj\n" +
-        "trailer\n<< /Size 6 /Root 1 0 R /Prev 9 >>\nstartxref\n99\n%%EOF\n"
-    (orig + update).getBytes("US-ASCII")
-  }
-  /** PDF 1.5+ compressed-catalog shape (r20, the r19 depth item): the
-    * catalog (1 0) and page-tree root (2 0) live INSIDE a FlateDecoded
-    * `/Type /ObjStm` (3 0); no plain definition of either exists. The
-    * xref STREAM object (4 0) carries /Root and is located via
-    * startxref. `corruptDeflate` bit-flips the compressed body so the
-    * bounded inflate fails → null pages, never a throw. */
-  private def pdfObjStmCatalog(version: String, pages: Int,
-      corruptDeflate: Boolean = false): Array[Byte] = {
-    val o1 = "<< /Type /Catalog /Pages 2 0 R >>"
-    val o2 = s"<< /Type /Pages /Kids [5 0 R] /Count $pages >>"
-    val hdr = s"1 0 2 ${o1.length + 1}"
-    val first = hdr.length + 1
-    val decoded = (hdr + "\n" + o1 + " " + o2).getBytes("US-ASCII")
-    val defl = new java.util.zip.Deflater()
-    defl.setInput(decoded); defl.finish()
-    val buf = new Array[Byte](decoded.length + 64)
-    val n = defl.deflate(buf); defl.end()
-    val comp0 = java.util.Arrays.copyOf(buf, n)
-    val comp =
-      if (corruptDeflate) comp0.map(b => (b ^ 0x5a).toByte) else comp0
-    val head = s"%PDF-$version\n"
-    val objStm = s"3 0 obj\n<< /Type /ObjStm /N 2 /First $first " +
-      s"/Filter /FlateDecode /Length ${comp.length} >>\nstream\n"
-    val tail = "\nendstream\nendobj\n"
-    val xrefOff = head.length + objStm.length + comp.length + tail.length
-    val xrefObj = "4 0 obj\n<< /Type /XRef /Size 6 /Root 1 0 R " +
-      "/W [1 2 1] /Length 0 >>\nstream\nendstream\nendobj\n"
-    (head + objStm).getBytes("US-ASCII") ++ comp ++
-      (tail + xrefObj + s"startxref\n$xrefOff\n%%EOF\n")
-        .getBytes("US-ASCII")
-  }
-  private def pdfFixture: Seq[(Long, Array[Byte])] = Seq(
-    1L -> pdfClassic("1.4", 5),
-    2L -> pdfClassic("1.7", 12, linearized = true),
-    3L -> pdfClassic("1.6", 2, encrypted = true),
-    4L -> pdfXrefStream("1.5", 7),
-    5L -> pdfIncremental, // newest /Count wins: 8, not 3
-    // crawl payload with an HTTP-ish junk prefix; header inside 1024 B
-    6L -> ("HTTP/1.1 200 OK\r\nContent-Type: application/pdf\r\n\r\n"
-      .getBytes("US-ASCII") ++ pdfClassic("1.3", 1)),
-    7L -> "%PDF-1.".getBytes("US-ASCII"), // truncated header
-    8L -> "not a pdf at all".getBytes("UTF-8"),
-    9L -> pdfClassic("1.4", 5, countAsRef = true), // /Count 6 0 R
-    10L -> pdfClassic("1.4", 5, brokenRoot = true), // /Root -> no object
-    // truncated (unbalanced) trailer dict, no startxref fallback:
-    // version + linearized survive, pages/encrypted null
-    11L -> "%PDF-1.4\n1 0 obj\n<< /Type /Catalog >>\nendobj\ntrailer\n<< /Size 5 /Root 1 0 R\n"
-      .getBytes("US-ASCII"),
-    12L -> pdfXrefStream("1.5", 7, offsetPastEof = true),
-    // header past the 1024-byte spec window -> not a PDF
-    13L -> (Array.fill[Byte](1100)(' ') ++ pdfClassic("1.4", 5)),
-    14L -> pdfXrefStream("1.6", 4, encrypted = true),
-    // compressed catalog (r20): pages resolve THROUGH the FlateDecoded
-    // object stream; 16 bit-flips the deflate body -> null pages only
-    15L -> pdfObjStmCatalog("1.5", 9),
-    16L -> pdfObjStmCatalog("1.5", 9, corruptDeflate = true))
-
-  // ---- q251 image fixtures: real header bytes, built not copied --------
-  private def pngFixture(w: Int, h: Int, colorType: Int,
-      corruptCrc: Boolean = false): Array[Byte] = {
-    val sig = Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
-      .map(_.toByte)
-    val typeAndData = "IHDR".getBytes("US-ASCII") ++
-      java.nio.ByteBuffer.allocate(13).putInt(w).putInt(h)
-        .put(8.toByte).put(colorType.toByte)
-        .put(0.toByte).put(0.toByte).put(0.toByte).array()
-    val crc = new java.util.zip.CRC32
-    crc.update(typeAndData)
-    val crcV = (if (corruptCrc) crc.getValue ^ 0xffL else crc.getValue).toInt
-    sig ++ java.nio.ByteBuffer.allocate(4).putInt(13).array() ++
-      typeAndData ++ java.nio.ByteBuffer.allocate(4).putInt(crcV).array()
-  }
-  private def jpegFixture(w: Int, h: Int, ch: Int,
-      sofMarker: Int = 0xc0): Array[Byte] = {
-    val sofLen = 8 + 3 * ch
-    val bb = java.nio.ByteBuffer.allocate(8 + 2 + sofLen)
-    bb.put(0xff.toByte).put(0xd8.toByte)
-    bb.put(Array(0xff, 0xfe, 0, 4, 'h', 'i').map(_.toByte)) // COM segment
-    bb.put(0xff.toByte).put(sofMarker.toByte).putShort(sofLen.toShort)
-    bb.put(8.toByte).putShort(h.toShort).putShort(w.toShort).put(ch.toByte)
-    (0 until ch).foreach(i =>
-      bb.put((i + 1).toByte).put(0x11.toByte).put(0.toByte))
-    bb.array()
-  }
-  private def gifFixture(w: Int, h: Int): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(13)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("GIF89a".getBytes("US-ASCII"))
-    bb.putShort(w.toShort).putShort(h.toShort)
-    bb.put(0.toByte).put(0.toByte).put(0.toByte)
-    bb.array()
-  }
-  private def imageFixture: Seq[(Long, Array[Byte])] = Seq(
-    1L -> pngFixture(640, 480, 6), // RGBA
-    2L -> pngFixture(32, 8, 0), // grayscale
-    3L -> jpegFixture(1024, 768, 3), // baseline color
-    4L -> jpegFixture(17, 1, 1), // progressive would be 0xc2 — same header
-    5L -> gifFixture(320, 200),
-    6L -> jpegFixture(1024, 768, 3).dropRight(9), // truncated mid-SOF
-    7L -> pngFixture(640, 480, 6, corruptCrc = true), // bit-flipped IHDR
-    8L -> "not an image at all".getBytes("UTF-8"),
-    // SOS where the frame header should be: desync/no-SOF stream
-    9L -> Array(0xff, 0xd8, 0xff, 0xda, 0, 4, 0, 0).map(_.toByte))
-
-  // ---- q252 media fixtures: real container bytes, built not copied -----
-  private def wavFixture(fmtTag: Int, ch: Int, rate: Int, bits: Int,
-      dataBytes: Int, withData: Boolean = true): Array[Byte] = {
-    val byteRate = rate * ch * bits / 8
-    val fmtChunk = java.nio.ByteBuffer.allocate(24)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    fmtChunk.put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(fmtTag.toShort).putShort(ch.toShort)
-      .putInt(rate).putInt(byteRate)
-      .putShort((ch * bits / 8).toShort).putShort(bits.toShort)
-    val dataLen = if (withData) 8 + dataBytes else 0
-    val riffSize = 4 + 24 + dataLen
-    val bb = java.nio.ByteBuffer.allocate(8 + riffSize)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("US-ASCII")).putInt(riffSize)
-      .put("WAVE".getBytes("US-ASCII")).put(fmtChunk.array())
-    if (withData)
-      bb.put("data".getBytes("US-ASCII")).putInt(dataBytes)
-        .put(new Array[Byte](dataBytes))
-    bb.array()
-  }
-  private def mp4Box(typ: String, payload: Array[Byte]): Array[Byte] =
-    java.nio.ByteBuffer.allocate(8 + payload.length)
-      .putInt(8 + payload.length).put(typ.getBytes("US-ASCII"))
-      .put(payload).array()
-  private def ftypBox(brand: String): Array[Byte] =
-    mp4Box("ftyp", brand.getBytes("US-ASCII") ++
-      java.nio.ByteBuffer.allocate(4).array() ++
-      "isommp41".getBytes("US-ASCII"))
-  private def mvhdBox(version: Int, timescale: Int, duration: Long)
-      : Array[Byte] = {
-    // spec-sized payload: v0 = 100 bytes, v1 = 112 (ISO 14496-12 §8.2.2)
-    val bb = java.nio.ByteBuffer.allocate(if (version == 0) 100 else 112)
-    bb.put(version.toByte).put(new Array[Byte](3)) // version + flags
-    if (version == 0)
-      bb.putInt(0).putInt(0).putInt(timescale).putInt(duration.toInt)
-    else
-      bb.putLong(0L).putLong(0L).putInt(timescale).putLong(duration)
-    bb.putInt(0x00010000).putShort(0x0100.toShort) // rate 1.0, volume 1.0
-    // reserved(10) + unity matrix(36) + predefined(24) + next_track(4)
-    bb.put(new Array[Byte](10))
-    bb.putInt(0x00010000).putInt(0).putInt(0)
-      .putInt(0).putInt(0x00010000).putInt(0)
-      .putInt(0).putInt(0).putInt(0x40000000)
-    bb.put(new Array[Byte](24)).putInt(-1)
-    mp4Box("mvhd", bb.array())
-  }
-  /** One trak with a single stsd sample entry: codec fourcc + a
-    * spec-sized zero body (86-byte visual entry / 36-byte audio entry —
-    * the parser reads only the entry header, the size keeps the geometry
-    * honest). */
-  private def trakBox(codec: String): Array[Byte] = {
-    val entryBody = new Array[Byte](if (codec.endsWith("a")) 28 else 78)
-    val entry = java.nio.ByteBuffer.allocate(8 + entryBody.length)
-      .putInt(8 + entryBody.length).put(codec.getBytes("US-ASCII"))
-      .put(entryBody).array()
-    val stsdPayload = java.nio.ByteBuffer.allocate(8 + entry.length)
-      .putInt(0).putInt(1).put(entry).array() // ver/flags + entry_count
-    mp4Box("trak", mp4Box("mdia", mp4Box("minf",
-      mp4Box("stbl", mp4Box("stsd", stsdPayload)))))
-  }
-  private def mp4Fixture(brand: String, mvhdVersion: Int, timescale: Int,
-      duration: Long, withMoov: Boolean = true,
-      codecs: Seq[String] = Nil): Array[Byte] =
-    ftypBox(brand) ++
-      (if (withMoov)
-        mp4Box("moov", mvhdBox(mvhdVersion, timescale, duration) ++
-          codecs.flatMap(trakBox).toArray)
-      else Array.emptyByteArray) ++
-      mp4Box("mdat", Array[Byte](1, 2, 3, 4, 5, 6, 7, 8))
-  /** RF64 (EBU Tech 3306): sentinel 32-bit sizes; real sizes in a ds64
-    * chunk that must lead. `ds64First = false` builds the spec violation
-    * the parser must refuse. */
-  private def rf64Fixture(ch: Int, rate: Int, bits: Int, dataBytes: Int,
-      ds64First: Boolean = true): Array[Byte] = {
-    val byteRate = rate * ch * bits / 8
-    val fmt = java.nio.ByteBuffer.allocate(24)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    fmt.put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1.toShort).putShort(ch.toShort).putInt(rate).putInt(byteRate)
-      .putShort((ch * bits / 8).toShort).putShort(bits.toShort)
-    val riffSize = 4 + (8 + 28) + 24 + (8 + dataBytes)
-    val ds64 = java.nio.ByteBuffer.allocate(36)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    ds64.put("ds64".getBytes("US-ASCII")).putInt(28)
-      .putLong(riffSize.toLong).putLong(dataBytes.toLong)
-      .putLong(if (byteRate > 0) dataBytes.toLong / (ch * bits / 8) else 0L)
-      .putInt(0)
-    val bb = java.nio.ByteBuffer.allocate(8 + riffSize)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RF64".getBytes("US-ASCII")).putInt(-1)
-      .put("WAVE".getBytes("US-ASCII"))
-    if (ds64First) bb.put(ds64.array()).put(fmt.array())
-    else bb.put(fmt.array()).put(ds64.array())
-    bb.put("data".getBytes("US-ASCII")).putInt(-1)
-      .put(new Array[Byte](dataBytes))
-    bb.array()
-  }
-  /** Fragmented-MP4 pieces (ISO 14496-12 §8.8): trak with explicit
-    * track_id + media timescale, mvex/mehd, and a one-traf moof. */
-  private def trakFragBox(trackId: Int, timescale: Int,
-      codec: String): Array[Byte] = {
-    val tkhd = mp4Box("tkhd", java.nio.ByteBuffer.allocate(84)
-      .putInt(0).putInt(0).putInt(0).putInt(trackId).array())
-    val mdhd = mp4Box("mdhd", java.nio.ByteBuffer.allocate(24)
-      .putInt(0).putInt(0).putInt(0).putInt(timescale).array())
-    val entryBody = new Array[Byte](28)
-    val entry = java.nio.ByteBuffer.allocate(8 + entryBody.length)
-      .putInt(8 + entryBody.length).put(codec.getBytes("US-ASCII"))
-      .put(entryBody).array()
-    val stsd = mp4Box("stsd", java.nio.ByteBuffer.allocate(8 + entry.length)
-      .putInt(0).putInt(1).put(entry).array())
-    mp4Box("trak", tkhd ++
-      mp4Box("mdia", mdhd ++ mp4Box("minf", mp4Box("stbl", stsd))))
-  }
-  private def mvexBox(fragDur: Long): Array[Byte] = {
-    val mehd = mp4Box("mehd", java.nio.ByteBuffer.allocate(8)
-      .putInt(0).putInt(fragDur.toInt).array())
-    val trex = mp4Box("trex", java.nio.ByteBuffer.allocate(24)
-      .putInt(0).putInt(1).putInt(1).putInt(0).putInt(0).putInt(0).array())
-    mp4Box("mvex", mehd ++ trex)
-  }
-  private def moofBox(trackId: Int, n: Int, defDur: Option[Int],
-      sampleDurs: Option[Seq[Int]], overrun: Boolean = false): Array[Byte] = {
-    val tfhdBody = java.nio.ByteBuffer
-      .allocate(8 + (if (defDur.isDefined) 4 else 0))
-    tfhdBody.putInt(if (defDur.isDefined) 0x8 else 0x0).putInt(trackId)
-    defDur.foreach(tfhdBody.putInt)
-    val durs = sampleDurs.getOrElse(Nil)
-    val trunBody = java.nio.ByteBuffer.allocate(8 + 4 * durs.size)
-    trunBody.putInt(if (sampleDurs.isDefined) 0x100 else 0x0)
-      .putInt(if (overrun) n + 1000 else n)
-    durs.foreach(trunBody.putInt)
-    val mfhd = mp4Box("mfhd", java.nio.ByteBuffer.allocate(8)
-      .putInt(0).putInt(1).array())
-    mp4Box("moof", mfhd ++ mp4Box("traf",
-      mp4Box("tfhd", tfhdBody.array()) ++ mp4Box("trun", trunBody.array())))
-  }
-
-  // EBML/Matroska builders (r17 item 6): RFC 8794 VINTs emitted minimal-
-  // length; ids carry their marker byte(s) verbatim.
-  private def ebmlVint(v: Long): Array[Byte] = {
-    var n = 1
-    while (v >= (1L << (7 * n)) - 1) n += 1 // all-ones = "unknown", avoid
-    val out = new Array[Byte](n)
-    out(0) = ((1 << (8 - n)) |
-      ((v >> (8 * (n - 1))) & ((1 << (8 - n)) - 1))).toByte
-    (1 until n).foreach(k => out(k) = ((v >> (8 * (n - 1 - k))) & 0xff).toByte)
-    out
-  }
-  private def ebmlId(id: Long): Array[Byte] = {
-    val n = if (id <= 0xffL) 1 else if (id <= 0xffffL) 2
-      else if (id <= 0xffffffL) 3 else 4
-    (0 until n).reverse.map(k => ((id >> (8 * k)) & 0xff).toByte).toArray
-  }
-  private def ebmlEl(id: Long, payload: Array[Byte]): Array[Byte] =
-    ebmlId(id) ++ ebmlVint(payload.length.toLong) ++ payload
-  private def ebmlUint(id: Long, v: Long, width: Int): Array[Byte] =
-    ebmlEl(id,
-      (0 until width).reverse.map(k => ((v >> (8 * k)) & 0xff).toByte).toArray)
-  private def ebmlFloat8(id: Long, v: Double): Array[Byte] =
-    ebmlEl(id, java.nio.ByteBuffer.allocate(8).putDouble(v).array())
-  private def ebmlStr(id: Long, s: String): Array[Byte] =
-    ebmlEl(id, s.getBytes("US-ASCII"))
-  /** Matroska/webm container: EBML header (DocType) + Segment with Info
-    * (TimestampScale + optional float Duration), Tracks (CodecID per
-    * track; optional Audio with SamplingFrequency/Channels/BitDepth>0),
-    * and one Cluster. `unknownSegment` writes the Segment size as the
-    * 1-byte all-ones VINT — the live-streaming form. */
-  private def mkvFixture(docType: String, tsScale: Long, durTicks: Double,
-      tracks: Seq[(String, Option[(Double, Int, Int)])],
-      withDuration: Boolean = true,
-      unknownSegment: Boolean = false): Array[Byte] = {
-    val header = ebmlEl(0x1A45DFA3L,
-      ebmlUint(0x4286L, 1, 1) ++ // EBMLVersion — exercises the skip path
-        ebmlStr(0x4282L, docType) ++
-        ebmlUint(0x4287L, 4, 1)) // DocTypeVersion
-    val info = ebmlEl(0x1549A966L,
-      ebmlUint(0x2AD7B1L, tsScale, 3) ++
-        (if (withDuration) ebmlFloat8(0x4489L, durTicks)
-         else Array.emptyByteArray))
-    val trackEls = tracks.flatMap { case (codec, audio) =>
-      ebmlEl(0xAEL,
-        ebmlUint(0xD7L, 1, 1) ++ // TrackNumber — skipped by the parser
-          ebmlStr(0x86L, codec) ++
-          audio.map { case (sr, ch, bits) =>
-            ebmlEl(0xE1L, ebmlFloat8(0xB5L, sr) ++ ebmlUint(0x9FL, ch, 1) ++
-              (if (bits > 0) ebmlUint(0x6264L, bits, 1)
-               else Array.emptyByteArray))
-          }.getOrElse(Array.emptyByteArray))
-    }.toArray
-    val cluster = ebmlEl(0x1F43B675L, ebmlUint(0xE7L, 0, 1))
-    val segPayload = info ++ ebmlEl(0x1654AE6BL, trackEls) ++ cluster
-    header ++ (if (unknownSegment)
-      ebmlId(0x18538067L) ++ Array(0xff.toByte) ++ segPayload
-    else ebmlEl(0x18538067L, segPayload))
-  }
-
-  private def mediaFixture: Seq[(Long, Array[Byte])] = Seq(
-    // 8820 data bytes / 176400 B/s = 50 ms stereo 16-bit PCM
-    1L -> wavFixture(1, 2, 44100, 16, 8820),
-    // 4000 / 32000 = 125 ms mono 32-bit float
-    2L -> wavFixture(3, 1, 8000, 32, 4000),
-    // mvhd v0: 5000 / 1000 ts = 5000 ms; video+audio traks → "avc1+mp4a"
-    3L -> mp4Fixture("isom", 0, 1000, 5000L, codecs = Seq("avc1", "mp4a")),
-    // mvhd v1: 1500 / 600 ts = 2500 ms (non-integer seconds exercises the
-    // overflow-safe two-step scaling); audio-only → "mp4a"
-    4L -> mp4Fixture("mp42", 1, 600, 1500L, codecs = Seq("mp4a")),
-    // brand-only init segment: no moov, duration stays null, row survives
-    5L -> mp4Fixture("isom", 0, 0, 0L, withMoov = false),
-    // truncated mid-data: RIFF size overruns the buffer
-    6L -> wavFixture(1, 2, 44100, 16, 8820).dropRight(100),
-    // no data chunk at all
-    7L -> wavFixture(1, 2, 44100, 16, 0, withData = false),
-    // zero channels in fmt
-    8L -> wavFixture(1, 0, 44100, 16, 400),
-    // second box declares a size past EOF
-    9L -> (ftypBox("isom") ++ java.nio.ByteBuffer.allocate(8)
-      .putInt(4096).put("mdat".getBytes("US-ASCII")).array()),
-    // moov whose interior does not tile (garbage child box)
-    10L -> (ftypBox("isom") ++
-      mp4Box("moov", Array[Byte](0, 0, 0, 99, 'x', 'y'))),
-    11L -> "not media at all, just text".getBytes("UTF-8"),
-    12L -> "RIFFxxxx".getBytes("US-ASCII"),
-    // r17 depth rows (RF64 + fragmented MP4 + the r16 review guards):
-    // RF64 via ds64 indirection — 288000 B / 288000 B/s = 1000 ms
-    13L -> rf64Fixture(2, 48000, 24, 288000),
-    // fMP4 init segment with mvex/mehd: mvhd duration 0, total 7500
-    // ticks @ 1000 Hz from mehd → 7500 ms
-    14L -> (ftypBox("isom") ++ mp4Box("moov",
-      mvhdBox(0, 1000, 0L) ++ trakFragBox(1, 1000, "avc1") ++
-        mvexBox(7500L))),
-    // fMP4 without mehd: duration = moof sum on track 1 (media
-    // timescale 600): 10 × 60 default + (120+180+300) per-sample
-    // = 1200 ticks → 2000 ms
-    15L -> (ftypBox("isom") ++ mp4Box("moov",
-      mvhdBox(0, 1000, 0L) ++ trakFragBox(1, 600, "avc1")) ++
-      moofBox(1, 10, Some(60), None) ++
-      moofBox(1, 3, None, Some(Seq(120, 180, 300)))),
-    // RF64 whose ds64 is not the first chunk — spec violation, null
-    16L -> rf64Fixture(2, 48000, 24, 4800, ds64First = false),
-    // moof trun declares more samples than its box holds — corrupt, null
-    17L -> (ftypBox("isom") ++ mp4Box("moov",
-      mvhdBox(0, 1000, 0L) ++ trakFragBox(1, 600, "avc1")) ++
-      moofBox(1, 3, None, Some(Seq(120, 180, 300)), overrun = true)),
-    // WAV u32 sample rate past Int.MaxValue — must be null, not wrapped
-    18L -> wavFixture(1, 2, Int.MinValue, 16, 400),
-    // mvhd all-ones 'duration unknown' sentinel: row alive, duration null
-    19L -> mp4Fixture("isom", 0, 1000, 0xFFFFFFFFL, codecs = Seq("mp4a")),
-    // r18 rows 20-25: EBML/Matroska (r17 VERDICT item 6).
-    // webm VP9+Opus, default 1e6-ns ticks: 12345 ticks = 12345 ms; the
-    // audio track carries rate/channels, Opus ships no BitDepth
-    20L -> mkvFixture("webm", 1000000L, 12345.0,
-      Seq("V_VP9" -> None, "A_OPUS" -> Some((48000.0, 2, 0)))),
-    // matroska PCM audio, 2e6-ns ticks: 500.25 ticks → 1000.5 → 1000 ms
-    21L -> mkvFixture("matroska", 2000000L, 500.25,
-      Seq("A_PCM/INT/LIT" -> Some((8000.0, 1, 24)))),
-    // live-stream form: unknown-size Segment, no Duration element —
-    // row alive, duration null (the mp4 brand-only posture)
-    22L -> mkvFixture("webm", 1000000L, 0.0,
-      Seq("V_VP8" -> None), withDuration = false, unknownSegment = true),
-    // truncated mid-cluster: an element's declared size overruns → null
-    23L -> mkvFixture("webm", 1000000L, 12345.0,
-      Seq("V_VP9" -> None)).dropRight(3),
-    // a 0x00 byte where an element id belongs: invalid VINT → null
-    24L -> (mkvFixture("webm", 1000000L, 1.0, Seq("V_VP9" -> None))
-      ++ Array[Byte](0)),
-    // empty DocType string → null (no brand to report)
-    25L -> mkvFixture("", 1000000L, 1.0, Seq("V_VP9" -> None)))
-
-  /** Shared q246/q247 prepared-frame fixture: 20 sites, category picked
-    * round-robin from the variant's DISTINCT list plus one out-of-list
-    * category (`ACADEMIA` — global counts include it, feature columns
-    * never see it), whole-metre distances in [0, 600]. Whole-number
-    * doubles keep every aggregate (min/max/avg) bit-exact vs DuckDB
-    * regardless of partial-aggregation order. */
-  private def variantFixture(base: DataFrame,
-      v: graft.pipelines.SiteScoringPipeline.SiteVariant): DataFrame = {
-    val pick = v.featureCategories.distinct :+ "ACADEMIA"
-    val catArr = array(pick.map(lit): _*)
-    base.select(
-      (col("o_orderkey") % 20).cast("long").as("rst_cd"),
-      element_at(catArr,
-        (((col("o_orderkey") * 13) % pick.size) + 1).cast("int"))
-        .as("poi_category"),
-      ((col("o_orderkey") * 7919) % 601).cast("double").as("distance_mtrs"))
-  }
-
-  /** Literal WASDE-shaped sheet rows (FIXTURES.md §9 features: footnote
-    * markers, group rows, EST/PROJ year labels, blank continuation
-    * geography, NA/'' cells, Selected Other skip). */
-  /** Decoded `(sheet, rowIdx, cells)` rows → parsed supply/use table with
-    * the q37 output columns. Shared by q73/q74. Absent trailing cells of
-    * ragged rows read back as "" — must be try_element_at (ANSI element_at
-    * THROWS on out-of-bounds index, so a coalesce alone never sees null). */
-  private def wasdeFromDecodedRows(rows: DataFrame): DataFrame = {
-    val cellCols = Seq("geo", "beginning", "production", "imports",
-      "dom_feed", "dom_total", "exports", "ending")
-    val table = rows.select(
-      Seq(col("sheet"), col("rowIdx")) ++ cellCols.zipWithIndex.map {
-        case (n, i) =>
-          coalesce(try_element_at(col("cells"), lit(i + 1)), lit("")).as(n)
-      }: _*)
-    graft.pipelines.WasdeTransforms.parseSupplyUse(table)
-      .select(col("sheet"), col("grupo"), col("tipo"), col("harvest"),
-        col("geography"), col("orden").cast("long").as("orden"),
-        col("beginning"), col("production"), col("imports"), col("dom_feed"),
-        col("dom_total"), col("exports"), col("ending"),
-        col("total_use"), col("stocks_to_use"))
-  }
-
-  /** The committed golden workbook (tools/MakeFixtures regenerates it). */
-  private[graft] def wasdeXlsxBytes: Array[Byte] = {
-    val in = getClass.getResourceAsStream("/graft/fixtures/wasde.xlsx")
-    require(in != null, "missing resource /graft/fixtures/wasde.xlsx")
-    try in.readAllBytes() finally in.close()
-  }
-
-  /** The same workbook in legacy BIFF8 (tools/MakeFixtures). */
-  private[graft] def wasdeXlsBytes: Array[Byte] = {
-    val in = getClass.getResourceAsStream("/graft/fixtures/wasde.xls")
-    require(in != null, "missing resource /graft/fixtures/wasde.xls")
-    try in.readAllBytes() finally in.close()
-  }
-
-  private val wasdeFixture: Seq[(String, Long, String, String, String, String, String, String, String, String)] = Seq(
-    ("p18", 0L, "2025/26 (Est.) 2/", "", "", "", "", "", "", ""),
-    ("p18", 1L, "World 3/", "", "", "", "", "", "", ""),
-    ("p18", 2L, "Major Exporters", "", "", "", "", "", "", ""),
-    ("p18", 3L, "Brazil", "1", "2", "3", "4", "5", "6", "7"),
-    ("p18", 4L, "", "9", "9", "NA", "", "2", "1", "4"),
-    ("p18", 5L, "Selected Other", "0", "0", "0", "0", "0", "0", "0"),
-    ("p18", 6L, "2025/26 (Proj.)", "", "", "", "", "", "", ""),
-    ("p18", 7L, "Argentina", "2", "4", "0", "1", "2", "2", "8"),
-    ("p18", 8L, "Major Importers", "", "", "", "", "", "", ""),
-    ("p18", 9L, "China 10/", "5", "0", "98", "", "101", "0", "30"),
-    ("p19", 0L, "2025/26 (Proj.)", "", "", "", "", "", "", ""),
-    ("p19", 1L, "World", "", "", "", "", "", "", ""),
-    ("p19", 2L, "United States", "10", "80", "1", "40", "55", "20", "16"))
-
-  /** q30's oracle, generated: 16 nibble projections, 64 bit-sums, 4 chunk
-    * assemblies — the exact integer lattice the Spark side computes. */
-  private def q30OracleSql: String = {
-    val nibCols = (0 until 16)
-      .map(q => s"strpos('0123456789abcdef', substring(md5(t), ${q + 1}, 1)) - 1 AS nib$q")
-      .mkString(",\n  ")
-    val bitSums = (0 until 64)
-      .map(j => s"sum((nib${j / 4} >> ${3 - j % 4}) & 1) AS s$j")
-      .mkString(",\n  ")
-    val chunks = (0 until 4).map { c =>
-      val terms = (0 until 16)
-        .map(b => s"(CASE WHEN 2*s${16 * c + b} - n >= 0 THEN ${1L << b} ELSE 0 END)")
-        .mkString(" + ")
-      s"CAST($terms AS BIGINT) AS chunk$c"
-    }.mkString(",\n ")
-    s"""WITH toks AS (
-       |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS t
-       |  FROM documents WHERE length(trim(text)) > 0),
-       |nibs AS (SELECT doc_id,
-       |  $nibCols
-       | FROM toks),
-       |sums AS (SELECT doc_id, count(*) AS n,
-       |  $bitSums
-       | FROM nibs GROUP BY doc_id)
-       |SELECT doc_id,
-       | $chunks
-       |FROM sums""".stripMargin
-  }
-
-  /** Lattice-hyperplane LSH CTEs over embeddings, ending in
-    * sims(id_a, id_b, sim) — within-bucket exact cosine pairs. Shared by
-    * q32 (pair listing) and q94 (near-dup verdicts). */
-  private val latticeSimCtes: String =
-    """u AS (
-      |  SELECT vec_id, unnest(embedding) AS x,
-      |         unnest(range(0, len(embedding))) AS j
-      |  FROM embeddings),
-      |lanes AS (SELECT unnest(range(0, 4)) AS i),
-      |proj AS (
-      |  SELECT u.vec_id, l.i,
-      |    sum(CAST(x AS DOUBLE) * CAST((l.i * 31 + j * 17) % 7 - 3 AS DOUBLE)) AS p
-      |  FROM u CROSS JOIN lanes l GROUP BY u.vec_id, l.i),
-      |sig AS (
-      |  SELECT vec_id,
-      |    sum(CASE WHEN p >= 0 THEN CAST(pow(2, i) AS BIGINT) ELSE 0 END) AS bucket
-      |  FROM proj GROUP BY vec_id),
-      |nrm AS (
-      |  SELECT vec_id, sqrt(sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nrm
-      |  FROM u GROUP BY vec_id),
-      |pairs AS (
-      |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-      |  FROM sig a JOIN sig b ON a.bucket = b.bucket AND a.vec_id < b.vec_id),
-      |dots AS (
-      |  SELECT p.id_a, p.id_b,
-      |    sum(CAST(ua.x AS DOUBLE) * CAST(ub.x AS DOUBLE)) AS dp
-      |  FROM pairs p
-      |  JOIN u ua ON ua.vec_id = p.id_a
-      |  JOIN u ub ON ub.vec_id = p.id_b AND ua.j = ub.j
-      |  GROUP BY p.id_a, p.id_b),
-      |sims AS (
-      |  SELECT d.id_a, d.id_b, d.dp / (na.nrm * nb.nrm) AS sim
-      |  FROM dots d
-      |  JOIN nrm na ON d.id_a = na.vec_id
-      |  JOIN nrm nb ON d.id_b = nb.vec_id)""".stripMargin
-
-  /** q254's multi-table lattice chain: 2 tables × 4 bits = 8 planes from
-    * the SAME lattice stream (plane = tbl·4 + i, so table 0 reproduces
-    * [[latticeSimCtes]]'s buckets exactly), per-(table, bucket) collision
-    * join, DISTINCT pair dedup across tables, then the identical exact
-    * cosine verify. */
-  private val latticeSimMultiCtes: String =
-    """u AS (
-      |  SELECT vec_id, unnest(embedding) AS x,
-      |         unnest(range(0, len(embedding))) AS j
-      |  FROM embeddings),
-      |lanes AS (SELECT unnest(range(0, 8)) AS i),
-      |proj AS (
-      |  SELECT u.vec_id, l.i,
-      |    sum(CAST(x AS DOUBLE) * CAST((l.i * 31 + j * 17) % 7 - 3 AS DOUBLE)) AS p
-      |  FROM u CROSS JOIN lanes l GROUP BY u.vec_id, l.i),
-      |sig AS (
-      |  SELECT vec_id, CAST(i // 4 AS BIGINT) AS tbl,
-      |    sum(CASE WHEN p >= 0 THEN CAST(pow(2, i % 4) AS BIGINT) ELSE 0 END) AS bucket
-      |  FROM proj GROUP BY vec_id, i // 4),
-      |nrm AS (
-      |  SELECT vec_id, sqrt(sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nrm
-      |  FROM u GROUP BY vec_id),
-      |pairs AS (
-      |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-      |  FROM sig a JOIN sig b ON a.tbl = b.tbl AND a.bucket = b.bucket
-      |    AND a.vec_id < b.vec_id),
-      |dots AS (
-      |  SELECT p.id_a, p.id_b,
-      |    sum(CAST(ua.x AS DOUBLE) * CAST(ub.x AS DOUBLE)) AS dp
-      |  FROM pairs p
-      |  JOIN u ua ON ua.vec_id = p.id_a
-      |  JOIN u ub ON ub.vec_id = p.id_b AND ua.j = ub.j
-      |  GROUP BY p.id_a, p.id_b),
-      |sims AS (
-      |  SELECT d.id_a, d.id_b, d.dp / (na.nrm * nb.nrm) AS sim
-      |  FROM dots d
-      |  JOIN nrm na ON d.id_a = na.vec_id
-      |  JOIN nrm nb ON d.id_b = nb.vec_id)""".stripMargin
-
-  /** q256's multi-probe lattice chain: the SAME single-table signature as
-    * [[latticeSimCtes]] (q32's buckets exactly), but pairs qualify at
-    * signature Hamming distance ≤ 1 — the declarative form of probing the
-    * home bucket plus every one-bit flip. popcount over the 4-bit XOR is
-    * spelled with explicit shifts so the mirror is self-evidently the
-    * operator's predicate. */
-  private val latticeSimProbeCtes: String =
-    """u AS (
-      |  SELECT vec_id, unnest(embedding) AS x,
-      |         unnest(range(0, len(embedding))) AS j
-      |  FROM embeddings),
-      |lanes AS (SELECT unnest(range(0, 4)) AS i),
-      |proj AS (
-      |  SELECT u.vec_id, l.i,
-      |    sum(CAST(x AS DOUBLE) * CAST((l.i * 31 + j * 17) % 7 - 3 AS DOUBLE)) AS p
-      |  FROM u CROSS JOIN lanes l GROUP BY u.vec_id, l.i),
-      |sig AS (
-      |  SELECT vec_id,
-      |    sum(CASE WHEN p >= 0 THEN CAST(pow(2, i) AS BIGINT) ELSE 0 END) AS bucket
-      |  FROM proj GROUP BY vec_id),
-      |nrm AS (
-      |  SELECT vec_id, sqrt(sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nrm
-      |  FROM u GROUP BY vec_id),
-      |pairs AS (
-      |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-      |  FROM sig a JOIN sig b ON a.vec_id < b.vec_id
-      |    AND ((xor(a.bucket, b.bucket) // 1) % 2
-      |       + (xor(a.bucket, b.bucket) // 2) % 2
-      |       + (xor(a.bucket, b.bucket) // 4) % 2
-      |       + (xor(a.bucket, b.bucket) // 8) % 2) <= 1),
-      |dots AS (
-      |  SELECT p.id_a, p.id_b,
-      |    sum(CAST(ua.x AS DOUBLE) * CAST(ub.x AS DOUBLE)) AS dp
-      |  FROM pairs p
-      |  JOIN u ua ON ua.vec_id = p.id_a
-      |  JOIN u ub ON ub.vec_id = p.id_b AND ua.j = ub.j
-      |  GROUP BY p.id_a, p.id_b),
-      |sims AS (
-      |  SELECT d.id_a, d.id_b, d.dp / (na.nrm * nb.nrm) AS sim
-      |  FROM dots d
-      |  JOIN nrm na ON d.id_a = na.vec_id
-      |  JOIN nrm nb ON d.id_b = nb.vec_id)""".stripMargin
-
-  /** q113's count-min bucket in DuckDB SQL: the top 12 bits (3 hex chars)
-    * of md5(r + "|" + word), mod 1024 — mirrors `Corpus.cmsBucket`'s
-    * `conv(substring(md5(...), 1, 3), 16, 10) % 1024`. */
-  private def cmsBucketSqlFor(r: String, w: String): String =
-    s"(('0x' || substring(md5(CAST($r AS VARCHAR) || '|' || $w), 1, 3))" +
-      "::INTEGER) % 1024"
-
-  /** MinHash lane-minima CTEs (toks → shingles → 16 md5 lanes) — shared by
-    * the LSH pair chain below and q96's streaming-dedup signature mirror. */
-  private def minhashLaneCtesFor(extraWhere: String): String =
-    s"""toks AS (
-      |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t
-      |  FROM documents WHERE length(trim(text)) > 0$extraWhere),
-      |sh AS (
-      |  SELECT doc_id, array_to_string(t[i:i+2], ' ') AS s
-      |  FROM toks,
-      |  LATERAL unnest(range(1,
-      |    (CASE WHEN len(t) = 0 THEN 0 ELSE greatest(len(t) - 2, 1) END) + 1)) AS u(i)),
-      |lanes AS (SELECT unnest(range(0, 16)) AS lane),
-      |minh AS (
-      |  SELECT doc_id, lane,
-      |    min(substring(md5(s) || md5(s), CAST(2*lane+1 AS INTEGER), 8)) AS h
-      |  FROM sh CROSS JOIN lanes GROUP BY doc_id, lane)""".stripMargin
-
-  private val minhashLaneCtes: String = minhashLaneCtesFor("")
-
-  /** Lane CTEs + the per-doc md5-of-lanes signature (the exact-dedup /
-    * streaming-dedup grouping key) — shared by q96 and q100. */
-  private val minhashSigCtes: String =
-    s"""$minhashLaneCtes,
-      |sigs AS (SELECT doc_id, md5(string_agg(h, '|' ORDER BY lane)) AS sig
-      |         FROM minh GROUP BY doc_id)""".stripMargin
-
-  /** Shared CTE chain producing the MinHash LSH candidate pairs (q29), also
-    * the edge source for q63's recursive-CTE connected components. */
-  private def minhashPairCtesFor(extraWhere: String): String =
-    s"""${minhashLaneCtesFor(extraWhere)},
-      |banded AS (
-      |  SELECT doc_id, CAST(lane // 4 AS BIGINT) AS band,
-      |         md5(string_agg(h, '|' ORDER BY lane)) AS bh
-      |  FROM minh GROUP BY doc_id, lane // 4),
-      |counted AS (
-      |  SELECT *, count(*) OVER (PARTITION BY band, bh) AS bucket_n FROM banded),
-      |pruned AS (
-      |  SELECT doc_id, band, bh FROM counted
-      |  WHERE bucket_n <= 1000 AND bucket_n > 1)""".stripMargin
-
-  private val minhashPairCtes: String = minhashPairCtesFor("")
-
-  private val minhashPairSelect: String =
-    """SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      |FROM pruned a JOIN pruned b
-      |  ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id""".stripMargin
-
-  /** q69's oracle: the 32-term Morton interleave over range-normalized
-    * keys, generated. `//` is exact floor division; Spark's double-divide +
-    * truncate agrees for these magnitudes (quotient error ≥ 1/range ≫ ulp). */
-  private def q69OracleSql: String = {
-    val terms = (0 until 16).flatMap { i =>
-      Seq(s"((a >> $i) & 1) * ${1L << (2 * i)}",
-        s"((b >> $i) & 1) * ${1L << (2 * i + 1)}")
-    }.mkString(" + ")
-    s"""WITH raw AS (
-       |  SELECT o_orderkey, o_custkey,
-       |    date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS day
-       |  FROM orders),
-       |r AS (SELECT min(o_custkey) AS cklo, max(o_custkey) AS ckhi,
-       |             min(day) AS dlo, max(day) AS dhi FROM raw),
-       |k AS (
-       |  SELECT o_orderkey,
-       |    ((o_custkey - r.cklo) * 65535) // (r.ckhi - r.cklo) AS a,
-       |    ((day - r.dlo) * 65535) // (r.dhi - r.dlo) AS b
-       |  FROM raw CROSS JOIN r)
-       |SELECT o_orderkey, CAST($terms AS BIGINT) AS z FROM k""".stripMargin
-  }
-
-  /** 16 unrolled Hilbert walk levels as chained subqueries — per-level
-    * state (x, y, d) materializes as row VALUES, so the oracle mirrors the
-    * native expression's loop without expression-tree blow-up. */
-  private def q203OracleSql: String = {
-    val steps = (0 until 16).map { i =>
-      val s = 1L << (15 - i)
-      val prev = if (i == 0) "k" else s"h${i - 1}"
-      s"""h$i AS (SELECT o_orderkey,
-         |  CASE WHEN ry = 0 THEN (CASE WHEN rx = 1 THEN ${s - 1} - y ELSE y END) ELSE x END AS x,
-         |  CASE WHEN ry = 0 THEN (CASE WHEN rx = 1 THEN ${s - 1} - x ELSE x END) ELSE y END AS y,
-         |  d + CAST($s AS BIGINT) * $s * (CASE WHEN rx = 0 AND ry = 0 THEN 0
-         |    WHEN rx = 0 THEN 1 WHEN ry = 0 THEN 3 ELSE 2 END) AS d
-         |  FROM (SELECT o_orderkey, x, y, d,
-         |    CASE WHEN (x & $s) > 0 THEN 1 ELSE 0 END AS rx,
-         |    CASE WHEN (y & $s) > 0 THEN 1 ELSE 0 END AS ry FROM $prev))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH raw AS (
-       |  SELECT o_orderkey, o_custkey,
-       |    date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS day
-       |  FROM orders),
-       |r AS (SELECT min(o_custkey) AS cklo, max(o_custkey) AS ckhi,
-       |             min(day) AS dlo, max(day) AS dhi FROM raw),
-       |k AS (
-       |  SELECT o_orderkey,
-       |    ((o_custkey - r.cklo) * 65535) // (r.ckhi - r.cklo) AS x,
-       |    ((day - r.dlo) * 65535) // (r.dhi - r.dlo) AS y,
-       |    CAST(0 AS BIGINT) AS d
-       |  FROM raw CROSS JOIN r),
-       |$steps
-       |SELECT o_orderkey, CAST(d AS BIGINT) AS h FROM h15""".stripMargin
-  }
-
-  def oracleSql: Map[String, String] = { val base = Map(
-    "q69_zorder_key" -> q69OracleSql,
-    "q203_hilbert_key" -> q203OracleSql,
-    "q206_embedding_profile" ->
-      """WITH u AS (
-        |  SELECT unnest(range(0, len(embedding))) AS j,
-        |         CAST(unnest(embedding) AS DOUBLE) AS x
-        |  FROM embeddings),
-        |m AS (SELECT j, x, CAST(round(x * 1000000.0) AS BIGINT) AS xm FROM u)
-        |SELECT CAST(j AS BIGINT) AS j, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(xm) AS BIGINT) AS sum_micro,
-        |  CAST(sum(xm * xm) AS BIGINT) AS sumsq_micro,
-        |  min(x) AS min_x, max(x) AS max_x
-        |FROM m GROUP BY j""".stripMargin,
-
-    "q205_fk_integrity" ->
-      """WITH rel AS (
-        |  SELECT 'lineitem.orderkey->orders' AS relation,
-        |    (SELECT count(*) FROM lineitem) AS n_child,
-        |    (SELECT count(*) FROM lineitem WHERE l_orderkey IS NULL) AS n_null_fk,
-        |    (SELECT count(*) FROM lineitem c WHERE c.l_orderkey IS NOT NULL
-        |      AND NOT EXISTS (SELECT 1 FROM orders p
-        |        WHERE p.o_orderkey = c.l_orderkey)) AS n_orphan
-        |  UNION ALL
-        |  SELECT 'orders.custkey->customer',
-        |    (SELECT count(*) FROM orders),
-        |    (SELECT count(*) FROM orders WHERE o_custkey IS NULL),
-        |    (SELECT count(*) FROM orders c WHERE c.o_custkey IS NOT NULL
-        |      AND NOT EXISTS (SELECT 1 FROM customer p
-        |        WHERE p.c_custkey = c.o_custkey))
-        |  UNION ALL
-        |  SELECT 'customer.nationkey->nation',
-        |    (SELECT count(*) FROM customer),
-        |    (SELECT count(*) FROM customer WHERE c_nationkey IS NULL),
-        |    (SELECT count(*) FROM customer c WHERE c.c_nationkey IS NOT NULL
-        |      AND NOT EXISTS (SELECT 1 FROM nation p
-        |        WHERE p.n_nationkey = c.c_nationkey))
-        |  UNION ALL
-        |  SELECT 'supplier.nationkey->nation',
-        |    (SELECT count(*) FROM supplier),
-        |    (SELECT count(*) FROM supplier WHERE s_nationkey IS NULL),
-        |    (SELECT count(*) FROM supplier c WHERE c.s_nationkey IS NOT NULL
-        |      AND NOT EXISTS (SELECT 1 FROM nation p
-        |        WHERE p.n_nationkey = c.s_nationkey))
-        |  UNION ALL
-        |  SELECT 'events.user_id->customer',
-        |    (SELECT count(*) FROM events),
-        |    (SELECT count(*) FROM events WHERE user_id IS NULL),
-        |    (SELECT count(*) FROM events c WHERE c.user_id IS NOT NULL
-        |      AND NOT EXISTS (SELECT 1 FROM customer p
-        |        WHERE p.c_custkey = c.user_id)))
-        |SELECT relation, CAST(n_child AS BIGINT) AS n_child,
-        |  CAST(n_null_fk AS BIGINT) AS n_null_fk,
-        |  CAST(n_orphan AS BIGINT) AS n_orphan
-        |FROM rel""".stripMargin,
-
-    // Deliberately NOT a mirror: the oracle joins the full inputs
-    // directly, so the compare proves the delta-maintenance identity.
-    "q204_join_maintenance" ->
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS revenue,
-        |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY o_orderpriority""".stripMargin,
-    "q71_pii_redact" ->
-      """WITH p AS (
-        |  SELECT doc_id,
-        |    text || ' contact user' || CAST(doc_id AS VARCHAR) ||
-        |    '@example.com or tel +502-' ||
-        |    lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') || '-' ||
-        |    lpad(CAST((doc_id * 7) % 10000 AS VARCHAR), 4, '0') AS text
-        |  FROM documents)
-        |SELECT doc_id,
-        | CAST(len(regexp_extract_all(text,
-        |   '[a-z0-9._]+@[a-z0-9.-]+\.[a-z]{2,}')) AS BIGINT) AS n_email,
-        | CAST(len(regexp_extract_all(text,
-        |   '\+\d{3}-\d{4}-\d{4}')) AS BIGINT) AS n_phone,
-        | md5(regexp_replace(regexp_replace(text,
-        |   '[a-z0-9._]+@[a-z0-9.-]+\.[a-z]{2,}', '<EMAIL>', 'g'),
-        |   '\+\d{3}-\d{4}-\d{4}', '<PHONE>', 'g')) AS redacted_fp
-        |FROM p""".stripMargin,
-    "q72_repetition" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |sh AS (
-        |  SELECT doc_id, array_to_string(t[i:i+2], ' ') AS g
-        |  FROM toks,
-        |  LATERAL unnest(range(1,
-        |    (CASE WHEN len(t) = 0 THEN 0 ELSE greatest(len(t) - 2, 1) END) + 1)) AS u(i))
-        |SELECT doc_id,
-        | count(*) AS n_grams,
-        | count(DISTINCT g) AS n_distinct,
-        | 1.0 - CAST(count(DISTINCT g) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-        |   AS dup_ratio
-        |FROM sh GROUP BY doc_id""".stripMargin,
-    "q70_partitioned_write" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice,
-        | CAST(year(o_orderdate) AS BIGINT) AS o_year
-        |FROM orders WHERE year(o_orderdate) = 1997""".stripMargin,
-    "q01_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        | CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        | CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) *
-        |   (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS sum_disc_price,
-        | CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) *
-        |   (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2))) *
-        |   (CAST(1 AS DECIMAL(4,2)) + CAST(l_tax AS DECIMAL(4,2)))) AS DOUBLE) AS sum_charge,
-        | count(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q02_watermark_max" ->
-      "SELECT o_custkey, max(o_orderdate) AS max_date FROM orders GROUP BY o_custkey",
-    "q03_watermark_join" ->
-      """SELECT o.o_custkey, o.o_orderkey, o.o_orderdate, o.o_totalprice
-        |FROM orders o
-        |LEFT JOIN (SELECT o_custkey, max(o_orderdate) AS wm_date FROM orders
-        |      WHERE o_orderdate < TIMESTAMP '1998-01-01' GROUP BY o_custkey) w
-        |  ON o.o_custkey = w.o_custkey
-        |WHERE w.wm_date IS NULL OR o.o_orderdate > w.wm_date""".stripMargin,
-    "q04_lookup_enrich" ->
-      """SELECT r_name, n_name, count(*) AS n_customers,
-        | CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_acctbal
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name""".stripMargin,
-    "q05_filter_project" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice,
-        | CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        | substring(o_orderpriority, 1, 1) AS priority_code
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'""".stripMargin,
-    "q06_topk_per_group" ->
-      """SELECT c_mktsegment, rnk, c_custkey, c_name, c_acctbal FROM (
-        |  SELECT c_mktsegment, c_custkey, c_name, c_acctbal,
-        |   CAST(row_number() OVER (PARTITION BY c_mktsegment
-        |        ORDER BY c_acctbal DESC, c_custkey) AS BIGINT) AS rnk
-        |  FROM customer) t
-        |WHERE rnk <= 3""".stripMargin,
-    "q07_distinct" ->
-      "SELECT DISTINCT c_mktsegment, c_nationkey FROM customer",
-    "q08_unpivot" ->
-      """SELECT p_partkey, 'p_size' AS attr, CAST(p_size AS DOUBLE) AS val FROM part
-        |UNION ALL
-        |SELECT p_partkey, 'p_retailprice' AS attr, p_retailprice AS val FROM part""".stripMargin,
-    "q09_pivot" ->
-      """SELECT CAST(year(l_shipdate) AS BIGINT) AS ship_year,
-        | CAST(sum(CASE WHEN l_returnflag = 'A' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS "A",
-        | CAST(sum(CASE WHEN l_returnflag = 'N' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS "N",
-        | CAST(sum(CASE WHEN l_returnflag = 'R' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS "R"
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    "q10_union" ->
-      """SELECT o_orderkey, o_orderstatus, o_totalprice, 'F_SET' AS src
-        |FROM orders WHERE o_orderstatus = 'F'
-        |UNION ALL
-        |SELECT o_orderkey, o_orderstatus, o_totalprice, 'O_SET' AS src
-        |FROM orders WHERE o_orderstatus = 'O'""".stripMargin,
-    "q11_string_clean" ->
-      """SELECT p_partkey,
-        | upper(trim(p_name)) AS name_uc,
-        | substring(p_name, 1, 5) AS name5,
-        | concat_ws('-', p_brand, p_type) AS brand_type,
-        | regexp_replace(p_name, '[aeiou]', '', 'g') AS name_novowel,
-        | translate(p_name, 'abc', 'xyz') AS name_tr,
-        | CAST(length(p_name) AS BIGINT) AS name_len
-        |FROM part""".stripMargin,
-    "q12_date_funcs" ->
-      """SELECT o_orderkey,
-        | CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        | CAST(month(o_orderdate) AS BIGINT) AS o_month,
-        | CAST(day(o_orderdate) AS BIGINT) AS o_day,
-        | CAST(weekofyear(o_orderdate) AS BIGINT) AS o_week,
-        | strftime(o_orderdate, '%Y-%m') AS ym,
-        | CAST(o_orderdate AS DATE) + 1 AS next_day,
-        | CAST(CAST(o_orderdate AS DATE) + INTERVAL 6 MONTH AS DATE) AS plus_6m,
-        | last_day(CAST(o_orderdate AS DATE)) AS eom
-        |FROM orders""".stripMargin,
-    "q13_case_when" ->
-      """SELECT CASE WHEN c_acctbal < 0 THEN 'NEGATIVE'
-        |            WHEN c_acctbal < 1000 THEN 'LOW'
-        |            WHEN c_acctbal < 5000 THEN 'MID'
-        |            ELSE 'HIGH' END AS balance_band,
-        | count(*) AS n, min(c_acctbal) AS min_bal, max(c_acctbal) AS max_bal
-        |FROM customer GROUP BY 1""".stripMargin,
-    "q14_null_repair" ->
-      """SELECT event_id,
-        | coalesce(nullif(event_type, 'error'), 'UNKNOWN') AS etype,
-        | coalesce(CASE WHEN value > 150 THEN NULL ELSE value END, CAST(0.0 AS DOUBLE)) AS value_capped
-        |FROM events""".stripMargin,
-    "q15_horizontal_sum" ->
-      """SELECT l_orderkey, l_linenumber,
-        | l_quantity + l_extendedprice + l_tax + l_discount AS row_total,
-        | l_extendedprice - l_quantity AS price_minus_qty
-        |FROM lineitem""".stripMargin,
-    "q16_derived_measure" ->
-      """WITH g AS (
-        |  SELECT l_orderkey,
-        |   CAST(coalesce(sum(CASE WHEN l_returnflag = 'R'
-        |        THEN CAST(l_extendedprice AS DECIMAL(18,2)) END),
-        |        CAST(0 AS DECIMAL(18,2))) AS DOUBLE) AS returned,
-        |   CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |  FROM lineitem GROUP BY l_orderkey)
-        |SELECT l_orderkey, returned, total,
-        | CASE WHEN total = 0 THEN CAST(0.0 AS DOUBLE)
-        |      ELSE returned / total * 100 END AS return_pct
-        |FROM g""".stripMargin,
-    "q17_haversine" ->
-      """WITH p AS (SELECT c_custkey,
-        |  CAST((c_custkey * 37) % 17000 AS DOUBLE) / 100 - 85 AS lat,
-        |  CAST((c_custkey * 91) % 35000 AS DOUBLE) / 100 - 175 AS lon
-        | FROM customer)
-        |SELECT c_custkey, lat, lon,
-        | round(12742000.0 * asin(sqrt(
-        |   sin(radians(19.4326 - lat) / 2) * sin(radians(19.4326 - lat) / 2) +
-        |   cos(radians(lat)) * cos(radians(19.4326)) *
-        |   sin(radians(-99.1332 - lon) / 2) * sin(radians(-99.1332 - lon) / 2))), 1) AS dist_m
-        |FROM p""".stripMargin,
-    "q18_geo_topk" ->
-      """WITH c AS (SELECT c_custkey,
-        |  CAST((c_custkey * 37) % 17000 AS DOUBLE) / 100 - 85 AS lat,
-        |  CAST((c_custkey * 91) % 35000 AS DOUBLE) / 100 - 175 AS lon
-        | FROM customer),
-        |s AS (SELECT s_suppkey,
-        |  CAST((s_suppkey * 53) % 17000 AS DOUBLE) / 100 - 85 AS s_lat,
-        |  CAST((s_suppkey * 71) % 35000 AS DOUBLE) / 100 - 175 AS s_lon
-        | FROM supplier),
-        |j AS (SELECT c_custkey, s_suppkey,
-        |  12742000.0 * asin(sqrt(
-        |    sin(radians(s_lat - lat) / 2) * sin(radians(s_lat - lat) / 2) +
-        |    cos(radians(lat)) * cos(radians(s_lat)) *
-        |    sin(radians(s_lon - lon) / 2) * sin(radians(s_lon - lon) / 2))) AS dist
-        | FROM c CROSS JOIN s),
-        |r AS (SELECT c_custkey, s_suppkey, dist,
-        |  CAST(row_number() OVER (PARTITION BY c_custkey
-        |       ORDER BY dist, s_suppkey) AS BIGINT) AS pos_rank
-        | FROM j)
-        |SELECT c_custkey, pos_rank, s_suppkey, round(dist, 1) AS dist_m
-        |FROM r WHERE pos_rank <= 3""".stripMargin,
-    "q19_feature_pivot" ->
-      """SELECT user_id,
-        | count(CASE WHEN event_type = 'click' THEN 1 END) AS click_n,
-        | count(CASE WHEN event_type = 'click' AND value > 100 THEN 1 END) AS click_hi,
-        | count(CASE WHEN event_type = 'error' THEN 1 END) AS error_n,
-        | count(CASE WHEN event_type = 'error' AND value > 100 THEN 1 END) AS error_hi,
-        | count(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase_n,
-        | count(CASE WHEN event_type = 'purchase' AND value > 100 THEN 1 END) AS purchase_hi,
-        | count(CASE WHEN event_type = 'signup' THEN 1 END) AS signup_n,
-        | count(CASE WHEN event_type = 'signup' AND value > 100 THEN 1 END) AS signup_hi,
-        | count(CASE WHEN event_type = 'view' THEN 1 END) AS view_n,
-        | count(CASE WHEN event_type = 'view' AND value > 100 THEN 1 END) AS view_hi
-        |FROM events GROUP BY user_id""".stripMargin,
-    "q20_carry_forward" ->
-      """SELECT event_id, user_id, ts, v,
-        | last_value(v IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled
-        |FROM (SELECT event_id, user_id, ts,
-        |       CASE WHEN value < 40 THEN NULL ELSE value END AS v
-        |      FROM events) t""".stripMargin,
-    "q21_window_agg" ->
-      """SELECT date_trunc('hour', ts) AS hour_start, event_type,
-        | count(*) AS n,
-        | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "q22_categorize" ->
-      """SELECT p_partkey, p_name,
-        | CASE WHEN regexp_matches(p_name, '(?i)cold') THEN 'COLDCHAIN'
-        |      WHEN regexp_matches(p_name, '(?i)(small|mini)') THEN 'SMALLGOODS'
-        |      WHEN regexp_matches(p_name, '(?i)rod') THEN 'RODWARE'
-        |      WHEN regexp_matches(p_name, '(?i)(bolt|nut|screw)') THEN 'FASTENER'
-        |      WHEN regexp_matches(p_name, '(?i)widget') THEN 'WIDGETRY'
-        |      ELSE 'OTROS SIN CLASIFICACION' END AS category
-        |FROM part""".stripMargin,
-    "q23_dedup_exact" ->
-      """SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS text_hash,
-        | min(doc_id) AS keeper, count(*) AS n_dups
-        |FROM documents GROUP BY 1""".stripMargin,
-    "q24_token_stats" ->
-      """SELECT doc_id,
-        | CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens,
-        | CAST(length(text) AS BIGINT) AS len_chars,
-        | CAST(length(regexp_replace(text, '\s+', '', 'g')) AS DOUBLE) /
-        |   CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE) AS avg_token_len
-        |FROM documents""".stripMargin,
-    "q25_quality_score" ->
-      """SELECT doc_id,
-        | CAST(length(text) AS BIGINT) AS len,
-        | CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS BIGINT) AS n_punct,
-        | CAST(len(list_filter(string_split_regex(trim(lower(text)), '\s+'),
-        |      t -> t IN ('the','a','an','of','and','in','to','is','it','for'))) AS BIGINT) AS n_stop,
-        | CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS BIGINT) AS n_tokens,
-        | CAST(len(list_filter(string_split_regex(trim(lower(text)), '\s+'),
-        |      t -> t IN ('the','a','an','of','and','in','to','is','it','for'))) AS DOUBLE) /
-        |   CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS DOUBLE) AS stop_ratio,
-        | CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE) /
-        |   CAST(length(text) AS DOUBLE) AS punct_ratio
-        |FROM documents""".stripMargin,
-    "q26_langid" ->
-      """WITH s AS (SELECT doc_id,
-        | CAST(len(regexp_extract_all(lower(text), '\b(the|and|of|to|is)\b')) AS BIGINT) AS s_en,
-        | CAST(len(regexp_extract_all(lower(text), '\b(el|la|de|que|los|por)\b')) AS BIGINT) AS s_es,
-        | CAST(len(regexp_extract_all(lower(text), '\b(der|die|und|das|ist|nicht)\b')) AS BIGINT) AS s_de,
-        | CAST(len(regexp_extract_all(lower(text), '\b(le|les|et|des|est|une)\b')) AS BIGINT) AS s_fr,
-        | CAST(len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) AS BIGINT) AS s_zh
-        |FROM documents)
-        |SELECT doc_id, s_en, s_es, s_de, s_fr, s_zh,
-        | CASE WHEN s_zh > 0 THEN 'zh'
-        |      WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
-        |      WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
-        |      WHEN s_de >= s_fr THEN 'de'
-        |      ELSE 'fr' END AS pred_lang
-        |FROM s""".stripMargin,
-    "q27_fingerprint" ->
-      """SELECT doc_id,
-        | md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
-        |FROM documents""".stripMargin,
-    "q28_ngram_jaccard" ->
-      """WITH d AS (SELECT doc_id, lang, lower(text) AS norm FROM documents
-        |           WHERE doc_id % 20 = 0),
-        |g AS (SELECT doc_id, lang, norm,
-        |       unnest(generate_series(1, greatest(length(norm) - 2, 1))) AS i
-        |      FROM d),
-        |sh AS (SELECT DISTINCT doc_id, lang, substring(norm || '  ', i, 3) AS s FROM g),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_inter
-        |          FROM sh a JOIN sh b
-        |            ON a.s = b.s AND a.lang = b.lang AND a.doc_id < b.doc_id
-        |          GROUP BY 1, 2)
-        |SELECT d1, d2,
-        | CAST(n_inter AS DOUBLE) /
-        |   CAST(s1.n + s2.n - n_inter AS DOUBLE) AS jaccard
-        |FROM inter
-        |JOIN sizes s1 ON d1 = s1.doc_id
-        |JOIN sizes s2 ON d2 = s2.doc_id""".stripMargin,
-    "q29_minhash_lsh" -> s"WITH $minhashPairCtes\n$minhashPairSelect",
-    "q63_dup_clusters" ->
-      s"""WITH RECURSIVE $minhashPairCtes,
-         |pairs AS ($minhashPairSelect),
-         |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-         |          UNION SELECT id_b, id_a FROM pairs),
-         |reach(src, dst) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT r.src, e.b FROM reach r JOIN edges e ON e.a = r.dst)
-         |SELECT src AS doc_id, min(dst) AS cluster
-         |FROM reach GROUP BY src""".stripMargin,
-    // q86: same recursive clusters, then the keeper window re-derived in SQL
-    "q86_dedup_keepers" ->
-      s"""WITH RECURSIVE $minhashPairCtes,
-         |pairs AS ($minhashPairSelect),
-         |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-         |          UNION SELECT id_b, id_a FROM pairs),
-         |reach(src, dst) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT r.src, e.b FROM reach r JOIN edges e ON e.a = r.dst),
-         |clus AS (SELECT src AS doc_id, min(dst) AS cluster
-         |         FROM reach GROUP BY src),
-         |tok AS (SELECT doc_id,
-         |  len(string_split_regex(trim(text), '\\s+')) AS n_tok FROM documents),
-         |m AS (SELECT c.cluster, c.doc_id, t.n_tok
-         |      FROM clus c JOIN tok t ON c.doc_id = t.doc_id),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY cluster
-         |        ORDER BY n_tok DESC, doc_id) AS rnk,
-         |      count(*) OVER (PARTITION BY cluster) AS n_members FROM m)
-         |SELECT cluster, doc_id AS keeper, CAST(n_tok AS BIGINT) AS keeper_weight,
-         | CAST(n_members AS BIGINT) AS n_members
-         |FROM r WHERE rnk = 1""".stripMargin,
-    // q90: the streaming run must equal the batch aggregate exactly
-    "q90_streaming_agg" ->
-      """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-        | CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    // q88: same word-3-gram shingle mirror as the minhash CTEs
-    "q88_decontamination" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-        |  FROM toks,
-        |  LATERAL unnest(range(1,
-        |    (CASE WHEN len(t) = 0 THEN 0 ELSE greatest(len(t) - 2, 1) END) + 1)) AS u(i)),
-        |bench AS (SELECT DISTINCT s FROM sh WHERE doc_id < 2)
-        |SELECT d.doc_id, CAST(count(*) AS BIGINT) AS n_hits
-        |FROM sh d JOIN bench b ON d.s = b.s
-        |GROUP BY d.doc_id""".stripMargin,
-    // q93: merged partials must equal the one-pass aggregate
-    "q93_incremental_agg" ->
-      """SELECT l_returnflag,
-        | CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        | CAST(count(*) AS BIGINT) AS n
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    // q91: same bucketed running-sum packing in SQL
-    "q91_sequence_packing" ->
-      """WITH t AS (SELECT doc_id, doc_id % 32 AS bucket,
-        |    len(string_split_regex(trim(text), '\s+')) AS n_tok
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |c AS (SELECT *, sum(n_tok) OVER (PARTITION BY bucket ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM t)
-        |SELECT doc_id, CAST(bucket AS BIGINT) AS bucket,
-        |  CAST(n_tok AS BIGINT) AS n_tok,
-        |  CAST((cum - n_tok) // 512 AS BIGINT) AS bin,
-        |  CAST((cum - n_tok) % 512 AS BIGINT) AS "offset"
-        |FROM c""".stripMargin,
-    // q87: md5-bucket stratified sampling, thresholds out of 4096
-    "q87_stratified_sample" ->
-      """WITH b AS (SELECT doc_id, lang,
-        |  (strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 256 +
-        |  (strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 16 +
-        |  (strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1) AS bucket
-        |  FROM documents),
-        |t AS (SELECT *, CASE lang WHEN 'en' THEN 2048 WHEN 'de' THEN 1024
-        |   WHEN 'es' THEN 1024 WHEN 'fr' THEN 512 WHEN 'zh' THEN 512
-        |   ELSE 256 END AS th FROM b)
-        |SELECT doc_id, lang, CAST(bucket AS BIGINT) AS bucket
-        |FROM t WHERE bucket < th""".stripMargin,
-    "q30_simhash" -> q30OracleSql,  // (oracle filters empty docs too)
-    "q32_ann_lsh" ->
-      s"""WITH $latticeSimCtes
-         |SELECT id_a, id_b, round(sim, 6) AS sim_r
-         |FROM sims WHERE sim >= 0.1""".stripMargin,
-    "q31_ann_cosine" ->
-      """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-        |u AS (SELECT e.vec_id, unnest(e.embedding) AS a, unnest(q.qe) AS b
-        |      FROM embeddings e CROSS JOIN q),
-        |dots AS (SELECT vec_id,
-        |  sum(CAST(a AS DOUBLE) * CAST(b AS DOUBLE)) AS dp,
-        |  sum(CAST(a AS DOUBLE) * CAST(a AS DOUBLE)) AS na,
-        |  sum(CAST(b AS DOUBLE) * CAST(b AS DOUBLE)) AS nb
-        | FROM u GROUP BY vec_id),
-        |s AS (SELECT vec_id, dp / (sqrt(na) * sqrt(nb)) AS sim FROM dots),
-        |r AS (SELECT vec_id, sim,
-        |  CAST(row_number() OVER (ORDER BY sim DESC, vec_id) AS BIGINT) AS rnk FROM s)
-        |SELECT vec_id, round(sim, 6) AS sim_r, rnk FROM r WHERE rnk <= 10""".stripMargin,
-    "q33_fixed_width" ->
-      """WITH fw AS (SELECT rpad(o_orderstatus, 4, ' ') ||
-        |  lpad(CAST(o_orderkey AS VARCHAR), 12, '0') ||
-        |  rpad(o_orderpriority, 16, ' ') AS line FROM orders)
-        |SELECT trim(substring(line, 1, 4)) AS status,
-        | CAST(substring(line, 5, 12) AS BIGINT) AS okey,
-        | trim(substring(line, 17, 16)) AS priority
-        |FROM fw""".stripMargin,
-    "q34_multimodal" ->
-      """SELECT doc_id,
-        | CAST(strlen(text) AS BIGINT) AS n_bytes,
-        | CAST(64 + strlen(text) % 97 AS BIGINT) AS width,
-        | CAST(64 + (strlen(text) * 31) % 97 AS BIGINT) AS height,
-        | CAST((strlen(text) * 1) % 256 AS DOUBLE) / 255.0 AS f1,
-        | CAST((strlen(text) * 2) % 256 AS DOUBLE) / 255.0 AS f2,
-        | CAST((strlen(text) * 3) % 256 AS DOUBLE) / 255.0 AS f3,
-        | CAST((strlen(text) * 4) % 256 AS DOUBLE) / 255.0 AS f4,
-        | CAST((strlen(text) * 5) % 256 AS DOUBLE) / 255.0 AS f5,
-        | CAST((strlen(text) * 6) % 256 AS DOUBLE) / 255.0 AS f6,
-        | CAST((strlen(text) * 7) % 256 AS DOUBLE) / 255.0 AS f7,
-        | CAST((strlen(text) * 8) % 256 AS DOUBLE) / 255.0 AS f8
-        |FROM documents""".stripMargin,
-    "q44_asof_join" ->
-      """WITH p AS (SELECT user_id, ts, ts AS pts, value AS pval
-        |           FROM events WHERE event_type = 'purchase')
-        |SELECT e.event_id, e.user_id, e.ts, p.pts, p.pval
-        |FROM (SELECT event_id, user_id, ts FROM events) e
-        |ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.ts >= p.ts""".stripMargin,
-    "q43_bpe_tokens" ->
-      """SELECT doc_id,
-        | CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS BIGINT) AS n_bpe,
-        | CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_ws,
-        | CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS DOUBLE) /
-        |   CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE) AS bpe_per_ws
-        |FROM documents""".stripMargin,
-    "q41_skewness_udaf" ->
-      """WITH m AS (SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS s1,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2)) * CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS s2,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2)) * CAST(value AS DECIMAL(18,2)) * CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS s3
-        | FROM events GROUP BY event_type)
-        |SELECT event_type,
-        | round((s3 / n - 3 * (s1 / n) * s2 / n + 2 * (s1 / n) * (s1 / n) * (s1 / n)) /
-        |       pow(s2 / n - (s1 / n) * (s1 / n), 1.5), 6) AS skew,
-        | n
-        |FROM m""".stripMargin,
-    "q42_csv_roundtrip" ->
-      "SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders",
-    "q38_geo_radius_join" ->
-      """WITH c AS (SELECT c_custkey,
-        |  CAST((c_custkey * 37) % 17000 AS DOUBLE) / 100 - 85 AS lat,
-        |  CAST((c_custkey * 91) % 35000 AS DOUBLE) / 100 - 175 AS lon
-        | FROM customer),
-        |s AS (SELECT s_suppkey,
-        |  CAST((s_suppkey * 53) % 17000 AS DOUBLE) / 100 - 85 AS s_lat,
-        |  CAST((s_suppkey * 71) % 35000 AS DOUBLE) / 100 - 175 AS s_lon
-        | FROM supplier)
-        |SELECT c_custkey, s_suppkey, round(dist_m, 1) AS dist_m FROM (
-        |  SELECT c_custkey, s_suppkey,
-        |   12742000.0 * asin(sqrt(
-        |     sin(radians(s_lat - lat) / 2) * sin(radians(s_lat - lat) / 2) +
-        |     cos(radians(lat)) * cos(radians(s_lat)) *
-        |     sin(radians(s_lon - lon) / 2) * sin(radians(s_lon - lon) / 2))) AS dist_m
-        |  FROM c CROSS JOIN s) t
-        |WHERE dist_m <= 1000000.0""".stripMargin,
-    "q39_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-        | CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        | count(*) AS n
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-    "q45_cube" ->
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""".stripMargin,
-    "q40_count_distinct" ->
-      """SELECT l_returnflag,
-        | count(DISTINCT l_partkey) AS n_parts,
-        | count(DISTINCT l_suppkey) AS n_supps,
-        | count(*) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "q36_enso_pipeline" ->
-      """SELECT upper(strftime(o_orderdate, '%d%b%Y')) AS "WEEK",
-        | concat(CAST(o_orderkey % 30 + 10 AS VARCHAR), '.',
-        |        CAST(o_orderkey % 10 AS VARCHAR)) AS "SST_NINO12",
-        | concat(CAST(o_custkey % 10 AS VARCHAR), '.',
-        |        CAST(o_orderkey % 7 AS VARCHAR)) AS "SSTA_NINO12",
-        | '1.1' AS "SST_NINO3",
-        | strftime(o_orderdate, '%d') AS "DAY",
-        | strftime(o_orderdate, '%m') AS "MONTH",
-        | strftime(o_orderdate, '%Y') AS "YEAR",
-        | strftime(o_orderdate, '%Y-%m-%d') AS "DATE"
-        |FROM orders""".stripMargin,
-    "q37_wasde_parse" ->
-      """WITH raw(sheet, rowIdx, geo, beginning, production, imports, dom_feed,
-        |         dom_total, exports, ending) AS (VALUES
-        | ('p18', 0, '2025/26 (Est.) 2/', '', '', '', '', '', '', ''),
-        | ('p18', 1, 'World 3/', '', '', '', '', '', '', ''),
-        | ('p18', 2, 'Major Exporters', '', '', '', '', '', '', ''),
-        | ('p18', 3, 'Brazil', '1', '2', '3', '4', '5', '6', '7'),
-        | ('p18', 4, '', '9', '9', 'NA', '', '2', '1', '4'),
-        | ('p18', 5, 'Selected Other', '0', '0', '0', '0', '0', '0', '0'),
-        | ('p18', 6, '2025/26 (Proj.)', '', '', '', '', '', '', ''),
-        | ('p18', 7, 'Argentina', '2', '4', '0', '1', '2', '2', '8'),
-        | ('p18', 8, 'Major Importers', '', '', '', '', '', '', ''),
-        | ('p18', 9, 'China 10/', '5', '0', '98', '', '101', '0', '30'),
-        | ('p19', 0, '2025/26 (Proj.)', '', '', '', '', '', '', ''),
-        | ('p19', 1, 'World', '', '', '', '', '', '', ''),
-        | ('p19', 2, 'United States', '10', '80', '1', '40', '55', '20', '16')),
-        |lab AS (SELECT *, trim(regexp_replace(geo, '\b\d{1,2}/', '', 'g')) AS label
-        |        FROM raw),
-        |flags AS (SELECT *,
-        |  label IN ('World', 'Major Exporters', 'Major Importers') AS is_group,
-        |  regexp_matches(label, '^\d{4}/\d{2}') AS is_year FROM lab),
-        |carry AS (SELECT *,
-        |  last_value(CASE WHEN is_group THEN label END IGNORE NULLS) OVER w AS grupo,
-        |  last_value(CASE WHEN is_year THEN
-        |    (CASE WHEN label LIKE '%Est%' THEN 'EST'
-        |          WHEN label LIKE '%Proj%' THEN 'PROJ' ELSE 'YEAR' END)
-        |    END IGNORE NULLS) OVER w AS tipo,
-        |  last_value(CASE WHEN is_year THEN regexp_extract(label, '^(\d{4}/\d{2})', 1)
-        |    END IGNORE NULLS) OVER w AS harvest,
-        |  last_value(CASE WHEN label <> '' THEN label END IGNORE NULLS) OVER w
-        |    AS geography
-        | FROM flags
-        | WINDOW w AS (PARTITION BY sheet ORDER BY rowIdx
-        |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |rep AS (SELECT sheet, rowIdx, grupo, tipo, harvest, geography, is_group, is_year,
-        |  coalesce(try_cast((CASE WHEN trim(beginning) = '' OR upper(trim(beginning)) = 'NA' THEN '0' ELSE trim(beginning) END) AS DOUBLE), 0.0) AS beginning,
-        |  coalesce(try_cast((CASE WHEN trim(production) = '' OR upper(trim(production)) = 'NA' THEN '0' ELSE trim(production) END) AS DOUBLE), 0.0) AS production,
-        |  coalesce(try_cast((CASE WHEN trim(imports) = '' OR upper(trim(imports)) = 'NA' THEN '0' ELSE trim(imports) END) AS DOUBLE), 0.0) AS imports,
-        |  coalesce(try_cast((CASE WHEN trim(dom_feed) = '' OR upper(trim(dom_feed)) = 'NA' THEN '0' ELSE trim(dom_feed) END) AS DOUBLE), 0.0) AS dom_feed,
-        |  coalesce(try_cast((CASE WHEN trim(dom_total) = '' OR upper(trim(dom_total)) = 'NA' THEN '0' ELSE trim(dom_total) END) AS DOUBLE), 0.0) AS dom_total,
-        |  coalesce(try_cast((CASE WHEN trim(exports) = '' OR upper(trim(exports)) = 'NA' THEN '0' ELSE trim(exports) END) AS DOUBLE), 0.0) AS exports,
-        |  coalesce(try_cast((CASE WHEN trim(ending) = '' OR upper(trim(ending)) = 'NA' THEN '0' ELSE trim(ending) END) AS DOUBLE), 0.0) AS ending,
-        |  rowIdx AS ri
-        | FROM carry),
-        |filt AS (SELECT * FROM rep
-        | WHERE NOT is_group AND NOT is_year
-        |   AND geography NOT IN ('Selected Other') AND grupo IS NOT NULL)
-        |SELECT sheet, grupo, tipo, harvest, geography,
-        | CAST(row_number() OVER (PARTITION BY sheet, tipo ORDER BY ri) AS BIGINT) AS orden,
-        | beginning, production, imports, dom_feed, dom_total, exports, ending,
-        | dom_total + exports AS total_use,
-        | CASE WHEN dom_total + exports = 0 THEN CAST(0.0 AS DOUBLE)
-        |      ELSE ending / (dom_total + exports) * 100 END AS stocks_to_use
-        |FROM filt""".stripMargin,
-    "q46_semi_anti" ->
-      """SELECT c_custkey, c_name, 'HAS_ORDERS' AS status FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |UNION ALL
-        |SELECT c_custkey, c_name, 'NO_ORDERS' AS status FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin,
-    "q47_set_ops" ->
-      """SELECT o_custkey, 'BOTH' AS tag FROM (
-        |  SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-        |  INTERSECT
-        |  SELECT o_custkey FROM orders WHERE o_orderstatus = 'O') t
-        |UNION ALL
-        |SELECT o_custkey, 'F_ONLY' AS tag FROM (
-        |  SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-        |  EXCEPT
-        |  SELECT o_custkey FROM orders WHERE o_orderstatus = 'O') t""".stripMargin,
-    "q48_moving_avg" ->
-      """SELECT event_id, user_id, ts, value,
-        | CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w3 AS DOUBLE) AS mov_sum3,
-        | count(*) OVER w3 AS mov_n3,
-        | CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w3 AS DOUBLE) /
-        |   CAST(count(*) OVER w3 AS DOUBLE) AS mov_avg3,
-        | value - lag(value) OVER w AS delta
-        |FROM events
-        |WINDOW
-        | w AS (PARTITION BY user_id ORDER BY ts, event_id),
-        | w3 AS (PARTITION BY user_id ORDER BY ts, event_id
-        |        ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)""".stripMargin,
-    "q49_fuzzy_match" ->
-      """WITH p AS (SELECT p_partkey, p_brand, p_name FROM part
-        |           WHERE p_partkey % 50 = 0)
-        |SELECT a.p_partkey AS id_a, b.p_partkey AS id_b,
-        |  CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS dist
-        |FROM p a JOIN p b
-        |  ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
-        |WHERE levenshtein(a.p_name, b.p_name) <= 12""".stripMargin,
-    "q50_interval_join" ->
-      """WITH purch AS (
-        |  SELECT event_id AS p_event_id, ts AS pts, ts + INTERVAL 10 MINUTE AS pte
-        |  FROM events WHERE event_type = 'purchase')
-        |SELECT e.event_id, p.p_event_id,
-        |  epoch_us(e.ts) - epoch_us(p.pts) AS delta_us
-        |FROM events e JOIN purch p
-        |  ON e.ts >= p.pts AND e.ts < p.pte""".stripMargin,
-    // q148: the batch form of the stream-stream interval join — inner
-    // matches emit eagerly in streaming, so the results are identical
-    "q148_streaming_join" ->
-      """WITH v AS (
-        |  SELECT event_id AS v_event_id, user_id, ts AS vts
-        |  FROM events WHERE event_type = 'view'),
-        |c AS (
-        |  SELECT event_id AS c_event_id, user_id, ts AS cts
-        |  FROM events WHERE event_type = 'click')
-        |SELECT v.user_id, v_event_id, c_event_id,
-        |  epoch_us(c.cts) - epoch_us(v.vts) AS delta_us
-        |FROM v JOIN c ON v.user_id = c.user_id
-        |  AND c.cts >= v.vts AND c.cts <= v.vts + INTERVAL 60 MINUTE""".stripMargin,
-    "q51_json_extract" ->
-      """SELECT event_type,
-        | count(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS n,
-        | CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-        | min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
-        | max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
-        |FROM events GROUP BY event_type""".stripMargin,
-    "q52_percentiles" ->
-      """SELECT event_type,
-        | round(quantile_cont(value, 0.5), 6) AS p50,
-        | round(quantile_cont(value, 0.95), 6) AS p95,
-        | count(*) AS n
-        |FROM events GROUP BY event_type""".stripMargin,
-    "q68_data_quality" ->
-      """WITH m AS (
-        |  SELECT count(*) AS n_rows,
-        |    count(CASE WHEN o_custkey IS NULL THEN 1 END) AS null_custkey,
-        |    count(CASE WHEN o_totalprice <= 0 THEN 1 END) AS nonpos_price,
-        |    count(CASE WHEN o_orderdate < TIMESTAMP '1990-01-01'
-        |           OR o_orderdate > TIMESTAMP '2030-01-01' THEN 1 END)
-        |      AS date_out_of_range,
-        |    count(*) - count(DISTINCT o_orderkey) AS dup_keys,
-        |    count(CASE WHEN o_orderstatus NOT IN ('F','O','P') THEN 1 END)
-        |      AS bad_status
-        |  FROM orders)
-        |SELECT 'n_rows' AS check, CAST(n_rows AS BIGINT) AS value, TRUE AS pass FROM m
-        |UNION ALL SELECT 'null_custkey', CAST(null_custkey AS BIGINT), null_custkey = 0 FROM m
-        |UNION ALL SELECT 'nonpos_price', CAST(nonpos_price AS BIGINT), nonpos_price = 0 FROM m
-        |UNION ALL SELECT 'date_out_of_range', CAST(date_out_of_range AS BIGINT), date_out_of_range = 0 FROM m
-        |UNION ALL SELECT 'dup_keys', CAST(dup_keys AS BIGINT), dup_keys = 0 FROM m
-        |UNION ALL SELECT 'bad_status', CAST(bad_status AS BIGINT), bad_status = 0 FROM m""".stripMargin,
-    "q67_winnow_fp" ->
-      """WITH nrm AS (
-        |  SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, i AS pos,
-        |    substring(md5(substring(norm, CAST(i AS INTEGER), 5)), 1, 8) AS h
-        |  FROM nrm,
-        |  LATERAL unnest(range(1, greatest(length(norm) - 4, 1) + 1)) AS u(i)),
-        |w AS (
-        |  SELECT doc_id, min(h) OVER (PARTITION BY doc_id ORDER BY pos
-        |    ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp FROM g),
-        |d AS (SELECT DISTINCT doc_id, fp FROM w)
-        |SELECT doc_id, count(*) AS n_fp, min(fp) AS min_fp, max(fp) AS max_fp
-        |FROM d GROUP BY doc_id""".stripMargin,
-    "q66_bm25" ->
-      """WITH nonempty AS (SELECT * FROM documents WHERE length(trim(text)) > 0),
-        |toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS t
-        |  FROM nonempty),
-        |dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-        |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nonempty),
-        |ad AS (SELECT CAST(sum(dl) AS DOUBLE) / (SELECT n FROM stats) AS avgdl FROM dl),
-        |tf AS (SELECT doc_id, t, count(*) AS tf FROM toks
-        |       WHERE t IN ('data', 'join', 'stream') GROUP BY doc_id, t),
-        |dfq AS (SELECT t, count(*) AS df FROM tf GROUP BY t),
-        |contr AS (
-        |  SELECT tf.doc_id, tf.t,
-        |    ln(((SELECT n FROM stats) - CAST(dfq.df AS DOUBLE) + 0.5) /
-        |       (CAST(dfq.df AS DOUBLE) + 0.5) + 1.0) *
-        |    (CAST(tf.tf AS DOUBLE) * (1.2 + 1.0) /
-        |     (CAST(tf.tf AS DOUBLE) +
-        |      1.2 * (1.0 - 0.75 + 0.75 * CAST(dl.dl AS DOUBLE) /
-        |             (SELECT avgdl FROM ad)))) AS c
-        |  FROM tf JOIN dfq USING (t) JOIN dl USING (doc_id)),
-        |wide AS (
-        |  SELECT doc_id,
-        |    max(CASE WHEN t = 'data' THEN c END) AS c_data,
-        |    max(CASE WHEN t = 'join' THEN c END) AS c_join,
-        |    max(CASE WHEN t = 'stream' THEN c END) AS c_stream
-        |  FROM contr GROUP BY doc_id),
-        |scored AS (
-        |  SELECT doc_id,
-        |    round(coalesce(c_data, 0.0) + coalesce(c_join, 0.0) +
-        |          coalesce(c_stream, 0.0), 6) AS score_r
-        |  FROM wide),
-        |ranked AS (
-        |  SELECT doc_id, score_r,
-        |    CAST(row_number() OVER (ORDER BY score_r DESC, doc_id) AS BIGINT) AS rnk
-        |  FROM scored)
-        |SELECT doc_id, score_r, rnk FROM ranked WHERE rnk <= 10""".stripMargin,
-    "q65_ann_quantized" ->
-      """WITH u AS (
-        |  SELECT vec_id, embedding, unnest(embedding) AS x,
-        |         unnest(range(0, len(embedding))) AS j
-        |  FROM embeddings),
-        |m AS (SELECT vec_id, max(abs(CAST(x AS DOUBLE))) AS mx FROM u GROUP BY vec_id),
-        |qv AS (
-        |  SELECT u.vec_id, j,
-        |    CAST(round(CAST(x AS DOUBLE) * (127.0 / m.mx)) AS BIGINT) AS qx
-        |  FROM u JOIN m USING (vec_id)),
-        |qq AS (SELECT j, qx FROM qv WHERE vec_id = 0),
-        |dots AS (
-        |  SELECT a.vec_id, CAST(sum(a.qx * b.qx) AS BIGINT) AS qdot
-        |  FROM qv a JOIN qq b USING (j) GROUP BY a.vec_id),
-        |exact AS (
-        |  SELECT e.vec_id,
-        |    sum(CAST(ex.x AS DOUBLE) * CAST(qx0.x AS DOUBLE)) AS dp,
-        |    sum(CAST(ex.x AS DOUBLE) * CAST(ex.x AS DOUBLE)) AS na,
-        |    sum(CAST(qx0.x AS DOUBLE) * CAST(qx0.x AS DOUBLE)) AS nb
-        |  FROM (SELECT vec_id FROM embeddings) e
-        |  JOIN u ex ON ex.vec_id = e.vec_id
-        |  JOIN (SELECT j, x FROM u WHERE vec_id = 0) qx0 ON qx0.j = ex.j
-        |  GROUP BY e.vec_id),
-        |ranked AS (
-        |  SELECT d.vec_id, d.qdot,
-        |    round(x.dp / (sqrt(x.na) * sqrt(x.nb)), 6) AS sim_r,
-        |    CAST(row_number() OVER (ORDER BY d.qdot DESC, d.vec_id) AS BIGINT) AS rnk
-        |  FROM dots d JOIN exact x USING (vec_id))
-        |SELECT vec_id, qdot, sim_r, rnk FROM ranked WHERE rnk <= 10""".stripMargin,
-    "q64_tfidf_terms" ->
-      """WITH nonempty AS (SELECT * FROM documents WHERE length(trim(text)) > 0),
-        |toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM nonempty),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY doc_id, term),
-        |dfq AS (SELECT term, count(*) AS df FROM
-        |        (SELECT DISTINCT doc_id, term FROM toks) GROUP BY term),
-        |n AS (SELECT count(*) AS n_docs FROM nonempty),
-        |scored AS (
-        |  SELECT tf.doc_id, tf.term, tf.tf, dfq.df,
-        |    round(tf.tf * ln((CAST(n.n_docs AS DOUBLE) + 1.0) /
-        |                     (CAST(dfq.df AS DOUBLE) + 1.0)), 6) AS tfidf_r
-        |  FROM tf JOIN dfq USING (term) CROSS JOIN n),
-        |ranked AS (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY doc_id
-        |     ORDER BY tf DESC, df ASC, term ASC) AS BIGINT) AS rnk
-        |  FROM scored)
-        |SELECT doc_id, rnk, term, tf, df, tfidf_r FROM ranked WHERE rnk <= 3""".stripMargin,
-    "q59_salted_agg" ->
-      """SELECT event_type, count(*) AS n,
-        | CAST(sum(CAST(round(value * 100) AS BIGINT)) / 100 AS DOUBLE) AS total
-        |FROM events GROUP BY event_type""".stripMargin,
-    "q60_rank_family" ->
-      """SELECT c_custkey, c_mktsegment, c_acctbal,
-        | CAST(dense_rank() OVER w AS BIGINT) AS drnk,
-        | round(percent_rank() OVER w, 6) AS prnk,
-        | round(cume_dist() OVER w, 6) AS cdist,
-        | CAST(ntile(4) OVER w AS BIGINT) AS quartile
-        |FROM customer
-        |WINDOW w AS (PARTITION BY c_mktsegment
-        |             ORDER BY c_acctbal DESC, c_custkey)""".stripMargin,
-    "q61_string_funcs" ->
-      """SELECT p_partkey,
-        | lpad(p_brand, 12, '.') AS brand_pad,
-        | rpad(p_type, 18, '_') AS type_pad,
-        | split_part(p_type, ' ', 1) AS type_head,
-        | reverse(p_name) AS name_rev,
-        | repeat('*', CAST(p_size % 5 AS INTEGER)) AS stars,
-        | replace(p_name, ' ', '_') AS name_us,
-        | starts_with(p_name, 'a') AS starts_a,
-        | contains(p_name, 'ol') AS has_ol
-        |FROM part""".stripMargin,
-    "q62_array_funcs" ->
-      """SELECT vec_id,
-        | CAST(len(embedding) AS BIGINT) AS dim,
-        | CAST(list_min(embedding) AS DOUBLE) AS vmin,
-        | CAST(list_max(embedding) AS DOUBLE) AS vmax,
-        | CAST(embedding[1] AS DOUBLE) AS first,
-        | CAST(list_sort(embedding)[3] AS DOUBLE) AS third_smallest,
-        | CAST(list_reverse_sort(embedding)[1] AS DOUBLE) AS largest
-        |FROM embeddings""".stripMargin,
-    "q57_html_table" ->
-      """SELECT year, CAST(jan AS DOUBLE) AS jan, CAST(feb AS DOUBLE) AS feb,
-        |  h1_avg
-        |FROM (VALUES
-        | (CAST(2023 AS BIGINT), 6.4, 6.0, CAST((6.4 + 6.0) / 2 AS DOUBLE)),
-        | (CAST(2024 AS BIGINT), 3.1, 3.2, CAST((3.1 + 3.2) / 2 AS DOUBLE)),
-        | (CAST(2025 AS BIGINT), 2.9, NULL, NULL))
-        | AS t(year, jan, feb, h1_avg)""".stripMargin,
-    "q58_json_roundtrip" ->
-      "SELECT o_orderkey, o_orderstatus AS st, o_totalprice AS tp FROM orders",
-    "q54_json_build" ->
-      """SELECT event_id,
-        | CAST(to_json(struct_pack(event_type := event_type, user_id := user_id))
-        |      AS VARCHAR) AS j
-        |FROM events""".stripMargin,
-    "q55_chunk_stats" ->
-      """WITH t AS (SELECT doc_id, strlen(text) AS len FROM documents),
-        |c AS (SELECT doc_id, len,
-        |  CAST((len - 1) // 64 + 1 AS BIGINT) AS n_chunks FROM t WHERE len > 0)
-        |SELECT doc_id,
-        | CAST((n_chunks + 1) // 2 AS BIGINT) AS n_sampled,
-        | CAST(CASE WHEN (n_chunks - 1) % 2 = 0
-        |      THEN ((n_chunks + 1) // 2 - 1) * 64 + (len - (n_chunks - 1) * 64)
-        |      ELSE ((n_chunks + 1) // 2) * 64 END AS BIGINT) AS bytes_sampled
-        |FROM c""".stripMargin,
-    "q56_zscore_outliers" ->
-      """WITH st AS (
-        |  SELECT event_type,
-        |    CAST(sum(CAST(round(value * 100) AS BIGINT)) / 100 AS DOUBLE) AS s1,
-        |    CAST(sum(CAST(round(value * 100) AS BIGINT) *
-        |             CAST(round(value * 100) AS BIGINT)) / 10000 AS DOUBLE) AS s2,
-        |    CAST(count(*) AS DOUBLE) AS n
-        |  FROM events GROUP BY event_type),
-        |ms AS (SELECT event_type, s1 / n AS m,
-        |         sqrt(s2 / n - (s1 / n) * (s1 / n)) AS sd FROM st)
-        |SELECT e.event_id, e.event_type, round((e.value - m) / sd, 6) AS z
-        |FROM events e JOIN ms USING (event_type)
-        |WHERE abs((e.value - m) / sd) > 2.5""".stripMargin,
-    "q53_vector_stats" ->
-      """WITH u AS (SELECT vec_id, label, unnest(embedding) AS x FROM embeddings)
-        |SELECT vec_id, label,
-        | round(sqrt(sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), 6) AS l2_r,
-        | round(sum(abs(CAST(x AS DOUBLE))), 6) AS l1_r,
-        | round(max(abs(CAST(x AS DOUBLE))), 6) AS linf_r
-        |FROM u GROUP BY vec_id, label""".stripMargin,
-    "q35_sessionize" ->
-      """WITH x AS (SELECT user_id, event_id, ts, value,
-        |  lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-        | FROM events),
-        |f AS (SELECT *, CASE WHEN prev IS NULL
-        |       OR epoch_us(ts) - epoch_us(prev) > 300000000 THEN 1 ELSE 0 END AS flag
-        |      FROM x),
-        |sess AS (SELECT *, CAST(sum(flag) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        | FROM f)
-        |SELECT user_id, session_id, count(*) AS n_events,
-        | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM sess GROUP BY user_id, session_id""".stripMargin,
-    // q151: same decimal-exact daily sums (q35 pattern), generate_series
-    // spine, IGNORE NULLS last_value for the LOCF carry
-    "q151_gap_fill" ->
-      """WITH daily AS (
-        |  SELECT user_id, CAST(ts AS DATE) AS day,
-        |    CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |  FROM events GROUP BY 1, 2),
-        |b AS (SELECT user_id, min(day) AS d0, max(day) AS d1
-        |      FROM daily GROUP BY 1),
-        |spine AS (
-        |  SELECT user_id,
-        |    CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day
-        |  FROM b),
-        |j AS (SELECT s.user_id, s.day, d.total FROM spine s
-        |      LEFT JOIN daily d ON d.user_id = s.user_id AND d.day = s.day)
-        |SELECT user_id, day,
-        |  last_value(total IGNORE NULLS) OVER (PARTITION BY user_id
-        |    ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    AS total,
-        |  (total IS NULL) AS is_gap
-        |FROM j""".stripMargin,
-    // q155: q105's bigram CTEs; KN terms as exact counts, p_kn with the
-    // IDENTICAL parenthesization as the Spark side (bit-exact doubles)
-    "q155_kn_bigram" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |bi AS (
-        |  SELECT t[i] AS w1, t[i+1] AS w2
-        |  FROM toks, LATERAL unnest(range(1, len(t))) AS u(i)),
-        |pair AS (SELECT w1, w2, count(*) AS c12 FROM bi GROUP BY w1, w2),
-        |ctx AS (SELECT w1, sum(c12) AS c1, count(*) AS n_follow
-        |        FROM pair GROUP BY w1),
-        |pre AS (SELECT w2, count(*) AS n_precede FROM pair GROUP BY w2),
-        |tot AS (SELECT count(*) AS n_bigrams FROM pair)
-        |SELECT p.w1, p.w2, CAST(p.c12 AS BIGINT) AS c12,
-        |  CAST(x.c1 AS BIGINT) AS c1,
-        |  CAST(x.n_follow AS BIGINT) AS n_follow,
-        |  CAST(r.n_precede AS BIGINT) AS n_precede,
-        |  CAST(t.n_bigrams AS BIGINT) AS n_bigrams,
-        |  greatest(CAST(p.c12 AS DOUBLE) - 0.75, 0.0) / CAST(x.c1 AS DOUBLE)
-        |    + ((0.75 * CAST(x.n_follow AS DOUBLE)) / CAST(x.c1 AS DOUBLE))
-        |      * (CAST(r.n_precede AS DOUBLE) / CAST(t.n_bigrams AS DOUBLE))
-        |    AS p_kn
-        |FROM pair p
-        |JOIN ctx x ON p.w1 = x.w1
-        |JOIN pre r ON p.w2 = r.w2
-        |CROSS JOIN tot t
-        |WHERE p.c12 >= 3""".stripMargin,
-
-    // q154: q121's shingle/prefix CTEs at t=3/4 with the dfreq<=20 cap on
-    // the probe prefix, index side = FULL token table (equality makes the
-    // cap implicit there), directed pairs, containment = n_inter/n_sub
-    "q154_containment" ->
-      """WITH nrm AS (
-        |  SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |toks AS (
-        |  SELECT DISTINCT doc_id,
-        |    substring(norm || '       ', CAST(i AS INTEGER), 8) AS tok
-        |  FROM nrm,
-        |  LATERAL unnest(range(1, greatest(length(norm) - 7, 1) + 1)) AS u(i)),
-        |df AS (SELECT tok, count(*) AS dfreq FROM toks GROUP BY tok),
-        |ranked AS (
-        |  SELECT t.doc_id, t.tok, d.dfreq,
-        |    row_number() OVER (PARTITION BY t.doc_id
-        |      ORDER BY d.dfreq, t.tok) AS rn,
-        |    count(*) OVER (PARTITION BY t.doc_id) AS n
-        |  FROM toks t JOIN df d USING (tok)),
-        |prefix AS (
-        |  SELECT doc_id, tok FROM ranked
-        |  WHERE rn <= n - ((n * 3 + 3) // 4) + 1 AND dfreq <= 20),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS sub, b.doc_id AS sup
-        |  FROM prefix a JOIN toks b
-        |    ON a.tok = b.tok AND a.doc_id <> b.doc_id),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM toks GROUP BY doc_id),
-        |inter AS (
-        |  SELECT c.sub, c.sup, count(*) AS n_inter
-        |  FROM cand c
-        |  JOIN toks ta ON ta.doc_id = c.sub
-        |  JOIN toks tb ON tb.doc_id = c.sup AND tb.tok = ta.tok
-        |  GROUP BY c.sub, c.sup)
-        |SELECT i.sub AS id_sub, i.sup AS id_sup,
-        |  CAST(i.n_inter AS BIGINT) AS n_inter,
-        |  CAST(sa.n AS BIGINT) AS n_sub, CAST(sb.n AS BIGINT) AS n_sup,
-        |  CAST(i.n_inter AS DOUBLE) / CAST(sa.n AS DOUBLE) AS cont_r
-        |FROM inter i
-        |JOIN sizes sa ON sa.doc_id = i.sub
-        |JOIN sizes sb ON sb.doc_id = i.sup
-        |WHERE i.n_inter * 4 >= 3 * sa.n""".stripMargin,
-
-    // q259: q154's CTEs with the probe swapped to the rarest-8 slice —
-    // rn ≤ 8 (fixed k, not the threshold-derived prefix length) AND the
-    // dfreq ≤ 20 cap; (dfreq, tok) ranking is total per doc (toks are
-    // DISTINCT within a doc), so the k-th boundary is deterministic on
-    // both sides. Verify identical to q154's.
-    "q259_containment_onesided" ->
-      """WITH nrm AS (
-        |  SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |toks AS (
-        |  SELECT DISTINCT doc_id,
-        |    substring(norm || '       ', CAST(i AS INTEGER), 8) AS tok
-        |  FROM nrm,
-        |  LATERAL unnest(range(1, greatest(length(norm) - 7, 1) + 1)) AS u(i)),
-        |df AS (SELECT tok, count(*) AS dfreq FROM toks GROUP BY tok),
-        |ranked AS (
-        |  SELECT t.doc_id, t.tok, d.dfreq,
-        |    row_number() OVER (PARTITION BY t.doc_id
-        |      ORDER BY d.dfreq, t.tok) AS rn
-        |  FROM toks t JOIN df d USING (tok)),
-        |probe AS (
-        |  SELECT doc_id, tok FROM ranked
-        |  WHERE rn <= 8 AND dfreq <= 20),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS sub, b.doc_id AS sup
-        |  FROM probe a JOIN toks b
-        |    ON a.tok = b.tok AND a.doc_id <> b.doc_id),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM toks GROUP BY doc_id),
-        |inter AS (
-        |  SELECT c.sub, c.sup, count(*) AS n_inter
-        |  FROM cand c
-        |  JOIN toks ta ON ta.doc_id = c.sub
-        |  JOIN toks tb ON tb.doc_id = c.sup AND tb.tok = ta.tok
-        |  GROUP BY c.sub, c.sup)
-        |SELECT i.sub AS id_sub, i.sup AS id_sup,
-        |  CAST(i.n_inter AS BIGINT) AS n_inter,
-        |  CAST(sa.n AS BIGINT) AS n_sub, CAST(sb.n AS BIGINT) AS n_sup,
-        |  CAST(i.n_inter AS DOUBLE) / CAST(sa.n AS DOUBLE) AS cont_r
-        |FROM inter i
-        |JOIN sizes sa ON sa.doc_id = i.sub
-        |JOIN sizes sb ON sb.doc_id = i.sup
-        |WHERE i.n_inter * 4 >= 3 * sa.n""".stripMargin,
-
-    // q261: the union assembly — q29's md5-lane CTEs re-banded to the
-    // PRODUCTION 8×2 layout (lane // 2; the 4×4 q29 default measurably
-    // misses high-J family pairs the one-sided leg cannot recover) in
-    // both directions, UNION q259's rarest-8 probe candidates (char-8
-    // CTEs renamed c* to dodge the word-3 minhash CTEs' names), then
-    // q154's verify. UNION (not UNION ALL) is the cross-generator
-    // dedupe the Spark side's .distinct() mirrors.
-    "q261_containment_union" ->
-      s"""WITH $minhashLaneCtes,
-        |banded AS (
-        |  SELECT doc_id, CAST(lane // 2 AS BIGINT) AS band,
-        |         md5(string_agg(h, '|' ORDER BY lane)) AS bh
-        |  FROM minh GROUP BY doc_id, lane // 2),
-        |counted AS (
-        |  SELECT *, count(*) OVER (PARTITION BY band, bh) AS bucket_n
-        |  FROM banded),
-        |pruned AS (
-        |  SELECT doc_id, band, bh FROM counted
-        |  WHERE bucket_n <= 1000 AND bucket_n > 1),
-        |nrm AS (
-        |  SELECT doc_id, regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS norm
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |ctoks AS (
-        |  SELECT DISTINCT doc_id,
-        |    substring(norm || '       ', CAST(i AS INTEGER), 8) AS tok
-        |  FROM nrm,
-        |  LATERAL unnest(range(1, greatest(length(norm) - 7, 1) + 1)) AS u(i)),
-        |cdf AS (SELECT tok, count(*) AS dfreq FROM ctoks GROUP BY tok),
-        |cranked AS (
-        |  SELECT t.doc_id, t.tok, d.dfreq,
-        |    row_number() OVER (PARTITION BY t.doc_id
-        |      ORDER BY d.dfreq, t.tok) AS rn
-        |  FROM ctoks t JOIN cdf d USING (tok)),
-        |cprobe AS (
-        |  SELECT doc_id, tok FROM cranked
-        |  WHERE rn <= 8 AND dfreq <= 20),
-        |cand AS (
-        |  SELECT a.doc_id AS sub, b.doc_id AS sup
-        |  FROM pruned a JOIN pruned b
-        |    ON a.band = b.band AND a.bh = b.bh AND a.doc_id <> b.doc_id
-        |  UNION
-        |  SELECT p.doc_id AS sub, t.doc_id AS sup
-        |  FROM cprobe p JOIN ctoks t
-        |    ON p.tok = t.tok AND p.doc_id <> t.doc_id),
-        |csizes AS (SELECT doc_id, count(*) AS n FROM ctoks GROUP BY doc_id),
-        |cinter AS (
-        |  SELECT c.sub, c.sup, count(*) AS n_inter
-        |  FROM cand c
-        |  JOIN ctoks ta ON ta.doc_id = c.sub
-        |  JOIN ctoks tb ON tb.doc_id = c.sup AND tb.tok = ta.tok
-        |  GROUP BY c.sub, c.sup)
-        |SELECT i.sub AS id_sub, i.sup AS id_sup,
-        |  CAST(i.n_inter AS BIGINT) AS n_inter,
-        |  CAST(sa.n AS BIGINT) AS n_sub, CAST(sb.n AS BIGINT) AS n_sup,
-        |  CAST(i.n_inter AS DOUBLE) / CAST(sa.n AS DOUBLE) AS cont_r
-        |FROM cinter i
-        |JOIN csizes sa ON sa.doc_id = i.sub
-        |JOIN csizes sb ON sb.doc_id = i.sup
-        |WHERE i.n_inter * 4 >= 3 * sa.n""".stripMargin,
-
-    // q153: same lag chain, integer-cent weights 2^(7-k), exact half-up
-    // ratio; den needs the BIGINT cast (DuckDB literal sums are INT32)
-    "q153_ewma" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
-        |l AS (SELECT user_id, ts_us, event_id, c,
-        |    lag(c, 1) OVER w AS c1, lag(c, 2) OVER w AS c2,
-        |    lag(c, 3) OVER w AS c3, lag(c, 4) OVER w AS c4,
-        |    lag(c, 5) OVER w AS c5, lag(c, 6) OVER w AS c6,
-        |    lag(c, 7) OVER w AS c7
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-        |s AS (SELECT user_id, ts_us, event_id, c,
-        |    c * 128 + coalesce(c1 * 64, 0) + coalesce(c2 * 32, 0)
-        |      + coalesce(c3 * 16, 0) + coalesce(c4 * 8, 0)
-        |      + coalesce(c5 * 4, 0) + coalesce(c6 * 2, 0)
-        |      + coalesce(c7, 0) AS num,
-        |    CAST(128 + CASE WHEN c1 IS NULL THEN 0 ELSE 64 END
-        |      + CASE WHEN c2 IS NULL THEN 0 ELSE 32 END
-        |      + CASE WHEN c3 IS NULL THEN 0 ELSE 16 END
-        |      + CASE WHEN c4 IS NULL THEN 0 ELSE 8 END
-        |      + CASE WHEN c5 IS NULL THEN 0 ELSE 4 END
-        |      + CASE WHEN c6 IS NULL THEN 0 ELSE 2 END
-        |      + CASE WHEN c7 IS NULL THEN 0 ELSE 1 END AS BIGINT) AS den
-        |  FROM l)
-        |SELECT user_id, ts_us, event_id, c AS value_c, num AS ewma_num,
-        |  den AS ewma_den,
-        |  CAST((2000000 * num + den * 100) // (2 * den * 100) AS DOUBLE) / 1e6
-        |    AS ewma_r
-        |FROM s""".stripMargin,
-
-    // q152: same deterministic changelog (q130's family + seq-0 initial
-    // load); lead(seq) over ALL ops closes intervals, then upserts only
-    "q152_scd2_history" ->
-      """WITH docs AS (SELECT doc_id, text FROM documents),
-        |log AS (
-        |  SELECT doc_id, 0 AS seq, 'upsert' AS op, text
-        |  FROM docs WHERE doc_id % 10 <= 1
-        |  UNION ALL SELECT doc_id, 1, 'delete', CAST(NULL AS VARCHAR)
-        |  FROM docs WHERE doc_id % 10 = 0
-        |  UNION ALL SELECT doc_id, 1, 'upsert', text || ' rev one'
-        |  FROM docs WHERE doc_id % 10 = 1
-        |  UNION ALL SELECT doc_id, 2, 'upsert', text || ' rev two'
-        |  FROM docs WHERE doc_id % 10 = 1),
-        |w AS (SELECT doc_id, seq, op, text,
-        |        lead(seq) OVER (PARTITION BY doc_id ORDER BY seq) AS vt
-        |      FROM log)
-        |SELECT doc_id, text, CAST(vt AS BIGINT) AS valid_to,
-        |  CAST(seq AS BIGINT) AS valid_from,
-        |  (vt IS NULL) AS is_current
-        |FROM w WHERE op = 'upsert'""".stripMargin,
-    // q94: same lattice-LSH pair chain as q32, folded to per-doc verdicts
-    "q94_embedding_neardup" ->
-      s"""WITH $latticeSimCtes,
-         |m AS (SELECT id_b AS vec_id, min(id_a) AS dup_of
-         |      FROM sims WHERE sim >= 0.35 GROUP BY id_b)
-         |SELECT e.vec_id, (m.dup_of IS NOT NULL) AS is_dup,
-         |  coalesce(m.dup_of, -1) AS dup_of
-         |FROM embeddings e LEFT JOIN m ON e.vec_id = m.vec_id""".stripMargin,
-    // q95: word-5-gram doc frequencies, boilerplate = spans in >=2 docs
-    "q95_boilerplate_spans" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, array_to_string(t[i:i+4], ' ') AS s
-        |  FROM toks,
-        |  LATERAL unnest(range(1,
-        |    (CASE WHEN len(t) = 0 THEN 0 ELSE greatest(len(t) - 4, 1) END) + 1)) AS u(i)),
-        |df AS (SELECT s, count(*) AS n_docs FROM sh GROUP BY s),
-        |b AS (SELECT s FROM df WHERE n_docs >= 2)
-        |SELECT sh.doc_id, CAST(count(*) AS BIGINT) AS n_distinct,
-        |  CAST(count(b.s) AS BIGINT) AS n_boiler,
-        |  round(CAST(count(b.s) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS boiler_ratio
-        |FROM sh LEFT JOIN b ON sh.s = b.s GROUP BY sh.doc_id""".stripMargin,
-    // q96: the streaming dedup must equal batch min-per-signature exactly;
-    // signature mirror = md5 over the 16 ordered minhash lane minima
-    "q96_streaming_dedup" ->
-      s"""WITH $minhashSigCtes,
-         |k AS (SELECT sig, min(doc_id) AS keeper FROM sigs GROUP BY sig)
-         |SELECT s.doc_id, k.keeper, (s.doc_id <> k.keeper) AS is_dup
-         |FROM sigs s JOIN k ON s.sig = k.sig""".stripMargin,
-    // q255: first-data-batch state counts are corpus functions — dedup
-    // state is one row per distinct minhash signature (q96's sigs CTE),
-    // stream-stream join state is one row per non-null-key/time event on
-    // either side; nothing evicts at watermark 0, so removed = 0
-    "q255_stream_state_metrics" ->
-      s"""WITH $minhashSigCtes,
-         |ded AS (SELECT CAST(count(DISTINCT sig) AS BIGINT) AS n FROM sigs),
-         |ev AS (SELECT event_type FROM events
-         |       WHERE user_id IS NOT NULL AND ts IS NOT NULL
-         |         AND event_type IN ('view', 'click')),
-         |vc AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ev)
-         |SELECT 'dedup' AS stream, CAST(0 AS BIGINT) AS op_idx,
-         |  ded.n AS rows_total, ded.n AS rows_updated,
-         |  CAST(0 AS BIGINT) AS rows_removed FROM ded
-         |UNION ALL
-         |SELECT 'join', CAST(0 AS BIGINT), vc.n, vc.n, CAST(0 AS BIGINT)
-         |FROM vc""".stripMargin,
-    // q257: two-batch eviction — phase split at the epoch-us midpoint,
-    // hourly windows, wm(b) = floor(max prior-batch event ms) - 37 min,
-    // eviction predicate w_end <= wm (boundary pinned in StreamingSpec);
-    // the third row is the trailing no-data finalization batch
-    "q257_stream_state_eviction" ->
-      """WITH e AS (SELECT epoch_us(ts) AS us FROM events),
-        |bounds AS (SELECT min(us) AS mn, max(us) AS mx FROM e),
-        |sp AS (SELECT (mn + mx) // 2 AS s, mx FROM bounds),
-        |a AS (SELECT us FROM e, sp WHERE us IS NULL OR us < s),
-        |b AS (SELECT us FROM e, sp WHERE us >= s),
-        |wa AS (SELECT DISTINCT us - us % 3600000000 AS w FROM a
-        |       WHERE us IS NOT NULL),
-        |wb AS (SELECT DISTINCT us - us % 3600000000 AS w FROM b),
-        |wall AS (SELECT w FROM wa UNION SELECT w FROM wb),
-        |wm1 AS (SELECT ((max(us) // 1000) - 2220000) * 1000 AS t FROM a),
-        |wm2 AS (SELECT ((mx // 1000) - 2220000) * 1000 AS t FROM sp),
-        |rem1 AS (SELECT count(*) AS n FROM wall, wm1
-        |         WHERE w + 3600000000 <= t),
-        |remc AS (SELECT count(*) AS n FROM wall, wm2
-        |         WHERE w + 3600000000 <= t),
-        |na AS (SELECT count(*) AS n FROM a),
-        |nb AS (SELECT count(*) AS n FROM b),
-        |nwa AS (SELECT count(*) AS n FROM wa),
-        |nwb AS (SELECT count(*) AS n FROM wb),
-        |nwall AS (SELECT count(*) AS n FROM wall)
-        |SELECT CAST(0 AS BIGINT) AS batch_seq,
-        |  CAST(na.n AS BIGINT) AS input_rows,
-        |  CAST(nwa.n AS BIGINT) AS rows_total,
-        |  CAST(nwa.n AS BIGINT) AS rows_updated,
-        |  CAST(0 AS BIGINT) AS rows_removed
-        |FROM na, nwa
-        |UNION ALL
-        |SELECT CAST(1 AS BIGINT), CAST(nb.n AS BIGINT),
-        |  CAST(nwall.n - rem1.n AS BIGINT), CAST(nwb.n AS BIGINT),
-        |  CAST(rem1.n AS BIGINT)
-        |FROM nb, nwall, rem1, nwb
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), CAST(0 AS BIGINT),
-        |  CAST(nwall.n - remc.n AS BIGINT), CAST(0 AS BIGINT),
-        |  CAST(remc.n - rem1.n AS BIGINT)
-        |FROM nwall, remc, rem1""".stripMargin,
-    // q260: join-state eviction — phase split at the epoch-us midpoint
-    // (nulls to phase A), wm(b) = floor-ms(min of the two sides' prior
-    // maxes) - 2 h, eviction thresholds wm - 1 ms (µs-exact; pinned by
-    // this oracle + StreamingSpec), input = 2 × raw phase rows
-    // (one per join branch of the fanned-out file source)
-    "q260_stream_join_eviction" ->
-      """WITH e AS (SELECT event_type, user_id, epoch_us(ts) AS us
-        |           FROM events),
-        |bounds AS (SELECT min(us) AS mn, max(us) AS mx FROM e
-        |           WHERE us IS NOT NULL),
-        |sp AS (SELECT (mn + mx) // 2 AS s FROM bounds),
-        |va AS (SELECT us FROM e, sp WHERE us IS NOT NULL AND us < s
-        |       AND event_type = 'view' AND user_id IS NOT NULL),
-        |ca AS (SELECT us FROM e, sp WHERE us IS NOT NULL AND us < s
-        |       AND event_type = 'click' AND user_id IS NOT NULL),
-        |vb AS (SELECT us FROM e, sp WHERE us >= s
-        |       AND event_type = 'view' AND user_id IS NOT NULL),
-        |cb AS (SELECT us FROM e, sp WHERE us >= s
-        |       AND event_type = 'click' AND user_id IS NOT NULL),
-        |thr1 AS (SELECT ((least((SELECT max(us) FROM va),
-        |                        (SELECT max(us) FROM ca)) // 1000)
-        |                 - 7200000) * 1000 - 1000 AS t),
-        |thr2 AS (SELECT ((least((SELECT max(us) FROM (SELECT us FROM va
-        |                          UNION ALL SELECT us FROM vb)),
-        |                        (SELECT max(us) FROM (SELECT us FROM ca
-        |                          UNION ALL SELECT us FROM cb))) // 1000)
-        |                 - 7200000) * 1000 - 1000 AS t),
-        |rem1 AS (SELECT (SELECT count(*) FROM va, thr1
-        |                 WHERE us + 3600000000 <= t)
-        |               + (SELECT count(*) FROM ca, thr1
-        |                  WHERE us <= t) AS n),
-        |remf AS (SELECT (SELECT count(*) FROM (SELECT us FROM va
-        |                   UNION ALL SELECT us FROM vb), thr2
-        |                 WHERE us + 3600000000 <= t)
-        |               + (SELECT count(*) FROM (SELECT us FROM ca
-        |                   UNION ALL SELECT us FROM cb), thr2
-        |                  WHERE us <= t) AS n),
-        |rawa AS (SELECT count(*) AS n FROM e, sp
-        |         WHERE us IS NULL OR us < s),
-        |rawb AS (SELECT count(*) AS n FROM e, sp WHERE us >= s),
-        |n0 AS (SELECT (SELECT count(*) FROM va)
-        |             + (SELECT count(*) FROM ca) AS n),
-        |n1 AS (SELECT (SELECT count(*) FROM vb)
-        |             + (SELECT count(*) FROM cb) AS n)
-        |SELECT CAST(0 AS BIGINT) AS batch_seq,
-        |  CAST(2 * rawa.n AS BIGINT) AS input_rows,
-        |  CAST(n0.n AS BIGINT) AS rows_total,
-        |  CAST(n0.n AS BIGINT) AS rows_updated,
-        |  CAST(0 AS BIGINT) AS rows_removed
-        |FROM rawa, n0
-        |UNION ALL
-        |SELECT CAST(1 AS BIGINT), CAST(2 * rawb.n AS BIGINT),
-        |  CAST(n0.n + n1.n - rem1.n AS BIGINT), CAST(n1.n AS BIGINT),
-        |  CAST(rem1.n AS BIGINT)
-        |FROM rawb, n0, n1, rem1
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), CAST(0 AS BIGINT),
-        |  CAST(n0.n + n1.n - remf.n AS BIGINT), CAST(0 AS BIGINT),
-        |  CAST(remf.n - rem1.n AS BIGINT)
-        |FROM n0, n1, remf, rem1""".stripMargin,
-
-    // q258: q251/q252 posture for the PDF fixtures — DuckDB has no PDF
-    // parser; the fixture bytes are deterministic and PdfHeaderSpec
-    // re-derives every row against the ISO 32000-1 grammar. Rows 7/8/13
-    // pin not-a-PDF -> null row; 9/10 pin reference-valued /Count and a
-    // dangling /Root nulling ONLY pages; 11/12 pin the truncated trailer
-    // / bad startxref keeping version+linearized with null
-    // pages+encrypted; 5 pins incremental updates resolving newest;
-    // 15/16 (r20) pin the compressed-catalog /ObjStm path: pages resolve
-    // through the bounded FlateDecode, and a corrupted deflate body
-    // nulls ONLY pages.
-    "q258_pdf_meta" ->
-      """SELECT CAST(pdf_id AS BIGINT) AS pdf_id, version,
-        | CAST(pages AS BIGINT) AS pages,
-        | CAST(encrypted AS BOOLEAN) AS encrypted,
-        | CAST(linearized AS BOOLEAN) AS linearized
-        |FROM (VALUES
-        |  (1, '1.4', 5, FALSE, FALSE),
-        |  (2, '1.7', 12, FALSE, TRUE),
-        |  (3, '1.6', 2, TRUE, FALSE),
-        |  (4, '1.5', 7, FALSE, FALSE),
-        |  (5, '1.4', 8, FALSE, FALSE),
-        |  (6, '1.3', 1, FALSE, FALSE),
-        |  (7, NULL, NULL, NULL, NULL),
-        |  (8, NULL, NULL, NULL, NULL),
-        |  (9, '1.4', NULL, FALSE, FALSE),
-        |  (10, '1.4', NULL, FALSE, FALSE),
-        |  (11, '1.4', NULL, NULL, FALSE),
-        |  (12, '1.5', NULL, NULL, FALSE),
-        |  (13, NULL, NULL, NULL, NULL),
-        |  (14, '1.6', 4, TRUE, FALSE),
-        |  (15, '1.5', 9, FALSE, FALSE),
-        |  (16, '1.5', NULL, FALSE, FALSE))
-        |  AS t(pdf_id, version, pages, encrypted, linearized)""".stripMargin,
-    // q100: new-batch verdicts against the old-corpus signature index,
-    // then within-batch earliest-wins for unseen signatures
-    "q100_incremental_dedup" ->
-      s"""WITH $minhashSigCtes,
-         |old AS (SELECT doc_id, sig FROM sigs WHERE doc_id < 250),
-         |idx AS (SELECT sig, min(doc_id) AS ck FROM old GROUP BY sig),
-         |b AS (SELECT doc_id, sig FROM sigs WHERE doc_id >= 250),
-         |bm AS (SELECT sig, min(doc_id) AS bk FROM b GROUP BY sig)
-         |SELECT b.doc_id, coalesce(i.ck, bm.bk) AS keeper,
-         |  (b.doc_id <> coalesce(i.ck, bm.bk)) AS is_dup,
-         |  (i.ck IS NOT NULL) AS known_sig
-         |FROM b LEFT JOIN idx i ON b.sig = i.sig
-         |JOIN bm ON b.sig = bm.sig""".stripMargin,
-    // q98: per-lang percent_rank cutoff, unique (ratio DESC, doc_id) order
-    "q98_quality_percentile" ->
-      """WITH s AS (SELECT doc_id, lang,
-        |  CAST(len(list_filter(string_split_regex(trim(lower(text)), '\s+'),
-        |       t -> t IN ('the','a','an','of','and','in','to','is','it','for'))) AS DOUBLE) /
-        |  CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS DOUBLE) AS stop_ratio
-        | FROM documents),
-        |p AS (SELECT doc_id, lang,
-        |  percent_rank() OVER (PARTITION BY lang
-        |    ORDER BY stop_ratio DESC, doc_id) AS pr
-        | FROM s)
-        |SELECT doc_id, lang, round(pr, 6) AS pr_r FROM p WHERE pr <= 0.5""".stripMargin,
-    // q99: (source, lang) rollup + shares over the rollup output
-    "q99_mixture_report" ->
-      """WITH a AS (SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS n_tokens
-        | FROM documents GROUP BY source, lang)
-        |SELECT source, lang, n_docs, n_tokens,
-        |  round(CAST(n_docs AS DOUBLE) / sum(CAST(n_docs AS DOUBLE)) OVER (), 6) AS doc_share,
-        |  round(CAST(n_tokens AS DOUBLE) / sum(CAST(n_tokens AS DOUBLE)) OVER (), 6) AS tok_share
-        |FROM a""".stripMargin,
-    // q102: independent re-parse of the same constructed JSON strings
-    "q102_corrupt_quarantine" ->
-      """WITH raw AS (SELECT o_orderkey,
-        |  CASE WHEN o_orderkey % 7 = 0
-        |    THEN '{"k":' || o_orderkey || ',"p":'
-        |    ELSE '{"k":' || o_orderkey || ',"p":"' || o_orderpriority || '"}'
-        |  END AS r
-        | FROM orders)
-        |SELECT o_orderkey,
-        | CASE WHEN json_valid(r)
-        |      THEN CAST(json_extract_string(r, '$.k') AS BIGINT) END AS k,
-        | CASE WHEN json_valid(r) THEN json_extract_string(r, '$.p') END AS p,
-        | NOT json_valid(r) AS is_corrupt
-        |FROM raw""".stripMargin,
-    // q103: the merged read must equal the union with a back-filled null
-    "q103_schema_evolution" ->
-      """SELECT o_orderkey, o_totalprice,
-        | CASE WHEN o_orderkey % 2 = 1 THEN o_orderstatus END AS o_orderstatus
-        |FROM orders""".stripMargin,
-    // q107: lane agreement + exact Jaccard over the same candidate pairs
-    "q107_minhash_estimate" ->
-      s"""WITH $minhashPairCtes,
-         |pairs AS ($minhashPairSelect),
-         |shd AS (SELECT DISTINCT doc_id, s FROM sh),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
-         |agree AS (
-         |  SELECT p.id_a, p.id_b, count(*) FILTER (ma.h = mb.h) AS n_agree
-         |  FROM pairs p
-         |  JOIN minh ma ON ma.doc_id = p.id_a
-         |  JOIN minh mb ON mb.doc_id = p.id_b AND mb.lane = ma.lane
-         |  GROUP BY p.id_a, p.id_b),
-         |inter AS (
-         |  SELECT p.id_a, p.id_b, count(*) AS n_inter
-         |  FROM pairs p
-         |  JOIN shd a ON a.doc_id = p.id_a
-         |  JOIN shd b ON b.doc_id = p.id_b AND b.s = a.s
-         |  GROUP BY p.id_a, p.id_b)
-         |SELECT g.id_a, g.id_b, CAST(g.n_agree AS BIGINT) AS n_agree,
-         |  round(CAST(g.n_agree AS DOUBLE) / 16, 6) AS est_r,
-         |  CAST(coalesce(i.n_inter, 0) AS BIGINT) AS n_inter,
-         |  CAST(sa.n + sb.n - coalesce(i.n_inter, 0) AS BIGINT) AS n_union,
-         |  round(CAST(coalesce(i.n_inter, 0) AS DOUBLE) /
-         |    CAST(sa.n + sb.n - coalesce(i.n_inter, 0) AS DOUBLE), 6) AS jac_r
-         |FROM agree g
-         |LEFT JOIN inter i ON g.id_a = i.id_a AND g.id_b = i.id_b
-         |JOIN sizes sa ON g.id_a = sa.doc_id
-         |JOIN sizes sb ON g.id_b = sb.doc_id""".stripMargin,
-    // q105: same bigram explode, two aggregates, integer-exact ratio
-    "q105_bigram_stats" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |bi AS (
-        |  SELECT t[i] AS w1, t[i+1] AS w2
-        |  FROM toks, LATERAL unnest(range(1, len(t))) AS u(i)),
-        |pair AS (SELECT w1, w2, count(*) AS n FROM bi GROUP BY w1, w2),
-        |uni AS (SELECT w1, sum(n) AS n_w1 FROM pair GROUP BY w1)
-        |SELECT p.w1, p.w2, CAST(p.n AS BIGINT) AS n,
-        |  CAST(u.n_w1 AS BIGINT) AS n_w1,
-        |  round(CAST(p.n AS DOUBLE) / CAST(u.n_w1 AS DOUBLE), 6) AS cond_r
-        |FROM pair p JOIN uni u ON p.w1 = u.w1
-        |WHERE p.n >= 5""".stripMargin,
-    // q106: q53-style unnest mirror of the HOF predicates/folds
-    "q106_hof_arrays" ->
-      """WITH u AS (SELECT vec_id, unnest(embedding) AS x FROM embeddings)
-        |SELECT vec_id,
-        | CAST(count(*) FILTER (CAST(x AS DOUBLE) > 0) AS BIGINT) AS n_pos,
-        | bool_or(CAST(x AS DOUBLE) > 2.0) AS any_gt2,
-        | bool_and(abs(CAST(x AS DOUBLE)) < 10.0) AS all_lt10,
-        | round(sum(least(greatest(CAST(x AS DOUBLE), -1.0), 1.0)), 6) AS clamped_sum_r
-        |FROM u GROUP BY vec_id""".stripMargin,
-    // q104: compaction is pure layout — the data must be the identity
-    "q104_compact_lossless" ->
-      "SELECT o_orderkey, o_totalprice, o_orderstatus FROM orders",
-    // q101: identical grouping-set list, same exact-decimal sum as q39
-    "q101_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus,
-        | CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        | count(*) AS n
-        |FROM lineitem GROUP BY GROUPING SETS
-        |  ((l_returnflag), (l_linestatus), (l_returnflag, l_linestatus))""".stripMargin,
-    // q97: md5 shuffle key, shard = top byte mod 32, rank within shard
-    "q97_corpus_shuffle" ->
-      """WITH k AS (SELECT doc_id,
-        |    md5('shuf|' || CAST(doc_id AS VARCHAR)) AS skey FROM documents),
-        |s AS (SELECT doc_id, skey,
-        |  ((strpos('0123456789abcdef', substring(skey, 1, 1)) - 1) * 16 +
-        |   (strpos('0123456789abcdef', substring(skey, 2, 1)) - 1)) % 32 AS shard
-        |  FROM k)
-        |SELECT doc_id, CAST(shard AS BIGINT) AS shard,
-        |  CAST(row_number() OVER (PARTITION BY shard ORDER BY skey, doc_id)
-        |       AS BIGINT) AS pos
-        |FROM s""".stripMargin,
-    // q108: same bigram fit + per-instance surprisal; the log2 terms are
-    // rounded to exact LONG micro-bits on BOTH sides before summing, so
-    // aggregation order is irrelevant and only a libm last-ulp difference
-    // sitting within 1e-10 of a rounding boundary could diverge
-    "q108_bigram_lm" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |bi AS (
-        |  SELECT doc_id, t[i] AS w1, t[i+1] AS w2
-        |  FROM toks, LATERAL unnest(range(1, len(t))) AS u(i)),
-        |pair AS (SELECT w1, w2, count(*) AS n FROM bi GROUP BY w1, w2),
-        |uni AS (SELECT w1, sum(n) AS n_w1 FROM pair GROUP BY w1),
-        |term AS (
-        |  SELECT b.doc_id,
-        |    CAST(round(1e6 * log2(CAST(u.n_w1 AS DOUBLE))) AS BIGINT)
-        |    - CAST(round(1e6 * log2(CAST(p.n AS DOUBLE))) AS BIGINT) AS ub
-        |  FROM bi b
-        |  JOIN pair p ON b.w1 = p.w1 AND b.w2 = p.w2
-        |  JOIN uni u ON b.w1 = u.w1)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bi,
-        |  CAST(sum(ub) AS BIGINT) AS surprisal_ub,
-        |  CAST((2*sum(ub) + count(*)) // (2*count(*)) AS DOUBLE) / 1e6
-        |    AS avg_bits_r
-        |FROM term GROUP BY doc_id""".stripMargin,
-    // q109: identical integer chunk-count arithmetic and 1-based slicing
-    "q109_chunk_overlap" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |n AS (
-        |  SELECT doc_id, t,
-        |    CASE WHEN len(t) <= 64 THEN 0
-        |         ELSE (len(t) - 64 + 47) // 48 END AS k_max
-        |  FROM toks),
-        |c AS (
-        |  SELECT doc_id, i AS chunk_idx, t[i*48 + 1 : i*48 + 64] AS chunk
-        |  FROM n, LATERAL unnest(range(0, k_max + 1)) AS u(i))
-        |SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
-        |  CAST(len(chunk) AS BIGINT) AS chunk_tok,
-        |  chunk[1] AS first_tok,
-        |  md5(array_to_string(chunk, ' ')) AS chunk_md5
-        |FROM c""".stripMargin,
-    // q110: same deterministic md5 order + running-sum admission rule
-    "q110_source_budget" ->
-      """WITH k AS (
-        |  SELECT source, doc_id, n_chars,
-        |    md5('bud|' || CAST(doc_id AS VARCHAR)) AS skey FROM documents),
-        |c AS (
-        |  SELECT source, doc_id, n_chars,
-        |    sum(n_chars) OVER (PARTITION BY source ORDER BY skey
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_wt
-        |  FROM k)
-        |SELECT source, doc_id, CAST(n_chars AS BIGINT) AS wt,
-        |  CAST(cum_wt AS BIGINT) AS cum_wt
-        |FROM c WHERE cum_wt - n_chars < 2500""".stripMargin,
-    // q111: word-frequency entropy with the same micro-bits carrier
-    "q111_word_entropy" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS w
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |wc AS (SELECT doc_id, w, count(*) AS nw FROM toks GROUP BY doc_id, w),
-        |d AS (
-        |  SELECT doc_id, sum(nw) AS n_tok, count(*) AS n_types,
-        |    sum(nw * CAST(round(1e6 * log2(CAST(nw AS DOUBLE))) AS BIGINT))
-        |      AS sum_ub
-        |  FROM wc GROUP BY doc_id)
-        |SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tok,
-        |  CAST(n_types AS BIGINT) AS n_types,
-        |  CAST((2000000*n_types + n_tok) // (2*n_tok) AS DOUBLE) / 1e6
-        |    AS ttr_r,
-        |  CAST((2 * (CAST(round(1e6*log2(CAST(n_tok AS DOUBLE))) AS BIGINT)
-        |             * n_tok - sum_ub) + n_tok) // (2 * n_tok) AS DOUBLE)
-        |    / 1e6 AS entropy_r
-        |FROM d""".stripMargin,
-    // q112: per-source lane minima computed directly from the shingles (the
-    // mergeability property: min over docs of per-doc minima = min over the
-    // source's union shingle set), then the same agreement/exact-Jaccard
-    // pairing as q107 at source granularity
-    "q112_source_sketch" ->
-      """WITH toks AS (
-        |  SELECT source, string_split_regex(trim(lower(text)), '\s+') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |sh AS (
-        |  SELECT source, array_to_string(t[i:i+2], ' ') AS s
-        |  FROM toks,
-        |  LATERAL unnest(range(1,
-        |    (CASE WHEN len(t) = 0 THEN 0 ELSE greatest(len(t) - 2, 1) END) + 1)) AS u(i)),
-        |lanes AS (SELECT unnest(range(0, 16)) AS lane),
-        |minh AS (
-        |  SELECT source, lane,
-        |    min(substring(md5(s) || md5(s), CAST(2*lane+1 AS INTEGER), 8)) AS h
-        |  FROM sh CROSS JOIN lanes GROUP BY source, lane),
-        |agree AS (
-        |  SELECT a.source AS grp_a, b.source AS grp_b,
-        |    count(*) FILTER (a.h = b.h) AS n_agree
-        |  FROM minh a JOIN minh b ON a.lane = b.lane AND a.source < b.source
-        |  GROUP BY 1, 2),
-        |shd AS (SELECT DISTINCT source, s FROM sh),
-        |sizes AS (SELECT source, count(*) AS n FROM shd GROUP BY source),
-        |inter AS (
-        |  SELECT a.source AS grp_a, b.source AS grp_b, count(*) AS n_inter
-        |  FROM shd a JOIN shd b ON a.s = b.s AND a.source < b.source
-        |  GROUP BY 1, 2)
-        |SELECT g.grp_a, g.grp_b, CAST(g.n_agree AS BIGINT) AS n_agree,
-        |  round(CAST(g.n_agree AS DOUBLE) / 16, 6) AS est_r,
-        |  CAST(coalesce(i.n_inter, 0) AS BIGINT) AS n_inter,
-        |  CAST(sa.n + sb.n - coalesce(i.n_inter, 0) AS BIGINT) AS n_union,
-        |  CAST((2000000*coalesce(i.n_inter, 0)
-        |        + (sa.n + sb.n - coalesce(i.n_inter, 0)))
-        |    // (2*(sa.n + sb.n - coalesce(i.n_inter, 0))) AS DOUBLE) / 1e6
-        |    AS jac_r
-        |FROM agree g
-        |LEFT JOIN inter i ON g.grp_a = i.grp_a AND g.grp_b = i.grp_b
-        |JOIN sizes sa ON g.grp_a = sa.source
-        |JOIN sizes sb ON g.grp_b = sb.source""".stripMargin,
-    // q113: same 12-bit md5 bucket (3 hex nibbles mod 1024), same 4-row
-    // sketch, same exact-top-20 join; overshoot = est - exact >= 0 always
-    "q113_cms_heavyhitters" ->
-      s"""WITH words AS (
-         |  SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS w
-         |  FROM documents WHERE length(trim(text)) > 0),
-         |rows_ AS (SELECT unnest(range(0, 4)) AS r),
-         |bucketed AS (
-         |  SELECT r, w, ${cmsBucketSqlFor("r", "w")} AS bucket
-         |  FROM words CROSS JOIN rows_),
-         |cms AS (SELECT r, bucket, count(*) AS n FROM bucketed
-         |        GROUP BY r, bucket),
-         |exact AS (
-         |  SELECT w, count(*) AS n_exact FROM words GROUP BY w
-         |  ORDER BY n_exact DESC, w LIMIT 20),
-         |est AS (
-         |  SELECT e.w, e.n_exact, min(c.n) AS n_est
-         |  FROM exact e CROSS JOIN rows_ r
-         |  JOIN cms c ON c.r = r.r AND c.bucket = (${cmsBucketSqlFor("r.r", "e.w")})
-         |  GROUP BY e.w, e.n_exact)
-         |SELECT w, CAST(n_exact AS BIGINT) AS n_exact,
-         |  CAST(n_est AS BIGINT) AS n_est,
-         |  CAST(n_est - n_exact AS BIGINT) AS overshoot
-         |FROM est""".stripMargin,
-    // q114: merging slice fits must equal the whole-corpus fit — the
-    // oracle deliberately refits on everything (q105's model + exact-
-    // integer rounding), proving merge(fit(A), fit(B)) == fit(A ∪ B)
-    "q114_incremental_lm" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |bi AS (
-        |  SELECT t[i] AS w1, t[i+1] AS w2
-        |  FROM toks, LATERAL unnest(range(1, len(t))) AS u(i)),
-        |pair AS (SELECT w1, w2, count(*) AS n FROM bi GROUP BY w1, w2),
-        |uni AS (SELECT w1, sum(n) AS n_w1 FROM pair GROUP BY w1)
-        |SELECT p.w1, p.w2, CAST(p.n AS BIGINT) AS n,
-        |  CAST(u.n_w1 AS BIGINT) AS n_w1,
-        |  CAST((2000000*p.n + u.n_w1) // (2*u.n_w1) AS DOUBLE) / 1e6
-        |    AS cond_r
-        |FROM pair p JOIN uni u ON p.w1 = u.w1
-        |WHERE p.n >= 5""".stripMargin,
-    // q115: same LSH pair chain, then three unrolled exact-integer PR
-    // iterations — floor division makes the recurrence bit-reproducible
-    "q115_pagerank" ->
-      s"""WITH $minhashPairCtes,
-         |pairs AS ($minhashPairSelect),
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM pairs
-         |  UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs),
-         |deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
-         |r0 AS (SELECT DISTINCT src AS id, CAST(1000000 AS BIGINT) AS units
-         |       FROM edges),
-         |r1 AS (SELECT e.dst AS id,
-         |         150000 + sum((r.units * 85) // (g.d * 100)) AS units
-         |       FROM edges e
-         |       JOIN r0 r ON r.id = e.src JOIN deg g ON g.src = e.src
-         |       GROUP BY e.dst),
-         |r2 AS (SELECT e.dst AS id,
-         |         150000 + sum((r.units * 85) // (g.d * 100)) AS units
-         |       FROM edges e
-         |       JOIN r1 r ON r.id = e.src JOIN deg g ON g.src = e.src
-         |       GROUP BY e.dst),
-         |r3 AS (SELECT e.dst AS id,
-         |         150000 + sum((r.units * 85) // (g.d * 100)) AS units
-         |       FROM edges e
-         |       JOIN r2 r ON r.id = e.src JOIN deg g ON g.src = e.src
-         |       GROUP BY e.dst)
-         |SELECT r3.id AS doc_id, CAST(g.d AS BIGINT) AS d,
-         |  CAST(r3.units AS BIGINT) AS units
-         |FROM r3 JOIN deg g ON g.src = r3.id""".stripMargin,
-    // q116: identical micro-bit PMI with marginals and total on the pair
-    // table; unique (pmi, w1, w2) ordering for the top-50 cut
-    "q116_pmi_pairs" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |bi AS (
-        |  SELECT t[i] AS w1, t[i+1] AS w2
-        |  FROM toks, LATERAL unnest(range(1, len(t))) AS u(i)),
-        |pair AS (SELECT w1, w2, count(*) AS n FROM bi GROUP BY w1, w2),
-        |uni1 AS (SELECT w1, sum(n) AS n_w1 FROM pair GROUP BY w1),
-        |uni2 AS (SELECT w2, sum(n) AS n_w2 FROM pair GROUP BY w2),
-        |tot AS (SELECT sum(n) AS t FROM pair),
-        |sel AS (
-        |  SELECT p.w1, p.w2, p.n, u1.n_w1, u2.n_w2,
-        |    CAST(round(1e6 * log2(CAST(p.n AS DOUBLE))) AS BIGINT)
-        |    + CAST(round(1e6 * log2(CAST(t.t AS DOUBLE))) AS BIGINT)
-        |    - CAST(round(1e6 * log2(CAST(u1.n_w1 AS DOUBLE))) AS BIGINT)
-        |    - CAST(round(1e6 * log2(CAST(u2.n_w2 AS DOUBLE))) AS BIGINT)
-        |      AS pmi_ub
-        |  FROM pair p
-        |  JOIN uni1 u1 ON p.w1 = u1.w1
-        |  JOIN uni2 u2 ON p.w2 = u2.w2
-        |  CROSS JOIN tot t
-        |  WHERE p.n >= 5)
-        |SELECT w1, w2, CAST(n AS BIGINT) AS n, CAST(n_w1 AS BIGINT) AS n_w1,
-        |  CAST(n_w2 AS BIGINT) AS n_w2, pmi_ub,
-        |  CAST(pmi_ub AS DOUBLE) / 1e6 AS pmi_r
-        |FROM sel ORDER BY pmi_ub DESC, w1, w2 LIMIT 50""".stripMargin,
-    // q117: median and MAD rounded to 6dp BEFORE the threshold compare, so
-    // both engines fence with identical doubles (q52 pins the percentile
-    // interpolation parity)
-    "q117_mad_outliers" ->
-      """WITH med AS (
-        |  SELECT event_type, round(quantile_cont(value, 0.5), 6) AS med_r
-        |  FROM events GROUP BY event_type),
-        |stats AS (
-        |  SELECT e.event_type, any_value(m.med_r) AS med_r,
-        |    round(quantile_cont(abs(e.value - m.med_r), 0.5), 6) AS mad_r,
-        |    count(*) AS n
-        |  FROM events e JOIN med m USING (event_type)
-        |  GROUP BY e.event_type)
-        |SELECT s.event_type, s.med_r, s.mad_r, CAST(s.n AS BIGINT) AS n,
-        |  CAST(sum(CASE WHEN abs(e.value - s.med_r) > 4.4478 * s.mad_r
-        |       THEN 1 ELSE 0 END) AS BIGINT) AS n_outlier
-        |FROM events e JOIN stats s USING (event_type)
-        |GROUP BY s.event_type, s.med_r, s.mad_r, s.n""".stripMargin,
-    // q118: identical A-ES key — 52-bit md5 dyadic u, key = u^(1/w) — and
-    // the same (key desc, doc_id) rank; only the integer rank is compared
-    "q118_weighted_sample" ->
-      """WITH k AS (
-        |  SELECT source, doc_id, n_chars AS wt,
-        |    pow((('0x' || substring(md5('aes|' || CAST(doc_id AS VARCHAR)),
-        |           1, 13))::BIGINT + 1) / 4503599627370496.0,
-        |        1.0 / n_chars) AS skey
-        |  FROM documents),
-        |r AS (
-        |  SELECT source, doc_id, wt,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY skey DESC, doc_id) AS rk
-        |  FROM k)
-        |SELECT source, doc_id, CAST(wt AS BIGINT) AS wt, CAST(rk AS BIGINT) AS rk
-        |FROM r WHERE rk <= 5""".stripMargin,
-    // q119: q67's winnow-fingerprint CTE, then the same capped fp self-join
-    "q119_shared_passages" ->
-      """WITH nrm AS (
-        |  SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |g AS (
-        |  SELECT doc_id, i AS pos,
-        |    substring(md5(substring(norm, CAST(i AS INTEGER), 16)), 1, 8) AS h
-        |  FROM nrm,
-        |  LATERAL unnest(range(1, greatest(length(norm) - 15, 1) + 1)) AS u(i)),
-        |w AS (
-        |  SELECT doc_id, min(h) OVER (PARTITION BY doc_id ORDER BY pos
-        |    ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS fp FROM g),
-        |d AS (SELECT DISTINCT doc_id, fp FROM w),
-        |counted AS (
-        |  SELECT doc_id, fp, count(*) OVER (PARTITION BY fp) AS n_docs FROM d),
-        |pruned AS (
-        |  SELECT doc_id, fp FROM counted WHERE n_docs > 1 AND n_docs <= 10)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  CAST(count(*) AS BIGINT) AS n_shared, min(a.fp) AS min_fp
-        |FROM pruned a JOIN pruned b
-        |  ON a.fp = b.fp AND a.doc_id < b.doc_id
-        |GROUP BY a.doc_id, b.doc_id
-        |HAVING count(*) >= 8""".stripMargin,
-    // q120: the Bloom filter is an accelerator, not a semantics change —
-    // the oracle is the plain exact anti-join
-    "q120_bloom_blocklist" ->
-      """WITH digested AS (
-        |  SELECT doc_id,
-        |    md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS digest
-        |  FROM documents)
-        |SELECT doc_id, digest FROM digested
-        |WHERE digest NOT IN (
-        |  SELECT digest FROM digested WHERE doc_id % 37 = 0)""".stripMargin,
-    // q121: same prefix-filter construction in SQL; thresholding is pure
-    // integer arithmetic on both sides, the double jacc is display-only
-    "q121_prefix_jaccard" ->
-      """WITH nrm AS (
-        |  SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |toks AS (
-        |  SELECT DISTINCT doc_id,
-        |    substring(norm || '       ', CAST(i AS INTEGER), 8) AS tok
-        |  FROM nrm,
-        |  LATERAL unnest(range(1, greatest(length(norm) - 7, 1) + 1)) AS u(i)),
-        |df AS (SELECT tok, count(*) AS dfreq FROM toks GROUP BY tok),
-        |ranked AS (
-        |  SELECT t.doc_id, t.tok,
-        |    row_number() OVER (PARTITION BY t.doc_id
-        |      ORDER BY d.dfreq, t.tok) AS rn,
-        |    count(*) OVER (PARTITION BY t.doc_id) AS n
-        |  FROM toks t JOIN df d USING (tok)),
-        |prefix0 AS (
-        |  SELECT doc_id, tok FROM ranked
-        |  WHERE rn <= n - ((n * 3 + 4) // 5) + 1),
-        |prefix AS (
-        |  SELECT doc_id, tok FROM (
-        |    SELECT doc_id, tok, count(*) OVER (PARTITION BY tok) AS nd
-        |    FROM prefix0)
-        |  WHERE nd <= 20),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-        |  FROM prefix a JOIN prefix b
-        |    ON a.tok = b.tok AND a.doc_id < b.doc_id),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM toks GROUP BY doc_id),
-        |inter AS (
-        |  SELECT c.d1, c.d2, count(*) AS n_inter
-        |  FROM cand c
-        |  JOIN toks ta ON ta.doc_id = c.d1
-        |  JOIN toks tb ON tb.doc_id = c.d2 AND tb.tok = ta.tok
-        |  GROUP BY c.d1, c.d2)
-        |SELECT i.d1 AS id_a, i.d2 AS id_b,
-        |  CAST(i.n_inter AS BIGINT) AS n_inter,
-        |  CAST(sa.n AS BIGINT) AS n_a, CAST(sb.n AS BIGINT) AS n_b,
-        |  CAST(i.n_inter AS DOUBLE) /
-        |    CAST(sa.n + sb.n - i.n_inter AS DOUBLE) AS jacc
-        |FROM inter i
-        |JOIN sizes sa ON sa.doc_id = i.d1
-        |JOIN sizes sb ON sb.doc_id = i.d2
-        |WHERE i.n_inter * 5 >= 3 * (sa.n + sb.n - i.n_inter)""".stripMargin,
-    // q122: identical v2 derivation, plain full-outer digest compare
-    "q122_corpus_diff" ->
-      """WITH v1 AS (SELECT doc_id, text FROM documents),
-        |v2 AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 43 = 0 THEN text || ' v2' ELSE text END AS text
-        |  FROM v1 WHERE doc_id % 41 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text || ' new' FROM v1 WHERE doc_id % 47 = 0),
-        |o AS (SELECT doc_id,
-        |  md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS old_digest
-        |  FROM v1),
-        |n AS (SELECT doc_id,
-        |  md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS new_digest
-        |  FROM v2)
-        |SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
-        |  CASE WHEN o.doc_id IS NULL THEN 'added'
-        |       WHEN n.doc_id IS NULL THEN 'removed'
-        |       WHEN old_digest = new_digest THEN 'unchanged'
-        |       ELSE 'changed' END AS status,
-        |  old_digest, new_digest
-        |FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id""".stripMargin,
-    // q123: same padded char-8-shingle semantics as charShingles (k-1
-    // space pad, >=1 shingle even for short/empty text); repetition
-    // threshold is integer math on both engines
-    "q123_compression_signal" ->
-      """WITH g AS (
-        |  SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(greatest(length(text) - 7, 1) AS BIGINT) AS n_grams,
-        |    CAST(count(DISTINCT substring(text || repeat(' ', 7),
-        |      CAST(i AS INTEGER), 8)) AS BIGINT) AS n_distinct
-        |  FROM documents,
-        |  LATERAL unnest(range(1, greatest(length(text) - 7, 1) + 1)) AS u(i)
-        |  GROUP BY doc_id, length(text))
-        |SELECT doc_id, n_chars, n_grams, n_distinct,
-        |  (n_distinct * 10 < n_grams * 3) AS is_repetitive
-        |FROM g""".stripMargin,
-    // q143: the explode → group(doc, n, gram) formulation of the Gopher
-    // gate. The top gram is selected via max(count·2^31 + gramChars) — one
-    // integer carrying the count with a longer-gram tie-break, identical
-    // on both engines; every output is an exact BIGINT char mass and the
-    // verdict is integer cross-multiplication (no float thresholds)
-    "q143_gopher_gate" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(
-        |    string_split_regex(trim(lower(text)), '\s+'),
-        |    x -> x <> '') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |stats AS (
-        |  SELECT doc_id, CAST(len(t) AS BIGINT) AS n_words,
-        |    CAST(length(array_to_string(t, ' ')) AS BIGINT) AS norm_chars
-        |  FROM toks),
-        |grams AS (
-        |  SELECT doc_id, 2 AS n, array_to_string(t[i:i+1], ' ') AS g
-        |    FROM toks, LATERAL unnest(range(1, greatest(len(t)-1, 0) + 1)) AS u(i)
-        |  UNION ALL
-        |  SELECT doc_id, 3, array_to_string(t[i:i+2], ' ')
-        |    FROM toks, LATERAL unnest(range(1, greatest(len(t)-2, 0) + 1)) AS u(i)
-        |  UNION ALL
-        |  SELECT doc_id, 4, array_to_string(t[i:i+3], ' ')
-        |    FROM toks, LATERAL unnest(range(1, greatest(len(t)-3, 0) + 1)) AS u(i)
-        |  UNION ALL
-        |  SELECT doc_id, 5, array_to_string(t[i:i+4], ' ')
-        |    FROM toks, LATERAL unnest(range(1, greatest(len(t)-4, 0) + 1)) AS u(i)
-        |  UNION ALL
-        |  SELECT doc_id, 10, array_to_string(t[i:i+9], ' ')
-        |    FROM toks, LATERAL unnest(range(1, greatest(len(t)-9, 0) + 1)) AS u(i)),
-        |gc AS (
-        |  SELECT doc_id, n, g, count(*) AS cnt, length(g) AS glen
-        |  FROM grams GROUP BY 1, 2, 3),
-        |ag AS (
-        |  SELECT doc_id, n,
-        |    max(cnt * 2147483648 + glen) AS score,
-        |    sum(CASE WHEN cnt >= 2 THEN cnt * glen ELSE 0 END) AS dup
-        |  FROM gc GROUP BY 1, 2),
-        |wide AS (
-        |  SELECT s.doc_id, s.n_words, s.norm_chars,
-        |    CAST(coalesce(a2.score // 2147483648, 0) AS BIGINT) AS top2_count,
-        |    CAST(coalesce((a2.score // 2147483648) * (a2.score % 2147483648), 0) AS BIGINT) AS top2_chars,
-        |    CAST(coalesce(a3.score // 2147483648, 0) AS BIGINT) AS top3_count,
-        |    CAST(coalesce((a3.score // 2147483648) * (a3.score % 2147483648), 0) AS BIGINT) AS top3_chars,
-        |    CAST(coalesce(a4.score // 2147483648, 0) AS BIGINT) AS top4_count,
-        |    CAST(coalesce((a4.score // 2147483648) * (a4.score % 2147483648), 0) AS BIGINT) AS top4_chars,
-        |    CAST(coalesce(a5.dup, 0) AS BIGINT) AS dup5_mass,
-        |    CAST(coalesce(a10.dup, 0) AS BIGINT) AS dup10_mass
-        |  FROM stats s
-        |  LEFT JOIN ag a2 ON a2.doc_id = s.doc_id AND a2.n = 2
-        |  LEFT JOIN ag a3 ON a3.doc_id = s.doc_id AND a3.n = 3
-        |  LEFT JOIN ag a4 ON a4.doc_id = s.doc_id AND a4.n = 4
-        |  LEFT JOIN ag a5 ON a5.doc_id = s.doc_id AND a5.n = 5
-        |  LEFT JOIN ag a10 ON a10.doc_id = s.doc_id AND a10.n = 10)
-        |SELECT doc_id, n_words, norm_chars,
-        |  top2_count, top2_chars, top3_count, top3_chars,
-        |  top4_count, top4_chars, dup5_mass, dup10_mass,
-        |  (top2_chars * 5 <= norm_chars AND top3_chars * 50 <= norm_chars * 9
-        |   AND top4_chars * 25 <= norm_chars * 4
-        |   AND dup5_mass * 20 <= norm_chars * 3
-        |   AND dup10_mass * 10 <= norm_chars) AS keep_gopher
-        |FROM wide""".stripMargin,
-    // q144: identical padded char-8-shingle semantics as q123's oracle,
-    // over the normalized (lower, whitespace-collapsed) text; novelty uses
-    // the exact-integer half-up rounding shared with q111/q116
-    "q144_source_novelty" ->
-      """WITH n AS (
-        |  SELECT source,
-        |    regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |sg AS (
-        |  SELECT DISTINCT source,
-        |    substring(t || repeat(' ', 7), CAST(i AS INTEGER), 8) AS g
-        |  FROM n,
-        |  LATERAL unnest(range(1, greatest(length(t) - 7, 1) + 1)) AS u(i)),
-        |gc AS (
-        |  SELECT g, count(*) AS ns, min(source) AS only_src
-        |  FROM sg GROUP BY 1),
-        |tot AS (SELECT source, count(*) AS n_grams FROM sg GROUP BY 1),
-        |uni AS (
-        |  SELECT only_src AS source, count(*) AS n_unique
-        |  FROM gc WHERE ns = 1 GROUP BY 1)
-        |SELECT t.source, CAST(t.n_grams AS BIGINT) AS n_grams,
-        |  CAST(coalesce(u.n_unique, 0) AS BIGINT) AS n_unique,
-        |  CAST((2000000 * coalesce(u.n_unique, 0) + t.n_grams)
-        |    // (2 * t.n_grams) AS DOUBLE) / 1e6 AS novelty
-        |FROM tot t LEFT JOIN uni u ON u.source = t.source""".stripMargin,
-    // q145: the ORC write+read must be value-lossless, so the oracle is
-    // the same selection straight off the parquet base table
-    "q145_orc_roundtrip" ->
-      """SELECT l_orderkey, l_partkey, l_quantity, l_shipdate
-        |FROM lineitem WHERE l_quantity >= 45.0""".stripMargin,
-    // q146: same tokenizer as every text oracle; rank is total (tf desc,
-    // doc_id asc over distinct (term,doc) pairs) so top-3 is deterministic
-    "q146_inverted_index" ->
-      """WITH tf AS (
-        |  SELECT term, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id,
-        |      unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |    FROM documents WHERE length(trim(text)) > 0) t
-        |  WHERE term <> ''
-        |  GROUP BY 1, 2),
-        |r AS (
-        |  SELECT term, doc_id, tf,
-        |    count(*) OVER (PARTITION BY term) AS df,
-        |    sum(tf) OVER (PARTITION BY term) AS total_tf,
-        |    row_number() OVER (PARTITION BY term
-        |      ORDER BY tf DESC, doc_id) AS rank
-        |  FROM tf)
-        |SELECT term, CAST(df AS BIGINT) AS df,
-        |  CAST(total_tf AS BIGINT) AS total_tf,
-        |  CAST(rank AS BIGINT) AS rank, doc_id, CAST(tf AS BIGINT) AS tf
-        |FROM r WHERE rank <= 3""".stripMargin,
-    // q149: the byte-identical extraction chain over the same literal
-    // fixture; &amp; decodes LAST (one-level decode of double-encoded text)
-    "q149_html_extract" ->
-      """WITH src AS (
-        |  SELECT * FROM (VALUES
-        |    (1, '<html><head><title>T</title></head><body><p>Hello <b>world</b></p></body></html>'),
-        |    (2, '<SCRIPT type="x">var a = "<p>not text</p>";</SCRIPT>After'),
-        |    (3, '<style media=all>p > a {color:red}</style><div>styled</div>'),
-        |    (4, 'A &amp;amp; B&nbsp;&lt;tag&gt; &quot;q&quot; &#39;s&#39;'),
-        |    (5, '<!-- hidden --><p class="big">kept</p><br/>'),
-        |    (6, 'no markup at   all')) AS t(doc_id, html)),
-        |ext AS (
-        |  SELECT doc_id, trim(regexp_replace(
-        |    replace(replace(replace(replace(replace(replace(
-        |      regexp_replace(
-        |        regexp_replace(
-        |          regexp_replace(
-        |            regexp_replace(html,
-        |              '(?is)<script[^>]*>.*?</script>', ' ', 'g'),
-        |            '(?is)<style[^>]*>.*?</style>', ' ', 'g'),
-        |          '(?s)<!--.*?-->', ' ', 'g'),
-        |        '(?s)<[^>]+>', ' ', 'g'),
-        |      '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-        |      '&#39;', chr(39)), '&amp;', '&'),
-        |    '\s+', ' ', 'g')) AS text_out
-        |  FROM src)
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, text_out,
-        |  CAST(length(text_out) AS BIGINT) AS n_chars
-        |FROM ext""".stripMargin,
-    // q150: the byte-identical canonicalization over the same fixture.
-    // DuckDB quirks mirrored deliberately: regexp_extract yields NULL for
-    // a non-participating group (Spark yields '') and array_to_string of
-    // an empty list yields NULL — both coalesced; replacement backrefs
-    // are \1 (RE2), not $1 (Java)
-    "q150_url_canonical" ->
-      """WITH src AS (SELECT * FROM (VALUES
-        |    ('HTTP://Example.COM:80/a/b/?utm_source=x&b=2&a=1#frag'),
-        |    ('http://example.com/a//b?a=1&b=2'),
-        |    ('https://Site.org:443//x//y/'),
-        |    ('https://site.org/x/y'),
-        |    ('https://site.org:8443/Keep/Case'),
-        |    ('http://host'),
-        |    ('https://host/?utm_campaign=z&gclid=123'),
-        |    ('https://host/')) AS t(url)),
-        |parts AS (
-        |  SELECT
-        |    coalesce(lower(regexp_extract(trim(url),
-        |      '^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]*)([^?#]*)(?:\?([^#]*))?(?:#.*)?$', 1)), '') AS scheme,
-        |    coalesce(lower(regexp_extract(trim(url),
-        |      '^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]*)([^?#]*)(?:\?([^#]*))?(?:#.*)?$', 2)), '') AS host_raw,
-        |    coalesce(regexp_extract(trim(url),
-        |      '^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]*)([^?#]*)(?:\?([^#]*))?(?:#.*)?$', 3), '') AS path_raw,
-        |    coalesce(regexp_extract(trim(url),
-        |      '^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]*)([^?#]*)(?:\?([^#]*))?(?:#.*)?$', 4), '') AS q_raw
-        |  FROM src),
-        |canon AS (
-        |  SELECT scheme || '://' ||
-        |    CASE WHEN scheme = 'http' THEN regexp_replace(host_raw, ':80$', '')
-        |         WHEN scheme = 'https' THEN regexp_replace(host_raw, ':443$', '')
-        |         ELSE host_raw END ||
-        |    CASE WHEN regexp_replace(regexp_replace(path_raw, '/{2,}', '/', 'g'),
-        |             '(.)/$', '\1') = '' THEN '/'
-        |         ELSE regexp_replace(regexp_replace(path_raw, '/{2,}', '/', 'g'),
-        |             '(.)/$', '\1') END ||
-        |    CASE WHEN coalesce(array_to_string(list_sort(list_filter(
-        |             string_split(q_raw, '&'),
-        |             x -> NOT (starts_with(x, 'utm_') OR starts_with(x, 'fbclid=')
-        |               OR starts_with(x, 'gclid=') OR x = ''))), '&'), '') = ''
-        |         THEN ''
-        |         ELSE '?' || array_to_string(list_sort(list_filter(
-        |             string_split(q_raw, '&'),
-        |             x -> NOT (starts_with(x, 'utm_') OR starts_with(x, 'fbclid=')
-        |               OR starts_with(x, 'gclid=') OR x = ''))), '&') END AS url_canon
-        |  FROM parts)
-        |SELECT url_canon, CAST(count(*) AS BIGINT) AS n_raw
-        |FROM canon GROUP BY 1""".stripMargin,
-    // q124: RE2 alternation (length-desc) == trie leftmost-longest; masked
-    // text proved byte-identical through the digest
-    "q124_dict_mask" ->
-      """SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text,
-        |    '(customer query|sort table|hash join|customer|stream|window|spark|hash)'
-        |  )) AS BIGINT) AS n_hits,
-        |  md5(regexp_replace(text,
-        |    '(customer query|sort table|hash join|customer|stream|window|spark|hash)',
-        |    '<TERM>', 'g')) AS masked_digest
-        |FROM documents""".stripMargin,
-    // q125: identical micro-unit quantization; integer sums then one
-    // bit-deterministic division — no float-order drift on either side
-    "q125_embedding_pool" ->
-      """WITH ex AS (
-        |  SELECT label AS grp, CAST(i - 1 AS BIGINT) AS pos,
-        |    CAST(floor(CAST(embedding[CAST(i AS INTEGER)] AS DOUBLE)
-        |      * 1000000 + 0.5) AS BIGINT) AS u
-        |  FROM embeddings,
-        |  LATERAL unnest(range(1, len(embedding) + 1)) AS t(i))
-        |SELECT grp, pos, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(u) AS BIGINT) AS sum_u,
-        |  CAST(sum(u) AS DOUBLE) / (count(*) * 1000000) AS mean_v
-        |FROM ex GROUP BY grp, pos""".stripMargin,
-
-    // q141: q86's cluster+keeper chain, then the q126 md5-range split and
-    // the mixture rollup — the full pipeline re-derived in one SQL
-    "q141_curation_pipeline" ->
-      s"""WITH RECURSIVE $minhashPairCtes,
-         |pairs AS ($minhashPairSelect),
-         |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-         |          UNION SELECT id_b, id_a FROM pairs),
-         |reach(src, dst) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT r.src, e.b FROM reach r JOIN edges e ON e.a = r.dst),
-         |clus AS (SELECT src AS doc_id, min(dst) AS cluster
-         |         FROM reach GROUP BY src),
-         |tok AS (SELECT doc_id,
-         |  len(string_split_regex(trim(text), '\\s+')) AS n_tok FROM documents),
-         |m AS (SELECT c.cluster, c.doc_id, t.n_tok
-         |      FROM clus c JOIN tok t ON c.doc_id = t.doc_id),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY cluster
-         |        ORDER BY n_tok DESC, doc_id) AS rnk FROM m),
-         |k AS (SELECT cluster, n_tok FROM r WHERE rnk = 1),
-         |sp AS (SELECT n_tok,
-         |  CASE WHEN substr(md5(CAST(cluster AS VARCHAR)), 1, 2) < 'cc'
-         |         THEN 'train'
-         |       WHEN substr(md5(CAST(cluster AS VARCHAR)), 1, 2) < 'e6'
-         |         THEN 'val'
-         |       ELSE 'test' END AS split
-         |  FROM k)
-         |SELECT split, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(n_tok) AS BIGINT) AS total_tokens
-         |FROM sp GROUP BY split""".stripMargin,
-
-    // q147: same micro-unit quantization as q125, same bilinear
-    // ((31i + 17j + 13ij) mod 67) mod 7 - 3 coefficient lattice (the ij
-    // term prevents the rank-7 collapse of a purely additive form);
-    // integer sums, so the grouped-SQL mirror of the map-only HOF plan is
-    // value-identical
-    "q147_random_projection" ->
-      s"""WITH ex AS (
-        |  SELECT vec_id, CAST(i - 1 AS BIGINT) AS j,
-        |    CAST(floor(CAST(embedding[CAST(i AS INTEGER)] AS DOUBLE)
-        |      * 1000000 + 0.5) AS BIGINT) AS qv
-        |  FROM embeddings,
-        |  LATERAL unnest(range(1, len(embedding) + 1)) AS u(i))
-        |SELECT vec_id,
-        |${(0 until 8).map(i =>
-          s"  CAST(sum(qv * ((${31 * i} + j*${17 + 13 * i}) % 67 % 7 - 3)) " +
-            s"AS BIGINT) AS p$i").mkString(",\n")}
-        |FROM ex GROUP BY vec_id""".stripMargin,
-    // q194: same desc (ts, event_id) recency rank, same alphabetical
-    // dictionary, conditional-max slot fold
-    "q194_sequence_features" ->
-      """WITH dict AS (
-        |  SELECT t, CAST(row_number() OVER (ORDER BY t) AS BIGINT) AS tid
-        |  FROM (SELECT DISTINCT event_type AS t FROM events)),
-        |r AS (
-        |  SELECT user_id, event_type,
-        |    row_number() OVER (PARTITION BY user_id
-        |      ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events),
-        |j AS (
-        |  SELECT r.user_id, r.rn, d.tid FROM r
-        |  JOIN dict d ON d.t = r.event_type WHERE r.rn <= 5)
-        |SELECT user_id,
-        |  coalesce(max(CASE WHEN rn = 1 THEN tid END), 0) AS f1,
-        |  coalesce(max(CASE WHEN rn = 2 THEN tid END), 0) AS f2,
-        |  coalesce(max(CASE WHEN rn = 3 THEN tid END), 0) AS f3,
-        |  coalesce(max(CASE WHEN rn = 4 THEN tid END), 0) AS f4,
-        |  coalesce(max(CASE WHEN rn = 5 THEN tid END), 0) AS f5,
-        |  CAST(count(*) AS BIGINT) AS n_recent
-        |FROM j GROUP BY user_id""".stripMargin,
-
-    // q193: q140's lane CTE with parity filters, residue-add merge, and
-    // the direct whole-table row
-    "q193_fingerprint_merge" ->
-      """WITH h AS (SELECT l_orderkey % 2 AS par, md5(concat_ws(chr(1),
-        |    coalesce(CAST(l_orderkey AS VARCHAR), chr(2)),
-        |    coalesce(CAST(l_partkey AS VARCHAR), chr(2)),
-        |    coalesce(CAST(l_suppkey AS VARCHAR), chr(2)),
-        |    coalesce(CAST(l_linenumber AS VARCHAR), chr(2)))) AS m
-        |  FROM lineitem),
-        |f AS (
-        |  SELECT par, count(*) AS n,
-        |    CAST(CAST(sum(('0x' || substring(m, 1, 15))::BIGINT) AS HUGEINT)
-        |      % 2305843009213693952 AS BIGINT) AS la,
-        |    CAST(CAST(sum(('0x' || substring(m, 17, 15))::BIGINT)
-        |      AS HUGEINT) % 2305843009213693952 AS BIGINT) AS lb
-        |  FROM h GROUP BY par)
-        |SELECT 'merged' AS method, CAST(sum(n) AS BIGINT) AS n_rows,
-        |  CAST(CAST(sum(la) AS HUGEINT) % 2305843009213693952 AS BIGINT)
-        |    AS lane_a,
-        |  CAST(CAST(sum(lb) AS HUGEINT) % 2305843009213693952 AS BIGINT)
-        |    AS lane_b
-        |FROM f
-        |UNION ALL
-        |SELECT 'direct', CAST(count(*) AS BIGINT),
-        |  CAST(CAST(sum(('0x' || substring(m, 1, 15))::BIGINT) AS HUGEINT)
-        |    % 2305843009213693952 AS BIGINT),
-        |  CAST(CAST(sum(('0x' || substring(m, 17, 15))::BIGINT) AS HUGEINT)
-        |    % 2305843009213693952 AS BIGINT)
-        |FROM h""".stripMargin,
-
-    // q192: plain join + rollup — bucketing changes the plan, not the
-    // answer
-    "q192_bucketed_join" ->
-      """SELECT o.o_orderpriority, CAST(count(*) AS BIGINT) AS n_items,
-        |  CAST(sum(CAST(l.l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_qty
-        |FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        |GROUP BY 1""".stripMargin,
-
-    // q191: the q161 batch SQL verbatim — the streaming run must equal
-    // the batch resample (stream/batch parity is the point)
-    "q191_streaming_ohlc" ->
-      """WITH b AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day, ts, event_id,
-        |    CAST(round(value * 100) AS BIGINT) AS c
-        |  FROM events WHERE value IS NOT NULL),
-        |w AS (
-        |  SELECT event_type, day, c,
-        |    first_value(c) OVER win AS open_c,
-        |    last_value(c) OVER win AS close_c
-        |  FROM b
-        |  WINDOW win AS (PARTITION BY event_type, day ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING))
-        |SELECT event_type, day,
-        |  CAST(max(open_c) AS BIGINT) AS open_c,
-        |  CAST(max(close_c) AS BIGINT) AS close_c,
-        |  CAST(max(c) AS BIGINT) AS high_c, CAST(min(c) AS BIGINT) AS low_c,
-        |  CAST(count(*) AS BIGINT) AS n, CAST(sum(c) AS BIGINT) AS vol_c
-        |FROM w GROUP BY 1, 2""".stripMargin,
-
-    // q190: inlined q185 rollup + anchor segmentation + segment rollup
-    "q190_growth_report" ->
-      """WITH lt AS (
-        |  SELECT user_id, max(ts) AS last_ts,
-        |    count(DISTINCT CAST(ts AS DATE)) AS active_days,
-        |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |      AS n_conversions,
-        |    coalesce(sum(CASE WHEN event_type = 'purchase'
-        |      THEN CAST(round(value * 100) AS BIGINT) END), 0) AS revenue_c
-        |  FROM events GROUP BY user_id),
-        |a AS (SELECT max(CAST(last_ts AS DATE)) AS anchor FROM lt),
-        |seg AS (
-        |  SELECT CASE
-        |      WHEN date_diff('day', CAST(last_ts AS DATE), anchor) > 14
-        |        THEN 'churned'
-        |      WHEN revenue_c >= 75000 THEN 'vip'
-        |      WHEN n_conversions > 0 THEN 'customer'
-        |      ELSE 'prospect' END AS segment,
-        |    active_days, revenue_c
-        |  FROM lt, a)
-        |SELECT segment, CAST(count(*) AS BIGINT) AS n_users,
-        |  CAST(sum(revenue_c) AS BIGINT) AS revenue_c,
-        |  CAST(sum(active_days) AS BIGINT) AS active_days,
-        |  CAST((2000000 * sum(active_days) + count(*)) // (2 * count(*))
-        |    AS DOUBLE) / 1e6 AS mean_active_r
-        |FROM seg GROUP BY 1""".stripMargin,
-
-    // q188: q156's bin formula over global edges, integer midpoint-day
-    // split, q131's smoothed PSI arithmetic on the bin label
-    "q188_numeric_drift" ->
-      """WITH ev AS (
-        |  SELECT CAST(round(value * 100) AS BIGINT) AS c,
-        |    CAST(ts AS DATE) AS day
-        |  FROM events WHERE value IS NOT NULL),
-        |st AS (SELECT min(c) AS mn, max(c) AS mx, min(day) AS d0,
-        |              max(day) AS d1 FROM ev),
-        |bn AS (
-        |  SELECT ((c - mn) * 10) // (mx - mn + 1) AS bin,
-        |    date_diff('day', d0, day) <=
-        |      date_diff('day', d0, d1) // 2 AS is_a
-        |  FROM ev, st),
-        |a AS (SELECT bin, count(*) AS n_a FROM bn WHERE is_a GROUP BY 1),
-        |b AS (SELECT bin, count(*) AS n_b FROM bn WHERE NOT is_a
-        |      GROUP BY 1),
-        |cats AS (
-        |  SELECT coalesce(a.bin, b.bin) AS bin,
-        |    coalesce(n_a, 0) AS n_a, coalesce(n_b, 0) AS n_b
-        |  FROM a FULL OUTER JOIN b ON a.bin = b.bin),
-        |tot AS (SELECT sum(n_a) AS tot_a, sum(n_b) AS tot_b,
-        |               count(*) AS v FROM cats)
-        |SELECT CAST(bin AS BIGINT) AS bin, CAST(n_a AS BIGINT) AS n_a,
-        |  CAST(n_b AS BIGINT) AS n_b,
-        |  CAST(round(1e6 * (
-        |    log2(CAST(n_a + 1 AS DOUBLE) / CAST(tot_a + v AS DOUBLE))
-        |    - log2(CAST(n_b + 1 AS DOUBLE) / CAST(tot_b + v AS DOUBLE))))
-        |    AS BIGINT) AS lr_ub,
-        |  round((CAST(n_a + 1 AS DOUBLE) / CAST(tot_a + v AS DOUBLE)
-        |       - CAST(n_b + 1 AS DOUBLE) / CAST(tot_b + v AS DOUBLE))
-        |    * CAST(CAST(round(1e6 * (
-        |        log2(CAST(n_a + 1 AS DOUBLE) / CAST(tot_a + v AS DOUBLE))
-        |        - log2(CAST(n_b + 1 AS DOUBLE) / CAST(tot_b + v AS DOUBLE))))
-        |        AS BIGINT) AS DOUBLE) / 1e6, 6) AS contrib_r
-        |FROM cats, tot""".stripMargin,
-
-    // q189: same calendar pairing and exact moment identities; signed
-    // r² via HUGEINT with one half-up rounding
-    "q189_lagged_corr" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |p AS (
-        |  SELECT x.n AS x, y.n AS y
-        |  FROM daily x JOIN daily y
-        |    ON x.event_type = 'view' AND y.event_type = 'purchase'
-        |    AND y.day = x.day + 7),
-        |m AS (
-        |  SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-        |    sum(x * y) AS sxy, sum(x * x) AS sxx, sum(y * y) AS syy
-        |  FROM p),
-        |f AS (
-        |  SELECT n, n * sxy - sx * sy AS cov, n * sxx - sx * sx AS vx,
-        |    n * syy - sy * sy AS vy
-        |  FROM m)
-        |SELECT CAST(n AS BIGINT) AS n_pairs, CAST(cov AS BIGINT) AS cov_num,
-        |  CAST(vx AS BIGINT) AS varx_num, CAST(vy AS BIGINT) AS vary_num,
-        |  CASE WHEN vx = 0 OR vy = 0 THEN NULL
-        |    ELSE (CASE WHEN cov < 0 THEN -1 ELSE 1 END) *
-        |      CAST((2000000 * cov * cov + vx * vy) // (2 * vx * vy)
-        |        AS DOUBLE) / 1e6
-        |  END AS signed_r2
-        |FROM f""".stripMargin,
-
-    // q186: join-shaped oracle mirror of the window plan — rank ALL
-    // strictly-before touches desc, keep rnk<=5 AND horizon, recount n,
-    // identical half-up credit/revenue quanta
-    "q186_linear_attribution" ->
-      """WITH conv AS (
-        |  SELECT user_id, event_id, ts, value FROM events
-        |  WHERE event_type = 'purchase'),
-        |tch AS (
-        |  SELECT user_id, event_id, ts, event_type FROM events
-        |  WHERE event_type IN ('view', 'click')),
-        |pairs AS (
-        |  SELECT c.event_id AS conv_id,
-        |    CAST(round(c.value * 100) AS BIGINT) AS cents, c.ts AS conv_ts,
-        |    t.event_type AS touch_type, t.ts AS t_ts,
-        |    row_number() OVER (PARTITION BY c.event_id
-        |      ORDER BY t.ts DESC, t.event_id DESC) AS rnk
-        |  FROM conv c JOIN tch t ON t.user_id = c.user_id
-        |    AND (t.ts < c.ts OR (t.ts = c.ts AND t.event_id < c.event_id))),
-        |kept AS (
-        |  SELECT * FROM pairs
-        |  WHERE rnk <= 5 AND date_diff('second', t_ts, conv_ts) <= 604800),
-        |sized AS (
-        |  SELECT touch_type, cents,
-        |    count(*) OVER (PARTITION BY conv_id) AS n
-        |  FROM kept),
-        |cr AS (
-        |  SELECT touch_type,
-        |    (2000000 + n) // (2 * n) AS credit_u,
-        |    (2 * cents * 1000 + n) // (2 * n) AS rev_mu
-        |  FROM sized)
-        |SELECT touch_type, CAST(count(*) AS BIGINT) AS n_credits,
-        |  CAST(sum(credit_u) AS BIGINT) AS credit_u,
-        |  CAST(sum(rev_mu) AS BIGINT) AS revenue_mu
-        |FROM cr GROUP BY 1""".stripMargin,
-
-    // q187: same user rollup, data-anchored inactivity, exact shares
-    "q187_churn_snapshot" ->
-      """WITH ld AS (
-        |  SELECT user_id, max(CAST(ts AS DATE)) AS last_day FROM events
-        |  GROUP BY 1),
-        |a AS (SELECT max(last_day) AS anchor FROM ld),
-        |g AS (
-        |  SELECT date_diff('day', last_day, anchor) AS days_inactive
-        |  FROM ld, a),
-        |c AS (SELECT days_inactive, count(*) AS n_users FROM g GROUP BY 1),
-        |f AS (SELECT days_inactive, n_users, sum(n_users) OVER () AS total
-        |      FROM c)
-        |SELECT CAST(days_inactive AS BIGINT) AS days_inactive,
-        |  CAST(n_users AS BIGINT) AS n_users,
-        |  days_inactive > 14 AS is_churned,
-        |  CAST((2000000 * n_users + total) // (2 * total) AS DOUBLE) / 1e6
-        |    AS share_r
-        |FROM f""".stripMargin,
-
-    // q183: same distinct-cents cumulative, cum·100 >= n·p threshold
-    // pick (≡ ceil-rank), clamp, cents-exact winsorized sum
-    "q183_winsorize" ->
-      """WITH ev AS (
-        |  SELECT CAST(round(value * 100) AS BIGINT) AS c FROM events
-        |  WHERE value IS NOT NULL),
-        |bv AS (SELECT c, count(*) AS cnt FROM ev GROUP BY 1),
-        |cw AS (
-        |  SELECT c, cnt,
-        |    sum(cnt) OVER (ORDER BY c ROWS BETWEEN UNBOUNDED PRECEDING
-        |      AND CURRENT ROW) AS cum,
-        |    sum(cnt) OVER () AS n
-        |  FROM bv),
-        |th AS (
-        |  SELECT min(CASE WHEN cum * 100 >= n * 1 THEN c END) AS lo_c,
-        |    min(CASE WHEN cum * 100 >= n * 99 THEN c END) AS hi_c,
-        |    max(n) AS n
-        |  FROM cw),
-        |cl AS (
-        |  SELECT bv.cnt, bv.c, th.lo_c, th.hi_c, th.n,
-        |    greatest(th.lo_c, least(th.hi_c, bv.c)) AS w
-        |  FROM bv, th)
-        |SELECT CAST(max(n) AS BIGINT) AS n, CAST(max(lo_c) AS BIGINT)
-        |    AS lo_c, CAST(max(hi_c) AS BIGINT) AS hi_c,
-        |  CAST(sum(CASE WHEN c < lo_c THEN cnt ELSE 0 END) AS BIGINT)
-        |    AS n_clip_lo,
-        |  CAST(sum(CASE WHEN c > hi_c THEN cnt ELSE 0 END) AS BIGINT)
-        |    AS n_clip_hi,
-        |  CAST(sum(cnt * w) AS BIGINT) AS wins_sum_c,
-        |  CAST((2000000 * sum(cnt * w) + max(n) * 100)
-        |    // (2 * max(n) * 100) AS DOUBLE) / 1e6 AS wins_mean_r
-        |FROM cl""".stripMargin,
-
-    // q184: same distinct user-day-type baskets, a<b pair join, exact
-    // support and lift rationals
-    "q184_cooccurrence" ->
-      """WITH b AS (
-        |  SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS day,
-        |    event_type AS t
-        |  FROM events),
-        |tot AS (SELECT count(*) AS n_baskets FROM
-        |  (SELECT DISTINCT u, day FROM b)),
-        |pt AS (SELECT t, count(*) AS nt FROM b GROUP BY 1),
-        |p AS (
-        |  SELECT x.t AS type_a, y.t AS type_b, count(*) AS nab
-        |  FROM b x JOIN b y ON x.u = y.u AND x.day = y.day AND x.t < y.t
-        |  GROUP BY 1, 2)
-        |SELECT p.type_a, p.type_b, CAST(p.nab AS BIGINT) AS nab,
-        |  CAST(tot.n_baskets AS BIGINT) AS n_baskets,
-        |  CAST((2000000 * p.nab + tot.n_baskets) // (2 * tot.n_baskets)
-        |    AS DOUBLE) / 1e6 AS support_r,
-        |  CAST((2000000 * p.nab * tot.n_baskets + a.nt * c.nt)
-        |    // (2 * a.nt * c.nt) AS DOUBLE) / 1e6 AS lift_r
-        |FROM p
-        |JOIN pt a ON a.t = p.type_a JOIN pt c ON c.t = p.type_b, tot"""
-        .stripMargin,
-
-    // q185: one user rollup, conversion-filtered cents sum coalesced
-    "q185_user_lifetime" ->
-      """SELECT user_id, min(ts) AS first_ts, max(ts) AS last_ts,
-        |  CAST(count(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS active_days,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_conversions,
-        |  CAST(coalesce(sum(CASE WHEN event_type = 'purchase'
-        |    THEN CAST(round(value * 100) AS BIGINT) END), 0) AS BIGINT)
-        |    AS revenue_c,
-        |  CAST(date_diff('day', CAST(min(ts) AS DATE), CAST(max(ts)
-        |    AS DATE)) AS BIGINT) AS span_days
-        |FROM events GROUP BY user_id""".stripMargin,
-
-    // q180: same two rankings, FULL OUTER fuse, identical micro-rounded
-    // reciprocals; the top-50 set is deterministic (fused desc, doc_id)
-    "q180_rrf_fusion" ->
-      """WITH ra AS (
-        |  SELECT doc_id, CAST(row_number() OVER (ORDER BY n_chars DESC,
-        |    doc_id) AS BIGINT) AS rank
-        |  FROM documents),
-        |fa AS (SELECT * FROM ra WHERE rank <= 50),
-        |tb AS (
-        |  SELECT doc_id, count(DISTINCT w) AS types FROM (
-        |    SELECT doc_id,
-        |      unnest(string_split_regex(trim(lower(text)), '\s+')) AS w
-        |    FROM documents WHERE length(trim(text)) > 0)
-        |  GROUP BY doc_id),
-        |rb AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY types DESC,
-        |  doc_id) AS BIGINT) AS rank FROM tb),
-        |fb AS (SELECT * FROM rb WHERE rank <= 50),
-        |j AS (
-        |  SELECT coalesce(fa.doc_id, fb.doc_id) AS doc_id,
-        |    fa.rank AS rank_a, fb.rank AS rank_b
-        |  FROM fa FULL OUTER JOIN fb ON fa.doc_id = fb.doc_id)
-        |SELECT doc_id, rank_a, rank_b,
-        |  CAST(coalesce((2000000 + (60 + rank_a)) // (2 * (60 + rank_a)), 0)
-        |    + coalesce((2000000 + (60 + rank_b)) // (2 * (60 + rank_b)), 0)
-        |    AS BIGINT) AS fused_u
-        |FROM j ORDER BY fused_u DESC, doc_id LIMIT 50""".stripMargin,
-
-    // q181: q138's successor pairs, q111's micro-bit entropy identity
-    "q181_transition_entropy" ->
-      """WITH nx AS (
-        |  SELECT event_type AS from_type,
-        |    lead(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS next_type
-        |  FROM events),
-        |p AS (SELECT from_type, next_type, count(*) AS n FROM nx
-        |      WHERE next_type IS NOT NULL GROUP BY 1, 2),
-        |a AS (
-        |  SELECT from_type, sum(n) AS n_from, count(*) AS n_successors,
-        |    sum(n * CAST(round(1e6 * log2(CAST(n AS DOUBLE))) AS BIGINT))
-        |      AS sum_ub
-        |  FROM p GROUP BY 1)
-        |SELECT from_type, CAST(n_from AS BIGINT) AS n_from,
-        |  CAST(n_successors AS BIGINT) AS n_successors,
-        |  CAST((2 * (CAST(round(1e6 * log2(CAST(n_from AS DOUBLE)))
-        |      AS BIGINT) * n_from - sum_ub) + n_from)
-        |    // (2 * n_from) AS DOUBLE) / 1e6 AS h_r
-        |FROM a""".stripMargin,
-
-    // q182: same daily rollup and exact moment identity
-    "q182_fano" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS x
-        |  FROM events GROUP BY 1, 2),
-        |m AS (SELECT event_type, count(*) AS d, sum(x) AS sx,
-        |        sum(x * x) AS sxx FROM daily GROUP BY 1)
-        |SELECT event_type, CAST(d AS BIGINT) AS n_days,
-        |  CAST(sx AS BIGINT) AS n_events,
-        |  CAST((2000000 * sx + d) // (2 * d) AS DOUBLE) / 1e6
-        |    AS daily_mean_r,
-        |  CAST((2000000 * (d * sxx - sx * sx) + d * sx) // (2 * d * sx)
-        |    AS DOUBLE) / 1e6 AS fano_r
-        |FROM m""".stripMargin,
-
-    // q177: DuckDB isodow == Spark weekday()+1 (both Monday=1)
-    "q177_dow_seasonality" ->
-      """WITH c AS (
-        |  SELECT event_type, CAST(isodow(ts) AS BIGINT) AS dow,
-        |    count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |f AS (SELECT event_type, dow, n,
-        |  sum(n) OVER (PARTITION BY event_type) AS total FROM c)
-        |SELECT event_type, dow, CAST(n AS BIGINT) AS n,
-        |  CAST(total AS BIGINT) AS total,
-        |  CAST((2000000 * 7 * n + total) // (2 * total) AS DOUBLE) / 1e6
-        |    AS index_r
-        |FROM f""".stripMargin,
-
-    // q178: q17's exact point derivation, identical floor/shift order
-    "q178_grid_density" ->
-      """WITH p AS (SELECT
-        |  CAST((c_custkey * 37) % 17000 AS DOUBLE) / 100 - 85 AS lat,
-        |  CAST((c_custkey * 91) % 35000 AS DOUBLE) / 100 - 175 AS lon
-        | FROM customer),
-        |c AS (
-        |  SELECT CAST(floor((lat + 90.0) / 5.0) AS BIGINT) AS cell_lat,
-        |    CAST(floor((lon + 180.0) / 5.0) AS BIGINT) AS cell_lon,
-        |    count(*) AS n, min(lat) AS lat_lo, max(lat) AS lat_hi,
-        |    min(lon) AS lon_lo, max(lon) AS lon_hi
-        |  FROM p GROUP BY 1, 2),
-        |f AS (SELECT *, sum(n) OVER () AS total FROM c)
-        |SELECT cell_lat, cell_lon, CAST(n AS BIGINT) AS n, lat_lo, lat_hi,
-        |  lon_lo, lon_hi,
-        |  CAST((2000000 * n + total) // (2 * total) AS DOUBLE) / 1e6
-        |    AS share_r
-        |FROM f""".stripMargin,
-
-    // q179: q29's pair CTEs, then the SAME 3 peels unrolled — degree
-    // filter + two-sided node restriction per round
-    "q179_kcore" -> {
-      val rounds = (1 to 3).map(i =>
-        s"""k$i AS (SELECT a FROM e${i - 1} GROUP BY a
-           |  HAVING count(*) >= 2),
-           |e$i AS (SELECT e.a, e.b FROM e${i - 1} e
-           |  JOIN k$i x ON x.a = e.a JOIN k$i y ON y.a = e.b)""".stripMargin)
-        .mkString(",\n")
-      s"""WITH $minhashPairCtes,
-         |pairs AS ($minhashPairSelect),
-         |e0 AS (SELECT id_a AS a, id_b AS b FROM pairs
-         |       UNION ALL SELECT id_b, id_a FROM pairs),
-         |$rounds
-         |SELECT a AS doc_id, CAST(count(*) AS BIGINT) AS core_deg
-         |FROM e3 GROUP BY a""".stripMargin
-    },
-
-    // q176: q29's banded-LSH pair CTEs, source decoration, unordered
-    // pair normalization via least/greatest
-    "q176_leakage_matrix" ->
-      s"""WITH $minhashPairCtes,
-         |pairs AS ($minhashPairSelect),
-         |lab AS (
-         |  SELECT least(a.source, b.source) AS src_a,
-         |    greatest(a.source, b.source) AS src_b
-         |  FROM pairs p
-         |  JOIN documents a ON a.doc_id = p.id_a
-         |  JOIN documents b ON b.doc_id = p.id_b),
-         |c AS (SELECT src_a, src_b, count(*) AS n_pairs FROM lab
-         |      GROUP BY 1, 2),
-         |f AS (SELECT src_a, src_b, n_pairs, sum(n_pairs) OVER () AS total
-         |      FROM c)
-         |SELECT src_a, src_b, CAST(n_pairs AS BIGINT) AS n_pairs,
-         |  CAST(total AS BIGINT) AS total,
-         |  CAST((2000000 * n_pairs + total) // (2 * total) AS DOUBLE) / 1e6
-         |    AS share_r,
-         |  src_a != src_b AS is_cross
-         |FROM f""".stripMargin,
-
-    // q174: same ascending (x, doc_id) rank, HUGEINT moments, half-up
-    "q174_gini" ->
-      """WITH lens AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split_regex(trim(lower(text)), '\s+'))
-        |      AS BIGINT) AS x
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |r AS (SELECT x, row_number() OVER (ORDER BY x, doc_id) AS i
-        |      FROM lens),
-        |m AS (SELECT count(*) AS n, sum(x) AS t, sum(x * i) AS s FROM r)
-        |SELECT CAST(n AS BIGINT) AS n_docs, CAST(t AS BIGINT)
-        |    AS total_tokens,
-        |  CASE WHEN n * t = 0 THEN NULL
-        |    ELSE CAST((2000000 * (2 * s - (n + 1) * t) + n * t)
-        |      // (2 * n * t) AS DOUBLE) / 1e6 END AS gini_r
-        |FROM m""".stripMargin,
-
-    // q175: same (n DESC, w) rank, micro-bit axes, q159's closed form in
-    // HUGEINT, sign-aware half-up
-    "q175_zipf_fit" ->
-      """WITH wc AS (
-        |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS w
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |c AS (SELECT w, count(*) AS n FROM wc GROUP BY 1),
-        |r AS (
-        |  SELECT CAST(round(1e6 * log2(CAST(row_number()
-        |      OVER (ORDER BY n DESC, w) AS DOUBLE))) AS BIGINT) AS x,
-        |    CAST(round(1e6 * log2(CAST(n AS DOUBLE))) AS BIGINT) AS y
-        |  FROM c),
-        |m AS (
-        |  SELECT count(*) AS v, sum(x) AS sx, sum(y) AS sy,
-        |    sum(x * y) AS sxy, sum(x * x) AS sxx
-        |  FROM r),
-        |f AS (
-        |  SELECT v, v * sxy - sx * sy AS num, v * sxx - sx * sx AS den
-        |  FROM m)
-        |SELECT CAST(v AS BIGINT) AS vocab,
-        |  CASE WHEN den = 0 THEN NULL
-        |    ELSE (CASE WHEN num < 0 THEN -1 ELSE 1 END) *
-        |      CAST((2000000 * abs(num) + den) // (2 * den) AS DOUBLE) / 1e6
-        |  END AS slope_r
-        |FROM f""".stripMargin,
-
-    // q171: UNION ALL of per-column aggregates, identical counts
-    "q171_column_profile" ->
-      Seq("event_id", "ts", "user_id", "event_type", "value", "props")
-        .map(c =>
-          s"""SELECT '$c' AS "column", CAST(count(*) AS BIGINT) AS n,
-             |  CAST(count($c) AS BIGINT) AS n_nonnull,
-             |  CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct,
-             |  CAST((2000000 * count($c) + count(*)) // (2 * count(*))
-             |    AS DOUBLE) / 1e6 AS completeness_r
-             |FROM events""".stripMargin)
-        .mkString("\nUNION ALL\n"),
-
-    // q172: same W-day coverage explode over the DISTINCT day×user
-    // table, trailing partial days dropped at max(day)
-    "q172_rolling_active" ->
-      """WITH du AS (
-        |  SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events),
-        |mx AS (SELECT max(day) AS mxd FROM du),
-        |cov AS (
-        |  SELECT day + CAST(i AS INTEGER) AS day_c, user_id
-        |  FROM du, LATERAL unnest(range(0, 7)) AS t(i)),
-        |wau AS (
-        |  SELECT day_c, count(DISTINCT user_id) AS wau FROM cov, mx
-        |  WHERE day_c <= mxd GROUP BY 1),
-        |dau AS (SELECT day, count(DISTINCT user_id) AS dau FROM du
-        |        GROUP BY 1)
-        |SELECT w.day_c AS day, CAST(coalesce(d.dau, 0) AS BIGINT) AS dau,
-        |  CAST(w.wau AS BIGINT) AS wau,
-        |  CAST((2000000 * coalesce(d.dau, 0) + w.wau) // (2 * w.wau)
-        |    AS DOUBLE) / 1e6 AS stickiness_r
-        |FROM wau w LEFT JOIN dau d ON d.day = w.day_c""".stripMargin,
-
-    // q173: same (ts, event_id) lag gaps, identical integer-threshold
-    // CASE chain
-    "q173_gap_profile" ->
-      s"""WITH g AS (
-         |  SELECT date_diff('second',
-         |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id),
-         |    ts) AS gap_s
-         |  FROM events),
-         |f AS (SELECT gap_s FROM g WHERE gap_s IS NOT NULL),
-         |b AS (
-         |  SELECT CASE WHEN gap_s = 0 THEN 0
-         |${(1 to 20).map(b => s"    WHEN gap_s < ${1L << b} THEN $b")
-            .mkString("\n")}
-         |    ELSE 21 END AS bucket, gap_s
-         |  FROM f),
-         |c AS (SELECT bucket, count(*) AS n, min(gap_s) AS lo_s,
-         |        max(gap_s) AS hi_s FROM b GROUP BY 1),
-         |t AS (SELECT bucket, n, lo_s, hi_s, sum(n) OVER () AS total FROM c)
-         |SELECT CAST(bucket AS BIGINT) AS bucket, CAST(n AS BIGINT) AS n,
-         |  CAST(lo_s AS BIGINT) AS lo_s, CAST(hi_s AS BIGINT) AS hi_s,
-         |  CAST((2000000 * n + total) // (2 * total) AS DOUBLE) / 1e6
-         |    AS share_r
-         |FROM t""".stripMargin,
-
-    // q168: same (n DESC, w) total order for rank and inclusive
-    // cumulative, same tokenizer as q111
-    "q168_vocab_coverage" ->
-      """WITH wc AS (
-        |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS w
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |c AS (SELECT w, count(*) AS n FROM wc GROUP BY 1),
-        |r AS (
-        |  SELECT w, n,
-        |    row_number() OVER (ORDER BY n DESC, w) AS rank,
-        |    sum(n) OVER (ORDER BY n DESC, w ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS cum_n,
-        |    sum(n) OVER () AS total
-        |  FROM c)
-        |SELECT CAST(rank AS BIGINT) AS rank, w, CAST(n AS BIGINT) AS n,
-        |  CAST(cum_n AS BIGINT) AS cum_n, CAST(total AS BIGINT) AS total,
-        |  CAST((2000000 * cum_n + total) // (2 * total) AS DOUBLE) / 1e6
-        |    AS cover_r
-        |FROM r WHERE rank <= 100""".stripMargin,
-
-    // q169: same daily rollup, LEFT self-join on day − 7
-    "q169_wow_delta" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n,
-        |    coalesce(sum(CAST(round(value * 100) AS BIGINT)), 0) AS val_c
-        |  FROM events GROUP BY 1, 2)
-        |SELECT c.event_type, c.day, CAST(c.n AS BIGINT) AS n,
-        |  CAST(c.val_c AS BIGINT) AS val_c,
-        |  CAST(p.n AS BIGINT) AS n_prev,
-        |  CAST(c.n - p.n AS BIGINT) AS delta_n,
-        |  CAST(c.val_c - p.val_c AS BIGINT) AS delta_val_c
-        |FROM daily c LEFT JOIN daily p
-        |  ON p.event_type = c.event_type AND p.day = c.day - 7""".stripMargin,
-
-    // q170: identical gate expressions (q166's counts + micro Flesch),
-    // one aggregate, exact half-up shares
-    "q170_source_scorecard" ->
-      """WITH g AS (
-        |  SELECT source, n_chars AS nc,
-        |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS is_en,
-        |    CASE WHEN 206835000
-        |      - (2 * 1015000 * nw + ns) // (2 * ns)
-        |      - (2 * 84600000 * sy + nw) // (2 * nw) >= 60000000
-        |      THEN 1 ELSE 0 END AS is_readable,
-        |    CASE WHEN nw >= 50 THEN 1 ELSE 0 END AS is_long
-        |  FROM (
-        |    SELECT source, lang, n_chars,
-        |      CAST(len(string_split_regex(trim(lower(text)), '\s+'))
-        |        AS BIGINT) AS nw,
-        |      greatest(CAST(1 AS BIGINT),
-        |        CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT))
-        |        AS ns,
-        |      CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
-        |        AS BIGINT) AS sy
-        |    FROM documents WHERE length(trim(text)) > 0))
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(nc) AS BIGINT) AS sum_chars,
-        |  CAST((2000000 * sum(nc) + count(*)) // (2 * count(*)) AS DOUBLE)
-        |    / 1e6 AS mean_chars_r,
-        |  CAST((2000000 * sum(is_en) + count(*)) // (2 * count(*))
-        |    AS DOUBLE) / 1e6 AS en_share_r,
-        |  CAST((2000000 * sum(is_readable) + count(*)) // (2 * count(*))
-        |    AS DOUBLE) / 1e6 AS readable_share_r,
-        |  CAST((2000000 * sum(is_long) + count(*)) // (2 * count(*))
-        |    AS DOUBLE) / 1e6 AS long_share_r
-        |FROM g GROUP BY source""".stripMargin,
-
-    // q167: same (ts, event_id) row_number truncation; DuckDB's ordered
-    // string_agg replaces the sorted-struct join
-    "q167_path_mining" ->
-      """WITH rn AS (
-        |  SELECT user_id, event_type,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |      AS rn
-        |  FROM events),
-        |p AS (
-        |  SELECT user_id, string_agg(event_type, '>' ORDER BY rn) AS path
-        |  FROM rn WHERE rn <= 3 GROUP BY user_id),
-        |c AS (SELECT path, count(*) AS n FROM p GROUP BY 1),
-        |f AS (SELECT path, n, sum(n) OVER () AS total FROM c)
-        |SELECT path, CAST(n AS BIGINT) AS n, CAST(total AS BIGINT) AS total,
-        |  CAST((2000000 * n + total) // (2 * total) AS DOUBLE) / 1e6
-        |    AS share_r
-        |FROM f""".stripMargin,
-
-    // q165: q158's score CTE + q163's strictly-below bucket assignment,
-    // exact per-bucket counts/sums, one half-up rate rounding
-    "q165_calibration" ->
-      """WITH ex AS (
-        |  SELECT vec_id, label, CAST(i - 1 AS BIGINT) AS j,
-        |    CAST(floor(CAST(embedding[CAST(i AS INTEGER)] AS DOUBLE)
-        |      * 1000000 + 0.5) AS BIGINT) AS qv
-        |  FROM embeddings,
-        |  LATERAL unnest(range(1, len(embedding) + 1)) AS u(i)),
-        |sc AS (
-        |  SELECT vec_id, max(label) AS label,
-        |    sum(qv * ((j * 17) % 67 % 7 - 3)) AS s
-        |  FROM ex GROUP BY vec_id),
-        |bys AS (
-        |  SELECT s, count(*) AS n,
-        |    sum(CASE WHEN label >= 5 THEN 1 ELSE 0 END) AS pos
-        |  FROM sc GROUP BY s),
-        |cw AS (
-        |  SELECT s, n, pos,
-        |    coalesce(sum(n) OVER (ORDER BY s ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND 1 PRECEDING), 0) AS cum_lt,
-        |    sum(n) OVER () AS total
-        |  FROM bys)
-        |SELECT CAST((cum_lt * 10) // total AS BIGINT) AS bucket,
-        |  CAST(sum(n) AS BIGINT) AS n, CAST(sum(pos) AS BIGINT) AS n_pos,
-        |  CAST(min(s) AS BIGINT) AS s_lo, CAST(max(s) AS BIGINT) AS s_hi,
-        |  CAST(sum(s * n) AS BIGINT) AS score_sum,
-        |  CAST((2000000 * sum(pos) + sum(n)) // (2 * sum(n)) AS DOUBLE)
-        |    / 1e6 AS pos_rate_r
-        |FROM cw GROUP BY 1""".stripMargin,
-
-    // q166: same integer regex counts (RE2 character classes are
-    // dialect-safe), identical per-term floor-div rounding
-    "q166_readability" ->
-      """WITH b AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split_regex(trim(lower(text)), '\s+'))
-        |      AS BIGINT) AS n_words,
-        |    greatest(CAST(1 AS BIGINT),
-        |      CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT))
-        |      AS n_sentences,
-        |    CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
-        |      AS BIGINT) AS n_syllables
-        |  FROM documents WHERE length(trim(text)) > 0)
-        |SELECT doc_id, n_words, n_sentences, n_syllables,
-        |  CAST(206835000
-        |    - (2 * 1015000 * n_words + n_sentences) // (2 * n_sentences)
-        |    - (2 * 84600000 * n_syllables + n_words) // (2 * n_words)
-        |    AS DOUBLE) / 1e6 AS flesch_r
-        |FROM b""".stripMargin,
-
-    // q164: same tokenizer as q111, A·B-scaled integer log arguments,
-    // micro-bit rounding per word, private-mass remainder, HUGEINT
-    // combine with one half-up division
-    "q164_js_divergence" ->
-      """WITH toks AS (
-        |  SELECT source AS g,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS w
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |sw AS (SELECT g, w, count(*) AS n FROM toks GROUP BY 1, 2),
-        |tot AS (SELECT g, CAST(sum(n) AS BIGINT) AS tot FROM sw GROUP BY 1),
-        |j AS (
-        |  SELECT a.g AS s1, b.g AS s2, a.n AS na, b.n AS nb,
-        |    ta.tot AS ta, tb.tot AS tb
-        |  FROM sw a JOIN sw b ON a.w = b.w AND a.g < b.g
-        |  JOIN tot ta ON ta.g = a.g JOIN tot tb ON tb.g = b.g),
-        |ag AS (
-        |  SELECT s1, s2, count(*) AS n_common,
-        |    sum(na * (1000000
-        |      + CAST(round(1e6 * log2(CAST(na * tb AS DOUBLE))) AS BIGINT)
-        |      - CAST(round(1e6 * log2(CAST(na * tb + nb * ta AS DOUBLE)))
-        |          AS BIGINT))) AS sp_in,
-        |    sum(nb * (1000000
-        |      + CAST(round(1e6 * log2(CAST(nb * ta AS DOUBLE))) AS BIGINT)
-        |      - CAST(round(1e6 * log2(CAST(na * tb + nb * ta AS DOUBLE)))
-        |          AS BIGINT))) AS sq_in,
-        |    sum(na) AS ca, sum(nb) AS cb
-        |  FROM j GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT p.g AS s1, q.g AS s2, p.tot AS ta, q.tot AS tb
-        |  FROM tot p, tot q WHERE p.g < q.g),
-        |f AS (
-        |  SELECT pr.s1, pr.s2, coalesce(ag.n_common, 0) AS n_common,
-        |    coalesce(ag.sp_in, 0)
-        |      + (pr.ta - coalesce(ag.ca, 0)) * 1000000 AS sp,
-        |    coalesce(ag.sq_in, 0)
-        |      + (pr.tb - coalesce(ag.cb, 0)) * 1000000 AS sq,
-        |    pr.ta AS ta, pr.tb AS tb
-        |  FROM pairs pr LEFT JOIN ag ON pr.s1 = ag.s1 AND pr.s2 = ag.s2)
-        |SELECT s1, s2, CAST(n_common AS BIGINT) AS n_common,
-        |  CAST(sp AS BIGINT) AS sp_ub, CAST(sq AS BIGINT) AS sq_ub, ta, tb,
-        |  CAST((2 * (sp * tb + sq * ta) + 2 * ta * tb)
-        |    // (4 * ta * tb) AS DOUBLE) / 1e6 AS js_r
-        |FROM f""".stripMargin,
-
-    // q163: same strictly-below cumulative (ROWS ... 1 PRECEDING) over
-    // the distinct-cents table, floor-div bucket assignment
-    "q163_equidepth" ->
-      """WITH ev AS (
-        |  SELECT CAST(round(value * 100) AS BIGINT) AS c FROM events
-        |  WHERE value IS NOT NULL),
-        |bv AS (SELECT c, count(*) AS n FROM ev GROUP BY 1),
-        |cw AS (
-        |  SELECT c, n,
-        |    coalesce(sum(n) OVER (ORDER BY c ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND 1 PRECEDING), 0) AS cum_lt,
-        |    sum(n) OVER () AS total
-        |  FROM bv)
-        |SELECT CAST((cum_lt * 16) // total AS BIGINT) AS bucket,
-        |  CAST(sum(n) AS BIGINT) AS n_rows,
-        |  CAST(count(*) AS BIGINT) AS n_distinct,
-        |  min(c) / 100.0 AS lo, max(c) / 100.0 AS hi
-        |FROM cw GROUP BY 1""".stripMargin,
-
-    // q162: same integer-cents leading digit via VARCHAR head, exact
-    // half-up shares, 6-dp Benford constants cast to DOUBLE
-    "q162_benford" ->
-      """WITH v AS (
-        |  SELECT CAST(abs(round(value * 100)) AS BIGINT) AS c FROM events
-        |  WHERE value IS NOT NULL
-        |    AND CAST(abs(round(value * 100)) AS BIGINT) != 0),
-        |ct AS (
-        |  SELECT CAST(substr(CAST(c AS VARCHAR), 1, 1) AS BIGINT) AS digit,
-        |    count(*) AS n
-        |  FROM v GROUP BY 1),
-        |f AS (SELECT digit, n, sum(n) OVER () AS total FROM ct)
-        |SELECT digit, CAST(n AS BIGINT) AS n, CAST(total AS BIGINT) AS total,
-        |  CAST((2000000 * n + total) // (2 * total) AS DOUBLE) / 1e6
-        |    AS share_r,
-        |  CAST(CASE digit WHEN 1 THEN 0.301030 WHEN 2 THEN 0.176091
-        |    WHEN 3 THEN 0.124939 WHEN 4 THEN 0.096910 WHEN 5 THEN 0.079181
-        |    WHEN 6 THEN 0.066947 WHEN 7 THEN 0.057992 WHEN 8 THEN 0.051153
-        |    WHEN 9 THEN 0.045757 END AS DOUBLE) AS benford_r
-        |FROM f""".stripMargin,
-
-    // q161: same per-(type, day) full-frame first/last over (ts,
-    // event_id) order, integer cents throughout
-    "q161_ohlc_bars" ->
-      """WITH b AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day, ts, event_id,
-        |    CAST(round(value * 100) AS BIGINT) AS c
-        |  FROM events WHERE value IS NOT NULL),
-        |w AS (
-        |  SELECT event_type, day, c,
-        |    first_value(c) OVER win AS open_c,
-        |    last_value(c) OVER win AS close_c
-        |  FROM b
-        |  WINDOW win AS (PARTITION BY event_type, day ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING))
-        |SELECT event_type, day,
-        |  CAST(max(open_c) AS BIGINT) AS open_c,
-        |  CAST(max(close_c) AS BIGINT) AS close_c,
-        |  CAST(max(c) AS BIGINT) AS high_c, CAST(min(c) AS BIGINT) AS low_c,
-        |  CAST(count(*) AS BIGINT) AS n, CAST(sum(c) AS BIGINT) AS vol_c
-        |FROM w GROUP BY 1, 2""".stripMargin,
-
-    // q160: same cell/marginal counts; HUGEINT keeps the squared
-    // numerator exact, and the per-cell micro-unit half-up rounding
-    // matches Spark's DECIMAL(38,0) div
-    "q160_chi_square" ->
-      """WITH cells AS (
-        |  SELECT lang, source, count(*) AS o FROM documents GROUP BY 1, 2),
-        |m AS (
-        |  SELECT lang, source, o,
-        |    sum(o) OVER (PARTITION BY lang) AS r,
-        |    sum(o) OVER (PARTITION BY source) AS c,
-        |    sum(o) OVER () AS n
-        |  FROM cells),
-        |f AS (
-        |  SELECT lang, source, o, r, c, n,
-        |    (n * o - r * c) * (n * o - r * c) AS num,
-        |    n * r * c AS den
-        |  FROM m)
-        |SELECT lang, source, CAST(o AS BIGINT) AS o, CAST(r AS BIGINT) AS r,
-        |  CAST(c AS BIGINT) AS c, CAST(n AS BIGINT) AS n,
-        |  CAST((2000000 * num + den) // (2 * den) AS BIGINT) AS contrib_u,
-        |  CAST(CAST((2000000 * num + den) // (2 * den) AS BIGINT)
-        |    AS DOUBLE) / 1e6 AS contrib_r
-        |FROM f""".stripMargin,
-
-    // q159: same hours-since-min-epoch x, cents y, four HUGEINT-safe
-    // moment sums cast to BIGINT, sign-aware half-up slope rounding
-    "q159_ols_trend" ->
-      """WITH t0 AS (SELECT min(date_diff('second',
-        |    TIMESTAMP '1970-01-01', ts)) AS t0 FROM events),
-        |xy AS (
-        |  SELECT event_type,
-        |    (date_diff('second', TIMESTAMP '1970-01-01', ts) - t0)
-        |      // 3600 AS x,
-        |    CAST(round(value * 100) AS BIGINT) AS y
-        |  FROM events, t0 WHERE value IS NOT NULL),
-        |m AS (
-        |  SELECT event_type, count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-        |    sum(x * x) AS sxx, sum(x * y) AS sxy
-        |  FROM xy GROUP BY 1),
-        |f AS (
-        |  SELECT event_type, CAST(n AS BIGINT) AS n,
-        |    CAST(n * sxy - sx * sy AS BIGINT) AS slope_num,
-        |    CAST(n * sxx - sx * sx AS BIGINT) AS slope_den
-        |  FROM m)
-        |SELECT event_type, n, slope_num, slope_den,
-        |  CASE WHEN slope_den = 0 THEN NULL
-        |    ELSE (CASE WHEN slope_num < 0 THEN -1 ELSE 1 END) *
-        |      CAST((2000000 * abs(slope_num) + slope_den)
-        |        // (2 * slope_den) AS DOUBLE) / 1e6
-        |  END AS slope_r
-        |FROM f""".stripMargin,
-
-    // q158: same p0 quantized projection as q147, then pos/neg per
-    // distinct score, cumulative strictly-below negatives, u2 = 2U in
-    // exact integers; HUGEINT-safe, final ratioRound6 half-up
-    "q158_roc_auc" ->
-      """WITH ex AS (
-        |  SELECT vec_id, label, CAST(i - 1 AS BIGINT) AS j,
-        |    CAST(floor(CAST(embedding[CAST(i AS INTEGER)] AS DOUBLE)
-        |      * 1000000 + 0.5) AS BIGINT) AS qv
-        |  FROM embeddings,
-        |  LATERAL unnest(range(1, len(embedding) + 1)) AS u(i)),
-        |sc AS (
-        |  SELECT vec_id, max(label) AS label,
-        |    sum(qv * ((j * 17) % 67 % 7 - 3)) AS s
-        |  FROM ex GROUP BY vec_id),
-        |bys AS (
-        |  SELECT s, sum(CASE WHEN label >= 5 THEN 1 ELSE 0 END) AS pos,
-        |    sum(CASE WHEN label >= 5 THEN 0 ELSE 1 END) AS neg
-        |  FROM sc GROUP BY s),
-        |cum AS (
-        |  SELECT pos, neg,
-        |    coalesce(sum(neg) OVER (ORDER BY s ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND 1 PRECEDING), 0) AS cneg
-        |  FROM bys),
-        |f AS (
-        |  SELECT CAST(sum(pos) AS BIGINT) AS n_pos,
-        |    CAST(sum(neg) AS BIGINT) AS n_neg,
-        |    CAST(sum(2 * pos * cneg + pos * neg) AS BIGINT) AS u2
-        |  FROM cum)
-        |SELECT n_pos, n_neg, u2,
-        |  CAST((2000000 * u2 + 2 * n_pos * n_neg)
-        |    // (4 * n_pos * n_neg) AS DOUBLE) / 1e6 AS auc_r
-        |FROM f""".stripMargin,
-
-    // q157: same strictly-before frame (ROWS ... 1 PRECEDING over ts,
-    // event_id), IGNORE NULLS last_value per column (both CASEs share the
-    // null mask so they pick the same row), integer-second horizon
-    "q157_attribution" ->
-      """WITH t AS (
-        |  SELECT user_id, event_type, ts, event_id, value,
-        |    last_value(CASE WHEN event_type IN ('view','click')
-        |        THEN event_type END IGNORE NULLS) OVER w AS lt_type,
-        |    last_value(CASE WHEN event_type IN ('view','click')
-        |        THEN ts END IGNORE NULLS) OVER w AS lt_ts
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
-        |SELECT user_id, event_id, ts AS conv_ts,
-        |  CASE WHEN lt_ts IS NOT NULL
-        |         AND date_diff('second', lt_ts, ts) <= 604800
-        |       THEN lt_type ELSE 'direct' END AS touch_type,
-        |  CASE WHEN lt_ts IS NOT NULL
-        |         AND date_diff('second', lt_ts, ts) <= 604800
-        |       THEN lt_ts END AS touch_ts,
-        |  CAST(round(value * 100) AS BIGINT) AS revenue_cents
-        |FROM t WHERE event_type = 'purchase'""".stripMargin,
-
-    // q156: same integer-cent binning — (c-mn)*16 // (mx-mn+1) in int64
-    // (DuckDB // is floor-div; operands are non-negative so it matches
-    // Spark's DIV truncation), observed extremes over /100.0 double
-    // division, DECIMAL(18,0) cents sum
-    "q156_histogram" ->
-      """WITH ev AS (SELECT CAST(round(value * 100) AS BIGINT) AS c
-        |  FROM events WHERE value IS NOT NULL),
-        |st AS (SELECT min(c) AS mn, max(c) AS mx FROM ev),
-        |b AS (SELECT ((c - mn) * 16) // (mx - mn + 1) AS bin, c FROM ev, st)
-        |SELECT CAST(bin AS BIGINT) AS bin, CAST(count(*) AS BIGINT) AS cnt,
-        |  min(c) / 100.0 AS lo, max(c) / 100.0 AS hi,
-        |  CAST(sum(CAST(c AS DECIMAL(18,0))) / 100 AS DOUBLE) AS sum_value
-        |FROM b GROUP BY 1""".stripMargin,
-
-    // q140: same chr(1)-joined, chr(2)-coalesced row md5, two disjoint
-    // 60-bit substring lanes; each lane sums exactly in HUGEINT and the
-    // final mod 2^61 lands in plain BIGINT range on both engines
-    "q140_table_fingerprint" ->
-      """WITH h AS (SELECT md5(concat_ws(chr(1),
-        |    coalesce(CAST(l_orderkey AS VARCHAR), chr(2)),
-        |    coalesce(CAST(l_partkey AS VARCHAR), chr(2)),
-        |    coalesce(CAST(l_suppkey AS VARCHAR), chr(2)),
-        |    coalesce(CAST(l_linenumber AS VARCHAR), chr(2)))) AS m
-        |  FROM lineitem)
-        |SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(CAST(sum(('0x' || substring(m, 1, 15))::BIGINT) AS HUGEINT)
-        |    % 2305843009213693952 AS BIGINT) AS lane_a,
-        |  CAST(CAST(sum(('0x' || substring(m, 17, 15))::BIGINT) AS HUGEINT)
-        |    % 2305843009213693952 AS BIGINT) AS lane_b
-        |FROM h""".stripMargin,
-
-    // q139: same canonicalized oriented enumeration (a<b<c), each triangle
-    // found once, per-node participation by unnesting corners
-    "q139_triangles" ->
-      s"""WITH RECURSIVE $minhashPairCtes,
-         |pairs AS ($minhashPairSelect),
-         |e AS (SELECT DISTINCT least(id_a, id_b) AS a,
-         |        greatest(id_a, id_b) AS b
-         |      FROM pairs WHERE id_a <> id_b),
-         |t AS (
-         |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-         |  FROM e e1
-         |  JOIN e e2 ON e1.b = e2.a
-         |  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-         |n AS (SELECT x AS id FROM t UNION ALL SELECT y FROM t
-         |      UNION ALL SELECT z FROM t)
-         |SELECT id AS doc_id, CAST(count(*) AS BIGINT) AS triangles
-         |FROM n GROUP BY id""".stripMargin,
-
-    // q137: all-integer cohort arithmetic; retention via exact half-up
-    // integer rounding
-    "q137_cohort_retention" ->
-      """WITH fd AS (SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day
-        |            FROM events GROUP BY 1),
-        |cs AS (SELECT cohort_day, count(*) AS cohort_n FROM fd GROUP BY 1),
-        |ad AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-        |r AS (
-        |  SELECT fd.cohort_day,
-        |    CAST(date_diff('day', fd.cohort_day, ad.day) AS BIGINT)
-        |      AS day_offset,
-        |    count(*) AS n_active
-        |  FROM ad JOIN fd ON ad.user_id = fd.user_id
-        |  GROUP BY 1, 2)
-        |SELECT r.cohort_day, r.day_offset,
-        |  CAST(n_active AS BIGINT) AS n_active,
-        |  CAST(cohort_n AS BIGINT) AS cohort_n,
-        |  CAST((2000000 * n_active + cohort_n) // (2 * cohort_n) AS DOUBLE)
-        |    / 1e6 AS retention_r
-        |FROM r JOIN cs ON r.cohort_day = cs.cohort_day""".stripMargin,
-
-    // q138: identical (ts, event_id) total order for lead(); conditional
-    // share via the same exact integer rounding
-    "q138_event_transitions" ->
-      """WITH nx AS (
-        |  SELECT event_type AS from_type,
-        |    lead(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS next_type
-        |  FROM events),
-        |p AS (SELECT from_type, next_type, count(*) AS n FROM nx
-        |      WHERE next_type IS NOT NULL GROUP BY 1, 2),
-        |f AS (SELECT from_type, next_type, n,
-        |        sum(n) OVER (PARTITION BY from_type) AS n_from FROM p)
-        |SELECT from_type, next_type, CAST(n AS BIGINT) AS n,
-        |  CAST(n_from AS BIGINT) AS n_from,
-        |  CAST((2000000 * n + n_from) // (2 * n_from) AS DOUBLE) / 1e6 AS p_r
-        |FROM f""".stripMargin,
-
-    // q136: same anchor, integer-second ages, per-event micro-weight
-    // rounding before the integer sum
-    "q136_time_decay" ->
-      """WITH a AS (SELECT max(ts) AS anchor FROM events),
-        |w AS (
-        |  SELECT event_type, value,
-        |    CAST(round(1e6 * pow(2.0,
-        |      -CAST(date_diff('second', ts, anchor) AS DOUBLE) / 604800.0))
-        |      AS BIGINT) AS w_u
-        |  FROM events, a)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(w_u) AS BIGINT) AS decayed_n_u,
-        |  CAST(sum(w_u) AS DOUBLE) / 1e6 AS decayed_n_r,
-        |  CAST(sum(w_u * CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-        |    AS decayed_val_cu
-        |FROM w GROUP BY event_type""".stripMargin,
-
-    // q135: stage i = earliest stage event strictly after the stage-(i-1)
-    // frontier; timestamps are micro-aligned so the values compare exactly
-    "q135_funnel" ->
-      """WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
-        |            WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
-        |       JOIN s1 ON e.user_id = s1.user_id AND e.ts > s1.t1
-        |       WHERE e.event_type = 'click' GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
-        |       JOIN s2 ON e.user_id = s2.user_id AND e.ts > s2.t2
-        |       WHERE e.event_type = 'purchase' GROUP BY 1)
-        |SELECT s1.user_id, s1.t1, s2.t2, s3.t3,
-        |  CAST((CASE WHEN s1.t1 IS NOT NULL THEN 1 ELSE 0 END)
-        |     + (CASE WHEN s2.t2 IS NOT NULL THEN 1 ELSE 0 END)
-        |     + (CASE WHEN s3.t3 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS stages_reached
-        |FROM s1
-        |LEFT JOIN s2 ON s1.user_id = s2.user_id
-        |LEFT JOIN s3 ON s1.user_id = s3.user_id""".stripMargin,
-
-    // q134: same count table; quantile_cont is DuckDB's exact interpolated
-    // percentile (Spark `percentile`); top-1 share via exact-integer rounding
-    "q134_skew_profile" ->
-      """WITH c AS (
-        |  SELECT l_orderkey AS k, count(*) AS c FROM lineitem GROUP BY 1),
-        |a AS (
-        |  SELECT CAST(sum(c) AS BIGINT) AS n_rows,
-        |    CAST(count(*) AS BIGINT) AS n_keys,
-        |    CAST(max(c) AS BIGINT) AS max_cnt,
-        |    round(quantile_cont(c, 0.5), 6) AS p50_cnt,
-        |    round(quantile_cont(c, 0.99), 6) AS p99_cnt
-        |  FROM c)
-        |SELECT n_rows, n_keys, max_cnt,
-        |  CAST((2000000 * max_cnt + n_rows) // (2 * n_rows) AS DOUBLE) / 1e6
-        |    AS top1_share_r,
-        |  p50_cnt, p99_cnt,
-        |  round(CAST(max_cnt AS DOUBLE) / p50_cnt, 6) AS skew_r
-        |FROM a""".stripMargin,
-
-    // q133: same sqrt weights (identical IEEE ops), same integer
-    // apportionment (operands positive, so // and div agree), same md5 rank
-    "q133_temperature_mix" ->
-      """WITH counts AS (SELECT lang, count(*) AS n_g FROM documents GROUP BY lang),
-        |wtd AS (SELECT lang, n_g,
-        |  CAST(floor(sqrt(CAST(n_g AS DOUBLE) * 1e12)) AS BIGINT) AS w_g
-        |  FROM counts),
-        |tot AS (SELECT sum(w_g) AS tot_w FROM wtd),
-        |seats AS (SELECT lang, n_g, w_g,
-        |  (250 * w_g) // tot_w AS base, (250 * w_g) % tot_w AS rem
-        |  FROM wtd, tot),
-        |q AS (SELECT lang, n_g, base,
-        |  row_number() OVER (ORDER BY rem DESC, lang) AS extra_rk,
-        |  250 - sum(base) OVER () AS leftover FROM seats),
-        |quotas AS (SELECT lang,
-        |  least(n_g, base + CASE WHEN extra_rk <= leftover THEN 1 ELSE 0 END)
-        |    AS quota FROM q),
-        |ranked AS (SELECT lang, doc_id, row_number() OVER (
-        |    PARTITION BY lang ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
-        |    AS rk FROM documents)
-        |SELECT r.lang, r.doc_id, CAST(r.rk AS BIGINT) AS rk,
-        |  CAST(quota AS BIGINT) AS quota
-        |FROM ranked r JOIN quotas USING (lang) WHERE rk <= quota""".stripMargin,
-
-    // q132: the engine-native spelling of the same fold; md5 proves the
-    // folded strings byte-identical, not merely similar
-    "q132_unicode_fold" ->
-      """WITH rows(id, raw) AS (VALUES
-        |  (1, 'Café crème'), (2, 'cafe creme'), (3, 'NAÏVE approach'),
-        |  (4, 'naive approach'), (5, 'ÅNGSTRÖM units'), (6, 'señor São Paulo'),
-        |  (7, 'ße öl stays ß'), (8, 'plain ascii text'))
-        |SELECT CAST(id AS BIGINT) AS id,
-        |  strip_accents(nfc_normalize(lower(raw))) AS folded,
-        |  md5(strip_accents(nfc_normalize(lower(raw)))) AS fold_key
-        |FROM rows""".stripMargin,
-
-    // q131: same smoothed proportions and identically-ordered double ops;
-    // the log-ratio carried as micro-bits
-    "q131_psi_drift" ->
-      """WITH a AS (SELECT lang, count(*) AS n_a FROM documents
-        |           WHERE doc_id % 2 = 0 GROUP BY lang),
-        |b AS (SELECT lang, count(*) AS n_b FROM documents
-        |      WHERE doc_id % 2 = 1 GROUP BY lang),
-        |cats AS (
-        |  SELECT coalesce(a.lang, b.lang) AS lang,
-        |    coalesce(n_a, 0) AS n_a, coalesce(n_b, 0) AS n_b
-        |  FROM a FULL OUTER JOIN b ON a.lang = b.lang),
-        |tot AS (SELECT sum(n_a) AS tot_a, sum(n_b) AS tot_b,
-        |               count(*) AS v FROM cats)
-        |SELECT lang, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-        |  CAST(round(1e6 * (
-        |    log2(CAST(n_a + 1 AS DOUBLE) / CAST(tot_a + v AS DOUBLE))
-        |    - log2(CAST(n_b + 1 AS DOUBLE) / CAST(tot_b + v AS DOUBLE))))
-        |    AS BIGINT) AS lr_ub,
-        |  round((CAST(n_a + 1 AS DOUBLE) / CAST(tot_a + v AS DOUBLE)
-        |       - CAST(n_b + 1 AS DOUBLE) / CAST(tot_b + v AS DOUBLE))
-        |    * CAST(CAST(round(1e6 * (
-        |        log2(CAST(n_a + 1 AS DOUBLE) / CAST(tot_a + v AS DOUBLE))
-        |        - log2(CAST(n_b + 1 AS DOUBLE) / CAST(tot_b + v AS DOUBLE))))
-        |        AS BIGINT) AS DOUBLE) / 1e6, 6) AS contrib_r
-        |FROM cats, tot""".stripMargin,
-
-    // q130: the same deterministic changelog, latest-per-id wins, deletes
-    // drop, untouched rows pass through
-    "q130_changelog_apply" ->
-      """WITH docs AS (SELECT doc_id, text FROM documents),
-        |log AS (
-        |  SELECT doc_id, 1 AS seq, 'delete' AS op, CAST(NULL AS VARCHAR) AS text
-        |  FROM docs WHERE doc_id % 10 = 0
-        |  UNION ALL SELECT doc_id, 1, 'upsert', text || ' rev one'
-        |  FROM docs WHERE doc_id % 10 = 1
-        |  UNION ALL SELECT doc_id, 2, 'upsert', text || ' rev two'
-        |  FROM docs WHERE doc_id % 10 = 1
-        |  UNION ALL SELECT doc_id + 1000000, 1, 'upsert', 'fresh insert ' || doc_id
-        |  FROM docs WHERE doc_id % 100 = 2),
-        |latest AS (
-        |  SELECT doc_id, op, text FROM (
-        |    SELECT doc_id, seq, op, text,
-        |      row_number() OVER (PARTITION BY doc_id ORDER BY seq DESC) AS rn
-        |    FROM log) WHERE rn = 1)
-        |SELECT d.doc_id, d.text
-        |FROM docs d LEFT JOIN latest l ON d.doc_id = l.doc_id
-        |WHERE l.doc_id IS NULL
-        |UNION ALL
-        |SELECT doc_id, text FROM latest WHERE op = 'upsert'""".stripMargin,
-
-    // q129: same fixture; hot lines by distinct-doc count, survivors
-    // reassembled with an ordered string_agg
-    "q129_line_dedup" ->
-      """WITH docs(doc_id, text) AS (VALUES
-        |  (1, 'welcome to example news' || chr(10) || 'storyline one body text' || chr(10) || 'all rights reserved'),
-        |  (2, 'welcome to example news' || chr(10) || 'another unique article body' || chr(10) || 'all rights reserved'),
-        |  (3, 'welcome to example news' || chr(10) || 'all rights reserved'),
-        |  (4, 'a fully original document' || chr(10) || 'with nothing shared at all'),
-        |  (5, 'subscribe to the newsletter' || chr(10) || 'unique closing thought'),
-        |  (6, 'subscribe to the newsletter' || chr(10) || 'another standalone body line')),
-        |arr AS (SELECT doc_id, string_split(text, chr(10)) AS t FROM docs),
-        |lines AS (
-        |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, t[CAST(i AS INTEGER)] AS line
-        |  FROM arr, LATERAL unnest(range(1, len(t) + 1)) AS u(i)),
-        |hot AS (SELECT line FROM lines GROUP BY line
-        |        HAVING count(DISTINCT doc_id) >= 2),
-        |kept AS (
-        |  SELECT l.doc_id, count(*) AS n_kept,
-        |    string_agg(l.line, chr(10) ORDER BY l.pos) AS text_clean
-        |  FROM lines l LEFT JOIN hot h ON l.line = h.line
-        |  WHERE h.line IS NULL GROUP BY l.doc_id),
-        |tot AS (SELECT doc_id, count(*) AS n_lines FROM lines GROUP BY doc_id)
-        |SELECT CAST(t.doc_id AS BIGINT) AS doc_id,
-        |  coalesce(k.text_clean, '') AS text_clean,
-        |  CAST(t.n_lines AS BIGINT) AS n_lines,
-        |  CAST(t.n_lines - coalesce(k.n_kept, 0) AS BIGINT) AS n_dropped
-        |FROM tot t LEFT JOIN kept k ON t.doc_id = k.doc_id""".stripMargin,
-
-    // q128: anchors 0-4 against every candidate, the same lattice bucket +
-    // cosine>=0.35 exclusion as q94, dense rank per anchor. Ordered sums
-    // mirror VectorOps' sequential fold.
-    "q128_hard_negatives" ->
-      """WITH u AS (
-        |  SELECT vec_id, unnest(embedding) AS x,
-        |         unnest(range(0, len(embedding))) AS j
-        |  FROM embeddings),
-        |lanes AS (SELECT unnest(range(0, 4)) AS i),
-        |proj AS (
-        |  SELECT u.vec_id, l.i,
-        |    sum(CAST(x AS DOUBLE) * CAST((l.i * 31 + j * 17) % 7 - 3 AS DOUBLE)) AS p
-        |  FROM u CROSS JOIN lanes l GROUP BY u.vec_id, l.i),
-        |sig AS (
-        |  SELECT vec_id,
-        |    sum(CASE WHEN p >= 0 THEN CAST(pow(2, i) AS BIGINT) ELSE 0 END) AS bucket
-        |  FROM proj GROUP BY vec_id),
-        |nrm AS (
-        |  SELECT vec_id, sqrt(sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nrm
-        |  FROM u GROUP BY vec_id),
-        |anch AS (SELECT vec_id AS anchor FROM embeddings
-        |         WHERE vec_id IN (0, 1, 2, 3, 4)),
-        |sc AS (
-        |  SELECT a.anchor, e.vec_id AS negative,
-        |    sum(CAST(ua.x AS DOUBLE) * CAST(ue.x AS DOUBLE)) AS dp
-        |  FROM anch a JOIN embeddings e ON e.vec_id <> a.anchor
-        |  JOIN u ua ON ua.vec_id = a.anchor
-        |  JOIN u ue ON ue.vec_id = e.vec_id AND ua.j = ue.j
-        |  GROUP BY a.anchor, e.vec_id),
-        |sims AS (
-        |  SELECT sc.anchor, sc.negative, sc.dp / (na.nrm * nn.nrm) AS sim,
-        |    sa.bucket AS ab, sn.bucket AS nb
-        |  FROM sc
-        |  JOIN nrm na ON sc.anchor = na.vec_id
-        |  JOIN nrm nn ON sc.negative = nn.vec_id
-        |  JOIN sig sa ON sc.anchor = sa.vec_id
-        |  JOIN sig sn ON sc.negative = sn.vec_id),
-        |kept AS (SELECT anchor, negative, sim FROM sims
-        |         WHERE NOT (ab = nb AND sim >= 0.35)),
-        |r AS (SELECT anchor, negative, sim, row_number() OVER (
-        |        PARTITION BY anchor ORDER BY sim DESC, negative) AS rnk
-        |      FROM kept)
-        |SELECT anchor, negative, round(sim, 6) AS sim_r,
-        |  CAST(rnk AS BIGINT) AS rnk
-        |FROM r WHERE rnk <= 5""".stripMargin,
-
-    // q127: same one-pass dual-count model in SQL; every log2 argument is an
-    // exact integer and every log2 term is individually rounded to micro-bits
-    // before the integer sum, so aggregation order cannot move the result
-    "q127_dsir_weights" ->
-      """WITH toks AS (
-        |  SELECT doc_id, (lang = 'en') AS is_t,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS w
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |model AS (
-        |  SELECT w, count(*) AS n_r,
-        |    sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS n_t
-        |  FROM toks GROUP BY w),
-        |tot AS (
-        |  SELECT sum(n_r) AS tot_r, sum(n_t) AS tot_t, count(*) AS vocab
-        |  FROM model),
-        |sc AS (
-        |  SELECT t.doc_id, count(*) AS n_tok,
-        |    sum(CAST(round(1e6*log2(CAST(m.n_t + 1 AS DOUBLE))) AS BIGINT)
-        |      - CAST(round(1e6*log2(CAST(m.n_r + 1 AS DOUBLE))) AS BIGINT))
-        |      AS num_ub
-        |  FROM toks t JOIN model m USING (w) GROUP BY t.doc_id)
-        |SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tok,
-        |  CAST(num_ub - n_tok * (
-        |    CAST(round(1e6*log2(CAST(tot_t + vocab AS DOUBLE))) AS BIGINT)
-        |    - CAST(round(1e6*log2(CAST(tot_r + vocab AS DOUBLE))) AS BIGINT))
-        |  AS BIGINT) AS importance_ub
-        |FROM sc, tot""".stripMargin,
-
-    // q126: q63's recursive clusters, then the same md5-hex-range bucket of
-    // the cluster label (204/26/26 out of 256) — string comparison on the
-    // first two hex chars, no hex→int conversion on either engine
-    "q126_leakage_split" ->
-      s"""WITH RECURSIVE $minhashPairCtes,
-         |pairs AS ($minhashPairSelect),
-         |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-         |          UNION SELECT id_b, id_a FROM pairs),
-         |reach(src, dst) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT r.src, e.b FROM reach r JOIN edges e ON e.a = r.dst),
-         |clus AS (SELECT src AS doc_id, min(dst) AS cluster
-         |         FROM reach GROUP BY src)
-         |SELECT doc_id, CAST(cluster AS BIGINT) AS cluster,
-         |  CASE WHEN substr(md5(CAST(CAST(cluster AS BIGINT) AS VARCHAR)), 1, 2) < 'cc'
-         |         THEN 'train'
-         |       WHEN substr(md5(CAST(CAST(cluster AS BIGINT) AS VARCHAR)), 1, 2) < 'e6'
-         |         THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM clus""".stripMargin,
-
-    // Recall@10 of the int8-quantized ranking and the 8-bit lattice-LSH
-    // bucket restriction vs exact cosine top-10, 10 query vectors. Both
-    // approximate sets are exact integer arithmetic (same quantization as
-    // q65, same lattice coefficients as q32 with 8 lanes), so the recall
-    // column is an exact count/10.
-    "q195_ann_recall" ->
-      """WITH u AS (
-        |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-        |         unnest(range(0, len(embedding))) AS j
-        |  FROM embeddings),
-        |m AS (SELECT vec_id, max(abs(x)) AS mx FROM u GROUP BY vec_id),
-        |qv AS (SELECT u.vec_id, j, x,
-        |    CAST(round(x * (127.0 / m.mx)) AS BIGINT) AS qx
-        |  FROM u JOIN m USING (vec_id)),
-        |lanes AS (SELECT unnest(range(0, 8)) AS i),
-        |proj AS (
-        |  SELECT u.vec_id, l.i,
-        |    sum(x * CAST((l.i * 31 + j * 17) % 7 - 3 AS DOUBLE)) AS p
-        |  FROM u CROSS JOIN lanes l GROUP BY u.vec_id, l.i),
-        |sig AS (
-        |  SELECT vec_id,
-        |    sum(CASE WHEN p >= 0 THEN CAST(pow(2, i) AS BIGINT) ELSE 0 END)
-        |      AS bucket
-        |  FROM proj GROUP BY vec_id),
-        |nrm AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM u GROUP BY vec_id),
-        |pair AS (
-        |  SELECT a.vec_id AS qid, b.vec_id AS vec_id,
-        |    sum(a.x * b.x) AS dp, CAST(sum(a.qx * b.qx) AS BIGINT) AS qdot
-        |  FROM qv a JOIN qv b USING (j) WHERE a.vec_id < 10
-        |  GROUP BY a.vec_id, b.vec_id),
-        |scored AS (
-        |  SELECT p.qid, p.vec_id, p.dp / (nq.nrm * nv.nrm) AS sim, p.qdot,
-        |    sq.bucket AS qbucket, sv.bucket AS bucket
-        |  FROM pair p
-        |  JOIN nrm nq ON nq.vec_id = p.qid
-        |  JOIN nrm nv ON nv.vec_id = p.vec_id
-        |  JOIN sig sq ON sq.vec_id = p.qid
-        |  JOIN sig sv ON sv.vec_id = p.vec_id),
-        |exact_top AS (
-        |  SELECT qid, vec_id FROM (SELECT qid, vec_id,
-        |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS r
-        |    FROM scored) WHERE r <= 10),
-        |int8_top AS (
-        |  SELECT qid, vec_id FROM (SELECT qid, vec_id,
-        |    row_number() OVER (PARTITION BY qid ORDER BY qdot DESC, vec_id) AS r
-        |    FROM scored) WHERE r <= 10),
-        |lsh_top AS (
-        |  SELECT qid, vec_id FROM (SELECT qid, vec_id,
-        |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS r
-        |    FROM scored WHERE bucket = qbucket) WHERE r <= 10),
-        |qids AS (SELECT vec_id AS qid FROM embeddings WHERE vec_id < 10),
-        |hit8 AS (SELECT e.qid, count(*) AS h FROM exact_top e
-        |  JOIN int8_top a USING (qid, vec_id) GROUP BY e.qid),
-        |hitl AS (SELECT e.qid, count(*) AS h FROM exact_top e
-        |  JOIN lsh_top a USING (qid, vec_id) GROUP BY e.qid)
-        |SELECT qid, 'int8' AS method, CAST(coalesce(h, 0) AS BIGINT) AS n_hit,
-        |  coalesce(h, 0) / 10.0 AS recall
-        |FROM qids LEFT JOIN hit8 USING (qid)
-        |UNION ALL
-        |SELECT qid, 'lsh' AS method, CAST(coalesce(h, 0) AS BIGINT) AS n_hit,
-        |  coalesce(h, 0) / 10.0 AS recall
-        |FROM qids LEFT JOIN hitl USING (qid)""".stripMargin,
-
-    // Word-aligned: same tokenizer as q64 (trim/lower/\s+ split); a token
-    // is dropped iff ANY 5-gram covering it appears in >= 2 distinct docs.
-    "q196_span_removal" ->
-      """WITH base AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |tk AS (SELECT doc_id, unnest(toks) AS tok,
-        |         unnest(range(0, len(toks))) AS i FROM base),
-        |gr0 AS (SELECT doc_id, unnest(range(0, len(toks) - 4)) AS s
-        |        FROM base WHERE len(toks) >= 5),
-        |grams AS (SELECT g0.doc_id, g0.s,
-        |    array_to_string(list_slice(b.toks, g0.s + 1, g0.s + 5), ' ') AS g
-        |  FROM gr0 g0 JOIN base b USING (doc_id)),
-        |hot AS (SELECT g FROM grams GROUP BY g
-        |        HAVING count(DISTINCT doc_id) >= 2),
-        |hs AS (SELECT doc_id, s FROM grams JOIN hot USING (g)),
-        |covered AS (SELECT DISTINCT t.doc_id, t.i
-        |  FROM tk t JOIN hs h ON h.doc_id = t.doc_id
-        |    AND t.i BETWEEN h.s AND h.s + 4),
-        |kept AS (SELECT t.doc_id, t.i, t.tok
-        |  FROM tk t LEFT JOIN covered c ON c.doc_id = t.doc_id AND c.i = t.i
-        |  WHERE c.i IS NULL),
-        |ka AS (SELECT doc_id, count(*) AS n_kept,
-        |    string_agg(tok, ' ' ORDER BY i) AS txt
-        |  FROM kept GROUP BY doc_id)
-        |SELECT b.doc_id, CAST(len(b.toks) AS BIGINT) AS n_tokens,
-        |  CAST(len(b.toks) - coalesce(k.n_kept, 0) AS BIGINT) AS n_dropped,
-        |  coalesce(k.txt, '') AS text_clean
-        |FROM base b LEFT JOIN ka k USING (doc_id)""".stripMargin,
-
-    "q197_sequence_packing" ->
-      """WITH t AS (
-        |  SELECT source, doc_id,
-        |    CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS BIGINT)
-        |      AS n_tokens
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |o AS (SELECT source, doc_id, n_tokens,
-        |    CAST(coalesce(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-        |      AS start_off
-        |  FROM t)
-        |SELECT source, doc_id, n_tokens, start_off,
-        |  CAST(start_off // 256 AS BIGINT) AS pack_first,
-        |  CAST((start_off + n_tokens - 1) // 256 AS BIGINT) AS pack_last,
-        |  CAST((start_off + n_tokens - 1) // 256 - start_off // 256 + 1
-        |    AS BIGINT) AS n_packs
-        |FROM o ORDER BY source, doc_id""".stripMargin,
-
-    "q198_waterfill" ->
-      s"""WITH $waterfillCtes
-         |SELECT source, cap, w, sat = 1 AS is_saturated, alloc
-         |FROM wf_alloc""".stripMargin,
-
-    "q216_residual_anomalies" ->
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS day, count(*) AS n
-        |  FROM events GROUP BY 1),
-        |w AS (SELECT day, n,
-        |  sum(n) OVER (ORDER BY day
-        |    ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS trend_sum,
-        |  count(*) OVER (ORDER BY day
-        |    ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS trend_cnt,
-        |  sum(n) OVER (PARTITION BY isodow(day)) AS dow_sum,
-        |  count(*) OVER (PARTITION BY isodow(day)) AS dow_cnt,
-        |  sum(n) OVER () AS tot_sum,
-        |  count(*) OVER () AS tot_cnt
-        |  FROM daily),
-        |r AS (SELECT day, n,
-        |  CAST(n AS DOUBLE) -
-        |    CAST(trend_sum AS DOUBLE) / CAST(trend_cnt AS DOUBLE) -
-        |    (CAST(dow_sum AS DOUBLE) / CAST(dow_cnt AS DOUBLE) -
-        |     CAST(tot_sum AS DOUBLE) / CAST(tot_cnt AS DOUBLE)) AS resid
-        |  FROM w),
-        |m AS (SELECT round(quantile_cont(resid, 0.5), 6) AS med_r FROM r),
-        |s AS (SELECT m.med_r,
-        |    round(quantile_cont(abs(r.resid - m.med_r), 0.5), 6) AS mad_r
-        |  FROM r CROSS JOIN m GROUP BY m.med_r)
-        |SELECT r.day, CAST(r.n AS BIGINT) AS n,
-        |  round(r.resid, 6) AS resid_r, s.med_r, s.mad_r,
-        |  abs(r.resid - s.med_r) > 4.4478 * s.mad_r AS is_anomaly
-        |FROM r CROSS JOIN s""".stripMargin,
-
-    // GENERATED from SiteScoringPipeline.fullRules/ruleProbes — the SQL is
-    // the reversed rule list as a first-match-wins CASE (= Spark's
-    // last-writer-wins), so the two sides share one rule table by
-    // construction. RE2 handles every pattern (\b, (?:), \s?).
-    "q217_poi_categorize_full" ->
-      s"""WITH probes AS (SELECT p_partkey,
-         |  ${poiProbeCaseSql("p_partkey", _._1, "poi_name")},
-         |  ${poiProbeCaseSql("p_partkey", _._2, "poi_type")}
-         |  FROM part)
-         |SELECT p_partkey, poi_name, poi_type,
-         |  $categorizeCaseSql AS poi_category
-         |FROM probes""".stripMargin,
-
-    // Independent derivation on purpose: the oracle computes the model
-    // score from the LONG per-POI form (sum of per-row category weights)
-    // while the Spark plan goes through the pivoted wide vector — equal
-    // results prove the pivot+fold identity, not just mirror arithmetic.
-    // Haversine operand order matches the proven q18 formulation.
-    "q218_serving_path" ->
-      s"""WITH sites AS (SELECT c_custkey AS rst_cd,
-         |  CAST((c_custkey * 37) % 17000 AS DOUBLE) / 100 - 85 AS lat,
-         |  CAST((c_custkey * 91) % 35000 AS DOUBLE) / 100 - 175 AS lon
-         | FROM customer WHERE c_custkey % 97 = 0),
-         |pois AS (SELECT s_suppkey,
-         |  ${poiProbeCaseSql("s_suppkey", _._1, "poi_name")},
-         |  ${poiProbeCaseSql("s_suppkey", _._2, "poi_type")},
-         |  CAST((s_suppkey * 53) % 17000 AS DOUBLE) / 100 - 85 AS s_lat,
-         |  CAST((s_suppkey * 71) % 35000 AS DOUBLE) / 100 - 175 AS s_lon
-         | FROM supplier),
-         |j AS (SELECT rst_cd, s_suppkey, poi_name, poi_type,
-         |  12742000.0 * asin(sqrt(
-         |    sin(radians(s_lat - lat) / 2) * sin(radians(s_lat - lat) / 2) +
-         |    cos(radians(lat)) * cos(radians(s_lat)) *
-         |    sin(radians(s_lon - lon) / 2) * sin(radians(s_lon - lon) / 2))) AS dist
-         | FROM sites CROSS JOIN pois),
-         |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY rst_cd
-         |       ORDER BY dist, s_suppkey) AS BIGINT) AS rk FROM j),
-         |nearby AS (SELECT r.*,
-         |   $categorizeCaseSql AS poi_category
-         |  FROM r WHERE rk <= 20)
-         |SELECT rst_cd,
-         |  CAST(sum(length(poi_category) % 7 + 1) AS BIGINT) AS score,
-         |  CAST(count(*) AS BIGINT) AS n_pois,
-         |  CAST(max(CASE WHEN rk = 1 THEN s_suppkey END) AS BIGINT) AS pos1_id,
-         |  round(max(CASE WHEN rk = 1 THEN dist END), 1) AS pos1_m,
-         |  CAST(max(CASE WHEN rk = 2 THEN s_suppkey END) AS BIGINT) AS pos2_id,
-         |  round(max(CASE WHEN rk = 2 THEN dist END), 1) AS pos2_m,
-         |  CAST(max(CASE WHEN rk = 3 THEN s_suppkey END) AS BIGINT) AS pos3_id,
-         |  round(max(CASE WHEN rk = 3 THEN dist END), 1) AS pos3_m
-         |FROM nearby GROUP BY rst_cd ORDER BY rst_cd""".stripMargin,
-
-    // q243: q63's recursive closure + size rollup.
-    "q243_cluster_size_histogram" ->
-      s"""WITH RECURSIVE $minhashPairCtes,
-         |pairs AS ($minhashPairSelect),
-         |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-         |          UNION SELECT id_b, id_a FROM pairs),
-         |reach(src, dst) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT r.src, e.b FROM reach r JOIN edges e ON e.a = r.dst),
-         |clus AS (SELECT src AS doc_id, min(dst) AS cluster
-         |         FROM reach GROUP BY src),
-         |sizes AS (SELECT cluster, count(*) AS sz FROM clus
-         |          GROUP BY cluster),
-         |t AS (SELECT sum(sz) AS n_docs FROM sizes)
-         |SELECT CAST(sz AS BIGINT) AS cluster_size,
-         |  CAST(count(*) AS BIGINT) AS n_clusters,
-         |  CAST(sz * count(*) AS BIGINT) AS n_docs_at_size,
-         |  CAST((sz * count(*) * 2000000 + t.n_docs) // (t.n_docs * 2)
-         |    AS DOUBLE) / 1e6 AS doc_share_r
-         |FROM sizes CROSS JOIN t GROUP BY sz, t.n_docs""".stripMargin,
-
-    // q244: micro-unit centroid lanes + one double divide per pair.
-    "q244_source_centroid_matrix" ->
-      """WITH u AS (SELECT CAST(vec_id % 8 AS BIGINT) AS src,
-        |    CAST(round(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT) AS xm, j
-        |  FROM (SELECT vec_id, unnest(embedding) AS x,
-        |        unnest(range(0, len(embedding))) AS j FROM embeddings)),
-        |c AS (SELECT src, j, sum(xm) AS sj FROM u GROUP BY src, j),
-        |p AS (SELECT a.src AS src_a, b.src AS src_b,
-        |    sum(a.sj * b.sj) AS dot
-        |  FROM c a JOIN c b ON a.j = b.j AND a.src < b.src
-        |  GROUP BY 1, 2),
-        |n AS (SELECT src, sum(sj * sj) AS nn FROM c GROUP BY src)
-        |SELECT src_a, src_b,
-        |  CAST(dot AS DOUBLE) /
-        |    (sqrt(CAST(na.nn AS DOUBLE)) * sqrt(CAST(nb.nn AS DOUBLE)))
-        |    AS cos
-        |FROM p JOIN n na ON na.src = p.src_a
-        |JOIN n nb ON nb.src = p.src_b""".stripMargin,
-
-    // q241: both sides re-derived in SQL.
-    "q241_join_cardinality" ->
-      """WITH la AS (SELECT o_orderkey AS k, count(*) AS na
-        |  FROM orders GROUP BY 1),
-        |lb AS (SELECT l_orderkey AS k, count(*) AS nb
-        |  FROM lineitem GROUP BY 1)
-        |SELECT 'histogram_product' AS method,
-        |  CAST(sum(na * nb) AS BIGINT) AS n
-        |FROM la JOIN lb USING (k)
-        |UNION ALL
-        |SELECT 'actual_join', CAST(count(*) AS BIGINT)
-        |FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey"""
-        .stripMargin,
-
-    // q242: minhash pairs + fingerprint equality split.
-    "q242_near_vs_exact" ->
-      s"""WITH $minhashPairCtes,
-         |pairs AS ($minhashPairSelect),
-         |fp AS (SELECT doc_id,
-         |  md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS h
-         | FROM documents),
-         |j AS (SELECT p.id_a, p.id_b, a.h AS ha, b.h AS hb
-         |  FROM pairs p JOIN fp a ON a.doc_id = p.id_a
-         |  JOIN fp b ON b.doc_id = p.id_b)
-         |SELECT CAST(count(*) AS BIGINT) AS n_near_pairs,
-         |  CAST(sum(CASE WHEN ha = hb THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_exact,
-         |  CAST(sum(CASE WHEN ha <> hb THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_genuinely_near,
-         |  CAST((sum(CASE WHEN ha <> hb THEN 1 ELSE 0 END) * 2000000
-         |      + count(*)) // (count(*) * 2) AS DOUBLE) / 1e6
-         |    AS near_only_share_r
-         |FROM j""".stripMargin,
-
-    // q240: q23's fingerprint + q24's token count, min-id keeper window.
-    "q240_dedup_impact" ->
-      """WITH d AS (SELECT doc_id,
-        |  CAST(len(string_split_regex(trim(lower(text)), '\s+'))
-        |    AS BIGINT) AS tok,
-        |  md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS h
-        | FROM documents),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY h ORDER BY doc_id)
-        |   AS rk FROM d)
-        |SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(tok) AS BIGINT) AS tokens,
-        |  CAST(sum(CASE WHEN rk = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_kept,
-        |  CAST(sum(CASE WHEN rk = 1 THEN tok ELSE 0 END) AS BIGINT)
-        |    AS tokens_kept,
-        |  CAST(((sum(tok) - sum(CASE WHEN rk = 1 THEN tok ELSE 0 END))
-        |      * 2000000 + sum(tok)) // (sum(tok) * 2) AS DOUBLE) / 1e6
-        |    AS removed_share_r
-        |FROM r""".stripMargin,
-
-    // q239: q35's session CTEs + the integer cross-multiplied rate gate.
-    "q239_bot_rate_gate" ->
-      """WITH x AS (SELECT user_id, event_id, ts,
-        |  lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-        | FROM events),
-        |f AS (SELECT *, CASE WHEN prev IS NULL
-        |       OR epoch_us(ts) - epoch_us(prev) > 300000000 THEN 1 ELSE 0
-        |     END AS flag FROM x),
-        |sess AS (SELECT *, CAST(sum(flag) OVER (PARTITION BY user_id
-        |   ORDER BY ts, event_id
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |   AS session_id
-        | FROM f)
-        |SELECT user_id, session_id, CAST(count(*) AS BIGINT) AS n,
-        |  CAST((max(epoch_us(ts)) - min(epoch_us(ts))) // 1000000
-        |    AS BIGINT) AS dur_s,
-        |  count(*) >= 10 AND
-        |    count(*) * 60 > ((max(epoch_us(ts)) - min(epoch_us(ts)))
-        |      // 1000000) * 6 AS is_bot
-        |FROM sess GROUP BY user_id, session_id""".stripMargin,
-
-    // q238: same cents lanes + window shares.
-    "q238_hierarchy_shares" ->
-      """WITH rev AS (SELECT c.c_nationkey,
-        |    sum(CAST(round(o.o_totalprice * 100, 0) AS BIGINT)) AS nc
-        |  FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-        |  GROUP BY c.c_nationkey),
-        |d AS (SELECT n.n_nationkey, n.n_name, r.r_name
-        |  FROM nation n JOIN region r ON r.r_regionkey = n.n_regionkey),
-        |j AS (SELECT d.r_name, d.n_name, rev.nc,
-        |    sum(rev.nc) OVER (PARTITION BY d.r_name) AS rc,
-        |    sum(rev.nc) OVER () AS tc
-        |  FROM rev JOIN d ON d.n_nationkey = rev.c_nationkey)
-        |SELECT r_name, n_name,
-        |  CAST(nc AS DOUBLE) / 100 AS nation_rev,
-        |  CAST((nc * 2000000 + rc) // (rc * 2) AS DOUBLE) / 1e6
-        |    AS of_region_r,
-        |  CAST((nc * 2000000 + tc) // (tc * 2) AS DOUBLE) / 1e6
-        |    AS of_world_r
-        |FROM j""".stripMargin,
-
-    // q237: identical integer floor/remainder repair.
-    "q237_apportionment" ->
-      """WITH w AS (SELECT source,
-        |    CAST(sum(len(string_split_regex(trim(lower(text)), '\s+')))
-        |      AS BIGINT) AS w
-        |  FROM documents GROUP BY source),
-        |t AS (SELECT sum(w) AS t FROM w),
-        |base AS (SELECT source, w.w, t.t,
-        |    (w.w * 10000) // t.t AS fl, (w.w * 10000) % t.t AS rem
-        |  FROM w CROSS JOIN t),
-        |k AS (SELECT 10000 - sum(fl) AS k FROM base),
-        |r AS (SELECT *, row_number() OVER (ORDER BY rem DESC, source)
-        |    AS rk FROM base)
-        |SELECT source, CAST(w AS BIGINT) AS w,
-        |  CAST(fl + CASE WHEN rk <= k.k THEN 1 ELSE 0 END AS BIGINT)
-        |    AS alloc
-        |FROM r CROSS JOIN k""".stripMargin,
-
-    // q236: per-band-count pair CTEs generated from the one lane chain.
-    "q236_lsh_band_sweep" -> {
-      val arms = Seq(2, 4, 8).map { b =>
-        val r = 16 / b
-        s"""banded$b AS (
-           |  SELECT doc_id, CAST(lane // $r AS BIGINT) AS band,
-           |         md5(string_agg(h, '|' ORDER BY lane)) AS bh
-           |  FROM minh GROUP BY doc_id, lane // $r),
-           |counted$b AS (SELECT *, count(*) OVER (PARTITION BY band, bh)
-           |    AS bucket_n FROM banded$b),
-           |pruned$b AS (SELECT doc_id, band, bh FROM counted$b
-           |  WHERE bucket_n <= 1000 AND bucket_n > 1),
-           |pairs$b AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM pruned$b a JOIN pruned$b b
-           |    ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
-           |hit$b AS (SELECT 1 FROM pairs$b JOIN truth
-           |  ON id_a = d1 AND id_b = d2)""".stripMargin
-      }.mkString(",\n")
-      val rows = Seq(2, 4, 8).map { b =>
-        s"""SELECT CAST($b AS BIGINT) AS bands,
-           |  CAST((SELECT count(*) FROM pairs$b) AS BIGINT) AS n_cand,
-           |  CAST((SELECT count(*) FROM truth) AS BIGINT) AS n_true,
-           |  CAST((SELECT count(*) FROM hit$b) AS BIGINT) AS n_hit,
-           |  CASE WHEN (SELECT count(*) FROM truth) > 0 THEN
-           |    CAST(((SELECT count(*) FROM hit$b) * 2000000 +
-           |      (SELECT count(*) FROM truth)) //
-           |      ((SELECT count(*) FROM truth) * 2) AS DOUBLE) / 1e6
-           |  END AS recall_r""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH ${minhashLaneCtesFor(" AND doc_id % 10 = 0")},
-         |shx AS (SELECT DISTINCT doc_id, s FROM sh),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM shx GROUP BY doc_id),
-         |inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS ni
-         |  FROM shx a JOIN shx b ON a.s = b.s AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |truth AS (SELECT d1, d2 FROM inter
-         |  JOIN sizes s1 ON d1 = s1.doc_id
-         |  JOIN sizes s2 ON d2 = s2.doc_id
-         |  WHERE ni * 2 >= s1.n + s2.n - ni),
-         |$arms
-         |$rows""".stripMargin
-    },
-
-    // q235: subset-filtered minhash pair CTEs + exact distinct-shingle
-    // Jaccard ground truth, integer-threshold gated.
-    "q235_lsh_quality" ->
-      s"""WITH ${minhashPairCtesFor(" AND doc_id % 10 = 0")},
-         |pairs AS ($minhashPairSelect),
-         |shx AS (SELECT DISTINCT doc_id, s FROM sh),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM shx GROUP BY doc_id),
-         |inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS ni
-         |  FROM shx a JOIN shx b ON a.s = b.s AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |truth AS (SELECT d1, d2 FROM inter
-         |  JOIN sizes s1 ON d1 = s1.doc_id
-         |  JOIN sizes s2 ON d2 = s2.doc_id
-         |  WHERE ni * 2 >= s1.n + s2.n - ni),
-         |hit AS (SELECT 1 FROM pairs JOIN truth
-         |  ON id_a = d1 AND id_b = d2),
-         |c AS (SELECT CAST((SELECT count(*) FROM pairs) AS BIGINT)
-         |    AS n_cand,
-         |  CAST((SELECT count(*) FROM truth) AS BIGINT) AS n_true,
-         |  CAST((SELECT count(*) FROM hit) AS BIGINT) AS n_hit)
-         |SELECT n_cand, n_true, n_hit,
-         |  CASE WHEN n_cand > 0 THEN
-         |    CAST((n_hit * 2000000 + n_cand) // (n_cand * 2) AS DOUBLE)
-         |      / 1e6 END AS precision_r,
-         |  CASE WHEN n_true > 0 THEN
-         |    CAST((n_hit * 2000000 + n_true) // (n_true * 2) AS DOUBLE)
-         |      / 1e6 END AS recall_r
-         |FROM c""".stripMargin,
-
-    // q234: the q219 chunk CTEs with positions, diagonal runs in SQL.
-    "q234_repeated_chunk_runs" -> {
-      val terms = Corpus.cdcPows(8).zipWithIndex
-        .map { case (p, k) => s"codes[i - $k] * $p" }.mkString(" + ")
-      s"""WITH d AS (SELECT doc_id, text FROM documents
-         |  WHERE length(trim(text)) > 0),
-         |c AS (SELECT doc_id, text,
-         |  list_transform(range(1, length(text) + 1),
-         |    i -> CAST(ascii(substr(text, i, 1)) AS BIGINT)) AS codes
-         |  FROM d),
-         |b AS (SELECT doc_id, text,
-         |  list_concat(list_filter(range(8, length(text)),
-         |    i -> ($terms) % 64 = 0), [length(text)]) AS bnd
-         |  FROM c),
-         |ch AS (SELECT doc_id, unnest(list_transform(range(1, len(bnd) + 1),
-         |    j -> {'j': j, 'c': substr(text,
-         |      CASE WHEN j = 1 THEN 1 ELSE bnd[j - 1] + 1 END,
-         |      bnd[j] - CASE WHEN j = 1 THEN 0 ELSE bnd[j - 1] END)}))
-         |    AS u FROM b),
-         |h AS (SELECT doc_id, CAST(u.j AS BIGINT) AS j, md5(u.c) AS ch
-         |  FROM ch),
-         |capped AS (SELECT ch FROM h GROUP BY ch
-         |  HAVING count(*) <= 20 AND count(DISTINCT doc_id) >= 2),
-         |p AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
-         |    a.j AS j1, b.j AS j2
-         |  FROM h a JOIN capped USING (ch) JOIN h b ON a.ch = b.ch
-         |  WHERE a.doc_id < b.doc_id),
-         |r AS (SELECT d1, d2, j1 - j2 AS diag, j1,
-         |    row_number() OVER (PARTITION BY d1, d2, j1 - j2
-         |      ORDER BY j1) AS rn
-         |  FROM p),
-         |segs AS (SELECT d1, d2, count(*) AS len
-         |  FROM r GROUP BY d1, d2, diag, j1 - rn),
-         |runs AS (SELECT d1, d2, max(len) AS max_run
-         |  FROM segs GROUP BY d1, d2),
-         |sh AS (SELECT d1, d2, count(DISTINCT j1) AS n_shared
-         |  FROM p GROUP BY d1, d2)
-         |SELECT CAST(d1 AS BIGINT) AS d1, CAST(d2 AS BIGINT) AS d2,
-         |  CAST(max_run AS BIGINT) AS max_run,
-         |  CAST(n_shared AS BIGINT) AS n_shared
-         |FROM runs JOIN sh USING (d1, d2) WHERE max_run >= 2""".stripMargin
-    },
-
-    // q233: DuckDB jaro_winkler + recursive-CTE closure — the full chain
-    // independently derived.
-    "q233_golden_record" ->
-      """WITH RECURSIVE p AS (SELECT p_partkey, p_name,
-        |    string_split(p_name, ' ')[1] AS blk
-        |  FROM part WHERE p_partkey % 4 = 0),
-        |pr AS (SELECT a.p_partkey AS id_a, b.p_partkey AS id_b
-        |  FROM p a JOIN p b ON a.blk = b.blk
-        |    AND a.p_partkey < b.p_partkey
-        |  WHERE jaro_winkler_similarity(a.p_name, b.p_name) >= 0.9375),
-        |edges AS (SELECT id_a AS a, id_b AS b FROM pr
-        |          UNION SELECT id_b, id_a FROM pr),
-        |reach(src, dst) AS (
-        |  SELECT p_partkey, p_partkey FROM p
-        |  UNION
-        |  SELECT r.src, e.b FROM reach r JOIN edges e ON e.a = r.dst),
-        |clus AS (SELECT src AS p_partkey, min(dst) AS cluster
-        |         FROM reach GROUP BY src),
-        |m AS (SELECT c.cluster, p.p_name
-        |      FROM clus c JOIN p USING (p_partkey)),
-        |freq AS (SELECT cluster, p_name, count(*) AS cnt
-        |         FROM m GROUP BY 1, 2),
-        |g AS (SELECT cluster, p_name AS golden_name FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY cluster
-        |      ORDER BY cnt DESC, p_name) AS rk FROM freq) WHERE rk = 1)
-        |SELECT CAST(m.cluster AS BIGINT) AS cluster, g.golden_name,
-        |  CAST(count(*) AS BIGINT) AS n_members,
-        |  CAST(count(DISTINCT m.p_name) AS BIGINT) AS n_names
-        |FROM m JOIN g USING (cluster)
-        |GROUP BY m.cluster, g.golden_name""".stripMargin,
-
-    // q232: generated from polyVerts — identical half-plane constants.
-    "q232_point_in_polygon" -> {
-      val cond = polyEdges.map { case ((x1, y1), (x2, y2)) =>
-        s"(${x2 - x1}) * (lat - (${y1})) - (${y2 - y1}) * (lon - (${x1})) >= 0"
-      }.mkString(" AND ")
-      s"""WITH p AS (SELECT c_custkey,
-         |  CAST((c_custkey * 37) % 17000 AS DOUBLE) / 100 - 85 AS lat,
-         |  CAST((c_custkey * 91) % 35000 AS DOUBLE) / 100 - 175 AS lon
-         | FROM customer)
-         |SELECT CAST(c_custkey % 10 AS BIGINT) AS grp,
-         |  CAST(count(*) AS BIGINT) AS n,
-         |  CAST(sum(CASE WHEN $cond THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_inside,
-         |  CAST((sum(CASE WHEN $cond THEN 1 ELSE 0 END) * 2000000
-         |      + count(*)) // (count(*) * 2) AS DOUBLE) / 1e6
-         |    AS inside_share_r
-         |FROM p GROUP BY 1""".stripMargin
-    },
-
-    // q231: the DIRECT aggregate over surviving rows — equality proves the
-    // negative-delta retraction algebra.
-    "q231_agg_retraction" ->
-      """SELECT l_returnflag,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(round(l_quantity * 100, 0) AS BIGINT)) / 100.0
-        |    AS DOUBLE) AS sum_qty,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_price
-        |FROM lineitem WHERE l_linenumber <> 7
-        |GROUP BY l_returnflag""".stripMargin,
-
-    // q230: matches + watermark-closed unmatched views, independently
-    // derived in batch SQL. A view can emit null only when its whole
-    // 30-min match band sits behind the final watermark (max ts − 2h).
-    "q230_streaming_outer_join" ->
-      """WITH wm AS (SELECT max(ts) - INTERVAL 2 HOUR AS wm FROM events),
-        |v AS (SELECT event_id AS v_event_id, user_id, ts AS vts
-        |      FROM events WHERE event_type = 'view'),
-        |c AS (SELECT event_id AS c_event_id, user_id, ts AS cts
-        |      FROM events WHERE event_type = 'purchase'),
-        |m AS (SELECT v.user_id, v_event_id, c_event_id,
-        |    epoch_us(c.cts) - epoch_us(v.vts) AS delta_us
-        |  FROM v JOIN c ON v.user_id = c.user_id
-        |    AND c.cts >= v.vts AND c.cts <= v.vts + INTERVAL 30 MINUTE),
-        |un AS (SELECT v.user_id, v.v_event_id,
-        |    CAST(NULL AS BIGINT) AS c_event_id,
-        |    CAST(NULL AS BIGINT) AS delta_us
-        |  FROM v CROSS JOIN wm
-        |  WHERE v.vts < wm.wm - INTERVAL 150 MINUTE
-        |    AND NOT EXISTS (SELECT 1 FROM c
-        |      WHERE c.user_id = v.user_id
-        |        AND c.cts >= v.vts AND c.cts <= v.vts + INTERVAL 30 MINUTE))
-        |SELECT * FROM m UNION ALL SELECT * FROM un""".stripMargin,
-
-    // q229: identical exact-rank weighted thresholds.
-    "q229_weighted_percentiles" ->
-      """WITH li AS (SELECT
-        |    CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS c,
-        |    CAST(l_quantity AS BIGINT) AS w
-        |  FROM lineitem),
-        |b AS (SELECT c, sum(w) AS wc FROM li GROUP BY c),
-        |cum AS (SELECT c, sum(wc) OVER (ORDER BY c) AS cw,
-        |        sum(wc) OVER () AS tw FROM b)
-        |SELECT CAST(max(tw) AS BIGINT) AS total_w,
-        |  CAST(min(CASE WHEN cw * 100 >= tw * 25 THEN c END) AS DOUBLE)
-        |    / 100 AS p25,
-        |  CAST(min(CASE WHEN cw * 100 >= tw * 50 THEN c END) AS DOUBLE)
-        |    / 100 AS median_w,
-        |  CAST(min(CASE WHEN cw * 100 >= tw * 75 THEN c END) AS DOUBLE)
-        |    / 100 AS p75
-        |FROM cum""".stripMargin,
-
-    // q228: arg_max over the unnested shard list — same md5 keys.
-    "q228_rendezvous_shards" ->
-      """WITH x AS (SELECT doc_id, u.sid,
-        |    md5(CAST(doc_id AS VARCHAR) || '#' || CAST(u.sid AS VARCHAR))
-        |      AS h
-        |  FROM documents, LATERAL unnest(range(0, 9)) AS u(sid)),
-        |a8 AS (SELECT doc_id, arg_max(sid, h) AS old_shard
-        |       FROM x WHERE sid < 8 GROUP BY doc_id),
-        |a9 AS (SELECT doc_id, arg_max(sid, h) AS new_shard
-        |       FROM x GROUP BY doc_id)
-        |SELECT CAST(old_shard AS BIGINT) AS old_shard,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(CASE WHEN old_shard <> new_shard THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_moved,
-        |  CAST((sum(CASE WHEN old_shard <> new_shard THEN 1 ELSE 0 END)
-        |      * 2000000 + count(*)) // (count(*) * 2) AS DOUBLE) / 1e6
-        |    AS moved_share_r
-        |FROM a8 JOIN a9 USING (doc_id) GROUP BY old_shard""".stripMargin,
-
-    // q227: DuckDB's built-in jaro_winkler_similarity IS the oracle for
-    // the native expression (fixture-matched exactly; 6dp rounding on the
-    // block extrema absorbs any last-ulp formulation drift).
-    "q227_jw_profile" ->
-      """WITH p AS (SELECT p_partkey, p_name,
-        |    string_split(p_name, ' ')[1] AS blk
-        |  FROM part WHERE p_partkey % 4 = 0),
-        |pr AS (SELECT a.blk,
-        |    jaro_winkler_similarity(a.p_name, b.p_name) AS jw
-        |  FROM p a JOIN p b ON a.blk = b.blk
-        |    AND a.p_partkey < b.p_partkey)
-        |SELECT blk, CAST(count(*) AS BIGINT) AS n_pairs,
-        |  round(min(jw), 6) AS min_jw_r, round(max(jw), 6) AS max_jw_r
-        |FROM pr GROUP BY blk""".stripMargin,
-
-    // q225: the UNSALTED join — an independent derivation; equality proves
-    // the salting transformation preserves results.
-    "q225_salted_join" ->
-      """WITH f AS (SELECT
-        |    CASE WHEN l_orderkey % 10 < 5 THEN 1 ELSE l_partkey END AS k,
-        |    l_extendedprice
-        |  FROM lineitem)
-        |SELECT p.p_brand,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(f.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS revenue
-        |FROM f JOIN part p ON p.p_partkey = f.k
-        |GROUP BY p.p_brand""".stripMargin,
-
-    // q226: same md5 bucket, same ln operand order.
-    "q226_linear_counting" ->
-      """WITH li AS (SELECT l_orderkey,
-        |    ('0x' || substring(md5(CAST(l_partkey AS VARCHAR)), 1, 15))
-        |      ::BIGINT % 4096 AS b
-        |  FROM lineitem),
-        |a AS (SELECT DISTINCT b FROM li WHERE l_orderkey % 2 = 0),
-        |bb AS (SELECT DISTINCT b FROM li WHERE l_orderkey % 2 = 1),
-        |m AS (SELECT count(*) AS occ FROM
-        |  (SELECT b FROM a UNION SELECT b FROM bb)),
-        |dd AS (SELECT count(DISTINCT b) AS occ FROM li)
-        |SELECT 'merged' AS method, CAST(occ AS BIGINT) AS occupied,
-        |  round(-4096 * ln((4096 - occ) / 4096.0), 6) AS est_r FROM m
-        |UNION ALL
-        |SELECT 'direct', CAST(occ AS BIGINT),
-        |  round(-4096 * ln((4096 - occ) / 4096.0), 6) FROM dd""".stripMargin,
-
-    // q224: q208's fingerprint SQL with the single 'xml' format row.
-    "q224_xml_roundtrip" ->
-      """WITH h AS (SELECT md5(concat_ws(chr(1),
-        |    coalesce(CAST(l_orderkey AS VARCHAR), chr(2)),
-        |    coalesce(CAST(l_partkey AS VARCHAR), chr(2)),
-        |    coalesce(CAST(l_returnflag AS VARCHAR), chr(2)),
-        |    coalesce(CAST(l_linestatus AS VARCHAR), chr(2)),
-        |    coalesce(CAST(CAST(l_quantity AS BIGINT) AS VARCHAR), chr(2))))
-        |    AS m
-        |  FROM lineitem WHERE l_orderkey % 10 = 0)
-        |SELECT 'xml' AS format, CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(CAST(sum(('0x' || substring(m, 1, 15))::BIGINT) AS HUGEINT)
-        |    % 2305843009213693952 AS BIGINT) AS lane_a,
-        |  CAST(CAST(sum(('0x' || substring(m, 17, 15))::BIGINT) AS HUGEINT)
-        |    % 2305843009213693952 AS BIGINT) AS lane_b
-        |FROM h""".stripMargin,
-
-    // GENERATED from dqRules — one scan per rule is fine for the oracle;
-    // the engine side proves the one-pass shape.
-    "q223_dq_rules" -> dqRules.map { case (name, pred, sev) =>
-      s"""SELECT '$name' AS rule, '$sev' AS severity,
-         |  CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(sum(CASE WHEN NOT coalesce(($pred), FALSE) THEN 1 ELSE 0
-         |    END) AS BIGINT) AS n_viol,
-         |  CAST((sum(CASE WHEN NOT coalesce(($pred), FALSE) THEN 1 ELSE 0
-         |      END) * 2000000 + count(*)) // (count(*) * 2) AS DOUBLE) / 1e6
-         |    AS viol_rate_r
-         |FROM lineitem""".stripMargin
-    }.mkString("\nUNION ALL\n"),
-
-    // Same exact-integer rolling hash (constants from Corpus.cdcPows);
-    // DuckDB range() is end-exclusive = Spark's guarded sequence(w, n-1).
-    "q219_cdc_chunks" -> {
-      val terms = Corpus.cdcPows(8).zipWithIndex
-        .map { case (p, k) => s"codes[i - $k] * $p" }.mkString(" + ")
-      s"""WITH d AS (SELECT doc_id, text FROM documents
-         |  WHERE length(trim(text)) > 0),
-         |c AS (SELECT doc_id, text,
-         |  list_transform(range(1, length(text) + 1),
-         |    i -> CAST(ascii(substr(text, i, 1)) AS BIGINT)) AS codes
-         |  FROM d),
-         |b AS (SELECT doc_id, text,
-         |  list_concat(list_filter(range(8, length(text)),
-         |    i -> ($terms) % 64 = 0), [length(text)]) AS bnd
-         |  FROM c),
-         |ch AS (SELECT doc_id, unnest(list_transform(range(1, len(bnd) + 1),
-         |    j -> substr(text,
-         |      CASE WHEN j = 1 THEN 1 ELSE bnd[j - 1] + 1 END,
-         |      bnd[j] - CASE WHEN j = 1 THEN 0 ELSE bnd[j - 1] END)))
-         |    AS chunk FROM b),
-         |h AS (SELECT doc_id, md5(chunk) AS ch, length(chunk) AS clen
-         |  FROM ch),
-         |nd AS (SELECT ch, count(DISTINCT doc_id) AS nd FROM h GROUP BY ch)
-         |SELECT h.doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
-         |  CAST(sum(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_shared,
-         |  CAST(sum(CASE WHEN nd >= 2 THEN clen ELSE 0 END) AS BIGINT)
-         |    AS shared_len
-         |FROM h JOIN nd USING (ch) GROUP BY h.doc_id""".stripMargin
-    },
-
-    // q220: lattice-LSH sims (q94's shared CTEs) + recursive-CTE closure —
-    // independent of the engine's union-find/label-propagation path.
-    "q220_semantic_dedup" ->
-      s"""WITH RECURSIVE $latticeSimCtes,
-         |ne AS (SELECT id_a, id_b FROM sims WHERE sim >= 0.35),
-         |edges AS (SELECT id_a AS a, id_b AS b FROM ne
-         |          UNION SELECT id_b, id_a FROM ne),
-         |reach(src, dst) AS (
-         |  SELECT vec_id, vec_id FROM embeddings
-         |  UNION
-         |  SELECT r.src, e.b FROM reach r JOIN edges e ON e.a = r.dst),
-         |clus AS (SELECT src AS vec_id, min(dst) AS cluster
-         |         FROM reach GROUP BY src),
-         |sz AS (SELECT cluster, count(*) AS cluster_size
-         |       FROM clus GROUP BY cluster)
-         |SELECT CAST(c.vec_id AS BIGINT) AS vec_id,
-         |  CAST(c.cluster AS BIGINT) AS cluster,
-         |  c.vec_id = c.cluster AS is_keeper,
-         |  CAST(sz.cluster_size AS BIGINT) AS cluster_size
-         |FROM clus c JOIN sz USING (cluster)""".stripMargin,
-
-    // q221: identical ladder via GROUPING SETS; grouping() flags (not
-    // grouping_id bit order, which differs per engine) derive the level.
-    "q221_k_anonymity" ->
-      """WITH base AS (SELECT CAST(c_nationkey AS BIGINT) AS nation,
-        |  ((CAST(round(c_acctbal * 100, 0) AS BIGINT) + 100000 - 1) * 10)
-        |    // 1099999 AS decile
-        | FROM customer),
-        |b2 AS (SELECT nation, decile, decile // 2 AS quintile FROM base),
-        |gs AS (SELECT nation, decile, quintile,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    grouping(nation) AS gn, grouping(decile) AS gd,
-        |    grouping(quintile) AS gq
-        |  FROM b2 GROUP BY GROUPING SETS ((nation, decile),
-        |    (nation, quintile), (nation), ())),
-        |lv AS (SELECT *, CAST(CASE WHEN gn = 1 THEN 3 WHEN gd = 0 THEN 0
-        |    WHEN gq = 0 THEN 1 ELSE 2 END AS BIGINT) AS level FROM gs),
-        |ch AS (SELECT min(level) AS chosen FROM (
-        |  SELECT level, min(n) AS min_n FROM lv GROUP BY level)
-        |  WHERE min_n >= 25)
-        |SELECT level, coalesce(nation, -1) AS nation,
-        |  coalesce(decile, -1) AS decile,
-        |  coalesce(quintile, -1) AS quintile, n
-        |FROM lv CROSS JOIN ch WHERE level = chosen""".stripMargin,
-
-    // q222: only the last-48h tail's windows closed by the final watermark
-    // (max tail ts − 1h) may appear; every earlier event was late in its
-    // micro-batch and dropped. Window emission boundary: end <= watermark.
-    "q222_watermark_late_drop" ->
-      """WITH mx AS (SELECT max(ts) AS mx FROM events),
-        |a AS (SELECT ts, event_type FROM events CROSS JOIN mx
-        |      WHERE ts >= mx - INTERVAL 48 HOUR),
-        |wm AS (SELECT max(ts) - INTERVAL 1 HOUR AS wm FROM a),
-        |w AS (SELECT date_trunc('hour', ts) AS window_start, event_type,
-        |        count(*) AS n
-        |      FROM a GROUP BY 1, 2)
-        |SELECT window_start, event_type, CAST(n AS BIGINT) AS n
-        |FROM w CROSS JOIN wm
-        |WHERE window_start + INTERVAL 1 HOUR <= wm.wm""".stripMargin,
-
-    "q215_stl_decompose" ->
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS day, count(*) AS n
-        |  FROM events GROUP BY 1),
-        |w AS (SELECT day, CAST(isodow(day) AS BIGINT) AS dow, n,
-        |  sum(n) OVER (ORDER BY day
-        |    ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS trend_sum,
-        |  count(*) OVER (ORDER BY day
-        |    ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS trend_cnt,
-        |  sum(n) OVER (PARTITION BY isodow(day)) AS dow_sum,
-        |  count(*) OVER (PARTITION BY isodow(day)) AS dow_cnt,
-        |  sum(n) OVER () AS tot_sum,
-        |  count(*) OVER () AS tot_cnt
-        |  FROM daily)
-        |SELECT day, dow, CAST(n AS BIGINT) AS n,
-        |  round(CAST(trend_sum AS DOUBLE) / CAST(trend_cnt AS DOUBLE), 6)
-        |    AS trend_r,
-        |  round(CAST(dow_sum AS DOUBLE) / CAST(dow_cnt AS DOUBLE) -
-        |    CAST(tot_sum AS DOUBLE) / CAST(tot_cnt AS DOUBLE), 6)
-        |    AS seasonal_r,
-        |  round(CAST(n AS DOUBLE) -
-        |    CAST(trend_sum AS DOUBLE) / CAST(trend_cnt AS DOUBLE) -
-        |    (CAST(dow_sum AS DOUBLE) / CAST(dow_cnt AS DOUBLE) -
-        |     CAST(tot_sum AS DOUBLE) / CAST(tot_cnt AS DOUBLE)), 6)
-        |    AS residual_r
-        |FROM w""".stripMargin,
-
-    "q214_dim_covariance" ->
-      """WITH u AS (
-        |  SELECT vec_id, unnest(range(0, len(embedding))) AS j,
-        |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000.0)
-        |      AS BIGINT) AS xm
-        |  FROM embeddings)
-        |SELECT CAST(a.j AS BIGINT) AS j1, CAST(b.j AS BIGINT) AS j2,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(a.xm) AS BIGINT) AS sum1_micro,
-        |  CAST(sum(b.xm) AS BIGINT) AS sum2_micro,
-        |  CAST(sum(a.xm * b.xm) AS BIGINT) AS sum12_micro2
-        |FROM u a JOIN u b ON a.vec_id = b.vec_id AND a.j < b.j
-        |GROUP BY a.j, b.j""".stripMargin,
-
-    // fold = first 8 md5 hex chars of the cluster label mod 5 (both
-    // engines parse the hex to the same 32-bit non-negative int)
-    "q213_kfold_split" ->
-      s"""WITH RECURSIVE $minhashPairCtes,
-         |pairs AS ($minhashPairSelect),
-         |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-         |          UNION SELECT id_b, id_a FROM pairs),
-         |reach(src, dst) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT r.src, e.b FROM reach r JOIN edges e ON e.a = r.dst),
-         |clus AS (SELECT src AS doc_id, min(dst) AS cluster
-         |         FROM reach GROUP BY src)
-         |SELECT doc_id, CAST(cluster AS BIGINT) AS cluster,
-         |  CAST(('0x' || substring(md5(CAST(CAST(cluster AS BIGINT) AS VARCHAR)), 1, 8))::BIGINT
-         |    % 5 AS BIGINT) AS fold
-         |FROM clus""".stripMargin,
-
-    "q212_funnel_within" ->
-      """WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
-        |  WHERE event_type = 'view' GROUP BY user_id),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
-        |  JOIN s1 ON e.user_id = s1.user_id AND e.ts > s1.t1
-        |    AND epoch_us(e.ts) - epoch_us(s1.t1) <= 1800000000
-        |  WHERE e.event_type = 'click' GROUP BY e.user_id),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
-        |  JOIN s2 ON e.user_id = s2.user_id AND e.ts > s2.t2
-        |    AND epoch_us(e.ts) - epoch_us(s2.t2) <= 1800000000
-        |  WHERE e.event_type = 'purchase' GROUP BY e.user_id)
-        |SELECT s1.user_id, s1.t1, s2.t2, s3.t3,
-        |  CAST(1 + (CASE WHEN s2.t2 IS NULL THEN 0 ELSE 1 END) +
-        |    (CASE WHEN s3.t3 IS NULL THEN 0 ELSE 1 END) AS BIGINT)
-        |    AS stages_reached
-        |FROM s1
-        |LEFT JOIN s2 ON s2.user_id = s1.user_id
-        |LEFT JOIN s3 ON s3.user_id = s1.user_id""".stripMargin,
-
-    "q211_frequency_spectrum" ->
-      """WITH base AS (
-        |  SELECT string_split_regex(trim(lower(text)), '\s+') AS toks
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |g0 AS (SELECT toks, unnest(range(0, len(toks) - 2)) AS s
-        |       FROM base WHERE len(toks) >= 3),
-        |tf AS (
-        |  SELECT array_to_string(list_slice(toks, s + 1, s + 3), ' ')
-        |      AS term, count(*) AS r
-        |  FROM g0 GROUP BY 1),
-        |spec AS (
-        |  SELECT CASE WHEN r <= 10 THEN r ELSE -1 END AS r_bucket,
-        |    count(*) AS n_types, sum(r) AS token_mass
-        |  FROM tf GROUP BY 1)
-        |SELECT CAST(s.r_bucket AS BIGINT) AS r_bucket,
-        |  CAST(s.n_types AS BIGINT) AS n_types,
-        |  CAST(s.token_mass AS BIGINT) AS token_mass,
-        |  CASE WHEN s.r_bucket BETWEEN 1 AND 9 AND n2.n_types IS NOT NULL
-        |    THEN round(CAST(s.r_bucket + 1 AS DOUBLE) *
-        |      CAST(n2.n_types AS DOUBLE) / CAST(s.n_types AS DOUBLE), 6)
-        |  END AS gt_r
-        |FROM spec s LEFT JOIN spec n2 ON n2.r_bucket = s.r_bucket + 1""".stripMargin,
-
-    "q210_curation_waterfall" ->
-      """WITH raw AS (SELECT doc_id, text,
-        |    CAST(len(string_split_regex(trim(lower(text)), '\s+'))
-        |      AS BIGINT) AS n_tok
-        |  FROM documents),
-        |s1 AS (SELECT * FROM raw WHERE length(trim(text)) > 0),
-        |s2 AS (SELECT * FROM s1 WHERE n_tok >= 10),
-        |s3 AS (SELECT doc_id, text, n_tok FROM (
-        |    SELECT *, row_number() OVER (
-        |      PARTITION BY md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
-        |      ORDER BY doc_id) AS rn FROM s2) WHERE rn = 1),
-        |base AS (SELECT doc_id,
-        |    string_split_regex(trim(lower(text)), '\s+') AS toks FROM s3),
-        |tk AS (SELECT doc_id, unnest(toks) AS tok,
-        |         unnest(range(0, len(toks))) AS i FROM base),
-        |gr0 AS (SELECT doc_id, unnest(range(0, len(toks) - 4)) AS s
-        |        FROM base WHERE len(toks) >= 5),
-        |grams AS (SELECT g0.doc_id, g0.s,
-        |    array_to_string(list_slice(b.toks, g0.s + 1, g0.s + 5), ' ') AS g
-        |  FROM gr0 g0 JOIN base b USING (doc_id)),
-        |hot AS (SELECT g FROM grams GROUP BY g
-        |        HAVING count(DISTINCT doc_id) >= 2),
-        |hs AS (SELECT doc_id, s FROM grams JOIN hot USING (g)),
-        |covered AS (SELECT DISTINCT t.doc_id, t.i
-        |  FROM tk t JOIN hs h ON h.doc_id = t.doc_id
-        |    AND t.i BETWEEN h.s AND h.s + 4),
-        |kept AS (SELECT t.doc_id, count(*) AS n_kept
-        |  FROM tk t LEFT JOIN covered c ON c.doc_id = t.doc_id AND c.i = t.i
-        |  WHERE c.i IS NULL GROUP BY t.doc_id),
-        |s4 AS (SELECT doc_id, n_kept AS n_tok FROM kept WHERE n_kept >= 10),
-        |st AS (
-        |  SELECT 0 AS stage, 'raw' AS name, count(*) AS n_docs,
-        |    coalesce(sum(n_tok), 0) AS n_tokens FROM raw
-        |  UNION ALL SELECT 1, 'non_empty', count(*),
-        |    coalesce(sum(n_tok), 0) FROM s1
-        |  UNION ALL SELECT 2, 'min_tokens', count(*),
-        |    coalesce(sum(n_tok), 0) FROM s2
-        |  UNION ALL SELECT 3, 'exact_keeper', count(*),
-        |    coalesce(sum(n_tok), 0) FROM s3
-        |  UNION ALL SELECT 4, 'span_clean', count(*),
-        |    coalesce(sum(n_tok), 0) FROM s4)
-        |SELECT CAST(stage AS BIGINT) AS stage, name,
-        |  CAST(n_docs AS BIGINT) AS n_docs,
-        |  CAST(n_tokens AS BIGINT) AS n_tokens
-        |FROM st""".stripMargin,
-
-    "q209_lift_table" ->
-      """WITH ev AS (SELECT event_id, value AS score,
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS label
-        |  FROM events),
-        |d AS (SELECT *, ntile(10) OVER (ORDER BY score DESC, event_id)
-        |    AS decile FROM ev),
-        |per AS (SELECT decile, count(*) AS n, sum(label) AS n_pos
-        |  FROM d GROUP BY decile),
-        |tot AS (SELECT sum(n) AS nn, sum(n_pos) AS np FROM per),
-        |c AS (SELECT p.*, t.nn, t.np,
-        |    sum(n) OVER (ORDER BY decile
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_n,
-        |    sum(n_pos) OVER (ORDER BY decile
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_pos
-        |  FROM per p CROSS JOIN tot t)
-        |SELECT CAST(decile AS BIGINT) AS decile, CAST(n AS BIGINT) AS n,
-        |  CAST(n_pos AS BIGINT) AS n_pos,
-        |  round(CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE), 6) AS rate_r,
-        |  round(CAST(n_pos * nn AS DOUBLE) / CAST(n * np AS DOUBLE), 6)
-        |    AS lift_r,
-        |  round(CAST(cum_pos * nn AS DOUBLE) / CAST(cum_n * np AS DOUBLE), 6)
-        |    AS cum_lift_r
-        |FROM c""".stripMargin,
-
-    // One fingerprint of the SOURCE rows, replicated under each format
-    // label — equality with the Spark side proves each round-trip
-    // lossless.
-    "q208_format_parity" ->
-      """WITH h AS (SELECT md5(concat_ws(chr(1),
-        |    coalesce(CAST(l_orderkey AS VARCHAR), chr(2)),
-        |    coalesce(CAST(l_partkey AS VARCHAR), chr(2)),
-        |    coalesce(CAST(l_returnflag AS VARCHAR), chr(2)),
-        |    coalesce(CAST(l_linestatus AS VARCHAR), chr(2)),
-        |    coalesce(CAST(CAST(l_quantity AS BIGINT) AS VARCHAR), chr(2))))
-        |    AS m
-        |  FROM lineitem),
-        |fp AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(CAST(sum(('0x' || substring(m, 1, 15))::BIGINT) AS HUGEINT)
-        |    % 2305843009213693952 AS BIGINT) AS lane_a,
-        |  CAST(CAST(sum(('0x' || substring(m, 17, 15))::BIGINT) AS HUGEINT)
-        |    % 2305843009213693952 AS BIGINT) AS lane_b
-        |FROM h)
-        |SELECT f.format, fp.n_rows, fp.lane_a, fp.lane_b
-        |FROM (VALUES ('parquet'), ('csv'), ('json'), ('orc')) f(format)
-        |CROSS JOIN fp""".stripMargin,
-
-    "q207_mixture_draw" ->
-      s"""WITH $waterfillCtes,
-         |docs AS (SELECT source, doc_id,
-         |    CAST(len(string_split_regex(trim(lower(text)), '\\s+'))
-         |      AS BIGINT) AS n_tok,
-         |    md5('bud|' || CAST(doc_id AS VARCHAR)) AS skey
-         |  FROM documents),
-         |adm AS (SELECT d.source, d.n_tok, a.alloc,
-         |    sum(d.n_tok) OVER (PARTITION BY d.source ORDER BY d.skey
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM docs d JOIN wf_alloc a USING (source))
-         |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(n_tok) AS BIGINT) AS tokens_drawn
-         |FROM adm WHERE cum - n_tok < alloc GROUP BY source""".stripMargin,
-
-    "q199_ranking_quality" -> {
-      val dcgSql = ndcgConsts.zipWithIndex.map { case (c, i) =>
-        s"CAST(max(CASE WHEN pos = ${i + 1} THEN rel END) AS DOUBLE) * $c"
-      }.mkString(" + ")
-      s"""WITH u AS (
-         |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-         |         unnest(range(0, len(embedding))) AS j
-         |  FROM embeddings),
-         |m AS (SELECT vec_id, max(abs(x)) AS mx FROM u GROUP BY vec_id),
-         |qv AS (SELECT u.vec_id, j, x,
-         |    CAST(round(x * (127.0 / m.mx)) AS BIGINT) AS qx
-         |  FROM u JOIN m USING (vec_id)),
-         |nrm AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM u GROUP BY vec_id),
-         |pair AS (
-         |  SELECT a.vec_id AS qid, b.vec_id AS vec_id,
-         |    sum(a.x * b.x) AS dp, CAST(sum(a.qx * b.qx) AS BIGINT) AS qdot
-         |  FROM qv a JOIN qv b USING (j) WHERE a.vec_id < 10
-         |  GROUP BY a.vec_id, b.vec_id),
-         |scored AS (
-         |  SELECT p.qid, p.vec_id, p.dp / (nq.nrm * nv.nrm) AS sim, p.qdot
-         |  FROM pair p
-         |  JOIN nrm nq ON nq.vec_id = p.qid
-         |  JOIN nrm nv ON nv.vec_id = p.vec_id),
-         |exact_top AS (
-         |  SELECT qid, vec_id FROM (SELECT qid, vec_id,
-         |    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS r
-         |    FROM scored) WHERE r <= 10),
-         |ranked AS (
-         |  SELECT s.qid, s.vec_id, s.pos,
-         |    CASE WHEN e.vec_id IS NULL THEN 0 ELSE 1 END AS rel
-         |  FROM (SELECT qid, vec_id,
-         |      row_number() OVER (PARTITION BY qid ORDER BY qdot DESC, vec_id) AS pos
-         |    FROM scored) s
-         |  LEFT JOIN exact_top e ON e.qid = s.qid AND e.vec_id = s.vec_id
-         |  WHERE s.pos <= 10)
-         |SELECT qid,
-         |  CAST(coalesce(min(CASE WHEN rel = 1 THEN pos END), 0) AS BIGINT)
-         |    AS first_rel_pos,
-         |  round(coalesce(max(CASE WHEN rel = 1
-         |    THEN 1.0 / CAST(pos AS DOUBLE) END), 0.0), 6) AS mrr,
-         |  round(($dcgSql) / ${ndcgConsts.sum}, 6) AS ndcg
-         |FROM ranked GROUP BY qid""".stripMargin
-    },
-
-    // q196's rewrite → >=10-surviving-tokens gate → q197's packing over
-    // the cleaned stream (token count = kept tokens).
-    "q200_curation_v2" ->
-      """WITH base AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |tk AS (SELECT doc_id, unnest(toks) AS tok,
-        |         unnest(range(0, len(toks))) AS i FROM base),
-        |gr0 AS (SELECT doc_id, unnest(range(0, len(toks) - 4)) AS s
-        |        FROM base WHERE len(toks) >= 5),
-        |grams AS (SELECT g0.doc_id, g0.s,
-        |    array_to_string(list_slice(b.toks, g0.s + 1, g0.s + 5), ' ') AS g
-        |  FROM gr0 g0 JOIN base b USING (doc_id)),
-        |hot AS (SELECT g FROM grams GROUP BY g
-        |        HAVING count(DISTINCT doc_id) >= 2),
-        |hs AS (SELECT doc_id, s FROM grams JOIN hot USING (g)),
-        |covered AS (SELECT DISTINCT t.doc_id, t.i
-        |  FROM tk t JOIN hs h ON h.doc_id = t.doc_id
-        |    AND t.i BETWEEN h.s AND h.s + 4),
-        |kept AS (SELECT t.doc_id, count(*) AS n_kept
-        |  FROM tk t LEFT JOIN covered c ON c.doc_id = t.doc_id AND c.i = t.i
-        |  WHERE c.i IS NULL GROUP BY t.doc_id),
-        |gated AS (SELECT d.source, k.doc_id, k.n_kept AS n_tokens
-        |  FROM kept k JOIN documents d USING (doc_id)
-        |  WHERE k.n_kept >= 10),
-        |o AS (SELECT source, doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-        |    CAST(coalesce(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-        |      AS start_off
-        |  FROM gated)
-        |SELECT source, doc_id, n_tokens, start_off,
-        |  CAST(start_off // 256 AS BIGINT) AS pack_first,
-        |  CAST((start_off + n_tokens - 1) // 256 AS BIGINT) AS pack_last,
-        |  CAST((start_off + n_tokens - 1) // 256 - start_off // 256 + 1
-        |    AS BIGINT) AS n_packs
-        |FROM o ORDER BY source, doc_id""".stripMargin,
-
-    // Same union+ordered-carry formulation as the Spark plan; per-column
-    // fills share one deterministic ordering (rts, pval tiebreak), so they
-    // pick the same matched row.
-    "q201_asof_directional" ->
-      """WITH l AS (SELECT user_id, ts, event_id, 1 AS is_left,
-        |    CAST(NULL AS TIMESTAMP) AS rts, CAST(NULL AS DOUBLE) AS pval
-        |  FROM events),
-        |r AS (SELECT user_id, ts, CAST(NULL AS BIGINT) AS event_id,
-        |    0 AS is_left, ts AS rts, value AS pval
-        |  FROM events WHERE event_type = 'purchase'),
-        |u AS (SELECT * FROM l UNION ALL SELECT * FROM r),
-        |f AS (SELECT *,
-        |  last_value(rts IGNORE NULLS) OVER
-        |    (PARTITION BY user_id ORDER BY ts, is_left, rts, pval
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS b_rts,
-        |  last_value(pval IGNORE NULLS) OVER
-        |    (PARTITION BY user_id ORDER BY ts, is_left, rts, pval
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS b_pval,
-        |  first_value(rts IGNORE NULLS) OVER
-        |    (PARTITION BY user_id ORDER BY ts, is_left DESC, rts, pval
-        |     ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS f_rts,
-        |  first_value(pval IGNORE NULLS) OVER
-        |    (PARTITION BY user_id ORDER BY ts, is_left DESC, rts, pval
-        |     ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS f_pval
-        |  FROM u),
-        |ch AS (SELECT *, CASE
-        |    WHEN b_rts IS NULL THEN f_rts
-        |    WHEN f_rts IS NULL THEN b_rts
-        |    WHEN epoch_us(ts) - epoch_us(b_rts)
-        |      <= epoch_us(f_rts) - epoch_us(ts) THEN b_rts ELSE f_rts
-        |  END AS m_rts, CASE
-        |    WHEN b_rts IS NULL THEN f_pval
-        |    WHEN f_rts IS NULL THEN b_pval
-        |    WHEN epoch_us(ts) - epoch_us(b_rts)
-        |      <= epoch_us(f_rts) - epoch_us(ts) THEN b_pval ELSE f_pval
-        |  END AS m_pval FROM f WHERE is_left = 1),
-        |tol AS (SELECT *, abs(epoch_us(ts) - epoch_us(m_rts))
-        |    <= 21600000000 AS ok FROM ch)
-        |SELECT event_id, user_id, ts,
-        |  CASE WHEN ok THEN m_rts END AS asof_ts,
-        |  CASE WHEN ok THEN m_pval END AS pval
-        |FROM tol""".stripMargin,
-
-    // Same deletion-neighborhood scheme: i = 0 keeps the string, i in
-    // 1..len deletes character i; neighborhoods intersect iff dist <= 1.
-    "q202_editdist_join" ->
-      """WITH base AS (SELECT c_custkey AS id, c_name AS s FROM customer),
-        |v0 AS (SELECT id, s, unnest(range(0, length(s) + 1)) AS i FROM base),
-        |var AS (SELECT DISTINCT id,
-        |    CASE WHEN i = 0 THEN s
-        |         ELSE substring(s, 1, CAST(i - 1 AS INT)) ||
-        |              substring(s, CAST(i + 1 AS INT),
-        |                CAST(length(s) - i AS INT)) END AS v
-        |  FROM v0),
-        |cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        |  FROM var a JOIN var b ON a.v = b.v AND a.id < b.id)
-        |SELECT c.id_a, c.id_b,
-        |  CAST(levenshtein(sa.s, sb.s) AS BIGINT) AS dist
-        |FROM cand c
-        |JOIN base sa ON sa.id = c.id_a
-        |JOIN base sb ON sb.id = c.id_b
-        |WHERE levenshtein(sa.s, sb.s) <= 1""".stripMargin,
-
-    // q245: q121's CTE chain up to the prefix slice, then the two-level
-    // hotness rollup (tok -> nd, nd -> n_toks) — pure integer counts.
-    "q245_prefix_hotness" ->
-      """WITH nrm AS (
-        |  SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |toks AS (
-        |  SELECT DISTINCT doc_id,
-        |    substring(norm || '       ', CAST(i AS INTEGER), 8) AS tok
-        |  FROM nrm,
-        |  LATERAL unnest(range(1, greatest(length(norm) - 7, 1) + 1)) AS u(i)),
-        |df AS (SELECT tok, count(*) AS dfreq FROM toks GROUP BY tok),
-        |ranked AS (
-        |  SELECT t.doc_id, t.tok,
-        |    row_number() OVER (PARTITION BY t.doc_id
-        |      ORDER BY d.dfreq, t.tok) AS rn,
-        |    count(*) OVER (PARTITION BY t.doc_id) AS n
-        |  FROM toks t JOIN df d USING (tok)),
-        |prefix0 AS (
-        |  SELECT doc_id, tok FROM ranked
-        |  WHERE rn <= n - ((n * 3 + 4) // 5) + 1),
-        |hot AS (SELECT tok, count(*) AS nd FROM prefix0 GROUP BY tok)
-        |SELECT CAST(nd AS BIGINT) AS nd, CAST(count(*) AS BIGINT) AS n_toks
-        |FROM hot GROUP BY nd""".stripMargin,
-
-    // q253: q245 over the deterministic doc_id % 4 = 0 sample — same CTE
-    // chain, sampled source relation.
-    "q253_prefix_hotness_sampled" ->
-      """WITH nrm AS (
-        |  SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm
-        |  FROM documents
-        |  WHERE length(trim(text)) > 0 AND doc_id % 4 = 0),
-        |toks AS (
-        |  SELECT DISTINCT doc_id,
-        |    substring(norm || '       ', CAST(i AS INTEGER), 8) AS tok
-        |  FROM nrm,
-        |  LATERAL unnest(range(1, greatest(length(norm) - 7, 1) + 1)) AS u(i)),
-        |df AS (SELECT tok, count(*) AS dfreq FROM toks GROUP BY tok),
-        |ranked AS (
-        |  SELECT t.doc_id, t.tok,
-        |    row_number() OVER (PARTITION BY t.doc_id
-        |      ORDER BY d.dfreq, t.tok) AS rn,
-        |    count(*) OVER (PARTITION BY t.doc_id) AS n
-        |  FROM toks t JOIN df d USING (tok)),
-        |prefix0 AS (
-        |  SELECT doc_id, tok FROM ranked
-        |  WHERE rn <= n - ((n * 3 + 4) // 5) + 1),
-        |hot AS (SELECT tok, count(*) AS nd FROM prefix0 GROUP BY tok)
-        |SELECT CAST(nd AS BIGINT) AS nd, CAST(count(*) AS BIGINT) AS n_toks
-        |FROM hot GROUP BY nd""".stripMargin,
-
-    // q254: the multi-table OR-construction chain — 2 tables × 4 lattice
-    // bits, DISTINCT pair dedup across tables, exact cosine verify. Plane
-    // stream offset tbl·4 + i keeps table 0 identical to q32's buckets.
-    "q254_ann_lsh_multitable" ->
-      s"""WITH $latticeSimMultiCtes
-         |SELECT id_a, id_b, round(sim, 6) AS sim_r
-         |FROM sims WHERE sim >= 0.1""".stripMargin,
-
-    // q256: multi-probe — q32's single lattice table, pairs at signature
-    // Hamming distance <= 1 (home bucket + every one-bit flip), identical
-    // exact verify. The SQL states the predicate declaratively; the Spark
-    // side reaches the same set through the home x probe bucket join.
-    "q256_ann_lsh_multiprobe" ->
-      s"""WITH $latticeSimProbeCtes
-         |SELECT id_a, id_b, round(sim, 6) AS sim_r
-         |FROM sims WHERE sim >= 0.1""".stripMargin,
-
-    // q246/q247: the variant serving contracts, SQL generated from the
-    // same SiteVariant tables the Spark pivot reads (see
-    // variantContractSql) — including the NEX-vs-PL global 300M count
-    // divergence (r13 ADVICE).
-    "q246_nex_contract" -> variantContractSql(
-      graft.pipelines.SiteScoringPipeline.variants("NEX")),
-    "q247_pl_contract" -> variantContractSql(
-      graft.pipelines.SiteScoringPipeline.variants("PL")),
-    "q250_plcr_contract" -> variantContractSql(
-      graft.pipelines.SiteScoringPipeline.variants("PLCR")),
-
-    // q248: q245's embedding-side mirror — lattice-LSH bucket sizes,
-    // rolled up to the (m, n_buckets) hotness distribution. Reuses the
-    // q32 CTE chain's sig step (unreferenced tail CTEs are never run).
-    "q248_bucket_hotness" ->
-      s"""WITH $latticeSimCtes,
-         |bsz AS (SELECT bucket, count(*) AS m FROM sig GROUP BY bucket)
-         |SELECT CAST(m AS BIGINT) AS m, CAST(count(*) AS BIGINT) AS n_buckets
-         |FROM bsz GROUP BY m""".stripMargin,
-
-    // q249: q32 with the hot-bucket cap — both endpoints of a kept pair
-    // share one bucket, so filtering sims by the id_a side's bucket size
-    // is exactly the Spark semi-join's pair set.
-    "q249_lsh_capped" ->
-      s"""WITH $latticeSimCtes,
-         |bsz AS (SELECT bucket, count(*) AS m FROM sig GROUP BY bucket),
-         |keep AS (SELECT bucket FROM bsz WHERE m <= 40)
-         |SELECT s.id_a, s.id_b, round(s.sim, 6) AS sim_r
-         |FROM sims s
-         |JOIN sig g ON s.id_a = g.vec_id
-         |JOIN keep k ON g.bucket = k.bucket
-         |WHERE s.sim >= 0.1""".stripMargin,
-
-    // q251: expected header-decode rows carried as VALUES (q149 posture —
-    // DuckDB has no image parser; the fixture bytes are deterministic and
-    // the spec additionally re-derives them against java.util.zip.CRC32 /
-    // the marker grammar). Malformed fixtures (6, 7, 9) and the non-image
-    // payload (8) pin the null-not-throw contract.
-    "q251_image_meta" ->
-      """SELECT CAST(img_id AS BIGINT) AS img_id, format,
-        | CAST(width AS BIGINT) AS width,
-        | CAST(height AS BIGINT) AS height,
-        | CAST(channels AS BIGINT) AS channels
-        |FROM (VALUES
-        |  (1, 'png', 640, 480, 4),
-        |  (2, 'png', 32, 8, 1),
-        |  (3, 'jpeg', 1024, 768, 3),
-        |  (4, 'jpeg', 17, 1, 1),
-        |  (5, 'gif', 320, 200, 3),
-        |  (6, NULL, NULL, NULL, NULL),
-        |  (7, NULL, NULL, NULL, NULL),
-        |  (8, NULL, NULL, NULL, NULL),
-        |  (9, NULL, NULL, NULL, NULL))
-        |  AS t(img_id, format, width, height, channels)""".stripMargin,
-
-    // q252: same posture as q251 for the audio/video containers — DuckDB
-    // has no WAV/MP4 parser; the fixture bytes are deterministic
-    // (byte-rate arithmetic and mvhd timescale math re-derived in
-    // MediaHeaderSpec against the RIFF / ISO 14496-12 layouts). Rows 6-12
-    // pin null-not-throw on truncation, missing chunks, zero channels,
-    // box overrun, corrupt moov, non-media bytes; row 5 pins the
-    // brand-only init segment keeping a live row with null duration.
-    // r17 rows 13-19: RF64 ds64 indirection (happy + ds64-out-of-order),
-    // fragmented-MP4 duration via mvex/mehd and via the moof/trun sum,
-    // a trun overrun (corrupt → null), the wrapped-u32 sample rate, and
-    // the mvhd 'duration unknown' sentinel (live row, null duration).
-    // r18 rows 20-25: EBML/Matroska — webm VP9+Opus with audio fields,
-    // matroska PCM with a non-default TimestampScale (float Duration ×
-    // ns-scale → floor ms), unknown-size Segment live-stream form (row
-    // alive, null duration), truncation, invalid VINT, empty DocType.
-    "q252_media_meta" ->
-      """SELECT CAST(media_id AS BIGINT) AS media_id, format,
-        | CAST(duration_ms AS BIGINT) AS duration_ms,
-        | CAST(channels AS BIGINT) AS channels,
-        | CAST(sample_rate AS BIGINT) AS sample_rate,
-        | CAST(bits AS BIGINT) AS bits, brand, codec
-        |FROM (VALUES
-        |  (1, 'wav', 50, 2, 44100, 16, 'pcm', NULL),
-        |  (2, 'wav', 125, 1, 8000, 32, 'ieee_float', NULL),
-        |  (3, 'mp4', 5000, NULL, NULL, NULL, 'isom', 'avc1+mp4a'),
-        |  (4, 'mp4', 2500, NULL, NULL, NULL, 'mp42', 'mp4a'),
-        |  (5, 'mp4', NULL, NULL, NULL, NULL, 'isom', NULL),
-        |  (6, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
-        |  (7, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
-        |  (8, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
-        |  (9, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
-        |  (10, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
-        |  (11, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
-        |  (12, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
-        |  (13, 'wav', 1000, 2, 48000, 24, 'pcm', NULL),
-        |  (14, 'mp4', 7500, NULL, NULL, NULL, 'isom', 'avc1'),
-        |  (15, 'mp4', 2000, NULL, NULL, NULL, 'isom', 'avc1'),
-        |  (16, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
-        |  (17, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
-        |  (18, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
-        |  (19, 'mp4', NULL, NULL, NULL, NULL, 'isom', 'mp4a'),
-        |  (20, 'mkv', 12345, 2, 48000, NULL, 'webm', 'V_VP9+A_OPUS'),
-        |  (21, 'mkv', 1000, 1, 8000, 24, 'matroska', 'A_PCM/INT/LIT'),
-        |  (22, 'mkv', NULL, NULL, NULL, NULL, 'webm', 'V_VP8'),
-        |  (23, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
-        |  (24, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
-        |  (25, NULL, NULL, NULL, NULL, NULL, NULL, NULL))
-        |  AS t(media_id, format, duration_ms, channels, sample_rate,
-        |       bits, brand, codec)""".stripMargin
-  )
-    // q73 runs the same parse over rows DECODED FROM XLSX BYTES, and q74
-    // additionally selects the workbook out of a zip archive first; the
-    // fixture workbook's p18/p19 sheets carry exactly the q37 VALUES
-    // content, so a matching oracle proves each decode chain end-to-end.
-    base + ("q73_xlsx_wasde" -> base("q37_wasde_parse")) +
-      ("q74_zip_xlsx_wasde" -> base("q37_wasde_parse")) +
-      // q142 decodes the same VALUES content from legacy BIFF8 bytes
-      ("q142_xls_wasde" -> base("q37_wasde_parse")) +
-      // q89 re-proves the same transpose over XlsxWriter/Reader bytes.
-      // Integral numerics render WITHOUT the float ".0" (XlsxReader's
-      // documented xlrd divergence), hence '10'/'52'/'501' here vs q75.
-      ("q89_xlsx_transpose" ->
-        """WITH block(attr, y2425, y2526, y2627) AS (VALUES
-          |  ('planted','10.1','10.5','10.9'),
-          |  ('harvested','9.7','10','10.2'),
-          |  ('yld','49.8','50.1','52'),
-          |  ('production','483.1','501','530.4')),
-          |long AS (
-          |  SELECT attr, 'y2425' AS year, y2425 AS v FROM block
-          |  UNION ALL SELECT attr, 'y2526', y2526 FROM block
-          |  UNION ALL SELECT attr, 'y2627', y2627 FROM block)
-          |SELECT year,
-          |  MAX(CASE WHEN attr='planted' THEN v END) AS planted,
-          |  MAX(CASE WHEN attr='harvested' THEN v END) AS harvested,
-          |  MAX(CASE WHEN attr='yld' THEN v END) AS yld,
-          |  MAX(CASE WHEN attr='production' THEN v END) AS production
-          |FROM long GROUP BY year""".stripMargin) +
-      ("q75_transpose" ->
-        """WITH block(attr, y2425, y2526, y2627) AS (VALUES
-          |  ('planted','10.1','10.5','10.9'),
-          |  ('harvested','9.7','10.0','10.2'),
-          |  ('yld','49.8','50.1','52.0'),
-          |  ('production','483.1','501.0','530.4')),
-          |long AS (
-          |  SELECT attr, 'y2425' AS year, y2425 AS v FROM block
-          |  UNION ALL SELECT attr, 'y2526', y2526 FROM block
-          |  UNION ALL SELECT attr, 'y2627', y2627 FROM block)
-          |SELECT year,
-          |  MAX(CASE WHEN attr='planted' THEN v END) AS planted,
-          |  MAX(CASE WHEN attr='harvested' THEN v END) AS harvested,
-          |  MAX(CASE WHEN attr='yld' THEN v END) AS yld,
-          |  MAX(CASE WHEN attr='production' THEN v END) AS production
-          |FROM long GROUP BY year""".stripMargin) +
-      // Probe points sit far inside their training cluster — every tree of
-      // the fixed-seed forest votes the cluster label, so the expected
-      // predictions are literals.
-      ("q76_model_scoring" ->
-        """SELECT CAST(point_id AS BIGINT) AS point_id,
-          |       CAST(pred AS BIGINT) AS pred
-          |FROM (VALUES (1,0),(2,0),(3,0),(4,1),(5,1),(6,1),(7,0),(8,1))
-          |  t(point_id, pred)""".stripMargin) +
-      ("q77_empty_guard" ->
-        """WITH pairs(d, c) AS (VALUES
-          |  ('2026-01-01',71.0),('2026-01-02',72.0),('2026-01-03',73.0),
-          |  ('2026-01-04',74.0),('2026-01-05',75.0),('2026-01-06',76.0),
-          |  ('2026-01-07',77.0),('2026-01-08',78.0),('2026-01-09',79.0),
-          |  ('2026-01-10',80.0)),
-          |fresh AS (SELECT 'fresh' AS which, CAST(d AS DATE) AS "Date",
-          |            c AS "Close", true AS sink_ran
-          |          FROM pairs WHERE CAST(d AS DATE) > DATE '2026-01-05'),
-          |stale AS (SELECT 'stale' AS which, CAST(NULL AS DATE) AS "Date",
-          |            CAST(NULL AS DOUBLE) AS "Close", false AS sink_ran
-          |          WHERE 0 = (SELECT count(*) FROM pairs
-          |                     WHERE CAST(d AS DATE) > DATE '2026-01-10'))
-          |SELECT * FROM fresh UNION ALL SELECT * FROM stale""".stripMargin) +
-      // Ranges derived by hand from the rollover rule: corn (H,K,N,U,Z)
-      // and soybeans (F,H,K,N,Q,U,X); from the 20th the front month rolls.
-      ("q78_symbol_calendar" ->
-        """SELECT commodity, CAST(f AS DATE) AS from_date,
-          |       CAST(t AS DATE) AS to_date, symbols
-          |FROM (VALUES
-          |  ('C','2026-02-25','2026-03-19','CH26,CK26'),
-          |  ('C','2026-03-20','2026-03-25','CK26,CN26'),
-          |  ('S','2026-02-25','2026-03-19','SH26,SK26,SN26'),
-          |  ('S','2026-03-20','2026-03-25','SK26,SN26,SQ26'))
-          |  v(commodity, f, t, symbols)""".stripMargin) +
-      ("q79_html_links" ->
-        """SELECT CAST(ord AS BIGINT) AS ord, href FROM (VALUES
-          |  (0, '/files/wasde0526.xls'),
-          |  (1, '/files/wasde0626.xlsx'),
-          |  (2, '/files/oce-wasde-2026-07.xls')) v(ord, href)""".stripMargin) +
-      ("q80_staged_ingest" ->
-        """WITH src(entity, d, v) AS (
-          |  SELECT e, ('2026-01-0' || i)::DATE, CAST(i * 10.0 AS DOUBLE)
-          |  FROM (VALUES ('A'),('B'),('C')) ee(e), generate_series(1, 6) s(i)),
-          |wm(entity, wmd) AS (VALUES
-          |  ('A', DATE '2026-01-03'), ('B', DATE '2026-01-05'),
-          |  ('C', DATE '2026-01-10'))
-          |SELECT s.entity, s.d, s.v
-          |FROM src s JOIN wm w ON s.entity = w.entity
-          |WHERE w.wmd < DATE '2026-01-06'  -- fetch plan skips at/past today
-          |  AND s.d > w.wmd               -- relational watermark re-filter""".stripMargin) +
-      // Symbols are the q78-proven calendar output; quotes re-derived by
-      // the same (symbol, day) formula; the watermark re-filter mirrored.
-      ("q92_price_history_pipeline" ->
-        """WITH syms(symbol, wmd) AS (VALUES
-          |  ('CH26', DATE '2026-03-20'),
-          |  ('CK26', DATE '1970-01-01'),
-          |  ('CN26', DATE '1970-01-01')),
-          |quotes AS (SELECT symbol, ('2026-03-' || i)::DATE AS d,
-          |    CAST(i * 10.0 + length(symbol) AS DOUBLE) AS close
-          |  FROM syms, generate_series(18, 24) g(i))
-          |SELECT q.symbol, q.d, q.close
-          |FROM quotes q JOIN syms s ON q.symbol = s.symbol
-          |WHERE q.d > s.wmd""".stripMargin) +
-      ("q81_xlsx_roundtrip" ->
-        """SELECT CAST(r AS BIGINT) AS rowIdx, c0, c1, c2 FROM (VALUES
-          |  (0, 'k', 'x & <y>', ''),
-          |  (1, '1.5', '', '42'),
-          |  (2, 'true', '2026-02-28', '2026-02-28 23:59:59'))
-          |  v(r, c0, c1, c2)""".stripMargin) +
-      ("q82_idempotent_reload" ->
-        """SELECT month, k, CAST(v AS DOUBLE) AS v FROM (VALUES
-          |  ('2026-01', 'a', 1.0), ('2026-01', 'b', 2.0),
-          |  ('2026-02', 'c', 30.0), ('2026-02', 'd', 4.0))
-          |  t(month, k, v)""".stripMargin) +
-      // nProbe = nLists ⇒ IVF is exact: same brute-force oracle as q31.
-      ("q83_ann_ivf" ->
-        """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-          |u AS (SELECT e.vec_id, unnest(e.embedding) AS a, unnest(q.qe) AS b
-          |      FROM embeddings e CROSS JOIN q),
-          |dots AS (SELECT vec_id,
-          |  sum(CAST(a AS DOUBLE) * CAST(b AS DOUBLE)) AS dp,
-          |  sum(CAST(a AS DOUBLE) * CAST(a AS DOUBLE)) AS na,
-          |  sum(CAST(b AS DOUBLE) * CAST(b AS DOUBLE)) AS nb
-          | FROM u GROUP BY vec_id),
-          |s AS (SELECT vec_id, dp / (sqrt(na) * sqrt(nb)) AS sim FROM dots),
-          |r AS (SELECT vec_id, sim,
-          |  row_number() OVER (ORDER BY sim DESC, vec_id) AS rnk FROM s)
-          |SELECT vec_id, round(sim, 6) AS sim_r FROM r WHERE rnk <= 10""".stripMargin) +
-      // Mirrors the p22 pipeline over the same data rows: footnote strip,
-      // sticky group carry, NA/'' repair, 1/2 block alternation, Total Use
-      // and Stocks-to-Use with identical operation order.
-      ("q84_wasde_world" ->
-        """WITH src(ri, geo, b, p, i, df, dt, e, es, n, tipo) AS (VALUES
-          |  (1, 'World 3/',        '10','20','5', '8','15','7', '13', 1, 'EST'),
-          |  (2, 'Major Exporters', '1', '2', 'NA','4','5', '6', '7',  1, 'EST'),
-          |  (3, 'Argentina',       '2', '4', '0', '1','2', '2', '8',  1, 'EST'),
-          |  (4, 'World',           '11','21','6', '9','16','8', '14', 2, 'PROJ'),
-          |  (5, 'Major Importers', '0', '1', '9', '3','10','',  '2',  2, 'PROJ'),
-          |  (6, 'Mexico 4/',       '1', '0', '18','2','20','0', '1',  2, 'PROJ')),
-          |lab AS (SELECT *,
-          |  upper(trim(regexp_replace(geo, '\b\d{1,2}/', '', 'g'))) AS label
-          |  FROM src),
-          |grp AS (SELECT *, last_value(CASE
-          |    WHEN label LIKE '%WORLD%' THEN 'RESUMEN'
-          |    WHEN label LIKE '%MAJOR EXPORTERS%' THEN 'MAJOR EXPORTERS'
-          |    WHEN label LIKE '%MAJOR IMPORTERS%' THEN 'MAJOR IMPORTERS'
-          |    END IGNORE NULLS) OVER (ORDER BY ri
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grupo
-          |  FROM lab),
-          |rep AS (SELECT *,
-          |  CASE WHEN trim(b)='' OR upper(trim(b))='NA' THEN 0.0 ELSE CAST(b AS DOUBLE) END AS beginning,
-          |  CASE WHEN trim(p)='' OR upper(trim(p))='NA' THEN 0.0 ELSE CAST(p AS DOUBLE) END AS production,
-          |  CASE WHEN trim(i)='' OR upper(trim(i))='NA' THEN 0.0 ELSE CAST(i AS DOUBLE) END AS imports,
-          |  CASE WHEN trim(df)='' OR upper(trim(df))='NA' THEN 0.0 ELSE CAST(df AS DOUBLE) END AS dom_feed,
-          |  CASE WHEN trim(dt)='' OR upper(trim(dt))='NA' THEN 0.0 ELSE CAST(dt AS DOUBLE) END AS dom_total,
-          |  CASE WHEN trim(e)='' OR upper(trim(e))='NA' THEN 0.0 ELSE CAST(e AS DOUBLE) END AS exports,
-          |  CASE WHEN trim(es)='' OR upper(trim(es))='NA' THEN 0.0 ELSE CAST(es AS DOUBLE) END AS ending
-          |  FROM grp)
-          |SELECT 'p22' AS sheet, 'WASDE-672' AS wasde, 'CORN' AS commodity,
-          |  'MILLION METRIC TONS' AS unit, CAST(n AS BIGINT) AS n,
-          |  '2025/26' AS harvest, tipo, grupo, label AS geography,
-          |  beginning, production, imports, dom_feed, dom_total, exports,
-          |  ending, dom_total + exports AS total_use,
-          |  CASE WHEN dom_total + exports = 0 THEN 0.0
-          |       ELSE ending / (dom_total + exports) * 100 END AS stocks_to_use
-          |FROM rep""".stripMargin) +
-      // Mirrors the p23 pipeline including SKIPPED raw rows, so the SQL
-      // re-derives geography carry, skip rules, orden runs, and repair.
-      ("q85_wasde_report_dates" ->
-        """WITH src(ri, geo, rdate, b, p, i, df, dt, e, es) AS (VALUES
-          |  (3, 'World',           'Apr', '1','2','3', '4','5','6','7'),
-          |  (4, '',                'May', '2','3','NA','5','6','7','8'),
-          |  (5, 'Major Exporters', 'Apr', '0','1','2', '3','4','5','6'),
-          |  (6, 'Brazil',          'Apr', '9','8','7', '6','5','4','3'),
-          |  (7, '',                'May', '9','9','9', '', '9','9','9'),
-          |  (8, 'Selected Other',  'Apr', '0','0','0', '0','0','0','0'),
-          |  (9, '',                '',    '', '', '',  '', '', '', ''),
-          |  (10,'1/ Aggregate of local marketing years.', '',
-          |      '', '', '', '', '', '', '')),
-          |carried AS (SELECT *, last_value(CASE WHEN trim(geo) <> '' THEN geo
-          |    END IGNORE NULLS) OVER (ORDER BY ri
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS geoc
-          |  FROM src),
-          |lab AS (SELECT *,
-          |  upper(trim(regexp_replace(geoc, '\b\d{1,2}/', '', 'g'))) AS label
-          |  FROM carried),
-          |grp AS (SELECT *, last_value(CASE
-          |    WHEN label LIKE '%WORLD%' THEN 'RESUMEN'
-          |    WHEN label LIKE '%MAJOR EXPORTERS%' THEN 'MAJOR EXPORTERS'
-          |    WHEN label LIKE '%MAJOR IMPORTERS%' THEN 'MAJOR IMPORTERS'
-          |    END IGNORE NULLS) OVER (ORDER BY ri
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grupo
-          |  FROM lab),
-          |kept AS (SELECT * FROM grp
-          |  WHERE NOT (trim(geo) = '' AND trim(rdate) = '')
-          |    AND geo NOT LIKE '1/ Aggregate%'
-          |    AND label NOT LIKE '%SELECTED OTHER%'),
-          |ord AS (SELECT *, CASE WHEN lag(label) OVER (ORDER BY ri) = label
-          |    THEN 2 ELSE 1 END AS orden FROM kept),
-          |rep AS (SELECT *,
-          |  CASE WHEN trim(b)='' OR upper(trim(b))='NA' THEN 0.0 ELSE CAST(b AS DOUBLE) END AS beginning,
-          |  CASE WHEN trim(p)='' OR upper(trim(p))='NA' THEN 0.0 ELSE CAST(p AS DOUBLE) END AS production,
-          |  CASE WHEN trim(i)='' OR upper(trim(i))='NA' THEN 0.0 ELSE CAST(i AS DOUBLE) END AS imports,
-          |  CASE WHEN trim(df)='' OR upper(trim(df))='NA' THEN 0.0 ELSE CAST(df AS DOUBLE) END AS dom_feed,
-          |  CASE WHEN trim(dt)='' OR upper(trim(dt))='NA' THEN 0.0 ELSE CAST(dt AS DOUBLE) END AS dom_total,
-          |  CASE WHEN trim(e)='' OR upper(trim(e))='NA' THEN 0.0 ELSE CAST(e AS DOUBLE) END AS exports,
-          |  CASE WHEN trim(es)='' OR upper(trim(es))='NA' THEN 0.0 ELSE CAST(es AS DOUBLE) END AS ending
-          |  FROM ord)
-          |SELECT 'p23' AS sheet, 'WASDE-672' AS wasde, 'SOYBEAN' AS commodity,
-          |  'MILLION METRIC TONS' AS unit, '2025/26' AS harvest,
-          |  'PROJ' AS tipo, grupo, label AS geography,
-          |  upper(rdate) AS report_date, CAST(orden AS BIGINT) AS orden,
-          |  beginning, production, imports, dom_feed, dom_total, exports,
-          |  ending, dom_total + exports AS total_use,
-          |  CASE WHEN dom_total + exports = 0 THEN 0.0
-          |       ELSE ending / (dom_total + exports) * 100 END AS stocks_to_use
-          |FROM rep""".stripMargin)
-  }
 }

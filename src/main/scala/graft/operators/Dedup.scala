@@ -101,28 +101,13 @@ object Dedup {
       .groupBy(col("text_hash"))
       .agg(min(col(idCol)).as("keeper"), count(lit(1)).as("n_dups"))
 
-  /** MinHash signature column: array of k minima over shingle hashes.
-    * Hash lane i uses xxhash64 of the shingle salted with the lane index —
-    * all built-ins, fully codegen'd, no UDF. Shingles are WORD n-grams:
-    * char shingles degenerate on small-vocabulary corpora (every doc shares
-    * nearly all char n-grams → every pair collides in some band). */
-  def minhashSignature(text: org.apache.spark.sql.Column, shingleN: Int,
-      numHashes: Int): org.apache.spark.sql.Column = {
-    val shingles = TextFunctions.wordShingles(
-      TextFunctions.tokens(TextFunctions.normalize(text)), shingleN)
-    val lanes = (0 until numHashes).map { i =>
-      array_min(transform(shingles, s => xxhash64(s, lit(i))))
-    }
-    array(lanes: _*)
-  }
-
   /** Banded MinHash table `(doc_id, band, bh)` in the scale-correct shape:
     * explode shingles to rows, hash each shingle once per lane, take map-side
     * partial MIN per lane in one hash aggregate (shuffles only
     * `(doc_id, k longs)`, never text), then hash lane-groups into band keys.
-    * The per-row lambda form ([[minhashSignature]]) inlines the shingle
-    * array into every lane's expression tree — k× recompute — so this
-    * aggregate form is what the candidate join uses. */
+    * The per-row lambda form (one `array_min(transform(...))` per lane)
+    * inlines the shingle array into every lane's expression tree — k×
+    * recompute — so this aggregate form is what the candidate join uses. */
   import org.apache.spark.sql.Column
 
   /** A lane-hash family: `prep` runs once per shingle row (materialized
@@ -911,15 +896,6 @@ object Dedup {
     cap
   }
 
-  /** [[capBelowTemplateFloorLocal]] over an uncollected (key, count)
-    * table — for callers (diagnostic tools, specs) that hold only the
-    * DataFrame; the operators themselves collect the rollup once and
-    * share it with their forecasts. */
-  private[graft] def capBelowTemplateFloor(counts: DataFrame, countCol: String,
-      nDocs: Long, templateShare: Double, label: String): Int =
-    capBelowTemplateFloorLocal(countRollup(counts, countCol), nDocs,
-      templateShare, label)
-
   /** `maxCandidates` (autocap mode only, 0 = off) bounds the pair
     * stage by BUDGET instead of by recall: the cap becomes the largest
     * nd whose cumulative forecast Σ n_toks · C(nd, 2) stays within the
@@ -1514,10 +1490,10 @@ object Dedup {
     * 8 bands, word 3-shingles, bucket-capped, both directions through
     * the exact verify). Until r20 this was the whole route; it is now
     * ONE generator inside [[containmentRoutedUnion]], kept addressable
-    * `private[graft]` so the scale rehearsals can measure the banded
-    * leg in isolation (the casym arm's 0.2%-at-J≈0.03 comparison row)
-    * at scales where the forecast does not trip the route on its own —
-    * one source of truth, never a tool-side replica. */
+    * `private[graft]` so DedupSimilaritySpec's route-complementarity
+    * test can run the banded leg in isolation at a scale where the
+    * forecast does not trip the route on its own — one source of
+    * truth, never a test-side replica. */
   private[graft] def containmentRouted(docs: DataFrame, idCol: String,
       textCol: String, shingleK: Int, numT: Int, denT: Int,
       maxBucket: Int, inputSmall: Boolean): DataFrame = {
@@ -1762,10 +1738,10 @@ object Dedup {
   }
 
   /** [[containmentRoutedUnion]] with its own token tables — the entry
-    * the scale rehearsals measure at scales where the forecast does not
-    * trip the route on its own (same rationale as
-    * [[containmentRouted]]: the rehearsal and the route branch must
-    * measure ONE chain). */
+    * DedupSimilaritySpec's route-complementarity test runs at a scale
+    * where the forecast does not trip the route on its own (same
+    * rationale as [[containmentRouted]]: the test and the route branch
+    * must exercise ONE chain). */
   private[graft] def containmentRoutedUnionStandalone(docs: DataFrame,
       idCol: String, textCol: String, shingleK: Int, numT: Int,
       denT: Int, maxBucket: Int): DataFrame = {
@@ -1776,10 +1752,9 @@ object Dedup {
   }
 
   /** Standalone entry for the one-sided containment route — the public
-    * quote-in-doc/contamination-check operator and the chain the scale
-    * rehearsals measure (ONE source of truth with
-    * [[containmentPairs]]'s route branch, which calls the same
-    * [[containmentOneSidedFrom]]). `maxDocsPerTok > 0` = explicit cap
+    * quote-in-doc/contamination-check operator q259 runs (ONE source of
+    * truth with [[containmentPairs]]'s route branch, which calls the
+    * same [[containmentOneSidedFrom]]). `maxDocsPerTok > 0` = explicit cap
     * (oracle-mirrorable: probe = `row_number() OVER (PARTITION BY doc
     * ORDER BY dfreq, tok) ≤ probeK AND dfreq ≤ cap`); 0 = the
     * volume-budgeted autocap ([[routeCandidateBudget]]). */

@@ -2,8 +2,6 @@ package graft.sources
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** Dependency-free legacy `.xls` (BIFF8 inside a CFB container) reader,
   * sharing [[XlsxReader]]'s row contract — `(sheet, rowIdx, cells)` with
   * left-ragged string cells — so every consumer (WASDE parse, CFTC path,
@@ -22,9 +20,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Rendering matches XlsxReader exactly: integral numbers without ".0",
   * date serials as ISO, bools as "true"/"false".
   *
-  * Scale shape: identical to [[XlsxReader.scan]] — one workbook decodes
-  * inside one task; thousands of workbooks decode in parallel with no
-  * driver involvement. */
+  * Scale shape: `readSheet` is a pure bytes → rows function, so one
+  * workbook decodes inside one task and [[XlsxReader.scan]]'s
+  * binaryFile pattern applies unchanged. */
 object XlsReader {
 
   // record ids
@@ -299,32 +297,5 @@ object XlsReader {
       .getOrElse(throw new IllegalArgumentException(
         s"no sheet '$sheetName' (have: ${wb.sheets.map(_._1).mkString(", ")})"))
     readSheetAt(s, start, sheetName, wb, fillMerged)
-  }
-
-  /** Decode every sheet (multi-sheet S6 shape). */
-  def readAllSheets(bytes: Array[Byte],
-      fillMerged: Boolean = false): Seq[XlsxSheetRow] = {
-    val s = workbookStream(bytes)
-    val wb = parseGlobals(s)
-    wb.sheets.flatMap { case (name, start) =>
-      readSheetAt(s, start, name, wb, fillMerged)
-    }
-  }
-
-  /** Distributed workbook scan — per-file decode tasks, no driver work;
-    * the `.xls` twin of [[XlsxReader.scan]]. */
-  def scan(spark: SparkSession, pathGlob: String, sheetName: Option[String] = None,
-      fillMerged: Boolean = false): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(pathGlob)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val rows = sheetName match {
-          case Some(n) => readSheet(bytes, n, fillMerged)
-          case None    => readAllSheets(bytes, fillMerged)
-        }
-        rows.map(x => (path, x.sheet, x.rowIdx, x.cells))
-      }
-      .toDF("path", "sheet", "rowIdx", "cells")
   }
 }

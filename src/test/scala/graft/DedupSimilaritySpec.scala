@@ -1165,13 +1165,15 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // 2^31; .toInt would wrap negative and filter(nd <= cap) would then
     // silently keep NOTHING. The clamp must saturate at Int.MaxValue.
     val counts = Seq(2200000000L, 5L, 3L).toDF("nd")
-    val cap = Dedup.capBelowTemplateFloor(counts, "nd",
-      nDocs = 5000000000L, templateShare = 0.5, label = "test")
+    val cap = Dedup.capBelowTemplateFloorLocal(
+      Dedup.countRollup(counts, "nd"), nDocs = 5000000000L,
+      templateShare = 0.5, label = "test")
     assert(cap == Int.MaxValue)
     // and the ordinary path is untouched: max nd below the floor wins
     val small = Seq(30L, 20L, 9000L).toDF("nd")
-    assert(Dedup.capBelowTemplateFloor(small, "nd",
-      nDocs = 130L, templateShare = 0.5, label = "test") == 30)
+    assert(Dedup.capBelowTemplateFloorLocal(
+      Dedup.countRollup(small, "nd"), nDocs = 130L,
+      templateShare = 0.5, label = "test") == 30)
   }
 
   test("sharedPassagePairs finds the copied span, not unrelated docs") {

@@ -47,6 +47,13 @@ class HarnessSpec extends AnyFunSuite with TimeLimits {
     assert((o -- q).isEmpty, "oracles without a query")
   }
 
+  test("the contract is 261 records with unique names") {
+    val names = SparkEntry.contracts.map(_.name)
+    val dups = names.diff(names.distinct)
+    assert(dups.isEmpty, "a query name is defined twice")
+    assert(names.size == 261)
+  }
+
   test("bench reference: the newest round artifact is picked by round number") {
     val dir = Files.createTempDirectory("bench-ref").toFile
     def touch(name: String, mtime: Long): java.io.File = {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.Fixtures.{gif, jpeg, png}
 import graft.functions.ImageHeaderOps
 
 /** [[graft.functions.ImageMeta]] / [[ImageHeaderOps]]: real PNG/JPEG/GIF
@@ -10,51 +11,12 @@ import graft.functions.ImageHeaderOps
   * (the 100 TB contract: one bad blob = one null row, not a task retry
   * storm). The DataFrame test runs the expression through whole-stage
   * codegen (filter + projection over a real plan); q251 pins the same
-  * fixtures under the DuckDB oracle.
+  * fixtures under the DuckDB oracle. Inputs come from [[Fixtures]]; the
+  * literal expected values are the independent check.
   */
 class ImageHeaderSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.session
   import spark.implicits._
-
-  // -- byte builders (same construction as SparkEntry's q251 fixtures,
-  //    re-derived here so the spec does not trust the query's builder) --
-
-  private def be32(v: Int) = java.nio.ByteBuffer.allocate(4).putInt(v).array()
-
-  private def png(w: Int, h: Int, colorType: Int, bitDepth: Int = 8,
-      flipCrcBit: Boolean = false, ihdrType: String = "IHDR",
-      ihdrLen: Int = 13): Array[Byte] = {
-    val sig = Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
-    val typeAndData = ihdrType.getBytes("US-ASCII") ++
-      java.nio.ByteBuffer.allocate(13).putInt(w).putInt(h)
-        .put(bitDepth.toByte).put(colorType.toByte)
-        .put(0.toByte).put(0.toByte).put(0.toByte).array()
-    val crc = new java.util.zip.CRC32
-    crc.update(typeAndData)
-    val c = (if (flipCrcBit) crc.getValue ^ 1L else crc.getValue).toInt
-    sig ++ be32(ihdrLen) ++ typeAndData ++ be32(c)
-  }
-
-  private def jpeg(w: Int, h: Int, ch: Int, sofMarker: Int = 0xc0,
-      leadingSegments: Seq[Array[Byte]] = Seq(
-        Array(0xff, 0xfe, 0, 4, 'h', 'i').map(_.toByte))): Array[Byte] = {
-    val sofLen = 8 + 3 * ch
-    val sof = java.nio.ByteBuffer.allocate(2 + 2 + sofLen)
-      .put(0xff.toByte).put(sofMarker.toByte).putShort(sofLen.toShort)
-      .put(8.toByte).putShort(h.toShort).putShort(w.toShort).put(ch.toByte)
-    (0 until ch).foreach(i =>
-      sof.put((i + 1).toByte).put(0x11.toByte).put(0.toByte))
-    Array(0xff, 0xd8).map(_.toByte) ++ leadingSegments.flatten ++ sof.array()
-  }
-
-  private def gif(w: Int, h: Int, ver: Char = '9'): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(13)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put(s"GIF8${ver}a".getBytes("US-ASCII"))
-    bb.putShort(w.toShort).putShort(h.toShort)
-    bb.put(0.toByte).put(0.toByte).put(0.toByte)
-    bb.array()
-  }
 
   private def metaOf(b: Array[Byte]): Option[(String, Int, Int, Int)] =
     Option(ImageHeaderOps.meta(b)).map(r =>
@@ -87,7 +49,7 @@ class ImageHeaderSpec extends AnyFunSuite {
 
   test("malformed inputs return null, never throw") {
     val cases: Seq[(String, Array[Byte])] = Seq(
-      "CRC-flipped IHDR" -> png(640, 480, 6, flipCrcBit = true),
+      "CRC-flipped IHDR" -> png(640, 480, 6, crcXor = 1),
       "wrong first chunk type" -> png(10, 10, 2, ihdrType = "IDAT"),
       "wrong IHDR length" -> png(10, 10, 2, ihdrLen = 14),
       "invalid PNG color type" -> png(10, 10, 5),
@@ -118,7 +80,7 @@ class ImageHeaderSpec extends AnyFunSuite {
     val rows = Seq(
       (1L, png(640, 480, 6)),
       (2L, jpeg(99, 44, 3)),
-      (3L, png(8, 8, 0, flipCrcBit = true)),
+      (3L, png(8, 8, 0, crcXor = 1)),
       (4L, null.asInstanceOf[Array[Byte]]))
     val out = rows.toDF("id", "payload")
       .select(col("id"), graft.operators.Multimodal.imageMeta(col("payload")).as("m"))

@@ -139,39 +139,19 @@ class PdfHeaderSpec extends AnyFunSuite {
     java.util.Arrays.copyOf(buf, n)
   }
 
-  /** Catalog (1 0) + pages root (2 0) inside a FlateDecoded /ObjStm; no
-    * plain definitions; xref STREAM carries /Root. Mirrors the q258
-    * fixture-15 builder (built not copied — assembled here from the
-    * §7.5.7 grammar so the spec re-derives the fixture independently). */
-  private def objStmPdf(pages: Int, mangle: Array[Byte] => Array[Byte]
-      = identity): Array[Byte] = {
-    val o1 = "<< /Type /Catalog /Pages 2 0 R >>"
-    val o2 = s"<< /Type /Pages /Kids [5 0 R] /Count $pages >>"
-    val hdr = s"1 0 2 ${o1.length + 1}"
-    val comp = mangle(deflate(hdr + "\n" + o1 + " " + o2))
-    val head = "%PDF-1.5\n"
-    val objStm = s"3 0 obj\n<< /Type /ObjStm /N 2 /First " +
-      s"${hdr.length + 1} /Filter /FlateDecode /Length ${comp.length} " +
-      ">>\nstream\n"
-    val tail = "\nendstream\nendobj\n"
-    val xrefOff = head.length + objStm.length + comp.length + tail.length
-    val xref = "4 0 obj\n<< /Type /XRef /Size 6 /Root 1 0 R /W [1 2 1] " +
-      "/Length 0 >>\nstream\nendstream\nendobj\n"
-    (head + objStm).getBytes("US-ASCII") ++ comp ++
-      (tail + xref + s"startxref\n$xrefOff\n%%EOF\n").getBytes("US-ASCII")
-  }
-
   test("compressed catalog (r20): the page-count chain resolves through " +
     "a FlateDecoded /ObjStm, newest stream wins, corruption nulls only " +
     "pages") {
-    assert(meta(objStmPdf(9)) == Some(("1.5", Some(9), Some(false), false)))
+    assert(meta(Fixtures.pdfObjStmCatalog("1.5", 9))
+      == Some(("1.5", Some(9), Some(false), false)))
     // a corrupted deflate body -> bounded inflate fails -> pages null,
     // version/encrypted/linearized intact (never a throw)
-    assert(meta(objStmPdf(9, _.map(b => (b ^ 0x5a).toByte)))
+    assert(meta(Fixtures.pdfObjStmCatalog("1.5", 9,
+      _.map(b => (b ^ 0x5a).toByte)))
       == Some(("1.5", None, Some(false), false)))
     // incremental update appends a SECOND ObjStm redefining the page
     // tree: the newest stream's /Count must win
-    val base = objStmPdf(3)
+    val base = Fixtures.pdfObjStmCatalog("1.5", 3)
     val o2new = "<< /Type /Pages /Kids [5 0 R 6 0 R] /Count 11 >>"
     val hdr2 = s"2 0"
     val comp2 = deflate(hdr2 + "\n" + o2new)
@@ -184,7 +164,7 @@ class PdfHeaderSpec extends AnyFunSuite {
     // refused (null pages), never materialized
     val bombBody = "1 0\n<< /Type /Catalog /Pages 2 0 R >>" +
       (" " * (2 << 20))
-    val bomb = objStmPdf(9,
+    val bomb = Fixtures.pdfObjStmCatalog("1.5", 9,
       _ => deflate(bombBody))
     assert(meta(bomb) == Some(("1.5", None, Some(false), false)))
   }
@@ -212,7 +192,7 @@ class PdfHeaderSpec extends AnyFunSuite {
     // the plain (later) definition wins
     val plainUpd = ("2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 4 >>\n" +
       "endobj\n").getBytes("US-ASCII")
-    assert(meta(objStmPdf(3) ++ plainUpd)
+    assert(meta(Fixtures.pdfObjStmCatalog("1.5", 3) ++ plainUpd)
       == Some(("1.5", Some(4), Some(false), false)))
     // conforming whitespace/comments between `obj` and `<<` up to 1 KiB
     // must not defeat the ObjStm pre-filter (r20 review: a 64-byte

@@ -189,7 +189,7 @@ class XlsxSpec extends AnyFunSuite {
   }
 
   test("committed fixture decodes to the q37 VALUES table") {
-    val bytes = SparkEntry.wasdeXlsxBytes
+    val bytes = Fixtures.wasdeXlsxBytes
     assert(XlsxReader.sheetNames(bytes) == Seq("p18", "p19", "notes"))
     val p18 = XlsxReader.readSheet(bytes, "p18")
       .map(r => r.rowIdx -> r.cells.padTo(8, "")).toMap

@@ -333,7 +333,7 @@ object Bench {
     // Mid-board host bursts can land BETWEEN canary positions (r17: q126
     // read 5.03 s on the driver board with every stamp quiet; isolated
     // re-run 1.41 s) — so the board adjudicates its own outliers: any
-    // query that ran > 2.5× its prior-round reading (and > 0.5 s over it
+    // query that ran > 1.6× its prior-round reading (and > 0.5 s over it
     // — sub-second noise is not a burst) is re-run ONCE after the timed
     // loop and the retest time stamped as retest_s. Reference = the
     // newest BENCH_r*.json in cwd (the driver's own artifact), or
@@ -421,7 +421,7 @@ object Bench {
       else results
         .flatMap { case (n, s) =>
           refTimes.get(shortKey(n)).collect {
-            case ref if s >= 0 && ref > 0 && s > 2.5 * ref && s - ref > 0.5 =>
+            case ref if s >= 0 && ref > 0 && s > 1.6 * ref && s - ref > 0.5 =>
               (n, s / ref)
           }
         }

@@ -4,6 +4,7 @@ package contract
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.io.NioLocalFileSystem.deleteRecursively
 
 
 /** Helpers the contract families share: exact money sums, the
@@ -73,15 +74,6 @@ object Shared {
 
   private val scratchCreated =
     java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
-
-  private def deleteRecursively(root: java.nio.file.Path): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(p => try java.nio.file.Files.deleteIfExists(p)
-          catch { case _: java.io.IOException => })
-    } catch { case _: java.io.IOException => }
 
   private lazy val scratchHook: Unit = Runtime.getRuntime.addShutdownHook(
     new Thread(() => scratchCreated.forEach(deleteRecursively)))

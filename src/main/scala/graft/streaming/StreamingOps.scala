@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.io.NioLocalFileSystem.deleteRecursively
 
 /** Structured-Streaming form of the engine's incremental pipelines.
   *
@@ -40,6 +41,15 @@ object StreamingOps {
     *    target-replacing; the file system stays Hadoop's `LocalFileSystem`,
     *    so the `.crc` sidecars are still written and verified, and Spark's
     *    checkpoint checksums still wrap the manager.
+    *  - `file:` paths go through [[graft.io.NioLocalFileSystem]]
+    *    (`fs.file.impl`, with `fs.file.impl.disable.cache`): the same
+    *    checksummed `LocalFileSystem`, but it sets the permission of each
+    *    file and directory it creates in-process instead of forking `chmod`
+    *    (OPTIMIZATION_r24.md). The keys reach the checkpoint files, the
+    *    state stores and any batch write in `body`. They touch only `file:`
+    *    paths, so they are set whatever the checkpoint root is. The session
+    *    is where they take effect: a builder-level key would lose to the
+    *    stock instance in the JVM-wide FS cache.
     *
     * Only the session-level root is checked: a body that gives a stream its
     * own `checkpointLocation` must keep it local. */
@@ -47,7 +57,8 @@ object StreamingOps {
     val settings = Seq("spark.sql.shuffle.partitions" -> "4") ++
       (if (checkpointRootIsLocal(spark))
         Seq("spark.sql.streaming.checkpointFileManagerClass" -> FileSystemManager)
-      else Nil)
+      else Nil) ++
+      graft.io.NioLocalFileSystem.sessionConf
     val set = spark.conf.getAll // explicitly set keys only, no defaults
     val prev = settings.map { case (k, _) => k -> set.get(k) }
     settings.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -209,40 +220,35 @@ object StreamingOps {
       transform: DataFrame => DataFrame)
       : (DataFrame, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
     // FileStreamSource needs a directory; single-file corpora get a
-    // symlinked temp dir.
+    // symlinked temp dir, unique per call and deleted when the stream has
+    // ended (the memory sink holds the rows by then)
     val f = new java.io.File(path)
-    val streamPath =
+    val linkDir =
       if (f.isFile) {
         val dir = java.nio.file.Files.createTempDirectory("graft-stream")
-        // unique per call, so unregistered dirs accumulate across
-        // bench/verify invocations — remove at JVM exit (the symlink and
-        // dir are empty weight once the run's micro-batches finish)
-        val link = dir.resolve(f.getName)
-        java.nio.file.Files.createSymbolicLink(link, f.toPath.toAbsolutePath)
-        // deleteOnExit runs in REVERSE registration order: register the dir
-        // FIRST so the link inside it is removed first and the then-empty
-        // dir second (the r14 order deleted the non-empty dir first, which
-        // failed silently and leaked the dir every call).
-        dir.toFile.deleteOnExit()
-        link.toFile.deleteOnExit()
-        dir.toString
-      } else path
-    val batchSchema = spark.read.parquet(path).schema
-    val raw = spark.readStream.schema(batchSchema).parquet(streamPath)
-    // Same three-encoding normalization as the batch path — `withWatermark`
-    // is the strictest consumer (rejects NTZ outright), so the stream must
-    // see session-TZ TIMESTAMP regardless of how the corpus was written.
-    val events =
-      if (batchSchema.fieldNames.contains("ts")) graft.Tables.normalizeEventTime(raw)
-      else raw
-    val q = transform(events).writeStream
-      .outputMode(outputMode)
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    (spark.table(queryName), q.recentProgress.toSeq)
+        java.nio.file.Files.createSymbolicLink(dir.resolve(f.getName),
+          f.toPath.toAbsolutePath)
+        Some(dir)
+      } else None
+    try {
+      val batchSchema = spark.read.parquet(path).schema
+      val raw = spark.readStream.schema(batchSchema)
+        .parquet(linkDir.fold(path)(_.toString))
+      // Same three-encoding normalization as the batch path — `withWatermark`
+      // is the strictest consumer (rejects NTZ outright), so the stream must
+      // see session-TZ TIMESTAMP regardless of how the corpus was written.
+      val events =
+        if (batchSchema.fieldNames.contains("ts")) graft.Tables.normalizeEventTime(raw)
+        else raw
+      val q = transform(events).writeStream
+        .outputMode(outputMode)
+        .format("memory")
+        .queryName(queryName)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      (spark.table(queryName), q.recentProgress.toSeq)
+    } finally linkDir.foreach(deleteRecursively)
   }
 
   /** TWO-batch AvailableNow runner (r18 VERDICT item 2): the corpus at
@@ -294,6 +300,8 @@ object StreamingOps {
         s"[${row.getLong(0)}, ${row.getLong(1)}] µs is too narrow — the " +
         "integer midpoint equals the minimum, which would leave the " +
         "first phase empty; a two-batch split needs max ≥ min + 2")
+    // deleted when the stream has ended (the memory sink holds the rows
+    // by then)
     val dir = java.nio.file.Files.createTempDirectory("graft-stream-2b")
     def writePhase(i: Int, df: DataFrame): Unit = {
       val tmp = java.nio.file.Files.createTempDirectory(s"graft-phase$i")
@@ -321,35 +329,33 @@ object StreamingOps {
       require(dest.toFile.setLastModified(1700000000000L + i * 60000L),
         s"runAvailableNowDateSplit: setLastModified refused on $dest — " +
           "phase ordering would depend on the local FS clock")
-      tmp.toFile.listFiles().foreach(_.delete()); tmp.toFile.delete()
-      // reverse-registration order (see runAvailableNowProgress): file
-      // first, enclosing dir after the run's JVM exits
-      dest.toFile.deleteOnExit()
+      deleteRecursively(tmp)
     }
-    dir.toFile.deleteOnExit()
-    // The two phase writes are independent jobs over the same scan —
-    // overlap them (guide §2.6) so phase B's scan back-fills the cores
-    // phase A's single write task leaves idle. Phase ORDER is pinned by
-    // file name + modTime inside writePhase, not by write completion
-    // order, so concurrency cannot reorder the stream.
-    graft.operators.Overlap.runAll(Seq[() => Unit](
-      () => writePhase(0, batch.filter(col(timeCol).isNull ||
-        unix_micros(col(timeCol)) < lit(splitUs))),
-      () => writePhase(1, batch.filter(
-        unix_micros(col(timeCol)) >= lit(splitUs)))))
-    // phase files are written POST-normalization, so the stream schema is
-    // plain session-TZ TIMESTAMP — no second normalization pass
-    val sch = spark.read.parquet(dir.toString).schema
-    val raw = spark.readStream.schema(sch)
-      .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-    val q = transform(raw).writeStream
-      .outputMode(outputMode)
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    (spark.table(queryName), q.recentProgress.toSeq)
+    try {
+      // The two phase writes are independent jobs over the same scan —
+      // overlap them (guide §2.6) so phase B's scan back-fills the cores
+      // phase A's single write task leaves idle. Phase ORDER is pinned by
+      // file name + modTime inside writePhase, not by write completion
+      // order, so concurrency cannot reorder the stream.
+      graft.operators.Overlap.runAll(Seq[() => Unit](
+        () => writePhase(0, batch.filter(col(timeCol).isNull ||
+          unix_micros(col(timeCol)) < lit(splitUs))),
+        () => writePhase(1, batch.filter(
+          unix_micros(col(timeCol)) >= lit(splitUs)))))
+      // phase files are written POST-normalization, so the stream schema is
+      // plain session-TZ TIMESTAMP — no second normalization pass
+      val sch = spark.read.parquet(dir.toString).schema
+      val raw = spark.readStream.schema(sch)
+        .option("maxFilesPerTrigger", 1).parquet(dir.toString)
+      val q = transform(raw).writeStream
+        .outputMode(outputMode)
+        .format("memory")
+        .queryName(queryName)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      (spark.table(queryName), q.recentProgress.toSeq)
+    } finally deleteRecursively(dir)
   }
 
   /** Flatten labeled progress sequences into one state-metrics DataFrame:

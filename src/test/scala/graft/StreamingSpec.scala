@@ -664,6 +664,13 @@ class StreamingSpec extends AnyFunSuite {
   private val ckptKey = "spark.sql.streaming.checkpointLocation"
   private val fsManager = "org.apache.spark.sql.execution.streaming." +
     "checkpointing.FileSystemBasedCheckpointFileManager"
+  private val fsImplKey = "fs.file.impl"
+  private val fsCacheKey = "fs.file.impl.disable.cache"
+
+  /** The `file:` file system a stream of the session would get. */
+  private def localFs: org.apache.hadoop.fs.FileSystem =
+    org.apache.hadoop.fs.FileSystem.get(java.net.URI.create("file:///"),
+      spark.sessionState.newHadoopConf())
 
   /** Runs `f`, then puts `keys` back as they were (set or unset). */
   private def keepingConf[T](keys: String*)(f: => T): T = {
@@ -677,17 +684,28 @@ class StreamingSpec extends AnyFunSuite {
 
   test("withStreamConf sets both keys inside and restores set and unset " +
       "keys afterwards, also when the body throws") {
-    keepingConf(partsKey, mgrKey, ckptKey) {
+    keepingConf(partsKey, mgrKey, ckptKey, fsImplKey, fsCacheKey) {
       spark.conf.unset(ckptKey)
-      // earlier state: partitions set to a non-default value, manager unset
+      val stockFs = localFs.getClass
+      // earlier state: partitions and the FS cache key set to non-default
+      // values, manager and file system unset
       spark.conf.set(partsKey, "7")
+      spark.conf.set(fsCacheKey, "false")
       spark.conf.unset(mgrKey)
+      spark.conf.unset(fsImplKey)
       val inside = StreamingOps.withStreamConf(spark) {
-        (spark.conf.get(partsKey), spark.conf.getOption(mgrKey))
+        (spark.conf.get(partsKey), spark.conf.getOption(mgrKey),
+          spark.conf.getOption(fsImplKey), spark.conf.getOption(fsCacheKey),
+          localFs.getClass)
       }
-      assert(inside == (("4", Some(fsManager))))
+      assert(inside == (("4", Some(fsManager),
+        Some(classOf[graft.io.NioLocalFileSystem].getName), Some("true"),
+        classOf[graft.io.NioLocalFileSystem])))
       assert(spark.conf.get(partsKey) == "7")
+      assert(spark.conf.get(fsCacheKey) == "false")
       assert(!spark.conf.getAll.contains(mgrKey), "unset key left set")
+      assert(!spark.conf.getAll.contains(fsImplKey), "unset key left set")
+      assert(localFs.getClass == stockFs)
 
       // a throwing body restores too; a set manager gets its value back
       val fileContext = "org.apache.spark.sql.execution.streaming." +
@@ -696,24 +714,31 @@ class StreamingSpec extends AnyFunSuite {
       val e = intercept[IllegalStateException] {
         StreamingOps.withStreamConf(spark) {
           assert(spark.conf.get(mgrKey) == fsManager)
+          assert(localFs.isInstanceOf[graft.io.NioLocalFileSystem])
           throw new IllegalStateException("body failed")
         }
       }
       assert(e.getMessage == "body failed")
       assert(spark.conf.get(partsKey) == "7")
       assert(spark.conf.get(mgrKey) == fileContext)
+      assert(spark.conf.get(fsCacheKey) == "false")
+      assert(!spark.conf.getAll.contains(fsImplKey), "unset key left set")
+      assert(localFs.getClass == stockFs)
     }
   }
 
   test("withStreamConf keeps Spark's default manager for a non-local " +
       "checkpoint root (conf check only)") {
-    keepingConf(partsKey, mgrKey, ckptKey) {
+    keepingConf(partsKey, mgrKey, ckptKey, fsImplKey, fsCacheKey) {
       spark.conf.unset(mgrKey)
       spark.conf.set(ckptKey, "hdfs://nn/ckpt")
       assert(!StreamingOps.checkpointRootIsLocal(spark))
       StreamingOps.withStreamConf(spark) {
         assert(spark.conf.get(partsKey) == "4")
         assert(spark.conf.getOption(mgrKey).isEmpty)
+        // the file system keys touch only file: paths, so they stay on
+        assert(spark.conf.getOption(fsImplKey)
+          .contains(classOf[graft.io.NioLocalFileSystem].getName))
       }
       for (local <- Seq("file:/data/ckpt", "/data/ckpt")) {
         spark.conf.set(ckptKey, local)
@@ -735,6 +760,8 @@ class StreamingSpec extends AnyFunSuite {
       Seq((2L, "b"), (4L, "d"), (4L, "d"), (5L, "e")))
     val in = MemoryStream[(Long, String)]
     StreamingOps.withStreamConf(spark) {
+      // the stream's files go through the NIO-permission file system
+      assert(localFs.isInstanceOf[graft.io.NioLocalFileSystem])
       val q = in.toDF.toDF("id", "v").dropDuplicates("id")
         .writeStream.outputMode("append").format("memory")
         .queryName("ckpt_dedup")
@@ -743,6 +770,8 @@ class StreamingSpec extends AnyFunSuite {
       try batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
       finally q.stop()
     }
+    assert(!spark.conf.getAll.contains(fsImplKey), "unset key left set")
+    assert(!spark.conf.getAll.contains(fsCacheKey), "unset key left set")
     val streamed = spark.table("ckpt_dedup").as[(Long, String)].collect()
     val batch = batches.flatten.toDF("id", "v").dropDuplicates("id")
       .as[(Long, String)].collect()
@@ -759,5 +788,87 @@ class StreamingSpec extends AnyFunSuite {
       assert(names.contains(s"$v.delta.crc"), (st, names))
       assert(names.contains(s".$v.delta.crc"), (st, names))
     }
+  }
+
+  test("a stateful stream under withStreamConf forks no chmod or readlink " +
+      "and reloads its state after a restart") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import scala.jdk.CollectionConverters._
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-forks")
+    val jfr = java.nio.file.Files.createTempFile("graft-forks", ".jfr")
+    val in = MemoryStream[Long]
+    // each batch runs in its own query over one checkpoint, so batch 2's
+    // stores are new provider instances that load batch 1's state from
+    // disk (complete mode: the memory sink recovers only in that mode)
+    def run(sink: String, ids: Long*): Seq[(Long, Long)] = {
+      val q = in.toDF.toDF("id").groupBy("id").count()
+        .writeStream.outputMode("complete").format("memory")
+        .queryName(sink)
+        .option("checkpointLocation", ckpt.toString)
+        .start()
+      try { in.addData(ids: _*); q.processAllAvailable() }
+      finally q.stop()
+      spark.table(sink).as[(Long, Long)].collect().sorted.toSeq
+    }
+    val rec = new jdk.jfr.Recording()
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      val (first, second) = StreamingOps.withStreamConf(spark) {
+        (run("fork_guard_1", 1L, 2L), run("fork_guard_2", 1L, 3L))
+      }
+      rec.stop()
+      assert(first == Seq((1L, 1L), (2L, 1L)))
+      // the reloaded state carries batch 1's counts
+      assert(second == Seq((1L, 2L), (2L, 1L), (3L, 1L)))
+      rec.dump(jfr)
+      val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+        .map(_.getString("command"))
+      val forked = commands.filter { c =>
+        val exe = c.trim.split("\\s+").head
+        Set("chmod", "readlink")(exe.substring(exe.lastIndexOf('/') + 1))
+      }
+      val n = forked.size
+      assert(n == 0, s"forks, e.g. ${forked.take(3)}")
+    } finally {
+      rec.close()
+      graft.io.NioLocalFileSystem.deleteRecursively(ckpt)
+      java.nio.file.Files.deleteIfExists(jfr)
+    }
+  }
+
+  test("the AvailableNow runners delete their per-call stream dirs when " +
+      "the stream ends, and the returned table still reads") {
+    val events = s"$sfDir/events.parquet"
+    val expected = Tables.events(spark, sfDir).count()
+    // the stream's source dir, read off the streaming plan the runner
+    // hands to the transform
+    var streamDir: Option[String] = None
+    def capture(df: org.apache.spark.sql.DataFrame) = {
+      streamDir = "graft-stream(-2b)?\\d+".r
+        .findFirstIn(df.queryExecution.analyzed.toString)
+      df.select("event_id")
+    }
+    val (single, _) = StreamingOps.withStreamConf(spark) {
+      StreamingOps.runAvailableNowProgress(spark, events, "reclaim_single")(capture)
+    }
+    val singleDir = streamDir
+    streamDir = None
+    val (split, progress) = StreamingOps.withStreamConf(spark) {
+      StreamingOps.runAvailableNowDateSplitProgress(spark, events,
+        "reclaim_split")(capture)
+    }
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    for ((dir, prefix) <- Seq(singleDir -> "graft-stream",
+        streamDir -> "graft-stream-2b")) {
+      assert(dir.exists(_.startsWith(prefix)), dir)
+      assert(!java.nio.file.Files.exists(tmp.resolve(dir.get)), dir)
+    }
+    assert(progress.count(_.numInputRows > 0) == 2) // both phases streamed
+    assert(single.count() == expected && split.count() == expected)
+    // the symlink went with its dir; the corpus file it pointed at stays
+    assert(new java.io.File(events).isFile)
   }
 }

@@ -31,7 +31,7 @@ object CorpusCheck {
       val path = s"$sfDir/$t.parquet"
       if (!new java.io.File(path).exists()) None
       else {
-        val df = spark.read.parquet(path)
+        val df = Tables.table(spark, sfDir, t)
         val r = operators.Maintenance
           .tableFingerprint(df, df.columns.toSeq).head()
         val schemaHash = md5Hex(df.schema.catalogString)

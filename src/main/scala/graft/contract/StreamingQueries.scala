@@ -38,7 +38,7 @@ object StreamingQueries {
       java.nio.file.Files.deleteIfExists(link)
       java.nio.file.Files.createSymbolicLink(
         link, java.nio.file.Paths.get(path).toAbsolutePath)
-      val sch = s.read.parquet(path).schema
+      val sch = schemaOf(s, path)
       val qname = s"q90_mem_$tok"
       s.catalog.dropTempView(qname)
       StreamingOps.withStreamConf(s) {
@@ -120,7 +120,7 @@ object StreamingQueries {
       java.nio.file.Files.deleteIfExists(link)
       java.nio.file.Files.createSymbolicLink(
         link, java.nio.file.Paths.get(path).toAbsolutePath)
-      val sch = s.read.parquet(path).schema
+      val sch = schemaOf(s, path)
       val qname = s"q96_mem_$tok"
       s.catalog.dropTempView(qname)
       val stream = s.readStream.schema(sch).parquet(srcDir.toString)
@@ -346,7 +346,7 @@ object StreamingQueries {
       val ckpt = tmpScratch(s"q222_ck_$tok")
       rmTree(outDir); rmTree(ckpt)
       writeOne(base.filter(col("ts") >= lit(tsplit)), "0001.parquet", 1000000L)
-      val sch = s.read.parquet(dir.toString).schema
+      val sch = schemaOf(s, dir.toString)
       // two INCREMENTAL AvailableNow runs against one checkpoint: run 1
       // sees only the tail file (watermark persists to state); run 2 sees
       // only the early file with the RESTORED watermark — every row late

@@ -762,7 +762,7 @@ object Corpus {
       numHashes: Int = 16): DataFrame =
     // fanOutScan measured negative here (r22, part of q112's +0.6 with
     // the shd spread) — the lane pass flows into the sketch aggregate's
-    // own exchange either way. Left unspread (see Dedup.fanOutScan).
+    // own exchange either way. Left unspread (see Spread.fanOutScan).
     docs.filter(length(trim(col(textCol))) > 0)
       .select(col(groupCol),
         posexplode(org.apache.spark.sql.GraftBridge.column(
@@ -1137,10 +1137,10 @@ object Corpus {
     // more than the saved second aggregation, whose input the two
     // consumers' exchanges already overlap. Keep the recompute.
     // CPU-dense shingle explode: fan a narrower-than-cores scan out first
-    // (r22, Dedup.fanOutScan — the pass otherwise runs single-task on a
+    // (r22, Spread.fanOutScan — the pass otherwise runs single-task on a
     // single-row-group corpus file, TWICE since sg is recomputed per
     // consumer; a real corpus has enough scan partitions to skip this)
-    val sg = Dedup.fanOutScan(docs, col(textCol))
+    val sg = Spread.fanOutScan(docs, col(textCol))
       .filter(length(trim(col(textCol))) > 0)
       .select(col(srcCol).as("src"), explode(shingles).as("g"))
       .distinct()

@@ -43,57 +43,6 @@ object Dedup {
       case _ => ()
     }
 
-  /** Fan a narrower-than-cores scan out to the default parallelism before
-    * a CPU-dense per-row pass (r22, generalizing prefixToks' r11 spread):
-    * a single-row-group corpus file scans as ONE partition, and every
-    * native text pass built directly on it — minhash lanes, shingle
-    * explodes, winnow fingerprints, hash-array builds (including the ones
-    * that execute inside a BroadcastExchange build or a localCheckpoint
-    * job) — runs as ONE task while the other cores idle (measured: q121's
-    * per-job timeline showed a 3.3 s single-task broadcast build as the
-    * query's long pole). A real corpus has plenty of scan partitions and
-    * skips this shuffle entirely, so the at-scale plan is unchanged.
-    *
-    * The width is read from `df`'s physical plan ([[scanPartitions]])
-    * rather than from `df.rdd`, so an adaptive plan is never executed
-    * just to count its partitions, and a streaming frame passes through
-    * unchanged. */
-  private[graft] def fanOutScan(df: DataFrame,
-      key: org.apache.spark.sql.Column): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    // HASH repartition on a caller-supplied high-cardinality key, not
-    // round-robin: every keyless repartition(n) first pays a LOCAL SORT
-    // of its input (spark.sql.execution.sortBeforeRepartition, on by
-    // default so retried tasks reproduce the same row placement — guide
-    // §2.5), and on a 1-partition scan that sort of the full text
-    // payloads is itself a serial pass. Hash placement is deterministic
-    // by value, so it needs no sort and is retry-safe by construction.
-    if (df.isStreaming) df
-    else scanPartitions(df) match {
-      case Some(n) if n < par => df.repartition(par, key)
-      case _ => df
-    }
-  }
-
-  /** The partition count `df` runs at when its physical plan is one leaf
-    * (file scan, cached frame, checkpoint, local rows, range) under narrow
-    * operators only: that leaf's RDD width. Building the leaf's RDD runs
-    * no job, except for a not-yet-built cache over a shuffling plan, which
-    * `df.rdd` built too. None when the plan has an exchange, is adaptive,
-    * or has several leaves. */
-  private[graft] def scanPartitions(df: DataFrame): Option[Int] = {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.Exchange
-    val plan = df.queryExecution.executedPlan
-    val shuffles = plan.exists(_.isInstanceOf[Exchange])
-    plan.collectLeaves() match {
-      // an adaptive plan is itself a leaf, and executing it runs its stages
-      case Seq(_: AdaptiveSparkPlanExec) => None
-      case Seq(leaf) if !shuffles => Some(leaf.execute().getNumPartitions)
-      case _ => None
-    }
-  }
-
   /** Exact dedup: group on the MD5 of normalized text, keep the smallest id.
     * Returns (text_hash, keeper, n_dups). */
   def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -132,7 +81,8 @@ object Dedup {
     // q63 +0.4..+0.5 s) — the shingle pass is cheap enough that the
     // text shuffle + extra stage cost more than the parallelism buys;
     // the lane minima flow into the signature aggregate's own exchange
-    // either way. Left unspread; see fanOutScan for where it DOES pay.
+    // either way. Left unspread; see Spread.fanOutScan for where it DOES
+    // pay.
     val shing = docs.select(col(idCol).as("doc_id"),
       explode(graft.functions.ShingleOps.wordShinglesCol(col(textCol), shingleN)).as("s"))
       .select(col("doc_id"), fam.prep(col("s")).as("ph"))
@@ -213,7 +163,7 @@ object Dedup {
     // fanOutScan measured ~neutral-to-negative here (r22: q107 +0.1,
     // q112 +0.6 min-of-3 interleaved with the sketch spread) — the md5
     // lane pass on this corpus shape is cheaper than the text shuffle
-    // the spread adds. Left unspread; see fanOutScan for where it pays.
+    // the spread adds. Left unspread; see Spread.fanOutScan for where it pays.
     docs.select(col(idCol).as("doc_id"),
       org.apache.spark.sql.GraftBridge.column(graft.functions.Md5MinhashLanes(
         org.apache.spark.sql.GraftBridge.expression(col(textCol)),
@@ -1148,7 +1098,7 @@ object Dedup {
     // build as the query's long pole, every other job done 2.5 s
     // earlier). A real corpus has plenty of scan partitions and skips
     // this shuffle.
-    val arrs = fanOutScan(docs, col(idCol))
+    val arrs = Spread.fanOutScan(docs, col(idCol))
       .filter(length(trim(col(textCol))) > 0)
       .select(col(idCol).as("doc_id"),
         TextFunctions.charShingleHashes(
@@ -1783,7 +1733,7 @@ object Dedup {
     // spread a narrower-than-cores scan before the hash-array pass — the
     // broadcast build otherwise runs it at the scan's own parallelism
     // (one task on a single-row-group file; see jaccardVerify, r22)
-    val arrs = fanOutScan(docs, col(idCol))
+    val arrs = Spread.fanOutScan(docs, col(idCol))
       .filter(length(trim(col(textCol))) > 0)
       .select(col(idCol).as("doc_id"),
         TextFunctions.charShingleHashes(
@@ -1972,7 +1922,7 @@ object Dedup {
     require(gramN >= 2, s"gramN must be >= 2: $gramN")
     // fanOutScan measured NEGATIVE here (r22: q196 +0.36, q200 +0.37
     // min-of-3 interleaved) — the split+gram pass is cheaper than the
-    // text shuffle the spread adds. Left unspread (see fanOutScan).
+    // text shuffle the spread adds. Left unspread (see Spread.fanOutScan).
     val base = docs.filter(length(trim(col(textCol))) > 0)
       .select(col(idCol).as("doc_id"),
         split(trim(lower(col(textCol))), "\\s+").as("toks"))
@@ -2138,8 +2088,8 @@ object Dedup {
     // the winnow pass is CPU-bound per doc: fan a narrower-than-cores
     // scan out first (r22 — without this the whole fingerprint pass ran
     // as ONE task on a single-row-group corpus file, measured as q119's
-    // largest job; see fanOutScan)
-    val fpsPlan = fanOutScan(docs, col(idCol))
+    // largest job; see Spread.fanOutScan)
+    val fpsPlan = Spread.fanOutScan(docs, col(idCol))
       .filter(length(trim(col(textCol))) > 0)
       .select(col(idCol).as("doc_id"),
         explode(GraftBridge.column(graft.functions.WinnowFingerprints(

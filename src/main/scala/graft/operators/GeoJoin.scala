@@ -48,6 +48,18 @@ object GeoJoin {
   private def nCellsOf(cellDeg: Column): Column =
     greatest(floor(lit(360.0) / cellDeg).cast("long"), lit(1L))
 
+  /** `left` round-robin repartitioned to the default parallelism when it
+    * is a single-leaf scan narrower than that, else unchanged. The width is
+    * read from the physical plan ([[Spread.scanPartitions]]), so building
+    * the join starts no second QueryExecution the way `left.rdd` did. */
+  private def spreadNarrowScan(left: DataFrame): DataFrame = {
+    val par = left.sparkSession.sparkContext.defaultParallelism
+    Spread.scanPartitions(left) match {
+      case Some(n) if n < par => left.repartition(par)
+      case _ => left
+    }
+  }
+
   /** All (left, right) pairs with haversine distance ≤ radiusM, plus a
     * `dist_m` column. `left` needs (lat1, lon1); `right` (lat2, lon2). */
   def radiusJoin(left: DataFrame, right: DataFrame, radiusM: Double,
@@ -70,10 +82,7 @@ object GeoJoin {
     // the probe side's partitions when the build side broadcasts — fan out a
     // small-file scan so it isn't single-threaded. Large inputs keep their
     // native partitioning.
-    val par = left.sparkSession.sparkContext.defaultParallelism
-    val lSpread =
-      if (left.rdd.getNumPartitions < par) left.repartition(par) else left
-    val l = lSpread.withColumn("gk", explode(lKeys))
+    val l = spreadNarrowScan(left).withColumn("gk", explode(lKeys))
     val r = right.withColumn("gk",
       key(bandOf(col(lat2), bandDeg), col(lon2), 0))
 
@@ -156,10 +165,8 @@ object GeoJoin {
     // The scan is CPU-bound (O(|points|) per row): if the source arrives in
     // fewer partitions than cores (small files), fan it out first. A big left
     // side already has plenty of scan partitions and skips this shuffle.
-    val par = left.sparkSession.sparkContext.defaultParallelism
-    val spread =
-      if (left.rdd.getNumPartitions < par) left.repartition(par) else left
-    spread.select(col(leftKey), posexplode(GraftBridge.column(expr)).as(Seq("pos", "nn")))
+    spreadNarrowScan(left)
+      .select(col(leftKey), posexplode(GraftBridge.column(expr)).as(Seq("pos", "nn")))
       .select(col(leftKey), (col("pos") + 1).cast("long").as("knn_rank"),
         col("nn.key").as(rightKey), col("nn.dist").as("dist_m"))
   }

@@ -37,48 +37,52 @@ object WasdeTransforms {
   def stripFootnotes(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     trim(regexp_replace(c, "\\b\\d{1,2}/", ""))
 
-  /** Parse one or many sheets of supply/use rows into the measured table. */
+  /** Parse one or many sheets of supply/use rows into the measured table.
+    * Built in four steps, each one analysis of the plan so far: the label
+    * and the numeric repairs (no window or filter reads the numerics), the
+    * two row flags, the four carry-forward windows, then the filter and
+    * `total_use` under one final projection. */
   def parseSupplyUse(rows: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("sheet")).orderBy(col("rowIdx"))
     val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
     val labeled = rows
-      .withColumn("label", stripFootnotes(col("geo")))
-      // group-header rows carry no numbers
-      .withColumn("is_group", col("label").isin(groupLabels: _*))
-      // year header rows like `2025/26 (Est.)` / `2025/26 (Proj.)`
-      .withColumn("is_year", col("label").rlike("^\\d{4}/\\d{2}"))
-      .withColumn("grupo",
-        last(when(col("is_group"), col("label")), ignoreNulls = true).over(run))
-      .withColumn("tipo",
-        last(when(col("is_year"),
-          when(col("label").contains("Est"), "EST")
-            .when(col("label").contains("Proj"), "PROJ")
-            .otherwise("YEAR")), ignoreNulls = true).over(run))
-      .withColumn("harvest",
-        last(when(col("is_year"), regexp_extract(col("label"), "^(\\d{4}/\\d{2})", 1)),
-          ignoreNulls = true).over(run))
-      // blank continuation geography → previous row's geography
-      .withColumn("geography",
-        last(when(col("label") =!= "", col("label")), ignoreNulls = true).over(run))
+      .withColumns(Map("label" -> stripFootnotes(col("geo"))) ++
+        numericCols.map(c => c -> Transforms.repairNumeric(col(c))))
+      .withColumns(Map(
+        // group-header rows carry no numbers
+        "is_group" -> col("label").isin(groupLabels: _*),
+        // year header rows like `2025/26 (Est.)` / `2025/26 (Proj.)`
+        "is_year" -> col("label").rlike("^\\d{4}/\\d{2}")))
+      .withColumns(Map(
+        "grupo" ->
+          last(when(col("is_group"), col("label")), ignoreNulls = true).over(run),
+        "tipo" ->
+          last(when(col("is_year"),
+            when(col("label").contains("Est"), "EST")
+              .when(col("label").contains("Proj"), "PROJ")
+              .otherwise("YEAR")), ignoreNulls = true).over(run),
+        "harvest" ->
+          last(when(col("is_year"),
+            regexp_extract(col("label"), "^(\\d{4}/\\d{2})", 1)),
+            ignoreNulls = true).over(run),
+        // blank continuation geography → previous row's geography
+        "geography" ->
+          last(when(col("label") =!= "", col("label")), ignoreNulls = true)
+            .over(run)))
 
-    val measured = numericCols.foldLeft(labeled) { (df, c) =>
-      df.withColumn(c, Transforms.repairNumeric(col(c)))
-    }
-
-    measured
+    labeled
       .filter(!col("is_group") && !col("is_year") &&
         !col("geography").isin(skipLabels: _*) && col("grupo").isNotNull)
       .withColumn("total_use", col("dom_total") + col("exports"))
-      .withColumn("stocks_to_use",
-        Transforms.guardedRatio(col("ending"), col("total_use"), lit(100)))
-      .withColumn("orden",
-        row_number().over(Window.partitionBy(col("sheet"), col("tipo"))
-          .orderBy(col("rowIdx"))))
       .select(Seq(col("sheet"), col("rowIdx"), col("grupo"), col("tipo"),
-        col("harvest"), col("geography"), col("orden")) ++
+        col("harvest"), col("geography"),
+        row_number().over(Window.partitionBy(col("sheet"), col("tipo"))
+          .orderBy(col("rowIdx"))).as("orden")) ++
         numericCols.map(col) ++
-        Seq(col("total_use"), col("stocks_to_use")): _*)
+        Seq(col("total_use"),
+          Transforms.guardedRatio(col("ending"), col("total_use"), lit(100))
+            .as("stocks_to_use")): _*)
   }
 
   /** p22/p23-family world supply/use pages (`HTGPIWASDE/__init__.py:621-833`):

@@ -231,7 +231,7 @@ object StreamingOps {
         Some(dir)
       } else None
     try {
-      val batchSchema = spark.read.parquet(path).schema
+      val batchSchema = graft.Tables.schemaOf(spark, path)
       val raw = spark.readStream.schema(batchSchema)
         .parquet(linkDir.fold(path)(_.toString))
       // Same three-encoding normalization as the batch path — `withWatermark`
@@ -278,7 +278,8 @@ object StreamingOps {
       timeCol: String = "ts")(
       transform: DataFrame => DataFrame)
       : (DataFrame, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
-    val batch0 = spark.read.parquet(path)
+    val batch0 =
+      spark.read.schema(graft.Tables.schemaOf(spark, path)).parquet(path)
     val batch =
       if (batch0.schema.fieldNames.contains("ts"))
         graft.Tables.normalizeEventTime(batch0)
@@ -344,7 +345,7 @@ object StreamingOps {
           unix_micros(col(timeCol)) >= lit(splitUs)))))
       // phase files are written POST-normalization, so the stream schema is
       // plain session-TZ TIMESTAMP — no second normalization pass
-      val sch = spark.read.parquet(dir.toString).schema
+      val sch = graft.Tables.schemaOf(spark, dir.toString)
       val raw = spark.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(dir.toString)
       val q = transform(raw).writeStream

@@ -1,6 +1,8 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.errors.QueryCompilationErrors
+import org.apache.spark.sql.types.StructType
 
 /** Bridge to Spark's package-private Column ↔ Expression conversions
   * (`org.apache.spark.sql.classic.ExpressionUtils`), needed to expose custom
@@ -16,4 +18,16 @@ object GraftBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** The pieces of `spark.read.parquet`'s schema resolution that
+    * `graft.Tables.schemaOf` repeats: the nullable relation schema, the
+    * hidden-file rule of Spark's file listing, and its two errors
+    * (PATH_NOT_FOUND, UNABLE_TO_INFER_SCHEMA). */
+  def asNullable(schema: StructType): StructType = schema.asNullable
+  def isHiddenFile(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+  def pathNotFound(path: String): Throwable =
+    QueryCompilationErrors.dataPathNotExistError(path)
+  def unableToInferSchema(format: String): Throwable =
+    QueryCompilationErrors.dataSchemaNotSpecifiedError(format)
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Similarity, Spread}
 
 class DedupSimilaritySpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.session
@@ -24,11 +24,11 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("fanout").toString
     docs.repartition(1).write.mode("overwrite").parquet(dir)
     val scan = spark.read.parquet(dir)
-    assert(Dedup.scanPartitions(scan) == Some(1))
-    assert(Dedup.scanPartitions(scan.filter(col("lang") === "en")) == Some(1))
+    assert(Spread.scanPartitions(scan) == Some(1))
+    assert(Spread.scanPartitions(scan.filter(col("lang") === "en")) == Some(1))
     // an exchange decides the width, not the scan
-    assert(Dedup.scanPartitions(scan.groupBy("lang").count()).isEmpty)
-    val spread = Dedup.fanOutScan(scan, col("doc_id"))
+    assert(Spread.scanPartitions(scan.groupBy("lang").count()).isEmpty)
+    val spread = Spread.fanOutScan(scan, col("doc_id"))
     assert(spread.rdd.getNumPartitions ==
       spark.sparkContext.defaultParallelism)
     assert(spread.collect().toSet == scan.collect().toSet)
@@ -36,16 +36,16 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // local checkpoint, local rows and a range spread like the scan
     val cached = scan.cache()
     try {
-      assert(Dedup.scanPartitions(cached) == Some(1))
-      assert(Dedup.fanOutScan(cached, col("doc_id")).rdd.getNumPartitions ==
+      assert(Spread.scanPartitions(cached) == Some(1))
+      assert(Spread.fanOutScan(cached, col("doc_id")).rdd.getNumPartitions ==
         spark.sparkContext.defaultParallelism)
     } finally cached.unpersist()
-    assert(Dedup.scanPartitions(scan.localCheckpoint()) == Some(1))
-    assert(Dedup.scanPartitions(docs.limit(1)) == Some(1))
-    assert(Dedup.scanPartitions(spark.range(0, 10, 1, 1).toDF()) == Some(1))
+    assert(Spread.scanPartitions(scan.localCheckpoint()) == Some(1))
+    assert(Spread.scanPartitions(docs.limit(1)) == Some(1))
+    assert(Spread.scanPartitions(spark.range(0, 10, 1, 1).toDF()) == Some(1))
     // df.rdd on a streaming frame throws; the plan-based probe never asks
     val stream = spark.readStream.schema(scan.schema).parquet(dir)
-    assert(Dedup.fanOutScan(stream, col("doc_id")) eq stream)
+    assert(Spread.fanOutScan(stream, col("doc_id")) eq stream)
   }
 
   test("exact dedup groups case/whitespace-normalized duplicates") {

@@ -12,8 +12,8 @@ import graft.operators.Overlap
 
 /** The run harness around the queries: the one session policy, the
   * query/oracle contract, the bench's retest-reference resolution,
-  * `Overlap.runAll`'s failure handling and the census of main-code
-  * knobs. */
+  * `Overlap.runAll`'s failure handling, and the censuses of main-code
+  * knobs and schema-less parquet reads. */
 class HarnessSpec extends AnyFunSuite with TimeLimits {
   implicit val signaler: Signaler = ThreadSignaler
 
@@ -122,5 +122,43 @@ class HarnessSpec extends AnyFunSuite with TimeLimits {
         .map(k => s"${f.getFileName}: $k")
     }.distinct
     assert(knobs.isEmpty, "an experiment came back as a knob")
+  }
+
+  test("schema census: main code reads parquet without a schema only where " +
+      "Spark's inference is the point") {
+    import scala.jdk.CollectionConverters._
+    val files = Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 10, "src/main/scala not found from the working dir")
+    // a batch parquet read with no .schema(...) runs a one-task job to
+    // infer one; table and stream-source reads take Tables.schemaOf instead
+    val schemaLess = """\bread(?:\s*\.\s*option\([^()]*\))*\s*\.\s*parquet\(""".r
+    val comments = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val reads = files.flatMap { f =>
+      val src = comments.replaceAllIn(Files.readString(f), "")
+      // each read is named by the line its `read` starts on
+      schemaLess.findAllMatchIn(src).map { m =>
+        val end = src.indexOf('\n', m.start)
+        src.substring(src.lastIndexOf('\n', m.start) + 1,
+          if (end < 0) src.length else end).trim
+      }.map(l => s"${f.getFileName}: $l")
+    }
+    // partitioned and mergeSchema layouts, and directories the engine
+    // wrote itself (q222's also carries the file sink's metadata log)
+    val allowed = Set(
+      "IngestQueries.scala: s.read.parquet(dir)",
+      "MaintenanceQueries.scala: s.read.parquet(tmp)",
+      "MaintenanceQueries.scala: s.read.option(\"mergeSchema\", \"true\")" +
+        ".parquet(s\"$dir/b=1\", s\"$dir/b=2\")",
+      "MaintenanceQueries.scala: s.read.parquet(dir)",
+      "MaintenanceQueries.scala: fp(s.read.parquet(s\"$tmp/p\"), \"parquet\")",
+      "StreamingQueries.scala: s.read.parquet(outDir.toString)",
+      "StreamingOps.scala: else spark.read.parquet(targetDir)" +
+        ".withColumn(\"_src\", lit(0))",
+      "Maintenance.scala: spark.read.parquet(dir).repartition(nOut)",
+      "Verify.scala: val df = spark.read.parquet(s\"$outDir/$name\")")
+    assert(allowed.forall(reads.contains), "an allowed site is gone or moved")
+    assert(reads.filterNot(allowed).isEmpty,
+      "a parquet read infers its schema with a job; use Tables.schemaOf")
   }
 }

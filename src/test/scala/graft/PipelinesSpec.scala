@@ -119,6 +119,14 @@ class PipelinesSpec extends AnyFunSuite {
       .toDF("sheet", "rowIdx", "geo", "beginning", "production", "imports",
         "dom_feed", "dom_total", "exports", "ending")
     val out = WasdeTransforms.parseSupplyUse(rows).orderBy("rowIdx")
+    // the columns, their order, types and nullability (as built in ~18 steps)
+    assert(out.schema.toDDL == "sheet STRING,rowIdx BIGINT NOT NULL," +
+      "grupo STRING,tipo STRING,harvest STRING,geography STRING," +
+      "orden INT NOT NULL,beginning DOUBLE NOT NULL," +
+      "production DOUBLE NOT NULL,imports DOUBLE NOT NULL," +
+      "dom_feed DOUBLE NOT NULL,dom_total DOUBLE NOT NULL," +
+      "exports DOUBLE NOT NULL,ending DOUBLE NOT NULL," +
+      "total_use DOUBLE NOT NULL,stocks_to_use DOUBLE")
     val got = out.collect()
     assert(got.length == 3) // Brazil, continuation, Argentina
     val brazil = got(0)

@@ -1,0 +1,107 @@
+package graft
+
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Repartition
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.GeoJoin
+
+/** Building a plan is not running it: the etl_ref builders start no Spark
+  * job and no query execution of their own (no schema-inference job, no
+  * `.rdd` probe), so all their work is left to the one execution. */
+class PlanBuildSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestBase.session
+  private val sf = "perfbench/corpus/sf0.001"
+
+  /** (jobs, query executions) that `body` started on this thread. Listener
+    * events arrive asynchronously and in order, so a marker action run
+    * after `body` is the point by which all of `body`'s events were seen. */
+  private def sideWork(s: SparkSession)(body: => Unit): (Seq[Int], Int) = {
+    val sc = s.sparkContext
+    val group = s"plan-build-${System.nanoTime}"
+    val jobs = new ConcurrentLinkedQueue[Int]
+    val qes = new ConcurrentLinkedQueue[String]
+    val markerSeen = new CountDownLatch(1)
+    def inGroup(p: java.util.Properties) =
+      p != null && p.getProperty("spark.jobGroup.id") == group
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (inGroup(e.properties)) jobs.add(e.jobId)
+    }
+    val qeListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.logical.toString.contains("plan_build_marker")) markerSeen.countDown()
+        else qes.add(f)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        qes.add(f)
+    }
+    sc.addSparkListener(jobListener)
+    s.listenerManager.register(qeListener)
+    try {
+      sc.setJobGroup(group, "plan build")
+      try body finally sc.clearJobGroup()
+      s.range(1).select(lit(1).as("plan_build_marker")).collect()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "listener events lag")
+      // the job listener shares the queue the marker's events went through
+      (jobs.toArray.toSeq.map(_.asInstanceOf[Int]), qes.size)
+    } finally {
+      s.listenerManager.unregister(qeListener)
+      sc.removeSparkListener(jobListener)
+    }
+  }
+
+  test("etl_ref builders start no job and no query execution") {
+    val names = Seq("q03_watermark_join", "q08_unpivot", "q21_window_agg",
+      "q33_fixed_width", "q37_wasde_parse", "q38_geo_radius_join",
+      "q247_pl_contract")
+    val byName = SparkEntry.contracts.map(c => c.name -> c.plan).toMap
+    val started = names.map { n =>
+      var df: DataFrame = null
+      val (jobs, qes) = sideWork(spark) { df = byName(n)(spark, sf) }
+      assert(df != null)
+      n -> (jobs.size, qes)
+    }.toMap
+    assert(started == names.map(_ -> (0, 0)).toMap)
+  }
+
+  test("radiusJoin spreads a narrow scan, from the physical plan alone") {
+    val dir = java.nio.file.Files.createTempDirectory("plan-build").toString
+    spark.range(0, 40, 1, 1)
+      .select(col("id").as("k"), (col("id") % 17).cast("double").as("lat"),
+        (col("id") % 29).cast("double").as("lon"))
+      .write.mode("overwrite").parquet(s"$dir/one")
+    spark.range(0, 40, 1, 4)
+      .select(col("id").as("k"), (col("id") % 17).cast("double").as("lat"),
+        (col("id") % 29).cast("double").as("lon"))
+      .write.mode("overwrite").parquet(s"$dir/four")
+    def scan(p: String) =
+      spark.read.schema(Tables.schemaOf(spark, p)).parquet(p)
+    val right = scan(s"$dir/one")
+      .select(col("k").as("r"), col("lat").as("s_lat"), col("lon").as("s_lon"))
+    val par = spark.sparkContext.defaultParallelism
+    def spreads(left: DataFrame): Seq[Int] = {
+      var out: DataFrame = null
+      val (jobs, qes) = sideWork(spark) {
+        out = GeoJoin.radiusJoin(left, right, 300000.0,
+          "lat", "lon", "s_lat", "s_lon")
+      }
+      assert((jobs, qes) == (Nil, 0), "building the join ran side work")
+      out.queryExecution.logical.collect {
+        case r: Repartition if r.shuffle => r.numPartitions
+      }
+    }
+    val narrow = scan(s"$dir/one")
+    assert(narrow.queryExecution.executedPlan.execute().getNumPartitions == 1)
+    assert(spreads(narrow) == Seq(par))
+    // a scan as wide as the cores keeps its partitioning
+    val wide = scan(s"$dir/four")
+    assert(wide.queryExecution.executedPlan.execute().getNumPartitions >= par)
+    assert(spreads(wide).isEmpty)
+  }
+}

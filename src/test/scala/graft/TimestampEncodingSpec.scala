@@ -71,6 +71,15 @@ class TimestampEncodingSpec extends AnyFunSuite {
     assert(normalized("utc").map(_._2) == micros)
   }
 
+  test("Tables.schemaOf reads each encoding as Spark's inference does") {
+    writeVariants().foreach { case (tag, path) =>
+      val inferred = spark.read.parquet(path).schema
+      val read = Tables.schemaOf(spark, path)
+      assert(read == inferred, tag)
+      assert(read.json == inferred.json, s"$tag: metadata differs")
+    }
+  }
+
   test("runAvailableNow watermark works on every encoding (NTZ is the strict case)") {
     val variants = writeVariants()
     variants.foreach { case (tag, path) =>

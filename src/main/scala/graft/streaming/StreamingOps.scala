@@ -50,11 +50,26 @@ object StreamingOps {
     *    paths, so they are set whatever the checkpoint root is. The session
     *    is where they take effect: a builder-level key would lose to the
     *    stock instance in the JVM-wide FS cache.
+    *  - `spark.sql.artifact.isolation.enabled` = false. Spark runs each
+    *    stream in a cloned session with a new `sessionUUID`, and with
+    *    isolation on the executor gives that session's tasks a new class
+    *    loader. `CodeGenerator`'s cache is keyed by (class loader, source),
+    *    so every stream run compiled all of its generated code again
+    *    (OPTIMIZATION_r26.md). A stream's session copies this conf when it
+    *    starts, runs its tasks in the executor's default session, and so
+    *    reuses the classes earlier runs compiled. The engine adds no
+    *    session artifacts (HarnessSpec's artifact census), so there is
+    *    nothing to isolate. The parent session reads the key once, lazily;
+    *    it is read here before the key is set, so the parent keeps its own
+    *    artifact state.
     *
     * Only the session-level root is checked: a body that gives a stream its
     * own `checkpointLocation` must keep it local. */
   def withStreamConf[T](spark: SparkSession)(body: => T): T = {
-    val settings = Seq("spark.sql.shuffle.partitions" -> "4") ++
+    // fixes the parent's artifact state before the isolation key is set
+    org.apache.spark.sql.GraftBridge.artifactSessionUuid(spark)
+    val settings = Seq("spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.artifact.isolation.enabled" -> "false") ++
       (if (checkpointRootIsLocal(spark))
         Seq("spark.sql.streaming.checkpointFileManagerClass" -> FileSystemManager)
       else Nil) ++

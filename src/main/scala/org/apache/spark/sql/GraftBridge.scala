@@ -30,4 +30,16 @@ object GraftBridge {
     QueryCompilationErrors.dataPathNotExistError(path)
   def unableToInferSchema(format: String): Throwable =
     QueryCompilationErrors.dataSchemaNotSpecifiedError(format)
+
+  /** The session UUID its jobs carry to the executors, or None when they
+    * run in the executor's default session. Spark's `ArtifactManager`
+    * decides this once per session, lazily, from
+    * `spark.sql.artifact.isolation.enabled`; the first call fixes it. */
+  def artifactSessionUuid(spark: SparkSession): Option[String] =
+    Option(spark.asInstanceOf[classic.SparkSession].artifactManager.state)
+      .map(_.uuid)
+
+  /** The session's own UUID (`sessionUUID` is `private[sql]`). */
+  def sessionUuid(spark: SparkSession): String =
+    spark.asInstanceOf[classic.SparkSession].sessionUUID
 }

@@ -124,6 +124,24 @@ class HarnessSpec extends AnyFunSuite with TimeLimits {
     assert(knobs.isEmpty, "an experiment came back as a knob")
   }
 
+  test("artifact census: main code adds no session artifact, so streams " +
+      "can run without artifact isolation") {
+    import scala.jdk.CollectionConverters._
+    val files = Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 10, "src/main/scala not found from the working dir")
+    // StreamingOps.withStreamConf turns spark.sql.artifact.isolation.enabled
+    // off for its streams' sessions; a jar, file, archive or class added to
+    // a session would then reach every stream's tasks
+    val add = """\.\s*add(?:Artifacts?|Jar|File|Archive)\s*\(""".r
+    val comments = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val calls = files.flatMap { f =>
+      val src = comments.replaceAllIn(Files.readString(f), "")
+      add.findAllIn(src).map(c => s"${f.getFileName}: $c")
+    }
+    assert(calls.isEmpty, "main code adds a session artifact")
+  }
+
   test("schema census: main code reads parquet without a schema only where " +
       "Spark's inference is the point") {
     import scala.jdk.CollectionConverters._

@@ -666,6 +666,7 @@ class StreamingSpec extends AnyFunSuite {
     "checkpointing.FileSystemBasedCheckpointFileManager"
   private val fsImplKey = "fs.file.impl"
   private val fsCacheKey = "fs.file.impl.disable.cache"
+  private val isoKey = "spark.sql.artifact.isolation.enabled"
 
   /** The `file:` file system a stream of the session would get. */
   private def localFs: org.apache.hadoop.fs.FileSystem =
@@ -684,36 +685,41 @@ class StreamingSpec extends AnyFunSuite {
 
   test("withStreamConf sets both keys inside and restores set and unset " +
       "keys afterwards, also when the body throws") {
-    keepingConf(partsKey, mgrKey, ckptKey, fsImplKey, fsCacheKey) {
+    keepingConf(partsKey, mgrKey, ckptKey, fsImplKey, fsCacheKey, isoKey) {
       spark.conf.unset(ckptKey)
       val stockFs = localFs.getClass
       // earlier state: partitions and the FS cache key set to non-default
-      // values, manager and file system unset
+      // values, manager, file system and artifact isolation unset
       spark.conf.set(partsKey, "7")
       spark.conf.set(fsCacheKey, "false")
       spark.conf.unset(mgrKey)
       spark.conf.unset(fsImplKey)
+      spark.conf.unset(isoKey)
       val inside = StreamingOps.withStreamConf(spark) {
         (spark.conf.get(partsKey), spark.conf.getOption(mgrKey),
           spark.conf.getOption(fsImplKey), spark.conf.getOption(fsCacheKey),
-          localFs.getClass)
+          spark.conf.getOption(isoKey), localFs.getClass)
       }
       assert(inside == (("4", Some(fsManager),
         Some(classOf[graft.io.NioLocalFileSystem].getName), Some("true"),
-        classOf[graft.io.NioLocalFileSystem])))
+        Some("false"), classOf[graft.io.NioLocalFileSystem])))
       assert(spark.conf.get(partsKey) == "7")
       assert(spark.conf.get(fsCacheKey) == "false")
       assert(!spark.conf.getAll.contains(mgrKey), "unset key left set")
       assert(!spark.conf.getAll.contains(fsImplKey), "unset key left set")
+      assert(!spark.conf.getAll.contains(isoKey), "unset key left set")
       assert(localFs.getClass == stockFs)
 
-      // a throwing body restores too; a set manager gets its value back
+      // a throwing body restores too; a set manager and a set isolation
+      // key get their values back
       val fileContext = "org.apache.spark.sql.execution.streaming." +
         "checkpointing.FileContextBasedCheckpointFileManager"
       spark.conf.set(mgrKey, fileContext)
+      spark.conf.set(isoKey, "true")
       val e = intercept[IllegalStateException] {
         StreamingOps.withStreamConf(spark) {
           assert(spark.conf.get(mgrKey) == fsManager)
+          assert(spark.conf.get(isoKey) == "false")
           assert(localFs.isInstanceOf[graft.io.NioLocalFileSystem])
           throw new IllegalStateException("body failed")
         }
@@ -722,9 +728,47 @@ class StreamingSpec extends AnyFunSuite {
       assert(spark.conf.get(partsKey) == "7")
       assert(spark.conf.get(mgrKey) == fileContext)
       assert(spark.conf.get(fsCacheKey) == "false")
+      assert(spark.conf.get(isoKey) == "true")
       assert(!spark.conf.getAll.contains(fsImplKey), "unset key left set")
       assert(localFs.getClass == stockFs)
     }
+  }
+
+  test("a session whose first action runs inside withStreamConf keeps its " +
+      "own artifact state afterwards") {
+    import org.apache.spark.sql.GraftBridge.{artifactSessionUuid, sessionUuid}
+    val fresh = spark.newSession()
+    val uuid = sessionUuid(fresh)
+    StreamingOps.withStreamConf(fresh) {
+      assert(fresh.conf.get(isoKey) == "false")
+      assert(fresh.range(3).count() == 3)
+    }
+    // Spark reads the key once per session: had the first read happened
+    // inside the helper, isolation would stay off for this session
+    assert(artifactSessionUuid(fresh).contains(uuid))
+  }
+
+  test("a second run of a stateful AvailableNow stream under withStreamConf " +
+      "compiles no generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import spark.implicits._
+    // each run is a new stream, so a new cloned session; with artifact
+    // isolation on, its tasks got a new class loader, and CodeGenerator's
+    // cache (keyed by class loader and source) missed on every class
+    def run(sink: String): (Long, Seq[(String, Long)]) = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val (out, _) = StreamingOps.withStreamConf(spark) {
+        StreamingOps.runAvailableNowProgress(spark, s"$sfDir/events.parquet",
+          sink, outputMode = "complete")(
+          _.groupBy("event_type").agg(count(lit(1)).as("n")))
+      }
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      (compiles, out.as[(String, Long)].collect().sorted.toSeq)
+    }
+    val (_, first) = run("codegen_reuse_1")
+    val (compiles, second) = run("codegen_reuse_2")
+    assert(first.nonEmpty && second == first)
+    assert(compiles == 0, "the second run recompiled generated code")
   }
 
   test("withStreamConf keeps Spark's default manager for a non-local " +

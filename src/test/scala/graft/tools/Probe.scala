@@ -10,7 +10,9 @@ import graft.{Bench, Graft, SparkEntry}
   *  - Timing (default): runs each query `--reps` times (default 3) through
   *    the `noop` sink and prints every run plus the min. The first run
   *    carries the codegen + JIT floor, so first vs min separates that
-  *    floor from the steady state when a bench number looks off.
+  *    floor from the steady state when a bench number looks off. Next to
+  *    the runs it prints each run's Janino compile count (`CodegenMetrics`),
+  *    so a warm run that recompiles its generated code shows at a glance.
   *  - `--explain`: prints each query's formatted physical plan instead of
   *    timing it — PushedFilters reaching the parquet scan, the pruned
   *    ReadSchema, broadcast sides, WholeStageCodegen spans.
@@ -49,6 +51,10 @@ object Probe {
       case name :: t => parse(t, explain, reps, names :+ name)
     }
 
+  /** Janino compiles so far in this JVM, on every thread. */
+  private def compileCount(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   def main(args: Array[String]): Unit = {
     val (explain, reps, queries) = parse(args.toList)
     if (queries.isEmpty) fail("no query named")
@@ -65,9 +71,12 @@ object Probe {
         println(SparkEntry.queries(n)(spark, sfDir)
           .queryExecution.explainString(FormattedMode))
       } else {
-        val ts = (1 to reps).map(_ => Bench.runOnce(spark, sfDir, n))
+        val (ts, compiles) = (1 to reps).map { _ =>
+          val c0 = compileCount()
+          (Bench.runOnce(spark, sfDir, n), compileCount() - c0)
+        }.unzip
         println(s"[probe] $n runs=${ts.map(t => f"$t%.3f").mkString(",")} " +
-          f"min=${ts.min}%.3f")
+          s"compiles=${compiles.mkString(",")} " + f"min=${ts.min}%.3f")
       }
     } finally spark.stop()
   }

@@ -216,9 +216,11 @@ object DedupQueries {
     // North star (r20): the UNION route's oracle-portable twin — md5-lane
     // banded candidates (q29's portable family) in BOTH directions ∪ the
     // one-sided rarest-8 candidates (q259's explicit cap), distinct, one
-    // exact verify. Pins the union ASSEMBLY (cross-generator dedupe,
-    // verify-once, both-direction banded emit) under the oracle; the
-    // production autoRoute keeps xxhash64 lanes + volume-derived caps.
+    // exact verify. The production autoRoute (Dedup.containmentRoutedUnion)
+    // runs the same assembly code (both-direction banded emit,
+    // cross-generator dedupe, verify-once), so this pins it under the
+    // oracle; only the generators differ there (xxhash64 lanes,
+    // volume-derived caps).
     Contract("q261_containment_union", ((s, d) =>
       Dedup.containmentUnionPortable(documents(s, d), "doc_id", "text",
         shingleK = 8, numT = 3, denT = 4, probeK = 8, maxDocsPerTok = 20)),

@@ -327,21 +327,9 @@ object StreamingQueries {
       rmTree(dir); java.nio.file.Files.createDirectories(dir)
       // one plain parquet FILE per micro-batch, name- and mtime-ordered so
       // the file source's batch order is deterministic either way it sorts
-      def writeOne(df: DataFrame, name: String, mtime: Long): Unit = {
-        val tmp = dir.resolve(name + "_stage")
-        // repartition(1), not coalesce(1): coalesce would pull the whole
-        // scan+filter into one task (r21; same fix as the two-batch
-        // runner's writePhase) — the single part file the batch-order
-        // contract needs comes from the exchange, not a serial plan
-        df.repartition(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = java.nio.file.Files.list(tmp)
-          .filter(p => p.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get()
-        val dst = dir.resolve(name)
-        java.nio.file.Files.move(part, dst)
-        rmTree(tmp)
-        dst.toFile.setLastModified(mtime)
-      }
+      def writeOne(df: DataFrame, name: String, mtime: Long): Unit =
+        StreamingOps.writeSingleParquet(df, dir.resolve(name), mtime,
+          s"q222_watermark_late_drop: $name")
       val outDir = tmpScratch(s"q222_out_$tok")
       val ckpt = tmpScratch(s"q222_ck_$tok")
       rmTree(outDir); rmTree(ckpt)
@@ -505,16 +493,7 @@ object StreamingQueries {
             .agg(count(lit(1)).as("n"))
             .select(col("window.start").as("ws"), col("n"))
         }
-        import s.implicits._
-        // batch_seq re-indexes sorted batchIds so the oracle never
-        // depends on Spark's internal batch numbering
-        progs.sortBy(_.batchId).zipWithIndex.flatMap { case (p, seq) =>
-          p.stateOperators.headOption.map { so =>
-            (seq.toLong, p.numInputRows, so.numRowsTotal,
-              so.numRowsUpdated, so.numRowsRemoved)
-          }
-        }.toDF("batch_seq", "input_rows", "rows_total", "rows_updated",
-          "rows_removed")
+        StreamingOps.batchStateCounts(s, progs)
       }
     }),
       // q257: two-batch eviction — phase split at the epoch-us midpoint,
@@ -604,14 +583,7 @@ object StreamingQueries {
             .select(col("v_user").as("user_id"), col("v_event_id"),
               col("c_event_id"))
         }
-        import s.implicits._
-        progs.sortBy(_.batchId).zipWithIndex.flatMap { case (p, seq) =>
-          p.stateOperators.headOption.map { so =>
-            (seq.toLong, p.numInputRows, so.numRowsTotal,
-              so.numRowsUpdated, so.numRowsRemoved)
-          }
-        }.toDF("batch_seq", "input_rows", "rows_total", "rows_updated",
-          "rows_removed")
+        StreamingOps.batchStateCounts(s, progs)
       }
     }),
       // q260: join-state eviction — phase split at the epoch-us midpoint

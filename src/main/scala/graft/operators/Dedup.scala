@@ -339,54 +339,26 @@ object Dedup {
     val budget =
       if (budgetOverride > 0) math.max(budgetOverride, MinRouteCandidates)
       else math.max(RouteCandidatesPerDoc * nDocs, MinRouteCandidates)
-    val perDocEff = budget / math.max(nDocs, 1L)
-    var cum = 0.0
-    var volCap = 0L
-    // STOP at the first size class over budget (no skip-and-admit-larger:
-    // the cap filter is `bucket_n <= eff`, so every class below eff IS
-    // enumerated and must have been counted into the cumulative volume)
-    val it = rollup.sortBy(_._1).iterator
-    var full = false
-    while (it.hasNext && !full) {
-      val (m, nb) = it.next()
-      val v = nb.toDouble * m.toDouble * (m - 1).toDouble / 2
-      if (cum + v <= budget) { cum += v; volCap = m } else full = true
-    }
+    val (volCap, _) = budgetScan(rollup, pairsIn, _ => budget)
     val eff = math.max(1000L,
       math.min(familyCap.toLong, volCap)).min(Int.MaxValue.toLong).toInt
     // the TRUE volume the `bucket_n <= eff` filter admits — recomputed
-    // at eff rather than reusing `cum` (r20 review: when the 1000 floor
-    // raises eff above volCap, or familyCap binds below volCap, `cum`
-    // under-/over-states what is actually enumerated; every log line
-    // below quotes the real number so a scratch-blowout diagnosis never
-    // reads a volume that was accumulated to a different cap)
-    val admitted = rollup.iterator.filter(_._1 <= eff)
-      .map { case (m, nb) => nb.toDouble * m.toDouble * (m - 1).toDouble / 2 }
-      .sum
-    if (eff > familyCap)
-      // only reachable when familyCap < 1000: the recall floor RAISES
-      // eff above the configured cap (r19 ADVICE)
-      log.warn(f"$label: the 1000-bucket recall floor overrides " +
-        f"familyCap=$familyCap — proceeding at bucket cap $eff, " +
-        f"admitting ${admitted}%.3e candidates (the recall contract " +
-        "outranks the family estimate; this may exceed the " +
-        f"$perDocEff%.1f cand/doc budget)")
-    else if (volCap < eff)
-      // the floor raised eff above the budget-derived volCap with
-      // familyCap ≥ eff: the filter admits MORE than the budget counted
-      log.warn(f"$label: the 1000-bucket recall floor exceeds the " +
-        f"volume budget (budget-derived cap $volCap) — proceeding at " +
-        f"the floor, admitting ${admitted}%.3e candidates, over the " +
-        f"$perDocEff%.1f cand/doc budget")
-    else if (eff < familyCap)
-      log.warn(f"$label: banded bucket cap $familyCap admits " +
-        "corpus-share accident buckets — volume budget " +
-        f"($perDocEff%.1f cand/doc) binds at bucket cap " +
-        f"$eff (${admitted}%.3e candidates); buckets above it are " +
-        "dropped (boilerplate-collision class, see Scaladoc)")
-    else
-      log.info(f"$label: banded bucket cap $eff admits ${admitted}%.3e " +
-        "candidates within budget")
+    // at eff (r20 review: when the 1000 floor raises eff above volCap,
+    // or familyCap binds below it, the scan's volume is that of a
+    // different cap; a scratch-blowout diagnosis must read the real one)
+    val admitted = rollup.iterator.filter(_._1 <= eff).map(pairsIn.tupled).sum
+    val warn =
+      if (eff > familyCap)
+        Some(s"the 1000-bucket recall floor overrides familyCap=$familyCap")
+      else if (volCap < eff)
+        Some(s"the 1000-bucket recall floor exceeds the budget-derived cap $volCap")
+      else if (eff < familyCap)
+        Some(s"the volume budget binds below familyCap=$familyCap (buckets " +
+          "above it are the boilerplate-collision class, see Scaladoc)")
+      else None
+    val line = f"$label: banded bucket cap $eff admits $admitted%.3e " +
+      f"candidates (${budget / math.max(nDocs, 1L)}%.1f cand/doc budget)"
+    warn.fold(log.info(line))(w => log.warn(s"$line — $w"))
     eff
   }
 
@@ -846,6 +818,72 @@ object Dedup {
     cap
   }
 
+  /** Candidate rows a count class emits through a within-key self-join:
+    * C(m, 2) per key, times the class's key count. */
+  private[graft] val pairsIn: (Long, Long) => Double =
+    (m, n) => n.toDouble * m.toDouble * (m - 1).toDouble / 2.0
+
+  /** One autocap decision (see [[autoCap]]). `routeBucketCap` is the
+    * routed banded chain's bucket cap: 2× the cap (the operator's
+    * estimate of the largest genuine family), never below 1000, clamped
+    * to Int. */
+  private[graft] final case class AutoCap(cap: Int, forecast: Double,
+      overWarn: Boolean, routeBucketCap: Int)
+
+  /** The autocap step every `maxDocsPerTok = 0` / `maxBucket = 0` mode
+    * takes, over one collected [[countRollup]]: the cap is
+    * [[capBelowTemplateFloorLocal]]'s; the forecast is Σ `volume(class,
+    * nKeys)` over the classes the cap keeps, so the rollup prices the
+    * pair stage before it runs (r17); `overWarn` says the forecast
+    * crosses [[WarnCandidatesPerDoc]]·nDocs — the pair stage will
+    * dominate, and `autoRoute` callers switch to the banded chain.
+    *
+    * Why the route bucket cap is 2× the cap and not the template floor
+    * (r18): a banded-minhash bucket is not a family but whatever collides
+    * in 2 lanes, and corpus-hot boilerplate makes ACCIDENT buckets
+    * holding ~7% of all boiler docs per band (the 300k rehearsal route
+    * ran 157 s at cap 1000, >30 min at cap 150k). A genuine m-member
+    * family's band buckets hold ≤ m docs, so 2× the largest-family
+    * estimate keeps every admitted family and still refuses collapse
+    * buckets; the 1000 floor keeps >1000-member families' recall. */
+  private[graft] def autoCap(rollup: Array[(Long, Long)], nDocs: Long,
+      templateShare: Double, volume: (Long, Long) => Double,
+      label: String): AutoCap = {
+    val cap = capBelowTemplateFloorLocal(rollup, nDocs, templateShare, label)
+    val forecast = rollup.iterator.takeWhile(_._1 <= cap)
+      .map(volume.tupled).sum
+    val d = AutoCap(cap, forecast, forecast > WarnCandidatesPerDoc * nDocs,
+      math.min(math.max(1000L, 2L * cap), Int.MaxValue.toLong).toInt)
+    val line = f"$label autoCap=$cap forecasts $forecast%.3e candidate " +
+      f"rows (${forecast / math.max(nDocs, 1)}%.0f per doc)"
+    if (d.overWarn)
+      log.warn(line + " — the pair stage will dominate: route it " +
+        "(autoRoute), or set an absolute cap at the largest genuine " +
+        "cluster size for this corpus shape")
+    else log.info(line)
+    d
+  }
+
+  /** Ascending cumulative-budget scan over a rollup: admits count classes
+    * smallest first while the running Σ `volume` stays within
+    * `bound(class)`, and STOPS at the first class over it (the caps filter
+    * `count <= cap`, so every class below the cap is enumerated and must
+    * have been counted). Returns the largest admitted class (0 when none
+    * fits) and the volume admitted up to it. */
+  private[graft] def budgetScan(rollup: Array[(Long, Long)],
+      volume: (Long, Long) => Double, bound: Long => Double): (Long, Double) = {
+    var cum = 0.0
+    var fit = 0L
+    val it = rollup.sortBy(_._1).iterator
+    var full = false
+    while (it.hasNext && !full) {
+      val (m, n) = it.next()
+      val v = volume(m, n)
+      if (cum + v <= bound(m)) { cum += v; fit = m } else full = true
+    }
+    (fit, cum)
+  }
+
   /** `maxCandidates` (autocap mode only, 0 = off) bounds the pair
     * stage by BUDGET instead of by recall: the cap becomes the largest
     * nd whose cumulative forecast Σ n_toks · C(nd, 2) stays within the
@@ -929,147 +967,87 @@ object Dedup {
     // groupBy twice — a full extra pass over the prefix table).
     val ndCounts = prefixPre.groupBy(col("tok"))
       .agg(count(lit(1)).as("nd"))
-    var routeToBanded = false
-    // routed-chain bucket cap: 2× the AUTOCAP-derived cap (the largest
-    // per-token count below the template floor — the operator family's
-    // estimate of the largest GENUINE cluster), never below
-    // minhashCandidates' 1000 default. Two r18 lessons set this form:
-    // the fixed 1000 default silently zeroed recall for >1000-member
-    // families (review), but the first fix — capping at the template
-    // floor share·N itself — reintroduced the blowup the route exists to
-    // avoid: a banded-minhash bucket is NOT a family, it is whatever
-    // collides in 2 lanes, and corpus-hot boilerplate makes ACCIDENT
-    // buckets holding ~7% of all boiler docs per band (measured: the
-    // 300k rehearsal route, 157 s at cap 1000, ran >30 min at cap 150k
-    // enumerating ~C(7300,2)×8 boiler-accident candidates). A genuine
-    // m-member family's band buckets hold ≤ m docs, so 2× the
-    // largest-family estimate keeps every admitted family while still
-    // refusing collapse buckets.
-    var routeBucketCap = 1000
-    val effCap =
-      if (maxDocsPerTok > 0) maxDocsPerTok
+    // Some(bucket cap) = autoRoute engaged: the banded chain replaces the
+    // exact prefix join
+    val (effCap, route) =
+      if (maxDocsPerTok > 0) (maxDocsPerTok, None)
       else {
         val nDocs = prefixPre.agg(countDistinct(col("doc_id")))
           .head().getLong(0)
         // ONE tiny driver-side rollup — at most one row per distinct nd
         // value, hundreds of rows — serves the template-floor cap, the
         // candidate forecast AND the cumulative budget cap (r17 ADVICE:
-        // these were three separate Spark actions over the nd table).
+        // these were three separate Spark actions over the nd table). The
+        // join below emits C(nd, 2) rows per kept token before the
+        // distinct, so the forecast prices the pair stage exactly; on a
+        // finite-vocabulary corpus it grows ~quadratically with the corpus
+        // (the 300k-doc Zipf-ladder cliff: 11 GB → 55+ GB live scratch).
         val rollup = countRollup(ndCounts, "nd")
-        val cap = capBelowTemplateFloorLocal(rollup, nDocs, templateShare,
+        val ac = autoCap(rollup, nDocs, templateShare, pairsIn,
           "prefixJaccardPairs")
-        routeBucketCap = math.min(math.max(1000L, 2L * cap),
-          Int.MaxValue.toLong).toInt
-        // Candidate-volume forecast (r17): the join below emits C(nd, 2)
-        // rows per kept token BEFORE the distinct, so the rollup prices
-        // the pair stage exactly. On a finite-vocabulary corpus every
-        // token's nd grows WITH the corpus while the share-derived cap
-        // admits it until nd ≥ share·N — candidate volume then scales
-        // ~quadratically in corpus size (the measured 300k-doc
-        // Zipf-ladder cliff: 11 GB → 55+ GB live shuffle scratch at 1.5×
-        // the docs). Warn loudly when pairs-per-doc says the pair stage
-        // will dominate — or, under `autoRoute`, switch to the
-        // band-bounded candidate chain outright.
-        def pairsAt(nd: Long, nToks: Long): Double =
-          nToks.toDouble * nd.toDouble * (nd - 1).toDouble / 2.0
-        val predicted = rollup.iterator.takeWhile(_._1 <= cap)
-          .map((pairsAt _).tupled).sum
-        if (predicted > WarnCandidatesPerDoc * nDocs) {
-          routeToBanded = autoRoute
-          if (routeToBanded)
-            log.warn(f"prefixJaccardPairs autoCap=$cap admits " +
-              f"$predicted%.3e candidate rows " +
-              f"(${predicted / math.max(nDocs, 1)}%.0f per doc) — " +
-              "autoRoute engaging: banded-minhash candidates (16 lanes, " +
-              "8 bands) feed the same exact-Jaccard verify; recall is " +
-              "band-probabilistic instead of cap-bounded")
-          else
-            log.warn(f"prefixJaccardPairs autoCap=$cap admits " +
-              f"$predicted%.3e candidate rows " +
-              f"(${predicted / math.max(nDocs, 1)}%.0f per doc) " +
-              "— the pair stage will dominate; prefer banded minhash " +
-              "(minhashCandidatesPortable) or an absolute maxDocsPerTok at " +
-              "the largest genuine cluster size for this corpus shape")
-        } else
-          log.info(f"prefixJaccardPairs autoCap=$cap predicted candidate " +
-            f"rows (pre-distinct) = $predicted%.3e")
-        if (!routeToBanded && maxCandidates > 0L && predicted > maxCandidates) {
-          // largest nd whose CUMULATIVE forecast fits the budget — same
-          // driver-side rollup, ascending scan
-          var cum = 0.0
-          var budgetCap = 2L
-          rollup.takeWhile(_._1 <= cap).foreach { case (nd, nToks) =>
-            cum += pairsAt(nd, nToks)
-            if (cum <= maxCandidates.toDouble) budgetCap = nd
-          }
-          val chosen = math.max(2L, math.min(budgetCap, cap.toLong)).toInt
+        if (autoRoute && ac.overWarn) (ac.cap, Some(ac.routeBucketCap))
+        else if (maxCandidates > 0L && ac.forecast > maxCandidates) {
+          // largest nd whose CUMULATIVE forecast fits the budget
+          val (fit, _) = budgetScan(rollup.takeWhile(_._1 <= ac.cap),
+            pairsIn, _ => maxCandidates.toDouble)
+          val chosen = math.max(2L, math.min(fit, ac.cap.toLong)).toInt
           // r17 ADVICE: when even the smallest viable cap (2) is over
-          // budget, the run PROCEEDS over budget — say so explicitly
-          // instead of letting the generic bind message imply the bound
-          // held; callers using maxCandidates as a hard scratch envelope
-          // must treat this corpus as un-runnable at this budget.
+          // budget, the run PROCEEDS over budget — say so explicitly;
+          // callers using maxCandidates as a hard scratch envelope must
+          // treat this corpus as un-runnable at this budget.
           val admitted = rollup.iterator.takeWhile(_._1 <= chosen)
-            .map((pairsAt _).tupled).sum
-          if (admitted > maxCandidates.toDouble)
-            log.warn(f"prefixJaccardPairs maxCandidates=$maxCandidates is " +
-              f"NOT satisfiable: the minimum viable cap $chosen already " +
-              f"admits $admitted%.3e candidates — proceeding OVER budget; " +
-              "the stated scratch envelope does not hold on this corpus " +
-              "(route to banded minhash or drop the nd=2 band entirely)")
-          else
-            log.warn(f"prefixJaccardPairs maxCandidates=$maxCandidates " +
-              f"binds: autoCap $cap -> $chosen (forecast $predicted%.3e " +
-              "over budget) — clusters larger than the chosen cap lose " +
-              "their pairs; read prefixHotness' tail before trusting " +
-              "recall at this budget")
-          chosen
-        } else cap
+            .map(pairsIn.tupled).sum
+          log.warn(f"prefixJaccardPairs maxCandidates=$maxCandidates " +
+            f"binds: autoCap ${ac.cap} -> $chosen admits $admitted%.3e " +
+            "candidates — " + (if (admitted > maxCandidates.toDouble)
+              "NOT satisfiable, proceeding OVER budget"
+            else "clusters larger than the chosen cap lose their pairs; " +
+              "read prefixHotness' tail before trusting recall"))
+          (chosen, None)
+        } else (ac.cap, None)
       }
-    if (routeToBanded) {
-      // the pinned prefix table served only the forecast — free exactly
-      // its own checkpoint blocks before the banded chain runs
-      unpinCheckpointed(prefixPre)
-      // band-bounded candidate generation at the same word-shingle width
-      // the streaming/batch minhash dedups use; the verify below re-checks
-      // every candidate against the EXACT char-shingle threshold, so the
-      // output contract is unchanged — only recall semantics differ (see
-      // Scaladoc). familyCap = routeBucketCap (2× the autocap-derived
-      // largest-genuine-family estimate, floored at 1000), VALIDATED
-      // against the volume budget (r19: a family estimate from a smooth
-      // count distribution can be corpus-scale — see
-      // minhashCandidatesVolCapped).
-      val cand = minhashCandidatesVolCapped(docs, idCol, textCol,
-        shingleN = 3, numHashes = 16, bands = 8,
-        familyCap = routeBucketCap, label = "prefixJaccardPairs route")
-        .select(col("id_a").as("d1"), col("id_b").as("d2"))
-      jaccardVerify(docs, idCol, textCol, shingleK, numT, denT, cand,
-        inputSmall)
-    } else {
-      val keepToks = ndCounts
-        .filter(col("nd") <= effCap).select(col("tok"))
-      val prefix = prefixPre
-        .join(keepToks, "tok") // AQE broadcasts when actually small (above)
-        .select(col("doc_id"), col("n"), col("tok"))
-        // tiny (≤ prefix size per doc, cap per shingle) and consumed by BOTH
-        // sides of the candidate self-join — materialize once so the chain
-        // above doesn't run twice
-        .localCheckpoint()
-      // PPJoin length filter at the CANDIDATE level: jacc = I/U ≤ min/max
-      // (I ≤ min(n_a,n_b), U ≥ max), so a pair with min·denT < max·numT
-      // cannot pass the exact threshold — dropped here, BEFORE the distinct
-      // shuffle and before the per-doc shingle arrays are hauled through
-      // the verify join (~1/3 of sf0.1 candidates die; exact math, so the
-      // oracle is untouched).
-      val cand = prefix.as("a")
-        .join(prefix.as("b"),
-          col("a.tok") === col("b.tok") && col("a.doc_id") < col("b.doc_id"))
-        .filter(least(col("a.n"), col("b.n")) * denT >=
-          greatest(col("a.n"), col("b.n")) * numT)
-        .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-        .distinct()
-      jaccardVerify(docs, idCol, textCol, shingleK, numT, denT, cand,
-        inputSmall)
+    val cand = route match {
+      case Some(routeBucketCap) =>
+        // the pinned prefix table served only the forecast — free exactly
+        // its own checkpoint blocks before the banded chain runs
+        unpinCheckpointed(prefixPre)
+        // band-bounded candidate generation at the same word-shingle
+        // width the streaming/batch minhash dedups use; the verify
+        // re-checks every candidate against the EXACT char-shingle
+        // threshold, so only recall semantics differ (see Scaladoc). The
+        // family cap is VALIDATED against the volume budget (r19: a family
+        // estimate from a smooth count distribution can be corpus-scale —
+        // see minhashCandidatesVolCapped).
+        minhashCandidatesVolCapped(docs, idCol, textCol,
+          shingleN = 3, numHashes = 16, bands = 8,
+          familyCap = routeBucketCap, label = "prefixJaccardPairs route")
+          .select(col("id_a").as("d1"), col("id_b").as("d2"))
+      case None =>
+        val keepToks = ndCounts
+          .filter(col("nd") <= effCap).select(col("tok"))
+        val prefix = prefixPre
+          .join(keepToks, "tok") // AQE broadcasts when actually small (above)
+          .select(col("doc_id"), col("n"), col("tok"))
+          // tiny (≤ prefix size per doc, cap per shingle) and consumed by
+          // BOTH sides of the candidate self-join — materialize once so
+          // the chain above doesn't run twice
+          .localCheckpoint()
+        // PPJoin length filter at the CANDIDATE level: jacc = I/U ≤
+        // min/max (I ≤ min(n_a,n_b), U ≥ max), so a pair with min·denT <
+        // max·numT cannot pass the exact threshold — dropped here, BEFORE
+        // the distinct shuffle and before the per-doc shingle arrays are
+        // hauled through the verify join (~1/3 of sf0.1 candidates die;
+        // exact math, so the oracle is untouched).
+        prefix.as("a")
+          .join(prefix.as("b"),
+            col("a.tok") === col("b.tok") && col("a.doc_id") < col("b.doc_id"))
+          .filter(least(col("a.n"), col("b.n")) * denT >=
+            greatest(col("a.n"), col("b.n")) * numT)
+          .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
+          .distinct()
     }
+    jaccardVerify(docs, idCol, textCol, shingleK, numT, denT, cand,
+      inputSmall)
   }
 
   /** Exact-Jaccard verify stage shared by [[prefixJaccardPairs]]' prefix
@@ -1201,6 +1179,60 @@ object Dedup {
     if (small) broadcast(arrs) else arrs
   }
 
+  /** The containment joins' token tables, see [[containmentFront]]. */
+  private[graft] final case class Front(base: DataFrame, toks: DataFrame,
+      toksPlan: DataFrame, dfreq: DataFrame, inputSmall: Boolean)
+
+  /** Shared token-table front of the containment joins (r20, extracted
+    * when [[containmentPairsOneSided]] grew a second copy): spread +
+    * non-empty filter, the exploded shingle plan, the probe-side
+    * checkpoint dispatch, and the full-corpus dfreq.
+    *
+    * `n` is carried per tok row (one int) so the probe aggregates know
+    * their bound from the first row — same shape as prefixToks;
+    * Catalyst prunes it from the dfreq and index consumers.
+    *
+    * The PROBE side (`toks`: dfreq + prefix/rarest-k aggregates) is
+    * checkpointed when the input is small — NOT for reuse, for HONEST
+    * STATS (r15): Catalyst's static size estimate is content-blind
+    * through Generate (no fan-out model), so a small parquet input
+    * estimated the 21M-row exploded table under the broadcast threshold
+    * and the initial plan BROADCAST the fan-out side of the dfreq join
+    * (measured 3× the whole prefix stage on the 10× rehearsal; at worst
+    * a driver OOM). A checkpointed RDD scan carries its REAL byte size,
+    * the static plan stays a shuffle join, and AQE still upgrades the
+    * dictionary side to broadcast from actual runtime sizes — exactly
+    * the r11-documented behavior. Checkpoint under either the perf gate
+    * or the honest-stats gate — same dual dispatch (and the same r16
+    * rationale) as prefixToks.
+    *
+    * The INDEX side (`toksPlan`) keeps the recomputed plan: its join
+    * prunes the recomputed scan and pipelines (the r11 containment
+    * measurement that rejected a full checkpoint here), and it never
+    * joins against a misestimated side. */
+  private[graft] def containmentFront(docs: DataFrame, idCol: String,
+      textCol: String, shingleK: Int): Front = {
+    val par = docs.sparkSession.sparkContext.defaultParallelism
+    val spread =
+      if (docs.rdd.getNumPartitions < par) docs.repartition(par) else docs
+    val base = spread.filter(length(trim(col(textCol))) > 0)
+    val toksPlan = shingleToksPlan(base, idCol, textCol, shingleK)
+    val inputSmall = spread.queryExecution.optimizedPlan.stats.sizeInBytes <
+      BigInt(512L << 20)
+    val toks =
+      if (inputSmall || inBroadcastDangerZone(toksPlan))
+        toksPlan.localCheckpoint()
+      else toksPlan
+    // dfreq is consumed twice (probe/prefix join + index-side filter),
+    // but pinning it was MEASURED SLOWER (r21 A/B, 3× interleaved fresh
+    // JVMs: q154 5.57→6.13 s, q259 4.25→4.62 s min): the extra
+    // synchronous checkpoint job serializes what AQE otherwise overlaps
+    // with the downstream joins, and the re-aggregation over the pinned
+    // toks table is cheap. Keep the recompute.
+    val dfreq = toks.groupBy(col("tok")).agg(count(lit(1)).as("dfreq"))
+    Front(base, toks, toksPlan, dfreq, inputSmall)
+  }
+
   /** Directed containment join — the ASYMMETRIC sibling of
     * [[prefixJaccardPairs]]: emit (sub, sup) where C(sub→sup) =
     * |S_sub ∩ S_sup| / |S_sub| ≥ numT/denT over char-`shingleK` shingle
@@ -1255,57 +1287,6 @@ object Dedup {
     * template-cleaned copy).
     * When full asymmetric recall matters more than the scratch
     * envelope, set an absolute `maxDocsPerTok` instead of routing. */
-  /** Shared token-table front of the containment joins (r20, extracted
-    * when [[containmentPairsOneSided]] grew a second copy): spread +
-    * non-empty filter, the exploded shingle plan, the probe-side
-    * checkpoint dispatch, and the full-corpus dfreq.
-    *
-    * `n` is carried per tok row (one int) so the probe aggregates know
-    * their bound from the first row — same shape as prefixToks;
-    * Catalyst prunes it from the dfreq and index consumers.
-    *
-    * The PROBE side (`toks`: dfreq + prefix/rarest-k aggregates) is
-    * checkpointed when the input is small — NOT for reuse, for HONEST
-    * STATS (r15): Catalyst's static size estimate is content-blind
-    * through Generate (no fan-out model), so a small parquet input
-    * estimated the 21M-row exploded table under the broadcast threshold
-    * and the initial plan BROADCAST the fan-out side of the dfreq join
-    * (measured 3× the whole prefix stage on the 10× rehearsal; at worst
-    * a driver OOM). A checkpointed RDD scan carries its REAL byte size,
-    * the static plan stays a shuffle join, and AQE still upgrades the
-    * dictionary side to broadcast from actual runtime sizes — exactly
-    * the r11-documented behavior. Checkpoint under either the perf gate
-    * or the honest-stats gate — same dual dispatch (and the same r16
-    * rationale) as prefixToks.
-    *
-    * The INDEX side (`toksPlan`) keeps the recomputed plan: its join
-    * prunes the recomputed scan and pipelines (the r11 containment
-    * measurement that rejected a full checkpoint here), and it never
-    * joins against a misestimated side. */
-  private def containmentFront(docs: DataFrame, idCol: String,
-      textCol: String, shingleK: Int)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, Boolean) = {
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val spread =
-      if (docs.rdd.getNumPartitions < par) docs.repartition(par) else docs
-    val base = spread.filter(length(trim(col(textCol))) > 0)
-    val toksPlan = shingleToksPlan(base, idCol, textCol, shingleK)
-    val inputSmall = spread.queryExecution.optimizedPlan.stats.sizeInBytes <
-      BigInt(512L << 20)
-    val toks =
-      if (inputSmall || inBroadcastDangerZone(toksPlan))
-        toksPlan.localCheckpoint()
-      else toksPlan
-    // dfreq is consumed twice (probe/prefix join + index-side filter),
-    // but pinning it was MEASURED SLOWER (r21 A/B, 3× interleaved fresh
-    // JVMs: q154 5.57→6.13 s, q259 4.25→4.62 s min): the extra
-    // synchronous checkpoint job serializes what AQE otherwise overlaps
-    // with the downstream joins, and the re-aggregation over the pinned
-    // toks table is cheap. Keep the recompute.
-    val dfreq = toks.groupBy(col("tok")).agg(count(lit(1)).as("dfreq"))
-    (base, toks, toksPlan, dfreq, inputSmall)
-  }
-
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 8, numT: Int = 3, denT: Int = 4,
       maxDocsPerTok: Int = 20, templateShare: Double = 0.5,
@@ -1316,146 +1297,69 @@ object Dedup {
     require(!autoRoute || maxDocsPerTok <= 0,
       "autoRoute reads the autocap forecast — with an explicit " +
         s"maxDocsPerTok=$maxDocsPerTok the caller has already chosen")
-    val (base, toks, toksPlan, dfreq, inputSmall) =
-      containmentFront(docs, idCol, textCol, shingleK)
-    // maxDocsPerTok = 0: derive the cap from the data, same rule as
-    // prefixJaccardPairs's autoCap but over FULL-corpus dfreq (the cap
-    // here binds the index side's posting lists, which carry every doc,
-    // not just prefixes) — the largest dfreq strictly below
-    // templateShare × docs is the biggest genuine containment family;
-    // dfreq ≈ corpus size is boilerplate. Two extra linear jobs
-    // (doc count + dictionary max), auto mode only.
-    var routeToBanded = false
-    // routed-chain bucket cap: 2x the autocap-derived largest-genuine-
-    // family estimate (see prefixJaccardPairs for the full two-lesson
-    // rationale — a band bucket is not a family, so the cap must track
-    // the family-size estimate, never the template floor)
-    var routeBucketCap = 1000
-    // corpus size, hoisted for the one-sided route's volume budget
-    // (computed only in autocap mode — the route cannot engage otherwise)
-    var routeNDocs = -1L
-    val effCap =
-      if (maxDocsPerTok > 0) maxDocsPerTok
+    val f = containmentFront(docs, idCol, textCol, shingleK)
+    // maxDocsPerTok = 0: the autocap over FULL-corpus dfreq (the cap here
+    // binds the index side's posting lists, which carry every doc, not
+    // just prefixes); dfreq ≈ corpus size is boilerplate. The probe ×
+    // index join emits at most pc(tok) · dfreq(tok) ≤ dfreq(tok)² rows
+    // per kept token, so Σ dfreq² is a pre-join upper bound on the pair
+    // stage (the 500k Zipf q154 arm aborted at 53.8 GB live scratch where
+    // 200k ran in 4 GB). Some((bucket cap, nDocs)) = autoRoute engaged.
+    val (effCap, route) =
+      if (maxDocsPerTok > 0) (maxDocsPerTok, None)
       else {
-        val nDocs = base.select(col(idCol)).distinct().count()
-        routeNDocs = nDocs
-        // ONE driver-side rollup (r17 ADVICE — the cap aggregate and the
-        // forecast aggregate were two separate passes over the dfreq
-        // table's full explode + groupBy lineage): at most one row per
-        // distinct dfreq value, hundreds driver-side.
-        val rollup = countRollup(dfreq, "dfreq")
-        val cap = capBelowTemplateFloorLocal(rollup, nDocs, templateShare,
+        val nDocs = f.base.select(col(idCol)).distinct().count()
+        val ac = autoCap(countRollup(f.dfreq, "dfreq"), nDocs, templateShare,
+          (df, n) => n.toDouble * df.toDouble * df.toDouble,
           "containmentPairs")
-        routeBucketCap = math.min(math.max(1000L, 2L * cap),
-          Int.MaxValue.toLong).toInt
-        // Candidate-volume forecast (r17, q121's sibling): the probe ×
-        // index join emits at most pc(tok) · dfreq(tok) ≤ dfreq(tok)²
-        // rows per kept token, so Σ dfreq² over the kept dictionary is a
-        // pre-join upper bound on the pair stage. The same
-        // share-derived-cap mechanism as the prefix join drives the same
-        // superlinear regime (measured: the 500k Zipf q154 arm aborted
-        // at 53.8 GB live scratch where 200k ran in 4 GB); warn toward
-        // banded minhash / an absolute cap when the bound says the index
-        // join will dominate — or, under `autoRoute`, switch to it.
-        val bound = rollup.iterator.takeWhile(_._1 <= cap)
-          .map { case (df, nToks) => nToks.toDouble * df.toDouble * df.toDouble }
-          .sum
-        if (bound > WarnCandidatesPerDoc * nDocs) {
-          routeToBanded = autoRoute
-          if (routeToBanded)
-            log.warn(f"containmentPairs autoCap=$cap admits up to " +
-              f"$bound%.3e candidate rows " +
-              f"(${bound / math.max(nDocs, 1)}%.0f per doc, Σ dfreq² " +
-              "bound) — autoRoute engaging: banded-minhash ∪ one-sided " +
-              "rarest-k candidates, one exact verify; recall above the " +
-              "budget-derived caps is bought with " +
-              "spark.graft.route.scratchBytes (see Scaladoc)")
-          else
-            log.warn(f"containmentPairs autoCap=$cap admits up to " +
-              f"$bound%.3e candidate rows (${bound / math.max(nDocs, 1)}%.0f " +
-              "per doc, Σ dfreq² bound) — prefer banded minhash or an " +
-              "absolute maxDocsPerTok at the largest genuine syndication " +
-              "family for this corpus shape")
-        } else
-          log.info(f"containmentPairs autoCap=$cap candidate upper bound " +
-            f"(Σ dfreq²) = $bound%.3e")
-        cap
+        (ac.cap,
+          if (autoRoute && ac.overWarn) Some((ac.routeBucketCap, nDocs)) else None)
       }
-    if (routeToBanded) {
-      // r20: the route runs the UNION of BOTH candidate generators —
-      // banded minhash AND the one-sided rarest-k probe — because they
-      // are COMPLEMENTARY, not substitutes. Banded collision ≈
-      // 1−(1−J²)^8 is blind to asymmetric pairs (0.2% measured at
-      // J≈0.03, BASELINE casym) but nails near-identical families
-      // (97.7% at J 0.59); the rarest-k probe nails quotes (a tiny sub's
-      // rarest shingles sit at dfreq≈2 — found for free) but is
-      // adversarially wrong on near-identical families, where each
-      // member's rarest shingles are its own unique tail — exactly the
-      // shingles MISSING from every other member. Each generator is
-      // volume-capped against the same stated budget (banded ≤ 1×,
-      // one-sided ≤ 2× through its dfreq-20 posture stretch), so the
-      // union's candidate volume is ≤ 3× the old routed leg's by
-      // construction, and it recalls the max of both. The pinned toks
-      // table is REUSED by the one-sided probe (it is no longer
-      // unpinned here); the verify runs ONCE on the distinct union.
-      return containmentRoutedUnion(docs, idCol, textCol, shingleK, numT,
-        denT, routeBucketCap, toks, toksPlan, dfreq, inputSmall,
-        nDocsIn = routeNDocs)
+    route match {
+      case Some((routeBucketCap, nDocs)) =>
+        // r20: the route runs the UNION of BOTH candidate generators —
+        // banded minhash AND the one-sided rarest-k probe — because they
+        // are COMPLEMENTARY, not substitutes. Banded collision ≈
+        // 1−(1−J²)^8 is blind to asymmetric pairs (0.2% measured at
+        // J≈0.03, BASELINE casym) but nails near-identical families
+        // (97.7% at J 0.59); the rarest-k probe nails quotes (a tiny sub's
+        // rarest shingles sit at dfreq≈2 — found for free) but is
+        // adversarially wrong on near-identical families, where each
+        // member's rarest shingles are its own unique tail — exactly the
+        // shingles MISSING from every other member. Each generator is
+        // volume-capped against the same stated budget (banded ≤ 1×,
+        // one-sided ≤ 2× through its dfreq-20 posture stretch), and the
+        // pinned toks table is REUSED by the one-sided probe.
+        containmentRoutedUnion(docs, idCol, textCol, shingleK, numT, denT,
+          routeBucketCap, f, nDocs)
+      case None =>
+        // probe prefix: rank by global dfreq via the native bounded k-min
+        // aggregate (no cluster-wide sort, no full per-doc array — the
+        // partial buffer caps at the prefix length, see PrefixMinK), keep the
+        // rarest n − ceil(t·n) + 1, then drop cap-hot tokens
+        val prefix = f.toks.join(f.dfreq, "tok")
+          .groupBy(col("doc_id"))
+          .agg(graft.functions.PrefixMinK.column(numT, denT)(
+            col("n"), col("dfreq"), col("tok")).as("pk"))
+          .select(col("doc_id"), explode(col("pk.items")).as("x"))
+          .select(col("doc_id"), col("x.dfreq").as("dfreq"), col("x.tok").as("tok"))
+          .filter(col("dfreq") <= effCap)
+          .select(col("doc_id"), col("tok"))
+        // index side: the RECOMPUTED plan, not the checkpoint — its join
+        // prunes the recomputed scan and pipelines (tools/P154, r11: full
+        // checkpoint here measured 5.3-5.4 s vs 4.1-4.5 s recomputing), and
+        // the kept-token build side is a real aggregate whose size AQE reads
+        // at runtime.
+        val index = f.toksPlan.join(
+          f.dfreq.filter(col("dfreq") <= effCap).select(col("tok")), "tok")
+        val cand0 = prefix.as("a")
+          .join(index.as("b"),
+            col("a.tok") === col("b.tok") && col("a.doc_id") =!= col("b.doc_id"))
+          .select(col("a.doc_id").as("sub"), col("b.doc_id").as("sup"))
+          .distinct()
+        containmentVerify(docs, idCol, textCol, shingleK, numT, denT, cand0,
+          f.inputSmall)
     }
-    // probe prefix: rank by global dfreq via the native bounded k-min
-    // aggregate (no cluster-wide sort, no full per-doc array — the
-    // partial buffer caps at the prefix length, see PrefixMinK), keep the
-    // rarest n − ceil(t·n) + 1, then drop cap-hot tokens
-    val prefix = toks.join(dfreq, "tok")
-      .groupBy(col("doc_id"))
-      .agg(graft.functions.PrefixMinK.column(numT, denT)(
-        col("n"), col("dfreq"), col("tok")).as("pk"))
-      .select(col("doc_id"), explode(col("pk.items")).as("x"))
-      .select(col("doc_id"), col("x.dfreq").as("dfreq"), col("x.tok").as("tok"))
-      .filter(col("dfreq") <= effCap)
-      .select(col("doc_id"), col("tok"))
-    // index side: the RECOMPUTED plan, not the checkpoint — its join
-    // prunes the recomputed scan and pipelines (tools/P154, r11: full
-    // checkpoint here measured 5.3-5.4 s vs 4.1-4.5 s recomputing), and
-    // the kept-token build side is a real aggregate whose size AQE reads
-    // at runtime.
-    val index = toksPlan.join(
-      dfreq.filter(col("dfreq") <= effCap).select(col("tok")), "tok")
-    val cand0 = prefix.as("a")
-      .join(index.as("b"),
-        col("a.tok") === col("b.tok") && col("a.doc_id") =!= col("b.doc_id"))
-      .select(col("a.doc_id").as("sub"), col("b.doc_id").as("sup"))
-      .distinct()
-    containmentVerify(docs, idCol, textCol, shingleK, numT, denT, cand0,
-      inputSmall)
-  }
-
-  /** Exact directed-containment verify stage shared by
-    * [[containmentPairs]]' prefix × index join and its autoRoute
-    * banded-minhash chain: candidates (sub, sup) join the per-doc sorted
-    * shingle-hash arrays and C(sub→sup) = I/n_sub is re-checked against
-    * the exact integer threshold — candidate generators cost recall
-    * only, never precision. */
-  /** The BANDED-ONLY leg of the routed containment chain (16 lanes /
-    * 8 bands, word 3-shingles, bucket-capped, both directions through
-    * the exact verify). Until r20 this was the whole route; it is now
-    * ONE generator inside [[containmentRoutedUnion]], kept addressable
-    * `private[graft]` so DedupSimilaritySpec's route-complementarity
-    * test can run the banded leg in isolation at a scale where the
-    * forecast does not trip the route on its own — one source of
-    * truth, never a test-side replica. */
-  private[graft] def containmentRouted(docs: DataFrame, idCol: String,
-      textCol: String, shingleK: Int, numT: Int, denT: Int,
-      maxBucket: Int, inputSmall: Boolean): DataFrame = {
-    val sym = minhashCandidatesVolCapped(docs, idCol, textCol, shingleN = 3,
-      numHashes = 16, bands = 8, familyCap = maxBucket,
-      label = "containmentRouted")
-      .localCheckpoint()
-    val cand = sym.select(col("id_a").as("sub"), col("id_b").as("sup"))
-      .unionByName(
-        sym.select(col("id_b").as("sub"), col("id_a").as("sup")))
-    containmentVerify(docs, idCol, textCol, shingleK, numT, denT,
-      cand, inputSmall)
   }
 
   /** One-sided route probe width (r20): each prospective SUB doc probes
@@ -1516,68 +1420,37 @@ object Dedup {
     *    contract — volume-safe at ≤ 2 candidates/probe row). */
   private[graft] def oneSidedProbeCap(rollup: Array[(Long, Long)],
       budget: Double, label: String): Int = {
-    var cum = 0.0
-    var volCap = 0L
-    val it = rollup.sortBy(_._1).iterator
-    var full = false
-    while (it.hasNext && !full) {
-      val (dfreq, nRows) = it.next()
-      val v = nRows.toDouble * dfreq.toDouble
-      val bound =
-        if (dfreq <= OneSidedDefaultPosture) 2.0 * budget else budget
-      if (cum + v <= bound) { cum += v; volCap = dfreq } else full = true
-    }
+    val (volCap, cum) = budgetScan(rollup,
+      (dfreq, nRows) => nRows.toDouble * dfreq.toDouble,
+      dfreq => if (dfreq <= OneSidedDefaultPosture) 2.0 * budget else budget)
     val eff = math.max(OneSidedCapFloor.toLong, volCap)
       .min(Int.MaxValue.toLong).toInt
-    if (volCap < OneSidedCapFloor)
-      log.warn(f"$label: the dfreq≤$OneSidedCapFloor unique-quote " +
-        f"recall floor exceeds even the 2× posture stretch " +
-        f"($budget%.3e candidate budget; volume-derived cap $volCap) " +
-        "— proceeding at the floor (volume-safe: ≤ 2 candidates per " +
-        "probe row)")
-    else if (eff < OneSidedDefaultPosture)
-      // even the 2× stretch could not reach the posture: syndicated
-      // quotes whose rarest witness sits in (eff, 20] are lost to the
-      // budget — say so, and name the knob that buys them back (the
-      // 300k rehearsal row: cap 20→394 at 200/doc recovered 500/500)
-      log.warn(f"$label: one-sided probe cap $eff admits ${cum}%.3e " +
-        "candidates (≤ 2× budget posture stretch, exact pre-join " +
-        "count) — below the default dfreq-20 posture; quotes with no " +
-        f"witness at dfreq ≤ $eff are lost; raise " +
-        "spark.graft.route.scratchBytes to buy them back")
-    else
-      log.info(f"$label: one-sided probe cap $eff admits ${cum}%.3e " +
-        "candidates (exact pre-join count" +
-        (if (cum > budget) ", inside the 2× posture stretch" else "") +
-        ")")
+    val warn =
+      if (volCap < OneSidedCapFloor)
+        Some(s"the dfreq≤$OneSidedCapFloor unique-quote recall floor " +
+          s"exceeds even the 2× posture stretch (volume-derived cap " +
+          s"$volCap) — proceeding at the floor (volume-safe: ≤ 2 " +
+          "candidates per probe row)")
+      else if (eff < OneSidedDefaultPosture)
+        // the 300k rehearsal row: cap 20→394 at 200/doc recovered 500/500
+        Some(s"below the default dfreq-20 posture: quotes with no witness " +
+          s"at dfreq ≤ $eff are lost; raise spark.graft.route.scratchBytes " +
+          "to buy them back")
+      else None
+    val line = f"$label: one-sided probe cap $eff admits $cum%.3e " +
+      f"candidates (exact pre-join count, $budget%.3e budget" +
+      (if (cum > budget) ", inside the 2× posture stretch)" else ")")
+    warn.fold(log.info(line))(w => log.warn(s"$line — $w"))
     eff
   }
 
-  /** The ONE-SIDED containment route (r20 — the asymmetric-recall path
-    * the banded route measurably lacks: BASELINE casym, 0.2% routed
-    * recall at J≈0.03 vs 100% for the 19×-wall/225×-scratch exact
-    * join). Candidates come from the SUBSET side only: each doc probes
-    * its [[OneSidedProbeK]] globally-rarest char-`shingleK` shingles
-    * (native bounded `rarest_min_k` aggregate — the map-side partial
-    * never holds more than k pairs) against the FULL token index,
-    * capped at `maxDocsPerTok` (explicit mode) or at the largest dfreq
-    * the candidate-volume budget affords ([[oneSidedProbeCap]], autocap
-    * mode). A tiny-quote sub probes dfreq≈2 shingles by construction,
-    * so its posting lists — and hence the whole quote-in-doc candidate
-    * class — are cheap no matter how large the corpus: candidate volume
-    * is EXACTLY Σ dfreq over kept probe rows, ≤ budget by construction.
-    * Verification is the shared exact merge-scan
-    * ([[containmentVerify]]); candidate generation costs recall only,
-    * never precision. Both directions of a mutual near-dup emit (every
-    * doc probes as its own sub). */
   /** One-sided candidate generator shared by [[containmentPairsOneSided]]
-    * and [[containmentRoutedUnion]] (ONE source of truth — the r19
-    * lesson): directed (sub, sup) candidates from each doc's rarest-k
-    * probe against the full token index, distinct. */
+    * and both routed unions (ONE source of truth — the r19 lesson):
+    * directed (sub, sup) candidates from each doc's rarest-k probe
+    * against the full token index, distinct. */
   private def oneSidedCandidates(docs: DataFrame, probeK: Int,
-      maxDocsPerTok: Int, toks: DataFrame, toksPlan: DataFrame,
-      dfreq: DataFrame, nDocsIn: Long, label: String): DataFrame = {
-    val probePlan = toks.join(dfreq, "tok")
+      maxDocsPerTok: Int, f: Front, nDocsIn: Long, label: String): DataFrame = {
+    val probePlan = f.toks.join(f.dfreq, "tok")
       .groupBy(col("doc_id"))
       .agg(graft.functions.PrefixMinK.columnK(probeK)(
         col("n"), col("dfreq"), col("tok")).as("pk"))
@@ -1603,8 +1476,8 @@ object Dedup {
     // side already dropped cap-hot rows) but it keeps hot-token rows out
     // of the exchange; same shape and rationale as containmentPairs'
     // exact index.
-    val index = toksPlan.join(
-      dfreq.filter(col("dfreq") <= effCap).select(col("tok")), "tok")
+    val index = f.toksPlan.join(
+      f.dfreq.filter(col("dfreq") <= effCap).select(col("tok")), "tok")
     probe.filter(col("dfreq") <= effCap)
       .select(col("doc_id"), col("tok")).as("a")
       .join(index.as("b"),
@@ -1613,42 +1486,39 @@ object Dedup {
       .distinct()
   }
 
-  private[graft] def containmentOneSidedFrom(docs: DataFrame, idCol: String,
-      textCol: String, shingleK: Int, numT: Int, denT: Int, probeK: Int,
-      maxDocsPerTok: Int, toks: DataFrame, toksPlan: DataFrame,
-      dfreq: DataFrame, inputSmall: Boolean, nDocsIn: Long = -1L): DataFrame =
+  /** The routed unions' one assembly: the symmetric banded pairs `sym`
+    * (id_a < id_b) in BOTH directions, unioned with the directed
+    * one-sided candidates, distinct — the generators overlap on pairs
+    * that are both near-identical and mutually containing — through ONE
+    * exact verify. */
+  private def unionVerify(docs: DataFrame, idCol: String, textCol: String,
+      shingleK: Int, numT: Int, denT: Int, sym: DataFrame,
+      oneSided: DataFrame, inputSmall: Boolean): DataFrame =
     containmentVerify(docs, idCol, textCol, shingleK, numT, denT,
-      oneSidedCandidates(docs, probeK, maxDocsPerTok, toks, toksPlan,
-        dfreq, nDocsIn, "containmentOneSided"),
+      sym.select(col("id_a").as("sub"), col("id_b").as("sup"))
+        .unionByName(sym.select(col("id_b").as("sub"), col("id_a").as("sup")))
+        .unionByName(oneSided).distinct(),
       inputSmall)
 
   /** The r20 routed chain [[containmentPairs]] swaps in under
     * `autoRoute`: the DISTINCT UNION of the banded-minhash candidates
     * (both directions, volume-capped bucket cap) and the one-sided
     * rarest-k candidates (volume-capped probe cap), through ONE shared
-    * exact verify. The two generators cover complementary failure
-    * modes — see the route-branch comment in [[containmentPairs]] — at
-    * ≤ 3× the single-generator candidate budget by construction
-    * (banded ≤ 1×, one-sided ≤ 2× through its posture stretch). */
+    * exact verify — ≤ 3× the single-generator candidate budget by
+    * construction (banded ≤ 1×, one-sided ≤ 2× through its posture
+    * stretch). `f` is the caller's [[containmentFront]], pinned toks
+    * included; `nDocsIn` ≤ 0 makes the one-sided leg count the docs. */
   private[graft] def containmentRoutedUnion(docs: DataFrame, idCol: String,
       textCol: String, shingleK: Int, numT: Int, denT: Int,
-      maxBucket: Int, toks: DataFrame, toksPlan: DataFrame,
-      dfreq: DataFrame, inputSmall: Boolean, nDocsIn: Long): DataFrame = {
+      maxBucket: Int, f: Front, nDocsIn: Long): DataFrame = {
     val sym = minhashCandidatesVolCapped(docs, idCol, textCol, shingleN = 3,
       numHashes = 16, bands = 8, familyCap = maxBucket,
       label = "containmentRoutedUnion")
       .localCheckpoint()
-    val banded = sym.select(col("id_a").as("sub"), col("id_b").as("sup"))
-      .unionByName(
-        sym.select(col("id_b").as("sub"), col("id_a").as("sup")))
     val oneSided = oneSidedCandidates(docs, OneSidedProbeK,
-      maxDocsPerTok = 0, toks, toksPlan, dfreq, nDocsIn,
-      "containmentRoutedUnion")
-    // the generators overlap on pairs that are BOTH near-identical and
-    // mutually containing — distinct so the verify scans each pair once
-    val cand = banded.unionByName(oneSided).distinct()
-    containmentVerify(docs, idCol, textCol, shingleK, numT, denT, cand,
-      inputSmall)
+      maxDocsPerTok = 0, f, nDocsIn, "containmentRoutedUnion")
+    unionVerify(docs, idCol, textCol, shingleK, numT, denT, sym, oneSided,
+      f.inputSmall)
   }
 
   /** Oracle-portable twin of [[containmentRoutedUnion]] (the q261
@@ -1674,51 +1544,57 @@ object Dedup {
     require(maxDocsPerTok > 0, "the portable twin is explicit-cap only " +
       "(the oracle mirrors the cap); use containmentPairs(autoRoute) " +
       "for the volume-budgeted production route")
-    val (_, toks, toksPlan, dfreq, inputSmall) =
-      containmentFront(docs, idCol, textCol, shingleK)
+    val f = containmentFront(docs, idCol, textCol, shingleK)
     val sym = minhashCandidatesPortable(docs, idCol, textCol,
       shingleN = 3, numHashes = 16, bands = bands, maxBucket = maxBucket)
-    val banded = sym.select(col("id_a").as("sub"), col("id_b").as("sup"))
-      .unionByName(
-        sym.select(col("id_b").as("sub"), col("id_a").as("sup")))
-    val oneSided = oneSidedCandidates(docs, probeK, maxDocsPerTok, toks,
-      toksPlan, dfreq, nDocsIn = -1L, "containmentUnionPortable")
-    containmentVerify(docs, idCol, textCol, shingleK, numT, denT,
-      banded.unionByName(oneSided).distinct(), inputSmall)
+    val oneSided = oneSidedCandidates(docs, probeK, maxDocsPerTok, f,
+      nDocsIn = -1L, "containmentUnionPortable")
+    unionVerify(docs, idCol, textCol, shingleK, numT, denT, sym, oneSided,
+      f.inputSmall)
   }
 
-  /** [[containmentRoutedUnion]] with its own token tables — the entry
-    * DedupSimilaritySpec's route-complementarity test runs at a scale
-    * where the forecast does not trip the route on its own (same
-    * rationale as [[containmentRouted]]: the test and the route branch
-    * must exercise ONE chain). */
-  private[graft] def containmentRoutedUnionStandalone(docs: DataFrame,
-      idCol: String, textCol: String, shingleK: Int, numT: Int,
-      denT: Int, maxBucket: Int): DataFrame = {
-    val (_, toks, toksPlan, dfreq, inputSmall) =
-      containmentFront(docs, idCol, textCol, shingleK)
-    containmentRoutedUnion(docs, idCol, textCol, shingleK, numT, denT,
-      maxBucket, toks, toksPlan, dfreq, inputSmall, nDocsIn = -1L)
-  }
-
-  /** Standalone entry for the one-sided containment route — the public
-    * quote-in-doc/contamination-check operator q259 runs (ONE source of
-    * truth with [[containmentPairs]]'s route branch, which calls the
-    * same [[containmentOneSidedFrom]]). `maxDocsPerTok > 0` = explicit cap
-    * (oracle-mirrorable: probe = `row_number() OVER (PARTITION BY doc
-    * ORDER BY dfreq, tok) ≤ probeK AND dfreq ≤ cap`); 0 = the
-    * volume-budgeted autocap ([[routeCandidateBudget]]). */
+  /** The ONE-SIDED containment route (r20 — the asymmetric-recall path
+    * the banded route measurably lacks: BASELINE casym, 0.2% routed
+    * recall at J≈0.03 vs 100% for the 19×-wall/225×-scratch exact
+    * join). Candidates come from the SUBSET side only: each doc probes
+    * its [[OneSidedProbeK]] globally-rarest char-`shingleK` shingles
+    * (native bounded `rarest_min_k` aggregate — the map-side partial
+    * never holds more than k pairs) against the FULL token index,
+    * capped at `maxDocsPerTok` (explicit mode) or at the largest dfreq
+    * the candidate-volume budget affords ([[oneSidedProbeCap]], autocap
+    * mode). A tiny-quote sub probes dfreq≈2 shingles by construction,
+    * so its posting lists — and hence the whole quote-in-doc candidate
+    * class — are cheap no matter how large the corpus: candidate volume
+    * is EXACTLY Σ dfreq over kept probe rows, ≤ budget by construction.
+    * Verification is the shared exact merge-scan
+    * ([[containmentVerify]]); candidate generation costs recall only,
+    * never precision. Both directions of a mutual near-dup emit (every
+    * doc probes as its own sub).
+    *
+    * Standalone entry for the quote-in-doc/contamination check q259
+    * runs (the same generator as [[containmentPairs]]' route branch).
+    * `maxDocsPerTok > 0` = explicit cap (oracle-mirrorable: probe =
+    * `row_number() OVER (PARTITION BY doc ORDER BY dfreq, tok) ≤ probeK
+    * AND dfreq ≤ cap`); 0 = the volume-budgeted autocap
+    * ([[routeCandidateBudget]]). */
   def containmentPairsOneSided(docs: DataFrame, idCol: String,
       textCol: String, shingleK: Int = 8, numT: Int = 3, denT: Int = 4,
       probeK: Int = OneSidedProbeK, maxDocsPerTok: Int = 0): DataFrame = {
     require(numT > 0 && denT > numT, s"threshold must be in (0,1): $numT/$denT")
     require(probeK > 0, s"probeK must be > 0: $probeK")
-    val (_, toks, toksPlan, dfreq, inputSmall) =
-      containmentFront(docs, idCol, textCol, shingleK)
-    containmentOneSidedFrom(docs, idCol, textCol, shingleK, numT, denT,
-      probeK, maxDocsPerTok, toks, toksPlan, dfreq, inputSmall)
+    val f = containmentFront(docs, idCol, textCol, shingleK)
+    containmentVerify(docs, idCol, textCol, shingleK, numT, denT,
+      oneSidedCandidates(docs, probeK, maxDocsPerTok, f, nDocsIn = -1L,
+        "containmentOneSided"),
+      f.inputSmall)
   }
 
+  /** Exact directed-containment verify stage shared by
+    * [[containmentPairs]]' prefix × index join and its autoRoute
+    * banded-minhash chain: candidates (sub, sup) join the per-doc sorted
+    * shingle-hash arrays and C(sub→sup) = I/n_sub is re-checked against
+    * the exact integer threshold — candidate generators cost recall
+    * only, never precision. */
   private def containmentVerify(docs: DataFrame, idCol: String,
       textCol: String, shingleK: Int, numT: Int, denT: Int,
       cand0: DataFrame, inputSmall: Boolean): DataFrame = {

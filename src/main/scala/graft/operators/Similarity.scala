@@ -21,8 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   /** Checkpoint a bucket-size table in autocap mode only: the autocap
     * rollup is a separate action, so without the pin the keep join
     * recomputes the signature pass; explicit-cap mode has one consumer
@@ -30,6 +28,40 @@ object Similarity {
     * autocap pin, settled fresh-JVM"). */
   private def maybePinSizes(sizes: DataFrame, autoCap: Boolean): DataFrame =
     if (autoCap) sizes.localCheckpoint() else sizes
+
+  /** The hot-bucket cap of the LSH joins: `rows` semi-joined against the
+    * `keys` buckets holding at most the cap (the partial aggregate
+    * collapses a collapsed-signature bucket map-side, and AQE broadcasts
+    * the ≤ 2^bits-row bucket list). `maxBucket` = Int.MaxValue is off
+    * (`rows` unchanged); 0 derives the cap through [[Dedup.autoCap]] over
+    * the bucket-size rollup, whose forecast is the C(m, 2) pairs the
+    * within-bucket self-join emits per kept bucket (r17). */
+  private def capBuckets(rows: DataFrame, keys: Seq[String],
+      vectors: DataFrame, maxBucket: Int, templateShare: Double,
+      label: String): DataFrame = {
+    // Only the documented 0 sentinel selects autoCap — a negative cap is a
+    // caller arithmetic bug (e.g. an Int-wrapped value) and must fail loudly
+    // rather than silently derive a cap from the data (r14 ADVICE).
+    require(maxBucket >= 0,
+      s"maxBucket must be >= 0 (0 = derive from the bucket-size " +
+        s"distribution): $maxBucket")
+    require(maxBucket > 0 || (templateShare > 0 && templateShare <= 1),
+      s"autoCap mode needs templateShare in (0,1]: $templateShare")
+    if (maxBucket == Int.MaxValue) rows
+    else {
+      val sizes = maybePinSizes(rows.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("m")), autoCap = maxBucket == 0)
+      val effCap =
+        if (maxBucket > 0) maxBucket.toLong
+        else {
+          val nVecs = vectors.count()
+          Dedup.autoCap(Dedup.countRollup(sizes, "m"), nVecs, templateShare,
+            Dedup.pairsIn, label).cap.toLong
+        }
+      rows.join(sizes.filter(col("m") <= effCap).select(keys.map(col): _*),
+        keys)
+    }
+  }
 
   /** Element-wise dot product — native compiled loop
     * ([[graft.functions.VectorOps]]), sequential left fold so results are
@@ -288,14 +320,6 @@ object Similarity {
       bits: Int = 16, minSim: Double = 0.9,
       signature: (Column, Int) => Column = hyperplaneSignature,
       maxBucket: Int = Int.MaxValue, templateShare: Double = 0.5): DataFrame = {
-    // Only the documented 0 sentinel selects autoCap — a negative cap is a
-    // caller arithmetic bug (e.g. an Int-wrapped value) and must fail loudly
-    // rather than silently derive a cap from the data (r14 ADVICE).
-    require(maxBucket >= 0,
-      s"maxBucket must be >= 0 (0 = derive from the bucket-size " +
-        s"distribution): $maxBucket")
-    require(maxBucket > 0 || (templateShare > 0 && templateShare <= 1),
-      s"autoCap mode needs templateShare in (0,1]: $templateShare")
     // Carry a per-row norm column through the join (computed once per
     // vector; the join shuffle materializes it) so each candidate pair
     // costs one native dot product + a multiply. Normalizing the array
@@ -304,47 +328,8 @@ object Similarity {
     val sig0 = vectors.select(col(idCol).as("vid"), col(vecCol).as("v"),
       sqrt(dot(col(vecCol), col(vecCol))).as("nrm"),
       signature(col(vecCol), bits).as("bucket"))
-    val sig =
-      if (maxBucket == Int.MaxValue) sig0
-      else {
-        // pinned in autocap mode only, see [[maybePinSizes]]
-        val sizes = maybePinSizes(
-          sig0.groupBy(col("bucket")).agg(count(lit(1)).as("m")),
-          autoCap = maxBucket == 0)
-        val effCap =
-          if (maxBucket > 0) maxBucket.toLong
-          else {
-            val nVecs = vectors.count()
-            // ONE driver-side rollup serves the template-floor cap AND
-            // the forecast — at most one row per distinct bucket size
-            val rollup = Dedup.countRollup(sizes, "m")
-            val cap = Dedup.capBelowTemplateFloorLocal(rollup, nVecs,
-              templateShare, "lshNearPairs").toLong
-            // candidate forecast (r17, the embedding mirror of the text
-            // side's): the within-bucket self-join emits C(m, 2) pairs
-            // per kept bucket — the rollup prices the join before it
-            // runs. Same warn routing as prefixJaccardPairs: a forecast
-            // that dwarfs the corpus says the signature has collapsed or
-            // the corpus needs more bits / an absolute cap.
-            val pred = rollup.iterator.takeWhile(_._1 <= cap)
-              .map { case (m, nb) => nb.toDouble * m.toDouble * (m - 1).toDouble / 2.0 }
-              .sum
-            if (pred > Dedup.WarnCandidatesPerDoc * nVecs)
-              log.warn(f"lshNearPairs autoCap=$cap admits $pred%.3e " +
-                f"candidate pairs (${pred / math.max(nVecs, 1)}%.0f per " +
-                "vector) — raise bits or set an absolute maxBucket at the " +
-                "largest genuine cluster size")
-            else
-              log.info(f"lshNearPairs autoCap=$cap predicted candidate " +
-                f"pairs = $pred%.3e")
-            cap
-          }
-        // semi-join against the kept-bucket set: the partial aggregate
-        // collapses a collapsed-signature bucket map-side and AQE
-        // broadcasts the (≤ 2^bits row) bucket list
-        sig0.join(sizes.filter(col("m") <= effCap).select(col("bucket")),
-          "bucket")
-      }
+    val sig = capBuckets(sig0, Seq("bucket"), vectors, maxBucket,
+      templateShare, "lshNearPairs")
     val a = sig.as("a"); val b = sig.as("b")
     a.join(b, col("a.bucket") === col("b.bucket") && col("a.vid") < col("b.vid"))
       .select(col("a.vid").as("id_a"), col("b.vid").as("id_b"),
@@ -378,11 +363,6 @@ object Similarity {
       signatureAt: (Column, Int, Int) => Column = hyperplaneSignatureAt,
       maxBucket: Int = Int.MaxValue, templateShare: Double = 0.5): DataFrame = {
     require(tables >= 1, s"tables must be >= 1: $tables")
-    require(maxBucket >= 0,
-      s"maxBucket must be >= 0 (0 = derive from the bucket-size " +
-        s"distribution): $maxBucket")
-    require(maxBucket > 0 || (templateShare > 0 && templateShare <= 1),
-      s"autoCap mode needs templateShare in (0,1]: $templateShare")
     val base = vectors.select(col(idCol).as("vid"), col(vecCol).as("v"),
       sqrt(dot(col(vecCol), col(vecCol))).as("nrm"))
     val sigs = vectors.select(col(idCol).as("vid"),
@@ -390,25 +370,9 @@ object Similarity {
         struct(lit(l).as("tbl"),
           signatureAt(col(vecCol), bits, l).as("bucket"))): _*)).as("s"))
       .select(col("vid"), col("s.tbl").as("tbl"), col("s.bucket").as("bucket"))
-    val kept =
-      if (maxBucket == Int.MaxValue) sigs
-      else {
-        // pinned in autocap mode — same two-action mechanism as
-        // [[lshNearPairs]] (r19): the rollup collect below is a separate
-        // action, so the keep join otherwise recomputes every table's
-        // signature explode
-        val sizes = maybePinSizes(sigs.groupBy(col("tbl"), col("bucket"))
-          .agg(count(lit(1)).as("m")), autoCap = maxBucket == 0)
-        val effCap =
-          if (maxBucket > 0) maxBucket.toLong
-          else {
-            val nVecs = vectors.count()
-            Dedup.capBelowTemplateFloorLocal(Dedup.countRollup(sizes, "m"),
-              nVecs, templateShare, "lshNearPairsTables").toLong
-          }
-        sigs.join(sizes.filter(col("m") <= effCap)
-          .select(col("tbl"), col("bucket")), Seq("tbl", "bucket"))
-      }
+    // a collapsed bucket in ONE table does not poison the others
+    val kept = capBuckets(sigs, Seq("tbl", "bucket"), vectors, maxBucket,
+      templateShare, "lshNearPairsTables")
     val a = kept.as("a"); val b = kept.as("b")
     val cand = a.join(b, col("a.tbl") === col("b.tbl") &&
         col("a.bucket") === col("b.bucket") && col("a.vid") < col("b.vid"))
@@ -465,33 +429,11 @@ object Similarity {
     val nProbes = if (probes < 0) bits else probes
     require(nProbes <= bits,
       s"probes must be <= bits (one flip per signature bit): $probes")
-    require(maxBucket >= 0,
-      s"maxBucket must be >= 0 (0 = derive from the bucket-size " +
-        s"distribution): $maxBucket")
-    require(maxBucket > 0 || (templateShare > 0 && templateShare <= 1),
-      s"autoCap mode needs templateShare in (0,1]: $templateShare")
     val home0 = vectors.select(col(idCol).as("vid"), col(vecCol).as("v"),
       sqrt(dot(col(vecCol), col(vecCol))).as("nrm"),
       signature(col(vecCol), bits).as("bucket"))
-    val home =
-      if (maxBucket == Int.MaxValue) home0
-      else {
-        // pinned in autocap mode — same two-action mechanism as
-        // [[lshNearPairs]] (r19; the multiprobe A/B numbers are in
-        // BASELINE r19 alongside the single-table ones)
-        val sizes = maybePinSizes(
-          home0.groupBy(col("bucket")).agg(count(lit(1)).as("m")),
-          autoCap = maxBucket == 0)
-        val effCap =
-          if (maxBucket > 0) maxBucket.toLong
-          else {
-            val nVecs = vectors.count()
-            Dedup.capBelowTemplateFloorLocal(Dedup.countRollup(sizes, "m"),
-              nVecs, templateShare, "lshNearPairsMultiProbe").toLong
-          }
-        home0.join(sizes.filter(col("m") <= effCap).select(col("bucket")),
-          "bucket")
-      }
+    val home = capBuckets(home0, Seq("bucket"), vectors, maxBucket,
+      templateShare, "lshNearPairsMultiProbe")
     // probe side: home bucket + one flip per probed bit. The signature is
     // projected ONCE as an attribute below the explode and the probe
     // array is (probes + 1) one-instruction xor flips of that attribute

@@ -43,9 +43,4 @@ object EnsoPipeline {
       .withColumn("DATE", concat_ws("-", col("YEAR"), col("MONTH"), col("DAY")))
       .transform(Transforms.stampActualizacion(_))
   }
-
-  /** Optional current-year filter — present but disabled in the reference
-    * (`HTGPIENSO/__init__.py:85-86`). */
-  def filterYear(df: DataFrame, year: Int): DataFrame =
-    df.filter(col("YEAR") === year.toString)
 }

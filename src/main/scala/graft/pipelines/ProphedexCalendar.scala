@@ -69,11 +69,4 @@ object ProphedexCalendar {
         }
     }
   }
-
-  /** At-the-money strike from a price, per-commodity step (reference `:354,
-    * 793-829`: `round(x/100,1)*1000` and ×10000/×500 variants). Spark's
-    * `round` is HALF_UP; the reference's Python `round` is banker's — we
-    * standardize on HALF_UP and document the delta (SURVEY §7.4 risk 4). */
-  def atmStrike(price: Double, step: Double): Double =
-    math.round(price / step) * step
 }

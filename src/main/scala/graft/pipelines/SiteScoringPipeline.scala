@@ -175,20 +175,6 @@ object SiteScoringPipeline {
     coalesce(arms :+ lit(default): _*)
   }
 
-  /** [[preparePois]] with the complete reference table: cleans the name,
-    * uppers the type (`PGSITE/__init__.py:130`), categorizes over BOTH
-    * columns with all 47 rules. */
-  def preparePoisFull(pois: DataFrame): DataFrame =
-    pois
-      .withColumn("poi_name", cleanName(col("poi_name")))
-      .withColumn("poi_type", upper(col("poi_type")))
-      .withColumn("poi_category",
-        categorizePoi(col("poi_name"), col("poi_type")))
-      .withColumn("distance_mtrs",
-        GeoFunctions.haversineMeters(col("rst_lat"), col("rst_lon"),
-          col("poi_lat"), col("poi_lon")))
-      .dropDuplicates("rst_cd", "poi_id")
-
   /** Name cleanup (`PGSITE/__init__.py:129-140`): upper, trim, accent fold,
     * punctuation strip — `translate` + `regexp_replace`, all codegen'd. */
   def cleanName(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =

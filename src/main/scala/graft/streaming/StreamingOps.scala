@@ -319,34 +319,12 @@ object StreamingOps {
     // deleted when the stream has ended (the memory sink holds the rows
     // by then)
     val dir = java.nio.file.Files.createTempDirectory("graft-stream-2b")
-    def writePhase(i: Int, df: DataFrame): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft-phase$i")
-      // repartition(1), NOT coalesce(1) (r21, guide §2.4): coalesce
-      // propagates the 1-partition constraint UP the plan, so the whole
-      // scan + normalize + phase filter ran as ONE task; repartition
-      // keeps the scan parallel and funnels only the surviving phase
-      // rows through one exchange into the single part file the
-      // maxFilesPerTrigger=1 contract needs. Within-file row order is
-      // not load-bearing (each phase is consumed as one whole
-      // micro-batch; every consumer aggregates).
-      df.repartition(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = tmp.toFile.listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-        .headOption
-        .getOrElse(sys.error(s"runAvailableNowDateSplit($path): phase $i " +
-          "produced no parquet part file — the phase filter matched zero " +
-          "rows despite the min<max split guard"))
-      val dest = dir.resolve(f"phase-$i%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dest)
-      // modTimes 60 s apart: phase order must never depend on how fast
-      // the two writes happened to land on the local FS clock. Checked:
-      // a filesystem that refuses setLastModified would silently drop
-      // the ordering pin (r19 ADVICE).
-      require(dest.toFile.setLastModified(1700000000000L + i * 60000L),
-        s"runAvailableNowDateSplit: setLastModified refused on $dest — " +
-          "phase ordering would depend on the local FS clock")
-      deleteRecursively(tmp)
-    }
+    // phase order is pinned by file name and by modTimes 60 s apart: it
+    // must never depend on how fast the two writes happened to land on
+    // the local FS clock
+    def writePhase(i: Int, df: DataFrame): Unit =
+      writeSingleParquet(df, dir.resolve(f"phase-$i%02d.parquet"),
+        1700000000000L + i * 60000L, s"runAvailableNowDateSplit($path): phase $i")
     try {
       // The two phase writes are independent jobs over the same scan —
       // overlap them (guide §2.6) so phase B's scan back-fills the cores
@@ -372,6 +350,33 @@ object StreamingOps {
       q.awaitTermination()
       (spark.table(queryName), q.recentProgress.toSeq)
     } finally deleteRecursively(dir)
+  }
+
+  /** Write `df` as ONE plain parquet file at `dest` whose modification
+    * time is `mtime` — the unit a file stream source reads as one
+    * micro-batch, ordered by name and modTime. `what` names the file in
+    * the errors.
+    *
+    * repartition(1), NOT coalesce(1) (r21, guide §2.4): coalesce
+    * propagates the 1-partition constraint UP the plan, so the whole scan
+    * and filter would run as ONE task; repartition keeps the scan
+    * parallel and funnels only the surviving rows through one exchange
+    * into the single part file. The modTime is checked: a filesystem that
+    * refuses setLastModified would silently drop the ordering pin (r19
+    * ADVICE). */
+  private[graft] def writeSingleParquet(df: DataFrame,
+      dest: java.nio.file.Path, mtime: Long, what: String): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-single-parquet")
+    df.repartition(1).write.mode("overwrite").parquet(tmp.toString)
+    val part = tmp.toFile.listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+      .headOption
+      .getOrElse(sys.error(s"$what produced no parquet part file"))
+    java.nio.file.Files.move(part.toPath, dest)
+    require(dest.toFile.setLastModified(mtime),
+      s"$what: setLastModified refused on $dest — file order would " +
+        "depend on the local FS clock")
+    deleteRecursively(tmp)
   }
 
   /** Flatten labeled progress sequences into one state-metrics DataFrame:
@@ -433,6 +438,24 @@ object StreamingOps {
           }
         }
     }.toDF("stream", "op_idx", "rows_total", "rows_updated", "rows_removed")
+  }
+
+  /** Per micro-batch counts of a stream's FIRST stateful operator, as
+    * (batch_seq, input_rows, rows_total, rows_updated, rows_removed).
+    * batch_seq re-indexes the sorted batch ids, so an oracle never
+    * depends on Spark's internal batch numbering; a batch without a
+    * stateful operator has no row. */
+  private[graft] def batchStateCounts(spark: SparkSession,
+      progs: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress])
+      : DataFrame = {
+    import spark.implicits._
+    progs.sortBy(_.batchId).zipWithIndex.flatMap { case (p, seq) =>
+      p.stateOperators.headOption.map { so =>
+        (seq.toLong, p.numInputRows, so.numRowsTotal, so.numRowsUpdated,
+          so.numRowsRemoved)
+      }
+    }.toDF("batch_seq", "input_rows", "rows_total", "rows_updated",
+      "rows_removed")
   }
 
   /** Verify-artifact sidecar for the store-impl-dependent streaming

@@ -622,6 +622,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val eff4 = graft.operators.Dedup.volCappedBucketCap(hot, bands = 8,
       familyCap = 5000, label = "spec")
     assert(eff4 == 1000, s"recall floor must hold: $eff4")
+    // an empty rollup (no banded rows at all) lands on the recall floor
+    assert(graft.operators.Dedup.volCappedBucketCap(Array.empty[(Long, Long)],
+      bands = 8, familyCap = 5000, label = "spec") == 1000)
   }
 
   test("connectedComponents matches union-find on random graphs") {
@@ -1064,17 +1067,24 @@ class DedupSimilaritySpec extends AnyFunSuite {
       s"fixture no longer adversarial for rarest-k: " +
         s"${oneSided.intersect(famTruth).take(5)}")
 
-    val banded = Dedup.containmentRouted(d, "doc_id", "text", shingleK = 8,
-      numT = 3, denT = 4, maxBucket = 1000, inputSmall = true)
-      .select("id_sub", "id_sup").as[(Long, Long)].collect().toSet
+    // the route's banded generator, before the both-directions emit and
+    // the verify: an unordered candidate pair, so a family pair missing
+    // here is lost to the route's banded leg, and the quote may not even
+    // be a candidate
+    val bandedSym = Dedup.minhashCandidatesVolCapped(d, "doc_id", "text",
+      shingleN = 3, numHashes = 16, bands = 8, familyCap = 1000,
+      label = "spec").select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    val banded = bandedSym ++ bandedSym.map(_.swap)
     assert(famTruth.subsetOf(banded),
       s"banded route lost family pairs: ${(famTruth -- banded).take(5)}")
     assert(!banded.contains((900L, 901L)),
       "fixture no longer adversarial for the bands (quote collided); " +
         "change the filler vocabulary to restore the pinned miss")
 
-    val union = Dedup.containmentRoutedUnionStandalone(d, "doc_id",
-      "text", shingleK = 8, numT = 3, denT = 4, maxBucket = 1000)
+    val union = Dedup.containmentRoutedUnion(d, "doc_id", "text",
+      shingleK = 8, numT = 3, denT = 4, maxBucket = 1000,
+      Dedup.containmentFront(d, "doc_id", "text", shingleK = 8),
+      nDocsIn = -1L)
       .select("id_sub", "id_sup").as[(Long, Long)].collect().toSet
     assert(truth.subsetOf(union),
       s"union route lost pairs: ${(truth -- union).take(5)}")
@@ -1127,6 +1137,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(graft.operators.Dedup.oneSidedProbeCap(stretch, 8000.0,
       "spec") == 10)
     assert(graft.operators.Dedup.OneSidedDefaultPosture == 20)
+    // an empty rollup (no probe rows at all) lands on the dfreq-2 floor
+    assert(graft.operators.Dedup.oneSidedProbeCap(Array.empty[(Long, Long)],
+      8000.0, "spec") == 2)
   }
 
   test("routeCandidateBudget: conf-overridable, scratch-derived, floored " +

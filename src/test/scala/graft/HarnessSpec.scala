@@ -13,7 +13,8 @@ import graft.operators.Overlap
 /** The run harness around the queries: the one session policy, the
   * query/oracle contract, the bench's retest-reference resolution,
   * `Overlap.runAll`'s failure handling, and the censuses of main-code
-  * knobs and schema-less parquet reads. */
+  * knobs, session artifacts, schema-less parquet reads and cap
+  * decisions. */
 class HarnessSpec extends AnyFunSuite with TimeLimits {
   implicit val signaler: Signaler = ThreadSignaler
 
@@ -178,5 +179,33 @@ class HarnessSpec extends AnyFunSuite with TimeLimits {
     assert(allowed.forall(reads.contains), "an allowed site is gone or moved")
     assert(reads.filterNot(allowed).isEmpty,
       "a parquet read infers its schema with a job; use Tables.schemaOf")
+  }
+
+  test("cap census: the dedup and similarity caps are decided in one step") {
+    import scala.jdk.CollectionConverters._
+    val files = Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 10, "src/main/scala not found from the working dir")
+    val comments = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val defName = """\bdef\s+(\w+)""".r
+    val defining = """\b(?:def|val)\s+$""".r
+    // each use of `name` that is not its definition, named by the file and
+    // the method it sits in
+    def uses(name: String): Seq[String] = files.flatMap { f =>
+      val src = comments.replaceAllIn(Files.readString(f), "")
+      s"\\b$name\\b".r.findAllMatchIn(src).map(_.start)
+        .filterNot(i =>
+          defining.findFirstIn(src.substring(math.max(0, i - 16), i)).isDefined)
+        .map { i =>
+          val in = defName.findAllMatchIn(src.substring(0, i)).toSeq
+            .lastOption.fold("<top>")(_.group(1))
+          s"${f.getFileName}: $in"
+        }
+    }
+    // the template floor and the warn threshold are read by the autocap
+    // step alone; the LSH joins pin their bucket sizes through one helper
+    assert(uses("capBelowTemplateFloorLocal") == Seq("Dedup.scala: autoCap"))
+    assert(uses("WarnCandidatesPerDoc") == Seq("Dedup.scala: autoCap"))
+    assert(uses("maybePinSizes") == Seq("Similarity.scala: capBuckets"))
   }
 }

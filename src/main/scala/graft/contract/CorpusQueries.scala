@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
-import graft.operators.{Blocklist, Corpus, Multimodal, Transforms}
+import graft.operators.{Blocklist, Corpus, Multimodal, Spread, Transforms}
 
 /** Corpus and text analytics over `documents`: tokens, quality
   * signals, language models, sketches, sampling and mixture budgets. */
@@ -495,10 +495,7 @@ object CorpusQueries {
       // shuffled ~|text| rows per doc twice. Zero shuffles remain — the
       // query is a map-side projection. (The earlier explode spelling is
       // preserved semantically: the oracle SQL is unchanged.)
-      val docs0 = documents(s, d)
-      val par = s.sparkContext.defaultParallelism
-      val docs = if (docs0.rdd.getNumPartitions < par) docs0.repartition(par)
-                 else docs0
+      val docs = Spread.fanOutScan(documents(s, d), col("doc_id"))
       import org.apache.spark.sql.GraftBridge
       val fps = GraftBridge.column(graft.functions.WinnowFingerprints(
         GraftBridge.expression(TextFunctions.normalize(col("text"))), 5, 4))
@@ -812,7 +809,7 @@ object CorpusQueries {
       // r21: same three-consumer pin as q107's shd (sizes + both sides
       // of the intersection self-join) — one explode+distinct pass, not
       // three, under the small-input gate.
-      val shd = ckptIfSmall(docs)(docs.select(col("source"),
+      val shd = Spread.pinIfSmall(docs)(docs.select(col("source"),
           explode(graft.functions.ShingleOps.wordShinglesCol(col("text"), 3))
             .as("sh")).distinct())
       val sizes = shd.groupBy(col("source")).agg(count(lit(1)).as("n"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
-import graft.operators.{Corpus, Dedup}
+import graft.operators.{Corpus, Dedup, Spread}
 
 /** Near-duplicate detection: exact, MinHash/LSH, prefix-filter
   * Jaccard, containment, shared passages and the curation chains over
@@ -302,10 +302,7 @@ object DedupQueries {
       // the shingle explode is CPU-bound: fan a narrower-than-cores scan
       // out first (test parquet is one row group; a real corpus already
       // has plenty of scan partitions and skips this shuffle)
-      val par = s.sparkContext.defaultParallelism
-      val spread =
-        if (docs.rdd.getNumPartitions < par) docs.repartition(par) else docs
-      spread.select(col("doc_id"), sh3)
+      Spread.fanOutScan(docs, col("doc_id")).select(col("doc_id"), sh3)
         .join(broadcast(bench), "s")
         .groupBy(col("doc_id"))
         .agg(countDistinct(col("s")).cast("long").as("n_hits"))
@@ -374,7 +371,7 @@ object DedupQueries {
       // gate as the dedup fronts; a caller at scale recomputes.
       // fanOutScan measured ~neutral here (r22): the explode feeds the
       // distinct's exchange either way — left unspread
-      val shd = ckptIfSmall(docs)(docs.select(col("doc_id"),
+      val shd = Spread.pinIfSmall(docs)(docs.select(col("doc_id"),
         explode(graft.functions.ShingleOps.wordShinglesCol(col("text"), 3))
           .as("sh")).distinct())
       val sizes = shd.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
@@ -1310,7 +1307,7 @@ object DedupQueries {
           coalesce(sum(when(minTok, col("n_tok"))), lit(0L))
             .cast("long").as("t2"))
         .localCheckpoint()
-      val s3 = ckptIfSmall(documents(s, d))(
+      val s3 = Spread.pinIfSmall(documents(s, d))(
         raw.filter(nonEmpty).filter(col("n_tok") >= 10)
           .withColumn("_rn", row_number().over(
             Window.partitionBy(TextFunctions.fingerprint(col("text")))

@@ -144,9 +144,6 @@ object IngestQueries {
       ((col("o_orderkey") * 7919) % 601).cast("double").as("distance_mtrs"))
   }
 
-  /** Literal WASDE-shaped sheet rows (FIXTURES.md §9 features: footnote
-    * markers, group rows, EST/PROJ year labels, blank continuation
-    * geography, NA/'' cells, Selected Other skip). */
   /** Decoded `(sheet, rowIdx, cells)` rows → parsed supply/use table with
     * the q37 output columns. Shared by q73/q74. Absent trailing cells of
     * ragged rows read back as "" — must be try_element_at (ANSI element_at
@@ -167,6 +164,9 @@ object IngestQueries {
         col("total_use"), col("stocks_to_use"))
   }
 
+  /** Literal WASDE-shaped sheet rows (FIXTURES.md §9 features: footnote
+    * markers, group rows, EST/PROJ year labels, blank continuation
+    * geography, NA/'' cells, Selected Other skip). */
   private val wasdeFixture: Seq[(String, Long, String, String, String, String, String, String, String, String)] = Seq(
     ("p18", 0L, "2025/26 (Est.) 2/", "", "", "", "", "", "", ""),
     ("p18", 1L, "World 3/", "", "", "", "", "", "", ""),

@@ -118,18 +118,6 @@ object Shared {
     p.toString
   }
 
-  /** Gated pin for a subtree consumed more than once inside one query
-    * (r21, guide §1.2 "don't compute things twice"): localCheckpoint when
-    * the SOURCE table is provably small (the same 512 MB bound the dedup
-    * fronts use — see [[graft.operators.Dedup.shingleToksPlan]]'s
-    * dispatch rationale), recompute at scale so nothing corpus-sized is
-    * ever pinned in the block manager. Bench/Verify release all
-    * persistent RDDs after each query. */
-  private[contract] def ckptIfSmall(base: DataFrame)(df: DataFrame): DataFrame =
-    if (base.queryExecution.optimizedPlan.stats.sizeInBytes <
-      BigInt(512L << 20)) df.localCheckpoint()
-    else df
-
   /** MinHash lane-minima CTEs (toks → shingles → 16 md5 lanes) — shared by
     * the LSH pair chain below and q96's streaming-dedup signature mirror. */
   private[contract] def minhashLaneCtesFor(extraWhere: String): String =

@@ -108,8 +108,9 @@ object PdfHeaderOps {
     * is the first one at/after `from`. Literal strings `( … )` (with
     * backslash escapes), hex strings `< … >` and `%` comments are
     * skipped so their brackets never unbalance the scan. -1 end on any
-    * truncation. */
-  /** `searchLimit` bounds how far past `from` the OPENING `<<` may sit
+    * truncation.
+    *
+    * `searchLimit` bounds how far past `from` the OPENING `<<` may sit
     * (the balanced scan past it stays bounded at [[MaxScan]]). Callers
     * that will reject far-away dicts anyway (the ObjStm pre-filter's
     * 1024-byte window) pass the window so a crafted file of repeated

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
+/** Mergeable raw-moments buffer. */
+case class MomentsBuf(n: Long, s1: Double, s2: Double, s3: Double)
+
 /** Typed third-moment skewness `Aggregator` — the custom-UDAF surface row of
   * SURVEY §2.9 (the reference has a commented-out `.skew` at
   * `HTGPIPROPHEDEX/__init__.py:895`; Spark ships `skewness` built-in, this
@@ -24,9 +27,6 @@ import org.apache.spark.sql.functions.udaf
   * breaks bit parity. Keep inputs mean-centered-ish (cents, ratios,
   * deltas) or subtract a constant anchor before aggregating.
   */
-/** Mergeable raw-moments buffer. */
-case class MomentsBuf(n: Long, s1: Double, s2: Double, s3: Double)
-
 object SkewnessAgg extends Aggregator[Double, MomentsBuf, Double] {
   type Buf = MomentsBuf
   val Buf = MomentsBuf

@@ -98,16 +98,6 @@ object TextFunctions {
     * per-document heuristics used to filter LLM training corpora. */
   def punctCount(text: Column): Column = matchCount(text, "[.,!?;:]")
 
-  /** HTML → visible text (the web-corpus extraction step): drops
-    * script/style bodies, comments, and tags; decodes the six core
-    * entities (`&amp;` LAST, so double-encoded text decodes exactly one
-    * level); collapses whitespace. Composed entirely from codegen'd
-    * builtins (regexp_replace / replace) whose patterns avoid
-    * backreferences and rely only on `(?is)`, lazy `.*?`, and character
-    * classes — the RE2-compatible subset, so a SQL oracle can run the
-    * byte-identical chain. Map-only; linear in input at any corpus size.
-    * Known limit (shared by the oracle): a literal `>` inside a quoted
-    * attribute value terminates the tag match early. */
   /** Canonical URL for crawl dedup: lowercase scheme+host, default port
     * stripped (:80 http / :443 https), fragment dropped, duplicate path
     * slashes collapsed, trailing slash stripped (root stays `/`, empty
@@ -137,6 +127,16 @@ object TextFunctions {
       when(keep === "", lit("")).otherwise(concat(lit("?"), keep)))
   }
 
+  /** HTML → visible text (the web-corpus extraction step): drops
+    * script/style bodies, comments, and tags; decodes the six core
+    * entities (`&amp;` LAST, so double-encoded text decodes exactly one
+    * level); collapses whitespace. Composed entirely from codegen'd
+    * builtins (regexp_replace / replace) whose patterns avoid
+    * backreferences and rely only on `(?is)`, lazy `.*?`, and character
+    * classes — the RE2-compatible subset, so a SQL oracle can run the
+    * byte-identical chain. Map-only; linear in input at any corpus size.
+    * Known limit (shared by the oracle): a literal `>` inside a quoted
+    * attribute value terminates the tag match early. */
   def htmlToText(html: Column): Column = {
     val noScript = regexp_replace(html, "(?is)<script[^>]*>.*?</script>", " ")
     val noStyle = regexp_replace(noScript, "(?is)<style[^>]*>.*?</style>", " ")

@@ -491,9 +491,6 @@ object Corpus {
         (fleschMicro(col("n_words"), col("n_sentences"), col("n_syllables"))
           .cast("double") / lit(1e6)).as("flesch_r"))
 
-  /** The [[readability]] building blocks as standalone columns — shared
-    * with composite per-source gates so the two stay definitionally
-    * identical. */
   /** Rolling-hash powers 31^0..31^(w-1) for [[cdcChunkStats]] — public so
     * the oracle SQL embeds the identical long constants. */
   def cdcPows(window: Int): Seq[Long] =
@@ -545,6 +542,9 @@ object Corpus {
           .as("shared_len"))
   }
 
+  /** The [[readability]] building blocks as standalone columns — shared
+    * with composite per-source gates so the two stay definitionally
+    * identical. */
   def wordsCount(text: Column): Column =
     size(split(trim(lower(text)), "\\s+")).cast("long")
   def sentencesCount(text: Column): Column =

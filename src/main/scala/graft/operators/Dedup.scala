@@ -187,42 +187,40 @@ object Dedup {
 
   /** Shared LSH tail: prune oversized/singleton buckets, then self-join
     * within buckets for distinct ordered pairs. */
-  private def candidatesFromBanded(banded: DataFrame, maxBucket: Int): DataFrame = {
-    // bands-per-doc rows, consumed by the bucket-count aggregate and both
-    // self-join branches. Whether to materialize them is SIZE-DISPATCHED
-    // under the same 512 MB input bound as prefixJaccardPairs /
-    // sharedPassagePairs (r11 at-scale rule): under the bound, checkpoint
-    // ONCE so three consumers share one signature pass; above it, a
-    // banded table is O(docs × bands) rows and pinning it in executor
-    // storage is worse than re-deriving it per consumer — recompute is
-    // the 100 TB shape.
-    val inputSmall = banded.queryExecution.optimizedPlan.stats.sizeInBytes <
-      BigInt(512L << 20)
-    val b0 = if (inputSmall) banded.localCheckpoint() else banded
-    // bucket band via aggregate + semi-join, NOT a count window over
-    // (band, bh): the partial aggregate collapses a corpus-hot bucket
-    // map-side and the join stays splittable, where a window partition
-    // cannot be split — counting a hot bucket through a window is itself
-    // the straggler the maxBucket cap exists to prevent (r11 shape rule,
-    // as in prefixJaccardPairs / sharedPassagePairs).
-    candidatesFromBandedTail(b0, maxBucket, inputSmall)
-  }
+  private def candidatesFromBanded(banded: DataFrame, maxBucket: Int): DataFrame =
+    bandedPairs(banded, _ => maxBucket)
 
-  /** Shared join tail: cap-filter the buckets of an (optionally
-    * checkpointed) banded table, then self-join within kept buckets. */
-  private def candidatesFromBandedTail(b0: DataFrame, maxBucket: Int,
-      inputSmall: Boolean): DataFrame = {
-    val keep = b0.groupBy(col("band"), col("bh"))
+  /** The one pinned-banded step of the LSH tails: cap the buckets of
+    * `banded` at `cap(sizes)` — `sizes` is the (band, bh, bucket_n)
+    * bucket-count aggregate — then self-join within the kept buckets.
+    *
+    * The bands-per-doc rows feed the bucket-count aggregate and both
+    * self-join branches, and the kept rows feed both branches again, so
+    * each is pinned under [[Spread.pinIfSmall]] (r11 at-scale rule):
+    * under the bound ONE signature pass serves every consumer; above it a
+    * banded table is O(docs × bands) rows and pinning it in executor
+    * storage is worse than re-deriving it per consumer — recompute is the
+    * 100 TB shape. A `cap` that collects (the volume-capped chain's
+    * rollup) re-derives the banded pass once above the bound, the price
+    * of the volume guard.
+    *
+    * Buckets are counted via aggregate + semi-join, NOT a count window
+    * over (band, bh): the partial aggregate collapses a corpus-hot bucket
+    * map-side and the join stays splittable, where a window partition
+    * cannot be split — counting a hot bucket through a window is itself
+    * the straggler the cap exists to prevent (r11 shape rule, as in
+    * prefixJaccardPairs / sharedPassagePairs). */
+  private def bandedPairs(banded: DataFrame, cap: DataFrame => Int): DataFrame = {
+    val pin = Spread.pinIfSmall(banded) _
+    val b0 = pin(banded)
+    val sizes = b0.groupBy(col("band"), col("bh"))
       .agg(count(lit(1)).as("bucket_n"))
+    val maxBucket = cap(sizes)
+    val keep = sizes
       .filter(col("bucket_n") <= maxBucket && col("bucket_n") > 1)
       .select(col("band"), col("bh"))
-    val prunedPlan = b0.join(keep, Seq("band", "bh"))
-      .select(col("doc_id"), col("band"), col("bh"))
-    // consumed by BOTH self-join branches — under the bound, materialize
-    // once so the band aggregate + semi-join above don't run twice (≤ cap
-    // rows per bucket, but total rows still scale with the corpus, so the
-    // same dispatch applies)
-    val pruned = if (inputSmall) prunedPlan.localCheckpoint() else prunedPlan
+    val pruned = pin(b0.join(keep, Seq("band", "bh"))
+      .select(col("doc_id"), col("band"), col("bh")))
     val a = pruned.as("a"); val b = pruned.as("b")
     a.join(b, col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
         col("a.doc_id") < col("b.doc_id"))
@@ -307,21 +305,13 @@ object Dedup {
   private[graft] def minhashCandidatesVolCapped(docs: DataFrame,
       idCol: String, textCol: String, shingleN: Int, numHashes: Int,
       bands: Int, familyCap: Int, label: String): DataFrame = {
-    val banded = bandedMinhash(docs, idCol, textCol, shingleN, numHashes,
-      bands, XxLanes)
-    // same size dispatch as candidatesFromBanded; above the bound the
-    // rollup collect re-derives the banded pass once — the price of the
-    // volume guard, same class as the operators' candidate forecasts
-    val inputSmall = banded.queryExecution.optimizedPlan.stats.sizeInBytes <
-      BigInt(512L << 20)
-    val b0 = if (inputSmall) banded.localCheckpoint() else banded
-    val sizes = b0.groupBy(col("band"), col("bh"))
-      .agg(count(lit(1)).as("bucket_n"))
-    val rollup = countRollup(sizes, "bucket_n")
-    val nDocs = rollup.map { case (m, nb) => m * nb }.sum / math.max(bands, 1)
-    val eff = volCappedBucketCap(rollup, bands, familyCap, label,
-      budgetOverride = routeCandidateBudget(docs.sparkSession, nDocs))
-    candidatesFromBandedTail(b0, eff, inputSmall)
+    bandedPairs(bandedMinhash(docs, idCol, textCol, shingleN, numHashes,
+      bands, XxLanes), sizes => {
+      val rollup = countRollup(sizes, "bucket_n")
+      val nDocs = rollup.map { case (m, nb) => m * nb }.sum / math.max(bands, 1)
+      volCappedBucketCap(rollup, bands, familyCap, label,
+        budgetOverride = routeCandidateBudget(docs.sparkSession, nDocs))
+    })
   }
 
   /** The pure cap derivation behind [[minhashCandidatesVolCapped]]:
@@ -560,85 +550,8 @@ object Dedup {
           (col("s1.n") + col("s2.n") - col("n_inter")).cast("double")).as("jaccard"))
   }
 
-  /** Prefix-filtered shingle-set similarity join (PPJoin-style). The naive
-    * shingle equi-join explodes on frequent shingles; here each document
-    * joins only on its `p = n - ceil(t·n) + 1` globally-RAREST shingles
-    * (ascending document frequency, shingle as tiebreaker). Any two sets
-    * with Jaccard ≥ t must share at least one prefix element (if the
-    * prefixes were disjoint, the overlap is at most n - p < t·n ≤ the
-    * overlap bound), so the prefix filter ALONE loses nothing —
-    * candidates just shrink from hot-shingle quadratic to rare-shingle
-    * buckets. Combined with `maxDocsPerTok` below, overall recall is
-    * exact-up-to-the-cap, NOT unconditionally exact: a qualifying pair
-    * whose every shared prefix shingle sits in more than `maxDocsPerTok`
-    * documents' prefixes is missed — concretely, every pair inside a
-    * near-dup cluster LARGER than the cap (see the cap paragraph;
-    * DedupSimilaritySpec "prefix cap recall bound" demonstrates it). The set element is a
-    * char `shingleK`-gram (sequence-sensitive; distinct WORD sets are
-    * degenerate on template-heavy corpora — measured 71k/125k pairs at
-    * t=3/5 vs exactly the 25 true near-dup pairs with 8-grams). Threshold
-    * t = `numT/denT`; ceil and the final filter are pure integer
-    * arithmetic (`(3n+4) div 5`, `5·inter ≥ 3·union`) so both engines
-    * threshold identically — the double `jacc` column is display-only.
-    *
-    * `maxDocsPerTok` is the same skew-cap contract as the LSH chain's
-    * `maxBucket`: prefix shingles present in more than that many documents
-    * are dropped from the candidate join (a template corpus can make even
-    * the per-doc-RAREST shingles corpus-hot — measured Σc² = 90M join rows
-    * uncapped vs 0.9M at cap 20 on sf0.1, a 318 s → seconds difference).
-    * The recall bound: a pair is found iff it shares ≥1 prefix shingle
-    * that is in ≤ cap documents' prefixes. A shingle can only be
-    * prefix-hot if the documents carrying it in their prefixes are
-    * (near-)mutual near-dups — the prefix keeps a doc's RAREST 2/5, so a
-    * doc with enough unique content pushes shared shingles out of its
-    * prefix — which means the pairs lost to the cap are exactly the pairs
-    * inside near-dup clusters larger than the cap (measured: all 255 true
-    * pairs kept at cap 20 on sf0.1, where the largest cluster is 2). On a
-    * corpus with bigger clusters, raise the cap above the cluster size
-    * (cost grows as Σ nd² over capped shingles) or recover them from the
-    * exact-dup/MinHash chain — do NOT assume unconditional exactness.
-    * Don't shrink the cap below the expected
-    * near-dup CLUSTER size: members of an m-way cluster share rare
-    * shingles with document frequency m (measured at sf0.1: cap 5 kept
-    * 49/255 true pairs, cap 20 kept all). The cap is mirrored in the
-    * oracle.
-    *
-    * Scale shape: shingles shuffle by value (df count + candidate join)
-    * and by doc_id (one partitioned window for rank+size). Exact
-    * verification never re-explodes shingles: each candidate pair
-    * merge-scans the two documents' sorted distinct shingle-HASH arrays
-    * (native `sorted_intersect_count` — no boxed hash set per row), so
-    * verify cost is candidates × set size and only candidate members'
-    * compact hash arrays ever move. Hash collisions within one document
-    * (~n²/2⁶⁵) are the only way this can diverge from string-set
-    * Jaccard — negligible and deterministic. */
-  /** Shared front half of [[prefixJaccardPairs]] / [[prefixHotness]]:
-    * per-doc rarest-p prefix shingles as (doc_id, n, tok) rows, plus the
-    * size-dispatch verdict the caller's later stages reuse.
-    *
-    * charShingles is distinct per doc, so (doc_id, tok) rows are already
-    * unique — no row-level distinct/shuffle needed. Two consumers follow
-    * (the dfreq aggregate and the join below); whether to materialize the
-    * corpus-sized (doc_id, shingle) table between them is SIZE-DISPATCHED,
-    * measured at sf0.1 shape (5k docs / 1.35M shingle rows, local[32]):
-    *   - recompute both branches (old shape):        8.0 s warm
-    *   - localCheckpoint toks, branches read it:     3.4 s warm
-    *   - dfreq as a count-window over tok (no join): 1.8 s warm, REJECTED —
-    *     a window partition cannot be split, so one corpus-hot shingle
-    *     (a stopword 8-gram in ~every doc) becomes an unbounded straggler
-    *     at 100 TB, whereas the aggregate/join pair stays splittable
-    *     (partial agg collapses the hot key; AQE splits the join side).
-    * So: under a proven input-size bound the explode is checkpointed once
-    * (the 2.4× local win); above it, recompute — one extra column-pruned
-    * scan + native shingling pass beats pinning a corpus-sized
-    * intermediate in executor storage.
-    * Lifecycle: the returned DataFrame reads these checkpoint blocks
-    * lazily, so they cannot be unpersisted here; Verify/Bench release all
-    * persistent RDDs after each query's result is consumed, and other
-    * callers rely on ContextCleaner GC (the blocks are bounded by the
-    * size dispatch above). */
-  /** (doc_id, n, tok) exploded shingle rows — the shared front of the
-    * prefix-filtered joins ([[prefixToks]] / [[containmentPairs]]).
+  /** (doc_id, n, tok) exploded shingle rows — the plan inside
+    * [[shingleFront]], the prefix-filtered joins' shared front.
     *
     * PLAN SHAPE IS LOAD-BEARING (r16, the q245 regression; locked in
     * ScaleSpec): the generator input must be the shingling EXPRESSION,
@@ -664,39 +577,95 @@ object Dedup {
       .select(col("doc_id"), col("n"), explode(shingleExpr).as("tok"))
   }
 
-  private def prefixToks(docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int, numT: Int, denT: Int): (DataFrame, Boolean) = {
-    // fan a narrower-than-cores scan out first (single-row-group test file;
-    // a real corpus has plenty of scan partitions and skips this shuffle)
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val spread =
-      if (docs.rdd.getNumPartitions < par) docs.repartition(par) else docs
+  /** The shingle joins' token tables, see [[shingleFront]]. */
+  private[graft] final case class Front(base: DataFrame, toks: DataFrame,
+      toksPlan: DataFrame, dfreq: DataFrame, inputSmall: Boolean)
+
+  /** Shared token-table front of the prefix and containment joins
+    * ([[prefixJaccardPairs]], [[prefixHotness]] and the containment
+    * joins): spread + non-empty filter, the exploded (doc_id, n, tok)
+    * shingle plan, the probe-side checkpoint dispatch, and the
+    * full-corpus dfreq, plus the [[Spread.small]] verdict the callers'
+    * later stages reuse.
+    *
+    * `n` = the doc's distinct-shingle count, computed at explode time and
+    * carried on every tok row (one int): it is both the PPJoin length
+    * filter's `n` AND the bound the prefix/rarest-k aggregates need to
+    * know their k from the first row they see; Catalyst prunes it from
+    * the dfreq and index consumers. The verify stages threshold on
+    * hash-ARRAY sizes (size(tokset)), so under a within-doc 64-bit
+    * collision n_str exceeds n_hash by the collision count and the two
+    * stages could disagree on a pair whose ratio sits within
+    * ~collisions/n of the threshold — a ~n²/2⁶⁵ event, deterministic, so
+    * a PropertySpec flake means exactly this. charShingles is distinct
+    * per doc, so (doc_id, tok) rows are already unique — no row-level
+    * distinct/shuffle needed.
+    *
+    * The PROBE side (`toks`: dfreq + prefix/rarest-k aggregates) has two
+    * consumers (the dfreq aggregate and the join against it); whether to
+    * materialize this corpus-sized table between them is dispatched
+    * under EITHER of two gates (r16, restoring the r14 band the r15
+    * narrowing lost — q245 regressed 3.4–4.2 → 6.7 s when sf0.1-shaped
+    * inputs fell between the 40 MB danger zone and the 512 MB perf
+    * bound):
+    *   - [[Spread.small]], for REUSE — measured at sf0.1 shape (5k docs /
+    *     1.35M shingle rows, local[32]): recompute both branches 8.0 s
+    *     warm, localCheckpoint toks 3.4 s; a dfreq count-window over tok
+    *     (1.8 s) was REJECTED — a window partition cannot be split, so
+    *     one corpus-hot shingle (a stopword 8-gram in ~every doc) becomes
+    *     an unbounded straggler at 100 TB, whereas the aggregate/join
+    *     pair stays splittable (partial agg collapses the hot key; AQE
+    *     splits the join side);
+    *   - [[inBroadcastDangerZone]], for HONEST STATS (r15): Catalyst's
+    *     static size estimate is content-blind through Generate (no
+    *     fan-out model), so a small parquet input estimated the 21M-row
+    *     exploded table under the broadcast threshold and the initial
+    *     plan BROADCAST the fan-out side of the dfreq join (measured 3×
+    *     the whole prefix stage on the 10× rehearsal; at worst a driver
+    *     OOM). A checkpointed RDD scan carries its REAL byte size, the
+    *     static plan stays a shuffle join, and AQE still upgrades the
+    *     dictionary side to broadcast from actual runtime sizes.
+    * Above both, recompute — one extra column-pruned scan + native
+    * shingling pass beats pinning a corpus-sized intermediate in
+    * executor storage.
+    *
+    * The INDEX side (`toksPlan`) keeps the recomputed plan: its join
+    * prunes the recomputed scan and pipelines (the r11 containment
+    * measurement that rejected a full checkpoint here), and it never
+    * joins against a misestimated side.
+    *
+    * Lifecycle: the returned tables read the checkpoint blocks lazily,
+    * so they cannot be unpersisted here; Verify/Bench release all
+    * persistent RDDs after each query's result is consumed, and other
+    * callers rely on ContextCleaner GC (the blocks are bounded by the
+    * dispatch above). */
+  private[graft] def shingleFront(docs: DataFrame, idCol: String,
+      textCol: String, shingleK: Int): Front = {
+    // fan a narrower-than-cores scan out first (single-row-group test
+    // file; a real corpus has plenty of scan partitions and skips this
+    // shuffle)
+    val spread = Spread.fanOutScan(docs, col(idCol))
     val base = spread.filter(length(trim(col(textCol))) > 0)
-    // n = the doc's distinct-shingle count, computed at explode time and
-    // carried on every tok row (one int): it is both the PPJoin length
-    // filter's `n` AND the bound the prefix aggregate below needs to know
-    // its k from the first row it sees. The verify stage thresholds on
-    // hash-ARRAY sizes (size(tokset)), so under a within-doc 64-bit
-    // collision n_str exceeds n_hash by the collision count and the two
-    // stages could disagree on a pair whose ratio sits within
-    // ~collisions/n of the threshold — a ~n²/2⁶⁵ event, deterministic,
-    // so a PropertySpec flake means exactly this.
     val toksPlan = shingleToksPlan(base, idCol, textCol, shingleK)
-    val inputSmall = spread.queryExecution.optimizedPlan.stats.sizeInBytes <
-      BigInt(512L << 20)
-    // checkpoint under EITHER gate (r16, restoring the r14 band the r15
-    // narrowing lost — q245 regressed 3.4–4.2 → 6.7 s when sf0.1-shaped
-    // inputs fell between the 40 MB danger zone and the 512 MB perf
-    // bound): inputSmall is the measured 2.4× branch-reuse win on small
-    // corpora, inBroadcastDangerZone is the honest-stats fix for the
-    // Generate misestimate that could broadcast the fan-out side. Above
-    // both, recompute — the at-scale shape, nothing pinned in the block
-    // manager.
+    val inputSmall = Spread.small(spread)
     val toks =
       if (inputSmall || inBroadcastDangerZone(toksPlan))
         toksPlan.localCheckpoint()
       else toksPlan
+    // dfreq is consumed twice (probe/prefix join + index-side filter),
+    // but pinning it was MEASURED SLOWER (r21 A/B, 3× interleaved fresh
+    // JVMs: q154 5.57→6.13 s, q259 4.25→4.62 s min): the extra
+    // synchronous checkpoint job serializes what AQE otherwise overlaps
+    // with the downstream joins, and the re-aggregation over the pinned
+    // toks table is cheap. Keep the recompute.
     val dfreq = toks.groupBy(col("tok")).agg(count(lit(1)).as("dfreq"))
+    Front(base, toks, toksPlan, dfreq, inputSmall)
+  }
+
+  /** Per-doc rarest-p prefix shingles of a [[shingleFront]] as
+    * (doc_id, n, tok) rows: the front half of [[prefixJaccardPairs]] and
+    * [[prefixHotness]]. */
+  private def prefixToks(f: Front, numT: Int, denT: Int): DataFrame =
     // per-doc rarest-p prefix WITHOUT a global sort-window: hash-aggregate
     // each doc's (dfreq, tok) pairs through the native bounded k-min
     // aggregate (prefix_min_k, r14 judge item 2 — struct compare = dfreq
@@ -714,16 +683,14 @@ object Dedup {
     // converts this join to a broadcast hash join exactly when the
     // dictionary is genuinely small, which is the repetitive-corpus case
     // where it helps.
-    val prefixPre = toks
-      .join(dfreq, "tok")
+    f.toks
+      .join(f.dfreq, "tok")
       .groupBy(col("doc_id"))
       .agg(graft.functions.PrefixMinK.column(numT, denT)(
         col("n"), col("dfreq"), col("tok")).as("pk"))
       .select(col("doc_id"), col("pk.n").as("n"),
         explode(col("pk.items")).as("x"))
       .select(col("doc_id"), col("n"), col("x.tok").as("tok"))
-    (prefixPre, inputSmall)
-  }
 
   /** Prefix-hotness diagnostic for choosing [[prefixJaccardPairs]]'s
     * `maxDocsPerTok` cap on an unfamiliar corpus: the distribution of
@@ -761,8 +728,8 @@ object Dedup {
   def prefixHotness(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 8, numT: Int = 3, denT: Int = 5,
       sample: Option[Column] = None): DataFrame =
-    prefixToks(sample.map(docs.filter).getOrElse(docs), idCol, textCol,
-      shingleK, numT, denT)._1
+    prefixToks(shingleFront(sample.map(docs.filter).getOrElse(docs), idCol,
+      textCol, shingleK), numT, denT)
       .groupBy(col("tok")).agg(count(lit(1)).as("nd"))
       .groupBy(col("nd")).agg(count(lit(1)).as("n_toks"))
       .orderBy(col("nd").desc)
@@ -884,7 +851,60 @@ object Dedup {
     (fit, cum)
   }
 
-  /** `maxCandidates` (autocap mode only, 0 = off) bounds the pair
+  /** Prefix-filtered shingle-set similarity join (PPJoin-style). The naive
+    * shingle equi-join explodes on frequent shingles; here each document
+    * joins only on its `p = n - ceil(t·n) + 1` globally-RAREST shingles
+    * (ascending document frequency, shingle as tiebreaker). Any two sets
+    * with Jaccard ≥ t must share at least one prefix element (if the
+    * prefixes were disjoint, the overlap is at most n - p < t·n ≤ the
+    * overlap bound), so the prefix filter ALONE loses nothing —
+    * candidates just shrink from hot-shingle quadratic to rare-shingle
+    * buckets. Combined with `maxDocsPerTok` below, overall recall is
+    * exact-up-to-the-cap, NOT unconditionally exact: a qualifying pair
+    * whose every shared prefix shingle sits in more than `maxDocsPerTok`
+    * documents' prefixes is missed — concretely, every pair inside a
+    * near-dup cluster LARGER than the cap (see the cap paragraph;
+    * DedupSimilaritySpec "prefix cap recall bound" demonstrates it). The set element is a
+    * char `shingleK`-gram (sequence-sensitive; distinct WORD sets are
+    * degenerate on template-heavy corpora — measured 71k/125k pairs at
+    * t=3/5 vs exactly the 25 true near-dup pairs with 8-grams). Threshold
+    * t = `numT/denT`; ceil and the final filter are pure integer
+    * arithmetic (`(3n+4) div 5`, `5·inter ≥ 3·union`) so both engines
+    * threshold identically — the double `jacc` column is display-only.
+    *
+    * `maxDocsPerTok` is the same skew-cap contract as the LSH chain's
+    * `maxBucket`: prefix shingles present in more than that many documents
+    * are dropped from the candidate join (a template corpus can make even
+    * the per-doc-RAREST shingles corpus-hot — measured Σc² = 90M join rows
+    * uncapped vs 0.9M at cap 20 on sf0.1, a 318 s → seconds difference).
+    * The recall bound: a pair is found iff it shares ≥1 prefix shingle
+    * that is in ≤ cap documents' prefixes. A shingle can only be
+    * prefix-hot if the documents carrying it in their prefixes are
+    * (near-)mutual near-dups — the prefix keeps a doc's RAREST 2/5, so a
+    * doc with enough unique content pushes shared shingles out of its
+    * prefix — which means the pairs lost to the cap are exactly the pairs
+    * inside near-dup clusters larger than the cap (measured: all 255 true
+    * pairs kept at cap 20 on sf0.1, where the largest cluster is 2). On a
+    * corpus with bigger clusters, raise the cap above the cluster size
+    * (cost grows as Σ nd² over capped shingles) or recover them from the
+    * exact-dup/MinHash chain — do NOT assume unconditional exactness.
+    * Don't shrink the cap below the expected
+    * near-dup CLUSTER size: members of an m-way cluster share rare
+    * shingles with document frequency m (measured at sf0.1: cap 5 kept
+    * 49/255 true pairs, cap 20 kept all). The cap is mirrored in the
+    * oracle.
+    *
+    * Scale shape: shingles shuffle by value (df count + candidate join)
+    * and by doc_id (the bounded PrefixMinK prefix aggregate). Exact
+    * verification never re-explodes shingles: each candidate pair
+    * merge-scans the two documents' sorted distinct shingle-HASH arrays
+    * (native `sorted_intersect_count` — no boxed hash set per row), so
+    * verify cost is candidates × set size and only candidate members'
+    * compact hash arrays ever move. Hash collisions within one document
+    * (~n²/2⁶⁵) are the only way this can diverge from string-set
+    * Jaccard — negligible and deterministic.
+    *
+    * `maxCandidates` (autocap mode only, 0 = off) bounds the pair
     * stage by BUDGET instead of by recall: the cap becomes the largest
     * nd whose cumulative forecast Σ n_toks · C(nd, 2) stays within the
     * budget (and never exceeds the share-derived cap). This is the
@@ -936,8 +956,8 @@ object Dedup {
       "autoRoute and maxCandidates are mutually exclusive: the routed " +
         "chain is bucket-bounded, not budget-bounded, and a stated hard " +
         "envelope must never be silently ignored — pick one policy")
-    val (prefixPre0, inputSmall) =
-      prefixToks(docs, idCol, textCol, shingleK, numT, denT)
+    val f = shingleFront(docs, idCol, textCol, shingleK)
+    val prefixPre0 = prefixToks(f, numT, denT)
     // autoCap mode consumes prefixPre from THREE actions (doc count, nd
     // rollup, and the main keep-join pass that line-727-checkpoints the
     // kept prefix anyway) — pin it REGARDLESS of input size (r17 ADVICE:
@@ -953,7 +973,7 @@ object Dedup {
     // ≥300k scales the route targets, an abandoned prefix pin is the
     // stolen-executor-memory class q126 measured).
     val prefixPre =
-      if (maxDocsPerTok <= 0 || inputSmall) prefixPre0.localCheckpoint()
+      if (maxDocsPerTok <= 0 || f.inputSmall) prefixPre0.localCheckpoint()
       else prefixPre0
     // cap-hot prefix tokens via aggregate + semi-join, NOT a count
     // window: the partial aggregate collapses a corpus-hot prefix token
@@ -1047,7 +1067,7 @@ object Dedup {
           .distinct()
     }
     jaccardVerify(docs, idCol, textCol, shingleK, numT, denT, cand,
-      inputSmall)
+      f.inputSmall)
   }
 
   /** Exact-Jaccard verify stage shared by [[prefixJaccardPairs]]' prefix
@@ -1058,31 +1078,8 @@ object Dedup {
   private def jaccardVerify(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int, numT: Int, denT: Int, cand: DataFrame,
       inputSmall: Boolean): DataFrame = {
-    // The verify stage is CPU-dense per BYTE (a merge scan of two ~n-
-    // element hash arrays per pair), so AQE's bytes-based coalescing
-    // under-parallelizes it when the candidate table is small on disk —
-    // respread to the core count under the same input bound. At scale
-    // the candidate exchange is large and AQE sizes it correctly.
-    val candSpread = if (inputSmall)
-      cand.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    else cand
-    // compact per-doc shingle-hash sets — one row per doc, no re-explode.
-    // Spread a narrower-than-cores scan first (r22, same dispatch as
-    // prefixToks' fan-out): the hash-array pass is the query's single
-    // most CPU-dense per-doc computation, and when maybeBroadcastArrs
-    // broadcasts, the build executes this subtree AT THE SCAN'S OWN
-    // parallelism — on a single-row-group corpus file that was ONE task
-    // (measured: q121's per-job timeline shows a 3.3 s serial broadcast
-    // build as the query's long pole, every other job done 2.5 s
-    // earlier). A real corpus has plenty of scan partitions and skips
-    // this shuffle.
-    val arrs = Spread.fanOutScan(docs, col(idCol))
-      .filter(length(trim(col(textCol))) > 0)
-      .select(col(idCol).as("doc_id"),
-        TextFunctions.charShingleHashes(
-          TextFunctions.normalize(col(textCol)), shingleK).as("tokset"))
-      .withColumn("n", size(col("tokset")))
-    val arrsV = maybeBroadcastArrs(docs, textCol, arrs)
+    val (candSpread, arrsV) =
+      verifyArrs(docs, idCol, textCol, shingleK, cand, inputSmall)
     candSpread
       .join(arrsV.as("sa"), col("sa.doc_id") === col("d1"))
       .join(arrsV.as("sb"), col("sb.doc_id") === col("d2"))
@@ -1097,7 +1094,39 @@ object Dedup {
           (col("sa.n") + col("sb.n") - col("n_inter")).cast("double")).as("jacc"))
   }
 
-
+  /** The exact verifies' shared inputs ([[jaccardVerify]],
+    * [[containmentVerify]]): the candidates, respread to the core count
+    * when `inputSmall`, and the per-doc sorted shingle-hash arrays
+    * (doc_id, tokset, n), broadcast when [[maybeBroadcastArrs]] admits
+    * them. Each verify keeps its own joins and threshold. */
+  private def verifyArrs(docs: DataFrame, idCol: String, textCol: String,
+      shingleK: Int, cand: DataFrame,
+      inputSmall: Boolean): (DataFrame, DataFrame) = {
+    // The verify stage is CPU-dense per BYTE (a merge scan of two ~n-
+    // element hash arrays per pair), so AQE's bytes-based coalescing
+    // under-parallelizes it when the candidate table is small on disk —
+    // respread to the core count under the same input bound. At scale
+    // the candidate exchange is large and AQE sizes it correctly.
+    val candSpread = if (inputSmall)
+      cand.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+    else cand
+    // compact per-doc shingle-hash sets — one row per doc, no re-explode.
+    // Spread a narrower-than-cores scan first (r22, the shingle front's
+    // fan-out): the hash-array pass is the query's single most CPU-dense
+    // per-doc computation, and when maybeBroadcastArrs broadcasts, the
+    // build executes this subtree AT THE SCAN'S OWN parallelism — on a
+    // single-row-group corpus file that was ONE task (measured: q121's
+    // per-job timeline shows a 3.3 s serial broadcast build as the
+    // query's long pole, every other job done 2.5 s earlier). A real
+    // corpus has plenty of scan partitions and skips this shuffle.
+    val arrs = Spread.fanOutScan(docs, col(idCol))
+      .filter(length(trim(col(textCol))) > 0)
+      .select(col(idCol).as("doc_id"),
+        TextFunctions.charShingleHashes(
+          TextFunctions.normalize(col(textCol)), shingleK).as("tokset"))
+      .withColumn("n", size(col("tokset")))
+    (candSpread, maybeBroadcastArrs(docs, textCol, arrs))
+  }
 
   /** Static-estimate danger zone for the exploded-toks joins (r15): the
     * honest-stats checkpoint is needed exactly when Catalyst's
@@ -1179,60 +1208,6 @@ object Dedup {
     if (small) broadcast(arrs) else arrs
   }
 
-  /** The containment joins' token tables, see [[containmentFront]]. */
-  private[graft] final case class Front(base: DataFrame, toks: DataFrame,
-      toksPlan: DataFrame, dfreq: DataFrame, inputSmall: Boolean)
-
-  /** Shared token-table front of the containment joins (r20, extracted
-    * when [[containmentPairsOneSided]] grew a second copy): spread +
-    * non-empty filter, the exploded shingle plan, the probe-side
-    * checkpoint dispatch, and the full-corpus dfreq.
-    *
-    * `n` is carried per tok row (one int) so the probe aggregates know
-    * their bound from the first row — same shape as prefixToks;
-    * Catalyst prunes it from the dfreq and index consumers.
-    *
-    * The PROBE side (`toks`: dfreq + prefix/rarest-k aggregates) is
-    * checkpointed when the input is small — NOT for reuse, for HONEST
-    * STATS (r15): Catalyst's static size estimate is content-blind
-    * through Generate (no fan-out model), so a small parquet input
-    * estimated the 21M-row exploded table under the broadcast threshold
-    * and the initial plan BROADCAST the fan-out side of the dfreq join
-    * (measured 3× the whole prefix stage on the 10× rehearsal; at worst
-    * a driver OOM). A checkpointed RDD scan carries its REAL byte size,
-    * the static plan stays a shuffle join, and AQE still upgrades the
-    * dictionary side to broadcast from actual runtime sizes — exactly
-    * the r11-documented behavior. Checkpoint under either the perf gate
-    * or the honest-stats gate — same dual dispatch (and the same r16
-    * rationale) as prefixToks.
-    *
-    * The INDEX side (`toksPlan`) keeps the recomputed plan: its join
-    * prunes the recomputed scan and pipelines (the r11 containment
-    * measurement that rejected a full checkpoint here), and it never
-    * joins against a misestimated side. */
-  private[graft] def containmentFront(docs: DataFrame, idCol: String,
-      textCol: String, shingleK: Int): Front = {
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val spread =
-      if (docs.rdd.getNumPartitions < par) docs.repartition(par) else docs
-    val base = spread.filter(length(trim(col(textCol))) > 0)
-    val toksPlan = shingleToksPlan(base, idCol, textCol, shingleK)
-    val inputSmall = spread.queryExecution.optimizedPlan.stats.sizeInBytes <
-      BigInt(512L << 20)
-    val toks =
-      if (inputSmall || inBroadcastDangerZone(toksPlan))
-        toksPlan.localCheckpoint()
-      else toksPlan
-    // dfreq is consumed twice (probe/prefix join + index-side filter),
-    // but pinning it was MEASURED SLOWER (r21 A/B, 3× interleaved fresh
-    // JVMs: q154 5.57→6.13 s, q259 4.25→4.62 s min): the extra
-    // synchronous checkpoint job serializes what AQE otherwise overlaps
-    // with the downstream joins, and the re-aggregation over the pinned
-    // toks table is cheap. Keep the recompute.
-    val dfreq = toks.groupBy(col("tok")).agg(count(lit(1)).as("dfreq"))
-    Front(base, toks, toksPlan, dfreq, inputSmall)
-  }
-
   /** Directed containment join — the ASYMMETRIC sibling of
     * [[prefixJaccardPairs]]: emit (sub, sup) where C(sub→sup) =
     * |S_sub ∩ S_sup| / |S_sub| ≥ numT/denT over char-`shingleK` shingle
@@ -1297,7 +1272,7 @@ object Dedup {
     require(!autoRoute || maxDocsPerTok <= 0,
       "autoRoute reads the autocap forecast — with an explicit " +
         s"maxDocsPerTok=$maxDocsPerTok the caller has already chosen")
-    val f = containmentFront(docs, idCol, textCol, shingleK)
+    val f = shingleFront(docs, idCol, textCol, shingleK)
     // maxDocsPerTok = 0: the autocap over FULL-corpus dfreq (the cap here
     // binds the index side's posting lists, which carry every doc, not
     // just prefixes); dfreq ≈ corpus size is boilerplate. The probe ×
@@ -1506,7 +1481,7 @@ object Dedup {
     * rarest-k candidates (volume-capped probe cap), through ONE shared
     * exact verify — ≤ 3× the single-generator candidate budget by
     * construction (banded ≤ 1×, one-sided ≤ 2× through its posture
-    * stretch). `f` is the caller's [[containmentFront]], pinned toks
+    * stretch). `f` is the caller's [[shingleFront]], pinned toks
     * included; `nDocsIn` ≤ 0 makes the one-sided leg count the docs. */
   private[graft] def containmentRoutedUnion(docs: DataFrame, idCol: String,
       textCol: String, shingleK: Int, numT: Int, denT: Int,
@@ -1544,7 +1519,7 @@ object Dedup {
     require(maxDocsPerTok > 0, "the portable twin is explicit-cap only " +
       "(the oracle mirrors the cap); use containmentPairs(autoRoute) " +
       "for the volume-budgeted production route")
-    val f = containmentFront(docs, idCol, textCol, shingleK)
+    val f = shingleFront(docs, idCol, textCol, shingleK)
     val sym = minhashCandidatesPortable(docs, idCol, textCol,
       shingleN = 3, numHashes = 16, bands = bands, maxBucket = maxBucket)
     val oneSided = oneSidedCandidates(docs, probeK, maxDocsPerTok, f,
@@ -1582,7 +1557,7 @@ object Dedup {
       probeK: Int = OneSidedProbeK, maxDocsPerTok: Int = 0): DataFrame = {
     require(numT > 0 && denT > numT, s"threshold must be in (0,1): $numT/$denT")
     require(probeK > 0, s"probeK must be > 0: $probeK")
-    val f = containmentFront(docs, idCol, textCol, shingleK)
+    val f = shingleFront(docs, idCol, textCol, shingleK)
     containmentVerify(docs, idCol, textCol, shingleK, numT, denT,
       oneSidedCandidates(docs, probeK, maxDocsPerTok, f, nDocsIn = -1L,
         "containmentOneSided"),
@@ -1598,24 +1573,8 @@ object Dedup {
   private def containmentVerify(docs: DataFrame, idCol: String,
       textCol: String, shingleK: Int, numT: Int, denT: Int,
       cand0: DataFrame, inputSmall: Boolean): DataFrame = {
-    // verify stage is CPU-dense per byte (merge scan per pair): respread
-    // to core count when the candidate table is small on disk, where
-    // AQE's bytes-based coalescing under-parallelizes it (same dispatch
-    // rationale as prefixJaccardPairs, r11)
-    val cand =
-      if (inputSmall)
-        cand0.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      else cand0
-    // spread a narrower-than-cores scan before the hash-array pass — the
-    // broadcast build otherwise runs it at the scan's own parallelism
-    // (one task on a single-row-group file; see jaccardVerify, r22)
-    val arrs = Spread.fanOutScan(docs, col(idCol))
-      .filter(length(trim(col(textCol))) > 0)
-      .select(col(idCol).as("doc_id"),
-        TextFunctions.charShingleHashes(
-          TextFunctions.normalize(col(textCol)), shingleK).as("tokset"))
-      .withColumn("n", size(col("tokset")))
-    val arrsV = maybeBroadcastArrs(docs, textCol, arrs)
+    val (cand, arrsV) =
+      verifyArrs(docs, idCol, textCol, shingleK, cand0, inputSmall)
     cand
       .join(arrsV.as("sa"), col("sa.doc_id") === col("sub"))
       .join(arrsV.as("sb"), col("sb.doc_id") === col("sup"))
@@ -1636,6 +1595,13 @@ object Dedup {
           .as("cont_r"))
   }
 
+  /** PRE-checkpoint variant builder of [[editDistanceJoin]] — the
+    * plan-lock surface (r21, same rationale as [[spanGramsPlan]]). */
+  private[graft] def deletionVariantsPlan(base: DataFrame): DataFrame =
+    base.select(col("id"),
+      explode(graft.functions.ShingleOps.deletionVariantsCol(col("s"))).as("v"))
+      .distinct()
+
   /** Edit-distance-1 self-join — CHARACTER-level record linkage (ID typos,
     * OCR noise), the scalable complement of a key-blocked levenshtein join
     * (q49 blocks on brand; this needs no blocking key). Emits unordered
@@ -1653,13 +1619,6 @@ object Dedup {
     * genuine candidates. Long strings should be pre-hashed to a bounded
     * key prefix upstream if `len` is unbounded (the scheme targets short
     * identifier-like strings). */
-  /** PRE-checkpoint variant builder of [[editDistanceJoin]] — the
-    * plan-lock surface (r21, same rationale as [[spanGramsPlan]]). */
-  private[graft] def deletionVariantsPlan(base: DataFrame): DataFrame =
-    base.select(col("id"),
-      explode(graft.functions.ShingleOps.deletionVariantsCol(col("s"))).as("v"))
-      .distinct()
-
   def editDistanceJoin(rows: DataFrame, idCol: String,
       strCol: String): DataFrame = {
     val base = rows.select(col(idCol).as("id"), col(strCol).as("s"))
@@ -1671,10 +1630,7 @@ object Dedup {
     // ×(len+1) explode + distinct once under the small-input gate (r21,
     // guide §1.2; same dispatch as the shingle fronts), recompute at scale
     val variantsPlan = deletionVariantsPlan(base)
-    val variants =
-      if (rows.queryExecution.optimizedPlan.stats.sizeInBytes <
-        BigInt(512L << 20)) variantsPlan.localCheckpoint()
-      else variantsPlan
+    val variants = Spread.pinIfSmall(rows)(variantsPlan)
     val cand = variants.as("a")
       .join(variants.as("b"),
         col("a.v") === col("b.v") && col("a.id") < col("b.id"))
@@ -1754,6 +1710,17 @@ object Dedup {
           .as("n_dropped"))
   }
 
+  /** PRE-checkpoint gram builder of [[duplicatedSpanRemoval]] — the
+    * plan-lock surface (r21): after the gated pin the word_grams kernel
+    * no longer shows in the operator's FINAL plan, so ScaleSpec asserts
+    * codegen/shape here, on the plan that actually computes the pass
+    * (the r16 rule: assert on the builder, not past a checkpoint). */
+  private[graft] def spanGramsPlan(base: DataFrame, gramN: Int): DataFrame =
+    base.filter(size(col("toks")) >= gramN)
+      .select(col("doc_id"), posexplode(
+        graft.functions.TextFunctions.wordShinglesRaw(col("toks"), gramN)))
+      .toDF("doc_id", "s", "g")
+
   /** Exact duplicated-SPAN removal — the REWRITE arm of the substring-dedup
     * family (the "ExactSubstr" cleanup of Lee et al. 2022, word-aligned):
     * any `gramN`-word n-gram appearing in ≥ `minDocs` distinct documents
@@ -1782,17 +1749,6 @@ object Dedup {
     * document — no shuffle beyond the dictionary join and one groupBy
     * per side. A document never moves whole through the gram exchange;
     * only (gram, doc, pos) rows do. */
-  /** PRE-checkpoint gram builder of [[duplicatedSpanRemoval]] — the
-    * plan-lock surface (r21): after the gated pin the word_grams kernel
-    * no longer shows in the operator's FINAL plan, so ScaleSpec asserts
-    * codegen/shape here, on the plan that actually computes the pass
-    * (the r16 rule: assert on the builder, not past a checkpoint). */
-  private[graft] def spanGramsPlan(base: DataFrame, gramN: Int): DataFrame =
-    base.filter(size(col("toks")) >= gramN)
-      .select(col("doc_id"), posexplode(
-        graft.functions.TextFunctions.wordShinglesRaw(col("toks"), gramN)))
-      .toDF("doc_id", "s", "g")
-
   def duplicatedSpanRemoval(docs: DataFrame, idCol: String, textCol: String,
       gramN: Int = 5, minDocs: Int = 2): DataFrame = {
     require(gramN >= 2, s"gramN must be >= 2: $gramN")
@@ -1814,10 +1770,7 @@ object Dedup {
     // manager (measured min-of-3: 1.11 → 0.96 s for the q196 body at
     // sf0.1; the recompute branch is unchanged).
     val gramsPlan = spanGramsPlan(base, gramN)
-    val grams =
-      if (docs.queryExecution.optimizedPlan.stats.sizeInBytes <
-        BigInt(512L << 20)) gramsPlan.localCheckpoint()
-      else gramsPlan
+    val grams = Spread.pinIfSmall(docs)(gramsPlan)
     val hot = grams.groupBy(col("g"))
       .agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= minDocs)
@@ -1914,10 +1867,7 @@ object Dedup {
     // first (a single-row-group test file otherwise pins both aggregate
     // branches to one task; a real corpus has plenty of scan partitions
     // and skips this shuffle)
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val spread =
-      if (docs.rdd.getNumPartitions < par) docs.repartition(par) else docs
-    val perDoc = spread
+    val perDoc = Spread.fanOutScan(docs, col(idCol))
       .filter(length(trim(col(textCol))) > 0)
       // native compiled shingling — the HOF spelling (transform/slice/
       // concat_ws) evaluates interpreted and costs ~3 s of first-use
@@ -1976,9 +1926,8 @@ object Dedup {
     // size-dispatched materialization as prefixJaccardPairs: under a
     // proven input bound the winnow pass is checkpointed once; above it,
     // recompute beats pinning a corpus-sized intermediate.
-    val inputSmall = docs.queryExecution.optimizedPlan.stats.sizeInBytes <
-      BigInt(512L << 20)
-    val fps = if (inputSmall) fpsPlan.localCheckpoint() else fpsPlan
+    val pin = Spread.pinIfSmall(docs) _
+    val fps = pin(fpsPlan)
     // shared/cap band via aggregate + semi-join, NOT a count window over
     // fp: the partial aggregate collapses a corpus-hot fingerprint (site
     // boilerplate shared by millions of docs) map-side and the join
@@ -1991,9 +1940,7 @@ object Dedup {
     // consumed by both self-join sides; ≤ cap rows per fingerprint but
     // total rows still scale with the corpus, so the same dispatch
     // applies (checkpoint under the bound, recompute above it)
-    val prunedPlan = fps.join(fpBand, "fp")
-      .select(col("doc_id"), col("fp"))
-    val pruned = if (inputSmall) prunedPlan.localCheckpoint() else prunedPlan
+    val pruned = pin(fps.join(fpBand, "fp").select(col("doc_id"), col("fp")))
     pruned.as("a")
       .join(pruned.as("b"),
         col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))

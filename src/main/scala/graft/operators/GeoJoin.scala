@@ -49,16 +49,14 @@ object GeoJoin {
     greatest(floor(lit(360.0) / cellDeg).cast("long"), lit(1L))
 
   /** `left` round-robin repartitioned to the default parallelism when it
-    * is a single-leaf scan narrower than that, else unchanged. The width is
-    * read from the physical plan ([[Spread.scanPartitions]]), so building
-    * the join starts no second QueryExecution the way `left.rdd` did. */
-  private def spreadNarrowScan(left: DataFrame): DataFrame = {
-    val par = left.sparkSession.sparkContext.defaultParallelism
-    Spread.scanPartitions(left) match {
-      case Some(n) if n < par => left.repartition(par)
-      case _ => left
-    }
-  }
+    * is a single-leaf scan narrower than that ([[Spread.narrow]]), else
+    * unchanged. Round-robin, not [[Spread.fanOutScan]]'s hash placement:
+    * the geo joins have no id column to hash, and q18's and q38's plans
+    * keep this shape. */
+  private def spreadNarrowScan(left: DataFrame): DataFrame =
+    if (Spread.narrow(left))
+      left.repartition(left.sparkSession.sparkContext.defaultParallelism)
+    else left
 
   /** All (left, right) pairs with haversine distance ≤ radiusM, plus a
     * `dist_m` column. `left` needs (lat1, lon1); `right` (lat2, lon2). */
@@ -206,30 +204,6 @@ object GeoJoin {
     * any radius past this makes every (left, right) pair a candidate. */
   private val MaxEarthDistM = 2.1e7
 
-  /** Large×large exact kNN via escalating-radius banded passes: a banded
-    * radius join at `radiusM` handles every left row that finds ≥ k
-    * candidates inside the radius — for those rows the true top-k provably
-    * lies within the radius. The uncovered remainder (isolated points)
-    * retries with the radius ×4 per pass until covered or the radius
-    * exceeds [[MaxEarthDistM]], at which point one terminal banded pass
-    * (whose candidate set is by construction ALL pairs for the few rows
-    * left) finishes the job — never a broadcast of the large right side,
-    * which is exactly the side `knnJoin` already judged too big to
-    * broadcast. Each pass shrinks `remaining` sharply (isolated points are
-    * rare by definition), so the driver loop runs O(log(maxR/radiusM))
-    * bounded passes.
-    *
-    * Ranking uses `row_number` windows: Catalyst's WindowGroupLimit already
-    * truncates to k rows per key map-side, and — measured at sf0.1 — beats
-    * the typed [[graft.functions.BoundedTopKAgg]] here because the codegen'd
-    * window avoids the per-row buffer encode/decode a typed Aggregator pays.
-    * Each pass's ranked output feeds three consumers (covered keys, covered
-    * top-k, uncovered anti-join), so it is localCheckpoint'd — it holds ≤ k
-    * rows per covered left key, tiny next to its lineage (the candidate
-    * join), which would otherwise run three times. Results are bit-identical
-    * to brute force (GeoJoinSpec): candidates at radius r are a superset of
-    * those at any smaller radius, and the (dist, rightKey) ordering is
-    * radius-independent. */
   /** Grid-cell density map — the spatial GROUP BY behind heatmaps and
     * density-based pre-filters: points binned into `cellDeg`-degree
     * cells via floor((lat+90)/cellDeg), with per-cell counts, observed
@@ -261,6 +235,30 @@ object GeoJoin {
         Corpus.ratioRound6(col("n"), col("total")).as("share_r"))
   }
 
+  /** Large×large exact kNN via escalating-radius banded passes: a banded
+    * radius join at `radiusM` handles every left row that finds ≥ k
+    * candidates inside the radius — for those rows the true top-k provably
+    * lies within the radius. The uncovered remainder (isolated points)
+    * retries with the radius ×4 per pass until covered or the radius
+    * exceeds [[MaxEarthDistM]], at which point one terminal banded pass
+    * (whose candidate set is by construction ALL pairs for the few rows
+    * left) finishes the job — never a broadcast of the large right side,
+    * which is exactly the side `knnJoin` already judged too big to
+    * broadcast. Each pass shrinks `remaining` sharply (isolated points are
+    * rare by definition), so the driver loop runs O(log(maxR/radiusM))
+    * bounded passes.
+    *
+    * Ranking uses `row_number` windows: Catalyst's WindowGroupLimit already
+    * truncates to k rows per key map-side, and — measured at sf0.1 — beats
+    * the typed [[graft.functions.BoundedTopKAgg]] here because the codegen'd
+    * window avoids the per-row buffer encode/decode a typed Aggregator pays.
+    * Each pass's ranked output feeds three consumers (covered keys, covered
+    * top-k, uncovered anti-join), so it is localCheckpoint'd — it holds ≤ k
+    * rows per covered left key, tiny next to its lineage (the candidate
+    * join), which would otherwise run three times. Results are bit-identical
+    * to brute force (GeoJoinSpec): candidates at radius r are a superset of
+    * those at any smaller radius, and the (dist, rightKey) ordering is
+    * radius-independent. */
   def knnJoinBanded(left: DataFrame, right: DataFrame, k: Int, radiusM: Double,
       leftKey: String, rightKey: String,
       lat1: String, lon1: String, lat2: String, lon2: String): DataFrame = {

@@ -2,14 +2,39 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 
-/** The spread helpers: how wide a plan runs, read from its physical plan,
-  * and the hash fan-out of a narrower-than-cores scan that Dedup, Corpus
-  * and GeoJoin place before their CPU-dense per-row passes. */
+/** The size rules of the text operators, read from the plan alone: how
+  * wide a plan runs ([[scanPartitions]]), when a narrower-than-cores scan
+  * fans out before a CPU-dense per-row pass ([[narrow]], [[fanOutScan]]),
+  * and when an intermediate with several consumers is pinned
+  * ([[pinIfSmall]]). Dedup, Corpus, GeoJoin and the contract queries take
+  * these decisions here and nowhere else. */
 object Spread {
 
+  /** The pin bound: under 512 MiB of estimated source bytes an
+    * intermediate consumed more than once is localCheckpointed once
+    * (measured at sf0.1 shape: the shingle front ran 8.0 s recomputing
+    * both branches vs 3.4 s reading one checkpoint); above it every
+    * consumer recomputes, because pinning a corpus-sized intermediate in
+    * executor storage is worse at scale than one extra column-pruned scan.
+    * Bench/Verify release all persistent RDDs after each query; other
+    * callers rely on ContextCleaner GC, bounded by this same rule. */
+  private[graft] def small(source: DataFrame): Boolean =
+    source.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(512L << 20)
+
+  /** `plan` localCheckpointed when `source` is [[small]], else `plan`. */
+  private[graft] def pinIfSmall(source: DataFrame)(plan: DataFrame): DataFrame =
+    if (small(source)) plan.localCheckpoint() else plan
+
+  /** Whether `df` is a batch single-leaf scan narrower than the default
+    * parallelism, the case where a per-row pass built on it would run on
+    * fewer tasks than there are cores. */
+  private[graft] def narrow(df: DataFrame): Boolean =
+    !df.isStreaming && scanPartitions(df).exists(
+      _ < df.sparkSession.sparkContext.defaultParallelism)
+
   /** Fan a narrower-than-cores scan out to the default parallelism before
-    * a CPU-dense per-row pass (r22, generalizing prefixToks' r11 spread):
-    * a single-row-group corpus file scans as ONE partition, and every
+    * a CPU-dense per-row pass (r22, generalizing the shingle front's r11
+    * spread): a single-row-group corpus file scans as ONE partition, and every
     * native text pass built directly on it — minhash lanes, shingle
     * explodes, winnow fingerprints, hash-array builds (including the ones
     * that execute inside a BroadcastExchange build or a localCheckpoint
@@ -23,8 +48,7 @@ object Spread {
     * just to count its partitions, and a streaming frame passes through
     * unchanged. */
   private[graft] def fanOutScan(df: DataFrame,
-      key: Column): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
+      key: Column): DataFrame =
     // HASH repartition on a caller-supplied high-cardinality key, not
     // round-robin: every keyless repartition(n) first pays a LOCAL SORT
     // of its input (spark.sql.execution.sortBeforeRepartition, on by
@@ -32,12 +56,9 @@ object Spread {
     // §2.5), and on a 1-partition scan that sort of the full text
     // payloads is itself a serial pass. Hash placement is deterministic
     // by value, so it needs no sort and is retry-safe by construction.
-    if (df.isStreaming) df
-    else scanPartitions(df) match {
-      case Some(n) if n < par => df.repartition(par, key)
-      case _ => df
-    }
-  }
+    if (narrow(df))
+      df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
+    else df
 
   /** The partition count `df` runs at when its physical plan is one leaf
     * (file scan, cached frame, checkpoint, local rows, range) under narrow

@@ -349,14 +349,6 @@ object Transforms {
         Corpus.ratioRound6(col("n_active"), col("cohort_n")).as("retention_r"))
   }
 
-  /** Per-user event-type transition matrix (first-order Markov over the
-    * clickstream): consecutive-event pairs by time order, transition
-    * counts, and the exact-integer conditional share P(next | from).
-    * `tieCol` must make the per-user order total (an event id).
-    *
-    * Scale: ONE window partitioned by user (each partition is one user's
-    * events — bounded), then a type²-bounded aggregate; the conditional
-    * denominator is a window over that aggregate, not the corpus. */
   /** The (from_type, next_type, n) successor-pair count table — the
     * shared core of [[eventTransitions]] and [[transitionEntropy]], so
     * the successor ordering/tie semantics cannot drift between the
@@ -372,6 +364,14 @@ object Transforms {
       .agg(count(lit(1)).as("n"))
   }
 
+  /** Per-user event-type transition matrix (first-order Markov over the
+    * clickstream): consecutive-event pairs by time order, transition
+    * counts, and the exact-integer conditional share P(next | from).
+    * `tieCol` must make the per-user order total (an event id).
+    *
+    * Scale: ONE window partitioned by user (each partition is one user's
+    * events — bounded), then a type²-bounded aggregate; the conditional
+    * denominator is a window over that aggregate, not the corpus. */
   def eventTransitions(events: DataFrame, userCol: String, typeCol: String,
       tsCol: String, tieCol: String): DataFrame = {
     val pairs = transitionCounts(events, userCol, typeCol, tsCol, tieCol)

@@ -1083,7 +1083,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
     val union = Dedup.containmentRoutedUnion(d, "doc_id", "text",
       shingleK = 8, numT = 3, denT = 4, maxBucket = 1000,
-      Dedup.containmentFront(d, "doc_id", "text", shingleK = 8),
+      Dedup.shingleFront(d, "doc_id", "text", shingleK = 8),
       nDocsIn = -1L)
       .select("id_sub", "id_sup").as[(Long, Long)].collect().toSet
     assert(truth.subsetOf(union),

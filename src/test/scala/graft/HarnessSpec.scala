@@ -18,6 +18,30 @@ import graft.operators.Overlap
 class HarnessSpec extends AnyFunSuite with TimeLimits {
   implicit val signaler: Signaler = ThreadSignaler
 
+  /** The main-code sources the censuses below read. */
+  private lazy val files = {
+    import scala.jdk.CollectionConverters._
+    Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+  }
+  private val comments = """(?s)/\*.*?\*/|//[^\n]*""".r
+  private val defName = """\bdef\s+(\w+)""".r
+  private val defining = """\b(?:def|val)\s+$""".r
+
+  /** Each use of `name` in main code that is not its definition, named by
+    * the file and the method it sits in. */
+  private def uses(name: String): Seq[String] = files.flatMap { f =>
+    val src = comments.replaceAllIn(Files.readString(f), "")
+    s"\\b$name\\b".r.findAllMatchIn(src).map(_.start)
+      .filterNot(i =>
+        defining.findFirstIn(src.substring(math.max(0, i - 16), i)).isDefined)
+      .map { i =>
+        val in = defName.findAllMatchIn(src.substring(0, i)).toSeq
+          .lastOption.fold("<top>")(_.group(1))
+        s"${f.getFileName}: $in"
+      }
+  }
+
   test("the shared test session runs on Graft.builder's policy") {
     val s = SparkTestBase.session
     assert(s.sparkContext.master == "local[4]")
@@ -109,9 +133,6 @@ class HarnessSpec extends AnyFunSuite with TimeLimits {
 
   test("knob census: main code reads no graft.* system property and no " +
       "spark.graft.* key but spark.graft.route.scratchBytes") {
-    import scala.jdk.CollectionConverters._
-    val files = Files.walk(java.nio.file.Paths.get("src/main/scala"))
-      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
     assert(files.size > 10, "src/main/scala not found from the working dir")
     val sysProp = ("""(?:sys\.props|getProperty|getBoolean|getInteger|getLong)""" +
       """[\w.]*\(\s*"(graft\.[\w.]+)"""").r
@@ -127,15 +148,11 @@ class HarnessSpec extends AnyFunSuite with TimeLimits {
 
   test("artifact census: main code adds no session artifact, so streams " +
       "can run without artifact isolation") {
-    import scala.jdk.CollectionConverters._
-    val files = Files.walk(java.nio.file.Paths.get("src/main/scala"))
-      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
     assert(files.size > 10, "src/main/scala not found from the working dir")
     // StreamingOps.withStreamConf turns spark.sql.artifact.isolation.enabled
     // off for its streams' sessions; a jar, file, archive or class added to
     // a session would then reach every stream's tasks
     val add = """\.\s*add(?:Artifacts?|Jar|File|Archive)\s*\(""".r
-    val comments = """(?s)/\*.*?\*/|//[^\n]*""".r
     val calls = files.flatMap { f =>
       val src = comments.replaceAllIn(Files.readString(f), "")
       add.findAllIn(src).map(c => s"${f.getFileName}: $c")
@@ -145,14 +162,10 @@ class HarnessSpec extends AnyFunSuite with TimeLimits {
 
   test("schema census: main code reads parquet without a schema only where " +
       "Spark's inference is the point") {
-    import scala.jdk.CollectionConverters._
-    val files = Files.walk(java.nio.file.Paths.get("src/main/scala"))
-      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
     assert(files.size > 10, "src/main/scala not found from the working dir")
     // a batch parquet read with no .schema(...) runs a one-task job to
     // infer one; table and stream-source reads take Tables.schemaOf instead
     val schemaLess = """\bread(?:\s*\.\s*option\([^()]*\))*\s*\.\s*parquet\(""".r
-    val comments = """(?s)/\*.*?\*/|//[^\n]*""".r
     val reads = files.flatMap { f =>
       val src = comments.replaceAllIn(Files.readString(f), "")
       // each read is named by the line its `read` starts on
@@ -182,30 +195,31 @@ class HarnessSpec extends AnyFunSuite with TimeLimits {
   }
 
   test("cap census: the dedup and similarity caps are decided in one step") {
-    import scala.jdk.CollectionConverters._
-    val files = Files.walk(java.nio.file.Paths.get("src/main/scala"))
-      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
     assert(files.size > 10, "src/main/scala not found from the working dir")
-    val comments = """(?s)/\*.*?\*/|//[^\n]*""".r
-    val defName = """\bdef\s+(\w+)""".r
-    val defining = """\b(?:def|val)\s+$""".r
-    // each use of `name` that is not its definition, named by the file and
-    // the method it sits in
-    def uses(name: String): Seq[String] = files.flatMap { f =>
-      val src = comments.replaceAllIn(Files.readString(f), "")
-      s"\\b$name\\b".r.findAllMatchIn(src).map(_.start)
-        .filterNot(i =>
-          defining.findFirstIn(src.substring(math.max(0, i - 16), i)).isDefined)
-        .map { i =>
-          val in = defName.findAllMatchIn(src.substring(0, i)).toSeq
-            .lastOption.fold("<top>")(_.group(1))
-          s"${f.getFileName}: $in"
-        }
-    }
     // the template floor and the warn threshold are read by the autocap
     // step alone; the LSH joins pin their bucket sizes through one helper
     assert(uses("capBelowTemplateFloorLocal") == Seq("Dedup.scala: autoCap"))
     assert(uses("WarnCandidatesPerDoc") == Seq("Dedup.scala: autoCap"))
     assert(uses("maybePinSizes") == Seq("Similarity.scala: capBuckets"))
+  }
+
+  test("spread census: the text operators' spread and pin rules live in " +
+      "Spread") {
+    assert(files.size > 10, "src/main/scala not found from the working dir")
+    val code = files.map(f =>
+      f.getFileName.toString -> comments.replaceAllIn(Files.readString(f), ""))
+    // a `.rdd` width read builds a second QueryExecution while the plan is
+    // still being built; Spread reads the width from the physical plan
+    assert(code.filter(_._2.contains(".rdd.getNumPartitions")).isEmpty,
+      "a spread site sizes its fan-out with .rdd")
+    assert(code.flatMap { case (n, src) =>
+      "512L << 20".r.findAllIn(src).map(_ => n) } == Seq("Spread.scala"),
+      "the pin bound is copied outside Spread")
+    assert(uses("inBroadcastDangerZone") == Seq("Dedup.scala: shingleFront"))
+    assert(uses("maybeBroadcastArrs") == Seq("Dedup.scala: verifyArrs"))
+    // scaladoc attaches a doc block only to the declaration right below it
+    val stacked = """\*/\s*/\*\*""".r
+    assert(files.filter(f => stacked.findFirstIn(Files.readString(f)).isDefined)
+      .map(_.getFileName.toString).isEmpty, "a doc block documents nothing")
   }
 }

@@ -816,33 +816,39 @@ class ScaleSpec extends AnyFunSuite {
     // hide the shape behind an RDD scan):
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val base = docs.repartition(4)
-      .filter(length(trim(col("text"))) > 0)
-    val plan = graft.operators.Dedup
-      .shingleToksPlan(base, "doc_id", "text", 8)
-      .queryExecution.optimizedPlan.toString
-    val lines = plan.split("\n")
-    // 1. no Filter anywhere re-deriving the shingling expression
-    assert(!lines.exists(l => l.contains("Filter") &&
-      l.contains("char_shingles")),
-      s"inferred filter re-derives char_shingles:\n$plan")
-    // 2. the generator input is the inline expression, not an attribute
-    assert(plan.contains("Generate explode(char_shingles("),
-      s"generator input is no longer the inline shingling expression " +
-        s"(InferFiltersFromGenerate can fire again):\n$plan")
-    // 3. shingling is evaluated exactly twice per INPUT row (size for n +
-    //    the generator) — a third occurrence means it leaked above the
-    //    Generate where it runs per SHINGLE row (measured 21 s vs 0.6 s)
-    val occurrences = "char_shingles\\(".r.findAllIn(plan).length
-    assert(occurrences == 2,
-      s"expected exactly 2 char_shingles sites (n Project + Generate), " +
-        s"got $occurrences:\n$plan")
-    // 4. n is computed BELOW the Generate: the size(...) Project line
-    //    appears after (deeper than) the Generate line in the tree print
-    val genIdx = lines.indexWhere(_.contains("Generate explode"))
-    val sizeIdx = lines.indexWhere(_.contains("size(char_shingles"))
-    assert(genIdx >= 0 && sizeIdx > genIdx,
-      s"size(char_shingles) must sit below the Generate:\n$plan")
+    // the fixture scan is narrower than the cores, so the shipped spread
+    // (Spread.fanOutScan's hash placement) is in the plan as well as the
+    // round-robin one
+    assert(graft.operators.Spread.narrow(docs))
+    for (spread <- Seq(docs.repartition(4),
+        graft.operators.Spread.fanOutScan(docs, col("doc_id")))) {
+      val base = spread.filter(length(trim(col("text"))) > 0)
+      val plan = graft.operators.Dedup
+        .shingleToksPlan(base, "doc_id", "text", 8)
+        .queryExecution.optimizedPlan.toString
+      val lines = plan.split("\n")
+      // 1. no Filter anywhere re-deriving the shingling expression
+      assert(!lines.exists(l => l.contains("Filter") &&
+        l.contains("char_shingles")),
+        s"inferred filter re-derives char_shingles:\n$plan")
+      // 2. the generator input is the inline expression, not an attribute
+      assert(plan.contains("Generate explode(char_shingles("),
+        s"generator input is no longer the inline shingling expression " +
+          s"(InferFiltersFromGenerate can fire again):\n$plan")
+      // 3. shingling is evaluated exactly twice per INPUT row (size for n +
+      //    the generator) — a third occurrence means it leaked above the
+      //    Generate where it runs per SHINGLE row (measured 21 s vs 0.6 s)
+      val occurrences = "char_shingles\\(".r.findAllIn(plan).length
+      assert(occurrences == 2,
+        s"expected exactly 2 char_shingles sites (n Project + Generate), " +
+          s"got $occurrences:\n$plan")
+      // 4. n is computed BELOW the Generate: the size(...) Project line
+      //    appears after (deeper than) the Generate line in the tree print
+      val genIdx = lines.indexWhere(_.contains("Generate explode"))
+      val sizeIdx = lines.indexWhere(_.contains("size(char_shingles"))
+      assert(genIdx >= 0 && sizeIdx > genIdx,
+        s"size(char_shingles) must sit below the Generate:\n$plan")
+    }
   }
 
   test("plan shape: multi-table LSH dedups candidates BEFORE the vector " +

@@ -601,10 +601,8 @@ object IngestQueries {
       val today = java.time.LocalDate.of(2026, 1, 6)
       val wm = Seq(("A", "2026-01-03"), ("B", "2026-01-05"), ("C", "2026-01-10"))
         .toDF("entity", "max_date")
-      // per-process scratch dirs, removed at JVM exit (tmpScratch): two
-      // concurrent runs must not race on a shared fixture file
-      val srcDir = tmpScratch(s"q80_src_$scratchNonce")
-      val stageDir = tmpScratch(s"q80_stage_$scratchNonce")
+      val srcDir = scratch("q80_src", d)
+      val stageDir = scratch("q80_stage", d)
       val fetcher = new graft.sources.StagedIngest.LocalFileFetcher(spec => {
         // upstream over-delivers: the whole window regardless of `from`
         val p = srcDir.resolve(s"${spec.entity}.csv")
@@ -647,8 +645,8 @@ object IngestQueries {
       val wm = symbols.map { sym =>
         (sym, if (sym == "CH26") "2026-03-20" else "1970-01-01")
       }.toDF("entity", "max_date")
-      val srcDir = tmpScratch(s"q92_src_$scratchNonce")
-      val stageDir = tmpScratch(s"q92_stage_$scratchNonce")
+      val srcDir = scratch("q92_src", d)
+      val stageDir = scratch("q92_stage", d)
       // upstream synthesizes quotes for 2026-03-18..24, close = a
       // deterministic function of (symbol, day) mirrored in the oracle
       val fetcher = new graft.sources.StagedIngest.LocalFileFetcher(spec => {
@@ -711,9 +709,7 @@ object IngestQueries {
     // the others — DELETE+INSERT semantics, proven by writing twice.
     Contract("q82_idempotent_reload", ((s, d) => {
       import s.implicits._
-      // per-process scratch dir, removed at JVM exit (tmpScratch): the
-      // dynamic month-overwrite semantics stay within one run
-      val dir = tmpScratch(s"q82_reload_$scratchNonce").toString
+      val dir = scratch("q82", d).toString
       val batch1 = Seq(("2026-01", "a", 1.0), ("2026-01", "b", 2.0),
         ("2026-02", "c", 3.0)).toDF("month", "k", "v")
       val batch2 = Seq(("2026-02", "c", 30.0), ("2026-02", "d", 4.0))

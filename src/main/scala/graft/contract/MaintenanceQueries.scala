@@ -88,9 +88,7 @@ object MaintenanceQueries {
   val contracts: Seq[Contract] = Seq(
     // S1/S11 — CSV sink + scan round-trip through real files.
     Contract("q42_csv_roundtrip", ((s, d) => {
-      // per-dataset AND per-process scratch (see scratchDir): concurrent
-      // runs must not clobber each other between write and read-back
-      val tmp = scratchDir("q42", d)
+      val tmp = scratch("q42", d).toString
       orders(s, d).select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         .write.mode("overwrite").option("header", "true").csv(tmp)
       s.read.option("header", "true")
@@ -106,11 +104,8 @@ object MaintenanceQueries {
     Contract("q70_partitioned_write", ((s, d) => {
       // NOTE: constructing this query performs the write eagerly (same
       // trade-off as q42's CSV roundtrip) — the sink IS the operator under
-      // test. Keyed per dataset AND per process (tmpScratch, removed at
-      // exit): concurrent runs at different SFs — or over the SAME
-      // dataset — can't clobber each other between write and read-back.
-      val tmp = tmpScratch("orders_by_year_" +
-        d.replaceAll("[^A-Za-z0-9]", "_") + s"_$scratchNonce").toString
+      // test.
+      val tmp = scratch("q70", d).toString
       orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")).cast("int"))
         // co-locate each partition's rows first: one right-sized file per
@@ -229,8 +224,7 @@ object MaintenanceQueries {
     // query-construction time, the operator-under-test trade-off q42/q70
     // also take.
     Contract("q103_schema_evolution", ((s, d) => {
-      val tok = datasetTok(d)
-      val dir = tmpScratch(s"q103_data_$tok").toString
+      val dir = scratch("q103", d).toString
       val o = orders(s, d)
       o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -252,8 +246,7 @@ object MaintenanceQueries {
     // against the source table. File-count collapse is asserted in
     // ScaleSpec; this query pins the data.
     Contract("q104_compact_lossless", ((s, d) => {
-      val tok = datasetTok(d)
-      val dir = tmpScratch(s"q104_data_$tok").resolve("t").toString
+      val dir = scratch("q104", d).resolve("t").toString
       orders(s, d)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
         .repartition(64).write.mode("overwrite").parquet(dir)
@@ -308,10 +301,7 @@ object MaintenanceQueries {
     // recomputes the same selection from the parquet base table, proving
     // the ORC write+read is lossless for longs/doubles/timestamps.
     Contract("q145_orc_roundtrip", ((s, d) => {
-      // per-dataset and per-process scratch (see scratchDir): concurrent
-      // runs must not clobber each other's ORC output between the write
-      // and the timed read-back
-      val tmp = scratchDir("q145", d)
+      val tmp = scratch("q145", d).toString
       lineitem(s, d)
         .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"),
           col("l_shipdate"))
@@ -386,10 +376,7 @@ object MaintenanceQueries {
         val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir"))
         val loc = java.nio.file.Paths.get(
           Option(wh.getPath).getOrElse(wh.toString)).resolve(t)
-        if (java.nio.file.Files.exists(loc))
-          java.nio.file.Files.walk(loc)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
+        graft.io.NioLocalFileSystem.deleteRecursively(loc)
       }
       // r21 (guide §2.6): the two bucketed writes are independent jobs —
       // overlap them so the second table's scan back-fills the first
@@ -693,8 +680,7 @@ object MaintenanceQueries {
         .select(col("l_orderkey"), col("l_partkey"),
         col("l_returnflag"), col("l_linestatus"),
         col("l_quantity").cast("long").as("qty"))
-      // same dataset+process-keyed scratch discipline as q208 (scratchDir)
-      val tmp = scratchDir("q224", d)
+      val tmp = scratch("q224", d)
       base.write.mode("overwrite").format("xml")
         .option("rootTag", "rows").option("rowTag", "row")
         .save(s"$tmp/x")
@@ -759,11 +745,7 @@ object MaintenanceQueries {
       val base = lineitem(s, d).select(col("l_orderkey"), col("l_partkey"),
         col("l_returnflag"), col("l_linestatus"),
         col("l_quantity").cast("long").as("qty"))
-      // Scratch keyed by dataset + process (see scratchDir): a concurrent
-      // run at another scale factor — or over the SAME dataset — cannot
-      // overwrite data under a still-unconsumed lazy DataFrame (the dir
-      // cannot be deleted inside the query; a shutdown hook removes it).
-      val tmp = scratchDir("q208", d)
+      val tmp = scratch("q208", d)
       // The four format writes are INDEPENDENT jobs over the same
       // projection — submit them from a small pool so each job's task
       // tail back-fills cores freed by the others (guide §2.6 overlap;

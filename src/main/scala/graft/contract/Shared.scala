@@ -7,9 +7,8 @@ import org.apache.spark.sql.types.DecimalType
 import graft.io.NioLocalFileSystem.deleteRecursively
 
 
-/** Helpers the contract families share: exact money sums, the
-  * write-scratch directories, the small-input checkpoint gate and the
-  * MinHash oracle CTE chains. */
+/** Helpers the contract families share: exact money sums, the scratch
+  * directories and the MinHash oracle CTE chains. */
 object Shared {
 
   private[contract] def dec(c: Column): Column = c.cast(DecimalType(18, 2))
@@ -28,76 +27,43 @@ object Shared {
   private[contract] def sumc(c: Column): Column =
     (sum(cents(c).cast(DecimalType(18, 0))) / lit(100)).cast("double")
 
-  // ---- write-scratch dirs for the format round-trip queries ----
-  // Keyed by an MD5 of the FULL dataset path (a 32-bit String.hashCode can
-  // collide across datasets) plus a per-PROCESS nonce, so two concurrent
-  // runs — even over the SAME dataset — never share a dir between the
-  // overwrite-write and the timed read-back (r13 ADVICE; the r12 keying
-  // only separated different datasets). Deletion cannot happen inside the
-  // query (the returned DataFrame reads the dir lazily), so every dir is
-  // registered for recursive removal at JVM exit — bench/verify runs no
-  // longer litter the tmpdir across invocations.
-  private[contract] val scratchNonce: String =
+  // ---- scratch directories for the write and stream queries ----
+  private val scratchNonce: String =
     java.lang.Long.toHexString(ProcessHandle.current().pid())
 
-  /** Per-dataset + per-process token for the streaming queries' scratch
-    * symlink dirs and sink view names — the same keying discipline as
-    * [[scratchDir]] (r13 ADVICE): MD5 of the full path (a 32-bit
-    * String.hashCode can collide across datasets) plus the process nonce
-    * (two concurrent runs over the SAME dataset must not race on a
-    * shared symlink or an in-memory sink view). Hex only, so it stays a
-    * valid temp-view identifier fragment. */
-  private[contract] def datasetTok(dataset: String): String =
+  /** First 6 bytes of the MD5 of the FULL dataset path, in hex (a 32-bit
+    * String.hashCode can collide across datasets). */
+  private def datasetKey(dataset: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(dataset.getBytes("UTF-8")).take(6)
-      .map(b => f"$b%02x").mkString + scratchNonce
+      .map(b => f"$b%02x").mkString
 
-  /** Scratch dir registered for JVM-exit removal: datasetTok carries the
-    * process nonce, so without registration every run would leave fresh
-    * `q*_src_*` dirs behind (same lifecycle rule as [[scratchDir]] —
-    * deletion cannot happen inside a query whose returned DataFrame reads
-    * the dir lazily). Lives under a per-process `graft-fmt-tmp-<pidhex>`
-    * parent in java.io.tmpdir so the dead-pid [[scratchSweep]] reclaims it
-    * after a SIGKILL/OOM run (BASELINE.md "Tight-memory spill
-    * rehearsal" drove such runs) — the shutdown hook never fires on
-    * those, and the previous target/tmp location had no crash-leak
-    * reclamation (r14 ADVICE). */
-  private[contract] def tmpScratch(name: String): java.nio.file.Path = {
-    val parent = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft-fmt-tmp-$scratchNonce")
-    val p = java.nio.file.Files.createDirectories(parent.resolve(name))
-    scratchSweep
-    scratchHook
-    scratchCreated.add(parent)
-    p
-  }
+  /** Per-dataset + per-process token for session-global names: memory-sink
+    * views and q192's tables. Two concurrent runs over the SAME dataset
+    * must not race on one view. Hex only, so it stays a valid identifier
+    * fragment. */
+  private[contract] def datasetTok(dataset: String): String =
+    datasetKey(dataset) + scratchNonce
 
-  private val scratchCreated =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
-
-  private lazy val scratchHook: Unit = Runtime.getRuntime.addShutdownHook(
-    new Thread(() => scratchCreated.forEach(deleteRecursively)))
-
-  // Crash-leak sweep (r14 review): a shutdown hook never runs under
-  // SIGKILL / OOM-kill — the BASELINE.md "Tight-memory spill rehearsal"
-  // drove such crashes — so orphaned per-pid dirs would otherwise
-  // accumulate until the tmp filesystem fills. Once per JVM, before the
-  // first dir is created, remove any sibling graft-fmt-* dir whose
-  // pid-hex suffix names a process that no longer exists (or exists but
-  // is dead); live concurrent runs and unparseable names are left
-  // untouched.
-  private lazy val scratchSweep: Unit =
+  /** The one per-process scratch parent,
+    * `<java.io.tmpdir>/graft-fmt-<pidhex>`. A query cannot delete its
+    * scratch itself (the returned DataFrame reads it lazily), so the
+    * parent is removed at JVM exit. A SIGKILL or OOM
+    * kill skips that hook, so before the parent is first made, every
+    * sibling `graft-fmt-*` dir whose pid-hex suffix names a dead process is
+    * removed; live concurrent runs and unparseable names are left alone. */
+  private lazy val scratchParent: java.nio.file.Path = {
+    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
     try {
       import scala.jdk.CollectionConverters._
-      val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
       java.nio.file.Files.list(tmp).iterator().asScala.toSeq
         .filter(p => java.nio.file.Files.isDirectory(p) &&
           p.getFileName.toString.startsWith("graft-fmt-"))
         .foreach { p =>
-          val pidHex = p.getFileName.toString.split('-').last
           val orphaned =
             try {
-              val pid = java.lang.Long.parseLong(pidHex, 16)
+              val pid = java.lang.Long.parseLong(
+                p.getFileName.toString.split('-').last, 16)
               val h = ProcessHandle.of(pid)
               pid != ProcessHandle.current().pid() &&
                 (h.isEmpty || !h.get().isAlive)
@@ -105,17 +71,22 @@ object Shared {
           if (orphaned) deleteRecursively(p)
         }
     } catch { case _: java.io.IOException => }
+    val parent = tmp.resolve(s"graft-fmt-$scratchNonce")
+    Runtime.getRuntime.addShutdownHook(
+      new Thread(() => deleteRecursively(parent)))
+    parent
+  }
 
-  private[contract] def scratchDir(tag: String, dataset: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dataset.getBytes("UTF-8")).take(6)
-      .map(b => f"$b%02x").mkString
-    val p = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft-fmt-$tag-$key-$scratchNonce")
-    scratchSweep
-    scratchHook
-    scratchCreated.add(p)
-    p.toString
+  /** An empty scratch directory for query `tag` over `dataset`:
+    * `<scratch parent>/<tag>-<MD5 prefix of the dataset path>`, deleted
+    * first if an earlier build left it. One directory per (tag, dataset)
+    * and process, so concurrent runs, and runs over two datasets, never
+    * share a directory between a write and its read-back. */
+  private[contract] def scratch(tag: String,
+      dataset: String): java.nio.file.Path = {
+    val p = scratchParent.resolve(s"$tag-${datasetKey(dataset)}")
+    deleteRecursively(p)
+    java.nio.file.Files.createDirectories(p)
   }
 
   /** MinHash lane-minima CTEs (toks → shingles → 16 md5 lanes) — shared by

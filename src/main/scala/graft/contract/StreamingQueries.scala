@@ -20,40 +20,47 @@ object StreamingQueries {
       |sigs AS (SELECT doc_id, md5(string_agg(h, '|' ORDER BY lane)) AS sig
       |         FROM minh GROUP BY doc_id)""".stripMargin
 
+  /** View ⋈ click per user within 60 minutes, both sides behind a 2-hour
+    * event-time watermark: the stream-stream interval join of q148, q255
+    * and q260. */
+  private def viewClickJoin(ev: DataFrame): DataFrame = {
+    val v = ev.filter(col("event_type") === "view")
+      .select(col("event_id").as("v_event_id"),
+        col("user_id").as("v_user"), col("ts").as("vts"))
+      .withWatermark("vts", "2 hours")
+    val c = ev.filter(col("event_type") === "click")
+      .select(col("event_id").as("c_event_id"),
+        col("user_id").as("c_user"), col("ts").as("cts"))
+      .withWatermark("cts", "2 hours")
+    v.join(c, col("v_user") === col("c_user") &&
+        col("cts") >= col("vts") &&
+        col("cts") <= col("vts") + expr("INTERVAL 60 MINUTES"))
+      .select(col("v_user").as("user_id"), col("v_event_id"),
+        col("c_event_id"),
+        (unix_micros(col("cts")) - unix_micros(col("vts")))
+          .as("delta_us"))
+  }
+
+  /** The signature dedup stream of q96 and q255 over non-blank documents. */
+  private def dedupDocs(docs: DataFrame): DataFrame =
+    graft.streaming.StreamingDedup.dedupStream(
+      docs.filter(length(trim(col("text"))) > 0), "doc_id", "text").toDF()
+
   val contracts: Seq[Contract] = Seq(
     // §2.8 under the oracle: a REAL Structured Streaming execution —
     // AvailableNow over the parquet source, complete-mode aggregation into
     // the memory sink — must produce exactly the batch answer. (Complete
     // mode + memory sink is the test harness shape; a cluster deployment
     // appends watermarked updates to a real sink, see streaming/.)
-    Contract("q90_streaming_agg", ((s, d) => {
-      val path = s"$d/lineitem.parquet"
-      // FileStreamSource lists a DIRECTORY; the sf dirs hold single files —
-      // expose the table through a symlinked scratch dir. Path and view
-      // names carry a per-dataset token so concurrent sessions over
-      // different sf dirs don't race on the symlink or the sink view.
-      val tok = datasetTok(d)
-      val srcDir = tmpScratch(s"q90_src_$tok")
-      val link = srcDir.resolve("lineitem.parquet")
-      java.nio.file.Files.deleteIfExists(link)
-      java.nio.file.Files.createSymbolicLink(
-        link, java.nio.file.Paths.get(path).toAbsolutePath)
-      val sch = schemaOf(s, path)
-      val qname = s"q90_mem_$tok"
-      s.catalog.dropTempView(qname)
+    Contract("q90_streaming_agg", ((s, d) =>
       StreamingOps.withStreamConf(s) {
-        val q = s.readStream.schema(sch).parquet(srcDir.toString)
-          .groupBy(col("l_returnflag"))
-          .agg(count(lit(1)).cast("long").as("n"),
-            sumc(col("l_quantity")).as("sum_qty"))
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(qname)
-    }),
+        StreamingOps.runAvailableNow(s, s"$d/lineitem.parquet",
+            s"q90_mem_${datasetTok(d)}", outputMode = "complete") { li =>
+          li.groupBy(col("l_returnflag"))
+            .agg(count(lit(1)).cast("long").as("n"),
+              sumc(col("l_quantity")).as("sum_qty"))
+        }
+      }),
       // q90: the streaming run must equal the batch aggregate exactly
       """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
         | CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
@@ -67,31 +74,11 @@ object StreamingQueries {
     // any stream length — the 100 TB requirement). Inner-join matches emit
     // eagerly (no watermark wait), so the streaming result is exactly the
     // batch interval join the oracle computes.
-    Contract("q148_streaming_join", ((s, d) => {
-      val tok = datasetTok(d)
-      val qname = s"q148_mem_$tok"
-      s.catalog.dropTempView(qname)
+    Contract("q148_streaming_join", ((s, d) =>
       StreamingOps.withStreamConf(s) {
-        StreamingOps.runAvailableNow(
-            s, s"$d/events.parquet", qname) { ev =>
-          val v = ev.filter(col("event_type") === "view")
-            .select(col("event_id").as("v_event_id"),
-              col("user_id").as("v_user"), col("ts").as("vts"))
-            .withWatermark("vts", "2 hours")
-          val c = ev.filter(col("event_type") === "click")
-            .select(col("event_id").as("c_event_id"),
-              col("user_id").as("c_user"), col("ts").as("cts"))
-            .withWatermark("cts", "2 hours")
-          v.join(c, col("v_user") === col("c_user") &&
-              col("cts") >= col("vts") &&
-              col("cts") <= col("vts") + expr("INTERVAL 60 MINUTES"))
-            .select(col("v_user").as("user_id"), col("v_event_id"),
-              col("c_event_id"),
-              (unix_micros(col("cts")) - unix_micros(col("vts")))
-                .as("delta_us"))
-        }
-      }
-    }),
+        StreamingOps.runAvailableNow(s, s"$d/events.parquet",
+          s"q148_mem_${datasetTok(d)}")(viewClickJoin)
+      }),
       // q148: the batch form of the stream-stream interval join — inner
       // matches emit eagerly in streaming, so the results are identical
       """WITH v AS (
@@ -110,32 +97,11 @@ object StreamingQueries {
     // source, flatMapGroupsWithState keeper state, append-mode memory
     // sink — must equal the batch min-per-signature answer (single batch
     // here; across micro-batches the state carries earlier keepers).
-    Contract("q96_streaming_dedup", ((s, d) => {
-      val path = s"$d/documents.parquet"
-      // same symlinked-scratch-dir shape as q90 (FileStreamSource lists a
-      // directory; per-dataset token keeps concurrent sessions apart)
-      val tok = datasetTok(d)
-      val srcDir = tmpScratch(s"q96_src_$tok")
-      val link = srcDir.resolve("documents.parquet")
-      java.nio.file.Files.deleteIfExists(link)
-      java.nio.file.Files.createSymbolicLink(
-        link, java.nio.file.Paths.get(path).toAbsolutePath)
-      val sch = schemaOf(s, path)
-      val qname = s"q96_mem_$tok"
-      s.catalog.dropTempView(qname)
-      val stream = s.readStream.schema(sch).parquet(srcDir.toString)
-        .filter(length(trim(col("text"))) > 0)
+    Contract("q96_streaming_dedup", ((s, d) =>
       StreamingOps.withStreamConf(s) {
-        val q = graft.streaming.StreamingDedup
-          .dedupStream(stream, "doc_id", "text")
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(qname)
-    }),
+        StreamingOps.runAvailableNow(s, s"$d/documents.parquet",
+          s"q96_mem_${datasetTok(d)}")(dedupDocs)
+      }),
       // q96: the streaming dedup must equal batch min-per-signature exactly;
       // signature mirror = md5 over the 16 ordered minhash lane minima
       s"""WITH $minhashSigCtes,
@@ -186,13 +152,10 @@ object StreamingQueries {
     // where window-function first/last would be unsupported in
     // streaming. The oracle is q161's batch SQL: stream/batch parity is
     // the assertion.
-    Contract("q191_streaming_ohlc", ((s, d) => {
-      val tok = datasetTok(d)
-      val qname = s"q191_mem_$tok"
-      s.catalog.dropTempView(qname)
+    Contract("q191_streaming_ohlc", ((s, d) =>
       StreamingOps.withStreamConf(s) {
-        StreamingOps.runAvailableNow(
-            s, s"$d/events.parquet", qname, outputMode = "complete") { ev =>
+        StreamingOps.runAvailableNow(s, s"$d/events.parquet",
+            s"q191_mem_${datasetTok(d)}", outputMode = "complete") { ev =>
           val ord = struct(col("ts"), col("event_id"))
           ev.filter(col("value").isNotNull)
             .withColumn("day", to_date(col("ts")))
@@ -205,8 +168,7 @@ object StreamingQueries {
               count(lit(1)).cast("long").as("n"),
               sum(col("c")).cast("long").as("vol_c"))
         }
-      }
-    }),
+      }),
       // q191: the q161 batch SQL verbatim — the streaming run must equal
       // the batch resample (stream/batch parity is the point)
       """WITH b AS (
@@ -238,13 +200,10 @@ object StreamingQueries {
     // attribution stream relies on, proven against an independent batch
     // derivation.
     Contract("q230_streaming_outer_join", ((s, d) => {
-      val tok = datasetTok(d)
-      val qname = s"q230_mem_$tok"
-      s.catalog.dropTempView(qname)
       val streamed =
         StreamingOps.withStreamConf(s) {
-          StreamingOps.runAvailableNow(
-              s, s"$d/events.parquet", qname) { ev =>
+          StreamingOps.runAvailableNow(s, s"$d/events.parquet",
+              s"q230_mem_${datasetTok(d)}") { ev =>
             val v = ev.filter(col("event_type") === "view")
               .select(col("event_id").as("v_event_id"),
                 col("user_id").as("v_user"), col("ts").as("vts"))
@@ -312,46 +271,29 @@ object StreamingQueries {
     // that tail-only window set; had the engine admitted late rows (or
     // emitted unclosed windows), the row set itself would differ.
     Contract("q222_watermark_late_drop", ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val tok = datasetTok(d)
       val base = events(s, d).select(col("event_id"), col("ts"),
         col("event_type"))
       val mx = base.agg(max(col("ts"))).head().getTimestamp(0)
       val tsplit = new java.sql.Timestamp(mx.getTime - 48L * 3600 * 1000)
-      val dir = tmpScratch(s"q222_src_$tok")
-      def rmTree(p: java.nio.file.Path): Unit = {
-        if (java.nio.file.Files.isDirectory(p))
-          java.nio.file.Files.list(p).forEach(rmTree(_))
-        java.nio.file.Files.deleteIfExists(p)
-      }
-      rmTree(dir); java.nio.file.Files.createDirectories(dir)
+      val Seq(dir, outDir, ckpt) =
+        Seq("q222_src", "q222_out", "q222_ck").map(scratch(_, d))
       // one plain parquet FILE per micro-batch, name- and mtime-ordered so
       // the file source's batch order is deterministic either way it sorts
       def writeOne(df: DataFrame, name: String, mtime: Long): Unit =
         StreamingOps.writeSingleParquet(df, dir.resolve(name), mtime,
           s"q222_watermark_late_drop: $name")
-      val outDir = tmpScratch(s"q222_out_$tok")
-      val ckpt = tmpScratch(s"q222_ck_$tok")
-      rmTree(outDir); rmTree(ckpt)
       writeOne(base.filter(col("ts") >= lit(tsplit)), "0001.parquet", 1000000L)
       val sch = schemaOf(s, dir.toString)
       // two INCREMENTAL AvailableNow runs against one checkpoint: run 1
       // sees only the tail file (watermark persists to state); run 2 sees
       // only the early file with the RESTORED watermark — every row late
-      def runOnce(): Unit = {
-        val q = s.readStream.schema(sch).parquet(dir.toString)
-          .withWatermark("ts", "1 hour")
+      def runOnce(): Unit = StreamingOps.runIncremental(s, dir.toString, sch,
+          ckpt.toString, outDir.toString) {
+        _.withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"))
           .select(col("window.start").as("window_start"), col("event_type"),
             col("n").cast("long").as("n"))
-          .writeStream.format("parquet")
-          .option("path", outDir.toString)
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
       }
       StreamingOps.withStreamConf(s) {
         runOnce()
@@ -395,11 +337,8 @@ object StreamingQueries {
     // rewritten on every run (r17 VERDICT item 7) — observability is
     // not lost, it is just not pretending to be oracle-checkable.
     Contract("q255_stream_state_metrics", ((s, d) => {
-      import graft.streaming.StreamingDedup
       val tok = datasetTok(d)
       StreamingOps.withStreamConf(s) {
-        val dq = s"q255_dedup_$tok"; val jq = s"q255_join_$tok"
-        s.catalog.dropTempView(dq); s.catalog.dropTempView(jq)
         // r21 (guide §2.6): the dedup stream and the join stream are
         // INDEPENDENT queries over different tables — run them
         // concurrently from two driver threads so the second stream's
@@ -408,32 +347,15 @@ object StreamingQueries {
         // and sink tables are per-stream, so the result is unchanged).
         val Seq(dedupProg, joinProg) = graft.operators.Overlap.runAll(Seq(
           () => StreamingOps.runAvailableNowProgress(
-            s, s"$d/documents.parquet", dq) { docs =>
-            StreamingDedup.dedupStream(
-              docs.filter(length(trim(col("text"))) > 0),
-              "doc_id", "text").toDF()
-          }._2,
+            s, s"$d/documents.parquet", s"q255_dedup_$tok")(dedupDocs)._2,
           () => StreamingOps.runAvailableNowProgress(
-            s, s"$d/events.parquet", jq) { ev =>
+            s, s"$d/events.parquet", s"q255_join_$tok") { ev =>
             // null join keys / event times are filtered EXPLICITLY so the
             // state-row count is a clean SQL quantity (what the symmetric
             // hash join would do with a null-keyed row is an impl detail
             // the oracle must not depend on)
-            val v = ev.filter(col("event_type") === "view" &&
-                col("user_id").isNotNull && col("ts").isNotNull)
-              .select(col("event_id").as("v_event_id"),
-                col("user_id").as("v_user"), col("ts").as("vts"))
-              .withWatermark("vts", "2 hours")
-            val c = ev.filter(col("event_type") === "click" &&
-                col("user_id").isNotNull && col("ts").isNotNull)
-              .select(col("event_id").as("c_event_id"),
-                col("user_id").as("c_user"), col("ts").as("cts"))
-              .withWatermark("cts", "2 hours")
-            v.join(c, col("v_user") === col("c_user") &&
-              col("cts") >= col("vts") &&
-              col("cts") <= col("vts") + expr("INTERVAL 60 MINUTES"))
-              .select(col("v_user").as("user_id"), col("v_event_id"),
-                col("c_event_id"))
+            viewClickJoin(
+              ev.filter(col("user_id").isNotNull && col("ts").isNotNull))
           }._2))
         StreamingOps.writeStateSidecar(
           "target/q255_state_sidecar.json",
@@ -481,12 +403,9 @@ object StreamingQueries {
     // windows (nonzero rows_removed — the item's "done" bar), batch 2
     // evicts all but the last.
     Contract("q257_stream_state_eviction", ((s, d) => {
-      val tok = datasetTok(d)
       StreamingOps.withStreamConf(s) {
-        val qn = s"q257_agg_$tok"
-        s.catalog.dropTempView(qn)
         val (_, progs) = StreamingOps.runAvailableNowDateSplitProgress(
-          s, s"$d/events.parquet", qn) { ev =>
+          s, s"$d/events.parquet", s"q257_agg_${datasetTok(d)}") { ev =>
           ev.filter(col("ts").isNotNull)
             .withWatermark("ts", "37 minutes")
             .groupBy(window(col("ts"), "1 hour"))
@@ -561,27 +480,12 @@ object StreamingQueries {
     // evictions are phase-A rows only and arrivals are never
     // drop-on-arrival — the oracle counts stay clean corpus aggregates.
     Contract("q260_stream_join_eviction", ((s, d) => {
-      val tok = datasetTok(d)
       StreamingOps.withStreamConf(s) {
-        val qn = s"q260_join_$tok"
-        s.catalog.dropTempView(qn)
         val (_, progs) = StreamingOps.runAvailableNowDateSplitProgress(
-          s, s"$d/events.parquet", qn) { ev =>
-          val v = ev.filter(col("event_type") === "view" &&
-              col("user_id").isNotNull && col("ts").isNotNull)
-            .select(col("event_id").as("v_event_id"),
-              col("user_id").as("v_user"), col("ts").as("vts"))
-            .withWatermark("vts", "2 hours")
-          val c = ev.filter(col("event_type") === "click" &&
-              col("user_id").isNotNull && col("ts").isNotNull)
-            .select(col("event_id").as("c_event_id"),
-              col("user_id").as("c_user"), col("ts").as("cts"))
-            .withWatermark("cts", "2 hours")
-          v.join(c, col("v_user") === col("c_user") &&
-            col("cts") >= col("vts") &&
-            col("cts") <= col("vts") + expr("INTERVAL 60 MINUTES"))
-            .select(col("v_user").as("user_id"), col("v_event_id"),
-              col("c_event_id"))
+          s, s"$d/events.parquet", s"q260_join_${datasetTok(d)}") { ev =>
+          // the same explicit null filter as q255's join stream
+          viewClickJoin(
+            ev.filter(col("user_id").isNotNull && col("ts").isNotNull))
         }
         StreamingOps.batchStateCounts(s, progs)
       }

@@ -13,8 +13,8 @@ import graft.operators.Overlap
 /** The run harness around the queries: the one session policy, the
   * query/oracle contract, the bench's retest-reference resolution,
   * `Overlap.runAll`'s failure handling, and the censuses of main-code
-  * knobs, session artifacts, schema-less parquet reads and cap
-  * decisions. */
+  * knobs, session artifacts, schema-less parquet reads, cap decisions and
+  * scratch directories. */
 class HarnessSpec extends AnyFunSuite with TimeLimits {
   implicit val signaler: Signaler = ThreadSignaler
 
@@ -192,6 +192,27 @@ class HarnessSpec extends AnyFunSuite with TimeLimits {
     assert(allowed.forall(reads.contains), "an allowed site is gone or moved")
     assert(reads.filterNot(allowed).isEmpty,
       "a parquet read infers its schema with a job; use Tables.schemaOf")
+  }
+
+  test("scratch census: scratch directories, memory sinks and recursive " +
+      "deletes each have one home") {
+    assert(files.size > 10, "src/main/scala not found from the working dir")
+    val code = files.map(f =>
+      f.getFileName.toString -> comments.replaceAllIn(Files.readString(f), ""))
+    def sites(pattern: String): Seq[String] = code.flatMap { case (n, src) =>
+      pattern.r.findAllIn(src).map(_ => n) }
+    // contract scratch comes from Shared.scratch, whose parent the exit
+    // hook removes; the runners' own dirs are deleted when their run ends
+    assert(sites("""java\.io\.tmpdir""") == Seq("Shared.scala"))
+    assert(uses("createTempDirectory") == Seq(
+      "StreamingOps.scala: runAvailableNowProgress",
+      "StreamingOps.scala: runAvailableNowDateSplitProgress",
+      "StreamingOps.scala: writeSingleParquet"))
+    assert(sites("""format\("memory"\)""") == Seq("StreamingOps.scala"),
+      "a stream builds its own memory sink")
+    assert(sites("""Files\.walk|deleteIfExists|\.delete\(\)""").distinct ==
+      Seq("NioLocalFileSystem.scala"),
+      "a recursive delete is written out by hand")
   }
 
   test("cap census: the dedup and similarity caps are decided in one step") {

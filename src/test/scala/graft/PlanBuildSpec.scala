@@ -14,7 +14,9 @@ import graft.operators.{Dedup, GeoJoin, Similarity}
 
 /** Building a plan is not running it: the etl_ref builders start no Spark
   * job and no query execution of their own (no schema-inference job, no
-  * `.rdd` probe), so all their work is left to the one execution. */
+  * `.rdd` probe), so all their work is left to the one execution. Builders
+  * whose write or stream is the operator under test start a fixed side
+  * work. */
 class PlanBuildSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.session
   private val sf = "perfbench/corpus/sf0.001"
@@ -72,6 +74,25 @@ class PlanBuildSpec extends AnyFunSuite {
       "q33_fixed_width", "q37_wasde_parse", "q38_geo_radius_join",
       "q247_pl_contract")
     assert(builderSideWork(names) == names.map(_ -> (0, 0)).toMap)
+  }
+
+  test("the write and stream builders start a fixed side work") {
+    // each builder runs its write or its stream while the plan is built,
+    // because that write or stream is the operator under test; a stream's
+    // own jobs run on its thread, outside the build's job group
+    val names = Seq("q42_csv_roundtrip", "q70_partitioned_write",
+      "q90_streaming_agg", "q96_streaming_dedup", "q222_watermark_late_drop")
+    assert(builderSideWork(names) == Map(
+      // the CSV write
+      "q42_csv_roundtrip" -> (1, 1),
+      // the partitioned write (2 jobs) and the read-back's schema job
+      "q70_partitioned_write" -> (3, 1),
+      // the stream: its memory-sink view and its one data batch
+      "q90_streaming_agg" -> (0, 2),
+      "q96_streaming_dedup" -> (0, 2),
+      // the max-ts head (2), two batch-file writes (2 each), the read-back's
+      // schema job
+      "q222_watermark_late_drop" -> (7, 3)))
   }
 
   test("the spread text builders size their fan-out without a probe") {

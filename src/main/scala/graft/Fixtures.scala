@@ -325,8 +325,6 @@ object Fixtures {
   def ebmlUint(id: Long, v: Long, width: Int): Array[Byte] =
     ebmlEl(id,
       (0 until width).reverse.map(k => ((v >> (8 * k)) & 0xff).toByte).toArray)
-  def ebmlFloat4(id: Long, v: Float): Array[Byte] =
-    ebmlEl(id, java.nio.ByteBuffer.allocate(4).putFloat(v).array())
   def ebmlFloat8(id: Long, v: Double): Array[Byte] =
     ebmlEl(id, java.nio.ByteBuffer.allocate(8).putDouble(v).array())
   def ebmlStr(id: Long, s: String): Array[Byte] =

@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   * {{{
   * val spark = Graft.builder(8).getOrCreate()
   * val docs  = Tables.table(spark, sfDir, "documents")
-  * val dups  = operators.Dedup.minhashCandidates(docs, "doc_id", "text")
+  * val dups  = operators.Dedup.minhashCandidatesPortable(docs, "doc_id", "text")
   * }}}
   */
 object Graft {

@@ -37,8 +37,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     // SURVEY §4 custom piece 3: cross-join + haversine filter → banded join
     e.injectOptimizerRule(_ => graft.plans.BandedDistanceJoinRule)
-    // full custom-operator ladder: lowers KnnJoinLogical to KnnJoinExec
-    e.injectPlannerStrategy(_ => graft.plans.KnnJoinStrategy)
     e.injectFunction((FunctionIdentifier("haversine_m"),
       info("haversine_m", "haversine_m(lat1, lon1, lat2, lon2) - great-circle meters"),
       (exprs: Seq[Expression]) => HaversineDistance(

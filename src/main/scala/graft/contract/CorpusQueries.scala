@@ -175,10 +175,10 @@ object CorpusQueries {
         |FROM documents""".stripMargin),
 
     // North star: SimHash signatures, portable md5 form — per-token md5
-    // bits vote per position, emitted as 4×16-bit chunks (the banding
-    // layout simhashNearDups joins on). Fully mirrored in DuckDB; the
-    // native xxhash64 SimHash64 expression stays the production default
-    // (TextHashSpec).
+    // bits vote per position, emitted as 4×16-bit chunks (a banding
+    // layout: any equal chunk makes a near-dup candidate). Fully mirrored
+    // in DuckDB; the FNV SimHash64 expression is the `simhash64` SQL
+    // function (TextHashSpec).
     Contract("q30_simhash", ((s, d) => {
       // SimHash is a scalar function of the document — ONE native compiled
       // pass per row (tokenize, md5 bits, vote, pack 4×16-bit chunks), no

@@ -50,8 +50,7 @@ object DedupQueries {
 
     // North star: MinHash+LSH candidate pairs. Portable md5 lanes
     // (lexicographic string MIN — identical semantics in DuckDB) so the
-    // whole LSH pipeline is oracle-checked; Dedup.XxLane (xxhash64) is the
-    // faster production default, same plan shape (DedupSimilaritySpec).
+    // whole LSH pipeline is oracle-checked.
     Contract("q29_minhash_lsh", ((s, d) =>
       Dedup.minhashCandidatesPortable(documents(s, d), "doc_id", "text")),
       s"WITH $minhashPairCtes\n$minhashPairSelect"),

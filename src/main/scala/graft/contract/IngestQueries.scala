@@ -256,10 +256,11 @@ object IngestQueries {
         |FROM p""".stripMargin),
 
     // J3/W1/W2 — distance theta-join + per-point top-3 nearest
-    // (`HTIPNEXSITE/__init__.py:92-131`), via the exact two-phase kNN join:
-    // banded radius pass + brute-force fallback for isolated points — same
-    // rows as the cross join (the oracle IS the cross join), ~O(|L|·|R|)
-    // work removed.
+    // (`HTIPNEXSITE/__init__.py:92-131`) via the exact kNN join. The
+    // supplier side is far under knnJoin's broadcast bound at every
+    // committed corpus, so it takes the broadcast arm: one bounded collect
+    // of the suppliers, then a shuffle-free per-customer scan — same rows
+    // as the cross join (the oracle IS the cross join).
     Contract("q18_geo_topk", ((s, d) =>
       graft.operators.GeoJoin.knnJoin(
         custPoints(s, d), suppPoints(s, d), 3, 2000000.0,

@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, QuaternaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
@@ -22,8 +22,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   *    whole-stage codegen; term order mirrors the DuckDB-oracle SQL so results
   *    agree to the last ulp modulo libm differences.
   *  - [[HaversineDistance]]: a native Catalyst `QuaternaryExpression` with
-  *    `doGenCode`, registered as SQL function `haversine_m`, for users writing
-  *    raw SQL against the engine.
+  *    `doGenCode`, which [[graft.GraftExtensions]] registers as the SQL
+  *    function `haversine_m` for users writing raw SQL against the engine.
   */
 object GeoFunctions {
   val EarthRadiusM: Double = 6371000.0
@@ -46,17 +46,6 @@ object GeoFunctions {
       Math.cos(Math.toRadians(lat1)) * Math.cos(Math.toRadians(lat2)) *
         Math.sin(dLon) * Math.sin(dLon)
     2.0 * EarthRadiusM * Math.asin(Math.sqrt(a))
-  }
-
-  /** Register `haversine_m(lat1, lon1, lat2, lon2)` for SQL users. */
-  def register(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "haversine_m",
-      exprs => HaversineDistance(
-        Cast(exprs(0), DoubleType), Cast(exprs(1), DoubleType),
-        Cast(exprs(2), DoubleType), Cast(exprs(3), DoubleType)),
-      "scala_udf")
   }
 }
 

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -55,19 +54,6 @@ object HashFunctions {
       j += 1
     }
     out
-  }
-
-  /** Hamming distance between two 64-bit signatures. */
-  def hamming64(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-
-  def simhash(tokens: Column): Column =
-    GraftBridge.column(SimHash64(GraftBridge.expression(tokens)))
-
-  /** Register `simhash64(array<string>)` for SQL users. */
-  def register(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "scala_udf")
   }
 }
 

@@ -37,29 +37,6 @@ object HilbertOps {
     d
   }
 
-  /** Inverse walk (d → cell) — used by range-scan planning (turn a key
-    * range back into a bounding region) and by the spec to prove the
-    * defining curve properties (round-trip identity, unit-step
-    * adjacency). */
-  def d2xy16(d: Long): (Long, Long) = {
-    var x = 0L; var y = 0L
-    var t = d
-    var s = 1L
-    while (s < 65536L) {
-      val rx = 1L & (t / 2)
-      val ry = 1L & (t ^ rx)
-      if (ry == 0) {
-        if (rx == 1) { x = s - 1 - x; y = s - 1 - y }
-        val tmp = x; x = y; y = tmp
-      }
-      x += s * rx
-      y += s * ry
-      t /= 4
-      s *= 2
-    }
-    (x, y)
-  }
-
   def hilbert16(a: Column, b: Column): Column =
     GraftBridge.column(HilbertIndex16(
       GraftBridge.expression(a), GraftBridge.expression(b)))

@@ -9,8 +9,8 @@ import graft.functions.{BloomAgg, BloomMightContain}
   * primitive for a 100 TB corpus against a bounded bad-content key set
   * (leaked benchmark digests, DMCA hashes, PII fingerprints).
   *
-  * Exact-result contract: both joins CONFIRM candidates with an exact
-  * semi/anti join, so Bloom false positives never change the answer — the
+  * Exact-result contract: the join CONFIRMS candidates with an exact
+  * anti join, so Bloom false positives never change the answer — the
   * filter only decides how many rows reach the shuffle. The plan shape at
   * scale: the key set aggregates into one broadcast byte-blob row
   * (partial bitset OR map-side), the big side probes it inside whole-stage
@@ -22,16 +22,19 @@ import graft.functions.{BloomAgg, BloomMightContain}
   */
 object Blocklist {
 
-  private def bloomRow(keys: DataFrame, keyCol: String, bitsPerKey: Int,
-      numHashes: Int, expectedKeys: Long): DataFrame = {
-    val n = if (expectedKeys > 0) expectedKeys else keys.count()
+  /** Filter bits per key (about 1% false positives with [[NumHashes]]). */
+  private val BitsPerKey = 10L
+  private val NumHashes = 5
+
+  private def bloomRow(keys: DataFrame, keyCol: String): DataFrame = {
+    val n = keys.count()
     // ≥64 bits, ≤256 MiB, rounded up to whole longs. The cap must itself
     // survive the round-up-and-toInt: (1<<31) would round to 2^31 and
     // overflow Int exactly when the cap engages (~215M keys at 10 b/key).
-    val want = math.min(math.max(bitsPerKey.toLong * math.max(n, 1L), 64L),
+    val want = math.min(math.max(BitsPerKey * math.max(n, 1L), 64L),
       (1L << 31) - 64L)
     val numBits = (((want + 63L) / 64L) * 64L).toInt
-    keys.agg(BloomAgg(numBits, numHashes).column(col(keyCol)).as("graft_bloom"))
+    keys.agg(BloomAgg(numBits, NumHashes).column(col(keyCol)).as("graft_bloom"))
   }
 
   /** The key set is consumed three times (size probe, bloom build, exact
@@ -46,19 +49,6 @@ object Blocklist {
         GraftBridge.expression(col("graft_bloom")),
         GraftBridge.expression(col(keyCol)))))
 
-  /** Rows of `big` whose key IS in `keys` (semi join). One pass over `big`:
-    * Bloom-reject inside the scan, exact-confirm only the survivors. */
-  def bloomSemiJoin(big: DataFrame, keys: DataFrame, keyCol: String,
-      bitsPerKey: Int = 10, numHashes: Int = 5,
-      expectedKeys: Long = -1L): DataFrame = {
-    val k = materializedKeys(keys, keyCol)
-    val blob = bloomRow(k, keyCol, bitsPerKey, numHashes, expectedKeys)
-    probe(big, blob, keyCol)
-      .filter(col("graft_might"))
-      .drop("graft_bloom", "graft_might")
-      .join(k, Seq(keyCol), "left_semi")
-  }
-
   /** Rows of `big` whose key is NOT in `keys` (anti join — keep the clean
     * corpus). Bloom-definite-clean rows pass straight through; only
     * might-contain candidates reach the exact check. ONE anti-join with
@@ -67,11 +57,9 @@ object Blocklist {
     * shuffling — and `big` is scanned once, not once per branch as a
     * filter/filter/union would. NULL-key rows keep plain left_anti
     * semantics (kept: null never equals a key). */
-  def bloomAntiJoin(big: DataFrame, keys: DataFrame, keyCol: String,
-      bitsPerKey: Int = 10, numHashes: Int = 5,
-      expectedKeys: Long = -1L): DataFrame = {
+  def bloomAntiJoin(big: DataFrame, keys: DataFrame, keyCol: String): DataFrame = {
     val k = materializedKeys(keys, keyCol)
-    val blob = bloomRow(k, keyCol, bitsPerKey, numHashes, expectedKeys)
+    val blob = bloomRow(k, keyCol)
     probe(big, blob, keyCol)
       .join(k.withColumnRenamed(keyCol, "graft_block_key"),
         col(keyCol) === col("graft_block_key") && col("graft_might"),

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.{HashFunctions, TextFunctions}
+import graft.functions.TextFunctions
 
 /** Large-scale document deduplication (SURVEY north star — beyond the
   * reference, whose only dedup is row-level `drop_duplicates`,
@@ -15,11 +15,7 @@ import graft.functions.{HashFunctions, TextFunctions}
   *    tuples shuffle — O(docs × bands) small rows, never document bodies.
   *    Candidate pairs come from equi-joining the banded table with itself,
   *    which Spark executes as a shuffled hash join on the band key; true
-  *    Jaccard verification happens only on the candidate set;
-  *  - SimHash: a single 64-bit signature per doc via the native
-  *    [[graft.functions.SimHash64]] expression; near-dup candidates via
-  *    banding the 64 bits into 4×16-bit chunks (any equal chunk → candidate,
-  *    guaranteeing recall for Hamming distance ≤ 3 by pigeonhole).
+  *    Jaccard verification happens only on the candidate set.
   */
 object Dedup {
 
@@ -51,31 +47,15 @@ object Dedup {
       .agg(min(col(idCol)).as("keeper"), count(lit(1)).as("n_dups"))
 
   /** Banded MinHash table `(doc_id, band, bh)` in the scale-correct shape:
-    * explode shingles to rows, hash each shingle once per lane, take map-side
-    * partial MIN per lane in one hash aggregate (shuffles only
-    * `(doc_id, k longs)`, never text), then hash lane-groups into band keys.
-    * The per-row lambda form (one `array_min(transform(...))` per lane)
-    * inlines the shingle array into every lane's expression tree — k×
-    * recompute — so this aggregate form is what the candidate join uses. */
-  import org.apache.spark.sql.Column
-
-  /** A lane-hash family: `prep` runs once per shingle row (materialized
-    * before the signature aggregate so all lanes share it), `lane(p, i)`
-    * derives lane i from the prepared column, `band` combines a band's lane
-    * minima into a bucket key. */
-  final case class LaneFamily(prep: Column => Column,
-      lane: (Column, Int) => Column, band: Seq[Column] => Column)
-
-  /** Default: xxhash64 salted by the lane index — fastest (codegen'd, no
-    * allocation), the production path. */
-  val XxLanes: LaneFamily = LaneFamily(
-    prep = identity,
-    lane = (s, i) => xxhash64(s, lit(i)),
-    band = hs => xxhash64(hs: _*))
-
+    * explode shingles to rows, hash each shingle once per lane (xxhash64
+    * salted by the lane index), take map-side partial MIN per lane in one
+    * hash aggregate (shuffles only `(doc_id, k longs)`, never text), then
+    * xxhash64 lane-groups into band keys. The per-row lambda form (one
+    * `array_min(transform(...))` per lane) inlines the shingle array into
+    * every lane's expression tree — k× recompute — so this aggregate form
+    * is what the candidate join uses. */
   private[graft] def bandedMinhash(docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, numHashes: Int, bands: Int,
-      fam: LaneFamily): DataFrame = {
+      shingleN: Int, numHashes: Int, bands: Int): DataFrame = {
     val rows = numHashes / bands
     // fanOutScan measured NEGATIVE here (r22, min-of-3/4 interleaved:
     // q63 +0.4..+0.5 s) — the shingle pass is cheap enough that the
@@ -85,41 +65,21 @@ object Dedup {
     // pay.
     val shing = docs.select(col(idCol).as("doc_id"),
       explode(graft.functions.ShingleOps.wordShinglesCol(col(textCol), shingleN)).as("s"))
-      .select(col("doc_id"), fam.prep(col("s")).as("ph"))
-    val lanes = (0 until numHashes).map(i => min(fam.lane(col("ph"), i)).as(s"h$i"))
+    val lanes = (0 until numHashes).map(i => min(xxhash64(col("s"), lit(i))).as(s"h$i"))
     val sig = shing.groupBy(col("doc_id")).agg(lanes.head, lanes.tail: _*)
     val bandCols = (0 until bands).map { b =>
       struct(lit(b).as("band"),
-        fam.band((b * rows until (b + 1) * rows).map(i => col(s"h$i"))).as("bh"))
+        xxhash64((b * rows until (b + 1) * rows).map(i => col(s"h$i")): _*).as("bh"))
     }
     sig.select(col("doc_id"), explode(array(bandCols: _*)).as("x"))
       .select(col("doc_id"), col("x.band"), col("x.bh"))
   }
 
-  /** LSH candidate pairs: band the signature, join on (band, bandHash).
-    * Returns (id_a, id_b) distinct with id_a < id_b. `numHashes` must be
-    * divisible by `bands`.
-    *
-    * Scale guard: buckets larger than `maxBucket` are dropped before the
-    * self-join. An oversized bucket means the band carries no discriminating
-    * information (near-identical boilerplate at corpus scale) and would make
-    * the join quadratic in the hottest key — the standard LSH skew control
-    * for 100 TB corpora. Dropped buckets are a recall trade-off documented
-    * at the call site, not silent: candidates within them are still found
-    * through their other (bands-1) bands unless ALL their bands are hot. */
-  def minhashCandidates(docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      maxBucket: Int = 1000, fam: LaneFamily = XxLanes): DataFrame =
-    candidatesFromBanded(
-      bandedMinhash(docs, idCol, textCol, shingleN, numHashes, bands, fam),
-      maxBucket)
-
   /** Oracle-portable MinHash+LSH candidates: per-doc lane minima come from
     * ONE native scalar pass ([[graft.functions.Md5MinhashLanes]] — shingle,
     * md5, windowed min, no token explode and NO signature shuffle at all),
     * and every hash is md5/substring/MIN — semantics a DuckDB oracle
-    * reproduces verbatim. [[minhashCandidates]] with [[XxLanes]] remains the
-    * faster production default; this is the correctness-witness twin. */
+    * reproduces verbatim. */
   def minhashCandidatesPortable(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
       maxBucket: Int = 1000): DataFrame =
@@ -283,8 +243,9 @@ object Dedup {
     * at 500k start around 5.8e6 per bucket, just above the floor. */
   private[graft] val MinRouteCandidates = 5e6
 
-  /** [[minhashCandidates]] with the bucket cap VALIDATED against a
-    * candidate-volume budget from the banded table's own bucket-size
+  /** xxhash64 banded MinHash candidates ([[bandedMinhash]]) with the
+    * bucket cap VALIDATED against a candidate-volume budget from the
+    * banded table's own bucket-size
     * rollup (r19, the round's accident-bucket lesson part 2): the r18
     * cap — 2× the autocap-derived "largest genuine family" — is only a
     * family estimate when the underlying count distribution is BIMODAL
@@ -306,7 +267,7 @@ object Dedup {
       idCol: String, textCol: String, shingleN: Int, numHashes: Int,
       bands: Int, familyCap: Int, label: String): DataFrame = {
     bandedPairs(bandedMinhash(docs, idCol, textCol, shingleN, numHashes,
-      bands, XxLanes), sizes => {
+      bands), sizes => {
       val rollup = countRollup(sizes, "bucket_n")
       val nDocs = rollup.map { case (m, nb) => m * nb }.sum / math.max(bands, 1)
       volCappedBucketCap(rollup, bands, familyCap, label,
@@ -350,51 +311,6 @@ object Dedup {
       f"candidates (${budget / math.max(nDocs, 1L)}%.1f cand/doc budget)"
     warn.fold(log.info(line))(w => log.warn(s"$line — $w"))
     eff
-  }
-
-  /** SimHash signatures: (id, simhash). */
-  def simhashSignatures(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(col(idCol),
-      HashFunctions.simhash(TextFunctions.tokens(TextFunctions.normalize(col(textCol))))
-        .as("simhash"))
-
-  /** SimHash near-dup pairs with Hamming distance ≤ maxHamming, banded on
-    * 4×16-bit chunks for sub-quadratic candidate generation. Buckets with
-    * more than `maxBucket` docs are dropped before the self-join — the
-    * same capped-recall contract as [[minhashCandidates]] (r14 review:
-    * this was the one candidate generator without a hot-bucket cap, and
-    * a corpus-hot chunk — template boilerplate voting the same 16 bits —
-    * makes the join quadratic in one key). Empty/whitespace docs are
-    * excluded up front: they all hash to the same signature, which alone
-    * would form exactly such a bucket. */
-  def simhashNearDups(docs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, maxBucket: Int = 1000): DataFrame = {
-    val sigs = simhashSignatures(
-        docs.filter(length(trim(col(textCol))) > 0), idCol, textCol)
-      .select(col(idCol).as("doc_id"), col("simhash"))
-    val banded = sigs.select(col("doc_id"), col("simhash"),
-      explode(array((0 until 4).map { b =>
-        struct(lit(b).as("band"),
-          shiftrightunsigned(col("simhash"), b * 16).bitwiseAND(lit(0xffffL)).as("chunk"))
-      }: _*)).as("x"))
-      .select(col("doc_id"), col("simhash"), col("x.band"), col("x.chunk"))
-    // cap via aggregate + semi-join, NOT a count window — the partial
-    // aggregate collapses a hot bucket map-side and the join stays
-    // splittable (the candidatesFromBanded shape). The signature pass is
-    // one native scalar per row, so recompute across the two consumers
-    // is the at-scale choice; no checkpoint dispatch needed.
-    val keep = banded.groupBy(col("band"), col("chunk"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") <= maxBucket && col("bucket_n") > 1)
-      .select(col("band"), col("chunk"))
-    val pruned = banded.join(keep, Seq("band", "chunk"))
-    val a = pruned.as("a"); val b = pruned.as("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.chunk") === col("b.chunk") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
   }
 
   /** Connected components over near-dup candidate pairs — the step after
@@ -922,7 +838,7 @@ object Dedup {
     * exceeds the warn threshold ([[WarnCandidatesPerDoc]] — recalibrated
     * to the measured pair-stage-dominates regime), the exact prefix join
     * is REPLACED by
-    * the banded-minhash candidate chain ([[minhashCandidates]], 16 lanes
+    * the banded-minhash candidate chain ([[bandedMinhash]], 16 lanes
     * / 8 bands of 2), feeding the IDENTICAL exact-Jaccard verify — same
     * output contract, same threshold, band-bounded candidate volume.
     * Recall through the route is probabilistic instead of cap-bounded: a
@@ -1498,7 +1414,7 @@ object Dedup {
 
   /** Oracle-portable twin of [[containmentRoutedUnion]] (the q261
     * correctness witness, same relationship as
-    * [[minhashCandidatesPortable]] to [[minhashCandidates]]): md5-lane
+    * [[minhashCandidatesPortable]] to [[minhashCandidatesVolCapped]]): md5-lane
     * banded candidates (every hash md5/substring/MIN — semantics a
     * DuckDB oracle reproduces verbatim) in BOTH directions, unioned
     * with the one-sided rarest-k candidates at an EXPLICIT dfreq cap

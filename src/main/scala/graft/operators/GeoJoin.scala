@@ -91,71 +91,47 @@ object GeoJoin {
       .drop("gk")
   }
 
+  /** Right sides up to this many points take [[knnBroadcast]]; larger ones
+    * take [[knnJoinBanded]]. */
+  private val BroadcastRightMax = 500000
+
   /** Exact k-nearest-neighbor join: for each left row, the k nearest right
     * rows by haversine distance (ties broken by `rightKey`), as
     * `(leftKey, knn_rank, rightKey, dist_m)`.
     *
-    * Plan selection mirrors Spark's own join strategy choice: when the right
-    * side has at most `broadcastRightMax` rows (the broadcast-hash-join
-    * regime) the whole join collapses to [[knnBroadcast]] — a shuffle-free
-    * per-row scan. Otherwise the large×large [[knnJoinBanded]] two-phase plan
-    * runs. Both produce bit-identical rows (GeoJoinSpec). */
+    * Plan selection mirrors Spark's own join strategy choice: one bounded
+    * collect of the right side's `(key, lat, lon)` both sizes and fetches
+    * it. When it returns at most [[BroadcastRightMax]] points (the
+    * broadcast-hash-join regime) they become [[knnBroadcast]]'s point set,
+    * a shuffle-free per-row scan. Otherwise the large×large
+    * [[knnJoinBanded]] two-phase plan runs. Both produce bit-identical rows
+    * (GeoJoinSpec). */
   def knnJoin(left: DataFrame, right: DataFrame, k: Int, radiusM: Double,
       leftKey: String, rightKey: String,
-      lat1: String, lon1: String, lat2: String, lon2: String,
-      broadcastRightMax: Long = 500000L): DataFrame =
-    if (rightIsSmall(right, broadcastRightMax))
-      knnBroadcast(left, right, k, leftKey, rightKey, lat1, lon1, lat2, lon2)
+      lat1: String, lon1: String, lat2: String, lon2: String): DataFrame = {
+    val pts = right.select(col(rightKey).cast("long"),
+        col(lat2).cast("double"), col(lon2).cast("double"))
+      .limit(BroadcastRightMax + 1).collect()
+    if (pts.length <= BroadcastRightMax)
+      knnBroadcast(left, pts, k, leftKey, rightKey, lat1, lon1)
     else
       knnJoinBanded(left, right, k, radiusM, leftKey, rightKey,
         lat1, lon1, lat2, lon2)
-
-  /** Memoized dispatch probe, keyed by the right side's analyzed-plan
-    * OBJECT: repeated kNN calls against the same DataFrame run ONE probe
-    * job, not one per call. Identity (not canonical-equality) keying means
-    * an equal-but-rebuilt plan re-probes — deliberately, because a rebuilt
-    * plan may see new data, and a stale "small" verdict would route a
-    * now-huge side into the broadcast path. Weak keys: the cache never
-    * pins a plan (or its LocalRelation rows) past the caller's own
-    * reference. The probe itself is bounded — limit(max+1).count() — so a
-    * huge right side never materializes just to compare sizes. The probe
-    * job deliberately runs OUTSIDE the map lock (a benign duplicate probe
-    * beats holding a lock across a Spark job). */
-  private val probeCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[AnyRef, Map[Long, Boolean]]())
-
-  private def rightIsSmall(right: DataFrame, max: Long): Boolean = {
-    val key: AnyRef = right.queryExecution.analyzed
-    Option(probeCache.get(key)).flatMap(_.get(max)).getOrElse {
-      // Saturate BEFORE incrementing: `max + 1` overflows at Long.MaxValue
-      // (the old min-then-narrow produced limit(0), which classified every
-      // side as small). A cap >= 2^31 - 1 cannot be probed with limit()
-      // anyway (Int rows), so such caps are documented as UNBOUNDED: the
-      // probe saturates at Int.MaxValue rows and a side at or beyond that
-      // is treated as broadcastable — callers wanting a real bound must
-      // pass one below 2^31 - 1.
-      val probeRows =
-        if (max >= Int.MaxValue - 1) Int.MaxValue else (max + 1).toInt
-      val small = right.limit(probeRows).count() <= max
-      probeCache.merge(key, Map(max -> small), (a, b) => a ++ b)
-      small
-    }
   }
 
-  /** Broadcast kNN: collect the (small) right side once, then each left row
-    * scans it with a k-slot insertion buffer inside codegen
-    * ([[graft.functions.KnnAgainstPoints]]). No shuffle, no candidate
-    * blow-up, no window — at 1000 executors this reads the left side exactly
-    * once and writes only k rows per left row. The right side is bounded by
-    * driver/executor memory exactly like a broadcast hash join's build side. */
-  def knnBroadcast(left: DataFrame, right: DataFrame, k: Int,
-      leftKey: String, rightKey: String,
-      lat1: String, lon1: String, lat2: String, lon2: String): DataFrame = {
+  /** Broadcast kNN against `pts`, the right side's `(key: Long, lat: Double,
+    * lon: Double)` rows: each left row scans them with a k-slot insertion
+    * buffer inside codegen ([[graft.functions.KnnAgainstPoints]]). No
+    * shuffle, no candidate blow-up, no window — at 1000 executors this reads
+    * the left side exactly once and writes only k rows per left row. The
+    * point set is bounded by driver/executor memory exactly like a
+    * broadcast hash join's build side. */
+  private[graft] def knnBroadcast(left: DataFrame,
+      pts: Array[org.apache.spark.sql.Row], k: Int,
+      leftKey: String, rightKey: String, lat1: String, lon1: String): DataFrame = {
     import org.apache.spark.sql.GraftBridge
     import org.apache.spark.sql.catalyst.expressions.Cast
     import org.apache.spark.sql.types.DoubleType
-    val pts = right.select(col(rightKey).cast("long"),
-      col(lat2).cast("double"), col(lon2).cast("double")).collect()
     val expr = graft.functions.KnnAgainstPoints(
       Cast(GraftBridge.expression(col(lat1)), DoubleType),
       Cast(GraftBridge.expression(col(lon1)), DoubleType),
@@ -167,37 +143,6 @@ object GeoJoin {
       .select(col(leftKey), posexplode(GraftBridge.column(expr)).as(Seq("pos", "nn")))
       .select(col(leftKey), (col("pos") + 1).cast("long").as("knn_rank"),
         col("nn.key").as(rightKey), col("nn.dist").as("dist_m"))
-  }
-
-  /** Plan-level form of [[knnBroadcast]]: a custom `LogicalPlan` lowered by
-    * [[graft.plans.KnnJoinStrategy]] to the [[graft.plans.KnnJoinExec]]
-    * physical operator — the full custom-operator ladder (guide case (c)),
-    * for when an operator outgrows an expression (custom partitioning,
-    * multi-row emission, physical state). Row-identical to [[knnBroadcast]]
-    * (GeoJoinSpec); the expression form stays the default because it lives
-    * inside whole-stage codegen. */
-  def knnBroadcastPlanned(left: DataFrame, right: DataFrame, k: Int,
-      leftKey: String, rightKey: String,
-      lat1: String, lon1: String, lat2: String, lon2: String): DataFrame = {
-    val spark = left.sparkSession
-    // guard against double registration: the full planner strategy list
-    // includes extension-injected strategies (GraftExtensions also adds it)
-    val planner = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.planner
-    if (!planner.strategies.contains(graft.plans.KnnJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.KnnJoinStrategy
-    val pts = right.select(col(rightKey).cast("long"),
-      col(lat2).cast("double"), col(lon2).cast("double")).collect()
-    val child = left.select(col(leftKey).cast("long"),
-      col(lat1).cast("double"), col(lon1).cast("double"))
-    val node = graft.plans.KnnJoinLogical(
-      child.queryExecution.analyzed,
-      pts.map(_.getLong(0)), pts.map(_.getDouble(1)), pts.map(_.getDouble(2)), k,
-      graft.plans.KnnJoinLogical.outputAttrs())
-    org.apache.spark.sql.GraftBridge.ofRows(spark, node)
-      .select(col("left_key").as(leftKey), col("knn_rank"),
-        col("right_key").as(rightKey), col("dist_m"))
   }
 
   /** Haversine distances never exceed half the great circle (~2.0015e7 m);
@@ -259,8 +204,8 @@ object GeoJoin {
     * to brute force (GeoJoinSpec): candidates at radius r are a superset of
     * those at any smaller radius, and the (dist, rightKey) ordering is
     * radius-independent. */
-  def knnJoinBanded(left: DataFrame, right: DataFrame, k: Int, radiusM: Double,
-      leftKey: String, rightKey: String,
+  private[graft] def knnJoinBanded(left: DataFrame, right: DataFrame, k: Int,
+      radiusM: Double, leftKey: String, rightKey: String,
       lat1: String, lon1: String, lat2: String, lon2: String): DataFrame = {
     var remaining = left
     var prevCkpt: DataFrame = null // superseded checkpoint, unpersisted below

@@ -7,9 +7,9 @@ import org.apache.spark.sql.types._
 /** Multimodal column plumbing (SURVEY north star): image/audio/video as
   * opaque `binary` columns with typed metadata, processed per-partition.
   *
-  * HEADER decode is REAL since r15: [[imageMeta]] parses PNG/JPEG/GIF
-  * container headers (format, width, height, channels) natively inside
-  * whole-stage codegen — dependency-free, null on malformed bytes (see
+  * HEADER decode is REAL since r15: [[graft.functions.ImageMeta]] parses
+  * PNG/JPEG/GIF container headers (format, width, height, channels)
+  * natively inside whole-stage codegen — dependency-free, null on malformed bytes (see
   * [[graft.functions.ImageHeaderOps]]; q251 pins it under the oracle).
   * That covers what a training-data pipeline filters and routes images by.
   * PIXEL decode (IDAT inflate, DCT) stays stubbed — the container ships no
@@ -20,13 +20,6 @@ import org.apache.spark.sql.types._
   * plan shape.
   */
 object Multimodal {
-
-  /** Real container-header decode: `struct(format, width, height,
-    * channels)` from PNG/JPEG/GIF bytes, null for malformed or non-image
-    * payloads. Codegen'd scalar — a dimension filter over billions of
-    * blobs runs at scan speed, no per-partition decoder setup needed. */
-  def imageMeta(payload: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    graft.functions.ImageMeta.column(payload)
 
   val decodedSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),

@@ -134,18 +134,6 @@ object Similarity {
       lit(0L), (acc, x) => acc + x)
   }
 
-  /** Brute-force cosine top-k of `vectors` against the single row of
-    * `queryVec` (a 1-row DataFrame with column `qe`). The query side is
-    * broadcast; ranking uses a unique tiebreak on id. */
-  def bruteForceTopK(vectors: DataFrame, idCol: String, vecCol: String,
-      queryVec: DataFrame, k: Int): DataFrame = {
-    val scored = vectors.crossJoin(broadcast(queryVec))
-      .select(col(idCol), cosine(col(vecCol), col("qe")).as("sim"))
-    // orderBy+limit → TakeOrderedAndProject (distributed per-partition
-    // heaps), never a single-partition window.
-    scored.orderBy(col("sim").desc, col(idCol)).limit(k)
-  }
-
   /** 16-bit random-hyperplane signature: bit i = sign(v · h_i) where
     * h_i[j] is a pseudo-random coefficient in [-1, 1] derived from
     * xxhash64(i, j). Deterministic, stateless, computed entirely
@@ -206,8 +194,7 @@ object Similarity {
     * shape: the corpus is clustered ONCE (sampled fit, map-side assignment),
     * stored partitioned by cell id — a probe then touches nProbe/nLists of
     * the data (partition pruning on the cell column), with recall tunable
-    * via nProbe. Approximate by construction; pair with
-    * [[bruteForceTopK]] when exactness is required. */
+    * via nProbe. Approximate by construction. */
   def ivfIndex(vectors: DataFrame, idCol: String, vecCol: String,
       nLists: Int, seed: Long = 42L, maxIter: Int = 20,
       fitSample: Double = 1.0): (org.apache.spark.ml.clustering.KMeansModel, DataFrame) = {

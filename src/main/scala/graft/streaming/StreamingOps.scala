@@ -98,25 +98,6 @@ object StreamingOps {
     scheme == "file"
   }
 
-  /** Watermarked tumbling-window aggregation; same code path works for both
-    * batch DataFrames and streaming DataFrames. */
-  def windowedEventAgg(events: DataFrame, windowDur: String,
-      watermarkDelay: String): DataFrame =
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), windowDur), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("total"))
-
-  /** Late-data-safe dedup on an id within the watermark horizon — streaming
-    * analogue of the reference's idempotent re-load guard
-    * (`HTGPIWASDE/__init__.py:124-134` delete-then-insert). */
-  def dedupWithinWatermark(events: DataFrame, watermarkDelay: String,
-      idCols: Seq[String]): DataFrame =
-    events.withWatermark("ts", watermarkDelay)
-      .dropDuplicates(idCols :+ "ts")
-
   /** Checkpointed incremental run — the streaming form of the reference's
     * watermark table (SURVEY §7.4 north star 5): each invocation processes
     * only files not yet recorded in the checkpoint's file-source log and
@@ -132,81 +113,6 @@ object StreamingOps {
       .outputMode("append")
       .format("parquet")
       .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Checkpointed incremental UPSERT — [[runIncremental]]'s append sink
-    * replaced by last-writer-wins key merge via `foreachBatch`: each
-    * micro-batch is reduced to one row per key (`seqCol` max, within-batch),
-    * then merged into the target parquet by rewriting it WITHOUT the
-    * incoming keys and appending the new versions — the streaming form of
-    * the reference's delete-then-insert idempotent re-load
-    * (`HTGPIWASDE/__init__.py:124-134`) and the batch
-    * `writeMonthOverwrite`. Re-running with the same checkpoint after new
-    * files land merges just the delta; replaying an already-seen key
-    * replaces, never duplicates.
-    *
-    * Scale: the rewrite is target ∖ batch-keys (one anti-join) + append —
-    * at lake scale the same merge keys to PARTITIONS via dynamic partition
-    * overwrite ([[graft.pipelines.WasdeTransforms.writeMonthOverwrite]]);
-    * this key-level variant is for unpartitioned targets. The atomic-swap
-    * caveat of Maintenance.compact applies to the rewrite step. */
-  def runUpsert(spark: SparkSession, inputDir: String,
-      schema: org.apache.spark.sql.types.StructType, checkpointDir: String,
-      targetDir: String, keyCols: Seq[String], seqCol: String): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    val q = spark.readStream.schema(schema).parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val keyed = batch.withColumn("_rn", row_number().over(
-            Window.partitionBy(keyCols.map(col): _*)
-              .orderBy(col(seqCol).desc)))
-          .filter(col("_rn") === 1).drop("_rn")
-        val tgt = new java.io.File(targetDir)
-        // seqCol ordering must hold ACROSS batches, not just within one:
-        // a late-landing file carrying an OLDER version of a key would
-        // otherwise anti-join away the target's newer row and install the
-        // stale one (r14 review). The winner is picked over target ∪ batch
-        // per key; at equal seq the batch row wins (idempotent replay
-        // replaces). Same one-exchange cost class as the old anti-join —
-        // both passes are keyed on the full target.
-        val merged =
-          if (!tgt.exists()) keyed
-          else spark.read.parquet(targetDir).withColumn("_src", lit(0))
-            .unionByName(keyed.withColumn("_src", lit(1)))
-            .withColumn("_rn", row_number().over(
-              Window.partitionBy(keyCols.map(col): _*)
-                .orderBy(col(seqCol).desc, col("_src").desc)))
-            .filter(col("_rn") === 1).drop("_rn", "_src")
-        // rewrite via a temp dir then swap — reading and overwriting the
-        // same path in one job would race the scan. Renames are CHECKED
-        // (r10, ADVICE): an unchecked renameTo that fails (leftover _old
-        // from a crashed run, cross-device move, file lock) would silently
-        // drop the batch merge and leave the stale target in place. A
-        // failure between the two renames rolls _old back so a target
-        // always exists.
-        val tmp = targetDir + "_tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        def mv(src: java.io.File, dst: java.io.File): Unit =
-          if (!src.renameTo(dst))
-            throw new java.io.IOException(s"upsert swap: rename $src -> $dst failed")
-        if (tgt.exists()) {
-          val old = new java.io.File(targetDir + "_old")
-          // a crashed run's leftover would block the swap
-          deleteRecursively(old.toPath)
-          mv(tgt, old)
-          try mv(new java.io.File(tmp), tgt)
-          catch { case e: Throwable =>
-            // half-completed swap: restore the previous target before failing
-            old.renameTo(tgt); throw e
-          }
-          deleteRecursively(old.toPath)
-        } else mv(new java.io.File(tmp), tgt)
-        ()
-      }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()

@@ -12,12 +12,6 @@ object GraftBridge {
     classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
-  /** Wrap a custom logical plan as a DataFrame (Dataset.ofRows is
-    * private[sql] in Spark 4). */
-  def ofRows(spark: SparkSession,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(
-      spark.asInstanceOf[classic.SparkSession], plan)
 
   /** The pieces of `spark.read.parquet`'s schema resolution that
     * `graft.Tables.schemaOf` repeats: the nullable relation schema, the
@@ -38,8 +32,4 @@ object GraftBridge {
   def artifactSessionUuid(spark: SparkSession): Option[String] =
     Option(spark.asInstanceOf[classic.SparkSession].artifactManager.state)
       .map(_.uuid)
-
-  /** The session's own UUID (`sessionUUID` is `private[sql]`). */
-  def sessionUuid(spark: SparkSession): String =
-    spark.asInstanceOf[classic.SparkSession].sessionUUID
 }

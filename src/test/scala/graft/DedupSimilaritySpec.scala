@@ -21,7 +21,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("fanOutScan sizes from the plan: a narrow single-leaf input spreads, " +
       "a streaming frame passes through") {
-    val dir = java.nio.file.Files.createTempDirectory("fanout").toString
+    val dir = SparkTestBase.tempDir("fanout").toString
     docs.repartition(1).write.mode("overwrite").parquet(dir)
     val scan = spark.read.parquet(dir)
     assert(Spread.scanPartitions(scan) == Some(1))
@@ -57,36 +57,11 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("minhash LSH finds the near-duplicate pair") {
-    val pairs = Dedup.minhashCandidates(docs, "doc_id", "text",
+    val pairs = Dedup.minhashCandidatesPortable(docs, "doc_id", "text",
       shingleN = 3, numHashes = 16, bands = 8)
       .as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)), s"expected (1,2) in $pairs")
     assert(!pairs.contains((1L, 4L)), "unrelated docs must not collide in all bands")
-  }
-
-  test("simhash near-dups finds the near pair at low hamming") {
-    val nd = Dedup.simhashNearDups(docs, "doc_id", "text", maxHamming = 8)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(nd.contains((1L, 2L)) || nd.contains((1L, 3L)), s"got $nd")
-  }
-
-  test("simhash near-dups: empty docs excluded, hot buckets capped") {
-    import spark.implicits._
-    // r14 review: every empty/whitespace doc hashes to ONE signature —
-    // without the filter they form a quadratic bucket (and meaningless
-    // pairs); without a cap a corpus-hot chunk does the same
-    val d = Seq((1L, "hello world foo bar baz"),
-      (2L, "hello world foo bar baz"),
-      (3L, "completely different text here now"),
-      (4L, "   "), (5L, "")).toDF("doc_id", "text")
-    val nd = Dedup.simhashNearDups(d, "doc_id", "text", maxHamming = 0)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(nd == Set((1L, 2L)), nd)
-    // cap 1: the (1,2) bucket has 2 docs > 1 → capped-recall contract
-    val capped = Dedup.simhashNearDups(d, "doc_id", "text",
-        maxHamming = 0, maxBucket = 1)
-      .select("id_a", "id_b").as[(Long, Long)].collect()
-    assert(capped.isEmpty, capped.toSeq)
   }
 
   test("ngram jaccard high for near-dups, low for unrelated") {
@@ -104,7 +79,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (2L, Array(0.0f, 1.0f, 0.0f)),
       (3L, Array(-1.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
     val q = vecs.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
-    val top = Similarity.bruteForceTopK(vecs, "vec_id", "embedding", q, 2)
+    val top = SpecOracles.bruteForceTopK(vecs, "vec_id", "embedding", q, 2)
       .as[(Long, Double)].collect()
     assert(top(0)._1 == 0L && math.abs(top(0)._2 - 1.0) < 1e-12)
     assert(top(1)._1 == 1L)
@@ -117,7 +92,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .select(col("embedding")).as[Seq[Float]].head().map(_.toDouble)
     val ivf = Similarity.ivfTopK(model, indexed, "vec_id", "embedding", qv,
       k = 10, nProbe = 4).select("vec_id").as[Long].collect().toSet
-    val brute = Similarity.bruteForceTopK(emb, "vec_id", "embedding",
+    val brute = SpecOracles.bruteForceTopK(emb, "vec_id", "embedding",
       emb.filter(col("vec_id") === 0).select(col("embedding").as("qe")), 10)
       .select("vec_id").as[Long].collect().toSet
     // query itself always found (its own cell is the nearest centroid)
@@ -571,7 +546,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // floor (ceil(0.5 × 2150) = 1075) admits the family (nd = 1050),
     // the forecast (~28 prefix toks × C(1050,2) ≈ 1.5e7 ≈ 7k/doc) trips
     // the threshold, and the routed chain's bucket cap is the SAME share
-    // floor — minhashCandidates' fixed 1000 default would have dropped
+    // floor — a fixed 1000-bucket cap would have dropped
     // the family's single 1050-member band buckets and zeroed its recall
     // in exactly the regime the route exists for.
     val fam = "orbit comet nebula pulsar quasar nova aurora eclipse " +

@@ -1,13 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.SkewnessAgg
 import graft.pipelines.WasdeTransforms
 import graft.serving.ModelScoring
 import graft.sources.HtmlTableReader
-import graft.streaming.StatefulSessionize
 
 class ExtensionsSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.session
@@ -30,22 +28,6 @@ class ExtensionsSpec extends AnyFunSuite {
     val const = Seq(5.0, 5.0, 5.0).toDF("v")
       .agg(SkewnessAgg.column(col("v"))).as[Double].head()
     assert(const.isNaN) // zero variance
-  }
-
-  test("stateful sessionize (flatMapGroupsWithState) matches batch sessions") {
-    import StatefulSessionize._
-    // deterministic fixture: two users, gaps > 300s split sessions
-    val evs = Seq(
-      Event(1L, 1L, 0L, 1.0), Event(1L, 2L, 100000000L, 2.0), // +100 s
-      Event(1L, 3L, 500000000L, 3.0), // +400 s → new session
-      Event(2L, 4L, 0L, 5.0)).toDS()
-    // batch mode: flatMapGroupsWithState over a static Dataset works in Append
-    val sessions = StatefulSessionize.sessionize(evs, 300L, OutputMode.Append())
-      .collect().toSeq
-    // closed sessions only (the still-open last session per user stays in state,
-    // but batch execution has no state store carry-over → emitted via iterator
-    // end; here only user 1's first session is provably closed)
-    assert(sessions.contains(Session(1L, 0L, 100000000L, 2L, 3.0)))
   }
 
   test("BoundedTopKAgg equals window row_number top-k") {
@@ -192,7 +174,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("writeMonthOverwrite replaces only the targeted partition") {
-    val dir = java.nio.file.Files.createTempDirectory("wasde-out").toString
+    val dir = SparkTestBase.tempDir("wasde-out").toString
     val v1 = Seq(("2026-01", "a", 1.0), ("2026-02", "b", 2.0)).toDF("mes", "geo", "v")
     WasdeTransforms.writeMonthOverwrite(v1, dir, "mes")
     val v2 = Seq(("2026-02", "b", 99.0)).toDF("mes", "geo", "v")

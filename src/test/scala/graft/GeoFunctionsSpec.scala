@@ -24,14 +24,16 @@ class GeoFunctionsSpec extends AnyFunSuite {
   }
 
   test("native HaversineDistance expression agrees with composed Column form") {
-    GeoFunctions.register(spark)
-    val df = pairs.toDF("lat1", "lon1", "lat2", "lon2", "exp")
-    val both = df.select(
-      GeoFunctions.haversineMeters(col("lat1"), col("lon1"), col("lat2"), col("lon2"))
-        .as("composed"),
-      expr("haversine_m(lat1, lon1, lat2, lon2)").as("native"))
-    both.as[(Double, Double)].collect().foreach { case (c, n) =>
-      assert(math.abs(c - n) < 1e-6, s"composed=$c native=$n")
+    SparkTestBase.withExtensions { s =>
+      import s.implicits._
+      val df = pairs.toDF("lat1", "lon1", "lat2", "lon2", "exp")
+      val both = df.select(
+        GeoFunctions.haversineMeters(col("lat1"), col("lon1"), col("lat2"), col("lon2"))
+          .as("composed"),
+        expr("haversine_m(lat1, lon1, lat2, lon2)").as("native"))
+      both.as[(Double, Double)].collect().foreach { case (c, n) =>
+        assert(math.abs(c - n) < 1e-6, s"composed=$c native=$n")
+      }
     }
   }
 

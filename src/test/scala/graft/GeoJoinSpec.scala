@@ -111,8 +111,9 @@ class GeoJoinSpec extends AnyFunSuite {
       (i.toLong, ((i * 53) % 17000) / 100.0 - 85, ((i * 71) % 35000) / 100.0 - 175))
       .toDF("rid", "s_lat", "s_lon")
 
-    val bc = GeoJoin.knnBroadcast(left, right, 3,
-      "lid", "rid", "lat", "lon", "s_lat", "s_lon")
+    // right's (rid, s_lat, s_lon) rows are the point set as they stand
+    val bc = GeoJoin.knnBroadcast(left, right.collect(), 3,
+      "lid", "rid", "lat", "lon")
       .select("lid", "knn_rank", "rid", "dist_m")
       .as[(Long, Long, Long, Double)].collect().toSet
     val brute = {
@@ -133,36 +134,5 @@ class GeoJoinSpec extends AnyFunSuite {
       .select("lid", "knn_rank", "rid", "dist_m")
       .as[(Long, Long, Long, Double)].collect().toSet
     assert(viaDispatch == brute)
-
-    // a broadcastRightMax past 2^31 must clamp, not wrap, in the size
-    // probe (the old (max+1).toInt gave limit() a negative — or worse, a
-    // small positive that misrouted a huge side into the broadcast path)
-    val viaHugeMax = GeoJoin.knnJoin(left, right, 3, 1000000.0,
-      "lid", "rid", "lat", "lon", "s_lat", "s_lon",
-      broadcastRightMax = 5000000000L)
-      .select("lid", "knn_rank", "rid", "dist_m")
-      .as[(Long, Long, Long, Double)].collect().toSet
-    assert(viaHugeMax == brute)
-  }
-
-  test("knnBroadcastPlanned (custom LogicalPlan+Strategy+SparkPlan) row-identical") {
-    val left = (1 to 80).map(i =>
-      (i.toLong, ((i * 37) % 17000) / 100.0 - 85, ((i * 91) % 35000) / 100.0 - 175))
-      .toDF("lid", "lat", "lon")
-    val right = (1 to 15).map(i =>
-      (i.toLong, ((i * 53) % 17000) / 100.0 - 85, ((i * 71) % 35000) / 100.0 - 175))
-      .toDF("rid", "s_lat", "s_lon")
-    val planned = GeoJoin.knnBroadcastPlanned(left, right, 3,
-      "lid", "rid", "lat", "lon", "s_lat", "s_lon")
-    // physical plan actually contains the custom exec node
-    assert(planned.queryExecution.executedPlan.toString.contains("KnnJoin"))
-    val a = planned.select("lid", "knn_rank", "rid", "dist_m")
-      .as[(Long, Long, Long, Double)].collect().toSet
-    val b = GeoJoin.knnBroadcast(left, right, 3,
-      "lid", "rid", "lat", "lon", "s_lat", "s_lon")
-      .select("lid", "knn_rank", "rid", "dist_m")
-      .as[(Long, Long, Long, Double)].collect().toSet
-    assert(a == b)
-    assert(a.size == 80 * 3)
   }
 }

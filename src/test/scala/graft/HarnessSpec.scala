@@ -12,9 +12,9 @@ import graft.operators.Overlap
 
 /** The run harness around the queries: the one session policy, the
   * query/oracle contract, the bench's retest-reference resolution,
-  * `Overlap.runAll`'s failure handling, and the censuses of main-code
-  * knobs, session artifacts, schema-less parquet reads, cap decisions and
-  * scratch directories. */
+  * `Overlap.runAll`'s failure handling, the censuses of main-code
+  * reachability, knobs, session artifacts, schema-less parquet reads, cap
+  * decisions and scratch directories, and the specs' temp-dir census. */
 class HarnessSpec extends AnyFunSuite with TimeLimits {
   implicit val signaler: Signaler = ThreadSignaler
 
@@ -27,11 +27,13 @@ class HarnessSpec extends AnyFunSuite with TimeLimits {
   private val comments = """(?s)/\*.*?\*/|//[^\n]*""".r
   private val defName = """\bdef\s+(\w+)""".r
   private val defining = """\b(?:def|val)\s+$""".r
+  /** The main-code sources with their comments stripped. */
+  private lazy val stripped =
+    files.map(f => f -> comments.replaceAllIn(Files.readString(f), ""))
 
   /** Each use of `name` in main code that is not its definition, named by
     * the file and the method it sits in. */
-  private def uses(name: String): Seq[String] = files.flatMap { f =>
-    val src = comments.replaceAllIn(Files.readString(f), "")
+  private def uses(name: String): Seq[String] = stripped.flatMap { case (f, src) =>
     s"\\b$name\\b".r.findAllMatchIn(src).map(_.start)
       .filterNot(i =>
         defining.findFirstIn(src.substring(math.max(0, i - 16), i)).isDefined)
@@ -80,7 +82,7 @@ class HarnessSpec extends AnyFunSuite with TimeLimits {
   }
 
   test("bench reference: the newest round artifact is picked by round number") {
-    val dir = Files.createTempDirectory("bench-ref").toFile
+    val dir = SparkTestBase.tempDir("bench-ref").toFile
     def touch(name: String, mtime: Long): java.io.File = {
       val f = new java.io.File(dir, name)
       Files.writeString(f.toPath, "{}")
@@ -129,6 +131,102 @@ class HarnessSpec extends AnyFunSuite with TimeLimits {
     assert(thrown eq boom)
     // the still-running sibling was cancelled, not left behind
     assert(interrupted.await(10, TimeUnit.SECONDS))
+  }
+
+  /** Each member `def` of `src`, as (name, the modifiers before it on its
+    * line): a def that sits directly in an object, class or trait body, not
+    * a local def inside a method. A brace opens such a body when the text
+    * since the previous brace or `;` names a template, and after that name
+    * has no `new` (an anonymous class) and no `=` outside parentheses (a
+    * method or value body). */
+  private def memberDefs(src: String): Seq[(String, String)] = {
+    val template = """\b(?:object|class|trait)\b""".r
+    val nested = """\([^()]*\)|\[[^\[\]]*\]""".r
+    def opensTemplate(head: String): Boolean =
+      template.findAllMatchIn(head).toSeq.lastOption.exists { m =>
+        var after = head.substring(m.end)
+        var before = ""
+        while (after != before) { before = after; after = nested.replaceAllIn(after, "") }
+        !"""\bnew\b|=(?!>)""".r.findFirstIn(after).isDefined
+      }
+    val defAt = defName.findAllMatchIn(src).map(m => m.start -> m.group(1)).toMap
+    val inTemplate = scala.collection.mutable.Stack.empty[Boolean]
+    var stmt = 0
+    src.indices.flatMap { i =>
+      val found = defAt.get(i).filter(_ => inTemplate.headOption.forall(identity))
+        .map(_ -> src.substring(src.lastIndexOf('\n', i) + 1, i))
+      src(i) match {
+        case '{' => inTemplate.push(opensTemplate(src.substring(stmt, i))); stmt = i + 1
+        case '}' => if (inTemplate.nonEmpty) inTemplate.pop(); stmt = i + 1
+        case ';' => stmt = i + 1
+        case _ =>
+      }
+      found
+    }
+  }
+
+  /** Every `main(args)` is reached from the JVM; every other public member
+    * def must be reached from main code or be listed here with its reason.
+    * The list is the reference functions COVERAGE.md maps that no contract
+    * query calls: each reproduces one reference entry point on its own. */
+  private val referenceMapped = Map(
+    "MarketPipelines.scala: yahoo" -> "HTGPIYAHOO price load",
+    "MarketPipelines.scala: agricensus" -> "HTGPIAGRICENSUS feed (COVERAGE S1)",
+    "MarketPipelines.scala: snp500" -> "HTGPISNP500 chart JSON (COVERAGE S7)",
+    "MarketPipelines.scala: cftc" -> "HTGPICFT futures report (COVERAGE S5)",
+    "InflationPipeline.scala: incremental" ->
+      "HTGPIINFLATUS watermark + stamp step (COVERAGE SO2)",
+    "SiteScoringPipeline.scala: preparePois" -> "PGSITE POI table prep",
+    "SiteScoringPipeline.scala: featureVector" ->
+      "PGSITE pivoted feature vector (COVERAGE P6)",
+    "SiteScoringPipeline.scala: globalCounts" -> "PGSITE global POI counts",
+    "SiteScoringPipeline.scala: closePoints" ->
+      "PGSITE/HTIPNEXSITE top-3 close points",
+    "SiteScoringPipeline.scala: closePointsChain" ->
+      "HTIPNEXSITE close_points chain mapping",
+    "SiteScoringPipeline.scala: assembleResponse" ->
+      "PGSITE JSON response (COVERAGE S14)",
+    "JdbcIngest.scala: readWatermarks" -> "JDBC watermark read (COVERAGE S9)",
+    "JdbcIngest.scala: readTable" -> "JDBC table scan (COVERAGE S9)",
+    "JdbcIngest.scala: readPartitioned" -> "JDBC parallel range scan (COVERAGE S9)",
+    "Multimodal.scala: readBinaryFiles" -> "blob get (COVERAGE S10)",
+    "XlsReader.scala: sheetNames" -> "xls workbook sheet list (COVERAGE S6)",
+    "XlsxReader.scala: sheetNames" -> "xlsx workbook sheet list (COVERAGE S6)")
+
+  test("reachability census: every public main-code method is reached from " +
+      "main code or maps a reference function") {
+    assert(files.size > 10, "src/main/scala not found from the working dir")
+    val unreached = stripped.flatMap { case (f, src) =>
+      memberDefs(src).collect {
+        case (name, mods) if name != "main" &&
+            !"""\boverride\b|\bprotected\b|\bprivate\b(?!\[)""".r
+              .findFirstIn(mods).isDefined =>
+          s"${f.getFileName}: $name"
+      }.filter { site =>
+        val name = site.substring(site.indexOf(": ") + 2)
+        uses(name).forall(_.endsWith(s": $name"))
+      }
+    }.distinct
+    assert(referenceMapped.keySet.forall(unreached.contains),
+      "a listed reference function gained a main-code caller or is gone: " +
+        (referenceMapped.keySet -- unreached))
+    assert(unreached.filterNot(referenceMapped.contains).isEmpty,
+      "a public method only specs reach; delete it or move it to test scope")
+  }
+
+  test("temp-dir census: specs take temp directories from one helper") {
+    import scala.jdk.CollectionConverters._
+    val specs = Files.walk(java.nio.file.Paths.get("src/test/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val sites = specs.flatMap { f =>
+      val src = comments.replaceAllIn(Files.readString(f), "")
+      """\bcreateTemp(?:Directory|File)\b""".r.findAllMatchIn(src)
+        .filterNot(m => src.substring(math.max(0, m.start - 1), m.start) == "\"")
+        .map(_ => f.getFileName.toString)
+    }
+    // SparkTestBase.tempDir: one per-run parent, removed at JVM exit
+    assert(sites.distinct == Seq("SparkTestBase.scala"),
+      "a spec makes its own temp dir")
   }
 
   test("knob census: main code reads no graft.* system property and no " +
@@ -185,8 +283,6 @@ class HarnessSpec extends AnyFunSuite with TimeLimits {
       "MaintenanceQueries.scala: s.read.parquet(dir)",
       "MaintenanceQueries.scala: fp(s.read.parquet(s\"$tmp/p\"), \"parquet\")",
       "StreamingQueries.scala: s.read.parquet(outDir.toString)",
-      "StreamingOps.scala: else spark.read.parquet(targetDir)" +
-        ".withColumn(\"_src\", lit(0))",
       "Maintenance.scala: spark.read.parquet(dir).repartition(nOut)",
       "Verify.scala: val df = spark.read.parquet(s\"$outDir/$name\")")
     assert(allowed.forall(reads.contains), "an allowed site is gone or moved")

@@ -83,7 +83,7 @@ class ImageHeaderSpec extends AnyFunSuite {
       (3L, png(8, 8, 0, crcXor = 1)),
       (4L, null.asInstanceOf[Array[Byte]]))
     val out = rows.toDF("id", "payload")
-      .select(col("id"), graft.operators.Multimodal.imageMeta(col("payload")).as("m"))
+      .select(col("id"), graft.functions.ImageMeta.column(col("payload")).as("m"))
       .select(col("id"), col("m.format"), col("m.width"), col("m.height"),
         col("m.channels"))
       .collect().map(r => (r.getLong(0),
@@ -97,7 +97,7 @@ class ImageHeaderSpec extends AnyFunSuite {
     // dimension filter over mixed blobs — the 100 TB routing shape:
     // stays a codegen'd scan+filter, bad rows drop out as nulls
     val kept = rows.toDF("id", "payload")
-      .withColumn("m", graft.operators.Multimodal.imageMeta(col("payload")))
+      .withColumn("m", graft.functions.ImageMeta.column(col("payload")))
       .filter(col("m.width") >= 100)
       .select("id").as[Long].collect().toSeq
     assert(kept === Seq(1L))

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.Fixtures._
+import graft.SpecOracles.ebmlFloat4
 import graft.functions.MediaHeaderOps
 
 /** [[graft.functions.MediaMeta]] / [[MediaHeaderOps]]: WAV/RIFF + ISO BMFF

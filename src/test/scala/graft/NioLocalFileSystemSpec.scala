@@ -31,7 +31,7 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
   /** mkdirs + create through `fs` under a fresh dir; each created path
     * (relative) with its permission string and the bytes read back. */
   private def layout(fs: FileSystem): (Seq[(String, String)], Seq[Byte]) = {
-    val root = Files.createTempDirectory("graft-nio-fs")
+    val root = SparkTestBase.tempDir("graft-nio-fs")
     try {
       val base = new Path(root.toUri)
       assert(fs.mkdirs(new Path(base, "d/e")))
@@ -59,7 +59,7 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
 
   test("setPermission: the sticky bit and a set-group-ID directory take " +
       "Hadoop's path, FsCreateModes sets its masked bits") {
-    val root = Files.createTempDirectory("graft-nio-sticky")
+    val root = SparkTestBase.tempDir("graft-nio-sticky")
     def mode(p: NioPath): Int =
       Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & Integer.parseInt("7777", 8)
     try {
@@ -96,7 +96,7 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
     // FileSystemBasedCheckpointFileManager renames with overwriteIfPossible
     // and relies on rename(2) replacing the target
     val fs = fileSystem(new NioLocalFileSystem, "022")
-    val root = Files.createTempDirectory("graft-nio-rename")
+    val root = SparkTestBase.tempDir("graft-nio-rename")
     try {
       val base = new Path(root.toUri)
       for ((name, body) <- Seq("src" -> "new", "dst" -> "old")) {

@@ -435,9 +435,9 @@ class ScaleSpec extends AnyFunSuite {
     // round-trip + adjacency at random positions across the full curve
     (0 until 2000).foreach { _ =>
       val d = (rnd.nextLong() & Long.MaxValue) % (65536L * 65536L - 1)
-      val (x, y) = HilbertOps.d2xy16(d)
+      val (x, y) = SpecOracles.d2xy16(d)
       assert(HilbertOps.xy2d16(x, y) == d)
-      val (x2, y2) = HilbertOps.d2xy16(d + 1)
+      val (x2, y2) = SpecOracles.d2xy16(d + 1)
       // the Hilbert walk moves exactly one grid cell per step — the
       // locality property Z-order lacks at power-of-two boundaries
       assert(math.abs(x2 - x) + math.abs(y2 - y) == 1,
@@ -1101,7 +1101,7 @@ class ScaleSpec extends AnyFunSuite {
 
   test("compact rewrites a small-file directory to the target sizing, losslessly") {
     import spark.implicits._
-    val dirPath = java.nio.file.Files.createTempDirectory("compact")
+    val dirPath = SparkTestBase.tempDir("compact")
     val dir = dirPath.resolve("t").toString
     try {
       // 64 tiny files — the accretion pattern of repeated incremental loads
@@ -1151,7 +1151,7 @@ class ScaleSpec extends AnyFunSuite {
     val o = raw.select(col("o_orderkey"), col("o_custkey"), col("day"),
       Transforms.zorder16(scale16(col("o_custkey"), ckMin, ckMax),
         scale16(col("day"), dMin, dMax)).as("z"))
-    val dirPath = java.nio.file.Files.createTempDirectory("zord")
+    val dirPath = SparkTestBase.tempDir("zord")
     val dir = dirPath.toString
     val perFile = try {
       o.repartitionByRange(8, col("z")).write.mode("overwrite").parquet(dir)
@@ -1189,7 +1189,7 @@ class ScaleSpec extends AnyFunSuite {
     val o = raw.select(col("o_orderkey"), col("o_custkey"), col("day"),
       Transforms.zorder16(scale16(col("o_custkey"), ckMin, ckMax),
         scale16(col("day"), dMin, dMax)).as("z"))
-    val dirPath = java.nio.file.Files.createTempDirectory("zprune")
+    val dirPath = SparkTestBase.tempDir("zprune")
     try {
       val nFiles = 16
       val zDir = dirPath.resolve("zord").toString

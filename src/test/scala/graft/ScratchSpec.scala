@@ -44,7 +44,7 @@ class ScratchSpec extends AnyFunSuite {
   }
 
   test("each (tag, dataset) owns one directory under the process's parent") {
-    val second = Files.createTempDirectory("graft-scratch-corpus")
+    val second = SparkTestBase.tempDir("graft-scratch-corpus")
     try {
       Files.list(Paths.get(sf)).forEach(f =>
         Files.copy(f, second.resolve(f.getFileName)))

@@ -11,7 +11,7 @@ class SourcesSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("FixedWidthReader skips header lines and slices columns") {
-    val dir = Files.createTempDirectory("fw").toFile
+    val dir = SparkTestBase.tempDir("fw").toFile
     val f = new java.io.File(dir, "enso.for")
     // ENSO-like: 4 header lines then fixed-width rows (widths 10,5,4)
     val lines = Seq(
@@ -27,7 +27,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("binaryFile source + chunk sampling") {
-    val dir = Files.createTempDirectory("bin").toFile
+    val dir = SparkTestBase.tempDir("bin").toFile
     Files.write(new java.io.File(dir, "a.bin").toPath, Array.fill[Byte](10)(1))
     Files.write(new java.io.File(dir, "b.bin").toPath, Array.fill[Byte](3)(2))
     val df = Multimodal.readBinaryFiles(spark, dir.getAbsolutePath)

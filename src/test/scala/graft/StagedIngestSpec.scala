@@ -12,7 +12,7 @@ class StagedIngestSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("watermark-bounded fetch plan + staged read + relational re-filter") {
-    val srcDir = Files.createTempDirectory("upstream")
+    val srcDir = SparkTestBase.tempDir("upstream")
     // upstream over-delivers: includes rows at/before the watermark
     Files.write(srcDir.resolve("AAA.csv"),
       "Symbol,Date,Close\nAAA,2026-01-02,10.0\nAAA,2026-01-03,11.0\nAAA,2026-01-04,12.0\n".getBytes)
@@ -30,7 +30,7 @@ class StagedIngestSpec extends AnyFunSuite {
       FetchSpec("BBB", LocalDate.of(2026, 1, 4), today)))
 
     val fetcher = new LocalFileFetcher(spec => srcDir.resolve(s"${spec.entity}.csv"))
-    val staging = Files.createTempDirectory("staging").toString
+    val staging = SparkTestBase.tempDir("staging").toString
     val out = StagedIngest.ingest(spark, fetcher, plan, staging,
       "Symbol STRING, Date DATE, Close DOUBLE", wm, "Symbol", "Date")
 
@@ -50,7 +50,7 @@ class StagedIngestSpec extends AnyFunSuite {
   }
 
   test("date-partitioned layout prunes partitions at scan time") {
-    val dir = Files.createTempDirectory("parts").toString
+    val dir = SparkTestBase.tempDir("parts").toString
     Tables.events(spark, "/root/testdata/sf0.001")
       .withColumn("day", to_date(col("ts")))
       .write.mode("overwrite").partitionBy("day").parquet(dir)

@@ -10,12 +10,18 @@ class StreamingSpec extends AnyFunSuite {
   val sfDir = "/root/testdata/sf0.001"
 
   test("AvailableNow streaming windowed agg matches batch result") {
+    // the same watermarked tumbling-window aggregate on both inputs
+    def windowedAgg(events: org.apache.spark.sql.DataFrame) =
+      events.withWatermark("ts", "10 minutes")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
+        .select(col("window.start").as("window_start"), col("event_type"),
+          col("n"), col("total"))
     val streamed = StreamingOps.runAvailableNow(spark,
       s"$sfDir/events.parquet", "stream_agg", outputMode = "complete")(
-      df => StreamingOps.windowedEventAgg(df, "1 hour", "10 minutes"))
+      windowedAgg)
 
-    val batch = StreamingOps.windowedEventAgg(
-      Tables.events(spark, sfDir), "1 hour", "10 minutes")
+    val batch = windowedAgg(Tables.events(spark, sfDir))
 
     val s = streamed.orderBy("window_start", "event_type").collect().toSeq
     val b = batch.orderBy("window_start", "event_type").collect().toSeq
@@ -76,7 +82,7 @@ class StreamingSpec extends AnyFunSuite {
     // trailing no-data batch. The q257 DuckDB oracle encodes <=, so this
     // exact-boundary pin is what licenses it.
     val H = 1705363200000000L // 2024-01-16 00:00:00 UTC, micros
-    val tmp = java.nio.file.Files.createTempDirectory("evb").toString
+    val tmp = SparkTestBase.tempDir("evb").toString
     Seq(H - 1800L * 1000000, // [H-1h, H) window
       H + 2220L * 1000000, // H + 37 min exactly -> wm1 = H
       H + 86400L * 1000000 // next day -> phase B
@@ -160,7 +166,7 @@ class StreamingSpec extends AnyFunSuite {
       (15L, "view", T - h - ms + 1), (16L, "click", T - ms + 1),
       (7L, "view", T + 2 * h), (8L, "click", T + 2 * h), // wm clocks
       (9L, "view", T + 10 * h), (10L, "click", T + 10 * h)) // phase B
-    val tmp = java.nio.file.Files.createTempDirectory("jevb").toString
+    val tmp = SparkTestBase.tempDir("jevb").toString
     rows.toDF("event_id", "event_type", "us")
       .select(col("event_id"), concat(lit("u"), col("event_id"))
           .as("user_id"),
@@ -257,54 +263,11 @@ class StreamingSpec extends AnyFunSuite {
     assert(e.getMessage.contains("single-batch"), e.getMessage)
   }
 
-  test("streaming upsert: replayed keys replace, new keys append, within-batch last-writer wins") {
-    import java.nio.file.Files
-    val in = Files.createTempDirectory("ups-in").toString
-    val ckpt = Files.createTempDirectory("ups-ckpt").toString
-    val out = Files.createTempDirectory("ups-out").toString + "/tgt"
-    import spark.implicits._
-
-    // within-batch duplicate for key 2: seq 5 must win over seq 4
-    Seq((1L, 1L, "a"), (2L, 4L, "old"), (2L, 5L, "b"))
-      .toDF("id", "seq", "payload").coalesce(1)
-      .write.mode("append").parquet(in)
-    val schema = spark.read.parquet(in).schema
-    StreamingOps.runUpsert(spark, in, schema, ckpt, out,
-      keyCols = Seq("id"), seqCol = "seq")
-    def state() = spark.read.parquet(out)
-      .select($"id", $"seq", $"payload").as[(Long, Long, String)]
-      .collect().toSet
-    assert(state() == Set((1L, 1L, "a"), (2L, 5L, "b")))
-
-    // second batch: key 2 replayed with a newer version, key 3 new
-    Seq((2L, 9L, "b2"), (3L, 1L, "c"))
-      .toDF("id", "seq", "payload").coalesce(1)
-      .write.mode("append").parquet(in)
-    StreamingOps.runUpsert(spark, in, schema, ckpt, out,
-      keyCols = Seq("id"), seqCol = "seq")
-    assert(state() == Set((1L, 1L, "a"), (2L, 9L, "b2"), (3L, 1L, "c")))
-
-    // re-run with no new input → unchanged (idempotent)
-    StreamingOps.runUpsert(spark, in, schema, ckpt, out,
-      keyCols = Seq("id"), seqCol = "seq")
-    assert(state() == Set((1L, 1L, "a"), (2L, 9L, "b2"), (3L, 1L, "c")))
-
-    // a late-landing file carrying an OLDER version of key 2 must not
-    // clobber the target's newer row (r14 review: seqCol ordering holds
-    // ACROSS batches, not just within one)
-    Seq((2L, 1L, "stale"))
-      .toDF("id", "seq", "payload").coalesce(1)
-      .write.mode("append").parquet(in)
-    StreamingOps.runUpsert(spark, in, schema, ckpt, out,
-      keyCols = Seq("id"), seqCol = "seq")
-    assert(state() == Set((1L, 1L, "a"), (2L, 9L, "b2"), (3L, 1L, "c")))
-  }
-
   test("checkpointed incremental runs process only new files") {
     import java.nio.file.Files
-    val in = Files.createTempDirectory("inc-in").toString
-    val ckpt = Files.createTempDirectory("inc-ckpt").toString
-    val out = Files.createTempDirectory("inc-out").toString
+    val in = SparkTestBase.tempDir("inc-in").toString
+    val ckpt = SparkTestBase.tempDir("inc-ckpt").toString
+    val out = SparkTestBase.tempDir("inc-out").toString
     import spark.implicits._
 
     val batch1 = Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v")
@@ -332,54 +295,12 @@ class StreamingSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("stateful sessionize agrees with the batch window sessionization") {
-    import graft.streaming.StatefulSessionize
-    import graft.streaming.StatefulSessionize.Event
-    import spark.implicits._
-    val ev = Tables.events(spark, sfDir)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("tsMicros"),
-        col("value"))
-      .as[Event]
-    // batch (q35-style) sessions: lag + running-sum flags, 300 s gap
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("tsMicros"), col("event_id"))
-    val batchSessions = ev.toDF()
-      .withColumn("prev", lag(col("tsMicros"), 1).over(w))
-      .withColumn("flag", when(col("prev").isNull ||
-        col("tsMicros") - col("prev") > 300000000L, 1).otherwise(0))
-      .withColumn("sid", sum(col("flag")).over(
-        w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-      .groupBy("user_id", "sid")
-      .agg(count(lit(1)).as("n"), max(col("tsMicros")).as("endT"))
-    val nBatch = batchSessions.count()
-    val nUsers = batchSessions.select("user_id").distinct().count()
-
-    // stateful emits only CLOSED sessions: per user the final session stays
-    // open, so counts differ by exactly one session per user
-    val stateful = StatefulSessionize.sessionize(ev, 300L).collect()
-    assert(stateful.length == nBatch - nUsers,
-      s"stateful=${stateful.length} batch=$nBatch users=$nUsers")
-    // and the closed sessions' (user, n_events) multiset matches the batch
-    // sessions minus each user's last
-    val batchMinusLast = batchSessions
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))
-          .orderBy(col("endT").desc)))
-      .filter(col("rk") > 1)
-      .select(col("user_id"), col("n")).as[(Long, Long)].collect()
-      .groupBy(identity).view.mapValues(_.length).toMap
-    val statefulCounts = stateful.map(s => (s.user_id, s.n_events))
-      .groupBy(identity).view.mapValues(_.length).toMap
-    assert(statefulCounts == batchMinusLast)
-  }
-
   test("streaming dedup within watermark drops exact repeats") {
     val dedup = StreamingOps.runAvailableNow(spark,
       s"$sfDir/events.parquet", "stream_dedup")(
-      df => StreamingOps.dedupWithinWatermark(
-        df.select(col("ts"), col("event_id")).unionAll(
-          df.select(col("ts"), col("event_id"))), // duplicate the feed
-        "1 hour", Seq("event_id")))
+      df => df.select(col("ts"), col("event_id")).unionAll(
+          df.select(col("ts"), col("event_id"))) // duplicate the feed
+        .withWatermark("ts", "1 hour").dropDuplicates("event_id", "ts"))
     val n = dedup.count()
     val expected = Tables.events(spark, sfDir).count()
     assert(n == expected, s"got $n expected $expected")
@@ -436,35 +357,6 @@ class StreamingSpec extends AnyFunSuite {
     val got = StreamingDedup.dedupStream(d, "doc_id", "text")
       .collect().map(v => v.doc_id -> ((v.keeper, v.is_dup))).toMap
     assert(got == Map(1L -> ((1L, false)), 4L -> ((1L, true))), got)
-  }
-
-  test("stateful sessionize: a late cross-batch event absorbs without " +
-      "regressing the session frontier") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StatefulSessionize
-    import graft.streaming.StatefulSessionize.{Event, Session}
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    def us(s: Long) = s * 1000000L
-    val in = MemoryStream[Event]
-    val q = StatefulSessionize.sessionize(in.toDS(), gapSeconds = 60L)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("slate").start()
-    in.addData(Event(1L, 10L, us(100), 1.0))
-    q.processAllAvailable()
-    // late event (t=10s, within gap of the frontier) then an on-time one
-    // (t=130s, 30s after the true frontier 100s): the buggy frontier
-    // regression would close a Session(start=100, end=10) here
-    in.addData(Event(1L, 11L, us(10), 1.0), Event(1L, 12L, us(130), 1.0))
-    q.processAllAvailable()
-    // close the open session with a far-future event
-    in.addData(Event(1L, 13L, us(1000), 1.0))
-    q.processAllAvailable()
-    q.stop()
-    val sessions = spark.table("slate").as[Session].collect()
-    assert(sessions.forall(s => s.endMicros >= s.startMicros), sessions.toSeq)
-    assert(sessions.map(s => (s.startMicros, s.endMicros, s.n_events)).toSet ==
-      Set((us(10), us(130), 3L)), sessions.toSeq)
   }
 
   test("stream-stream interval join with watermarks matches batch result") {
@@ -537,8 +429,8 @@ class StreamingSpec extends AnyFunSuite {
     // watermark failed to evict, it would accrete to the 2000-key union
     // and an unbounded stream would OOM the store.
     val in = MemoryStream[(Long, Timestamp)]
-    val q = StreamingOps.dedupWithinWatermark(
-        in.toDF.toDF("id", "ts"), "2 minutes", Seq("id"))
+    val q = in.toDF.toDF("id", "ts")
+      .withWatermark("ts", "2 minutes").dropDuplicates("id", "ts")
       .writeStream.outputMode("append").format("memory")
       .queryName("dedup_state_bound").start()
     val dedupState = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -588,12 +480,12 @@ class StreamingSpec extends AnyFunSuite {
       s"join state grew: ${joinState.mkString(",")}")
   }
 
-  test("RocksDB state store: dedup + stateful sessionize produce identical " +
-      "output and the watermark still evicts") {
+  test("RocksDB state store: dedup + streaming minhash dedup produce " +
+      "identical output and the watermark still evicts") {
     // r14: the provider a cluster deployment runs (state off-heap/on-disk,
     // not bounded by executor memory) must be a pure swap — same rows,
     // same state eviction — for both the built-in dedup state and the
-    // custom flatMapGroupsWithState operator. Provider is a per-query
+    // custom flatMapGroupsWithState operator (StreamingDedup, q96/q255). Provider is a per-query
     // session conf; restore it so later suites keep the default store.
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
@@ -608,8 +500,8 @@ class StreamingSpec extends AnyFunSuite {
       // dedup: 5 batches x 100 fresh keys + 20 repeats of batch-local
       // keys; watermark evicts across batches, dedup holds within
       val in = MemoryStream[(Long, Timestamp)]
-      val q = StreamingOps.dedupWithinWatermark(
-          in.toDF.toDF("id", "ts"), "2 minutes", Seq("id"))
+      val q = in.toDF.toDF("id", "ts")
+        .withWatermark("ts", "2 minutes").dropDuplicates("id", "ts")
         .writeStream.outputMode("append").format("memory")
         .queryName("rocksdb_dedup").start()
       val state = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -629,26 +521,29 @@ class StreamingSpec extends AnyFunSuite {
       assert(state.drop(2).forall(_ <= 250L),
         s"rocksdb dedup state grew: ${state.mkString(",")}")
 
-      // custom state: the sessionizer's flatMapGroupsWithState path must
-      // run unchanged on RocksDB (same session splits as the batch logic)
-      import graft.streaming.StatefulSessionize.Event
-      val sin = MemoryStream[Event]
-      val sq = graft.streaming.StatefulSessionize
-        .sessionize(sin.toDS(), gapSeconds = 300L)
+      // custom state: StreamingDedup's flatMapGroupsWithState path must
+      // run unchanged on RocksDB (same verdicts as its batch form)
+      import graft.streaming.StreamingDedup
+      val docA = "the quick brown fox jumps over the lazy dog again and again"
+      val docB = "an entirely different document about spark execution engines"
+      val din = MemoryStream[(Long, String)]
+      val dq = StreamingDedup.dedupStream(din.toDF.toDF("doc_id", "text"),
+          "doc_id", "text")
         .writeStream.outputMode("append").format("memory")
-        .queryName("rocksdb_sessions").start()
-      // user 1: two events 1 min apart (one session), then a 21-min gap
-      // closes it on arrival; a later event closes the second session
-      sin.addData(Event(1L, 1L, 0L, 1.0), Event(1L, 2L, 60000000L, 1.0),
-        Event(1L, 3L, 1260000000L, 1.0))
-      sq.processAllAvailable()
-      sin.addData(Event(1L, 4L, 7200000000L, 1.0))
-      sq.processAllAvailable()
-      sq.stop()
-      val sessions = spark.table("rocksdb_sessions")
-        .select(col("user_id").cast("long"), col("n_events").cast("long"))
-        .as[(Long, Long)].collect().toSet
-      assert(sessions == Set((1L, 2L), (1L, 1L)), sessions.toSeq)
+        .queryName("rocksdb_minhash_dedup").start()
+      din.addData((1L, docA), (2L, docB))
+      dq.processAllAvailable()
+      din.addData((3L, docA), (4L, docB))
+      dq.processAllAvailable()
+      dq.stop()
+      val verdicts = spark.table("rocksdb_minhash_dedup")
+        .as[StreamingDedup.DedupVerdict].collect().toSet
+      val batch = StreamingDedup.dedupStream(
+        Seq((1L, docA), (2L, docB), (3L, docA), (4L, docB))
+          .toDF("doc_id", "text"), "doc_id", "text").collect().toSet
+      assert(verdicts == batch)
+      assert(verdicts.filter(_.is_dup).map(v => (v.doc_id, v.keeper)) ==
+        Set((3L, 1L), (4L, 2L)), verdicts)
     } finally {
       prev match {
         case Some(v) => spark.conf.set(provKey, v)
@@ -736,7 +631,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("a session whose first action runs inside withStreamConf keeps its " +
       "own artifact state afterwards") {
-    import org.apache.spark.sql.GraftBridge.{artifactSessionUuid, sessionUuid}
+    import org.apache.spark.sql.GraftBridge.artifactSessionUuid
+    import org.apache.spark.sql.GraftTestBridge.sessionUuid
     val fresh = spark.newSession()
     val uuid = sessionUuid(fresh)
     StreamingOps.withStreamConf(fresh) {
@@ -798,7 +694,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    val ckpt = SparkTestBase.tempDir("graft-ckpt")
     val batches = Seq(
       Seq((1L, "a"), (2L, "b"), (1L, "a"), (3L, "c")),
       Seq((2L, "b"), (4L, "d"), (4L, "d"), (5L, "e")))
@@ -840,8 +736,8 @@ class StreamingSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-forks")
-    val jfr = java.nio.file.Files.createTempFile("graft-forks", ".jfr")
+    val ckpt = SparkTestBase.tempDir("graft-ckpt-forks")
+    val jfr = SparkTestBase.tempDir("graft-forks").resolve("forks.jfr")
     val in = MemoryStream[Long]
     // each batch runs in its own query over one checkpoint, so batch 2's
     // stores are new provider instances that load batch 1's state from
@@ -879,7 +775,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally {
       rec.close()
       graft.io.NioLocalFileSystem.deleteRecursively(ckpt)
-      java.nio.file.Files.deleteIfExists(jfr)
     }
   }
 

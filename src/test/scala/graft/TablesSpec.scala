@@ -33,7 +33,7 @@ class TablesSpec extends AnyFunSuite {
 
   test("schemaOf equals Spark's schema for a directory of Spark-written parts, " +
       "metadata and non-nullable fields included") {
-    val dir = java.nio.file.Files.createTempDirectory("schema-of").toString
+    val dir = SparkTestBase.tempDir("schema-of").toString
     val md = new org.apache.spark.sql.types.MetadataBuilder()
       .putString("comment", "row key").build()
     spark.range(0, 100, 1, 5)
@@ -51,14 +51,14 @@ class TablesSpec extends AnyFunSuite {
 
   test("schemaOf fails like spark.read: PATH_NOT_FOUND, UNABLE_TO_INFER_SCHEMA; " +
       "it refuses a partitioned layout") {
-    val missing = java.nio.file.Files.createTempDirectory("schema-of-missing")
+    val missing = SparkTestBase.tempDir("schema-of-missing")
       .resolve("nope.parquet").toString
     def condition(f: => Any): String =
       intercept[AnalysisException](f).getCondition
     assert(condition(spark.read.parquet(missing)) == "PATH_NOT_FOUND")
     assert(condition(Tables.schemaOf(spark, missing)) == "PATH_NOT_FOUND")
     // a directory holding only hidden files: nothing to read a footer from
-    val empty = java.nio.file.Files.createTempDirectory("schema-of-empty")
+    val empty = SparkTestBase.tempDir("schema-of-empty")
     java.nio.file.Files.writeString(empty.resolve("_SUCCESS"), "")
     java.nio.file.Files.writeString(empty.resolve(".part.crc"), "")
     assert(condition(spark.read.parquet(empty.toString)) ==
@@ -66,7 +66,7 @@ class TablesSpec extends AnyFunSuite {
     assert(condition(Tables.schemaOf(spark, empty.toString)) ==
       "UNABLE_TO_INFER_SCHEMA")
     // partition discovery is Spark's to do: a partitioned layout is refused
-    val parted = java.nio.file.Files.createTempDirectory("schema-of-parted")
+    val parted = SparkTestBase.tempDir("schema-of-parted")
     spark.range(4).withColumn("b", col("id") % 2)
       .write.mode("overwrite").partitionBy("b").parquet(parted.toString)
     intercept[IllegalArgumentException](Tables.schemaOf(spark, parted.toString))

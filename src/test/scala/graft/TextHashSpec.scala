@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{HashFunctions, TextFunctions}
+import graft.functions.{SimHash64, TextFunctions}
 
 class TextHashSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.session
@@ -55,29 +56,32 @@ class TextHashSpec extends AnyFunSuite {
   }
 
   test("simhash: identical token arrays hash identically; near texts are close") {
-    HashFunctions.register(spark)
+    def simhash(t: Column) = GraftBridge.column(
+      SimHash64(GraftBridge.expression(TextFunctions.tokens(t))))
     val df = Seq(
       "the quick brown fox jumps over the lazy dog again and again",
       "the quick brown fox jumps over the lazy cat again and again",
       "completely different words about spark query engines at scale")
       .toDF("t")
-      .select(HashFunctions.simhash(TextFunctions.tokens(col("t"))).as("h"))
+      .select(simhash(col("t")).as("h"))
     val Array(a, b, c) = df.as[Long].collect()
-    assert(HashFunctions.hamming64(a, b) < HashFunctions.hamming64(a, c))
+    assert(SpecOracles.hamming64(a, b) < SpecOracles.hamming64(a, c))
     // determinism
     val again = Seq("the quick brown fox jumps over the lazy dog again and again")
-      .toDF("t").select(HashFunctions.simhash(TextFunctions.tokens(col("t"))))
+      .toDF("t").select(simhash(col("t")))
       .as[Long].head()
     assert(again == a)
   }
 
   test("simhash64 usable from SQL after registration") {
-    HashFunctions.register(spark)
-    val h = spark.sql("SELECT simhash64(array('a','b','c')) AS h")
-      .as[Long].head()
-    val h2 = spark.sql("SELECT simhash64(array('a','b','c')) AS h")
-      .as[Long].head()
-    assert(h == h2)
+    SparkTestBase.withExtensions { s =>
+      import s.implicits._
+      val h = s.sql("SELECT simhash64(array('a','b','c')) AS h")
+        .as[Long].head()
+      val h2 = s.sql("SELECT simhash64(array('a','b','c')) AS h")
+        .as[Long].head()
+      assert(h == h2)
+    }
   }
 
   test("native charShingles matches the HOF formulation exactly") {

@@ -21,7 +21,7 @@ class TimestampEncodingSpec extends AnyFunSuite {
     1700000000000000L, 1700000001500000L, 1700003600250000L)
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-tsenc-$tag").toString
+    SparkTestBase.tempDir(s"graft-tsenc-$tag").toString
 
   /** Write the same logical events rows under each physical encoding the
     * engine must accept, returning the parquet paths. */

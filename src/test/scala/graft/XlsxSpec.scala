@@ -289,7 +289,7 @@ class XlsxSpec extends AnyFunSuite {
 
   test("distributed scan: one task per workbook file via binaryFile source") {
     val spark = SparkTestBase.session
-    val dir = Files.createTempDirectory("xlsx_scan")
+    val dir = SparkTestBase.tempDir("xlsx_scan")
     try {
       val b1 = XlsxWriter.write(Seq(XlsxSheet("s",
         Seq(Seq(XlsxCell.Str("f1"), XlsxCell.Num(1))))))

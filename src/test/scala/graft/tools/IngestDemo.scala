@@ -14,7 +14,7 @@ object IngestDemo {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
-    val srcDir = Files.createTempDirectory("upstream")
+    val srcDir = graft.SparkTestBase.tempDir("upstream")
     Files.write(srcDir.resolve("AAA.csv"),
       "Symbol,Date,Close\nAAA,2026-01-02,10.0\nAAA,2026-01-05,11.0\n".getBytes)
     val wm = Seq(("AAA", "2026-01-02")).toDF("entity", "max_date")
@@ -22,15 +22,15 @@ object IngestDemo {
     println(s"[ingest] plan: $plan")
     val out = StagedIngest.ingest(spark,
       new LocalFileFetcher(s => srcDir.resolve(s"${s.entity}.csv")),
-      plan, Files.createTempDirectory("staging").toString,
+      plan, graft.SparkTestBase.tempDir("staging").toString,
       "Symbol STRING, Date DATE, Close DOUBLE", wm, "Symbol", "Date")
     println(s"[ingest] rows after watermark re-filter: ${out.collect().mkString("; ")}")
 
     // checkpointed incremental runs: second invocation picks up only deltas
     import spark.implicits._
-    val in = Files.createTempDirectory("inc-in").toString
-    val ckpt = Files.createTempDirectory("inc-ckpt").toString
-    val sink = Files.createTempDirectory("inc-out").toString
+    val in = graft.SparkTestBase.tempDir("inc-in").toString
+    val ckpt = graft.SparkTestBase.tempDir("inc-ckpt").toString
+    val sink = graft.SparkTestBase.tempDir("inc-out").toString
     Seq((1L, 10.0)).toDF("id", "v").coalesce(1).write.mode("append").parquet(in)
     val schema = spark.read.parquet(in).schema
     graft.streaming.StreamingOps.runIncremental(spark, in, schema, ckpt, sink)(identity)

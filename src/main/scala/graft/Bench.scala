@@ -215,7 +215,7 @@ object Bench {
         warmDirFile.exists(w => w.isDirectory && w != sfCanon)) {
       val warmDir = warmDirFile.get.getPath
       val t0 = System.nanoTime()
-      // r21 additions to the warm list: the r19/r20 containment routes
+      // r21 additions to the warm list: the r19/r20 containment joins
       // (rarest_min_k + one-sided probe chain — new code paths the q121
       // warm leg never touches) and ONE streaming query per stateful
       // class (windowed agg + stream-stream join): the board's first

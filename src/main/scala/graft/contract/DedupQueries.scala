@@ -212,14 +212,12 @@ object DedupQueries {
         |JOIN sizes sb ON sb.doc_id = i.sup
         |WHERE i.n_inter * 4 >= 3 * sa.n""".stripMargin),
 
-    // North star (r20): the UNION route's oracle-portable twin — md5-lane
-    // banded candidates (q29's portable family) in BOTH directions ∪ the
-    // one-sided rarest-8 candidates (q259's explicit cap), distinct, one
-    // exact verify. The production autoRoute (Dedup.containmentRoutedUnion)
-    // runs the same assembly code (both-direction banded emit,
-    // cross-generator dedupe, verify-once), so this pins it under the
-    // oracle; only the generators differ there (xxhash64 lanes,
-    // volume-derived caps).
+    // North star (r20): the union of two complementary candidate
+    // generators — md5-lane banded candidates (q29's portable family) in
+    // BOTH directions ∪ the one-sided rarest-8 candidates (q259's explicit
+    // cap), distinct, one exact verify. Banding finds near-identical
+    // families and the rarest-k probe finds quotes; each is blind where
+    // the other sees.
     Contract("q261_containment_union", ((s, d) =>
       Dedup.containmentUnionPortable(documents(s, d), "doc_id", "text",
         shingleK = 8, numT = 3, denT = 4, probeK = 8, maxDocsPerTok = 20)),

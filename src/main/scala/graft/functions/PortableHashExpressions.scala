@@ -14,9 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * them in ONE compiled scalar pass (no token explode, no signature
   * shuffle, tiny generated code).
   *
-  * These are the correctness-checkable counterparts of the FNV
-  * [[SimHash64]] and the xxhash64 lanes of `Dedup.bandedMinhash`: same
-  * algorithm shape, engine-portable hash. */
+  * These are the correctness-checkable counterpart of the FNV
+  * [[SimHash64]]: same algorithm shape, engine-portable hash. */
 object PortableHashOps {
 
   private val md5Local = new ThreadLocal[MessageDigest] {

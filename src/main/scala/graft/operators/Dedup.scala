@@ -19,61 +19,12 @@ import graft.functions.TextFunctions
   */
 object Dedup {
 
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Unpersist exactly the blocks `ds`'s `localCheckpoint()` pinned, by
-    * unpersisting the checkpointed plan's own `LogicalRDD` leaf — NOT by
-    * diffing `sparkContext.getPersistentRDDs` around the call (r18
-    * ADVICE): on a shared SparkContext the registry diff sweeps up every
-    * RDD any concurrent query (or Spark internals) persisted between the
-    * snapshot and the route engagement, and for a localCheckpointed
-    * victim those blocks are its ONLY copy (lineage is truncated), so
-    * the sweep turns an innocent concurrent query into
-    * missing-checkpoint-block failures. A non-checkpointed plan has no
-    * `LogicalRDD` leaf, so this is a safe no-op for the dispatch arms
-    * that skip the checkpoint. */
-  private def unpinCheckpointed(ds: DataFrame): Unit =
-    ds.queryExecution.logical.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Exact dedup: group on the MD5 of normalized text, keep the smallest id.
     * Returns (text_hash, keeper, n_dups). */
   def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol), TextFunctions.fingerprint(col(textCol)).as("text_hash"))
       .groupBy(col("text_hash"))
       .agg(min(col(idCol)).as("keeper"), count(lit(1)).as("n_dups"))
-
-  /** Banded MinHash table `(doc_id, band, bh)` in the scale-correct shape:
-    * explode shingles to rows, hash each shingle once per lane (xxhash64
-    * salted by the lane index), take map-side partial MIN per lane in one
-    * hash aggregate (shuffles only `(doc_id, k longs)`, never text), then
-    * xxhash64 lane-groups into band keys. The per-row lambda form (one
-    * `array_min(transform(...))` per lane) inlines the shingle array into
-    * every lane's expression tree — k× recompute — so this aggregate form
-    * is what the candidate join uses. */
-  private[graft] def bandedMinhash(docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, numHashes: Int, bands: Int): DataFrame = {
-    val rows = numHashes / bands
-    // fanOutScan measured NEGATIVE here (r22, min-of-3/4 interleaved:
-    // q63 +0.4..+0.5 s) — the shingle pass is cheap enough that the
-    // text shuffle + extra stage cost more than the parallelism buys;
-    // the lane minima flow into the signature aggregate's own exchange
-    // either way. Left unspread; see Spread.fanOutScan for where it DOES
-    // pay.
-    val shing = docs.select(col(idCol).as("doc_id"),
-      explode(graft.functions.ShingleOps.wordShinglesCol(col(textCol), shingleN)).as("s"))
-    val lanes = (0 until numHashes).map(i => min(xxhash64(col("s"), lit(i))).as(s"h$i"))
-    val sig = shing.groupBy(col("doc_id")).agg(lanes.head, lanes.tail: _*)
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64((b * rows until (b + 1) * rows).map(i => col(s"h$i")): _*).as("bh"))
-    }
-    sig.select(col("doc_id"), explode(array(bandCols: _*)).as("x"))
-      .select(col("doc_id"), col("x.band"), col("x.bh"))
-  }
 
   /** Oracle-portable MinHash+LSH candidates: per-doc lane minima come from
     * ONE native scalar pass ([[graft.functions.Md5MinhashLanes]] — shingle,
@@ -145,14 +96,9 @@ object Dedup {
     candidatesFromBanded(banded, maxBucket)
   }
 
-  /** Shared LSH tail: prune oversized/singleton buckets, then self-join
-    * within buckets for distinct ordered pairs. */
-  private def candidatesFromBanded(banded: DataFrame, maxBucket: Int): DataFrame =
-    bandedPairs(banded, _ => maxBucket)
-
-  /** The one pinned-banded step of the LSH tails: cap the buckets of
-    * `banded` at `cap(sizes)` — `sizes` is the (band, bh, bucket_n)
-    * bucket-count aggregate — then self-join within the kept buckets.
+  /** The LSH tail: cap the buckets of `banded` at `maxBucket` — dropping
+    * singletons too — then self-join within the kept buckets for distinct
+    * ordered pairs.
     *
     * The bands-per-doc rows feed the bucket-count aggregate and both
     * self-join branches, and the kept rows feed both branches again, so
@@ -160,9 +106,7 @@ object Dedup {
     * under the bound ONE signature pass serves every consumer; above it a
     * banded table is O(docs × bands) rows and pinning it in executor
     * storage is worse than re-deriving it per consumer — recompute is the
-    * 100 TB shape. A `cap` that collects (the volume-capped chain's
-    * rollup) re-derives the banded pass once above the bound, the price
-    * of the volume guard.
+    * 100 TB shape.
     *
     * Buckets are counted via aggregate + semi-join, NOT a count window
     * over (band, bh): the partial aggregate collapses a corpus-hot bucket
@@ -170,13 +114,12 @@ object Dedup {
     * cannot be split — counting a hot bucket through a window is itself
     * the straggler the cap exists to prevent (r11 shape rule, as in
     * prefixJaccardPairs / sharedPassagePairs). */
-  private def bandedPairs(banded: DataFrame, cap: DataFrame => Int): DataFrame = {
+  private def candidatesFromBanded(banded: DataFrame,
+      maxBucket: Int): DataFrame = {
     val pin = Spread.pinIfSmall(banded) _
     val b0 = pin(banded)
-    val sizes = b0.groupBy(col("band"), col("bh"))
+    val keep = b0.groupBy(col("band"), col("bh"))
       .agg(count(lit(1)).as("bucket_n"))
-    val maxBucket = cap(sizes)
-    val keep = sizes
       .filter(col("bucket_n") <= maxBucket && col("bucket_n") > 1)
       .select(col("band"), col("bh"))
     val pruned = pin(b0.join(keep, Seq("band", "bh"))
@@ -186,131 +129,6 @@ object Dedup {
         col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
-  }
-
-  /** The routed chains' candidate-volume budget, per doc. Calibration
-    * (r19, 500k Zipf rehearsal corpus): the q121 route completes with
-    * ~10 candidates/doc; genuine syndication families (≤ a few hundred
-    * docs) cost C(m,2)·n_fam ≈ single-digit millions; the boilerplate
-    * ACCIDENT buckets the cap exists to refuse are each 5e6–1.3e9
-    * candidates of pure boilerplate collision. The verify's unit
-    * economics are CALIBRATED, not modeled: r18's cap-1000 croute
-    * completion pushed 1e7 verify rows in 8.67 GB scratch (~0.9 KB/row
-    * through the both-directions containment verify), and the r19
-    * 50/doc draft of this constant let the cap ride to 5,941 (2.2e7
-    * candidates → 4.5e7 verify rows), which blew a 30 GB budget at
-    * 33 GB — so the budget targets the measured-safe 1e7-candidate
-    * class at 500k docs: 20/doc, 2× the q121 route's genuine load. A
-    * genuinely huge syndication family (≥ ~3,000 members at 500k docs)
-    * IS refused at this budget — the warn names the trade and an
-    * explicit maxBucket overrides it. */
-  private[graft] val RouteCandidatesPerDoc = 20.0
-
-  /** Scratch cost of ONE candidate row through the routed chains'
-    * verify stage, bytes — CALIBRATED, not modeled (r18 croute: 1e7
-    * verify rows in 8.67 GB; r19's 2.2e7-candidate draft at 33 GB
-    * confirms the ~0.9 KB/row slope). Used to translate a caller's
-    * scratch capacity into a candidate budget (r20: the judge's
-    * portability item — the 20/doc default was calibrated on one
-    * 128 GiB/94 GB-scratch host; a different host states its own
-    * capacity instead of inheriting that host's constant). */
-  private[graft] val VerifyScratchBytesPerCandidate = 900.0
-
-  /** The routed chains' candidate-volume budget, in candidate rows:
-    * `spark.graft.route.scratchBytes` (long, the host's usable scratch
-    * capacity) / [[VerifyScratchBytesPerCandidate]] when stated — larger
-    * or smaller than the default — else [[RouteCandidatesPerDoc]]·nDocs.
-    * Always floored at [[MinRouteCandidates]] (the recall floor is a
-    * contract, not a budget line). */
-  private[graft] def routeCandidateBudget(
-      spark: org.apache.spark.sql.SparkSession, nDocs: Long): Double = {
-    val capped = spark.conf.getOption("spark.graft.route.scratchBytes") match {
-      case Some(b) =>
-        val bytes = b.toDouble
-        require(bytes > 0, s"spark.graft.route.scratchBytes must be > 0: $b")
-        bytes / VerifyScratchBytesPerCandidate
-      case None => RouteCandidatesPerDoc * nDocs
-    }
-    math.max(capped, MinRouteCandidates)
-  }
-
-  /** Absolute floor under the routed volume budget: 5e6 candidate rows
-    * ≈ 150 MB of pair-stage scratch — never worth refusing recall for,
-    * on any host. Without it, a genuine family that is a large SHARE of
-    * a small corpus (the 1050-member family in a 2150-doc spec corpus:
-    * 8·C(1050,2) ≈ 4.4e6 candidates vs a 20/doc budget of 4.3e4) would
-    * lose to the per-doc budget; the measured accident-bucket classes
-    * at 500k start around 5.8e6 per bucket, just above the floor. */
-  private[graft] val MinRouteCandidates = 5e6
-
-  /** xxhash64 banded MinHash candidates ([[bandedMinhash]]) with the
-    * bucket cap VALIDATED against a candidate-volume budget from the
-    * banded table's own bucket-size
-    * rollup (r19, the round's accident-bucket lesson part 2): the r18
-    * cap — 2× the autocap-derived "largest genuine family" — is only a
-    * family estimate when the underlying count distribution is BIMODAL
-    * (families ≪ template floor ≪ boilerplate). q121's prefix-nd rollup
-    * is bimodal by construction (the prefix biases to rare shingles);
-    * containment's FULL char-shingle dfreq is a smooth Zipf tail, so
-    * "largest dfreq below the 0.5·N floor" lands just under the floor —
-    * measured cap 249,244 at 500k docs (= bucket cap 498,488 ≈
-    * uncapped), admitting 1.50e9 banded candidates vs 4.97e6 at cap
-    * 1000 (the r19 croute second sample ground for an hour where r18's
-    * pre-cap-change sample took 211 s). The fix is shape-free: compute
-    * the banded bucket-size rollup (one collect, ≤ one row per distinct
-    * size — the same aggregate the cap filter needs anyway), and take
-    * effective cap = max(1000, min(familyCap, largest m whose cumulative
-    * Σ n_buckets·C(m,2) fits [[RouteCandidatesPerDoc]]·nDocs)). Genuine
-    * families are admitted (tiny volume); corpus-share accident buckets
-    * are refused no matter what the family estimate degenerated to. */
-  private[graft] def minhashCandidatesVolCapped(docs: DataFrame,
-      idCol: String, textCol: String, shingleN: Int, numHashes: Int,
-      bands: Int, familyCap: Int, label: String): DataFrame = {
-    bandedPairs(bandedMinhash(docs, idCol, textCol, shingleN, numHashes,
-      bands), sizes => {
-      val rollup = countRollup(sizes, "bucket_n")
-      val nDocs = rollup.map { case (m, nb) => m * nb }.sum / math.max(bands, 1)
-      volCappedBucketCap(rollup, bands, familyCap, label,
-        budgetOverride = routeCandidateBudget(docs.sparkSession, nDocs))
-    })
-  }
-
-  /** The pure cap derivation behind [[minhashCandidatesVolCapped]]:
-    * effective cap = max(1000, min(familyCap, largest bucket size whose
-    * CUMULATIVE ascending Σ n_buckets·C(m,2) fits
-    * [[RouteCandidatesPerDoc]]·nDocs)), with nDocs recovered from the
-    * rollup itself (Σ m·n_buckets = docs × bands). */
-  private[graft] def volCappedBucketCap(rollup: Array[(Long, Long)],
-      bands: Int, familyCap: Int, label: String,
-      budgetOverride: Double = -1.0): Int = {
-    val nDocs = rollup.map { case (m, nb) => m * nb }.sum / math.max(bands, 1)
-    // budgetOverride carries the conf-derived budget from
-    // [[routeCandidateBudget]] (r20); the default keeps the calibrated
-    // per-doc constant for direct (spec) callers.
-    val budget =
-      if (budgetOverride > 0) math.max(budgetOverride, MinRouteCandidates)
-      else math.max(RouteCandidatesPerDoc * nDocs, MinRouteCandidates)
-    val (volCap, _) = budgetScan(rollup, pairsIn, _ => budget)
-    val eff = math.max(1000L,
-      math.min(familyCap.toLong, volCap)).min(Int.MaxValue.toLong).toInt
-    // the TRUE volume the `bucket_n <= eff` filter admits — recomputed
-    // at eff (r20 review: when the 1000 floor raises eff above volCap,
-    // or familyCap binds below it, the scan's volume is that of a
-    // different cap; a scratch-blowout diagnosis must read the real one)
-    val admitted = rollup.iterator.filter(_._1 <= eff).map(pairsIn.tupled).sum
-    val warn =
-      if (eff > familyCap)
-        Some(s"the 1000-bucket recall floor overrides familyCap=$familyCap")
-      else if (volCap < eff)
-        Some(s"the 1000-bucket recall floor exceeds the budget-derived cap $volCap")
-      else if (eff < familyCap)
-        Some(s"the volume budget binds below familyCap=$familyCap (buckets " +
-          "above it are the boilerplate-collision class, see Scaladoc)")
-      else None
-    val line = f"$label: banded bucket cap $eff admits $admitted%.3e " +
-      f"candidates (${budget / math.max(nDocs, 1L)}%.1f cand/doc budget)"
-    warn.fold(log.info(line))(w => log.warn(s"$line — $w"))
-    eff
   }
 
   /** Connected components over near-dup candidate pairs — the step after
@@ -494,8 +312,8 @@ object Dedup {
   }
 
   /** The shingle joins' token tables, see [[shingleFront]]. */
-  private[graft] final case class Front(base: DataFrame, toks: DataFrame,
-      toksPlan: DataFrame, dfreq: DataFrame, inputSmall: Boolean)
+  private[graft] final case class Front(toks: DataFrame, toksPlan: DataFrame,
+      dfreq: DataFrame, inputSmall: Boolean)
 
   /** Shared token-table front of the prefix and containment joins
     * ([[prefixJaccardPairs]], [[prefixHotness]] and the containment
@@ -575,7 +393,7 @@ object Dedup {
     // with the downstream joins, and the re-aggregation over the pinned
     // toks table is cheap. Keep the recompute.
     val dfreq = toks.groupBy(col("tok")).agg(count(lit(1)).as("dfreq"))
-    Front(base, toks, toksPlan, dfreq, inputSmall)
+    Front(toks, toksPlan, dfreq, inputSmall)
   }
 
   /** Per-doc rarest-p prefix shingles of a [[shingleFront]] as
@@ -650,123 +468,6 @@ object Dedup {
       .groupBy(col("nd")).agg(count(lit(1)).as("n_toks"))
       .orderBy(col("nd").desc)
 
-  /** Candidates-per-doc level at which the autocap forecasts warn (and
-    * `autoRoute` engages) — recalibrated from the r17 Zipf ladder (r18):
-    * 3.8k candidates/doc (200k docs, 7.6e8 rows) COMPLETED in 11.2 GB
-    * scratch while 5.6k/doc (300k docs, 1.7e9 rows) ABORTED a 48 g /
-    * ~90 GB node at 55 GB live scratch — the original 1e4/doc threshold
-    * sat above the measured abort regime and would have stayed silent
-    * through it. 4000 sits between the two measured regimes. Per-doc,
-    * not absolute: scratch ≈ forecast × 14 B grows with the corpus on
-    * both sides of the threshold, so the RATIO is what separates "pair
-    * stage proportional to input" from "pair stage dominates".
-    * Containment's Σ dfreq² forecast is an upper bound, so it crosses
-    * earlier — conservative in the safe direction; callers who need the
-    * exact join regardless set an absolute cap. */
-  private[graft] val WarnCandidatesPerDoc = 4000.0
-
-  /** Driver-side (countValue, nGroups) rollup of a per-key count table —
-    * at most one row per DISTINCT count value (hundreds even at corpus
-    * scale), collected ascending. One map-side-combinable aggregate over
-    * the table; the auto-cap rule, the candidate forecast and the
-    * cumulative budget cap are then all derived from this one array
-    * instead of each re-running the count table's lineage (r17 ADVICE:
-    * in autocap mode those were separate Spark actions, and at the large
-    * scales the mode targets each one re-derived the full explode +
-    * groupBy prefix pipeline). */
-  private[graft] def countRollup(counts: DataFrame,
-      countCol: String): Array[(Long, Long)] =
-    counts.groupBy(col(countCol)).agg(count(lit(1)).as("n_groups"))
-      .orderBy(col(countCol))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-
-  /** Shared auto-cap rule for the `maxDocsPerTok = 0` modes over a
-    * collected [[countRollup]]: the largest per-token document count
-    * strictly below `templateShare` × `nDocs`. The caller supplies
-    * whichever count binds its join (prefix-nd for the Jaccard join,
-    * full-corpus dfreq for the containment index, bucket size m for the
-    * LSH joins). The Long→Int narrowing is clamped: a derived cap beyond
-    * Int.MaxValue (possible only when a "genuine" family spans >2^31
-    * docs) saturates rather than wrapping negative, which would silently
-    * filter out every token. */
-  private[graft] def capBelowTemplateFloorLocal(rollup: Array[(Long, Long)],
-      nDocs: Long, templateShare: Double, label: String): Int = {
-    val floor = math.max(2L, math.ceil(templateShare * nDocs).toLong)
-    val below = rollup.map(_._1).filter(_ < floor)
-    val cap =
-      if (below.isEmpty) 2 // degenerate corpus: everything is template
-      else math.min(math.max(2L, below.max), Int.MaxValue.toLong).toInt
-    log.info(s"$label autoCap: nDocs=$nDocs " +
-      s"templateFloor=$floor -> maxDocsPerTok=$cap")
-    cap
-  }
-
-  /** Candidate rows a count class emits through a within-key self-join:
-    * C(m, 2) per key, times the class's key count. */
-  private[graft] val pairsIn: (Long, Long) => Double =
-    (m, n) => n.toDouble * m.toDouble * (m - 1).toDouble / 2.0
-
-  /** One autocap decision (see [[autoCap]]). `routeBucketCap` is the
-    * routed banded chain's bucket cap: 2× the cap (the operator's
-    * estimate of the largest genuine family), never below 1000, clamped
-    * to Int. */
-  private[graft] final case class AutoCap(cap: Int, forecast: Double,
-      overWarn: Boolean, routeBucketCap: Int)
-
-  /** The autocap step every `maxDocsPerTok = 0` / `maxBucket = 0` mode
-    * takes, over one collected [[countRollup]]: the cap is
-    * [[capBelowTemplateFloorLocal]]'s; the forecast is Σ `volume(class,
-    * nKeys)` over the classes the cap keeps, so the rollup prices the
-    * pair stage before it runs (r17); `overWarn` says the forecast
-    * crosses [[WarnCandidatesPerDoc]]·nDocs — the pair stage will
-    * dominate, and `autoRoute` callers switch to the banded chain.
-    *
-    * Why the route bucket cap is 2× the cap and not the template floor
-    * (r18): a banded-minhash bucket is not a family but whatever collides
-    * in 2 lanes, and corpus-hot boilerplate makes ACCIDENT buckets
-    * holding ~7% of all boiler docs per band (the 300k rehearsal route
-    * ran 157 s at cap 1000, >30 min at cap 150k). A genuine m-member
-    * family's band buckets hold ≤ m docs, so 2× the largest-family
-    * estimate keeps every admitted family and still refuses collapse
-    * buckets; the 1000 floor keeps >1000-member families' recall. */
-  private[graft] def autoCap(rollup: Array[(Long, Long)], nDocs: Long,
-      templateShare: Double, volume: (Long, Long) => Double,
-      label: String): AutoCap = {
-    val cap = capBelowTemplateFloorLocal(rollup, nDocs, templateShare, label)
-    val forecast = rollup.iterator.takeWhile(_._1 <= cap)
-      .map(volume.tupled).sum
-    val d = AutoCap(cap, forecast, forecast > WarnCandidatesPerDoc * nDocs,
-      math.min(math.max(1000L, 2L * cap), Int.MaxValue.toLong).toInt)
-    val line = f"$label autoCap=$cap forecasts $forecast%.3e candidate " +
-      f"rows (${forecast / math.max(nDocs, 1)}%.0f per doc)"
-    if (d.overWarn)
-      log.warn(line + " — the pair stage will dominate: route it " +
-        "(autoRoute), or set an absolute cap at the largest genuine " +
-        "cluster size for this corpus shape")
-    else log.info(line)
-    d
-  }
-
-  /** Ascending cumulative-budget scan over a rollup: admits count classes
-    * smallest first while the running Σ `volume` stays within
-    * `bound(class)`, and STOPS at the first class over it (the caps filter
-    * `count <= cap`, so every class below the cap is enumerated and must
-    * have been counted). Returns the largest admitted class (0 when none
-    * fits) and the volume admitted up to it. */
-  private[graft] def budgetScan(rollup: Array[(Long, Long)],
-      volume: (Long, Long) => Double, bound: Long => Double): (Long, Double) = {
-    var cum = 0.0
-    var fit = 0L
-    val it = rollup.sortBy(_._1).iterator
-    var full = false
-    while (it.hasNext && !full) {
-      val (m, n) = it.next()
-      val v = volume(m, n)
-      if (cum + v <= bound(m)) { cum += v; fit = m } else full = true
-    }
-    (fit, cum)
-  }
-
   /** Prefix-filtered shingle-set similarity join (PPJoin-style). The naive
     * shingle equi-join explodes on frequent shingles; here each document
     * joins only on its `p = n - ceil(t·n) + 1` globally-RAREST shingles
@@ -820,77 +521,19 @@ object Dedup {
     * (~n²/2⁶⁵) are the only way this can diverge from string-set
     * Jaccard — negligible and deterministic.
     *
-    * `maxCandidates` (autocap mode only, 0 = off) bounds the pair
-    * stage by BUDGET instead of by recall: the cap becomes the largest
-    * nd whose cumulative forecast Σ n_toks · C(nd, 2) stays within the
-    * budget (and never exceeds the share-derived cap). This is the
-    * executable form of the candidate-volume guidance: on an
-    * open-vocabulary corpus the share-derived autocap admits ever-hotter
-    * tokens as the corpus grows (measured: cap 214→654 and forecast
-    * 2.0e8→4.6e9 candidates at 100k→500k Zipf docs, ≈ N^1.95), so a
-    * fixed scratch envelope needs the budget stated explicitly. The
-    * trade is recall ABOVE the chosen cap — clusters larger than it lose
-    * their pairs — and the chosen cap is logged loudly so the trade is
-    * visible, mirroring [[prefixHotness]]'s read-the-tail contract.
-    *
-    * `autoRoute` (autocap mode only) lets the operator take the
-    * forecast's own advice (r17 VERDICT item 4): when the forecast
-    * exceeds the warn threshold ([[WarnCandidatesPerDoc]] — recalibrated
-    * to the measured pair-stage-dominates regime), the exact prefix join
-    * is REPLACED by
-    * the banded-minhash candidate chain ([[bandedMinhash]], 16 lanes
-    * / 8 bands of 2), feeding the IDENTICAL exact-Jaccard verify — same
-    * output contract, same threshold, band-bounded candidate volume.
-    * Recall through the route is probabilistic instead of cap-bounded: a
-    * true pair at word-shingle similarity s collides in ≥1 band w.p.
-    * 1−(1−s²)⁸ (≈0.97 at s=0.6, ≈1−2e−6 at s=0.9), independent of
-    * cluster size UP TO the routed chain's own bucket cap — 2× the
-    * autocap-derived cap (the operator's estimate of the largest genuine
-    * family), floored at 1000 — so a family the share floor admits is
-    * never dropped by the route, while boilerplate-ACCIDENT band buckets
-    * (docs from many families colliding through corpus-hot shingles,
-    * which can hold a constant fraction of the corpus) are still
-    * refused; their members keep pairing through their other bands. Precision is untouched (the verify is exact
-    * either way). `autoRoute` and `maxCandidates` are mutually
-    * exclusive: the routed chain's volume is bucket-bounded, not
-    * budget-bounded, and silently ignoring a stated hard envelope is
-    * exactly the r17-ADVICE failure class — state ONE policy. */
+    * A non-positive `maxDocsPerTok` is refused: it would keep no prefix
+    * token, and so return no pairs. */
   def prefixJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 8, numT: Int = 3, denT: Int = 5,
-      maxDocsPerTok: Int = 20, templateShare: Double = 0.5,
-      maxCandidates: Long = 0L, autoRoute: Boolean = false): DataFrame = {
+      maxDocsPerTok: Int = 20): DataFrame = {
     require(numT > 0 && denT > numT, s"threshold must be in (0,1): $numT/$denT")
-    require(maxDocsPerTok > 0 || (templateShare > 0 && templateShare <= 1),
-      s"autoCap mode needs templateShare in (0,1]: $templateShare")
-    require(maxCandidates == 0L || maxDocsPerTok <= 0,
-      "maxCandidates budgets the AUTO cap — with an explicit " +
-        s"maxDocsPerTok=$maxDocsPerTok the caller has already chosen")
-    require(!autoRoute || maxDocsPerTok <= 0,
-      "autoRoute reads the autocap forecast — with an explicit " +
-        s"maxDocsPerTok=$maxDocsPerTok the caller has already chosen")
-    require(!autoRoute || maxCandidates == 0L,
-      "autoRoute and maxCandidates are mutually exclusive: the routed " +
-        "chain is bucket-bounded, not budget-bounded, and a stated hard " +
-        "envelope must never be silently ignored — pick one policy")
+    require(maxDocsPerTok > 0, s"maxDocsPerTok must be > 0: $maxDocsPerTok")
     val f = shingleFront(docs, idCol, textCol, shingleK)
     val prefixPre0 = prefixToks(f, numT, denT)
-    // autoCap mode consumes prefixPre from THREE actions (doc count, nd
-    // rollup, and the main keep-join pass that line-727-checkpoints the
-    // kept prefix anyway) — pin it REGARDLESS of input size (r17 ADVICE:
-    // each extra action otherwise re-derives the whole explode + dfreq +
-    // PrefixMinK pipeline at exactly the scales autocap targets). The
-    // pinned table is the PREFIX table (~(1−t)·n tokens per doc), the
-    // same size class the main pass pins below — not the full corpus
-    // explode the r15 size dispatch refuses to pin. Explicit-cap mode
-    // keeps the r11 dispatch: one pre-pass consumer only.
-    // When autoRoute later engages, the pinned prefix table is dead
-    // weight through the banded join and verify — the route branch
-    // unpins this exact handle via unpinCheckpointed (review r18: at the
-    // ≥300k scales the route targets, an abandoned prefix pin is the
-    // stolen-executor-memory class q126 measured).
+    // the r11 dispatch: pin the prefix table under the input bound, where
+    // the nd aggregate and the keep join below both read it
     val prefixPre =
-      if (maxDocsPerTok <= 0 || f.inputSmall) prefixPre0.localCheckpoint()
-      else prefixPre0
+      if (f.inputSmall) prefixPre0.localCheckpoint() else prefixPre0
     // cap-hot prefix tokens via aggregate + semi-join, NOT a count
     // window: the partial aggregate collapses a corpus-hot prefix token
     // map-side and the join stays splittable, where a window partition
@@ -898,99 +541,37 @@ object Dedup {
     // dfreq variant was rejected above (the prefix biases toward rare
     // shingles, but "rare" is a per-doc rank, not a global bound, so a
     // hot-partition guarantee needs the aggregate shape).
-    // ONE nd aggregate serves both the auto-cap derivation and the
-    // keep-set (r15: the autocap path used to compute the identical
-    // groupBy twice — a full extra pass over the prefix table).
-    val ndCounts = prefixPre.groupBy(col("tok"))
+    val keepToks = prefixPre.groupBy(col("tok"))
       .agg(count(lit(1)).as("nd"))
-    // Some(bucket cap) = autoRoute engaged: the banded chain replaces the
-    // exact prefix join
-    val (effCap, route) =
-      if (maxDocsPerTok > 0) (maxDocsPerTok, None)
-      else {
-        val nDocs = prefixPre.agg(countDistinct(col("doc_id")))
-          .head().getLong(0)
-        // ONE tiny driver-side rollup — at most one row per distinct nd
-        // value, hundreds of rows — serves the template-floor cap, the
-        // candidate forecast AND the cumulative budget cap (r17 ADVICE:
-        // these were three separate Spark actions over the nd table). The
-        // join below emits C(nd, 2) rows per kept token before the
-        // distinct, so the forecast prices the pair stage exactly; on a
-        // finite-vocabulary corpus it grows ~quadratically with the corpus
-        // (the 300k-doc Zipf-ladder cliff: 11 GB → 55+ GB live scratch).
-        val rollup = countRollup(ndCounts, "nd")
-        val ac = autoCap(rollup, nDocs, templateShare, pairsIn,
-          "prefixJaccardPairs")
-        if (autoRoute && ac.overWarn) (ac.cap, Some(ac.routeBucketCap))
-        else if (maxCandidates > 0L && ac.forecast > maxCandidates) {
-          // largest nd whose CUMULATIVE forecast fits the budget
-          val (fit, _) = budgetScan(rollup.takeWhile(_._1 <= ac.cap),
-            pairsIn, _ => maxCandidates.toDouble)
-          val chosen = math.max(2L, math.min(fit, ac.cap.toLong)).toInt
-          // r17 ADVICE: when even the smallest viable cap (2) is over
-          // budget, the run PROCEEDS over budget — say so explicitly;
-          // callers using maxCandidates as a hard scratch envelope must
-          // treat this corpus as un-runnable at this budget.
-          val admitted = rollup.iterator.takeWhile(_._1 <= chosen)
-            .map(pairsIn.tupled).sum
-          log.warn(f"prefixJaccardPairs maxCandidates=$maxCandidates " +
-            f"binds: autoCap ${ac.cap} -> $chosen admits $admitted%.3e " +
-            "candidates — " + (if (admitted > maxCandidates.toDouble)
-              "NOT satisfiable, proceeding OVER budget"
-            else "clusters larger than the chosen cap lose their pairs; " +
-              "read prefixHotness' tail before trusting recall"))
-          (chosen, None)
-        } else (ac.cap, None)
-      }
-    val cand = route match {
-      case Some(routeBucketCap) =>
-        // the pinned prefix table served only the forecast — free exactly
-        // its own checkpoint blocks before the banded chain runs
-        unpinCheckpointed(prefixPre)
-        // band-bounded candidate generation at the same word-shingle
-        // width the streaming/batch minhash dedups use; the verify
-        // re-checks every candidate against the EXACT char-shingle
-        // threshold, so only recall semantics differ (see Scaladoc). The
-        // family cap is VALIDATED against the volume budget (r19: a family
-        // estimate from a smooth count distribution can be corpus-scale —
-        // see minhashCandidatesVolCapped).
-        minhashCandidatesVolCapped(docs, idCol, textCol,
-          shingleN = 3, numHashes = 16, bands = 8,
-          familyCap = routeBucketCap, label = "prefixJaccardPairs route")
-          .select(col("id_a").as("d1"), col("id_b").as("d2"))
-      case None =>
-        val keepToks = ndCounts
-          .filter(col("nd") <= effCap).select(col("tok"))
-        val prefix = prefixPre
-          .join(keepToks, "tok") // AQE broadcasts when actually small (above)
-          .select(col("doc_id"), col("n"), col("tok"))
-          // tiny (≤ prefix size per doc, cap per shingle) and consumed by
-          // BOTH sides of the candidate self-join — materialize once so
-          // the chain above doesn't run twice
-          .localCheckpoint()
-        // PPJoin length filter at the CANDIDATE level: jacc = I/U ≤
-        // min/max (I ≤ min(n_a,n_b), U ≥ max), so a pair with min·denT <
-        // max·numT cannot pass the exact threshold — dropped here, BEFORE
-        // the distinct shuffle and before the per-doc shingle arrays are
-        // hauled through the verify join (~1/3 of sf0.1 candidates die;
-        // exact math, so the oracle is untouched).
-        prefix.as("a")
-          .join(prefix.as("b"),
-            col("a.tok") === col("b.tok") && col("a.doc_id") < col("b.doc_id"))
-          .filter(least(col("a.n"), col("b.n")) * denT >=
-            greatest(col("a.n"), col("b.n")) * numT)
-          .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-          .distinct()
-    }
+      .filter(col("nd") <= maxDocsPerTok).select(col("tok"))
+    val prefix = prefixPre
+      .join(keepToks, "tok") // AQE broadcasts when actually small (above)
+      .select(col("doc_id"), col("n"), col("tok"))
+      // tiny (≤ prefix size per doc, cap per shingle) and consumed by
+      // BOTH sides of the candidate self-join — materialize once so
+      // the chain above doesn't run twice
+      .localCheckpoint()
+    // PPJoin length filter at the CANDIDATE level: jacc = I/U ≤
+    // min/max (I ≤ min(n_a,n_b), U ≥ max), so a pair with min·denT <
+    // max·numT cannot pass the exact threshold — dropped here, BEFORE
+    // the distinct shuffle and before the per-doc shingle arrays are
+    // hauled through the verify join (~1/3 of sf0.1 candidates die;
+    // exact math, so the oracle is untouched).
+    val cand = prefix.as("a")
+      .join(prefix.as("b"),
+        col("a.tok") === col("b.tok") && col("a.doc_id") < col("b.doc_id"))
+      .filter(least(col("a.n"), col("b.n")) * denT >=
+        greatest(col("a.n"), col("b.n")) * numT)
+      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
+      .distinct()
     jaccardVerify(docs, idCol, textCol, shingleK, numT, denT, cand,
       f.inputSmall)
   }
 
-  /** Exact-Jaccard verify stage shared by [[prefixJaccardPairs]]' prefix
-    * join and its autoRoute banded-minhash chain: candidates (d1, d2)
-    * join the per-doc sorted shingle-hash arrays and every pair is
-    * re-checked against the exact integer threshold, so the caller's
-    * candidate generator can only cost recall, never precision. */
+  /** Exact-Jaccard verify stage of [[prefixJaccardPairs]]: candidates
+    * (d1, d2) join the per-doc sorted shingle-hash arrays and every pair is
+    * re-checked against the exact integer threshold, so the candidate
+    * generator can only cost recall, never precision. */
   private def jaccardVerify(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int, numT: Int, denT: Int, cand: DataFrame,
       inputSmall: Boolean): DataFrame = {
@@ -1153,223 +734,58 @@ object Dedup {
     * `sorted_intersect_count`), C = n_inter/n_sub as one IEEE divide of
     * exact ints. Both directions of a mutual near-dup emit.
     *
-    * `maxDocsPerTok = 0` derives the cap from the corpus (r14, mirroring
-    * [[prefixJaccardPairs]]'s auto mode): largest dfreq below
-    * `templateShare` × docs — a quote syndicated into more articles than
-    * the default cap is recovered without hand tuning, while
-    * corpus-spanning boilerplate stays capped out.
-    *
-    * `autoRoute` (autocap mode only) mirrors [[prefixJaccardPairs]]: when
-    * the Σ dfreq² forecast exceeds the warn threshold, the prefix × index
-    * join is replaced by the UNION of two volume-capped candidate
-    * generators through one exact verify ([[containmentRoutedUnion]],
-    * r20): banded minhash for the near-identical-family blowup regime,
-    * and the one-sided rarest-k probe for asymmetric pairs (a short
-    * quote inside a much longer doc — low Jaccard, invisible to bands;
-    * measured 99% quote recall at the default budget vs 0.2% for the
-    * r19 banded-only route). HONEST CAVEAT, r20 form: the one-sided
-    * leg's recall is budget-shaped — quotes whose every rarest-k
-    * witness is hotter than the budget-derived dfreq cap are lost
-    * (measured: the cap rides at the dfreq-20 default posture when the
-    * 2× stretch affords it; a larger `spark.graft.route.scratchBytes`
-    * budget buys more — 200 candidates/doc moved the 300k cap to 394
-    * and recovered 500/500) — and rarest-k is blind to pairs whose
-    * missing fraction is exactly the sub's rarest shingles (a
-    * template-cleaned copy).
-    * When full asymmetric recall matters more than the scratch
-    * envelope, set an absolute `maxDocsPerTok` instead of routing. */
+    * A non-positive `maxDocsPerTok` is refused: it would keep no probe
+    * token, and so return no pairs. */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 8, numT: Int = 3, denT: Int = 4,
-      maxDocsPerTok: Int = 20, templateShare: Double = 0.5,
-      autoRoute: Boolean = false): DataFrame = {
+      maxDocsPerTok: Int = 20): DataFrame = {
     require(numT > 0 && denT > numT, s"threshold must be in (0,1): $numT/$denT")
-    require(maxDocsPerTok > 0 || (templateShare > 0 && templateShare <= 1),
-      s"autoCap mode needs templateShare in (0,1]: $templateShare")
-    require(!autoRoute || maxDocsPerTok <= 0,
-      "autoRoute reads the autocap forecast — with an explicit " +
-        s"maxDocsPerTok=$maxDocsPerTok the caller has already chosen")
+    require(maxDocsPerTok > 0, s"maxDocsPerTok must be > 0: $maxDocsPerTok")
     val f = shingleFront(docs, idCol, textCol, shingleK)
-    // maxDocsPerTok = 0: the autocap over FULL-corpus dfreq (the cap here
-    // binds the index side's posting lists, which carry every doc, not
-    // just prefixes); dfreq ≈ corpus size is boilerplate. The probe ×
-    // index join emits at most pc(tok) · dfreq(tok) ≤ dfreq(tok)² rows
-    // per kept token, so Σ dfreq² is a pre-join upper bound on the pair
-    // stage (the 500k Zipf q154 arm aborted at 53.8 GB live scratch where
-    // 200k ran in 4 GB). Some((bucket cap, nDocs)) = autoRoute engaged.
-    val (effCap, route) =
-      if (maxDocsPerTok > 0) (maxDocsPerTok, None)
-      else {
-        val nDocs = f.base.select(col(idCol)).distinct().count()
-        val ac = autoCap(countRollup(f.dfreq, "dfreq"), nDocs, templateShare,
-          (df, n) => n.toDouble * df.toDouble * df.toDouble,
-          "containmentPairs")
-        (ac.cap,
-          if (autoRoute && ac.overWarn) Some((ac.routeBucketCap, nDocs)) else None)
-      }
-    route match {
-      case Some((routeBucketCap, nDocs)) =>
-        // r20: the route runs the UNION of BOTH candidate generators —
-        // banded minhash AND the one-sided rarest-k probe — because they
-        // are COMPLEMENTARY, not substitutes. Banded collision ≈
-        // 1−(1−J²)^8 is blind to asymmetric pairs (0.2% measured at
-        // J≈0.03, BASELINE casym) but nails near-identical families
-        // (97.7% at J 0.59); the rarest-k probe nails quotes (a tiny sub's
-        // rarest shingles sit at dfreq≈2 — found for free) but is
-        // adversarially wrong on near-identical families, where each
-        // member's rarest shingles are its own unique tail — exactly the
-        // shingles MISSING from every other member. Each generator is
-        // volume-capped against the same stated budget (banded ≤ 1×,
-        // one-sided ≤ 2× through its dfreq-20 posture stretch), and the
-        // pinned toks table is REUSED by the one-sided probe.
-        containmentRoutedUnion(docs, idCol, textCol, shingleK, numT, denT,
-          routeBucketCap, f, nDocs)
-      case None =>
-        // probe prefix: rank by global dfreq via the native bounded k-min
-        // aggregate (no cluster-wide sort, no full per-doc array — the
-        // partial buffer caps at the prefix length, see PrefixMinK), keep the
-        // rarest n − ceil(t·n) + 1, then drop cap-hot tokens
-        val prefix = f.toks.join(f.dfreq, "tok")
-          .groupBy(col("doc_id"))
-          .agg(graft.functions.PrefixMinK.column(numT, denT)(
-            col("n"), col("dfreq"), col("tok")).as("pk"))
-          .select(col("doc_id"), explode(col("pk.items")).as("x"))
-          .select(col("doc_id"), col("x.dfreq").as("dfreq"), col("x.tok").as("tok"))
-          .filter(col("dfreq") <= effCap)
-          .select(col("doc_id"), col("tok"))
-        // index side: the RECOMPUTED plan, not the checkpoint — its join
-        // prunes the recomputed scan and pipelines (tools/P154, r11: full
-        // checkpoint here measured 5.3-5.4 s vs 4.1-4.5 s recomputing), and
-        // the kept-token build side is a real aggregate whose size AQE reads
-        // at runtime.
-        val index = f.toksPlan.join(
-          f.dfreq.filter(col("dfreq") <= effCap).select(col("tok")), "tok")
-        val cand0 = prefix.as("a")
-          .join(index.as("b"),
-            col("a.tok") === col("b.tok") && col("a.doc_id") =!= col("b.doc_id"))
-          .select(col("a.doc_id").as("sub"), col("b.doc_id").as("sup"))
-          .distinct()
-        containmentVerify(docs, idCol, textCol, shingleK, numT, denT, cand0,
-          f.inputSmall)
-    }
+    // probe prefix: the rarest n − ceil(t·n) + 1 shingles by global dfreq
+    containmentVerify(docs, idCol, textCol, shingleK, numT, denT,
+      probeCandidates(f, graft.functions.PrefixMinK.column(numT, denT),
+        maxDocsPerTok),
+      f.inputSmall)
   }
 
-  /** One-sided route probe width (r20): each prospective SUB doc probes
+  /** One-sided probe width (r20): each prospective SUB doc probes
     * its k globally-rarest char shingles. Recall contract: a pair at
     * containment exactly t is missed only when ALL k probed shingles
     * fall in the sub's missing (1−t) fraction — ≤ (1−t)^k when misses
     * are independent of rarity rank (1.5e-5 at t=3/4, 0.4% at t=1/2, at
     * k=8); EXACT (the full prefix guarantee) for subs with
-    * n − ⌈t·n⌉ + 1 ≤ k shingles — the quote/snippet class the route
+    * n − ⌈t·n⌉ + 1 ≤ k shingles — the quote/snippet class the probe
     * exists for. Adversarial caveat: a sup that strips precisely the
     * sub's rarest shingles (a template-cleaned copy) defeats the
-    * heuristic; an explicit `maxDocsPerTok` on [[containmentPairs]]
-    * keeps the exact-prefix guarantee for that shape. */
+    * heuristic; [[containmentPairs]]' full prefix keeps the exact-prefix
+    * guarantee for that shape. */
   private[graft] val OneSidedProbeK = 8
 
-  /** Recall floor on the one-sided probe's dfreq cap: dfreq ≥ 2 is the
-    * ASYMMETRIC-RECALL CONTRACT itself — a doc quoted in exactly one
-    * other doc has witness shingles at dfreq 2, so any cap ≥ 2 keeps
-    * the unique-quote class lossless (the r19 casym finding: the cap
-    * VALUE above 2 buys only background candidates). Unlike a larger
-    * floor, this one is VOLUME-SAFE by construction: admitted
-    * candidates at the floor are ≤ 2 per probe row ≤ 2k/doc, inside
-    * any sane budget. The r20 500k rehearsal is why the floor is not
-    * the default-posture 20: riding a dfreq-20 floor past the budget
-    * admitted an UNCOUNTED candidate volume and blew a 40 GB scratch
-    * budget at 44.7 GB — the same uncounted-override failure class the
-    * r19 banded-cap fix closed, one leg over. Recall above the derived
-    * cap is bought explicitly with `spark.graft.route.scratchBytes`
-    * (measured: 300k cap 20→394 at a 200/doc budget recovered 500/500). */
-  private[graft] val OneSidedCapFloor = 2
-
-  /** The exact join's default `maxDocsPerTok` — the recall posture a
-    * containmentPairs user gets without stating anything. The one-sided
-    * route stretches its volume budget up to 2× to reach it (see
-    * [[oneSidedProbeCap]]). */
-  private[graft] val OneSidedDefaultPosture = 20
-
-  /** Pure cap rule for the one-sided probe in volume (autocap) mode.
-    * The admitted volume is EXACT — Σ (n_probe_rows · dfreq) ascending
-    * is the pre-join candidate count, not an upper bound — and every
-    * admitted class is counted (the r20 500k lesson: the first floor
-    * design rode an UNCOUNTED dfreq-20 floor past the budget and blew a
-    * 40 GB scratch budget at 44.7 GB — the same uncounted-override
-    * failure class the r19 banded-cap fix closed, one leg over).
-    * Three-band rule, all bands counted:
-    *
-    *  - up to [[OneSidedDefaultPosture]] (dfreq 20, the exact join's
-    *    default cap): classes admit while cumulative ≤ 2× budget —
-    *    recall-parity with the default exact join is worth a bounded,
-    *    stated stretch (measured 300k: the FULL posture costs 36.6
-    *    cand/doc = 1.83× the 20/doc budget because the probe-dfreq
-    *    curve flattens hard past dfreq ≈ 8, while quote recall climbs
-    *    from 74% at cap 5 to 99% at cap 20 — the stretch band is where
-    *    the recall lives);
-    *  - above the posture: strictly within 1× budget
-    *    (stop-at-first-over, as [[volCappedBucketCap]]);
-    *  - never below [[OneSidedCapFloor]] (dfreq 2, the unique-quote
-    *    contract — volume-safe at ≤ 2 candidates/probe row). */
-  private[graft] def oneSidedProbeCap(rollup: Array[(Long, Long)],
-      budget: Double, label: String): Int = {
-    val (volCap, cum) = budgetScan(rollup,
-      (dfreq, nRows) => nRows.toDouble * dfreq.toDouble,
-      dfreq => if (dfreq <= OneSidedDefaultPosture) 2.0 * budget else budget)
-    val eff = math.max(OneSidedCapFloor.toLong, volCap)
-      .min(Int.MaxValue.toLong).toInt
-    val warn =
-      if (volCap < OneSidedCapFloor)
-        Some(s"the dfreq≤$OneSidedCapFloor unique-quote recall floor " +
-          s"exceeds even the 2× posture stretch (volume-derived cap " +
-          s"$volCap) — proceeding at the floor (volume-safe: ≤ 2 " +
-          "candidates per probe row)")
-      else if (eff < OneSidedDefaultPosture)
-        // the 300k rehearsal row: cap 20→394 at 200/doc recovered 500/500
-        Some(s"below the default dfreq-20 posture: quotes with no witness " +
-          s"at dfreq ≤ $eff are lost; raise spark.graft.route.scratchBytes " +
-          "to buy them back")
-      else None
-    val line = f"$label: one-sided probe cap $eff admits $cum%.3e " +
-      f"candidates (exact pre-join count, $budget%.3e budget" +
-      (if (cum > budget) ", inside the 2× posture stretch)" else ")")
-    warn.fold(log.info(line))(w => log.warn(s"$line — $w"))
-    eff
-  }
-
-  /** One-sided candidate generator shared by [[containmentPairsOneSided]]
-    * and both routed unions (ONE source of truth — the r19 lesson):
-    * directed (sub, sup) candidates from each doc's rarest-k probe
-    * against the full token index, distinct. */
-  private def oneSidedCandidates(docs: DataFrame, probeK: Int,
-      maxDocsPerTok: Int, f: Front, nDocsIn: Long, label: String): DataFrame = {
-    val probePlan = f.toks.join(f.dfreq, "tok")
+  /** Directed (sub, sup) candidates of the containment joins: each doc's
+    * probe tokens — `pick` over its (n, dfreq, tok) rows: the rarest
+    * prefix, or the rarest k — that sit in at most `maxDocsPerTok` docs,
+    * joined against the full token index, distinct. `pick` is a native
+    * bounded k-min aggregate (no cluster-wide sort, no full per-doc array
+    * — the partial buffer caps at the probe length, see PrefixMinK). */
+  private def probeCandidates(f: Front,
+      pick: (Column, Column, Column) => Column,
+      maxDocsPerTok: Int): DataFrame = {
+    val probe = f.toks.join(f.dfreq, "tok")
       .groupBy(col("doc_id"))
-      .agg(graft.functions.PrefixMinK.columnK(probeK)(
-        col("n"), col("dfreq"), col("tok")).as("pk"))
+      .agg(pick(col("n"), col("dfreq"), col("tok")).as("pk"))
       .select(col("doc_id"), explode(col("pk.items")).as("x"))
       .select(col("doc_id"), col("x.dfreq").as("dfreq"),
         col("x.tok").as("tok"))
-    val (probe, effCap) =
-      if (maxDocsPerTok > 0) (probePlan, maxDocsPerTok)
-      else {
-        // volume mode: the probe is ≤ probeK rows per doc — checkpoint
-        // it (tiny, and its lineage is the full toks ⋈ dfreq aggregate)
-        // so the rollup action and the candidate join share one pass
-        val p = probePlan.localCheckpoint()
-        val rollup = countRollup(p, "dfreq")
-        val nDocs =
-          if (nDocsIn > 0) nDocsIn
-          else p.select(col("doc_id")).distinct().count()
-        val budget = routeCandidateBudget(docs.sparkSession, nDocs)
-        (p, oneSidedProbeCap(rollup, budget, label))
-      }
-    // index side: the RECOMPUTED token plan pre-filtered to sub-cap
-    // tokens — semantically a no-op under the join equality (the probe
-    // side already dropped cap-hot rows) but it keeps hot-token rows out
-    // of the exchange; same shape and rationale as containmentPairs'
-    // exact index.
+    // index side: the RECOMPUTED token plan, not the checkpoint — its join
+    // prunes the recomputed scan and pipelines (tools/P154, r11: full
+    // checkpoint here measured 5.3-5.4 s vs 4.1-4.5 s recomputing), and
+    // the kept-token build side is a real aggregate whose size AQE reads
+    // at runtime. Pre-filtering it to sub-cap tokens is a no-op under the
+    // join equality, but it keeps hot-token rows out of the exchange.
     val index = f.toksPlan.join(
-      f.dfreq.filter(col("dfreq") <= effCap).select(col("tok")), "tok")
-    probe.filter(col("dfreq") <= effCap)
+      f.dfreq.filter(col("dfreq") <= maxDocsPerTok).select(col("tok")), "tok")
+    probe.filter(col("dfreq") <= maxDocsPerTok)
       .select(col("doc_id"), col("tok")).as("a")
       .join(index.as("b"),
         col("a.tok") === col("b.tok") && col("a.doc_id") =!= col("b.doc_id"))
@@ -1377,115 +793,83 @@ object Dedup {
       .distinct()
   }
 
-  /** The routed unions' one assembly: the symmetric banded pairs `sym`
-    * (id_a < id_b) in BOTH directions, unioned with the directed
-    * one-sided candidates, distinct — the generators overlap on pairs
-    * that are both near-identical and mutually containing — through ONE
-    * exact verify. */
-  private def unionVerify(docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int, numT: Int, denT: Int, sym: DataFrame,
-      oneSided: DataFrame, inputSmall: Boolean): DataFrame =
-    containmentVerify(docs, idCol, textCol, shingleK, numT, denT,
-      sym.select(col("id_a").as("sub"), col("id_b").as("sup"))
-        .unionByName(sym.select(col("id_b").as("sub"), col("id_a").as("sup")))
-        .unionByName(oneSided).distinct(),
-      inputSmall)
-
-  /** The r20 routed chain [[containmentPairs]] swaps in under
-    * `autoRoute`: the DISTINCT UNION of the banded-minhash candidates
-    * (both directions, volume-capped bucket cap) and the one-sided
-    * rarest-k candidates (volume-capped probe cap), through ONE shared
-    * exact verify — ≤ 3× the single-generator candidate budget by
-    * construction (banded ≤ 1×, one-sided ≤ 2× through its posture
-    * stretch). `f` is the caller's [[shingleFront]], pinned toks
-    * included; `nDocsIn` ≤ 0 makes the one-sided leg count the docs. */
-  private[graft] def containmentRoutedUnion(docs: DataFrame, idCol: String,
-      textCol: String, shingleK: Int, numT: Int, denT: Int,
-      maxBucket: Int, f: Front, nDocsIn: Long): DataFrame = {
-    val sym = minhashCandidatesVolCapped(docs, idCol, textCol, shingleN = 3,
-      numHashes = 16, bands = 8, familyCap = maxBucket,
-      label = "containmentRoutedUnion")
-      .localCheckpoint()
-    val oneSided = oneSidedCandidates(docs, OneSidedProbeK,
-      maxDocsPerTok = 0, f, nDocsIn, "containmentRoutedUnion")
-    unionVerify(docs, idCol, textCol, shingleK, numT, denT, sym, oneSided,
-      f.inputSmall)
-  }
-
-  /** Oracle-portable twin of [[containmentRoutedUnion]] (the q261
-    * correctness witness, same relationship as
-    * [[minhashCandidatesPortable]] to [[minhashCandidatesVolCapped]]): md5-lane
-    * banded candidates (every hash md5/substring/MIN — semantics a
-    * DuckDB oracle reproduces verbatim) in BOTH directions, unioned
-    * with the one-sided rarest-k candidates at an EXPLICIT dfreq cap
-    * (the `row_number() ≤ k AND dfreq ≤ cap` mirror), distinct, through
-    * the ONE shared exact verify. The production route keeps the
-    * xxhash64 lanes and the volume-derived caps; this pins the union
-    * ASSEMBLY — dedupe across generators, verify-once, both-directions
-    * banded emit — under the oracle. */
+  /** Union of two candidate generators through one exact containment
+    * verify (the q261 contract): md5-lane banded candidates
+    * ([[minhashCandidatesPortable]] — every hash md5/substring/MIN,
+    * semantics a DuckDB oracle reproduces verbatim) in BOTH directions,
+    * unioned with the one-sided rarest-k candidates at an explicit dfreq
+    * cap (the `row_number() ≤ k AND dfreq ≤ cap` mirror), distinct — the
+    * generators overlap on pairs that are both near-identical and
+    * mutually containing — through ONE shared exact verify.
+    *
+    * The two generators are COMPLEMENTARY, not substitutes. Banded
+    * collision ≈ 1−(1−J²)^8 is blind to asymmetric pairs (0.2% measured
+    * at J≈0.03, BASELINE casym) but nails near-identical families (97.7%
+    * at J 0.59); the rarest-k probe nails quotes (a tiny sub's rarest
+    * shingles sit at dfreq≈2 — found for free) but is adversarially
+    * wrong on near-identical families, where each member's rarest
+    * shingles are its own unique tail — exactly the shingles MISSING
+    * from every other member. */
   def containmentUnionPortable(docs: DataFrame, idCol: String,
       textCol: String, shingleK: Int = 8, numT: Int = 3, denT: Int = 4,
       probeK: Int = 8, maxDocsPerTok: Int = 20,
-      // 8 bands of 2 lanes, the PRODUCTION route's banding (collision
-      // 1−(1−J²)⁸) — the q29-default 4×4 layout measurably misses ~5 of
-      // the spec corpus's 1560 family pairs ((1−J⁴)⁴ at J≈0.86), which
-      // the one-sided leg cannot recover (blind to families by design)
+      // 8 bands of 2 lanes (collision 1−(1−J²)⁸) — the q29-default 4×4
+      // layout measurably misses ~5 of the spec corpus's 1560 family pairs
+      // ((1−J⁴)⁴ at J≈0.86), which the one-sided leg cannot recover
+      // (blind to families by design)
       bands: Int = 8,
       maxBucket: Int = 1000): DataFrame = {
-    require(maxDocsPerTok > 0, "the portable twin is explicit-cap only " +
-      "(the oracle mirrors the cap); use containmentPairs(autoRoute) " +
-      "for the volume-budgeted production route")
+    require(maxDocsPerTok > 0, s"maxDocsPerTok must be > 0: $maxDocsPerTok")
     val f = shingleFront(docs, idCol, textCol, shingleK)
     val sym = minhashCandidatesPortable(docs, idCol, textCol,
       shingleN = 3, numHashes = 16, bands = bands, maxBucket = maxBucket)
-    val oneSided = oneSidedCandidates(docs, probeK, maxDocsPerTok, f,
-      nDocsIn = -1L, "containmentUnionPortable")
-    unionVerify(docs, idCol, textCol, shingleK, numT, denT, sym, oneSided,
+    containmentVerify(docs, idCol, textCol, shingleK, numT, denT,
+      sym.select(col("id_a").as("sub"), col("id_b").as("sup"))
+        .unionByName(sym.select(col("id_b").as("sub"), col("id_a").as("sup")))
+        .unionByName(probeCandidates(f,
+          graft.functions.PrefixMinK.columnK(probeK), maxDocsPerTok))
+        .distinct(),
       f.inputSmall)
   }
 
-  /** The ONE-SIDED containment route (r20 — the asymmetric-recall path
-    * the banded route measurably lacks: BASELINE casym, 0.2% routed
+  /** The ONE-SIDED containment join (r20 — the asymmetric-recall path
+    * banded candidates measurably lack: BASELINE casym, 0.2% banded
     * recall at J≈0.03 vs 100% for the 19×-wall/225×-scratch exact
     * join). Candidates come from the SUBSET side only: each doc probes
     * its [[OneSidedProbeK]] globally-rarest char-`shingleK` shingles
     * (native bounded `rarest_min_k` aggregate — the map-side partial
     * never holds more than k pairs) against the FULL token index,
-    * capped at `maxDocsPerTok` (explicit mode) or at the largest dfreq
-    * the candidate-volume budget affords ([[oneSidedProbeCap]], autocap
-    * mode). A tiny-quote sub probes dfreq≈2 shingles by construction,
-    * so its posting lists — and hence the whole quote-in-doc candidate
-    * class — are cheap no matter how large the corpus: candidate volume
-    * is EXACTLY Σ dfreq over kept probe rows, ≤ budget by construction.
-    * Verification is the shared exact merge-scan
+    * capped at `maxDocsPerTok`. A tiny-quote sub probes dfreq≈2
+    * shingles by construction, so its posting lists — and hence the
+    * whole quote-in-doc candidate class — are cheap no matter how large
+    * the corpus: candidate volume is EXACTLY Σ dfreq over kept probe
+    * rows. Verification is the shared exact merge-scan
     * ([[containmentVerify]]); candidate generation costs recall only,
     * never precision. Both directions of a mutual near-dup emit (every
     * doc probes as its own sub).
     *
-    * Standalone entry for the quote-in-doc/contamination check q259
-    * runs (the same generator as [[containmentPairs]]' route branch).
-    * `maxDocsPerTok > 0` = explicit cap (oracle-mirrorable: probe =
-    * `row_number() OVER (PARTITION BY doc ORDER BY dfreq, tok) ≤ probeK
-    * AND dfreq ≤ cap`); 0 = the volume-budgeted autocap
-    * ([[routeCandidateBudget]]). */
+    * The quote-in-doc/contamination check q259 runs. Oracle-mirrorable:
+    * probe = `row_number() OVER (PARTITION BY doc ORDER BY dfreq, tok) ≤
+    * probeK AND dfreq ≤ cap`. A non-positive `maxDocsPerTok` is refused:
+    * it would keep no probe token, and so return no pairs. */
   def containmentPairsOneSided(docs: DataFrame, idCol: String,
       textCol: String, shingleK: Int = 8, numT: Int = 3, denT: Int = 4,
-      probeK: Int = OneSidedProbeK, maxDocsPerTok: Int = 0): DataFrame = {
+      probeK: Int = OneSidedProbeK, maxDocsPerTok: Int = 20): DataFrame = {
     require(numT > 0 && denT > numT, s"threshold must be in (0,1): $numT/$denT")
     require(probeK > 0, s"probeK must be > 0: $probeK")
+    require(maxDocsPerTok > 0, s"maxDocsPerTok must be > 0: $maxDocsPerTok")
     val f = shingleFront(docs, idCol, textCol, shingleK)
     containmentVerify(docs, idCol, textCol, shingleK, numT, denT,
-      oneSidedCandidates(docs, probeK, maxDocsPerTok, f, nDocsIn = -1L,
-        "containmentOneSided"),
+      probeCandidates(f, graft.functions.PrefixMinK.columnK(probeK),
+        maxDocsPerTok),
       f.inputSmall)
   }
 
-  /** Exact directed-containment verify stage shared by
-    * [[containmentPairs]]' prefix × index join and its autoRoute
-    * banded-minhash chain: candidates (sub, sup) join the per-doc sorted
-    * shingle-hash arrays and C(sub→sup) = I/n_sub is re-checked against
-    * the exact integer threshold — candidate generators cost recall
-    * only, never precision. */
+  /** Exact directed-containment verify stage shared by the containment
+    * joins: candidates (sub, sup) join the per-doc sorted shingle-hash
+    * arrays and C(sub→sup) = I/n_sub is re-checked against the exact
+    * integer threshold — candidate generators cost recall only, never
+    * precision. */
   private def containmentVerify(docs: DataFrame, idCol: String,
       textCol: String, shingleK: Int, numT: Int, denT: Int,
       cand0: DataFrame, inputSmall: Boolean): DataFrame = {

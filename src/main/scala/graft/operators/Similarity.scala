@@ -21,46 +21,20 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Checkpoint a bucket-size table in autocap mode only: the autocap
-    * rollup is a separate action, so without the pin the keep join
-    * recomputes the signature pass; explicit-cap mode has one consumer
-    * and pinning would only add a pass (BASELINE.md "r19: the LSH
-    * autocap pin, settled fresh-JVM"). */
-  private def maybePinSizes(sizes: DataFrame, autoCap: Boolean): DataFrame =
-    if (autoCap) sizes.localCheckpoint() else sizes
-
   /** The hot-bucket cap of the LSH joins: `rows` semi-joined against the
-    * `keys` buckets holding at most the cap (the partial aggregate
+    * `keys` buckets holding at most `maxBucket` rows (the partial aggregate
     * collapses a collapsed-signature bucket map-side, and AQE broadcasts
     * the ≤ 2^bits-row bucket list). `maxBucket` = Int.MaxValue is off
-    * (`rows` unchanged); 0 derives the cap through [[Dedup.autoCap]] over
-    * the bucket-size rollup, whose forecast is the C(m, 2) pairs the
-    * within-bucket self-join emits per kept bucket (r17). */
+    * (`rows` unchanged). A non-positive cap is a caller arithmetic bug
+    * (e.g. an Int-wrapped value) and fails loudly instead of refusing
+    * every bucket. */
   private def capBuckets(rows: DataFrame, keys: Seq[String],
-      vectors: DataFrame, maxBucket: Int, templateShare: Double,
-      label: String): DataFrame = {
-    // Only the documented 0 sentinel selects autoCap — a negative cap is a
-    // caller arithmetic bug (e.g. an Int-wrapped value) and must fail loudly
-    // rather than silently derive a cap from the data (r14 ADVICE).
-    require(maxBucket >= 0,
-      s"maxBucket must be >= 0 (0 = derive from the bucket-size " +
-        s"distribution): $maxBucket")
-    require(maxBucket > 0 || (templateShare > 0 && templateShare <= 1),
-      s"autoCap mode needs templateShare in (0,1]: $templateShare")
+      maxBucket: Int): DataFrame = {
+    require(maxBucket > 0, s"maxBucket must be > 0: $maxBucket")
     if (maxBucket == Int.MaxValue) rows
-    else {
-      val sizes = maybePinSizes(rows.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("m")), autoCap = maxBucket == 0)
-      val effCap =
-        if (maxBucket > 0) maxBucket.toLong
-        else {
-          val nVecs = vectors.count()
-          Dedup.autoCap(Dedup.countRollup(sizes, "m"), nVecs, templateShare,
-            Dedup.pairsIn, label).cap.toLong
-        }
-      rows.join(sizes.filter(col("m") <= effCap).select(keys.map(col): _*),
-        keys)
-    }
+    else rows.join(rows.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("m"))
+      .filter(col("m") <= maxBucket.toLong).select(keys.map(col): _*), keys)
   }
 
   /** Element-wise dot product — native compiled loop
@@ -299,14 +273,11 @@ object Similarity {
     * COLLAPSE (an m ≈ corpus bucket whose pair set is a disguised cross
     * join), not for shaving genuine clusters; read [[bucketHotness]] first.
     * Defaults to `Int.MaxValue` (off — every bucket scored, the exact
-    * within-bucket semantics the oracle checks); `0` derives the cap from
-    * the bucket-size distribution itself: the largest m strictly below
-    * `templateShare` × the vector count, so genuine clusters (m ≪ corpus)
-    * survive whole and only collapse-scale buckets are refused. */
+    * within-bucket semantics the oracle checks). */
   def lshNearPairs(vectors: DataFrame, idCol: String, vecCol: String,
       bits: Int = 16, minSim: Double = 0.9,
       signature: (Column, Int) => Column = hyperplaneSignature,
-      maxBucket: Int = Int.MaxValue, templateShare: Double = 0.5): DataFrame = {
+      maxBucket: Int = Int.MaxValue): DataFrame = {
     // Carry a per-row norm column through the join (computed once per
     // vector; the join shuffle materializes it) so each candidate pair
     // costs one native dot product + a multiply. Normalizing the array
@@ -315,8 +286,7 @@ object Similarity {
     val sig0 = vectors.select(col(idCol).as("vid"), col(vecCol).as("v"),
       sqrt(dot(col(vecCol), col(vecCol))).as("nrm"),
       signature(col(vecCol), bits).as("bucket"))
-    val sig = capBuckets(sig0, Seq("bucket"), vectors, maxBucket,
-      templateShare, "lshNearPairs")
+    val sig = capBuckets(sig0, Seq("bucket"), maxBucket)
     val a = sig.as("a"); val b = sig.as("b")
     a.join(b, col("a.bucket") === col("b.bucket") && col("a.vid") < col("b.vid"))
       .select(col("a.vid").as("id_a"), col("b.vid").as("id_b"),
@@ -342,13 +312,13 @@ object Similarity {
     * two endpoints' vectors back by id. That is one more shuffle than the
     * single-table shape (which carries vectors through its one bucket
     * join) — the right trade whenever d ≫ the id width, i.e. always at
-    * embedding scale. `maxBucket`/`templateShare` cap per (table, bucket)
+    * embedding scale. `maxBucket` caps per (table, bucket)
     * exactly as in [[lshNearPairs]] (a collapsed bucket in ONE table does
     * not poison the others). */
   def lshNearPairsTables(vectors: DataFrame, idCol: String, vecCol: String,
       bits: Int = 16, minSim: Double = 0.9, tables: Int = 2,
       signatureAt: (Column, Int, Int) => Column = hyperplaneSignatureAt,
-      maxBucket: Int = Int.MaxValue, templateShare: Double = 0.5): DataFrame = {
+      maxBucket: Int = Int.MaxValue): DataFrame = {
     require(tables >= 1, s"tables must be >= 1: $tables")
     val base = vectors.select(col(idCol).as("vid"), col(vecCol).as("v"),
       sqrt(dot(col(vecCol), col(vecCol))).as("nrm"))
@@ -358,8 +328,7 @@ object Similarity {
           signatureAt(col(vecCol), bits, l).as("bucket"))): _*)).as("s"))
       .select(col("vid"), col("s.tbl").as("tbl"), col("s.bucket").as("bucket"))
     // a collapsed bucket in ONE table does not poison the others
-    val kept = capBuckets(sigs, Seq("tbl", "bucket"), vectors, maxBucket,
-      templateShare, "lshNearPairsTables")
+    val kept = capBuckets(sigs, Seq("tbl", "bucket"), maxBucket)
     val a = kept.as("a"); val b = kept.as("b")
     val cand = a.join(b, col("a.tbl") === col("b.tbl") &&
         col("a.bucket") === col("b.bucket") && col("a.vid") < col("b.vid"))
@@ -400,7 +369,7 @@ object Similarity {
     * match. The probe-side vector is joined back by id after candidate
     * generation, exactly like the multi-table chain.
     *
-    * `maxBucket`/`templateShare` keep [[lshNearPairs]]'s contract:
+    * `maxBucket` keeps [[lshNearPairs]]'s contract:
     * members of a refused (collapsed) HOME bucket produce no pairs at all
     * — they are dropped from both the home side and the probe side, so a
     * collapse-scale bucket cannot leak its quadratic pair set through a
@@ -411,16 +380,14 @@ object Similarity {
       vecCol: String, bits: Int = 16, minSim: Double = 0.9,
       probes: Int = -1,
       signature: (Column, Int) => Column = hyperplaneSignature,
-      maxBucket: Int = Int.MaxValue, templateShare: Double = 0.5)
-      : DataFrame = {
+      maxBucket: Int = Int.MaxValue): DataFrame = {
     val nProbes = if (probes < 0) bits else probes
     require(nProbes <= bits,
       s"probes must be <= bits (one flip per signature bit): $probes")
     val home0 = vectors.select(col(idCol).as("vid"), col(vecCol).as("v"),
       sqrt(dot(col(vecCol), col(vecCol))).as("nrm"),
       signature(col(vecCol), bits).as("bucket"))
-    val home = capBuckets(home0, Seq("bucket"), vectors, maxBucket,
-      templateShare, "lshNearPairsMultiProbe")
+    val home = capBuckets(home0, Seq("bucket"), maxBucket)
     // probe side: home bucket + one flip per probed bit. The signature is
     // projected ONCE as an attribute below the explode and the probe
     // array is (probes + 1) one-instruction xor flips of that attribute
@@ -464,32 +431,8 @@ object Similarity {
     * singleton buckets) report is_dup = false, dup_of = -1. */
   def embeddingNearDup(vectors: DataFrame, idCol: String, vecCol: String,
       bits: Int = 16, minSim: Double = 0.9,
-      signature: (Column, Int) => Column = hyperplaneSignature,
-      maxBucket: Int = Int.MaxValue, templateShare: Double = 0.5,
-      tables: Int = 1,
-      signatureAt: (Column, Int, Int) => Column = hyperplaneSignatureAt,
-      probes: Int = 0)
-      : DataFrame = {
-    // tables = 1, probes = 0 keeps the measured single-table plan
-    // (signature applies); tables > 1 routes through the OR-construction
-    // chain, whose plane families come from signatureAt (the single-table
-    // `signature` lambda cannot say what its table-2 planes would be);
-    // probes > 0 routes through the Hamming-probe chain on the ONE
-    // `signature` table — the two recall knobs are alternatives, not
-    // composable (pick bucketing-cost OR probe-fanout)
-    require(tables <= 1 || probes <= 0,
-      s"tables and probes are alternative recall knobs — set one: " +
-        s"tables=$tables probes=$probes")
-    val pairs =
-      if (probes > 0)
-        lshNearPairsMultiProbe(vectors, idCol, vecCol, bits, minSim,
-          probes, signature, maxBucket, templateShare)
-      else if (tables <= 1)
-        lshNearPairs(vectors, idCol, vecCol, bits, minSim, signature,
-          maxBucket, templateShare)
-      else
-        lshNearPairsTables(vectors, idCol, vecCol, bits, minSim, tables,
-          signatureAt, maxBucket, templateShare)
+      signature: (Column, Int) => Column = hyperplaneSignature): DataFrame = {
+    val pairs = lshNearPairs(vectors, idCol, vecCol, bits, minSim, signature)
     // earliest-wins: min over the (already sparse) near-pair edges keyed
     // by the later endpoint — one hash aggregate over candidate ids
     val dupOf = pairs.groupBy(col("id_b").as(idCol))

@@ -113,7 +113,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(pairs == Set((0L, 1L)))
   }
 
-  test("LSH hot-bucket cap: hotness reads the collapse, autoCap keeps genuine clusters") {
+  test("LSH hot-bucket cap: hotness reads the collapse, an explicit cap keeps " +
+      "genuine clusters") {
     // 40 identical "template" vectors (signature collapse — their bucket's
     // pair set is a disguised cross join), a 3-member genuine cluster in a
     // different direction, and 5 alternating-sign singletons
@@ -143,43 +144,12 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(capped == clusterPairs, s"capped: $capped")
 
-    // autoCap (maxBucket = 0): templateShare 0.5 × 48 vectors refuses the
-    // 40-bucket, keeps everything below — same pairs, no hand-chosen cap
-    val auto = Similarity.lshNearPairs(vecs, "vec_id", "embedding",
-        bits = 8, minSim = 0.99, maxBucket = 0)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(auto == clusterPairs, s"auto: $auto")
-
     // cap off (default): superset — the template bucket's quadratic pair
     // set is back, identical vectors at sim 1
     val off = Similarity.lshNearPairs(vecs, "vec_id", "embedding",
         bits = 8, minSim = 0.99)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(off.size == clusterPairs.size + 40 * 39 / 2, s"off size: ${off.size}")
-  }
-
-  test("LSH autocap reads the bucket-size table from a checkpoint; an " +
-      "explicit cap recomputes it in the main job (BASELINE r19)") {
-    val vecs = ((0L until 6L).map(i => (i, Array.tabulate(8)(j => (j + 1).toFloat))) ++
-      (10L until 13L).map(i => (i, Array.tabulate(8)(j =>
-        if (j % 2 == 0) -2f else 1f)))).toDF("vec_id", "embedding")
-    // the checkpointed scans that carry a bucket-size column `m`
-    def sizeScans(pairs: DataFrame): Seq[Boolean] =
-      pairs.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.LogicalRDD
-            if r.output.exists(_.name == "m") => r.rdd.isCheckpointed
-      }
-    Seq[Int => DataFrame](
-      c => Similarity.lshNearPairs(vecs, "vec_id", "embedding", bits = 8,
-        maxBucket = c),
-      c => Similarity.lshNearPairsTables(vecs, "vec_id", "embedding",
-        bits = 8, maxBucket = c),
-      c => Similarity.lshNearPairsMultiProbe(vecs, "vec_id", "embedding",
-        bits = 8, maxBucket = c)).foreach { lsh =>
-      // one scan per side of the candidate self-join
-      assert(sizeScans(lsh(0)).distinct == Seq(true), "autocap must pin")
-      assert(sizeScans(lsh(4)).isEmpty, "explicit cap must not pin")
-    }
   }
 
   test("multi-table LSH: table 0 reproduces the single table, OR lifts " +
@@ -235,12 +205,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val capped = pairsOf(Similarity.lshNearPairsTables(collapse, "vec_id",
       "embedding", bits = 8, minSim = 0.99, tables = 2, maxBucket = 10))
     assert(capped.toSet == Set((100L, 101L)), s"capped: $capped")
-    // embeddingNearDup routes tables > 1 through the same chain
-    val nd = Similarity.embeddingNearDup(collapse, "vec_id", "embedding",
-        bits = 8, minSim = 0.99, maxBucket = 10, tables = 2)
-      .as[(Long, Boolean, Long)].collect()
-      .map { case (id, d, of) => id -> ((d, of)) }.toMap
-    assert(nd(101L) == ((true, 100L)) && nd(100L) == ((false, -1L)))
   }
 
   test("multi-probe LSH: equals the declarative Hamming<=1 predicate, " +
@@ -307,18 +271,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
       "vec_id", "embedding", bits = 8, minSim = -1.0, maxBucket = 10))
     assert(capped.toSet == Set((100L, 101L)), s"capped: $capped")
 
-    // embeddingNearDup routes probes > 0 through the same chain (and
-    // refuses the two knobs together — they are alternatives)
-    val nd = Similarity.embeddingNearDup(collapse, "vec_id", "embedding",
-        bits = 8, minSim = 0.99, maxBucket = 10, probes = 8)
-      .as[(Long, Boolean, Long)].collect()
-      .map { case (id, d, of) => id -> ((d, of)) }.toMap
-    assert(nd(101L) == ((true, 100L)) && nd(100L) == ((false, -1L)))
-    intercept[IllegalArgumentException] {
-      Similarity.embeddingNearDup(collapse, "vec_id", "embedding",
-        tables = 2, probes = 8)
-    }
-
     // lattice family: the board query's exact configuration agrees with
     // the declarative predicate too (4-bit lattice signature)
     val latSigs = vecs.select(col("vec_id"),
@@ -345,261 +297,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"multiprobe plan degenerated to pair enumeration:\n$plan")
-  }
-
-  test("prefixJaccardPairs maxCandidates budget binds the auto cap") {
-    import spark.implicits._
-    // two clusters of identical docs: size 4 (6 pairs) and size 10 (45
-    // pairs). Every prefix token of a cluster member has nd = cluster
-    // size, so a budget that affords the nd=4 cumulative forecast but
-    // not the nd=10 one must cap at 4 and keep ONLY the small cluster's
-    // pairs — the documented recall trade, chosen by budget.
-    val textA = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val textB = "nova pulsar quasar nebula comet meteor aurora eclipse orbit"
-    val docs = ((0L until 4L).map(i => (i, textA)) ++
-      (10L until 20L).map(i => (i, textB))).toDF("doc_id", "text")
-    def pairsOf(df: org.apache.spark.sql.DataFrame) =
-      df.select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val aPairs = (for { a <- 0L until 4L; b <- (a + 1) until 4L }
-      yield (a, b)).toSet
-    val bPairs = (for { a <- 10L until 20L; b <- (a + 1) until 20L }
-      yield (a, b)).toSet
-
-    // budget off: autocap (templateShare 1.0 keeps both clusters; the
-    // default 0.5 floor at 14 docs would refuse the 10-cluster anyway)
-    val off = pairsOf(Dedup.prefixJaccardPairs(docs, "doc_id", "text",
-      maxDocsPerTok = 0, templateShare = 1.0))
-    assert(off == aPairs ++ bPairs, s"budget-off pairs: $off")
-
-    // a budget strictly between the nd=4 cumulative forecast and the
-    // full (nd=10) one must choose cap 4. Derive it from the corpus's
-    // OWN nd distribution via prefixHotness (r17 ADVICE: the previous
-    // hard-coded 1000 sat ~6% below the nd=10 sum, so an unrelated
-    // shingle-normalization change could flip the cap choice without
-    // any budget-logic regression) — the midpoint is maximally robust.
-    val ndDist = Dedup.prefixHotness(docs, "doc_id", "text")
-      .as[(Long, Long)].collect().toMap
-    def cumPairs(cap: Long): Double = ndDist.iterator
-      .filter(_._1 <= cap)
-      .map { case (nd, nToks) => nToks.toDouble * nd * (nd - 1) / 2 }.sum
-    val cum4 = cumPairs(4L); val cum10 = cumPairs(10L)
-    assert(cum4 > 0 && cum10 > cum4, s"fixture lost its two bands: $ndDist")
-    val budget = ((cum4 + cum10) / 2).toLong
-    val budgeted = pairsOf(Dedup.prefixJaccardPairs(docs, "doc_id", "text",
-      maxDocsPerTok = 0, templateShare = 1.0, maxCandidates = budget))
-    assert(budgeted == aPairs, s"budgeted pairs: $budgeted")
-    // and the budget-chosen cap is exactly the explicit-cap semantics
-    val explicit = pairsOf(Dedup.prefixJaccardPairs(docs, "doc_id", "text",
-      maxDocsPerTok = 4))
-    assert(budgeted == explicit)
-
-    // a budget larger than the full forecast changes nothing
-    val loose = pairsOf(Dedup.prefixJaccardPairs(docs, "doc_id", "text",
-      maxDocsPerTok = 0, templateShare = 1.0, maxCandidates = 100000000L))
-    assert(loose == off)
-    // refused alongside an explicit cap — the caller already chose
-    intercept[IllegalArgumentException] {
-      Dedup.prefixJaccardPairs(docs, "doc_id", "text",
-        maxDocsPerTok = 4, maxCandidates = 10L)
-    }
-
-    // degenerate budget (r17 ADVICE): a corpus of identical-doc PAIRS —
-    // every prefix token at nd = 2, so the nd=2 band ALONE exceeds a
-    // budget of 5 and no viable cap satisfies it. The documented
-    // contract is PROCEED at the floor cap with a loud not-satisfiable
-    // warn, never a silent empty result: all pairs still emit.
-    val pairTexts = (0 until 12).map(k =>
-      (0 until 10).map(j => f"pp$k%02dw$j%02d").mkString(" "))
-    val pairDocs = pairTexts.zipWithIndex.flatMap { case (t, k) =>
-      Seq((100L + 2 * k, t), (101L + 2 * k, t)) }.toDF("doc_id", "text")
-    val wantPairs = (0 until 12).map(k => (100L + 2 * k, 101L + 2 * k)).toSet
-    val overBudget = pairsOf(Dedup.prefixJaccardPairs(pairDocs, "doc_id",
-      "text", maxDocsPerTok = 0, templateShare = 1.0, maxCandidates = 5L))
-    assert(overBudget == wantPairs, s"over-budget floor run: $overBudget")
-  }
-
-  test("autoRoute: forecast blowout switches prefixJaccardPairs and " +
-      "containmentPairs to banded-minhash candidates (r17 VERDICT 4)") {
-    import spark.implicits._
-    // rehearsal corpus shape in miniature: two large near-identical
-    // families — the finite-vocabulary regime where every family
-    // member's prefix tokens sit at nd ≈ family size, just BELOW the
-    // share floor, so the share-derived autocap admits a ~quadratic
-    // candidate volume — plus per-doc-unique lone docs that pair nothing.
-    val wordsA = (0 until 120).map(i => f"alpha$i%03d").mkString(" ")
-    val wordsB = (0 until 120).map(i => f"bravo$i%03d").mkString(" ")
-    val clusterA = (0L until 120L).map(i => (i, s"$wordsA tl$i"))
-    val clusterB = (1000L until 1120L).map(i => (i, s"$wordsB tl$i"))
-    val lone = (2000L until 2010L).map(i =>
-      (i, (0 until 12).map(j => f"solo${i}x$j%02d").mkString(" ")))
-    val all = clusterA ++ clusterB ++ lone
-    val d = all.toDF("doc_id", "text")
-
-    // ground truth by brute force over the same normalize+shingle
-    // semantics, within the families only (lone docs share no 8-gram
-    // with anything; cross-family vocab is disjoint)
-    def sh(s: String): Set[String] =
-      s.trim.toLowerCase.replaceAll("\\s+", " ").sliding(8).toSet
-    val sets = all.map { case (id, t) => id -> sh(t) }.toMap
-    def familyTruth(ids: Seq[Long]): Set[(Long, Long)] =
-      (for {
-        i <- ids.indices.iterator
-        j <- (i + 1) until ids.size
-        inter = (sets(ids(i)) & sets(ids(j))).size
-        union = sets(ids(i)).size + sets(ids(j)).size - inter
-        if 5 * inter >= 3 * union
-      } yield (ids(i), ids(j))).toSet
-    val truth = familyTruth(clusterA.map(_._1)) ++
-      familyTruth(clusterB.map(_._1))
-    assert(truth.size == 2 * (119 * 120 / 2), s"fixture drift: ${truth.size}")
-
-    // the forecast must clear the warn threshold (route trigger): ~336
-    // shared prefix tokens per family at nd ≈ 120 → ~4.8e6 admitted
-    // candidates > WarnCandidatesPerDoc × 250 docs. Routed run = banded-minhash
-    // candidates + the SAME exact verify: full recall here (a 0.94
-    // word-shingle near-dup misses all 8 bands w.p. ~3e-8), zero false
-    // positives by construction.
-    val routed = Dedup.prefixJaccardPairs(d, "doc_id", "text",
-      maxDocsPerTok = 0, autoRoute = true)
-    val routedPlan = routed.queryExecution.optimizedPlan.toString
-    // engagement proof: the candidate join runs on the banded (band, bh)
-    // bucket columns; the un-routed exact path joins on prefix tok rows
-    // and never materializes band hashes
-    assert(routedPlan.contains("bh#"),
-      s"autoRoute did not engage (no banded chain in plan):\n$routedPlan")
-    val routedPairs = routed.select("id_a", "id_b")
-      .as[(Long, Long)].collect().toSet
-    assert(routedPairs == truth,
-      s"routed pairs: extra=${routedPairs -- truth} " +
-        s"missing=${truth -- routedPairs}")
-    // same corpus, same autocap, autoRoute off: the exact join is kept
-    // (no lanes in the plan) and — the families being admitted by the
-    // share floor — finds the same truth, proving the route changed the
-    // CANDIDATE GENERATOR, not the semantics
-    val exact = Dedup.prefixJaccardPairs(d, "doc_id", "text",
-      maxDocsPerTok = 0)
-    assert(!exact.queryExecution.optimizedPlan.toString.contains("bh#"))
-    val exactPairs = exact.select("id_a", "id_b")
-      .as[(Long, Long)].collect().toSet
-    assert(exactPairs == truth)
-
-    // containment: the r20 UNION route — banded candidates for the
-    // families PLUS one-sided rarest-k candidates for asymmetric pairs,
-    // verified once against the exact C(sub→sup) = I/n_sub ≥ 3/4
-    // threshold. A planted quote-in-doc pair (J ≈ 0.04 — invisible to
-    // the bands, trivially visible to the rarest-k probe) proves the
-    // one-sided leg is live BEHAVIORALLY: the volume-mode probe is
-    // checkpointed (its cap rollup is an action), so its rarest_min_k
-    // marker is hidden behind a LogicalRDD and a plan grep cannot see
-    // it — finding this pair can only happen through that leg.
-    val quote = (1 to 12).map(j => s"uq${j}y${j * 7 % 31}").mkString(" ")
-    val qFiller = (1 to 288).map(j => s"uf${j}m").mkString(" ")
-    val dc = (all ++ Seq((3000L, quote), (3001L, quote + " " + qFiller)))
-      .toDF("doc_id", "text")
-    def famContain(ids: Seq[Long]): Set[(Long, Long)] =
-      (for {
-        i <- ids.indices.iterator
-        j <- ids.indices.iterator
-        if i != j
-        inter = (sets(ids(i)) & sets(ids(j))).size
-        if 4 * inter >= 3 * sets(ids(i)).size
-      } yield (ids(i), ids(j))).toSet
-    val cTruth = famContain(clusterA.map(_._1)) ++
-      famContain(clusterB.map(_._1)) + ((3000L, 3001L))
-    val cRouted = Dedup.containmentPairs(dc, "doc_id", "text",
-      maxDocsPerTok = 0, autoRoute = true)
-    // engagement proof: the routed chain never runs the prefix_min_k
-    // probe the exact prefix × index join is built on
-    val cPlan = cRouted.queryExecution.optimizedPlan.toString
-    assert(!cPlan.contains("prefix_min_k"),
-      s"containment autoRoute did not engage:\n$cPlan")
-    assert(Dedup.containmentPairs(dc, "doc_id", "text", maxDocsPerTok = 0)
-      .queryExecution.optimizedPlan.toString.contains("prefix_min_k"),
-      "exact containment path lost its prefix_min_k probe marker")
-    val cPairs = cRouted.select("id_sub", "id_sup")
-      .as[(Long, Long)].collect().toSet
-    assert(cPairs == cTruth,
-      s"routed containment: extra=${cPairs -- cTruth} " +
-        s"missing=${cTruth -- cPairs}")
-    // refused alongside an explicit cap — the caller already chose
-    intercept[IllegalArgumentException] {
-      Dedup.containmentPairs(d, "doc_id", "text", maxDocsPerTok = 20,
-        autoRoute = true)
-    }
-    intercept[IllegalArgumentException] {
-      Dedup.prefixJaccardPairs(d, "doc_id", "text", maxDocsPerTok = 20,
-        autoRoute = true)
-    }
-    // autoRoute and maxCandidates are mutually exclusive (review r18: the
-    // routed chain is bucket-bounded; a stated hard budget must never be
-    // silently ignored)
-    intercept[IllegalArgumentException] {
-      Dedup.prefixJaccardPairs(d, "doc_id", "text", maxDocsPerTok = 0,
-        autoRoute = true, maxCandidates = 100L)
-    }
-  }
-
-  test("autoRoute bucket cap: a family larger than the 1000-bucket " +
-      "default survives when the share floor admits it (r18 review)") {
-    import spark.implicits._
-    // 1050 identical docs + 1100 per-doc-unique lone docs: the share
-    // floor (ceil(0.5 × 2150) = 1075) admits the family (nd = 1050),
-    // the forecast (~28 prefix toks × C(1050,2) ≈ 1.5e7 ≈ 7k/doc) trips
-    // the threshold, and the routed chain's bucket cap is the SAME share
-    // floor — a fixed 1000-bucket cap would have dropped
-    // the family's single 1050-member band buckets and zeroed its recall
-    // in exactly the regime the route exists for.
-    val fam = "orbit comet nebula pulsar quasar nova aurora eclipse " +
-      "meteor corona"
-    val docs = ((0L until 1050L).map(i => (i, fam)) ++
-      (10000L until 11100L).map(i =>
-        (i, (0 until 10).map(j => f"lone${i}w$j%02d").mkString(" "))))
-      .toDF("doc_id", "text")
-    val routed = Dedup.prefixJaccardPairs(docs, "doc_id", "text",
-      maxDocsPerTok = 0, autoRoute = true)
-    assert(routed.queryExecution.optimizedPlan.toString.contains("bh#"),
-      "route did not engage")
-    val n = routed.count()
-    assert(n == 1050L * 1049 / 2, s"family pairs through the route: $n")
-  }
-
-  test("volume-capped route bucket cap: families within budget admitted, " +
-      "corpus-share accident classes refused, floors respected (r19)") {
-    // the measured 500k rollup shape (BASELINE r19 croute): smooth Zipf dfreq
-    // made the family estimate corpus-scale (498488); the accident
-    // classes 51828/15677 must be refused by the volume budget while the
-    // genuine-family classes stay admitted
-    val measured = Array[(Long, Long)]((1L, 3000000L), (2L, 400000L),
-      (50L, 2000L), (263L, 1L), (265L, 1L), (281L, 1L), (316L, 1L),
-      (337L, 1L), (576L, 1L), (3402L, 1L), (6909L, 1L), (15677L, 1L),
-      (51828L, 1L))
-    val eff = graft.operators.Dedup.volCappedBucketCap(measured, bands = 8,
-      familyCap = 498488, label = "spec")
-    assert(eff >= 3402 && eff < 15677,
-      s"accident classes must be refused, mid classes admitted: $eff")
-    // the 1050-member family in a small corpus (the r18 spec regime):
-    // 8·C(1050,2) ≈ 4.4e6 sits under the ABSOLUTE floor
-    // (Dedup.MinRouteCandidates = 5e6 — only ~12% headroom, so this
-    // scenario is a real guard on the floor's value), so the per-doc
-    // budget must not refuse it even though 200/doc would
-    val family = Array[(Long, Long)]((1L, 8800L), (1050L, 8L))
-    val eff2 = graft.operators.Dedup.volCappedBucketCap(family, bands = 8,
-      familyCap = 2100, label = "spec")
-    assert(eff2 == 1050, s"in-budget family must be admitted: $eff2")
-    // familyCap binds when it is TIGHTER than the volume cap (q121's
-    // measured shape: prefix-derived cap 1308 vs volume cap ~6909)
-    val eff3 = graft.operators.Dedup.volCappedBucketCap(measured, bands = 8,
-      familyCap = 1308, label = "spec")
-    assert(eff3 == 1308, s"tighter family cap must bind: $eff3")
-    // degenerate: budget exhausted below the 1000 recall floor -> the
-    // floor wins (loudly), never a sub-1000 cap
-    val hot = Array[(Long, Long)]((900L, 4000L))
-    val eff4 = graft.operators.Dedup.volCappedBucketCap(hot, bands = 8,
-      familyCap = 5000, label = "spec")
-    assert(eff4 == 1000, s"recall floor must hold: $eff4")
-    // an empty rollup (no banded rows at all) lands on the recall floor
-    assert(graft.operators.Dedup.volCappedBucketCap(Array.empty[(Long, Long)],
-      bands = 8, familyCap = 5000, label = "spec") == 1000)
   }
 
   test("connectedComponents matches union-find on random graphs") {
@@ -837,53 +534,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(raised == truth)
   }
 
-  test("autoCap (maxDocsPerTok = 0): skewed corpus reaches full recall " +
-      "with no hand-chosen cap, plan stays window-free") {
-    import spark.implicits._
-    // r13 judge item 5: the manual recovery loop (run prefixHotness,
-    // read maxNd, re-call with a bigger cap) wired into the operator. A
-    // 30-member near-dup cluster sits ABOVE the default cap of 20 but
-    // far BELOW templateShare x corpus (ceil(0.5 x 130) = 65), so the
-    // derived cap admits the whole cluster and caps nothing it needs.
-    val rnd = new scala.util.Random(11)
-    val vocab = (0 until 2000).map(i => f"v$i%04dk${(i * 7) % 83}")
-    val template = Vector.tabulate(24)(_ => vocab(rnd.nextInt(vocab.length)))
-    val cluster = (0L until 30L).map { m =>
-      val words =
-        if (m == 0) template
-        else template.updated((m % 24).toInt, s"uq${m}y${m * 5}")
-      (m, words.mkString(" "))
-    }
-    val solo = (500L until 600L).map(i =>
-      (i, (0 until 24).map(j => s"lone${i}p$j").mkString(" ")))
-    val all = cluster ++ solo
-    val d = all.toDF("doc_id", "text")
-    // brute-force truth over the operator's own normalize+shingle space
-    def sh(s: String): Set[String] =
-      s.trim.toLowerCase.replaceAll("\\s+", " ").sliding(8).toSet
-    val sets = all.map { case (id, t) => id -> sh(t) }.toMap
-    val ids = all.map(_._1).toVector
-    val truth = (for {
-      i <- ids.indices.iterator
-      j <- (i + 1) until ids.size
-      inter = (sets(ids(i)) & sets(ids(j))).size
-      union = sets(ids(i)).size + sets(ids(j)).size - inter
-      if 5 * inter >= 3 * union
-    } yield (ids(i), ids(j))).toSet
-    assert(truth.size >= 300 && // near-complete C(30,2) = 435 clique
-      truth.forall { case (a, b) => a < 30L && b < 30L })
-    // the default hand cap (20) collapses recall on this cluster
-    val capped = Dedup.prefixJaccardPairs(d, "doc_id", "text")
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(capped.subsetOf(truth) && capped.size < truth.size / 2)
-    // autoCap: full recall, zero hand tuning, still no Window operator
-    val auto = Dedup.prefixJaccardPairs(d, "doc_id", "text",
-      maxDocsPerTok = 0)
-    val got = auto.select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(got == truth)
-    assert(!auto.queryExecution.executedPlan.toString.contains("Window"))
-  }
-
   test("containmentPairs: quote-in-article found directed, Jaccard misses it, cap binds") {
     import spark.implicits._
     val quote = "the quick brown fox jumps over the lazy dog again and again"
@@ -913,38 +563,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(capped.isEmpty, capped.toSeq)
   }
 
-  test("containmentPairs autoCap: syndicated quote above the default cap " +
-      "recovered with no hand-chosen cap") {
-    import spark.implicits._
-    // one quote syndicated into 29 articles: every quote shingle has
-    // dfreq 30 > the default cap of 20, so the default loses ALL 29
-    // directed pairs; autoCap reads the dfreq tail (30 ≪ 0.5 × 100
-    // docs) and recovers them — the directed-join form of the r14
-    // auto-cap contract
-    val quote = (1 to 12).map(j => s"qq${j}zz${j * 5 % 41}").mkString(" ")
-    val articles = (10L until 39L).map(i =>
-      (i, quote + " " + (1 to 60).map(j => s"art${i}w$j").mkString(" ")))
-    val solo = (100L until 170L).map(i =>
-      (i, (1 to 40).map(j => s"solo${i}v$j").mkString(" ")))
-    val d = ((1L, quote) +: articles) ++ solo
-    val df = d.toDF("doc_id", "text")
-    val expected = articles.map(a => (1L, a._1)).toSet
-    val byDefault = Dedup.containmentPairs(df, "doc_id", "text")
-      .select("id_sub", "id_sup").as[(Long, Long)].collect().toSet
-    assert(byDefault.intersect(expected).isEmpty, byDefault)
-    val auto = Dedup.containmentPairs(df, "doc_id", "text",
-      maxDocsPerTok = 0)
-    val got = auto.select("id_sub", "id_sup").as[(Long, Long)]
-      .collect().toSet
-    assert(expected.subsetOf(got), (expected -- got).toSeq.sorted.take(5))
-    // exactness untouched: every emitted pair is a true containment
-    val rs = auto.select(col("cont_r").as[Double]).collect()
-    assert(rs.forall(r => r >= 0.75 && r <= 1.0))
-    assert(!auto.queryExecution.executedPlan.toString.contains("Window"))
-  }
-
   test("containmentPairsOneSided: quote-in-doc pairs via the rarest-k " +
-      "probe, exact verify, both cap modes (r20)") {
+      "probe, exact verify, explicit cap (r20)") {
     import spark.implicits._
     // the casym shape in miniature: 30 tiny quotes (subs), each embedded
     // verbatim in one long article (sups) whose filler dominates the
@@ -963,35 +583,44 @@ class DedupSimilaritySpec extends AnyFunSuite {
       plants.map(p => (p._3, p._4)) ++ lone).toDF("doc_id", "text")
     val want = plants.map(p => (p._1, p._3)).toSet
 
-    val auto = Dedup.containmentPairsOneSided(d, "doc_id", "text")
-    // volume mode checkpoints the probe (the cap rollup IS an action, so
-    // the candidate join reuses its pass) — the aggregate is hidden
-    // behind the LogicalRDD there; the marker is asserted on the
-    // explicit-cap plan below, which keeps full lineage
-    assert(!auto.queryExecution.optimizedPlan.toString
-      .contains("prefix_min_k"))
-    val got = auto.select("id_sub", "id_sup").as[(Long, Long)]
-      .collect().toSet
-    assert(want.subsetOf(got), s"missing=${(want -- got).toSeq.sorted}")
-    // precision is the shared exact verify's: every emitted pair is a
-    // true ≥3/4 containment — here only the planted pairs exist
-    assert(got == want, s"extra=${(got -- want).toSeq.sorted}")
-    // explicit-cap mode (the oracle-mirrorable shape) agrees
-    val cappedDf = Dedup.containmentPairsOneSided(d, "doc_id", "text",
-      maxDocsPerTok = 20)
+    // the default cap (20, the oracle-mirrorable shape q259 runs)
+    val cappedDf = Dedup.containmentPairsOneSided(d, "doc_id", "text")
     val cappedPlan = cappedDf.queryExecution.optimizedPlan.toString
     assert(cappedPlan.contains("rarest_min_k") &&
       !cappedPlan.contains("prefix_min_k"),
       s"one-sided probe marker missing:\n$cappedPlan")
-    val capped = cappedDf
+    val got = cappedDf
       .select("id_sub", "id_sup").as[(Long, Long)].collect().toSet
-    assert(capped == want, s"explicit-cap drift: $capped")
+    assert(want.subsetOf(got), s"missing=${(want -- got).toSeq.sorted}")
+    // precision is the shared exact verify's: every emitted pair is a
+    // true ≥3/4 containment — here only the planted pairs exist
+    assert(got == want, s"extra=${(got -- want).toSeq.sorted}")
     // cap 1 starves the dfreq-2 witnesses — the documented capped-recall
     // contract, same as the exact join's
     val starved = Dedup.containmentPairsOneSided(d, "doc_id", "text",
       maxDocsPerTok = 1)
       .select("id_sub", "id_sup").as[(Long, Long)].collect().toSet
     assert(starved.isEmpty, starved)
+  }
+
+  test("a zero cap fails loudly on every capped join") {
+    // a cap of 0 keeps no token and no bucket, so it would silently return
+    // no pairs; each join refuses it before building anything
+    val vecs = Seq((0L, Array(1.0f, 0.0f)), (1L, Array(0.0f, 1.0f)))
+      .toDF("vec_id", "embedding")
+    Seq[() => DataFrame](
+      () => Dedup.prefixJaccardPairs(docs, "doc_id", "text",
+        maxDocsPerTok = 0),
+      () => Dedup.containmentPairs(docs, "doc_id", "text", maxDocsPerTok = 0),
+      () => Dedup.containmentPairsOneSided(docs, "doc_id", "text",
+        maxDocsPerTok = 0),
+      () => Similarity.lshNearPairs(vecs, "vec_id", "embedding",
+        maxBucket = 0),
+      () => Similarity.lshNearPairsTables(vecs, "vec_id", "embedding",
+        maxBucket = 0),
+      () => Similarity.lshNearPairsMultiProbe(vecs, "vec_id", "embedding",
+        maxBucket = 0)
+    ).foreach(join => intercept[IllegalArgumentException](join()))
   }
 
   test("route complementarity: rarest-k is adversarially blind to " +
@@ -1011,7 +640,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // 12-word sub inside a 288-word sup — word-3-shingle J ≈ 0.034,
     // below the banded chain's resolution (per-band collision ≈ J²;
     // this fixed corpus measurably misses all 8 bands — the minhash
-    // lanes are deterministic xxhash64, so the outcome is pinned by the
+    // lanes are deterministic md5, so the outcome is pinned by the
     // fixture, matching the 0.2% recall measured at 300k).
     val core = (0 until 120).map(i => f"fam$i%03d").mkString(" ")
     val family = (0L until 40L).map(i =>
@@ -1037,131 +666,33 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val oneSided = Dedup.containmentPairsOneSided(d, "doc_id", "text")
       .select("id_sub", "id_sup").as[(Long, Long)].collect().toSet
     assert(oneSided.contains((900L, 901L)),
-      "one-sided route lost its own headline class (the quote)")
+      "one-sided probe lost its own headline class (the quote)")
     assert(oneSided.intersect(famTruth).isEmpty,
       s"fixture no longer adversarial for rarest-k: " +
         s"${oneSided.intersect(famTruth).take(5)}")
 
-    // the route's banded generator, before the both-directions emit and
-    // the verify: an unordered candidate pair, so a family pair missing
-    // here is lost to the route's banded leg, and the quote may not even
-    // be a candidate
-    val bandedSym = Dedup.minhashCandidatesVolCapped(d, "doc_id", "text",
-      shingleN = 3, numHashes = 16, bands = 8, familyCap = 1000,
-      label = "spec").select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    // q261's banded generator (md5 lanes, 8 bands of 2), before the
+    // both-directions emit and the verify: an unordered candidate pair,
+    // so a family pair missing here is lost to the banded leg, and the
+    // quote may not even be a candidate
+    val bandedSym = Dedup.minhashCandidatesPortable(d, "doc_id", "text",
+      shingleN = 3, numHashes = 16, bands = 8)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val banded = bandedSym ++ bandedSym.map(_.swap)
     assert(famTruth.subsetOf(banded),
-      s"banded route lost family pairs: ${(famTruth -- banded).take(5)}")
+      s"banded leg lost family pairs: ${(famTruth -- banded).take(5)}")
     assert(!banded.contains((900L, 901L)),
       "fixture no longer adversarial for the bands (quote collided); " +
         "change the filler vocabulary to restore the pinned miss")
 
-    val union = Dedup.containmentRoutedUnion(d, "doc_id", "text",
-      shingleK = 8, numT = 3, denT = 4, maxBucket = 1000,
-      Dedup.shingleFront(d, "doc_id", "text", shingleK = 8),
-      nDocsIn = -1L)
+    // q261's union (md5 lanes + explicit one-sided cap) covers both
+    // shapes, and verifies once against the same threshold — nothing
+    // beyond the truth set can survive
+    val union = Dedup.containmentUnionPortable(d, "doc_id", "text")
       .select("id_sub", "id_sup").as[(Long, Long)].collect().toSet
     assert(truth.subsetOf(union),
-      s"union route lost pairs: ${(truth -- union).take(5)}")
-    // exactness: the union verifies once against the same threshold —
-    // nothing beyond the truth set can survive
+      s"union lost pairs: ${(truth -- union).take(5)}")
     assert(union == truth, s"extra=${(union -- truth).take(5)}")
-
-    // the oracle-portable twin (q261: md5 lanes + explicit one-sided
-    // cap) carries the same dual-shape truth — the union ASSEMBLY is
-    // family-independent
-    val portable = Dedup.containmentUnionPortable(d, "doc_id", "text")
-      .select("id_sub", "id_sup").as[(Long, Long)].collect().toSet
-    assert(portable == truth,
-      s"portable union drift: extra=${(portable -- truth).take(5)} " +
-        s"missing=${(truth -- portable).take(5)}")
-  }
-
-  test("oneSidedProbeCap: cumulative exact-count budget binds, floor " +
-      "overrides loudly (r20)") {
-    // rollup rows are (dfreq, n_probe_rows); admitted volume is EXACTLY
-    // Σ n_rows·dfreq ascending. Budget 10_000: dfreq 1 (3000 rows =
-    // 3000) + dfreq 2 (2000 rows = 4000, cum 7000) + dfreq 30 (50 rows
-    // = 1500, cum 8500) fit; dfreq 400 (10 rows = 4000) would cross —
-    // stop-at-first-over, so the cap is 30 even though dfreq 500 would
-    // also "fit" whatever headroom remained.
-    val rollup = Array[(Long, Long)]((1L, 3000L), (2L, 2000L),
-      (30L, 50L), (400L, 10L), (500L, 1L))
-    assert(graft.operators.Dedup.oneSidedProbeCap(rollup, 10000.0,
-      "spec") == 30)
-    // floor: a budget too tight even for dfreq-1 probes is overridden
-    // at the dfreq-2 unique-quote floor (loud warn) — VOLUME-SAFE by
-    // construction (≤ 2 candidates/probe row), unlike the dfreq-20
-    // posture floor this replaced after the 500k rehearsal blew a
-    // 40 GB budget riding it (BASELINE r20)
-    assert(graft.operators.Dedup.OneSidedCapFloor == 2)
-    assert(graft.operators.Dedup.oneSidedProbeCap(rollup, 100.0,
-      "spec") == graft.operators.Dedup.OneSidedCapFloor)
-    // everything fits -> the largest class wins
-    assert(graft.operators.Dedup.oneSidedProbeCap(rollup, 1e9,
-      "spec") == 500)
-    // posture stretch (r20, the 500k lesson's COUNTED replacement for
-    // the uncounted dfreq-20 floor): classes at dfreq ≤ 20 admit while
-    // cumulative ≤ 2× budget — recall-parity with the default exact
-    // join — but classes ABOVE the posture stay strictly within 1×.
-    // Budget 8000: d2 (cum 8000) and d10 (cum 13000) ride the ≤16000
-    // stretch; d25 (cum would be 15500 ≤ 16000, but it is past the
-    // posture where the bound is 8000) is refused.
-    val stretch = Array[(Long, Long)]((2L, 4000L), (10L, 500L),
-      (25L, 100L))
-    assert(graft.operators.Dedup.oneSidedProbeCap(stretch, 8000.0,
-      "spec") == 10)
-    assert(graft.operators.Dedup.OneSidedDefaultPosture == 20)
-    // an empty rollup (no probe rows at all) lands on the dfreq-2 floor
-    assert(graft.operators.Dedup.oneSidedProbeCap(Array.empty[(Long, Long)],
-      8000.0, "spec") == 2)
-  }
-
-  test("routeCandidateBudget: conf-overridable, scratch-derived, floored " +
-      "(r20 portability)") {
-    val s = spark
-    def cleanup(): Unit = s.conf.unset("spark.graft.route.scratchBytes")
-    cleanup()
-    try {
-      // default: 20/doc, floored at MinRouteCandidates = 5e6
-      assert(graft.operators.Dedup.routeCandidateBudget(s, 1000000L)
-        == 2e7)
-      assert(graft.operators.Dedup.routeCandidateBudget(s, 1000L) == 5e6)
-      // scratchBytes is the budget outright — including RAISING it
-      // past the calibration default (r20 ADVICE: the portability knob
-      // must work in both directions)
-      s.conf.set("spark.graft.route.scratchBytes",
-        (90L << 30).toString) // 90 GiB -> ~1.07e8 > the 2e7 default
-      val scratchOnly = graft.operators.Dedup.routeCandidateBudget(s, 1000000L)
-      assert(math.abs(scratchOnly - (90L << 30) / 900.0) < 1.0,
-        scratchOnly.toString)
-      // the floor survives any override
-      s.conf.set("spark.graft.route.scratchBytes", "900")
-      assert(graft.operators.Dedup.routeCandidateBudget(s, 1000L) == 5e6)
-      // invalid values fail loudly, never a silent default
-      s.conf.set("spark.graft.route.scratchBytes", "0")
-      intercept[IllegalArgumentException] {
-        graft.operators.Dedup.routeCandidateBudget(s, 1000L)
-      }
-    } finally cleanup()
-  }
-
-  test("capBelowTemplateFloor: a derived cap beyond Int.MaxValue saturates " +
-      "instead of wrapping negative") {
-    import spark.implicits._
-    // r14 review: at billions of docs a genuine family can have nd above
-    // 2^31; .toInt would wrap negative and filter(nd <= cap) would then
-    // silently keep NOTHING. The clamp must saturate at Int.MaxValue.
-    val counts = Seq(2200000000L, 5L, 3L).toDF("nd")
-    val cap = Dedup.capBelowTemplateFloorLocal(
-      Dedup.countRollup(counts, "nd"), nDocs = 5000000000L,
-      templateShare = 0.5, label = "test")
-    assert(cap == Int.MaxValue)
-    // and the ordinary path is untouched: max nd below the floor wins
-    val small = Seq(30L, 20L, 9000L).toDF("nd")
-    assert(Dedup.capBelowTemplateFloorLocal(
-      Dedup.countRollup(small, "nd"), nDocs = 130L,
-      templateShare = 0.5, label = "test") == 30)
   }
 
   test("sharedPassagePairs finds the copied span, not unrelated docs") {

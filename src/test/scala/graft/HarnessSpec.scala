@@ -230,7 +230,7 @@ class HarnessSpec extends AnyFunSuite with TimeLimits {
   }
 
   test("knob census: main code reads no graft.* system property and no " +
-      "spark.graft.* key but spark.graft.route.scratchBytes") {
+      "spark.graft.* key") {
     assert(files.size > 10, "src/main/scala not found from the working dir")
     val sysProp = ("""(?:sys\.props|getProperty|getBoolean|getInteger|getLong)""" +
       """[\w.]*\(\s*"(graft\.[\w.]+)"""").r
@@ -238,7 +238,6 @@ class HarnessSpec extends AnyFunSuite with TimeLimits {
     val knobs = files.flatMap { f =>
       val src = Files.readString(f)
       (sysProp.findAllMatchIn(src).map(_.group(1)) ++ confKey.findAllIn(src))
-        .filter(_ != "spark.graft.route.scratchBytes")
         .map(k => s"${f.getFileName}: $k")
     }.distinct
     assert(knobs.isEmpty, "an experiment came back as a knob")
@@ -309,15 +308,6 @@ class HarnessSpec extends AnyFunSuite with TimeLimits {
     assert(sites("""Files\.walk|deleteIfExists|\.delete\(\)""").distinct ==
       Seq("NioLocalFileSystem.scala"),
       "a recursive delete is written out by hand")
-  }
-
-  test("cap census: the dedup and similarity caps are decided in one step") {
-    assert(files.size > 10, "src/main/scala not found from the working dir")
-    // the template floor and the warn threshold are read by the autocap
-    // step alone; the LSH joins pin their bucket sizes through one helper
-    assert(uses("capBelowTemplateFloorLocal") == Seq("Dedup.scala: autoCap"))
-    assert(uses("WarnCandidatesPerDoc") == Seq("Dedup.scala: autoCap"))
-    assert(uses("maybePinSizes") == Seq("Similarity.scala: capBuckets"))
   }
 
   test("spread census: the text operators' spread and pin rules live in " +

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dedup, GeoJoin, Similarity}
+import graft.operators.GeoJoin
 
 /** Building a plan is not running it: the etl_ref builders start no Spark
   * job and no query execution of their own (no schema-inference job, no
@@ -108,46 +108,35 @@ class PlanBuildSpec extends AnyFunSuite {
     assert(builderSideWork(names) == names.map(_ -> (0, 0)).toMap)
   }
 
-  test("the dedup and similarity autocap builders start a fixed side work") {
-    val s = spark
-    import s.implicits._
-    // a 6-member near-duplicate family, 18 unrelated docs and one blank
-    val core = (0 until 40).map(i => f"core$i%02d").mkString(" ")
-    val docs = ((0L until 6L).map(i => (i, s"$core tail$i")) ++
-      (10L until 28L).map(i =>
-        (i, (0 until 12).map(j => s"solo${i}w$j").mkString(" "))) ++
-      Seq((99L, " "))).toDF("doc_id", "text")
-    // a collapsed 40-vector bucket, a 3-member cluster and 5 singletons
-    val vecs = ((0L until 40L).map(i =>
-        (i, Array.tabulate(8)(j => (j + 1).toFloat))) ++
-      (100L until 103L).map(i =>
-        (i, Array.tabulate(8)(j => if (j % 2 == 0) -2f else 1f))) ++
-      (200L until 205L).map(i => (i, Array.tabulate(8)(j =>
-        if ((j + i) % 3 == 0) -(j + 7).toFloat else (i % 5 + j).toFloat))))
-      .toDF("vec_id", "embedding")
-    val builders = Seq[(String, () => DataFrame)](
-      "containmentPairs" -> (() => Dedup.containmentPairs(docs, "doc_id",
-        "text", maxDocsPerTok = 0)),
-      "prefixJaccardPairs" -> (() => Dedup.prefixJaccardPairs(docs,
-        "doc_id", "text", maxDocsPerTok = 0)),
-      "lshNearPairs" -> (() => Similarity.lshNearPairs(vecs, "vec_id",
-        "embedding", bits = 8, maxBucket = 0)),
-      "lshNearPairsTables" -> (() => Similarity.lshNearPairsTables(vecs,
-        "vec_id", "embedding", bits = 8, maxBucket = 0)),
-      "lshNearPairsMultiProbe" -> (() => Similarity.lshNearPairsMultiProbe(
-        vecs, "vec_id", "embedding", bits = 8, maxBucket = 0)))
-    val started = builders.map { case (n, build) =>
-      var df: DataFrame = null
-      val (jobs, qes) = sideWork(spark) { df = build() }
-      assert(df != null)
-      n -> (jobs.size, qes)
-    }
-    // autocap actions: a doc count, the count rollup and the checkpoints
-    // that let the keep join reuse what the rollup read (the shingle front
-    // reads its spread width from the plan, so no `.rdd` probe is among them)
-    assert(started == Seq("containmentPairs" -> (11, 4),
-      "prefixJaccardPairs" -> (18, 6), "lshNearPairs" -> (8, 3),
-      "lshNearPairsTables" -> (8, 3), "lshNearPairsMultiProbe" -> (8, 3)))
+  test("the dedup and similarity builders start a fixed side work") {
+    // every contract dedup and similarity join runs with an explicit cap
+    // (or none); what these builders start is their eager checkpoints,
+    // size probes and bounded collects, pinned so a change to the joins
+    // shows here
+    val names = Seq("q121_prefix_jaccard", "q154_containment",
+      "q245_prefix_hotness", "q253_prefix_hotness_sampled",
+      "q259_containment_onesided", "q261_containment_union", "q32_ann_lsh",
+      "q94_embedding_neardup", "q128_hard_negatives", "q220_semantic_dedup",
+      "q248_bucket_hotness", "q249_lsh_capped", "q254_ann_lsh_multitable",
+      "q256_ann_lsh_multiprobe")
+    assert(builderSideWork(names) == Map(
+      // checkpoints of the shingle front, the prefix table and the kept
+      // prefix, and the verify's broadcast probe
+      "q121_prefix_jaccard" -> (11, 4),
+      // the shingle front's checkpoint and the verify's broadcast probe
+      "q154_containment" -> (4, 2),
+      "q259_containment_onesided" -> (4, 2),
+      // the shingle front's checkpoint
+      "q245_prefix_hotness" -> (2, 1),
+      "q253_prefix_hotness_sampled" -> (2, 1),
+      // the shingle front's checkpoint, the banded table's two pins and
+      // the verify's broadcast probe
+      "q261_containment_union" -> (8, 4),
+      // connectedComponents' bounded edge collect
+      "q220_semantic_dedup" -> (2, 1)) ++
+      Seq("q32_ann_lsh", "q94_embedding_neardup", "q128_hard_negatives",
+        "q248_bucket_hotness", "q249_lsh_capped", "q254_ann_lsh_multitable",
+        "q256_ann_lsh_multiprobe").map(_ -> (0, 0)))
   }
 
   test("radiusJoin spreads a narrow scan, from the physical plan alone") {

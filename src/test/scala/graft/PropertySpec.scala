@@ -640,9 +640,8 @@ object PropertySpec extends Properties("graft") {
       // the r14 hot-bucket guard's contract as an invariant: raising the
       // cap only ADDS pairs (the kept-bucket set grows), no cap admits a
       // pair the uncapped within-bucket scoring rejects (recall traded,
-      // never precision), a cap ≥ every bucket equals uncapped, and the
-      // autoCap sentinel (0) stays inside the uncapped set. Few basis
-      // directions + jitter force shared and collapsed buckets.
+      // never precision), and a cap ≥ every bucket equals uncapped. Few
+      // basis directions + jitter force shared and collapsed buckets.
       val rnd = new scala.util.Random(seed)
       val basis = (0 until 3).map(k =>
         Array.tabulate(6)(j => ((j + 2 * k) % 5 - 2).toFloat))
@@ -668,7 +667,7 @@ object PropertySpec extends Properties("graft") {
         .bucketHotness(vecs, "vec_id", "embedding", bits = 6)
         .selectExpr("sum(m * n_buckets)").as[Long].head()
       pairs(c1).subsetOf(pairs(c2)) && pairs(c2).subsetOf(un) &&
-        pairs(nVecs) == un && pairs(0).subsetOf(un) && mass == nVecs.toLong
+        pairs(nVecs) == un && mass == nVecs.toLong
     }
 
   property("featureVectorFor matches an independent reference on random frames") =

@@ -241,7 +241,7 @@ object CorpusQueries {
     // surprisal LM (q108) skips. Counts exact; p_kn is a fixed double
     // operation tree mirrored in the oracle.
     Contract("q155_kn_bigram", ((s, d) =>
-      Corpus.knBigramModel(documents(s, d), "doc_id", "text", minCount = 3L)),
+      Corpus.knBigramModel(documents(s, d), "doc_id", "text")),
       // q155: q105's bigram CTEs; KN terms as exact counts, p_kn with the
       // IDENTICAL parenthesization as the Spark side (bit-exact doubles)
       """WITH toks AS (
@@ -589,7 +589,7 @@ object CorpusQueries {
     // North star: deterministic corpus shuffle — reproducible global
     // permutation via hashed shuffle keys; shard-partitioned ranking.
     Contract("q97_corpus_shuffle", ((s, d) =>
-      Transforms.deterministicShuffle(documents(s, d), "doc_id", shards = 32)),
+      Transforms.deterministicShuffle(documents(s, d), "doc_id")),
       // q97: md5 shuffle key, shard = top byte mod 32, rank within shard
       """WITH k AS (SELECT doc_id,
         |    md5('shuf|' || CAST(doc_id AS VARCHAR)) AS skey FROM documents),
@@ -1311,7 +1311,7 @@ object CorpusQueries {
     // cumulative token share — the tokenizer-design query; both windows
     // sort the vocab table only.
     Contract("q168_vocab_coverage", ((s, d) =>
-      Corpus.vocabCoverage(documents(s, d), "text", topK = 100)),
+      Corpus.vocabCoverage(documents(s, d), "text")),
       // q168: same (n DESC, w) total order for rank and inclusive
       // cumulative, same tokenizer as q111
       """WITH wc AS (
@@ -1446,7 +1446,7 @@ object CorpusQueries {
     // apportionment and md5-rank member selection.
     Contract("q133_temperature_mix", ((s, d) =>
       Corpus.temperatureRebalance(documents(s, d), "lang", "doc_id",
-        totalOut = 250L, temperature = 2)),
+        totalOut = 250L)),
       // q133: same sqrt weights (identical IEEE ops), same integer
       // apportionment (operands positive, so // and div agree), same md5 rank
       """WITH counts AS (SELECT lang, count(*) AS n_g FROM documents GROUP BY lang),
@@ -1772,8 +1772,7 @@ object CorpusQueries {
     // shifts only the chunks it touches — the chunk-level dup report
     // fixed-stride chunking (q55) cannot give. All-long output.
     Contract("q219_cdc_chunks", ((s, d) =>
-      Corpus.cdcChunkStats(documents(s, d), "doc_id", "text",
-        window = 8, divisor = 64)),
+      Corpus.cdcChunkStats(documents(s, d), "doc_id", "text")),
       // Same exact-integer rolling hash (constants from Corpus.cdcPows);
       // DuckDB range() is end-exclusive = Spark's guarded sequence(w, n-1).
       {

@@ -116,8 +116,7 @@ object DedupQueries {
     // low Jaccard). Asymmetric prefix filter: probe = rarest prefix, index
     // = full capped token table; exact merge-scan verify.
     Contract("q154_containment", ((s, d) =>
-      Dedup.containmentPairs(documents(s, d), "doc_id", "text",
-        shingleK = 8, numT = 3, denT = 4, maxDocsPerTok = 20)),
+      Dedup.containmentPairs(documents(s, d), "doc_id", "text")),
       // q154: q121's shingle/prefix CTEs at t=3/4 with the dfreq<=20 cap on
       // the probe prefix, index side = FULL token table (equality makes the
       // cap implicit there), directed pairs, containment = n_inter/n_sub
@@ -168,8 +167,7 @@ object DedupQueries {
     // is EXACTLY Σ dfreq over ≤ k probe rows per doc. Explicit-cap mode
     // so the candidate set is oracle-mirrorable (rn ≤ 8 AND dfreq ≤ 20).
     Contract("q259_containment_onesided", ((s, d) =>
-      Dedup.containmentPairsOneSided(documents(s, d), "doc_id", "text",
-        shingleK = 8, numT = 3, denT = 4, probeK = 8, maxDocsPerTok = 20)),
+      Dedup.containmentPairsOneSided(documents(s, d), "doc_id", "text")),
       // q259: q154's CTEs with the probe swapped to the rarest-8 slice —
       // rn ≤ 8 (fixed k, not the threshold-derived prefix length) AND the
       // dfreq ≤ 20 cap; (dfreq, tok) ranking is total per doc (toks are
@@ -219,8 +217,7 @@ object DedupQueries {
     // families and the rarest-k probe finds quotes; each is blind where
     // the other sees.
     Contract("q261_containment_union", ((s, d) =>
-      Dedup.containmentUnionPortable(documents(s, d), "doc_id", "text",
-        shingleK = 8, numT = 3, denT = 4, probeK = 8, maxDocsPerTok = 20)),
+      Dedup.containmentUnionPortable(documents(s, d), "doc_id", "text")),
       // q261: the union assembly — q29's md5-lane CTEs re-banded to the
       // PRODUCTION 8×2 layout (lane // 2; the 4×4 q29 default measurably
       // misses high-J family pairs the one-sided leg cannot recover) in
@@ -321,8 +318,7 @@ object DedupQueries {
     // North star: C4-style corpus-frequency boilerplate — word-5-gram
     // spans repeating across >=2 documents, per-doc span counts + share.
     Contract("q95_boilerplate_spans", ((s, d) =>
-      Dedup.boilerplateSpans(documents(s, d), "doc_id", "text",
-        shingleN = 5, minDocs = 2)),
+      Dedup.boilerplateSpans(documents(s, d), "doc_id", "text")),
       // q95: word-5-gram doc frequencies, boilerplate = spans in >=2 docs
       """WITH toks AS (
         |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t
@@ -346,15 +342,11 @@ object DedupQueries {
     // (tiny); the exact side joins distinct (doc, shingle) rows only.
     Contract("q107_minhash_estimate", ((s, d) => {
       val docs = documents(s, d).filter(length(trim(col("text"))) > 0)
-      // one shared lane count: the signature pass, the banding, and the
-      // estimate divisor must agree or est_r silently scales wrong
-      val numHashes = 16
       // ONE signature pass over the text, checkpointed (tiny table), feeds
       // both the candidate bands and the lane-agreement estimates
-      val sig = Dedup.md5MinhashSignatures(docs, "doc_id", "text",
-          numHashes = numHashes)
+      val sig = Dedup.md5MinhashSignatures(docs, "doc_id", "text")
         .localCheckpoint()
-      val pairs = Dedup.candidatesFromSignatures(sig, numHashes = numHashes)
+      val pairs = Dedup.candidatesFromSignatures(sig)
       val agree = pairs
         .join(sig.as("sa"), col("id_a") === col("sa.doc_id"))
         .join(sig.as("sb"), col("id_b") === col("sb.doc_id"))
@@ -386,7 +378,8 @@ object DedupQueries {
         .join(sizes.as("zb"), col("id_b") === col("zb.doc_id"))
         .select(col("id_a"), col("id_b"),
           col("n_agree").cast("long").as("n_agree"),
-          round(col("n_agree").cast("double") / lit(numHashes), 6).as("est_r"),
+          round(col("n_agree").cast("double") / lit(Dedup.MinhashLaneCount), 6)
+            .as("est_r"),
           coalesce(col("n_inter"), lit(0L)).cast("long").as("n_inter"),
           (col("za.n") + col("zb.n") - coalesce(col("n_inter"), lit(0L)))
             .cast("long").as("n_union"),
@@ -519,7 +512,7 @@ object DedupQueries {
         TextFunctions.tokenCount(col("text")).as("n_tok"))
       val keepers = Dedup.selectKeepers(
         clusters.join(weights, "doc_id"), "doc_id", "n_tok")
-      Dedup.leakageSafeSplit(keepers, "cluster")
+      Dedup.leakageSafeSplit(keepers)
         .groupBy(col("split"))
         .agg(count(lit(1)).cast("long").as("n_docs"),
           sum(col("keeper_weight")).cast("long").as("total_tokens"))
@@ -598,7 +591,7 @@ object DedupQueries {
         (5L, "subscribe to the newsletter\nunique closing thought"),
         (6L, "subscribe to the newsletter\nanother standalone body line"))
         .toDF("doc_id", "text")
-      Dedup.lineDedup(docs, "doc_id", "text", minDocs = 2)
+      Dedup.lineDedup(docs, "doc_id", "text")
     }),
       // q129: same fixture; hot lines by distinct-doc count, survivors
       // reassembled with an ordered string_agg
@@ -665,8 +658,7 @@ object DedupQueries {
     // rewritten without them. The rewrite arm the detection-only passage
     // operators (q119 winnowing, q95 boilerplate measure) were missing.
     Contract("q196_span_removal", ((s, d) =>
-      Dedup.duplicatedSpanRemoval(documents(s, d), "doc_id", "text",
-        gramN = 5, minDocs = 2)),
+      Dedup.duplicatedSpanRemoval(documents(s, d), "doc_id", "text")),
       // Word-aligned: same tokenizer as q64 (trim/lower/\s+ split); a token
       // is dropped iff ANY 5-gram covering it appears in >= 2 distinct docs.
       """WITH base AS (
@@ -704,7 +696,7 @@ object DedupQueries {
     // feeds the layout without materializing between stages.
     Contract("q200_curation_v2", ((s, d) => {
       val cleaned = Dedup.duplicatedSpanRemoval(documents(s, d), "doc_id",
-          "text", gramN = 5, minDocs = 2)
+          "text")
         .filter(col("n_tokens") - col("n_dropped") >= 10)
         // the layout needs the CLEANED token count, not the rewritten
         // string — selecting only the count lets Catalyst prune the
@@ -1247,7 +1239,7 @@ object DedupQueries {
       val docs = documents(s, d)
       val pairs = Dedup.minhashCandidatesPortable(docs, "doc_id", "text")
       val clusters = Dedup.connectedComponents(docs, "doc_id", pairs)
-      Dedup.leakageSafeKFold(clusters, k = 5)
+      Dedup.leakageSafeKFold(clusters)
         .select(col("doc_id"), col("cluster").cast("long").as("cluster"),
           col("fold").cast("long").as("fold"))
     }),
@@ -1310,8 +1302,7 @@ object DedupQueries {
             Window.partitionBy(TextFunctions.fingerprint(col("text")))
               .orderBy(col("doc_id"))))
           .filter(col("_rn") === 1).drop("_rn"))
-      val s4 = Dedup.duplicatedSpanRemoval(s3, "doc_id", "text",
-          gramN = 5, minDocs = 2)
+      val s4 = Dedup.duplicatedSpanRemoval(s3, "doc_id", "text")
         .select(col("doc_id"),
           (col("n_tokens") - col("n_dropped")).as("n_tok"))
         .filter(col("n_tok") >= 10)

@@ -378,8 +378,8 @@ object IngestQueries {
     // parse as q37. The fixture workbook's p18/p19 sheets hold exactly the
     // q37 VALUES content (numbers as numeric cells, NA as a shared string,
     // blanks absent), so q37's oracle re-proves the byte-level decode.
-    // Decode runs in an executor task (the per-file shape of
-    // XlsxReader.scan), not on the driver.
+    // Decode runs in an executor task (one task per workbook), not on the
+    // driver.
     Contract("q73_xlsx_wasde", ((s, d) => {
       import s.implicits._
       val bytes = wasdeXlsxBytes
@@ -489,7 +489,7 @@ object IngestQueries {
           (Array(10.0 + i * 0.1, 5.0 + i * 0.05), 1))
       }.toDF("embedding", "label")
       val model = graft.serving.ModelScoring.trainOnArrays(
-        train, "embedding", "label", numTrees = 20, seed = 42L)
+        train, "embedding", "label")
       val probe = Seq(
         (1L, Array(0.2, 0.1)), (2L, Array(0.9, 0.4)),
         (3L, Array(1.5, 0.8)), (4L, Array(10.2, 5.1)),

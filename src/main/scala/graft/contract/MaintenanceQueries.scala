@@ -407,8 +407,7 @@ object MaintenanceQueries {
     // Numeric distribution drift: first vs second half of the period on
     // SHARED global bin edges, PSI contributions per bin.
     Contract("q188_numeric_drift", ((s, d) =>
-      graft.operators.Maintenance.numericDrift(events(s, d), "value", "ts",
-        bins = 10)),
+      graft.operators.Maintenance.numericDrift(events(s, d), "value", "ts")),
       // q188: q156's bin formula over global edges, integer midpoint-day
       // split, q131's smoothed PSI arithmetic on the bin label
       """WITH ev AS (
@@ -449,8 +448,7 @@ object MaintenanceQueries {
     // clip counts, outlier-robust mean — all over the distinct-cents
     // table.
     Contract("q183_winsorize", ((s, d) =>
-      graft.operators.Maintenance.winsorizedStats(events(s, d), "value",
-        pLow = 1, pHigh = 99)),
+      graft.operators.Maintenance.winsorizedStats(events(s, d), "value")),
       // q183: same distinct-cents cumulative, cum·100 >= n·p threshold
       // pick (≡ ceil-rank), clamp, cents-exact winsorized sum
       """WITH ev AS (
@@ -488,8 +486,7 @@ object MaintenanceQueries {
     // oracle-unrollable plan.
     Contract("q179_kcore", ((s, d) =>
       graft.operators.Graph.kCorePeel(
-        Dedup.minhashCandidatesPortable(documents(s, d), "doc_id", "text"),
-        k = 2, rounds = 3)),
+        Dedup.minhashCandidatesPortable(documents(s, d), "doc_id", "text"))),
       // q179: q29's pair CTEs, then the SAME 3 peels unrolled — degree
       // filter + two-sided node restriction per round
       {

@@ -248,7 +248,7 @@ object TransformQueries {
     // featurizer; window and aggregate share one user exchange.
     Contract("q194_sequence_features", ((s, d) =>
       Transforms.sequenceFeatures(events(s, d), "user_id", "event_type",
-        "ts", "event_id", k = 5)),
+        "ts", "event_id")),
       // q194: same desc (ts, event_id) recency rank, same alphabetical
       // dictionary, conditional-max slot fold
       """WITH dict AS (
@@ -356,7 +356,7 @@ object TransformQueries {
     Contract("q186_linear_attribution", ((s, d) =>
       Transforms.linearAttribution(events(s, d), "user_id", "event_type",
         "ts", "event_id", "value", Seq("view", "click"), "purchase",
-        lookbackSeconds = 604800L, maxTouches = 5)),
+        lookbackSeconds = 604800L)),
       // q186: join-shaped oracle mirror of the window plan — rank ALL
       // strictly-before touches desc, keep rnk<=5 AND horizon, recount n,
       // identical half-up credit/revenue quanta
@@ -394,7 +394,7 @@ object TransformQueries {
     // Churn snapshot: inactivity decay curve at the data's own anchor,
     // exact shares, 14-day churn line.
     Contract("q187_churn_snapshot", ((s, d) =>
-      Transforms.churnSnapshot(events(s, d), "user_id", "ts", 14)),
+      Transforms.churnSnapshot(events(s, d), "user_id", "ts")),
       // q187: same user rollup, data-anchored inactivity, exact shares
       """WITH ld AS (
         |  SELECT user_id, max(CAST(ts AS DATE)) AS last_day FROM events
@@ -523,7 +523,7 @@ object TransformQueries {
     // Rolling 7-day active users: DAU/WAU/stickiness via W× explode of
     // the DISTINCT (day, user) table — no sliding-window distinct state.
     Contract("q172_rolling_active", ((s, d) =>
-      Transforms.rollingActiveUsers(events(s, d), "user_id", "ts", 7)),
+      Transforms.rollingActiveUsers(events(s, d), "user_id", "ts")),
       // q172: same W-day coverage explode over the DISTINCT day×user
       // table, trailing partial days dropped at max(day)
       """WITH du AS (
@@ -546,8 +546,7 @@ object TransformQueries {
     // Inter-event gap profile: per-user consecutive gaps in exponential
     // buckets (pure integer comparisons, no floor(log2) hazard).
     Contract("q173_gap_profile", ((s, d) =>
-      Transforms.interEventGaps(events(s, d), "user_id", "ts", "event_id",
-        20)),
+      Transforms.interEventGaps(events(s, d), "user_id", "ts", "event_id")),
       // q173: same (ts, event_id) lag gaps, identical integer-threshold
       // CASE chain
       s"""WITH g AS (

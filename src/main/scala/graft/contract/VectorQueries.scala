@@ -166,12 +166,10 @@ object VectorQueries {
 
     // North star: LSH-bucketed near-neighbor pairs — the scale path for
     // all-pairs similarity. Lattice hyperplanes (integer coefficients) so
-    // the DuckDB oracle reproduces bucketing AND scores exactly; the
-    // hash-derived hyperplane variant stays available for production.
+    // the DuckDB oracle reproduces bucketing AND scores exactly.
     Contract("q32_ann_lsh", ((s, d) =>
       Similarity.lshNearPairs(embeddings(s, d), "vec_id", "embedding",
-        bits = 4, minSim = 0.1,
-        signature = Similarity.hyperplaneSignatureLattice)
+        minSim = 0.1)
         .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim_r"))),
       s"""WITH $latticeSimCtes
          |SELECT id_a, id_b, round(sim, 6) AS sim_r
@@ -189,7 +187,7 @@ object VectorQueries {
         .select(Similarity.toDoubleArray(col("embedding")))
         .head().getSeq[Double](0)
       val (model, indexed) = Similarity.ivfIndex(
-        e, "vec_id", "embedding", nLists = 8, maxIter = 5, fitSample = 0.25)
+        e, "vec_id", "embedding", nLists = 8)
       Similarity.ivfTopK(model, indexed, "vec_id", "embedding",
         qvec, k = 10, nProbe = 8)
         .select(col("vec_id"), round(col("sim"), 6).as("sim_r"))
@@ -276,13 +274,11 @@ object VectorQueries {
 
     // North star: embedding-cosine near-dup — semantic-dedup verdicts from
     // LSH-bucketed candidates (lattice hyperplanes so the oracle reproduces
-    // bucketing AND scores exactly; the hash-derived-plane variant stays
-    // the production default). A doc is a dup when an EARLIER doc sits
+    // bucketing AND scores exactly). A doc is a dup when an EARLIER doc sits
     // within 0.35 cosine in its bucket; dup_of = earliest such neighbor.
     Contract("q94_embedding_neardup", ((s, d) =>
       Similarity.embeddingNearDup(embeddings(s, d), "vec_id", "embedding",
-        bits = 4, minSim = 0.35,
-        signature = Similarity.hyperplaneSignatureLattice)),
+        minSim = 0.35)),
       // q94: same lattice-LSH pair chain as q32, folded to per-doc verdicts
       s"""WITH $latticeSimCtes,
          |m AS (SELECT id_b AS vec_id, min(id_a) AS dup_of
@@ -360,7 +356,7 @@ object VectorQueries {
       val e = embeddings(s, d)
       graft.serving.ModelScoring.calibrationCurve(e,
         Similarity.intProjection(col("embedding"), 0),
-        (col("label") >= 5).cast("long"), 10)
+        (col("label") >= 5).cast("long"))
     }),
       // q165: q158's score CTE + q163's strictly-below bucket assignment,
       // exact per-bucket counts/sums, one half-up rate rounding
@@ -439,9 +435,7 @@ object VectorQueries {
     // excluded symmetrically). Anchors broadcast; salted two-phase top-k.
     Contract("q128_hard_negatives", ((s, d) =>
       Similarity.hardNegatives(embeddings(s, d), "vec_id", "embedding",
-        anchorIds = Seq(0L, 1L, 2L, 3L, 4L), k = 5,
-        bits = 4, minSim = 0.35,
-        signature = Similarity.hyperplaneSignatureLattice)),
+        anchorIds = Seq(0L, 1L, 2L, 3L, 4L), k = 5, minSim = 0.35)),
       // q128: anchors 0-4 against every candidate, the same lattice bucket +
       // cosine>=0.35 exclusion as q94, dense rank per anchor. Ordered sums
       // mirror VectorOps' sequential fold.
@@ -505,7 +499,7 @@ object VectorQueries {
       val scale = lit(127.0) / array_max(transform(vd, x => abs(x)))
       val base = e.select(col("vec_id"), col("embedding"),
         transform(vd, x => round(x * scale).cast("long")).as("iv"),
-        Similarity.hyperplaneSignatureLattice(col("embedding"), 8)
+        Similarity.hyperplaneSignatureLatticeAt(col("embedding"), 8, 0)
           .as("bucket"))
       val qs = base.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"),
@@ -787,8 +781,7 @@ object VectorQueries {
     Contract("q220_semantic_dedup", ((s, d) => {
       val e = embeddings(s, d)
       val pairs = Similarity.lshNearPairs(e, "vec_id", "embedding",
-          bits = 4, minSim = 0.35,
-          signature = Similarity.hyperplaneSignatureLattice)
+          minSim = 0.35)
         .select(col("id_a"), col("id_b"))
       val clusters = Dedup.connectedComponents(e, "vec_id", pairs)
       val sizes = clusters.groupBy(col("cluster"))
@@ -859,8 +852,7 @@ object VectorQueries {
     // verify bit-for-bit.
     Contract("q254_ann_lsh_multitable", ((s, d) =>
       Similarity.lshNearPairsTables(embeddings(s, d), "vec_id", "embedding",
-        bits = 4, minSim = 0.1, tables = 2,
-        signatureAt = Similarity.hyperplaneSignatureLatticeAt)
+        minSim = 0.1)
         .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim_r"))),
       // q254: the multi-table OR-construction chain — 2 tables × 4 lattice
       // bits, DISTINCT pair dedup across tables, exact cosine verify. Plane
@@ -880,8 +872,7 @@ object VectorQueries {
     // the declarative Hamming predicate.
     Contract("q256_ann_lsh_multiprobe", ((s, d) =>
       Similarity.lshNearPairsMultiProbe(embeddings(s, d), "vec_id",
-        "embedding", bits = 4, minSim = 0.1,
-        signature = Similarity.hyperplaneSignatureLattice)
+        "embedding", minSim = 0.1)
         .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim_r"))),
       // q256: multi-probe — q32's single lattice table, pairs at signature
       // Hamming distance <= 1 (home bucket + every one-bit flip), identical
@@ -896,8 +887,7 @@ object VectorQueries {
     // self-join (quadratic in m) before running it. Lattice hyperplanes
     // so DuckDB reproduces the bucketing bit-for-bit.
     Contract("q248_bucket_hotness", ((s, d) =>
-      Similarity.bucketHotness(embeddings(s, d), "vec_id", "embedding",
-        bits = 4, signature = Similarity.hyperplaneSignatureLattice)),
+      Similarity.bucketHotness(embeddings(s, d), "vec_id", "embedding")),
       // q248: q245's embedding-side mirror — lattice-LSH bucket sizes,
       // rolled up to the (m, n_buckets) hotness distribution. Reuses the
       // q32 CTE chain's sig step (unreferenced tail CTEs are never run).
@@ -914,8 +904,7 @@ object VectorQueries {
     // do at sf0.1).
     Contract("q249_lsh_capped", ((s, d) =>
       Similarity.lshNearPairs(embeddings(s, d), "vec_id", "embedding",
-        bits = 4, minSim = 0.1,
-        signature = Similarity.hyperplaneSignatureLattice, maxBucket = 40)
+        minSim = 0.1, maxBucket = 40)
         .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim_r"))),
       // q249: q32 with the hot-bucket cap — both endpoints of a kept pair
       // share one bucket, so filtering sims by the id_a side's bucket size

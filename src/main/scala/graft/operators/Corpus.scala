@@ -134,7 +134,7 @@ object Corpus {
     *   P_KN(w2|w1) = max(c12 − d, 0)/c1 + (d·N1+(w1·)/c1) · N1+(·w2)/N1+(··)
     *
     * with absolute discount d = 0.75 (Chen & Goodman 1999's standard
-    * setting). Emitted per bigram with `c12 ≥ minCount`: the five exact
+    * setting). Emitted per bigram with `c12 ≥ 3`: the five exact
     * integer count columns the formula reads, plus `p_kn` evaluated in
     * doubles with a FIXED operation tree (ints < 2^53 are exact in double
     * and each IEEE op is correctly rounded, so an oracle mirroring the
@@ -145,20 +145,20 @@ object Corpus {
     * the MODEL (vocab²-bounded): two partitioned windows (w1: context
     * total + follower types; w2: predecessor types) and a broadcast 1-row
     * global distinct-bigram count — never a single-partition window. */
-  def knBigramModel(docs: DataFrame, idCol: String, textCol: String,
-      minCount: Long = 3L, discount: Double = 0.75): DataFrame = {
+  def knBigramModel(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
     val pair = docBigrams(docs, idCol, textCol)
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
     val byW1 = Window.partitionBy(col("w1"))
     val byW2 = Window.partitionBy(col("w2"))
     val tot = pair.agg(count(lit(1)).as("n_bigrams"))
-    val d = lit(discount)
+    val d = lit(0.75)
     pair
       .withColumn("c1", sum(col("c12")).over(byW1))
       .withColumn("n_follow", count(lit(1)).over(byW1))
       .withColumn("n_precede", count(lit(1)).over(byW2))
       .crossJoin(broadcast(tot))
-      .filter(col("c12") >= minCount)
+      .filter(col("c12") >= 3L)
       .select(col("w1"), col("w2"),
         col("c12").cast("long").as("c12"),
         col("c1").cast("long").as("c1"),
@@ -223,7 +223,7 @@ object Corpus {
     * shards upstream (source, shard) if that skew materializes — the
     * operator is agnostic to what the grouping key means. */
   def sequencePacking(docs: DataFrame, sourceCol: String, idCol: String,
-      textCol: String, seqLen: Int = 2048): DataFrame = {
+      textCol: String, seqLen: Int): DataFrame = {
     require(seqLen > 0, s"seqLen must be positive: $seqLen")
     // window over the RENAMED projection — referencing sourceCol/idCol
     // here would fail analysis for any caller whose columns aren't
@@ -306,8 +306,8 @@ object Corpus {
     * every group emits at least one document). One shuffle on the group key;
     * the running sum is an O(1)-state window. */
   def budgetSample(docs: DataFrame, groupCol: String, idCol: String,
-      weight: Column, budget: Long, salt: String = "bud"): DataFrame = {
-    val skey = md5(concat(lit(salt + "|"), col(idCol).cast("string")))
+      weight: Column, budget: Long): DataFrame = {
+    val skey = md5(concat(lit("bud|"), col(idCol).cast("string")))
     val w = Window.partitionBy(col(groupCol))
       .orderBy(col("skey"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -326,8 +326,8 @@ object Corpus {
     * them. Same low-water-mark semantics and O(1)-state window; the only
     * difference is the budget riding on the row instead of a constant. */
   def allocatedSample(docs: DataFrame, groupCol: String, idCol: String,
-      weight: Column, budgetCol: String, salt: String = "bud"): DataFrame = {
-    val skey = md5(concat(lit(salt + "|"), col(idCol).cast("string")))
+      weight: Column, budgetCol: String): DataFrame = {
+    val skey = md5(concat(lit("bud|"), col(idCol).cast("string")))
     val w = Window.partitionBy(col(groupCol))
       .orderBy(col("skey"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -350,8 +350,8 @@ object Corpus {
     * libm pow() difference could matter only if two keys collided within
     * ~1e-16, which the md5 draw makes vanishingly unlikely. */
   def weightedSample(docs: DataFrame, groupCol: String, idCol: String,
-      weight: Column, k: Int, salt: String = "aes"): DataFrame = {
-    val u = (conv(substring(md5(concat(lit(salt + "|"),
+      weight: Column, k: Int): DataFrame = {
+    val u = (conv(substring(md5(concat(lit("aes|"),
         col(idCol).cast("string"))), 1, 13), 16, 10).cast("long") + lit(1L))
       .cast("double") / lit(4503599627370496.0) // 2^52
     val key = pow(u, lit(1.0) / weight.cast("double"))
@@ -446,15 +446,14 @@ object Corpus {
   /** Vocabulary coverage curve — the "how big must the vocab be" tokenizer
     * design query: words ranked by frequency (ties broken by the word
     * itself for a total order), with each rank's cumulative token share.
-    * The top-`topK` rows ARE the coverage curve; cover_r at rank V is the
+    * The top-100 rows ARE the coverage curve; cover_r at rank V is the
     * share of all token occurrences a V-word vocabulary captures.
     *
     * Scale: the corpus collapses to the vocab table in one partial-
     * aggregatable groupBy; ranking + cumulative sum sort THAT table only
     * (vocab-bounded — the q158 posture), and both windows share one sort
     * order. */
-  def vocabCoverage(docs: DataFrame, textCol: String,
-      topK: Int = 100): DataFrame = {
+  def vocabCoverage(docs: DataFrame, textCol: String): DataFrame = {
     val wc = docs.filter(length(trim(col(textCol))) > 0)
       .select(explode(split(trim(lower(col(textCol))), "\\s+")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
@@ -463,7 +462,7 @@ object Corpus {
       .withColumn("cum_n", sum(col("n"))
         .over(ord.rowsBetween(Window.unboundedPreceding, 0)))
       .withColumn("total", sum(col("n")).over(Window.partitionBy()))
-      .filter(col("rank") <= topK)
+      .filter(col("rank") <= 100)
       .select(col("rank").cast("long").as("rank"), col("w"),
         col("n").cast("long").as("n"), col("cum_n").cast("long").as("cum_n"),
         col("total").cast("long").as("total"),
@@ -498,8 +497,8 @@ object Corpus {
 
   /** Content-defined chunking dedup profile — the storage-dedup primitive
     * (Rabin-style CDC) applied to corpus text: a chunk boundary falls after
-    * position i whenever the rolling hash of the trailing `window` chars is
-    * ≡ 0 (mod `divisor`), so boundaries are CONTENT-anchored — inserting a
+    * position i whenever the rolling hash of the trailing 8 chars is
+    * ≡ 0 (mod 64), so boundaries are CONTENT-anchored — inserting a
     * line into a document shifts only the chunks it touches, and every
     * other chunk keeps its identity. Fixed-size chunking (the q55 stride
     * shape) loses all alignment after one insertion; CDC is how chunk-level
@@ -515,9 +514,8 @@ object Corpus {
     * only shuffles are the chunk-hash aggregate (partial-agg collapses hot
     * boilerplate chunks map-side) and the equi-join back — never all-pairs.
     * Returns (idCol, n_chunks, n_shared, shared_len) — all LONG. */
-  def cdcChunkStats(docs: DataFrame, idCol: String, textCol: String,
-      window: Int = 8, divisor: Int = 64): DataFrame = {
-    require(window >= 2 && divisor >= 2, "degenerate CDC parameters")
+  def cdcChunkStats(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
     docs
       .filter(length(trim(col(textCol))) > 0)
       .select(col(idCol).as("doc_id"),
@@ -525,7 +523,7 @@ object Corpus {
         // three-lambda HOF chain ran interpreted per position and was the
         // whole cost of the operator (6.7 s -> chunking at scan speed)
         explode(graft.functions.CdcOps.cdcChunksCol(
-          col(textCol), window, divisor)).as("chunk"))
+          col(textCol), 8, 64)).as("chunk"))
       .select(col("doc_id"), md5(col("chunk")).as("ch"),
         length(col("chunk")).cast("long").as("clen"))
       // shared = appears in ≥2 DISTINCT documents (an intra-doc repeat is
@@ -571,11 +569,11 @@ object Corpus {
     * already topK-bounded by their producers — plus one
     * TakeOrderedAndProject. */
   def rrfFuse(rankA: DataFrame, rankB: DataFrame, idCol: String,
-      topK: Int, k0: Int = 60): DataFrame = {
+      topK: Int): DataFrame = {
     def recipU(rank: Column): Column =
       coalesce(call_function("div",
-        lit(2000000L) + (lit(k0.toLong) + rank),
-        (lit(k0.toLong) + rank) * lit(2L)), lit(0L))
+        lit(2000000L) + (lit(60L) + rank),
+        (lit(60L) + rank) * lit(2L)), lit(0L))
     val a = rankA.select(col(idCol), col("rank").as("rank_a"))
     val b = rankB.select(col(idCol), col("rank").as("rank_b"))
     a.join(b, Seq(idCol), "full_outer")
@@ -758,66 +756,60 @@ object Corpus {
     * shingle set (MIN over docs of per-doc shingle minima = MIN over the
     * union), which is what makes pairwise group similarity estimable from
     * sketches alone — no second pass over text. */
-  def groupMinhashSketch(docs: DataFrame, groupCol: String, textCol: String,
-      numHashes: Int = 16): DataFrame =
+  def groupMinhashSketch(docs: DataFrame, groupCol: String,
+      textCol: String): DataFrame =
     // fanOutScan measured negative here (r22, part of q112's +0.6 with
     // the shd spread) — the lane pass flows into the sketch aggregate's
     // own exchange either way. Left unspread (see Spread.fanOutScan).
     docs.filter(length(trim(col(textCol))) > 0)
       .select(col(groupCol),
-        posexplode(org.apache.spark.sql.GraftBridge.column(
-          graft.functions.Md5MinhashLanes(
-            org.apache.spark.sql.GraftBridge.expression(col(textCol)),
-            3, numHashes))).as(Seq("lane", "h")))
+        posexplode(Dedup.minhashLanes(col(textCol))).as(Seq("lane", "h")))
       .groupBy(col(groupCol), col("lane"))
       .agg(min(col("h")).as("h"))
 
   /** Count-min-sketch bucket id for hash row `r`: the top 12 bits of
-    * md5(r + "|" + word), mod `width`. Portable — both engines derive the
+    * md5(r + "|" + word), mod the width. Portable — both engines derive the
     * same bucket from the same hex digest. */
-  private def cmsBucket(word: Column, r: Int, width: Int): Column =
+  private def cmsBucket(word: Column, r: Int): Column =
     conv(substring(md5(concat(lit(s"$r|"), word)), 1, 3), 16, 10)
-      .cast("long") % width
+      .cast("long") % CmsWidth
 
-  /** Count-min sketch of word frequencies: `depth` hash rows × `width`
-    * buckets of LONG counts — a (depth·width)-bounded table no matter the
-    * corpus size, built by one partial-aggregatable hash aggregate per row
-    * (each word instance contributes to `depth` cells; the explode is
-    * map-side). The sketch overestimates only: est(w) = min over rows of
+  /** The count-min sketch's shape. cmsBucket draws 12 bits (3 md5 hex
+    * chars) per row, so the width stays ≤ 4096. */
+  private val CmsDepth = 4
+  private val CmsWidth = 1024
+
+  /** Count-min sketch of word frequencies: `CmsDepth` = 4 hash rows ×
+    * `CmsWidth` = 1024 buckets of LONG counts — a (depth·width)-bounded
+    * table no matter the corpus size, built by one partial-aggregatable
+    * hash aggregate per row (each word instance contributes to 4 cells;
+    * the explode is map-side). The sketch overestimates only: est(w) = min over rows of
     * its bucket count ≥ true count, with the overshoot bounded by collision
     * mass. This is the scale shape for frequency estimation at 100 TB —
     * the corpus never shuffles, only (row, bucket) partial counts do. */
-  def countMinSketch(words: DataFrame, wordCol: String,
-      depth: Int = 4, width: Int = 1024): DataFrame = {
-    // cmsBucket draws 12 bits (3 md5 hex chars) of entropy per row — a
-    // width beyond 2^12 would leave buckets ≥ 4096 permanently empty and
-    // silently double the collision mass the width promises to halve
-    require(width > 0 && width <= 4096,
-      s"width must be in (0, 4096] (12-bit bucket hash): $width")
-    words.select((0 until depth).map(r =>
-        cmsBucket(col(wordCol), r, width).as(s"b$r")): _*)
-      .select(posexplode(array((0 until depth).map(r => col(s"b$r")): _*))
+  def countMinSketch(words: DataFrame, wordCol: String): DataFrame =
+    words.select((0 until CmsDepth).map(r =>
+        cmsBucket(col(wordCol), r).as(s"b$r")): _*)
+      .select(posexplode(array((0 until CmsDepth).map(r => col(s"b$r")): _*))
         .as(Seq("r", "bucket")))
       .groupBy(col("r"), col("bucket"))
       .agg(count(lit(1)).as("n"))
-  }
 
   /** Heavy hitters with sketch verification: exact top-k words joined
     * against their count-min estimates (est = MIN over hash rows of the
     * word's bucket count). Output carries both so the sketch's one-sided
     * error (est ≥ exact, always) is visible and oracle-checkable. The
     * top-k and the sketch are both tiny — the joins broadcast. */
-  def cmsHeavyHitters(docs: DataFrame, textCol: String, k: Int,
-      depth: Int = 4, width: Int = 1024): DataFrame = {
+  def cmsHeavyHitters(docs: DataFrame, textCol: String, k: Int): DataFrame = {
     val words = docs.filter(length(trim(col(textCol))) > 0)
       .select(explode(split(trim(lower(col(textCol))), "\\s+")).as("w"))
     val exact = words.groupBy(col("w")).agg(count(lit(1)).as("n_exact"))
       .orderBy(col("n_exact").desc, col("w")).limit(k)
-    val cms = countMinSketch(words, "w", depth, width)
+    val cms = countMinSketch(words, "w")
     val est = exact
       .select(col("w"), col("n_exact"),
-        posexplode(array((0 until depth).map(r =>
-          cmsBucket(col("w"), r, width)): _*)).as(Seq("r", "bucket")))
+        posexplode(array((0 until CmsDepth).map(r =>
+          cmsBucket(col("w"), r)): _*)).as(Seq("r", "bucket")))
       .join(cms, Seq("r", "bucket"))
       .groupBy(col("w"), col("n_exact"))
       .agg(min(col("n")).as("n_est"))
@@ -831,10 +823,11 @@ object Corpus {
     * (mb(n) + mb(T) - mb(n_w1) - mb(n_w2)) so ranking and output are
     * bit-reproducible. All statistics live on the vocab²-bounded pair
     * table: marginals are windows over it, the corpus total T is a 1-row
-    * broadcast cross join, and the top-k is a TakeOrdered with a unique
-    * (pmi, w1, w2) sort key. The corpus is shingled exactly once. */
-  def pmiTopPairs(docs: DataFrame, idCol: String, textCol: String,
-      minCount: Int = 5, k: Int = 50): DataFrame = {
+    * broadcast cross join, and the top-50 is a TakeOrdered with a unique
+    * (pmi, w1, w2) sort key over the pairs seen at least 5 times. The
+    * corpus is shingled exactly once. */
+  def pmiTopPairs(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
     val pair = docBigrams(docs, idCol, textCol)
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n"))
     val tot = pair.agg(sum(col("n")).as("t"))
@@ -842,14 +835,14 @@ object Corpus {
       .withColumn("n_w1", sum(col("n")).over(Window.partitionBy(col("w1"))))
       .withColumn("n_w2", sum(col("n")).over(Window.partitionBy(col("w2"))))
       .crossJoin(broadcast(tot))
-      .filter(col("n") >= minCount)
+      .filter(col("n") >= 5)
       .select(col("w1"), col("w2"), col("n").cast("long").as("n"),
         col("n_w1").cast("long").as("n_w1"),
         col("n_w2").cast("long").as("n_w2"),
         (microBits(col("n")) + microBits(col("t"))
           - microBits(col("n_w1")) - microBits(col("n_w2"))).as("pmi_ub"))
       .orderBy(col("pmi_ub").desc, col("w1"), col("w2"))
-      .limit(k)
+      .limit(50)
       .withColumn("pmi_r", col("pmi_ub").cast("double") / lit(1e6))
   }
 
@@ -893,9 +886,9 @@ object Corpus {
 
   /** Temperature-rebalanced mixture sampling — the multilingual-training
     * resampler (XLM-R style): draw `totalOut` documents with per-group
-    * quotas ∝ n_g^(1/τ), so low-resource groups are boosted and the head
-    * flattened. τ = 1 reproduces proportional sampling; τ = 2 (the common
-    * choice) uses integer-exact sqrt weights.
+    * quotas ∝ n_g^(1/τ) at τ = 2 (the common choice: integer-exact sqrt
+    * weights), so low-resource groups are boosted and the head
+    * flattened.
     *
     * Everything after the weights is INTEGER largest-remainder
     * apportionment: base_g = T·w_g div W, the leftover seats go to the
@@ -912,13 +905,10 @@ object Corpus {
     * (bounded, one window), then a per-group rank window over candidate
     * members. Returns (groupCol, idCol, rk, quota). */
   def temperatureRebalance(docs: DataFrame, groupCol: String, idCol: String,
-      totalOut: Long, temperature: Int = 2): DataFrame = {
-    require(temperature == 1 || temperature == 2,
-      s"temperature must be 1 (proportional) or 2 (sqrt): $temperature")
+      totalOut: Long): DataFrame = {
     val counts = docs.groupBy(col(groupCol)).agg(count(lit(1)).as("n_g"))
-    val w = if (temperature == 1) col("n_g").cast("long")
-      else floor(sqrt(col("n_g").cast("double") * lit(1e12))).cast("long")
-    val weighted = counts.withColumn("w_g", w)
+    val weighted = counts.withColumn("w_g",
+      floor(sqrt(col("n_g").cast("double") * lit(1e12))).cast("long"))
     val totW = weighted.agg(sum(col("w_g")).cast("long").as("tot_w"))
     val seats = weighted.crossJoin(broadcast(totW))
       .withColumn("base", expr(s"div(${totalOut}L * w_g, tot_w)"))
@@ -1044,11 +1034,10 @@ object Corpus {
   }
 
   /** Pairwise lane-agreement similarity between group sketches: est_r =
-    * agreeing lanes / numHashes, an unbiased estimate of the Jaccard
-    * similarity of the groups' shingle sets. The sketch table is
+    * agreeing lanes / [[Dedup.MinhashLaneCount]], an unbiased estimate of
+    * the Jaccard similarity of the groups' shingle sets. The sketch table is
     * groups×lanes rows — trivially broadcastable at any corpus size. */
-  def sketchPairSimilarity(sketch: DataFrame, groupCol: String,
-      numHashes: Int = 16): DataFrame =
+  def sketchPairSimilarity(sketch: DataFrame, groupCol: String): DataFrame =
     sketch.as("a")
       .join(sketch.as("b"),
         col("a.lane") === col("b.lane") &&
@@ -1059,7 +1048,8 @@ object Corpus {
         .as("n_agree"))
       .select(col("grp_a"), col("grp_b"),
         col("n_agree").cast("long").as("n_agree"),
-        round(col("n_agree").cast("double") / lit(numHashes), 6).as("est_r"))
+        round(col("n_agree").cast("double") / lit(Dedup.MinhashLaneCount), 6)
+          .as("est_r"))
 
   /** Gopher repetition gate (Rae et al. 2021, table A1): per document, the
     * char mass (count × gram char length) of the most frequent word n-gram
@@ -1107,7 +1097,7 @@ object Corpus {
           col("dup10_mass") * 10 <= col("norm_chars"))
   }
 
-  /** Per-source content NOVELTY: of each source's distinct char-k-shingle
+  /** Per-source content NOVELTY: of each source's distinct char-8-shingle
     * set, how many shingles appear in NO other source — the signal that
     * tells a mixture designer which sources actually add new content vs
     * re-serving what the rest of the corpus already has.
@@ -1118,19 +1108,12 @@ object Corpus {
     * per-shingle (count, min source) and per-source totals. Uniques are
     * recovered from the per-shingle aggregate alone (a shingle with
     * count 1 belongs entirely to its min source), so no corpus-sized
-    * join-back. The final join is #sources × #sources rows.
-    *
-    * `hashed=true` swaps shingle strings for their 64-bit xxhash lanes
-    * before the shuffle — 8-byte keys instead of k-char strings, the
-    * production posture (identical results modulo ~n²/2⁶⁵ collisions);
-    * `hashed=false` keeps strings so a SQL oracle can mirror the exact
-    * computation (same trade as Dedup.minhashCandidatesPortable). */
-  def sourceNovelty(docs: DataFrame, srcCol: String, textCol: String,
-      k: Int = 8, hashed: Boolean = false): DataFrame = {
-    val norm = graft.functions.TextFunctions.normalize(col(textCol))
-    val shingles =
-      if (hashed) graft.functions.TextFunctions.charShingleHashes(norm, k)
-      else graft.functions.TextFunctions.charShingles(norm, k)
+    * join-back. The final join is #sources × #sources rows. Shingles stay
+    * strings, so a SQL oracle can mirror the exact computation. */
+  def sourceNovelty(docs: DataFrame, srcCol: String,
+      textCol: String): DataFrame = {
+    val shingles = graft.functions.TextFunctions.charShingles(
+      graft.functions.TextFunctions.normalize(col(textCol)), 8)
     // sg feeds both the per-gram and the per-source aggregate; pinning
     // it was MEASURED ~neutral-to-slower (r21 A/B, 3× interleaved fresh
     // JVMs: min 3.09 → 3.21 s) — the synchronous checkpoint job costs
@@ -1161,15 +1144,15 @@ object Corpus {
     * term frequency, and the top-k postings by tf (ties → lower doc id, so
     * ranking is total and deterministic). The transpose of the tf-idf view:
     * retrieval stacks ask "which docs for this term", not "which terms for
-    * this doc".
+    * this doc". Postings keep the top 3 per term.
     *
     * Plan: one corpus pass → (term, doc) hash aggregate (map-side
     * partials), then ONE term-keyed exchange feeding df/total_tf/rank as
     * three window functions over the SAME partitioning — no self-join, no
     * second corpus scan, never a single-partition window. Output is
-    * topK × vocabulary rows. */
-  def invertedIndex(docs: DataFrame, idCol: String, textCol: String,
-      topK: Int = 3): DataFrame = {
+    * 3 × vocabulary rows. */
+  def invertedIndex(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
     val tf = docs.filter(length(trim(col(textCol))) > 0)
       .select(col(idCol).as("doc_id"),
         explode(graft.functions.TextFunctions.tokens(
@@ -1185,7 +1168,7 @@ object Corpus {
         count(lit(1)).over(byTerm).as("df"),
         sum(col("tf")).over(byTerm).as("total_tf"),
         row_number().over(ranked).as("rank"))
-      .filter(col("rank") <= topK)
+      .filter(col("rank") <= 3)
       .select(col("term"), col("df").cast("long").as("df"),
         col("total_tf").cast("long").as("total_tf"),
         col("rank").cast("long").as("rank"), col("doc_id"),

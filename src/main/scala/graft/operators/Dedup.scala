@@ -26,17 +26,29 @@ object Dedup {
       .groupBy(col("text_hash"))
       .agg(min(col(idCol)).as("keeper"), count(lit(1)).as("n_dups"))
 
+  /** The one MinHash scheme of the md5-lane operators (the banded
+    * candidates here, [[graft.streaming.StreamingDedup]] and the group
+    * sketches in [[Corpus]]): word 3-gram shingles hashed into
+    * `MinhashLaneCount` md5 lanes ([[minhashLanes]]), and LSH buckets of at
+    * most `MinhashMaxBucket` docs. The DuckDB oracles spell the same
+    * values out as literals. */
+  val MinhashLaneCount = 16
+  private val MinhashMaxBucket = 1000
+
+  /** Per-doc md5 MinHash lane minima of `text` under the scheme, one
+    * native scalar pass ([[graft.functions.Md5MinhashLanes]] — shingle,
+    * md5, windowed min); NULL for a shingle-less doc. */
+  def minhashLanes(text: Column): Column =
+    org.apache.spark.sql.GraftBridge.column(graft.functions.Md5MinhashLanes(
+      org.apache.spark.sql.GraftBridge.expression(text), 3, MinhashLaneCount))
+
   /** Oracle-portable MinHash+LSH candidates: per-doc lane minima come from
-    * ONE native scalar pass ([[graft.functions.Md5MinhashLanes]] — shingle,
-    * md5, windowed min, no token explode and NO signature shuffle at all),
-    * and every hash is md5/substring/MIN — semantics a DuckDB oracle
-    * reproduces verbatim. */
+    * ONE native scalar pass ([[minhashLanes]] — no token explode and NO
+    * signature shuffle at all), and every hash is md5/substring/MIN —
+    * semantics a DuckDB oracle reproduces verbatim. */
   def minhashCandidatesPortable(docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      maxBucket: Int = 1000): DataFrame =
-    candidatesFromSignatures(
-      md5MinhashSignatures(docs, idCol, textCol, shingleN, numHashes),
-      numHashes, bands, maxBucket)
+      bands: Int = 4): DataFrame =
+    candidatesFromSignatures(md5MinhashSignatures(docs, idCol, textCol), bands)
 
   /** Cross-group near-dup leakage matrix — where duplicate pairs live:
     * candidate pairs labeled with their two docs' groups (sources,
@@ -69,22 +81,18 @@ object Dedup {
     * expensive text pass, separated so a caller can localCheckpoint it and
     * feed BOTH [[candidatesFromSignatures]] and signature-level analytics
     * (q107's lane-agreement estimates) from one computation. */
-  def md5MinhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, numHashes: Int = 16): DataFrame =
+  def md5MinhashSignatures(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     // fanOutScan measured ~neutral-to-negative here (r22: q107 +0.1,
     // q112 +0.6 min-of-3 interleaved with the sketch spread) — the md5
     // lane pass on this corpus shape is cheaper than the text shuffle
     // the spread adds. Left unspread; see Spread.fanOutScan for where it pays.
-    docs.select(col(idCol).as("doc_id"),
-      org.apache.spark.sql.GraftBridge.column(graft.functions.Md5MinhashLanes(
-        org.apache.spark.sql.GraftBridge.expression(col(textCol)),
-        shingleN, numHashes)).as("ls"))
+    docs.select(col(idCol).as("doc_id"), minhashLanes(col(textCol)).as("ls"))
       .filter(col("ls").isNotNull)
 
-  /** LSH candidate pairs from a precomputed signature table. */
-  def candidatesFromSignatures(sig: DataFrame, numHashes: Int = 16,
-      bands: Int = 4, maxBucket: Int = 1000): DataFrame = {
-    val rows = numHashes / bands
+  /** LSH candidate pairs from a precomputed signature table, the lanes
+    * banded `bands` ways. */
+  def candidatesFromSignatures(sig: DataFrame, bands: Int = 4): DataFrame = {
+    val rows = MinhashLaneCount / bands
     val bandCols = (0 until bands).map { b =>
       struct(lit(b).cast("long").as("band"),
         md5(concat_ws("|",
@@ -93,12 +101,12 @@ object Dedup {
     }
     val banded = sig.select(col("doc_id"), explode(array(bandCols: _*)).as("x"))
       .select(col("doc_id"), col("x.band"), col("x.bh"))
-    candidatesFromBanded(banded, maxBucket)
+    candidatesFromBanded(banded)
   }
 
-  /** The LSH tail: cap the buckets of `banded` at `maxBucket` — dropping
-    * singletons too — then self-join within the kept buckets for distinct
-    * ordered pairs.
+  /** The LSH tail: cap the buckets of `banded` at `MinhashMaxBucket` —
+    * dropping singletons too — then self-join within the kept buckets for
+    * distinct ordered pairs.
     *
     * The bands-per-doc rows feed the bucket-count aggregate and both
     * self-join branches, and the kept rows feed both branches again, so
@@ -114,13 +122,12 @@ object Dedup {
     * cannot be split — counting a hot bucket through a window is itself
     * the straggler the cap exists to prevent (r11 shape rule, as in
     * prefixJaccardPairs / sharedPassagePairs). */
-  private def candidatesFromBanded(banded: DataFrame,
-      maxBucket: Int): DataFrame = {
+  private def candidatesFromBanded(banded: DataFrame): DataFrame = {
     val pin = Spread.pinIfSmall(banded) _
     val b0 = pin(banded)
     val keep = b0.groupBy(col("band"), col("bh"))
       .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") <= maxBucket && col("bucket_n") > 1)
+      .filter(col("bucket_n") <= MinhashMaxBucket && col("bucket_n") > 1)
       .select(col("band"), col("bh"))
     val pruned = pin(b0.join(keep, Seq("band", "bh"))
       .select(col("doc_id"), col("band"), col("bh")))
@@ -155,7 +162,7 @@ object Dedup {
     * the subset contract. Returns (idCol, cluster). Isolated nodes
     * cluster to themselves. */
   def connectedComponents(nodes: DataFrame, idCol: String, pairs: DataFrame,
-      maxIter: Int = 50, broadcastEdgeLimit: Int = 1 << 20): DataFrame = {
+      broadcastEdgeLimit: Int = 1 << 20): DataFrame = {
     // Bounded dispatch (the knnJoin pattern): near-dup edge sets are tiny
     // relative to the corpus — when the probe proves |edges| fits the
     // limit, union-find the edge-induced subgraph driver-side (ms of CPU)
@@ -236,7 +243,7 @@ object Dedup {
     var prevSum = lblSum(labels)
     var iter = 0
     var converged = false
-    while (iter < maxIter && !converged) {
+    while (iter < 50 && !converged) {
       val viaNeighbors = edges.join(labels, edges("dst") === labels("id"))
         .groupBy(col("src").as("id2")).agg(min(col("lbl")).as("nlbl"))
       val next = labels.join(viaNeighbors, labels("id") === col("id2"), "left")
@@ -253,10 +260,9 @@ object Dedup {
     }
     edges.unpersist()
     // silent non-convergence would return non-minimal labels — fail loudly
-    // (rounds needed = component diameter; 50 covers any near-dup graph,
-    // raise maxIter for adversarially chained inputs)
+    // (rounds needed = component diameter; 50 covers any near-dup graph)
     if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter iterations")
+      "connectedComponents did not converge in 50 iterations")
     labels.select(col("id").as(idCol), col("lbl").as("cluster"))
   }
 
@@ -284,6 +290,22 @@ object Dedup {
           (col("s1.n") + col("s2.n") - col("n_inter")).cast("double")).as("jaccard"))
   }
 
+  /** The text joins' one scheme, which every contract query runs: char
+    * 8-gram shingles, the Jaccard threshold t = 3/5 of
+    * [[prefixJaccardPairs]] and [[prefixHotness]], and the containment
+    * threshold t = 3/4 of the containment joins. A threshold stays an
+    * integer pair, so both engines compare `den·inter ≥ num·n` exactly. */
+  private val ShingleK = 8
+  private val JaccardNum = 3
+  private val JaccardDen = 5
+  private val ContainNum = 3
+  private val ContainDen = 4
+
+  /** The text joins' dfreq cap: a prefix or probe shingle in more than 20
+    * documents is dropped from the candidate join (see
+    * [[prefixJaccardPairs]] for the recall bound it costs). */
+  private val MaxDocsPerTok = 20
+
   /** (doc_id, n, tok) exploded shingle rows — the plan inside
     * [[shingleFront]], the prefix-filtered joins' shared front.
     *
@@ -302,9 +324,9 @@ object Dedup {
     * lands in the Project ABOVE the Generate and is re-evaluated per
     * SHINGLE row, measured 21 s vs 0.6 s at sf0.1 shape). */
   private[graft] def shingleToksPlan(base: DataFrame, idCol: String,
-      textCol: String, shingleK: Int): DataFrame = {
+      textCol: String): DataFrame = {
     val shingleExpr = TextFunctions.charShingles(
-      TextFunctions.normalize(col(textCol)), shingleK)
+      TextFunctions.normalize(col(textCol)), ShingleK)
     base
       .select(col(idCol).as("doc_id"), size(shingleExpr).as("n"),
         col(textCol))
@@ -374,13 +396,13 @@ object Dedup {
     * callers rely on ContextCleaner GC (the blocks are bounded by the
     * dispatch above). */
   private[graft] def shingleFront(docs: DataFrame, idCol: String,
-      textCol: String, shingleK: Int): Front = {
+      textCol: String): Front = {
     // fan a narrower-than-cores scan out first (single-row-group test
     // file; a real corpus has plenty of scan partitions and skips this
     // shuffle)
     val spread = Spread.fanOutScan(docs, col(idCol))
     val base = spread.filter(length(trim(col(textCol))) > 0)
-    val toksPlan = shingleToksPlan(base, idCol, textCol, shingleK)
+    val toksPlan = shingleToksPlan(base, idCol, textCol)
     val inputSmall = Spread.small(spread)
     val toks =
       if (inputSmall || inBroadcastDangerZone(toksPlan))
@@ -399,7 +421,7 @@ object Dedup {
   /** Per-doc rarest-p prefix shingles of a [[shingleFront]] as
     * (doc_id, n, tok) rows: the front half of [[prefixJaccardPairs]] and
     * [[prefixHotness]]. */
-  private def prefixToks(f: Front, numT: Int, denT: Int): DataFrame =
+  private def prefixToks(f: Front): DataFrame =
     // per-doc rarest-p prefix WITHOUT a global sort-window: hash-aggregate
     // each doc's (dfreq, tok) pairs through the native bounded k-min
     // aggregate (prefix_min_k, r14 judge item 2 — struct compare = dfreq
@@ -420,7 +442,7 @@ object Dedup {
     f.toks
       .join(f.dfreq, "tok")
       .groupBy(col("doc_id"))
-      .agg(graft.functions.PrefixMinK.column(numT, denT)(
+      .agg(graft.functions.PrefixMinK.column(JaccardNum, JaccardDen)(
         col("n"), col("dfreq"), col("tok")).as("pk"))
       .select(col("doc_id"), col("pk.n").as("n"),
         explode(col("pk.items")).as("x"))
@@ -460,10 +482,9 @@ object Dedup {
     * the cap question the diagnostic answers concerns the LARGEST
     * clusters, exactly the ones a sample preserves. */
   def prefixHotness(docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 8, numT: Int = 3, denT: Int = 5,
       sample: Option[Column] = None): DataFrame =
     prefixToks(shingleFront(sample.map(docs.filter).getOrElse(docs), idCol,
-      textCol, shingleK), numT, denT)
+      textCol))
       .groupBy(col("tok")).agg(count(lit(1)).as("nd"))
       .groupBy(col("nd")).agg(count(lit(1)).as("n_toks"))
       .orderBy(col("nd").desc)
@@ -482,10 +503,10 @@ object Dedup {
     * documents' prefixes is missed — concretely, every pair inside a
     * near-dup cluster LARGER than the cap (see the cap paragraph;
     * DedupSimilaritySpec "prefix cap recall bound" demonstrates it). The set element is a
-    * char `shingleK`-gram (sequence-sensitive; distinct WORD sets are
+    * char 8-gram (sequence-sensitive; distinct WORD sets are
     * degenerate on template-heavy corpora — measured 71k/125k pairs at
     * t=3/5 vs exactly the 25 true near-dup pairs with 8-grams). Threshold
-    * t = `numT/denT`; ceil and the final filter are pure integer
+    * t = 3/5; ceil and the final filter are pure integer
     * arithmetic (`(3n+4) div 5`, `5·inter ≥ 3·union`) so both engines
     * threshold identically — the double `jacc` column is display-only.
     *
@@ -524,12 +545,10 @@ object Dedup {
     * A non-positive `maxDocsPerTok` is refused: it would keep no prefix
     * token, and so return no pairs. */
   def prefixJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 8, numT: Int = 3, denT: Int = 5,
-      maxDocsPerTok: Int = 20): DataFrame = {
-    require(numT > 0 && denT > numT, s"threshold must be in (0,1): $numT/$denT")
+      maxDocsPerTok: Int = MaxDocsPerTok): DataFrame = {
     require(maxDocsPerTok > 0, s"maxDocsPerTok must be > 0: $maxDocsPerTok")
-    val f = shingleFront(docs, idCol, textCol, shingleK)
-    val prefixPre0 = prefixToks(f, numT, denT)
+    val f = shingleFront(docs, idCol, textCol)
+    val prefixPre0 = prefixToks(f)
     // the r11 dispatch: pin the prefix table under the input bound, where
     // the nd aggregate and the keep join below both read it
     val prefixPre =
@@ -552,20 +571,19 @@ object Dedup {
       // the chain above doesn't run twice
       .localCheckpoint()
     // PPJoin length filter at the CANDIDATE level: jacc = I/U ≤
-    // min/max (I ≤ min(n_a,n_b), U ≥ max), so a pair with min·denT <
-    // max·numT cannot pass the exact threshold — dropped here, BEFORE
+    // min/max (I ≤ min(n_a,n_b), U ≥ max), so a pair with min·5 <
+    // max·3 cannot pass the exact threshold — dropped here, BEFORE
     // the distinct shuffle and before the per-doc shingle arrays are
     // hauled through the verify join (~1/3 of sf0.1 candidates die;
     // exact math, so the oracle is untouched).
     val cand = prefix.as("a")
       .join(prefix.as("b"),
         col("a.tok") === col("b.tok") && col("a.doc_id") < col("b.doc_id"))
-      .filter(least(col("a.n"), col("b.n")) * denT >=
-        greatest(col("a.n"), col("b.n")) * numT)
+      .filter(least(col("a.n"), col("b.n")) * JaccardDen >=
+        greatest(col("a.n"), col("b.n")) * JaccardNum)
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .distinct()
-    jaccardVerify(docs, idCol, textCol, shingleK, numT, denT, cand,
-      f.inputSmall)
+    jaccardVerify(docs, idCol, textCol, cand, f.inputSmall)
   }
 
   /** Exact-Jaccard verify stage of [[prefixJaccardPairs]]: candidates
@@ -573,17 +591,15 @@ object Dedup {
     * re-checked against the exact integer threshold, so the candidate
     * generator can only cost recall, never precision. */
   private def jaccardVerify(docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int, numT: Int, denT: Int, cand: DataFrame,
-      inputSmall: Boolean): DataFrame = {
-    val (candSpread, arrsV) =
-      verifyArrs(docs, idCol, textCol, shingleK, cand, inputSmall)
+      cand: DataFrame, inputSmall: Boolean): DataFrame = {
+    val (candSpread, arrsV) = verifyArrs(docs, idCol, textCol, cand, inputSmall)
     candSpread
       .join(arrsV.as("sa"), col("sa.doc_id") === col("d1"))
       .join(arrsV.as("sb"), col("sb.doc_id") === col("d2"))
       .withColumn("n_inter",
         TextFunctions.sortedIntersectCount(col("sa.tokset"), col("sb.tokset")))
-      .filter(col("n_inter") * denT >=
-        (col("sa.n") + col("sb.n") - col("n_inter")) * numT)
+      .filter(col("n_inter") * JaccardDen >=
+        (col("sa.n") + col("sb.n") - col("n_inter")) * JaccardNum)
       .select(col("d1").as("id_a"), col("d2").as("id_b"),
         col("n_inter").cast("long").as("n_inter"),
         col("sa.n").cast("long").as("n_a"), col("sb.n").cast("long").as("n_b"),
@@ -597,8 +613,7 @@ object Dedup {
     * (doc_id, tokset, n), broadcast when [[maybeBroadcastArrs]] admits
     * them. Each verify keeps its own joins and threshold. */
   private def verifyArrs(docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int, cand: DataFrame,
-      inputSmall: Boolean): (DataFrame, DataFrame) = {
+      cand: DataFrame, inputSmall: Boolean): (DataFrame, DataFrame) = {
     // The verify stage is CPU-dense per BYTE (a merge scan of two ~n-
     // element hash arrays per pair), so AQE's bytes-based coalescing
     // under-parallelizes it when the candidate table is small on disk —
@@ -620,7 +635,7 @@ object Dedup {
       .filter(length(trim(col(textCol))) > 0)
       .select(col(idCol).as("doc_id"),
         TextFunctions.charShingleHashes(
-          TextFunctions.normalize(col(textCol)), shingleK).as("tokset"))
+          TextFunctions.normalize(col(textCol)), ShingleK).as("tokset"))
       .withColumn("n", size(col("tokset")))
     (candSpread, maybeBroadcastArrs(docs, textCol, arrs))
   }
@@ -707,7 +722,7 @@ object Dedup {
 
   /** Directed containment join — the ASYMMETRIC sibling of
     * [[prefixJaccardPairs]]: emit (sub, sup) where C(sub→sup) =
-    * |S_sub ∩ S_sup| / |S_sub| ≥ numT/denT over char-`shingleK` shingle
+    * |S_sub ∩ S_sup| / |S_sub| ≥ 3/4 over char 8-gram shingle
     * sets. Jaccard misses exactly these pairs: a short doc quoted inside
     * a much longer one has high containment but low Jaccard (the union is
     * dominated by the long doc), and it's the quote/partial-copy/expansion
@@ -737,15 +752,13 @@ object Dedup {
     * A non-positive `maxDocsPerTok` is refused: it would keep no probe
     * token, and so return no pairs. */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 8, numT: Int = 3, denT: Int = 4,
-      maxDocsPerTok: Int = 20): DataFrame = {
-    require(numT > 0 && denT > numT, s"threshold must be in (0,1): $numT/$denT")
+      maxDocsPerTok: Int = MaxDocsPerTok): DataFrame = {
     require(maxDocsPerTok > 0, s"maxDocsPerTok must be > 0: $maxDocsPerTok")
-    val f = shingleFront(docs, idCol, textCol, shingleK)
+    val f = shingleFront(docs, idCol, textCol)
     // probe prefix: the rarest n − ceil(t·n) + 1 shingles by global dfreq
-    containmentVerify(docs, idCol, textCol, shingleK, numT, denT,
-      probeCandidates(f, graft.functions.PrefixMinK.column(numT, denT),
-        maxDocsPerTok),
+    containmentVerify(docs, idCol, textCol,
+      probeCandidates(f, graft.functions.PrefixMinK.column(ContainNum,
+        ContainDen), maxDocsPerTok),
       f.inputSmall)
   }
 
@@ -760,7 +773,7 @@ object Dedup {
     * sub's rarest shingles (a template-cleaned copy) defeats the
     * heuristic; [[containmentPairs]]' full prefix keeps the exact-prefix
     * guarantee for that shape. */
-  private[graft] val OneSidedProbeK = 8
+  private val OneSidedProbeK = 8
 
   /** Directed (sub, sup) candidates of the containment joins: each doc's
     * probe tokens — `pick` over its (n, dfreq, tok) rows: the rarest
@@ -811,23 +824,18 @@ object Dedup {
     * shingles are its own unique tail — exactly the shingles MISSING
     * from every other member. */
   def containmentUnionPortable(docs: DataFrame, idCol: String,
-      textCol: String, shingleK: Int = 8, numT: Int = 3, denT: Int = 4,
-      probeK: Int = 8, maxDocsPerTok: Int = 20,
-      // 8 bands of 2 lanes (collision 1−(1−J²)⁸) — the q29-default 4×4
-      // layout measurably misses ~5 of the spec corpus's 1560 family pairs
-      // ((1−J⁴)⁴ at J≈0.86), which the one-sided leg cannot recover
-      // (blind to families by design)
-      bands: Int = 8,
-      maxBucket: Int = 1000): DataFrame = {
-    require(maxDocsPerTok > 0, s"maxDocsPerTok must be > 0: $maxDocsPerTok")
-    val f = shingleFront(docs, idCol, textCol, shingleK)
-    val sym = minhashCandidatesPortable(docs, idCol, textCol,
-      shingleN = 3, numHashes = 16, bands = bands, maxBucket = maxBucket)
-    containmentVerify(docs, idCol, textCol, shingleK, numT, denT,
+      textCol: String): DataFrame = {
+    val f = shingleFront(docs, idCol, textCol)
+    // 8 bands of 2 lanes (collision 1−(1−J²)⁸) — the q29-default 4×4
+    // layout measurably misses ~5 of the spec corpus's 1560 family pairs
+    // ((1−J⁴)⁴ at J≈0.86), which the one-sided leg cannot recover
+    // (blind to families by design)
+    val sym = minhashCandidatesPortable(docs, idCol, textCol, bands = 8)
+    containmentVerify(docs, idCol, textCol,
       sym.select(col("id_a").as("sub"), col("id_b").as("sup"))
         .unionByName(sym.select(col("id_b").as("sub"), col("id_a").as("sup")))
         .unionByName(probeCandidates(f,
-          graft.functions.PrefixMinK.columnK(probeK), maxDocsPerTok))
+          graft.functions.PrefixMinK.columnK(OneSidedProbeK), MaxDocsPerTok))
         .distinct(),
       f.inputSmall)
   }
@@ -836,7 +844,7 @@ object Dedup {
     * banded candidates measurably lack: BASELINE casym, 0.2% banded
     * recall at J≈0.03 vs 100% for the 19×-wall/225×-scratch exact
     * join). Candidates come from the SUBSET side only: each doc probes
-    * its [[OneSidedProbeK]] globally-rarest char-`shingleK` shingles
+    * its [[OneSidedProbeK]] globally-rarest char 8-gram shingles
     * (native bounded `rarest_min_k` aggregate — the map-side partial
     * never holds more than k pairs) against the FULL token index,
     * capped at `maxDocsPerTok`. A tiny-quote sub probes dfreq≈2
@@ -850,17 +858,14 @@ object Dedup {
     *
     * The quote-in-doc/contamination check q259 runs. Oracle-mirrorable:
     * probe = `row_number() OVER (PARTITION BY doc ORDER BY dfreq, tok) ≤
-    * probeK AND dfreq ≤ cap`. A non-positive `maxDocsPerTok` is refused:
+    * 8 AND dfreq ≤ cap`. A non-positive `maxDocsPerTok` is refused:
     * it would keep no probe token, and so return no pairs. */
   def containmentPairsOneSided(docs: DataFrame, idCol: String,
-      textCol: String, shingleK: Int = 8, numT: Int = 3, denT: Int = 4,
-      probeK: Int = OneSidedProbeK, maxDocsPerTok: Int = 20): DataFrame = {
-    require(numT > 0 && denT > numT, s"threshold must be in (0,1): $numT/$denT")
-    require(probeK > 0, s"probeK must be > 0: $probeK")
+      textCol: String, maxDocsPerTok: Int = MaxDocsPerTok): DataFrame = {
     require(maxDocsPerTok > 0, s"maxDocsPerTok must be > 0: $maxDocsPerTok")
-    val f = shingleFront(docs, idCol, textCol, shingleK)
-    containmentVerify(docs, idCol, textCol, shingleK, numT, denT,
-      probeCandidates(f, graft.functions.PrefixMinK.columnK(probeK),
+    val f = shingleFront(docs, idCol, textCol)
+    containmentVerify(docs, idCol, textCol,
+      probeCandidates(f, graft.functions.PrefixMinK.columnK(OneSidedProbeK),
         maxDocsPerTok),
       f.inputSmall)
   }
@@ -871,22 +876,20 @@ object Dedup {
     * integer threshold — candidate generators cost recall only, never
     * precision. */
   private def containmentVerify(docs: DataFrame, idCol: String,
-      textCol: String, shingleK: Int, numT: Int, denT: Int,
-      cand0: DataFrame, inputSmall: Boolean): DataFrame = {
-    val (cand, arrsV) =
-      verifyArrs(docs, idCol, textCol, shingleK, cand0, inputSmall)
+      textCol: String, cand0: DataFrame, inputSmall: Boolean): DataFrame = {
+    val (cand, arrsV) = verifyArrs(docs, idCol, textCol, cand0, inputSmall)
     cand
       .join(arrsV.as("sa"), col("sa.doc_id") === col("sub"))
       .join(arrsV.as("sb"), col("sb.doc_id") === col("sup"))
       // length pre-filter, exact: I ≤ n_sup, so C = I/n_sub ≥ t forces
-      // n_sup·denT ≥ numT·n_sub — a sup much shorter than its sub cannot
+      // 4·n_sup ≥ 3·n_sub — a sup much shorter than its sub cannot
       // contain it. Kills the pair on two carried ints BEFORE the
       // merge-scan of the hash arrays (the PPJoin-filter idea, containment
       // form); implied by the exact threshold below, so oracle untouched.
-      .filter(col("sb.n") * denT >= col("sa.n") * numT)
+      .filter(col("sb.n") * ContainDen >= col("sa.n") * ContainNum)
       .withColumn("n_inter",
         TextFunctions.sortedIntersectCount(col("sa.tokset"), col("sb.tokset")))
-      .filter(col("n_inter") * denT >= col("sa.n") * numT)
+      .filter(col("n_inter") * ContainDen >= col("sa.n") * ContainNum)
       .select(col("sub").as("id_sub"), col("sup").as("id_sup"),
         col("n_inter").cast("long").as("n_inter"),
         col("sa.n").cast("long").as("n_sub"),
@@ -951,24 +954,24 @@ object Dedup {
     * count, quality score, …). One shuffle on `cluster`; the ranking
     * window is partitioned, never global. Returns
     * (cluster, keeper, keeper_weight, n_members). */
-  def selectKeepers(members: DataFrame, idCol: String, weightCol: String,
-      clusterCol: String = "cluster"): DataFrame = {
+  def selectKeepers(members: DataFrame, idCol: String,
+      weightCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(clusterCol))
+      .partitionBy(col("cluster"))
       .orderBy(col(weightCol).desc, col(idCol).asc)
     members
       .withColumn("_keeper_rnk", row_number().over(w))
       .withColumn("_keeper_n",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col(clusterCol))))
+          .partitionBy(col("cluster"))))
       .filter(col("_keeper_rnk") === 1)
-      .select(col(clusterCol).as("cluster"), col(idCol).as("keeper"),
+      .select(col("cluster"), col(idCol).as("keeper"),
         col(weightCol).cast("long").as("keeper_weight"),
         col("_keeper_n").cast("long").as("n_members"))
   }
 
   /** Line-level corpus dedup (the CCNet/RefinedWeb cleanup): drop every
-    * LINE that appears in ≥ `minDocs` distinct documents (headers,
+    * LINE that appears in ≥ 2 distinct documents (headers,
     * footers, cookie banners, navigation), keep the rest of each document
     * in original order. Complements [[boilerplateSpans]] (which MEASURES
     * n-gram boilerplate); this one REWRITES the text, line-granular.
@@ -984,23 +987,22 @@ object Dedup {
     * dictionary (vocabulary-bounded — AQE broadcasts it), and one groupBy
     * per doc whose `array_sort` over (pos, line) structs restores order
     * without a window. Documents never move whole; lines do. */
-  def lineDedup(docs: DataFrame, idCol: String, textCol: String,
-      minDocs: Int = 2, delim: String = "\n"): DataFrame = {
-    // delim is a LITERAL separator (quoted — Spark's split takes a regex;
-    // an unquoted "|" or "." would explode every character)
+  def lineDedup(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    // the newline is a LITERAL separator (quoted — Spark's split takes a
+    // regex)
     val lines = docs.select(col(idCol),
       posexplode(split(col(textCol),
-        java.util.regex.Pattern.quote(delim), -1)).as(Seq("pos", "line")))
+        java.util.regex.Pattern.quote("\n"), -1)).as(Seq("pos", "line")))
     val hot = lines.groupBy(col("line"))
       .agg(countDistinct(col(idCol)).as("nd"))
-      .filter(col("nd") >= minDocs)
+      .filter(col("nd") >= 2)
       .select(col("line"))
     val kept = lines.join(hot, Seq("line"), "left_anti")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_kept"),
         array_join(
           transform(array_sort(collect_list(struct(col("pos"), col("line")))),
-            s => s.getField("line")), delim).as("text_clean"))
+            s => s.getField("line")), "\n").as("text_clean"))
     val totals = lines.groupBy(col(idCol)).agg(count(lit(1)).as("n_lines"))
     totals.join(kept, Seq(idCol), "left")
       .select(col(idCol),
@@ -1023,7 +1025,7 @@ object Dedup {
 
   /** Exact duplicated-SPAN removal — the REWRITE arm of the substring-dedup
     * family (the "ExactSubstr" cleanup of Lee et al. 2022, word-aligned):
-    * any `gramN`-word n-gram appearing in ≥ `minDocs` distinct documents
+    * any 5-word n-gram appearing in ≥ 2 distinct documents
     * marks every token it covers as duplicated; each document is rewritten
     * with all covered tokens removed. Overlapping hot grams merge
     * naturally (a token is dropped if ANY covering gram is hot), so a long
@@ -1049,9 +1051,9 @@ object Dedup {
     * document — no shuffle beyond the dictionary join and one groupBy
     * per side. A document never moves whole through the gram exchange;
     * only (gram, doc, pos) rows do. */
-  def duplicatedSpanRemoval(docs: DataFrame, idCol: String, textCol: String,
-      gramN: Int = 5, minDocs: Int = 2): DataFrame = {
-    require(gramN >= 2, s"gramN must be >= 2: $gramN")
+  def duplicatedSpanRemoval(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
+    val gramN = 5
     // fanOutScan measured NEGATIVE here (r22: q196 +0.36, q200 +0.37
     // min-of-3 interleaved) — the split+gram pass is cheaper than the
     // text shuffle the spread adds. Left unspread (see Spread.fanOutScan).
@@ -1073,7 +1075,7 @@ object Dedup {
     val grams = Spread.pinIfSmall(docs)(gramsPlan)
     val hot = grams.groupBy(col("g"))
       .agg(countDistinct(col("doc_id")).as("nd"))
-      .filter(col("nd") >= minDocs)
+      .filter(col("nd") >= 2)
       .select(col("g"))
     val starts = grams.join(hot, Seq("g"))
       .groupBy(col("doc_id"))
@@ -1116,38 +1118,34 @@ object Dedup {
     * `members`: no shuffle, no driver participation, trivially 100
     * TB-safe.
     *
+    * Fractions are 1/256ths: 204 train, 26 val, the other 26 test.
+    *
     * Returns `members` plus a `split` column ('train'|'val'|'test'). */
-  def leakageSafeSplit(members: DataFrame, clusterCol: String = "cluster",
-      train256: Int = 204, val256: Int = 26): DataFrame = {
-    require(train256 > 0 && val256 > 0 && train256 + val256 < 256,
-      s"fractions are 1/256ths and must leave room for test: $train256 + $val256")
-    val hx = substring(md5(col(clusterCol).cast("string")), 1, 2)
+  def leakageSafeSplit(members: DataFrame): DataFrame = {
+    val hx = substring(md5(col("cluster").cast("string")), 1, 2)
     members.withColumn("split",
-      when(hx < lit(f"$train256%02x"), lit("train"))
-        .when(hx < lit(f"${train256 + val256}%02x"), lit("val"))
+      when(hx < lit("cc"), lit("train"))
+        .when(hx < lit("e6"), lit("val"))
         .otherwise(lit("test")))
   }
 
-  /** [[leakageSafeSplit]] generalized to k-fold cross-validation: every
+  /** [[leakageSafeSplit]] generalized to 5-fold cross-validation: every
     * member of a near-dup cluster lands in the SAME fold (fold id =
-    * first 8 md5 hex chars of the cluster label, mod k — deterministic,
+    * first 8 md5 hex chars of the cluster label, mod 5 — deterministic,
     * engine-portable, ~uniform across folds), so no fold's validation
     * half shares a near-duplicate with its training half. Same one-map
     * shape: no shuffle, no RNG state. */
-  def leakageSafeKFold(members: DataFrame, clusterCol: String = "cluster",
-      k: Int = 5): DataFrame = {
-    require(k >= 2 && k <= 256, s"k must be in [2, 256]: $k")
+  def leakageSafeKFold(members: DataFrame): DataFrame =
     members.withColumn("fold",
-      pmod(conv(substring(md5(col(clusterCol).cast("string")), 1, 8), 16, 10)
-        .cast("long"), lit(k.toLong)))
-  }
+      pmod(conv(substring(md5(col("cluster").cast("string")), 1, 8), 16, 10)
+        .cast("long"), lit(5L)))
 
   /** Corpus-frequency boilerplate detection — the C4-style "drop text
     * units that repeat across the corpus" cleanup, over word n-gram spans
     * (this corpus has no line structure; on line-structured text pass the
     * exploded lines through the same shape). Returns per document the
-    * distinct-span count, how many of those spans are boilerplate (appear
-    * in ≥ `minDocs` documents), and the boilerplate share.
+    * distinct word 5-gram count, how many of those spans are boilerplate
+    * (appear in ≥ 2 documents), and the boilerplate share.
     *
     * Scale: the per-(doc, span) distinct and the span doc-frequency are
     * two hash aggregates over one identical scan+shuffle subtree — AQE's
@@ -1156,13 +1154,10 @@ object Dedup {
     * the span would save the second aggregate but puts every occurrence
     * of a hot span in one task (universal boilerplate ⇒ a straggler);
     * the aggregate+broadcast shape has no such cliff.
-    * The boilerplate dictionary is broadcast by default (spans
-    * repeating across documents are a vocabulary-bounded set); at corpus
-    * scales where it outgrows a broadcast, pass `broadcastDict = false`
-    * and the final count becomes a shuffle join on the span. */
-  def boilerplateSpans(docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 5, minDocs: Int = 2,
-      broadcastDict: Boolean = true): DataFrame = {
+    * The boilerplate dictionary is broadcast (spans repeating across
+    * documents are a vocabulary-bounded set). */
+  def boilerplateSpans(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
     // the shingle explode is CPU-bound: fan a narrower-than-cores scan out
     // first (a single-row-group test file otherwise pins both aggregate
     // branches to one task; a real corpus has plenty of scan partitions
@@ -1174,14 +1169,14 @@ object Dedup {
       // lambda setup alone at sf0.1
       .select(col(idCol).as("doc_id"),
         explode(graft.functions.ShingleOps.wordShinglesCol(
-          col(textCol), shingleN)).as("s"))
+          col(textCol), 5)).as("s"))
       .groupBy(col("doc_id"), col("s")).agg(count(lit(1)).as("_m"))
     val dict = perDoc.groupBy(col("s"))
       .agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") >= minDocs)
+      .filter(col("n_docs") >= 2)
       .select(col("s"), lit(1).as("_b"))
     perDoc
-      .join(if (broadcastDict) broadcast(dict) else dict, Seq("s"), "left")
+      .join(broadcast(dict), Seq("s"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).cast("long").as("n_distinct"),
         count(col("_b")).cast("long").as("n_boiler"))
@@ -1189,27 +1184,26 @@ object Dedup {
         round(col("n_boiler").cast("double") / col("n_distinct").cast("double"), 6))
   }
 
-  /** Shared-passage pairs: documents sharing ≥ `minShared` winnowing
+  /** Shared-passage pairs: documents sharing ≥ 8 winnowing
     * fingerprints — PASSAGE-level duplication (a copied paragraph inside
     * otherwise-different documents), which whole-document MinHash misses
     * when the shared span is a small fraction of each document.
     *
     * Winnowing guarantees any shared character run of length ≥ gram+win-1
-    * contributes at least one common fingerprint, so `minShared` scales
-    * with the passage length being hunted. The defaults (16-char grams,
-    * window 8, ≥8 shared, fp in ≤10 docs) tune for real passages: short
+    * contributes at least one common fingerprint, so the shared count
+    * scales with the passage length being hunted. The values (16-char
+    * grams, window 8, ≥8 shared, fp in ≤10 docs) tune for real passages: short
     * grams on a small-vocabulary corpus make fingerprints near-universal
     * and the pair set quadratic (measured: gram=5/cap=100 yielded 81k
-    * pairs of 125k possible at sf0.01; these defaults isolate exactly the
+    * pairs of 125k possible at sf0.01; these values isolate exactly the
     * 25 true near-dup pairs and grow linearly with the corpus). Same scale
     * discipline as the LSH chain: one native scalar pass computes each
     * document's distinct fingerprint set (zero shuffles), only
     * (doc_id, 8-hex-fp) rows ever shuffle, and fingerprints appearing in
-    * more than `maxDocsPerFp` documents are dropped as boilerplate BEFORE
+    * more than 10 documents are dropped as boilerplate BEFORE
     * the self-join — the hot bucket can't quadratically explode a task. */
-  def sharedPassagePairs(docs: DataFrame, idCol: String, textCol: String,
-      gram: Int = 16, win: Int = 8, minShared: Int = 8,
-      maxDocsPerFp: Int = 10): DataFrame = {
+  def sharedPassagePairs(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
     import org.apache.spark.sql.GraftBridge
     // the winnow pass is CPU-bound per doc: fan a narrower-than-cores
     // scan out first (r22 — without this the whole fingerprint pass ran
@@ -1221,7 +1215,7 @@ object Dedup {
         explode(GraftBridge.column(graft.functions.WinnowFingerprints(
           GraftBridge.expression(
             graft.functions.TextFunctions.normalize(col(textCol))),
-          gram, win))).as("fp"))
+          16, 8))).as("fp"))
     // TWO consumers follow (the band aggregate and the join) — same
     // size-dispatched materialization as prefixJaccardPairs: under a
     // proven input bound the winnow pass is checkpointed once; above it,
@@ -1235,7 +1229,7 @@ object Dedup {
     // the same at-scale shape rule as prefixJaccardPairs' caps (r11).
     val fpBand = fps.groupBy(col("fp"))
       .agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") > 1 && col("n_docs") <= maxDocsPerFp)
+      .filter(col("n_docs") > 1 && col("n_docs") <= 10)
       .select(col("fp"))
     // consumed by both self-join sides; ≤ cap rows per fingerprint but
     // total rows still scale with the corpus, so the same dispatch
@@ -1246,7 +1240,7 @@ object Dedup {
         col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .agg(count(lit(1)).as("n_shared"), min(col("a.fp")).as("min_fp"))
-      .filter(col("n_shared") >= minShared)
+      .filter(col("n_shared") >= 8)
       .select(col("id_a"), col("id_b"),
         col("n_shared").cast("long").as("n_shared"), col("min_fp"))
   }

@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
 object Graph {
 
   /** k-core peeling (fixed unrolled rounds) — the dense-community
-    * extractor: repeatedly drop nodes with degree < k and re-restrict
-    * the edge list, `rounds` times. After enough rounds this converges
-    * to the true k-core; a FIXED round count keeps the plan bounded and
+    * extractor: repeatedly drop nodes with degree < 2 and re-restrict
+    * the edge list, 3 times. After enough rounds this converges
+    * to the true 2-core; a FIXED round count keeps the plan bounded and
     * cross-engine reproducible (the oracle unrolls the same rounds), the
     * same posture as [[integerPageRank]]'s fixed iterations. Returns the
     * surviving nodes with their degree in the peeled subgraph.
@@ -23,15 +23,14 @@ object Graph {
     * equi-joins on the (candidate-pair-sized) edge list; the list is
     * checkpointed per round so lineage stays O(rounds), not O(2^rounds).
     */
-  def kCorePeel(pairs: DataFrame, k: Int = 2, rounds: Int = 3): DataFrame = {
-    require(k >= 1 && rounds >= 1 && rounds <= 10, "bounded peeling")
+  def kCorePeel(pairs: DataFrame): DataFrame = {
     var edges = pairs
       .select(col("id_a").as("a"), col("id_b").as("b"))
       .unionByName(pairs.select(col("id_b").as("a"), col("id_a").as("b")))
       .localCheckpoint()
-    for (_ <- 1 to rounds) {
+    for (_ <- 1 to 3) {
       val keep = edges.groupBy(col("a")).agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k).select(col("a"))
+        .filter(col("d") >= 2).select(col("a"))
       edges = edges
         .join(keep, "a")
         .join(keep.withColumnRenamed("a", "b"), "b")
@@ -45,8 +44,9 @@ object Graph {
   /** Deterministic integer PageRank over an undirected pair list.
     *
     * The recurrence runs in exact "rank units" (LONG), not doubles:
-    *   units_0(v)   = base
+    *   units_0(v)   = base = 1,000,000
     *   units_k+1(v) = 0.15·base + Σ_{u~v} (units_k(u) · 85) DIV (100 · deg(u))
+    * for 3 iterations.
     * Integer floor division makes every iteration bit-reproducible across
     * engines and partitionings — float PageRank sums diverge in the last
     * ulp under reordering, which would break hash-exact verification.
@@ -57,9 +57,8 @@ object Graph {
     * (by dst) — the standard edge-partitioned PR step. Iterations are a
     * fixed count, so the lineage is bounded; no driver-side loop state.
     */
-  def integerPageRank(pairs: DataFrame, iters: Int = 3,
-      base: Long = 1000000L): DataFrame = {
-    require(iters >= 1 && iters <= 20, "bounded fixed iteration count")
+  def integerPageRank(pairs: DataFrame): DataFrame = {
+    val base = 1000000L
     // Tiny relative to the corpus; checkpoint so the (expensive) candidate
     // generation upstream runs once, not once per iteration.
     val edges = pairs
@@ -73,7 +72,7 @@ object Graph {
     val keep = (base * 15L) / 100L
     var units = edges.select(col("src").as("id")).distinct()
       .withColumn("units", lit(base))
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to 3) {
       units = withDeg
         .join(units, withDeg("src") === units("id"))
         .select(col("dst"),

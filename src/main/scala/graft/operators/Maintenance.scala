@@ -251,7 +251,7 @@ object Maintenance {
 
   /** Winsorized summary — robust statistics after clipping to exact-rank
     * percentile thresholds: lo = smallest value whose inclusive
-    * cumulative count ≥ ⌈n·pLow/100⌉ (hi likewise at pHigh), values
+    * cumulative count ≥ ⌈n·1/100⌉ (hi likewise at 99/100), values
     * clamped to [lo, hi] before the cents-exact sum. Exact-rank (not
     * interpolated) thresholds keep every quantity integer, so the
     * outlier-robust mean is engine-identical. One row: n, thresholds,
@@ -260,9 +260,7 @@ object Maintenance {
     * Scale: the corpus collapses once to the distinct-cents table; the
     * cumulative, the threshold picks, and the clamped re-aggregation all
     * run over that table (the q163 posture). */
-  def winsorizedStats(df: DataFrame, valueCol: String, pLow: Int = 1,
-      pHigh: Int = 99): DataFrame = {
-    require(0 <= pLow && pLow < pHigh && pHigh <= 100, "need 0<=lo<hi<=100")
+  def winsorizedStats(df: DataFrame, valueCol: String): DataFrame = {
     val byV = df.select(round(col(valueCol) * 100).cast("long").as("c"))
       .filter(col("c").isNotNull)
       .groupBy(col("c")).agg(count(lit(1)).as("cnt"))
@@ -270,9 +268,9 @@ object Maintenance {
         Window.orderBy(col("c")).rowsBetween(Window.unboundedPreceding, 0)))
       .withColumn("n", sum(col("cnt")).over(Window.partitionBy()))
     val th = cum.agg(
-      min(when(col("cum") * lit(100L) >= col("n") * lit(pLow.toLong),
+      min(when(col("cum") * lit(100L) >= col("n") * lit(1L),
         col("c"))).as("lo_c"),
-      min(when(col("cum") * lit(100L) >= col("n") * lit(pHigh.toLong),
+      min(when(col("cum") * lit(100L) >= col("n") * lit(99L),
         col("c"))).as("hi_c"),
       max(col("n")).as("n"))
     val clamped = byV.crossJoin(broadcast(th))
@@ -292,7 +290,7 @@ object Maintenance {
 
   /** Numeric distribution drift — "did the value distribution move
     * between the first and second half of the period": values quantized
-    * to integer cents, binned with the [[equiWidthHistogram]] formula
+    * to integer cents, binned into 10 bins by the [[equiWidthHistogram]] formula
     * over the GLOBAL min/max (both periods share the exact same bin
     * edges — separate per-period binning would manufacture drift), the
     * time split at the integer midpoint day, and the per-bin PSI
@@ -300,10 +298,9 @@ object Maintenance {
     * smoothed, micro-bit log ratios).
     *
     * Scale: map-only bin/period assignment after one broadcast stats
-    * row; the drift compare runs on two ≤ `bins`-row aggregates. */
-  def numericDrift(df: DataFrame, valueCol: String, tsCol: String,
-      bins: Int = 10): DataFrame = {
-    require(bins > 0, "need at least one bin")
+    * row; the drift compare runs on two ≤ 10-row aggregates. */
+  def numericDrift(df: DataFrame, valueCol: String,
+      tsCol: String): DataFrame = {
     val ev = df.filter(col(valueCol).isNotNull)
       .select(round(col(valueCol) * 100).cast("long").as("c"),
         to_date(col(tsCol)).as("day"))
@@ -311,7 +308,7 @@ object Maintenance {
       min(col("day")).as("d0"), max(col("day")).as("d1"))
     val binned = ev.crossJoin(broadcast(stats))
       .withColumn("bin",
-        expr(s"CAST(((c - mn) * $bins) DIV (mx - mn + 1) AS BIGINT)"))
+        expr("CAST(((c - mn) * 10) DIV (mx - mn + 1) AS BIGINT)"))
       .withColumn("is_a", datediff(col("day"), col("d0")).cast("long") <=
         call_function("div", datediff(col("d1"), col("d0")).cast("long"),
           lit(2L)))

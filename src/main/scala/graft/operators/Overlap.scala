@@ -34,10 +34,9 @@ import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionSer
   * call, so no stale-property thread reuse is possible.
   */
 object Overlap {
-  def runAll[A](jobs: Seq[() => A], maxConcurrent: Int = 4): Seq[A] = {
+  def runAll[A](jobs: Seq[() => A]): Seq[A] = {
     require(jobs.nonEmpty, "Overlap.runAll needs at least one job")
-    val pool = Executors.newFixedThreadPool(
-      math.min(jobs.size, maxConcurrent))
+    val pool = Executors.newFixedThreadPool(math.min(jobs.size, 4))
     try {
       // Wait in COMPLETION order, not submission order: a failure is seen
       // as soon as it happens even while an earlier job is still running.

@@ -13,29 +13,13 @@ import org.apache.spark.sql.functions._
   * Scale design:
   *  - brute-force top-k against ONE query vector is a map-side scan +
   *    a single top-k reduction — O(n·d) work, no shuffle of vectors;
-  *  - all-pairs near-dup at 100 TB must never cross-join: random-hyperplane
-  *    LSH buckets vectors by a 16-bit sign signature map-side, then only
-  *    within-bucket pairs are scored. Hyperplane components are derived
-  *    deterministically from (lane, dimension) hashes, so no model state and
-  *    every executor computes identical planes.
+  *  - all-pairs near-dup at 100 TB must never cross-join: hyperplane LSH
+  *    buckets vectors by a sign signature map-side, then only within-bucket
+  *    pairs are scored. Hyperplane components come from an integer lattice
+  *    over (plane, dimension), so there is no model state, every executor
+  *    computes identical planes, and the oracle reproduces them.
   */
 object Similarity {
-
-  /** The hot-bucket cap of the LSH joins: `rows` semi-joined against the
-    * `keys` buckets holding at most `maxBucket` rows (the partial aggregate
-    * collapses a collapsed-signature bucket map-side, and AQE broadcasts
-    * the ≤ 2^bits-row bucket list). `maxBucket` = Int.MaxValue is off
-    * (`rows` unchanged). A non-positive cap is a caller arithmetic bug
-    * (e.g. an Int-wrapped value) and fails loudly instead of refusing
-    * every bucket. */
-  private def capBuckets(rows: DataFrame, keys: Seq[String],
-      maxBucket: Int): DataFrame = {
-    require(maxBucket > 0, s"maxBucket must be > 0: $maxBucket")
-    if (maxBucket == Int.MaxValue) rows
-    else rows.join(rows.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("m"))
-      .filter(col("m") <= maxBucket.toLong).select(keys.map(col): _*), keys)
-  }
 
   /** Element-wise dot product — native compiled loop
     * ([[graft.functions.VectorOps]]), sequential left fold so results are
@@ -85,12 +69,10 @@ object Similarity {
     * integer micro-units first (`floor(v·1e6 + 0.5)`, the [[meanPool]]
     * contract), so every projected coordinate is an exact integer sum —
     * no float associativity anywhere. Map-only, zero shuffle; one fused
-    * pass per row inside codegen. Output columns `p0..p{outDim-1}` are
+    * pass per row inside codegen. Output columns `p0..p7` (outDim = 8) are
     * micro-units (divide by 1e6 for the real-valued projection). */
-  def randomProjection(vectors: DataFrame, idCol: String, vecCol: String,
-      outDim: Int = 8): DataFrame = {
-    require(outDim <= 67, "coefficient rows repeat past outDim 67")
-    val proj = (0 until outDim).map(i => intProjection(col(vecCol), i).as(s"p$i"))
+  def randomProjection(vectors: DataFrame, idCol: String, vecCol: String): DataFrame = {
+    val proj = (0 until 8).map(i => intProjection(col(vecCol), i).as(s"p$i"))
     vectors.select((col(idCol) +: proj): _*)
   }
 
@@ -108,47 +90,13 @@ object Similarity {
       lit(0L), (acc, x) => acc + x)
   }
 
-  /** 16-bit random-hyperplane signature: bit i = sign(v · h_i) where
-    * h_i[j] is a pseudo-random coefficient in [-1, 1] derived from
-    * xxhash64(i, j). Deterministic, stateless, computed entirely
-    * map-side. */
-  def hyperplaneSignature(vec: Column, bits: Int): Column = {
-    val vd = toDoubleArray(vec)
-    val sigBits = (0 until bits).map { i =>
-      // h_ij in [-1, 1]: two-sided hash-derived coefficient (2000001
-      // residues, so +1.0 is attainable; harmless for sign bucketing)
-      val proj = aggregate(
-        zip_with(vd, sequence(lit(0), size(vd) - 1),
-          (x, j) => x * (pmod(xxhash64(lit(i), j), lit(2000001L)).cast("double") / lit(1000000.0) - lit(1.0))),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    sigBits.reduce(_ + _)
-  }
-
-  /** The hyperplane stream for OR-table `table`: plane index
-    * `table·bits + i` into the same xxhash64-derived coefficient family,
-    * so table 0 IS [[hyperplaneSignature]] bit-for-bit and every further
-    * table draws fresh independent planes. Used by [[lshNearPairsTables]];
-    * exposed so callers can bucket one table at a time. */
-  def hyperplaneSignatureAt(vec: Column, bits: Int, table: Int): Column = {
-    val vd = toDoubleArray(vec)
-    val sigBits = (0 until bits).map { i =>
-      val plane = table * bits + i
-      val proj = aggregate(
-        zip_with(vd, sequence(lit(0), size(vd) - 1),
-          (x, j) => x * (pmod(xxhash64(lit(plane), j), lit(2000001L))
-            .cast("double") / lit(1000000.0) - lit(1.0))),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    sigBits.reduce(_ + _)
-  }
-
-  /** [[hyperplaneSignatureLattice]]'s OR-table sibling: plane index
-    * `table·bits + i` into the same integer lattice, table 0 identical to
-    * the single-table lattice signature — portable SQL, so the multi-table
-    * candidate chain is oracle-checkable end-to-end (q254). */
+  /** The LSH joins' one signature: a hyperplane signature over a small
+    * integer lattice, bit i = sign(v · h_p) with plane p = `table·bits + i`
+    * and h_p[j] = ((p·31 + j·17) mod 7) − 3 ∈ [−3, 3]. Table 0 is the
+    * single-table signature; every further OR-table draws the next planes
+    * of the same lattice. Portable SQL, so the DuckDB oracle reproduces the
+    * bucketing exactly and every LSH chain is oracle-checkable end to end
+    * (q32, q254, q256). */
   def hyperplaneSignatureLatticeAt(vec: Column, bits: Int, table: Int): Column = {
     val vd = toDoubleArray(vec)
     val sigBits = (0 until bits).map { i =>
@@ -163,15 +111,25 @@ object Similarity {
     sigBits.reduce(_ + _)
   }
 
+  /** The LSH joins' one scheme, which every contract query runs: 4
+    * lattice bits per table, 2 OR-tables in [[lshNearPairsTables]], and
+    * every bit probed in [[lshNearPairsMultiProbe]]. */
+  private val LshBits = 4
+  private val LshTables = 2
+
+  /** OR-table `table` of the LSH joins' signature. */
+  private def lshSignature(vec: Column, table: Int): Column =
+    hyperplaneSignatureLatticeAt(vec, LshBits, table)
+
   /** IVF (inverted-file) ANN index: partition vectors into `nLists` KMeans
     * cells; a query probes only the `nProbe` nearest cells. The 100 TB
     * shape: the corpus is clustered ONCE (sampled fit, map-side assignment),
     * stored partitioned by cell id — a probe then touches nProbe/nLists of
     * the data (partition pruning on the cell column), with recall tunable
-    * via nProbe. Approximate by construction. */
+    * via nProbe. Approximate by construction. KMeans runs 5 iterations
+    * from seed 42 on a 25% sample. */
   def ivfIndex(vectors: DataFrame, idCol: String, vecCol: String,
-      nLists: Int, seed: Long = 42L, maxIter: Int = 20,
-      fitSample: Double = 1.0): (org.apache.spark.ml.clustering.KMeansModel, DataFrame) = {
+      nLists: Int): (org.apache.spark.ml.clustering.KMeansModel, DataFrame) = {
     val withFeat = vectors.withColumn("_feat",
       array_to_vector(toDoubleArray(col(vecCol))))
     // the 100 TB shape: centers come from a SAMPLE (clustering quality
@@ -179,19 +137,16 @@ object Similarity {
     // assigned map-side by model.transform. Probe results stay exact for
     // nProbe = nLists no matter what the sample produced.
     val fitOn = {
-      if (fitSample >= 1.0) withFeat
-      else {
-        val s = withFeat.sample(withReplacement = false, fitSample, seed)
-        // a Bernoulli sample of a small corpus can come back with fewer
-        // rows than centers (or none) — fall back to the full set; the
-        // probe (bounded limit+count) costs one tiny job at index build
-        if (s.limit(nLists).count() < nLists) withFeat else s
-      }
+      val s = withFeat.sample(withReplacement = false, 0.25, 42L)
+      // a Bernoulli sample of a small corpus can come back with fewer
+      // rows than centers (or none) — fall back to the full set; the
+      // probe (bounded limit+count) costs one tiny job at index build
+      if (s.limit(nLists).count() < nLists) withFeat else s
     }
     // random seeded init, not kmeans||: the parallel init runs several
     // extra distributed passes for center quality IVF cells don't need —
     // probe exactness never depends on where the centers landed
-    val model = new KMeans().setK(nLists).setSeed(seed).setMaxIter(maxIter)
+    val model = new KMeans().setK(nLists).setSeed(42L).setMaxIter(5)
       .setInitMode("random")
       .setFeaturesCol("_feat").setPredictionCol("_cell").fit(fitOn)
     val indexed = model.transform(withFeat)
@@ -222,23 +177,6 @@ object Similarity {
     scored.orderBy(col("sim").desc, col(idCol)).limit(k)
   }
 
-  /** Hyperplane signature over a small integer lattice: bit i =
-    * sign(v · h_i) with h_i[j] = ((i·31 + j·17) mod 7) − 3 ∈ [−3, 3].
-    * Same bucketing quality as the hash-derived planes for low bit counts,
-    * but expressible in portable SQL — the DuckDB oracle reproduces it
-    * exactly, making the LSH path correctness-checkable end-to-end. */
-  def hyperplaneSignatureLattice(vec: Column, bits: Int): Column = {
-    val vd = toDoubleArray(vec)
-    val sigBits = (0 until bits).map { i =>
-      val proj = aggregate(
-        zip_with(vd, sequence(lit(0), size(vd) - 1),
-          (x, j) => x * (pmod(lit(i) * 31 + j * 17, lit(7)) - lit(3)).cast("double")),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    sigBits.reduce(_ + _)
-  }
-
   /** Bucket-size hotness diagnostic for [[lshNearPairs]]'s `maxBucket`
     * cap — the embedding-side mirror of [[Dedup.prefixHotness]]: the
     * distribution of m = how many vectors share each signature bucket, as
@@ -252,32 +190,33 @@ object Similarity {
     * bucket then by m, both with map-side partial aggregation) — linear
     * in the corpus, safe to run, or to run on a sample, before committing
     * to the candidate join. */
-  def bucketHotness(vectors: DataFrame, idCol: String, vecCol: String,
-      bits: Int = 16,
-      signature: (Column, Int) => Column = hyperplaneSignature): DataFrame =
+  def bucketHotness(vectors: DataFrame, idCol: String, vecCol: String): DataFrame =
     vectors
-      .select(signature(col(vecCol), bits).as("bucket"))
+      .select(lshSignature(col(vecCol), 0).as("bucket"))
       .groupBy(col("bucket")).agg(count(lit(1)).as("m"))
       .groupBy(col("m")).agg(count(lit(1)).as("n_buckets"))
       .orderBy(col("m").desc)
 
-  /** LSH-bucketed near-neighbor pairs: bucket by hyperplane signature,
+  /** LSH-bucketed near-neighbor pairs: bucket by the lattice signature,
     * score cosine only within buckets, keep pairs ≥ minSim.
     *
     * `maxBucket` is the hot-bucket guard every text-side candidate
     * generator already carries: buckets holding more than `maxBucket`
     * vectors are excluded from pair generation (aggregate + semi-join —
-    * splittable, never a count window). Unlike [[Dedup.prefixJaccardPairs]]'s
+    * splittable, never a count window; the partial aggregate collapses a
+    * collapsed-signature bucket map-side, and AQE broadcasts the
+    * ≤ 2^bits-row bucket list). Unlike [[Dedup.prefixJaccardPairs]]'s
     * per-token cap, a vector lives in exactly ONE bucket, so an excluded
     * bucket's members produce no pairs at all — the cap is for signature
     * COLLAPSE (an m ≈ corpus bucket whose pair set is a disguised cross
     * join), not for shaving genuine clusters; read [[bucketHotness]] first.
     * Defaults to `Int.MaxValue` (off — every bucket scored, the exact
-    * within-bucket semantics the oracle checks). */
+    * within-bucket semantics the oracle checks). A non-positive cap is a
+    * caller arithmetic bug (e.g. an Int-wrapped value) and fails loudly
+    * instead of refusing every bucket. */
   def lshNearPairs(vectors: DataFrame, idCol: String, vecCol: String,
-      bits: Int = 16, minSim: Double = 0.9,
-      signature: (Column, Int) => Column = hyperplaneSignature,
-      maxBucket: Int = Int.MaxValue): DataFrame = {
+      minSim: Double, maxBucket: Int = Int.MaxValue): DataFrame = {
+    require(maxBucket > 0, s"maxBucket must be > 0: $maxBucket")
     // Carry a per-row norm column through the join (computed once per
     // vector; the join shuffle materializes it) so each candidate pair
     // costs one native dot product + a multiply. Normalizing the array
@@ -285,8 +224,12 @@ object Similarity {
     // lambdas don't hoist loop-invariant subexpressions.
     val sig0 = vectors.select(col(idCol).as("vid"), col(vecCol).as("v"),
       sqrt(dot(col(vecCol), col(vecCol))).as("nrm"),
-      signature(col(vecCol), bits).as("bucket"))
-    val sig = capBuckets(sig0, Seq("bucket"), maxBucket)
+      lshSignature(col(vecCol), 0).as("bucket"))
+    val sig =
+      if (maxBucket == Int.MaxValue) sig0
+      else sig0.join(sig0.groupBy(col("bucket"))
+        .agg(count(lit(1)).as("m"))
+        .filter(col("m") <= maxBucket.toLong).select(col("bucket")), "bucket")
     val a = sig.as("a"); val b = sig.as("b")
     a.join(b, col("a.bucket") === col("b.bucket") && col("a.vid") < col("b.vid"))
       .select(col("a.vid").as("id_a"), col("b.vid").as("id_b"),
@@ -295,41 +238,32 @@ object Similarity {
   }
 
   /** Multi-table (OR-construction) LSH near pairs — the recall knob
-    * [[lshNearPairs]] does not have (r16 VERDICT item 2): `tables`
-    * independent hyperplane families bucket the corpus `tables` times,
-    * and a pair is a candidate when it collides in ANY table. Per-pair
+    * [[lshNearPairs]] does not have (r16 VERDICT item 2): `LshTables`
+    * independent lattice plane families bucket the corpus once each, and
+    * a pair is a candidate when it collides in ANY table. Per-pair
     * candidate recall lifts from r = (1−θ/π)^bits to 1 − (1−r)^L at ~L×
     * bucketing + candidate-join cost; precision is untouched because the
-    * verify filter is still the exact cosine. At 16 bits / θ ≈ 0.04 rad
-    * that is 0.80 → 0.96 (L=2) → 0.9985 (L=4) — the measured VECREHEARSAL
-    * curve prices it.
+    * verify filter is still the exact cosine.
     *
     * Scale shape: signatures are exploded MAP-SIDE into (vid, tbl,
     * bucket) rows — the bucket shuffle carries ids and two longs, never
     * vectors. Candidate pairs are DEDUPED ACROSS TABLES (one hash
     * aggregate on the id pair) BEFORE the exact verify, so a pair
-    * colliding in all L tables is scored once; the verify then joins the
+    * colliding in every table is scored once; the verify then joins the
     * two endpoints' vectors back by id. That is one more shuffle than the
     * single-table shape (which carries vectors through its one bucket
     * join) — the right trade whenever d ≫ the id width, i.e. always at
-    * embedding scale. `maxBucket` caps per (table, bucket)
-    * exactly as in [[lshNearPairs]] (a collapsed bucket in ONE table does
-    * not poison the others). */
+    * embedding scale. */
   def lshNearPairsTables(vectors: DataFrame, idCol: String, vecCol: String,
-      bits: Int = 16, minSim: Double = 0.9, tables: Int = 2,
-      signatureAt: (Column, Int, Int) => Column = hyperplaneSignatureAt,
-      maxBucket: Int = Int.MaxValue): DataFrame = {
-    require(tables >= 1, s"tables must be >= 1: $tables")
+      minSim: Double): DataFrame = {
     val base = vectors.select(col(idCol).as("vid"), col(vecCol).as("v"),
       sqrt(dot(col(vecCol), col(vecCol))).as("nrm"))
     val sigs = vectors.select(col(idCol).as("vid"),
-      explode(array((0 until tables).map(l =>
-        struct(lit(l).as("tbl"),
-          signatureAt(col(vecCol), bits, l).as("bucket"))): _*)).as("s"))
+      explode(array((0 until LshTables).map(l =>
+        struct(lit(l).as("tbl"), lshSignature(col(vecCol), l).as("bucket"))): _*))
+        .as("s"))
       .select(col("vid"), col("s.tbl").as("tbl"), col("s.bucket").as("bucket"))
-    // a collapsed bucket in ONE table does not poison the others
-    val kept = capBuckets(sigs, Seq("tbl", "bucket"), maxBucket)
-    val a = kept.as("a"); val b = kept.as("b")
+    val a = sigs.as("a"); val b = sigs.as("b")
     val cand = a.join(b, col("a.tbl") === col("b.tbl") &&
         col("a.bucket") === col("b.bucket") && col("a.vid") < col("b.vid"))
       .select(col("a.vid").as("id_a"), col("b.vid").as("id_b"))
@@ -347,67 +281,42 @@ object Similarity {
   /** Multi-probe LSH near pairs — the MEMORY-CHEAP recall knob, the
     * complement of [[lshNearPairsTables]]: instead of building L
     * independent tables (L× bucketing shuffle, L× signature state), ONE
-    * table is probed at the home bucket plus its `probes` Hamming-1
-    * neighbors (flip bit i of the signature, i < probes). A pair is a
-    * candidate when its signatures differ in at most one probed bit, so
-    * per-pair candidate recall lifts from r = p^bits to
-    * p^bits + probes · p^(bits−1) · (1−p), where p = 1 − θ/π — at 16
-    * bits / θ ≈ 0.045 rad that is 0.80 → ~0.98 with probes = 16, between
-    * L = 2 (0.96) and L = 4 (0.998) from a SINGLE table build (the
-    * VECREHEARSAL curve prices all three side by side).
+    * table is probed at the home bucket plus every Hamming-1 neighbor
+    * (flip one signature bit). A pair is a candidate when its signatures
+    * differ in at most one bit, so per-pair candidate recall lifts from
+    * r = p^bits to p^bits + bits · p^(bits−1) · (1−p), where p = 1 − θ/π.
     *
     * Scale shape: the home side carries (vid, vector, norm, bucket) once
-    * — the only side that ships payload. The probe side is (probes + 1)
-    * narrow (vid, bucket) rows per vector, exploded map-side from an
-    * inline-expression array (no attribute generator input — the r16
-    * InferFiltersFromGenerate lesson). Each qualifying pair is emitted
-    * EXACTLY ONCE by construction, no dedup aggregate needed: for a pair
-    * x < y, the home×probe join on (home.bucket = probe.bucket,
-    * home.vid < probe.vid) matches only x's home row against the single
-    * y-probe entry at XOR(sig_x, sig_y) — probe entries of one vector are
-    * pairwise-distinct buckets, and the vid order kills the mirrored
-    * match. The probe-side vector is joined back by id after candidate
-    * generation, exactly like the multi-table chain.
-    *
-    * `maxBucket` keeps [[lshNearPairs]]'s contract:
-    * members of a refused (collapsed) HOME bucket produce no pairs at all
-    * — they are dropped from both the home side and the probe side, so a
-    * collapse-scale bucket cannot leak its quadratic pair set through a
-    * neighboring bucket's join. `probes` defaults to `bits` (all
-    * signature bits probed); `probes = 0` degenerates to exactly
-    * [[lshNearPairs]]'s pair set. */
+    * — the only side that ships payload. The probe side is (bits + 1)
+    * narrow (vid, bucket) rows per vector, exploded map-side. Each
+    * qualifying pair is emitted EXACTLY ONCE by construction, no dedup
+    * aggregate needed: for a pair x < y, the home×probe join on
+    * (home.bucket = probe.bucket, home.vid < probe.vid) matches only x's
+    * home row against the single y-probe entry at XOR(sig_x, sig_y) —
+    * probe entries of one vector are pairwise-distinct buckets, and the
+    * vid order kills the mirrored match. The probe-side vector is joined
+    * back by id after candidate generation, exactly like the multi-table
+    * chain. */
   def lshNearPairsMultiProbe(vectors: DataFrame, idCol: String,
-      vecCol: String, bits: Int = 16, minSim: Double = 0.9,
-      probes: Int = -1,
-      signature: (Column, Int) => Column = hyperplaneSignature,
-      maxBucket: Int = Int.MaxValue): DataFrame = {
-    val nProbes = if (probes < 0) bits else probes
-    require(nProbes <= bits,
-      s"probes must be <= bits (one flip per signature bit): $probes")
-    val home0 = vectors.select(col(idCol).as("vid"), col(vecCol).as("v"),
+      vecCol: String, minSim: Double): DataFrame = {
+    val home = vectors.select(col(idCol).as("vid"), col(vecCol).as("v"),
       sqrt(dot(col(vecCol), col(vecCol))).as("nrm"),
-      signature(col(vecCol), bits).as("bucket"))
-    val home = capBuckets(home0, Seq("bucket"), maxBucket)
-    // probe side: home bucket + one flip per probed bit. The signature is
+      lshSignature(col(vecCol), 0).as("bucket"))
+    // probe side: home bucket + one flip per bit. The signature is
     // projected ONCE as an attribute below the explode and the probe
-    // array is (probes + 1) one-instruction xor flips of that attribute
-    // (r17 VERDICT item 5 — the previous inline-expression array repeated
-    // the full signature expression nProbes+1 times and leaned on
-    // whole-stage codegen's subexpression elimination; an interpreted
-    // fallback would have evaluated 17 16-plane projections per row).
-    // InferFiltersFromGenerate stays inert: the generator input is the
-    // `array(...)` expression, not a bare attribute, and any filter it
-    // COULD infer would reference the already-projected `sig` attribute,
-    // never re-derive the signature (ScaleSpec-locked).
-    val sigExpr = signature(col(vecCol), bits)
-    val probe0 = vectors
-      .select(col(idCol).as("pvid"), sigExpr.as("sig"))
+    // array is (bits + 1) one-instruction xor flips of that attribute
+    // (r17 VERDICT item 5 — an inline-expression array would repeat the
+    // full signature expression bits+1 times and lean on whole-stage
+    // codegen's subexpression elimination). InferFiltersFromGenerate
+    // stays inert: the generator input is the `array(...)` expression,
+    // not a bare attribute, and any filter it COULD infer would reference
+    // the already-projected `sig` attribute, never re-derive the
+    // signature (ScaleSpec-locked).
+    val probe = vectors
+      .select(col(idCol).as("pvid"), lshSignature(col(vecCol), 0).as("sig"))
       .select(col("pvid"),
-        explode(array(col("sig") +: (0 until nProbes).map(i =>
+        explode(array(col("sig") +: (0 until LshBits).map(i =>
           col("sig").bitwiseXOR(lit(1L << i))): _*)).as("pbucket"))
-    val probe =
-      if (maxBucket == Int.MaxValue) probe0
-      else probe0.join(home.select(col("vid").as("pvid")), Seq("pvid"))
     val base = home.select(col("vid").as("id_b"), col("v").as("_vb"),
       col("nrm").as("_nb"))
     home.as("a")
@@ -430,9 +339,8 @@ object Similarity {
     * pairs, not the vectors of non-candidates. Keepers (including docs in
     * singleton buckets) report is_dup = false, dup_of = -1. */
   def embeddingNearDup(vectors: DataFrame, idCol: String, vecCol: String,
-      bits: Int = 16, minSim: Double = 0.9,
-      signature: (Column, Int) => Column = hyperplaneSignature): DataFrame = {
-    val pairs = lshNearPairs(vectors, idCol, vecCol, bits, minSim, signature)
+      minSim: Double): DataFrame = {
+    val pairs = lshNearPairs(vectors, idCol, vecCol, minSim)
     // earliest-wins: min over the (already sparse) near-pair edges keyed
     // by the later endpoint — one hash aggregate over candidate ids
     val dupOf = pairs.groupBy(col("id_b").as(idCol))
@@ -467,10 +375,8 @@ object Similarity {
     * operator exists to prevent. On a collapse-prone corpus run
     * [[bucketHotness]] first and dedup before mining. */
   def hardNegatives(vectors: DataFrame, idCol: String, vecCol: String,
-      anchorIds: Seq[Long], k: Int,
-      bits: Int = 16, minSim: Double = 0.9,
-      signature: (Column, Int) => Column = hyperplaneSignature): DataFrame = {
-    val pairs = lshNearPairs(vectors, idCol, vecCol, bits, minSim, signature)
+      anchorIds: Seq[Long], k: Int, minSim: Double): DataFrame = {
+    val pairs = lshNearPairs(vectors, idCol, vecCol, minSim)
       .select(col("id_a"), col("id_b"))
     // only exclusions INVOLVING an anchor matter — filter the symmetric
     // edge list down to the anchor set before the anti-join, so the

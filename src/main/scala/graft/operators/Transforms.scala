@@ -64,10 +64,9 @@ object Transforms {
     * a single-partition window over the full input — and the `row_number`
     * ranking window then runs over only the k survivors. `order` must be a
     * total order (include a unique tiebreaker). */
-  def globalTopK(df: DataFrame, order: Seq[Column], k: Int,
-      rankCol: String = "rnk"): DataFrame =
+  def globalTopK(df: DataFrame, order: Seq[Column], k: Int): DataFrame =
     df.orderBy(order: _*).limit(k)
-      .withColumn(rankCol,
+      .withColumn("rnk",
         row_number().over(Window.orderBy(order: _*)).cast("long"))
 
   /** W4 — last-non-null carry-forward ("previous row's geography" in the
@@ -115,13 +114,12 @@ object Transforms {
     * the sample of a partition depends only on that partition's rows.
     * `rates` maps stratum value → bucket threshold out of 4096. */
   def hashStratifiedSample(df: DataFrame, idCol: String, stratumCol: String,
-      rates: Map[String, Long], defaultThreshold: Long,
-      bucketCol: String = "bucket"): DataFrame = {
+      rates: Map[String, Long], defaultThreshold: Long): DataFrame = {
     val bucket = conv(substring(md5(col(idCol).cast("string")), 1, 3), 16, 10)
       .cast("long")
     val threshold = coalesce(
       element_at(typedLit(rates), col(stratumCol)), lit(defaultThreshold))
-    df.withColumn(bucketCol, bucket).filter(col(bucketCol) < threshold)
+    df.withColumn("bucket", bucket).filter(col("bucket") < threshold)
   }
 
   /** F13 — guarded ratio (`Stocks_to_Use = Ending/TotalUse*100`, 0 when the
@@ -131,8 +129,8 @@ object Transforms {
 
   /** F11 — load-timestamp stamping (`df['actualizacion'] = now()`, every
     * pipeline, e.g. `HTGPIENSO/__init__.py:87`). */
-  def stampActualizacion(df: DataFrame, col_ : String = "actualizacion"): DataFrame =
-    df.withColumn(col_, current_timestamp())
+  def stampActualizacion(df: DataFrame): DataFrame =
+    df.withColumn("actualizacion", current_timestamp())
 
   /** F14 — null repair: `''`/`'NA'` → 0 (`HTGPIWASDE/__init__.py:1204-1207`),
     * `fillna(0)` (`HTGPICFT/__init__.py:103`). */
@@ -176,7 +174,7 @@ object Transforms {
     * `asof_ts` (matched right timestamp, null when no match/out of
     * tolerance) + the payload columns. */
   def asofJoinDirectional(left: DataFrame, right: DataFrame, key: String,
-      ts: String, payloadCols: Seq[String], direction: String = "backward",
+      ts: String, payloadCols: Seq[String], direction: String,
       toleranceSeconds: Long = -1L): DataFrame = {
     require(Seq("backward", "forward", "nearest").contains(direction),
       s"unknown direction: $direction")
@@ -294,30 +292,29 @@ object Transforms {
     * by the stratum, never global, so each stratum ranks in its own
     * tasks at any corpus size. */
   def percentileFilter(df: DataFrame, partitionBy: Seq[Column],
-      order: Seq[Column], keepFrac: Double, prCol: String = "pr"): DataFrame = {
+      order: Seq[Column], keepFrac: Double): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(partitionBy: _*).orderBy(order: _*)
-    df.withColumn(prCol, percent_rank().over(w))
-      .filter(col(prCol) <= keepFrac)
+    df.withColumn("pr", percent_rank().over(w))
+      .filter(col("pr") <= keepFrac)
   }
 
   /** Deterministic pseudo-random corpus shuffle — the final "shuffle the
     * training data" step. Each row gets a reproducible shuffle key
-    * (md5 of salt + id), a shard from the key's top byte, and its ordinal
+    * (md5 of "shuf" + id), one of 32 shards from the key's top byte, and its ordinal
     * within the shard; reading shards in (shard, pos) order yields the
     * same global permutation on every run, on any cluster size. The
     * ranking window is partitioned by shard — never global — and a real
     * write would `repartitionByRange(skey)` + sort-within-partitions so
     * each output file is one contiguous slice of the permutation. */
-  def deterministicShuffle(df: DataFrame, idCol: String, shards: Int = 32,
-      salt: String = "shuf"): DataFrame = {
-    val skey = md5(concat_ws("|", lit(salt), col(idCol).cast("string")))
+  def deterministicShuffle(df: DataFrame, idCol: String): DataFrame = {
+    val skey = md5(concat_ws("|", lit("shuf"), col(idCol).cast("string")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("shard")).orderBy(col("skey"), col(idCol))
     df.select(col(idCol), skey.as("skey"))
       .withColumn("shard",
         pmod(conv(substring(col("skey"), 1, 2), 16, 10).cast("long"),
-          lit(shards.toLong)))
+          lit(32L)))
       .withColumn("pos", row_number().over(w).cast("long"))
       .select(col(idCol), col("shard"), col("pos"))
   }
@@ -422,13 +419,12 @@ object Transforms {
 
   /** Windowed exponential moving average — the truncated, engine-exact
     * form of EWMA smoothing: per key, in (tsCol, tieCol) order, each row's
-    * smoothed value is the weight-normalized sum of the trailing
-    * `windowK` values with geometric weights (1−α)^k for lag k, where
-    * α = decayNum/decayDen is held as a RATIONAL so every weight is an
-    * exact integer ((den−num)^k · den^(K−1−k), the common α factor
-    * cancels in the ratio). Truncating at K bounds the recursion the
-    * textbook EWMA can't bound — the dropped tail carries at most
-    * (1−α)^K of the mass ((1/2)^8 ≈ 0.4 % at the defaults) — and is what
+    * smoothed value is the weight-normalized sum of the trailing K = 8
+    * values with geometric weights (1−α)^k for lag k at α = 1/2, held as
+    * the exact integers 2^(K−1−k) (the common factor cancels in the
+    * ratio). Truncating at K bounds the recursion the textbook EWMA
+    * can't bound — the dropped tail carries at most (1/2)^8 ≈ 0.4 % of
+    * the mass — and is what
     * makes the operator a fixed-width window instead of an unbounded
     * scan-order dependency.
     *
@@ -440,24 +436,16 @@ object Transforms {
     *
     * Scale: one hash exchange on the key + one per-key sort serves the
     * whole lag chain (a single Window node; the K lags share its frame),
-    * rows carry K longs — no self-joins, no unbounded frames. Weight
-    * magnitudes are den^(K−1); the guard below keeps
-    * max|cents| · Σ weights within LONG. */
+    * rows carry K longs — no self-joins, no unbounded frames. */
   def ewmaSmooth(df: DataFrame, keyCol: String, tsCol: String,
-      tieCol: String, valueCol: String, decayNum: Int = 1,
-      decayDen: Int = 2, windowK: Int = 8): DataFrame = {
-    require(windowK >= 1 && decayNum >= 0 && decayDen > decayNum,
-      "need 0 <= alpha = decayNum/decayDen < 1 and windowK >= 1")
-    val weights = (0 until windowK).map(k =>
-      BigInt(decayDen - decayNum).pow(k) * BigInt(decayDen).pow(windowK - 1 - k))
-    require(weights.map(w => w * 100000000L).sum < BigInt(Long.MaxValue) / 100,
-      s"weights den^${windowK - 1} too large for exact LONG arithmetic")
+      tieCol: String, valueCol: String): DataFrame = {
+    val weights = (0 until 8).map(k => 1L << (7 - k))
     val w = Window.partitionBy(col(keyCol)).orderBy(col(tsCol), col(tieCol))
     val cts = round(col(valueCol) * 100).cast("long")
-    val terms = (0 until windowK).map { k =>
+    val terms = (0 until 8).map { k =>
       val lv = if (k == 0) cts else lag(cts, k).over(w)
-      (coalesce(lv * lit(weights(k).toLong), lit(0L)),
-        when(lv.isNotNull, lit(weights(k).toLong)).otherwise(lit(0L)))
+      (coalesce(lv * lit(weights(k)), lit(0L)),
+        when(lv.isNotNull, lit(weights(k))).otherwise(lit(0L)))
     }
     val numSum = terms.map(_._1).reduce(_ + _)
     val denSum = terms.map(_._2).reduce(_ + _)
@@ -563,13 +551,13 @@ object Transforms {
   /** Churn snapshot — the inactivity decay curve at the data's own
     * anchor (max activity day): per days-since-last-activity, how many
     * users sit there, whether that bucket counts as churned at
-    * `inactiveDays`, and the exact share. The anchor comes from the data
+    * 14 days inactive, and the exact share. The anchor comes from the data
     * (deterministic), not the wall clock.
     *
     * Scale: one user rollup (map-side combining), a broadcast 1-row
     * anchor, and a ≤ |distinct gaps| aggregate + total window. */
-  def churnSnapshot(events: DataFrame, userCol: String, tsCol: String,
-      inactiveDays: Int = 14): DataFrame = {
+  def churnSnapshot(events: DataFrame, userCol: String,
+      tsCol: String): DataFrame = {
     val lastDay = events.groupBy(col(userCol))
       .agg(max(to_date(col(tsCol))).as("last_day"))
     val anchor = lastDay.agg(max(col("last_day")).as("anchor"))
@@ -581,13 +569,13 @@ object Transforms {
       .withColumn("total", sum(col("n_users")).over(Window.partitionBy()))
       .select(col("days_inactive"),
         col("n_users").cast("long").as("n_users"),
-        (col("days_inactive") > inactiveDays.toLong).as("is_churned"),
+        (col("days_inactive") > 14L).as("is_churned"),
         Corpus.ratioRound6(col("n_users"), col("total")).as("share_r"))
   }
 
   /** Recency sequence features — the model-input featurizer: per user,
-    * the type ids of the last `k` events in strict (tsCol, tieCol)
-    * DESCENDING order as fixed columns f1..fk (f1 = most recent; 0 =
+    * the type ids of the last 5 events in strict (tsCol, tieCol)
+    * DESCENDING order as fixed columns f1..f5 (f1 = most recent; 0 =
     * shorter history). Type ids come from a broadcast alphabetical
     * dictionary, so the encoding is deterministic and engine-portable;
     * fixed COLUMNS (not arrays) keep the output comparator-simple and
@@ -596,8 +584,8 @@ object Transforms {
     * Scale: one user-keyed window shares its exchange with the per-user
     * aggregate; the type dictionary is |types|-sized and broadcast. */
   def sequenceFeatures(events: DataFrame, userCol: String, typeCol: String,
-      tsCol: String, tieCol: String, k: Int = 5): DataFrame = {
-    require(k >= 1, "need at least one recency slot")
+      tsCol: String, tieCol: String): DataFrame = {
+    val k = 5
     val dict = events.select(col(typeCol).as("_t")).distinct()
       .withColumn("_tid",
         row_number().over(Window.orderBy(col("_t"))).cast("long"))
@@ -775,8 +763,8 @@ object Transforms {
     * aggregate; map-side partials collapse everything before the
     * exchange. */
   def interEventGaps(events: DataFrame, userCol: String, tsCol: String,
-      tieCol: String, maxBucket: Int = 20): DataFrame = {
-    require(maxBucket >= 1, "need at least one exponential bucket")
+      tieCol: String): DataFrame = {
+    val maxBucket = 20
     val w = Window.partitionBy(col(userCol))
       .orderBy(col(tsCol), col(tieCol))
     val gaps = events
@@ -798,24 +786,23 @@ object Transforms {
 
   /** Rolling 7-day active users — DAU/WAU/stickiness without a sliding-
     * window distinct: each (day, user) activity row is exploded to the
-    * `windowDays` report days it covers (a user active on day d counts
-    * toward every day in [d, d+W−1]), then one exact distinct per report
+    * 7 report days it covers (a user active on day d counts
+    * toward every day in [d, d+6]), then one exact distinct per report
     * day. Stickiness = DAU/WAU is the classic engagement ratio.
     *
-    * Scale: the explode fans out the DISTINCT (day, user) table W× —
-    * bounded by W · |active user-days|, never W× the event log — and the
+    * Scale: the explode fans out the DISTINCT (day, user) table 7× —
+    * bounded by 7 · |active user-days|, never 7× the event log — and the
     * per-day countDistinct is an ordinary shuffle on the day key. Report
     * days past the data's max day are dropped (they'd be partial). */
-  def rollingActiveUsers(events: DataFrame, userCol: String, tsCol: String,
-      windowDays: Int = 7): DataFrame = {
-    require(windowDays >= 1, "window must cover at least one day")
+  def rollingActiveUsers(events: DataFrame, userCol: String,
+      tsCol: String): DataFrame = {
     val du = events
       .select(to_date(col(tsCol)).as("day"), col(userCol).as("u"))
       .distinct()
     val maxDay = du.agg(max(col("day")).as("mxd"))
     val dau = du.groupBy(col("day")).agg(countDistinct(col("u")).as("dau"))
     du.select(explode(sequence(col("day"),
-        date_add(col("day"), windowDays - 1))).as("day"), col("u"))
+        date_add(col("day"), 6))).as("day"), col("u"))
       .crossJoin(broadcast(maxDay))
       .filter(col("day") <= col("mxd"))
       .groupBy(col("day")).agg(countDistinct(col("u")).as("wau"))
@@ -1007,7 +994,7 @@ object Transforms {
 
   /** Linear multi-touch attribution — [[lastTouchAttribution]]'s
     * fairness-minded sibling: each conversion's credit (and revenue) is
-    * split equally across its last `maxTouches` in-horizon touches.
+    * split equally across its last 5 in-horizon touches.
     * Credit quanta are micro-units and revenue milli-cents, each touch's
     * share rounded half-up independently (mirrored exactly by the
     * oracle), so the per-touch-type totals are engine-identical.
@@ -1015,13 +1002,14 @@ object Transforms {
     * the 'direct' bucket q157 reports.
     *
     * Scale: the touch list rides the SAME user-keyed window as q157
-    * (bounded by `maxTouches` per row, not by history length, thanks to
+    * (bounded by 5 touches per row, not by history length, thanks to
     * the slice); the per-conversion size recount is a window over the
-    * ≤ maxTouches exploded rows. No touch×conversion join. */
+    * ≤ 5 exploded rows. No touch×conversion join. */
   def linearAttribution(events: DataFrame, userCol: String, typeCol: String,
       tsCol: String, tieCol: String, valueCol: String,
       touchTypes: Seq[String], conversionType: String,
-      lookbackSeconds: Long, maxTouches: Int = 5): DataFrame = {
+      lookbackSeconds: Long): DataFrame = {
+    val maxTouches = 5
     require(touchTypes.nonEmpty && !touchTypes.contains(conversionType),
       "touch types must be non-empty and disjoint from the conversion type")
     val w = Window.partitionBy(col(userCol))

@@ -16,13 +16,14 @@ import org.apache.spark.sql.functions._
   */
 object ModelScoring {
 
-  /** Train a classifier on (features: array<float|double>, label: int) —
-    * stands in for the reference's externally-trained pickle. */
-  def trainOnArrays(df: DataFrame, arrayCol: String, labelCol: String,
-      numTrees: Int = 20, seed: Long = 42L): RandomForestClassificationModel =
+  /** Train a 20-tree random forest (seed 42) on (features:
+    * array<float|double>, label: int) — stands in for the reference's
+    * externally-trained pickle. */
+  def trainOnArrays(df: DataFrame, arrayCol: String,
+      labelCol: String): RandomForestClassificationModel =
     new RandomForestClassifier()
-      .setNumTrees(numTrees)
-      .setSeed(seed)
+      .setNumTrees(20)
+      .setSeed(42L)
       .setFeaturesCol("features")
       .setLabelCol(labelCol)
       .fit(df.withColumn("features",
@@ -43,14 +44,13 @@ object ModelScoring {
     * corpus-hot score owns its whole span. All counts and the score sum
     * are exact integers; the positive rate is one half-up rounding.
     *
-    * Returns ≤ `buckets` rows: bucket, n, n_pos, s_lo, s_hi, score_sum,
+    * Returns ≤ 10 rows (deciles): bucket, n, n_pos, s_lo, s_hi, score_sum,
     * pos_rate_r.
     *
     * Scale: identical to [[rocAuc]] — corpus collapses map-side to
     * distinct scores; the only sort touches that table. */
-  def calibrationCurve(df: DataFrame, scoreExpr: Column, labelExpr: Column,
-      buckets: Int = 10): DataFrame = {
-    require(buckets > 0, "need at least one bucket")
+  def calibrationCurve(df: DataFrame, scoreExpr: Column,
+      labelExpr: Column): DataFrame = {
     val byScore = df
       .select(scoreExpr.as("s"), labelExpr.cast("long").as("y"))
       .groupBy(col("s"))
@@ -60,7 +60,7 @@ object ModelScoring {
     byScore
       .withColumn("cum_lt", coalesce(sum(col("n")).over(below), lit(0L)))
       .withColumn("total", sum(col("n")).over(Window.partitionBy()))
-      .groupBy(call_function("div", col("cum_lt") * lit(buckets.toLong),
+      .groupBy(call_function("div", col("cum_lt") * lit(10L),
         col("total")).as("bucket"))
       .agg(sum(col("n")).cast("long").as("n"),
         sum(col("pos")).cast("long").as("n_pos"),

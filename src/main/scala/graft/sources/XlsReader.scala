@@ -21,8 +21,7 @@ import scala.collection.mutable
   * date serials as ISO, bools as "true"/"false".
   *
   * Scale shape: `readSheet` is a pure bytes → rows function, so one
-  * workbook decodes inside one task and [[XlsxReader.scan]]'s
-  * binaryFile pattern applies unchanged. */
+  * workbook decodes inside one task, as q73 runs the xlsx decode. */
 object XlsReader {
 
   // record ids

@@ -8,8 +8,6 @@ import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** One decoded sheet row: 0-based row index + left-ragged cell strings
   * (trailing cells beyond the last one present in the file are absent;
   * gaps between present cells are `""`). */
@@ -35,10 +33,10 @@ case class XlsxSheetRow(sheet: String, rowIdx: Long, cells: Seq[String])
   * (`fillMerged=true`) — xlrd reads covered cells as empty, which is the
   * default here and what the WASDE carry-forward expects.
   *
-  * Scale shape: one workbook decodes inside one task ([[scan]] maps the
-  * `binaryFile` source — thousands of workbooks decode in parallel across
-  * executors, no driver involvement; a single workbook is bounded by the
-  * format itself, not the cluster).
+  * Scale shape: `readSheet` is a pure bytes → rows function, so one
+  * workbook decodes inside one executor task (q73's flatMap) — many
+  * workbooks decode in parallel with no driver involvement; a single
+  * workbook is bounded by the format itself, not the cluster.
   */
 object XlsxReader {
 
@@ -388,16 +386,6 @@ object XlsxReader {
     readSheetPart(parts(path), sheetName, wb, fillMerged)
   }
 
-  /** Decode every sheet (multi-sheet S6 shape). */
-  def readAllSheets(bytes: Array[Byte],
-      fillMerged: Boolean = false): Seq[XlsxSheetRow] = {
-    val parts = zipEntries(bytes)
-    val wb = parseWorkbook(parts)
-    wb.sheets.flatMap { case (name, path) =>
-      readSheetPart(parts(path), name, wb, fillMerged)
-    }
-  }
-
   private def readSheetPart(bytes: Array[Byte], sheetName: String,
       wb: Workbook, fillMerged: Boolean): Seq[XlsxSheetRow] = {
     // (rowIdx0, colIdx0) → value for present cells; merges collected after
@@ -484,25 +472,4 @@ object XlsxReader {
 
   private def rowOf(cellRef: String): Long =
     cellRef.dropWhile(Character.isLetter).toLong - 1
-
-  // ---- Spark scan ---------------------------------------------------------
-
-  /** Distributed workbook scan: every file matching `pathGlob` decodes in
-    * its own task (`binaryFile` source → per-file flatMap), emitting
-    * `(path, sheet, rowIdx, cells)`. The 100 TB shape for a drop-directory
-    * of workbooks: parallelism = number of files, no driver decode. */
-  def scan(spark: SparkSession, pathGlob: String, sheetName: Option[String] = None,
-      fillMerged: Boolean = false): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(pathGlob)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val rows = sheetName match {
-          case Some(n) => readSheet(bytes, n, fillMerged)
-          case None    => readAllSheets(bytes, fillMerged)
-        }
-        rows.map(x => (path, x.sheet, x.rowIdx, x.cells))
-      }
-      .toDF("path", "sheet", "rowIdx", "cells")
-  }
 }

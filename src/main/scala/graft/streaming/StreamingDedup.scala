@@ -24,30 +24,29 @@ object StreamingDedup {
   /** Output row: the document, the signature bucket's keeper, dup flag. */
   final case class DedupVerdict(doc_id: Long, keeper: Long, is_dup: Boolean)
 
-  /** Signature column: md5 over the joined MinHash lane minima — one string
-    * per document, computed in a single native pass (no explode/shuffle).
+  /** Signature column: md5 over the joined MinHash lane minima
+    * ([[graft.operators.Dedup.minhashLanes]], the batch joins' scheme) —
+    * one string per document, computed in a single native pass (no
+    * explode/shuffle).
     * NULL for shingle-less (empty/whitespace/null) docs: `concat_ws` would
     * otherwise resurrect the lanes' deliberate NULL to "", collapsing every
     * contentless doc into one md5("") bucket and flagging them duplicates
     * of each other — the batch twin (`Dedup.md5MinhashSignatures`) filters
     * these out, and the stream must agree (r14 review). */
-  def signature(text: org.apache.spark.sql.Column,
-      shingleN: Int = 3, numHashes: Int = 16): org.apache.spark.sql.Column = {
-    val lanes = org.apache.spark.sql.GraftBridge.column(
-      graft.functions.Md5MinhashLanes(
-        org.apache.spark.sql.GraftBridge.expression(text), shingleN, numHashes))
+  def signature(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+    val lanes = graft.operators.Dedup.minhashLanes(text)
     when(lanes.isNotNull, md5(concat_ws("|", lanes)))
   }
 
   /** Flag each arriving document against every signature seen so far on the
     * stream. Works identically on batch inputs (parity-tested). */
-  def dedupStream(docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, numHashes: Int = 16): Dataset[DedupVerdict] = {
+  def dedupStream(docs: DataFrame, idCol: String,
+      textCol: String): Dataset[DedupVerdict] = {
     val spark = docs.sparkSession
     import spark.implicits._
     val signed = docs
       .select(col(idCol).cast("long").as("doc_id"),
-        signature(col(textCol), shingleN, numHashes).as("sig"))
+        signature(col(textCol)).as("sig"))
       .filter(col("sig").isNotNull) // contentless docs emit no verdict
       .as[(Long, String)]
 

@@ -204,8 +204,7 @@ object StreamingOps {
     * trailing no-data micro-batch Spark runs to let the final watermark
     * evict — that batch is where the last eviction counts land). */
   def runAvailableNowDateSplitProgress(spark: SparkSession, path: String,
-      queryName: String, outputMode: String = "append",
-      timeCol: String = "ts")(
+      queryName: String)(
       transform: DataFrame => DataFrame)
       : (DataFrame, Seq[StreamingQueryProgress]) = {
     val batch0 =
@@ -215,10 +214,10 @@ object StreamingOps {
         graft.Tables.normalizeEventTime(batch0)
       else batch0
     val row = batch
-      .agg(min(unix_micros(col(timeCol))), max(unix_micros(col(timeCol))))
+      .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
       .head()
     require(!row.isNullAt(0) && !row.isNullAt(1),
-      s"runAvailableNowDateSplit($path): no non-null $timeCol rows")
+      s"runAvailableNowDateSplit($path): no non-null ts rows")
     // the two-phase split assumes each phase is NON-EMPTY: phase 0 takes
     // [min, split) and phase 1 takes [split, max]. Guard on the computed
     // SPLIT, not on min < max (r20 review): with max == min + 1 µs the
@@ -227,7 +226,7 @@ object StreamingOps {
     // file, so the headOption error below would never fire either.
     val splitUs = (row.getLong(0) + row.getLong(1)) / 2
     require(splitUs > row.getLong(0),
-      s"runAvailableNowDateSplit($path): $timeCol range " +
+      s"runAvailableNowDateSplit($path): ts range " +
         s"[${row.getLong(0)}, ${row.getLong(1)}] µs is too narrow — the " +
         "integer midpoint equals the minimum, which would leave the " +
         "first phase empty; a two-batch split needs max ≥ min + 2")
@@ -247,16 +246,16 @@ object StreamingOps {
       // file name + modTime inside writePhase, not by write completion
       // order, so concurrency cannot reorder the stream.
       graft.operators.Overlap.runAll(Seq[() => Unit](
-        () => writePhase(0, batch.filter(col(timeCol).isNull ||
-          unix_micros(col(timeCol)) < lit(splitUs))),
+        () => writePhase(0, batch.filter(col("ts").isNull ||
+          unix_micros(col("ts")) < lit(splitUs))),
         () => writePhase(1, batch.filter(
-          unix_micros(col(timeCol)) >= lit(splitUs)))))
+          unix_micros(col("ts")) >= lit(splitUs)))))
       // phase files are written POST-normalization, so the stream schema is
       // plain session-TZ TIMESTAMP — no second normalization pass
       val sch = graft.Tables.schemaOf(spark, dir.toString)
       val raw = spark.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-      toMemory(spark, transform(raw), queryName, outputMode)
+      toMemory(spark, transform(raw), queryName, "append")
     } finally deleteRecursively(dir)
   }
 

@@ -327,7 +327,7 @@ class CorpusSpec extends AnyFunSuite {
     // PMI = log2(6·12/36) = 1 bit exactly; ties broken by (w1, w2)
     val df = ((1L to 6L).map(i => (i, "a b")) ++
       (7L to 12L).map(i => (i, "c d"))).toDF("doc_id", "text")
-    val out = Corpus.pmiTopPairs(df, "doc_id", "text", minCount = 5, k = 10)
+    val out = Corpus.pmiTopPairs(df, "doc_id", "text")
       .select("w1", "w2", "pmi_ub", "pmi_r")
       .as[(String, String, Long, Double)].collect().toSeq
     assert(out == Seq(("a", "b", 1000000L, 1.0), ("c", "d", 1000000L, 1.0)))
@@ -347,27 +347,27 @@ class CorpusSpec extends AnyFunSuite {
     assert(changed(2L) == "changed")
   }
 
-  test("temperatureRebalance: quotas sum to T, tau=2 flattens, tau=1 proportional") {
+  test("temperatureRebalance: quotas sum to T, sqrt weights flatten the " +
+      "head, deterministic selection") {
     import spark.implicits._
     // 800 'en', 150 'de', 50 'fr'
     val docs = ((1 to 800).map(i => (i.toLong, "en")) ++
       (801 to 950).map(i => (i.toLong, "de")) ++
       (951 to 1000).map(i => (i.toLong, "fr"))).toDF("doc_id", "lang")
-    def quotas(tau: Int) =
-      Corpus.temperatureRebalance(docs, "lang", "doc_id", 100L, tau)
-        .groupBy("lang").agg(max("quota").as[Long]).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val t1 = quotas(1); val t2 = quotas(2)
-    assert(t1.values.sum == 100 && t2.values.sum == 100)
-    // proportional at tau=1 (largest remainder on exact tenths)
-    assert(t1 == Map("en" -> 80L, "de" -> 15L, "fr" -> 5L))
-    // tau=2 boosts the tail at the head's expense
-    assert(t2("fr") > t1("fr") && t2("de") > t1("de") && t2("en") < t1("en"))
+    val t2 = Corpus.temperatureRebalance(docs, "lang", "doc_id", 100L)
+      .groupBy("lang").agg(max("quota").as[Long]).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    // weights floor(√(n·10¹²)): en 28284271, de 12247448, fr 7071067,
+    // W = 47602786; base 100·w DIV W = 59/25/14, the 2 leftover seats go
+    // to the largest remainders (fr 40667696, de 34675150)
+    assert(t2 == Map("en" -> 59L, "de" -> 26L, "fr" -> 15L))
+    // the tail is boosted above its 80/15/5 proportional share
+    assert(t2("fr") > 5L && t2("de") > 15L && t2("en") < 80L)
     // selection is deterministic and honors quotas exactly
-    val sel = Corpus.temperatureRebalance(docs, "lang", "doc_id", 100L, 2)
+    val sel = Corpus.temperatureRebalance(docs, "lang", "doc_id", 100L)
       .select(col("doc_id").as[Long]).collect().sorted
     val sel2 = Corpus.temperatureRebalance(docs.repartition(13), "lang",
-      "doc_id", 100L, 2).select(col("doc_id").as[Long]).collect().sorted
+      "doc_id", 100L).select(col("doc_id").as[Long]).collect().sorted
     assert(sel.length == 100 && sel.sameElements(sel2))
   }
 
@@ -409,27 +409,28 @@ class CorpusSpec extends AnyFunSuite {
 
   test("knBigramModel: continuation counts and discounted probabilities, hand-checked") {
     import spark.implicits._
-    // corpus "a b a b a c": c12 ab=2 ba=2 ac=1; c1 a=3 b=2;
-    // N1+(a·)=2 N1+(b·)=1; N1+(·a)=1 N1+(·b)=1 N1+(·c)=1; N1+(··)=3
-    val docs = Seq((1L, "a b a b a c")).toDF("doc_id", "text")
-    val got = Corpus.knBigramModel(docs, "doc_id", "text", minCount = 1L)
+    // three docs "a b a b a c" (every bigram reaches the c12 ≥ 3 floor):
+    // c12 ab=6 ba=6 ac=3; c1 a=9 b=6; N1+(a·)=2 N1+(b·)=1;
+    // N1+(·a)=1 N1+(·b)=1 N1+(·c)=1; N1+(··)=3
+    val docs = (1L to 3L).map(i => (i, "a b a b a c")).toDF("doc_id", "text")
+    val got = Corpus.knBigramModel(docs, "doc_id", "text")
       .select(col("w1"), col("w2"), col("c12").as[Long], col("c1").as[Long],
         col("n_follow").as[Long], col("n_precede").as[Long],
         col("n_bigrams").as[Long], col("p_kn").as[Double])
       .as[(String, String, Long, Long, Long, Long, Long, Double)]
       .collect().map(r => (r._1, r._2) -> r).toMap
     assert(got.size == 3)
-    assert(got(("a", "b"))._3 == 2 && got(("a", "b"))._4 == 3 &&
+    assert(got(("a", "b"))._3 == 6 && got(("a", "b"))._4 == 9 &&
       got(("a", "b"))._5 == 2 && got(("a", "b"))._6 == 1 &&
       got(("a", "b"))._7 == 3)
-    // P(b|a) = 1.25/3 + (0.75·2/3)·(1/3); P(a|b) = 0.625 + 0.125;
-    // P(c|a) = 0.25/3 + (0.75·2/3)·(1/3)
-    assert(math.abs(got(("a", "b"))._8 - 0.5833333333333333) < 1e-12)
-    assert(math.abs(got(("b", "a"))._8 - 0.75) < 1e-12)
-    assert(math.abs(got(("a", "c"))._8 - 0.25) < 1e-12)
+    // P(b|a) = 5.25/9 + (0.75·2/9)·(1/3); P(a|b) = 5.25/6 + (0.75/6)·(1/3);
+    // P(c|a) = 2.25/9 + (0.75·2/9)·(1/3)
+    assert(math.abs(got(("a", "b"))._8 - 0.6388888888888888) < 1e-12)
+    assert(math.abs(got(("b", "a"))._8 - 0.9166666666666666) < 1e-12)
+    assert(math.abs(got(("a", "c"))._8 - 0.3055555555555556) < 1e-12)
     // interpolated KN is a proper conditional: seen mass + the unseen
-    // w2=a share (0 + (0.75·2/3)·(1/3) = 1/6) sums to 1 for context 'a'
-    assert(math.abs(got(("a", "b"))._8 + got(("a", "c"))._8 + 1.0 / 6 - 1.0) < 1e-12)
+    // w2=a share (0 + (0.75·2/9)·(1/3) = 1/18) sums to 1 for context 'a'
+    assert(math.abs(got(("a", "b"))._8 + got(("a", "c"))._8 + 1.0 / 18 - 1.0) < 1e-12)
   }
 
   test("scd2Build: intervals chain, deletes close without emitting, trailing live") {
@@ -586,29 +587,24 @@ class CorpusSpec extends AnyFunSuite {
 
   // ---- sourceNovelty ----------------------------------------------------
 
-  test("sourceNovelty: known-answer fixture, hashed parity, no gram join") {
-    // k=3 shingles; sources a and b share doc text "xyzw" (distinct
-    // shingles xyz, yzw), c ("qqqq" → the single distinct shingle qqq) is
-    // disjoint. So a and b have 0 unique shingles, c is 100% novel.
-    val d = Seq(
-      (1L, "a", "xyzw"), (2L, "b", "xyzw"), (3L, "c", "qqqq"))
+  test("sourceNovelty: known-answer fixture, no gram join") {
+    // char 8-shingles; sources a and b share doc text "abcdefghij"
+    // (distinct shingles abcdefgh, bcdefghi, cdefghij), c ("qqqqqqqqqq" →
+    // the single distinct shingle qqqqqqqq) is disjoint. So a and b have 0
+    // unique shingles, c is 100% novel.
+    val d = Seq((1L, "a", "abcdefghij"), (2L, "b", "abcdefghij"),
+        (3L, "c", "qqqqqqqqqq"))
       .toDF("doc_id", "source", "text")
-    val out = Corpus.sourceNovelty(d, "source", "text", k = 3)
+    val out = Corpus.sourceNovelty(d, "source", "text")
       .orderBy("source").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(out.toSeq == Seq(
-      ("a", 2L, 0L, 0.0), ("b", 2L, 0L, 0.0), ("c", 1L, 1L, 1.0)), out.toSeq)
-    // hashed (8-byte-lane) variant: identical counts on collision-free data
-    val hashed = Corpus.sourceNovelty(d, "source", "text", k = 3,
-        hashed = true)
-      .orderBy("source").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    assert(hashed.toSeq == out.toSeq)
+      ("a", 3L, 0L, 0.0), ("b", 3L, 0L, 0.0), ("c", 1L, 1L, 1.0)), out.toSeq)
     // scale shape: uniques derive from the per-shingle aggregate — there
     // must be no join keyed on the shingle column (the only join is the
     // #sources-sized tot⋈uni); a SortMergeJoin would mean a corpus-sized
     // join-back snuck in
-    val plan = Corpus.sourceNovelty(d, "source", "text", k = 3)
+    val plan = Corpus.sourceNovelty(d, "source", "text")
       .queryExecution.executedPlan.toString
     assert(!plan.contains("SortMergeJoin"), s"corpus-sized join-back:\n$plan")
   }
@@ -664,16 +660,16 @@ class CorpusSpec extends AnyFunSuite {
   test("vocabCoverage: frequency-desc rank, word tiebreak, cumulative shares") {
     import spark.implicits._
     val docs = Seq((1L, "a a a b b c")).toDF("doc_id", "text")
-    val got = Corpus.vocabCoverage(docs, "text", topK = 2)
+    val got = Corpus.vocabCoverage(docs, "text")
       .orderBy("rank").collect()
       .map(r => (r.getAs[Long]("rank"), r.getAs[String]("w"),
         r.getAs[Long]("n"), r.getAs[Long]("cum_n"),
         r.getAs[Double]("cover_r")))
     assert(got.toSeq == Seq((1L, "a", 3L, 3L, 0.5),
-      (2L, "b", 2L, 5L, 0.833333)))
+      (2L, "b", 2L, 5L, 0.833333), (3L, "c", 1L, 6L, 1.0)))
     // tie on frequency → lexicographic word order decides the rank
     val tie = Seq((1L, "z y z y")).toDF("doc_id", "text")
-    val tw = Corpus.vocabCoverage(tie, "text", topK = 2)
+    val tw = Corpus.vocabCoverage(tie, "text")
       .orderBy("rank").collect().map(_.getAs[String]("w"))
     assert(tw.toSeq == Seq("y", "z"))
   }
@@ -770,18 +766,20 @@ class CorpusSpec extends AnyFunSuite {
       (1L, "apple banana apple"),
       (2L, "apple cherry"),
       (3L, "banana banana banana cherry"),
-      (4L, "  ")).toDF("doc_id", "text")
-    val out = Corpus.invertedIndex(d, "doc_id", "text", topK = 2)
+      (4L, "  "), (5L, "cherry"), (6L, "cherry")).toDF("doc_id", "text")
+    val out = Corpus.invertedIndex(d, "doc_id", "text")
       .orderBy("term", "rank").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5)))
     // apple: df 2, total 3; tf tie (1) between docs 1? no: doc1 tf 2,
     // doc2 tf 1. banana: doc3 tf 3, doc1 tf 1. cherry: tf tie 1 between
-    // docs 2 and 3 → doc-id tiebreak ranks doc2 first.
+    // docs 2, 3, 5 and 6 → doc-id tiebreak ranks doc2 first, and the top-3
+    // postings cut doc6.
     assert(out.toSeq == Seq(
       ("apple", 2L, 3L, 1L, 1L, 2L), ("apple", 2L, 3L, 2L, 2L, 1L),
       ("banana", 2L, 4L, 1L, 3L, 3L), ("banana", 2L, 4L, 2L, 1L, 1L),
-      ("cherry", 2L, 2L, 1L, 2L, 1L), ("cherry", 2L, 2L, 2L, 3L, 1L)),
+      ("cherry", 4L, 4L, 1L, 2L, 1L), ("cherry", 4L, 4L, 2L, 3L, 1L),
+      ("cherry", 4L, 4L, 3L, 5L, 1L)),
       out.toSeq)
     // term-partitioned windows, never a global single partition
     val plan = Corpus.invertedIndex(d, "doc_id", "text")

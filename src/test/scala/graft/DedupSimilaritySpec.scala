@@ -58,7 +58,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("minhash LSH finds the near-duplicate pair") {
     val pairs = Dedup.minhashCandidatesPortable(docs, "doc_id", "text",
-      shingleN = 3, numHashes = 16, bands = 8)
+      bands = 8)
       .as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)), s"expected (1,2) in $pairs")
     assert(!pairs.contains((1L, 4L)), "unrelated docs must not collide in all bands")
@@ -108,7 +108,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (2L, Array.tabulate(16)(i => -i.toFloat / 16)))
       .toDF("vec_id", "embedding")
     val pairs = Similarity.lshNearPairs(vecs, "vec_id", "embedding",
-      bits = 8, minSim = 0.99)
+      minSim = 0.99)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs == Set((0L, 1L)))
   }
@@ -126,9 +126,16 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (i, Array.tabulate(8)(j =>
         if ((j + i) % 3 == 0) -(j + 7).toFloat else (i % 5 + j).toFloat)))
     val vecs = (template ++ cluster ++ singles).toDF("vec_id", "embedding")
+    // at the joins' 4 lattice bits the template, the cluster and the
+    // singletons sit in different buckets (singletons share buckets in
+    // pairs, below cosine 0.99)
+    val sig = (template ++ cluster ++ singles).map { case (i, v) =>
+      i -> SpecOracles.latticeSignature(v, 4, 0) }.toMap
+    assert(singles.forall(s => sig(s._1) != sig(0L) && sig(s._1) != sig(100L)))
+    assert(sig(0L) != sig(100L))
 
     // the diagnostic's hottest row IS the collapsed bucket
-    val hot = Similarity.bucketHotness(vecs, "vec_id", "embedding", bits = 8)
+    val hot = Similarity.bucketHotness(vecs, "vec_id", "embedding")
       .as[(Long, Long)].collect()
     assert(hot.head._1 == 40L, s"hottest m: ${hot.head}")
     assert(hot.exists(_._1 == 3L), s"cluster bucket missing: ${hot.toSeq}")
@@ -140,159 +147,98 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // explicit cap below the template size: the collapsed bucket produces
     // no pairs, the genuine cluster's pairs all survive
     val capped = Similarity.lshNearPairs(vecs, "vec_id", "embedding",
-        bits = 8, minSim = 0.99, maxBucket = 10)
+        minSim = 0.99, maxBucket = 10)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(capped == clusterPairs, s"capped: $capped")
 
     // cap off (default): superset — the template bucket's quadratic pair
     // set is back, identical vectors at sim 1
     val off = Similarity.lshNearPairs(vecs, "vec_id", "embedding",
-        bits = 8, minSim = 0.99)
+        minSim = 0.99)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(off.size == clusterPairs.size + 40 * 39 / 2, s"off size: ${off.size}")
   }
 
-  test("multi-table LSH: table 0 reproduces the single table, OR lifts " +
-    "recall, pairs deduped, cap per table") {
-    // a genuinely-near pair (cos ≈ 0.995) plus unrelated fillers: with
-    // FEW bits per table some near pairs land in different buckets in
-    // one table but collide in another — L tables can only ADD pairs
-    val rnd = new scala.util.Random(11)
-    val base = Array.tabulate(16)(j => rnd.nextGaussian().toFloat)
-    val vecs = ((0L until 30L).map { i =>
+  /** 40 vectors: a 12-member near-cluster around one random direction
+    * (cosine ≈ 0.99 to each other) and 28 random fillers. */
+  private def lshVectors(seed: Int): Seq[(Long, Array[Float])] = {
+    val rnd = new scala.util.Random(seed)
+    val base = Array.tabulate(16)(_ => rnd.nextGaussian().toFloat)
+    (0L until 40L).map { i =>
       val v =
-        if (i < 10L) base.zipWithIndex.map { case (x, j) =>
-          x + (0.05 * ((i * 7 + j) % 5 - 2)).toFloat } // near-cluster of 10
+        if (i < 12L) base.zipWithIndex.map { case (x, j) =>
+          x + (0.05 * ((i * 7 + j) % 5 - 2)).toFloat }
         else Array.tabulate(16)(_ => rnd.nextGaussian().toFloat)
       (i, v)
-    }).toDF("vec_id", "embedding")
+    }
+  }
+
+  test("multi-table LSH: table 0 reproduces the single table, OR lifts " +
+    "recall, pairs deduped") {
+    // with 4 bits per table some near pairs land in different buckets in
+    // one table but collide in the other — the second table can only ADD
+    // pairs
+    val raw = lshVectors(11)
+    val vecs = raw.toDF("vec_id", "embedding")
     def pairsOf(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").as[(Long, Long)].collect().toSeq
-    val one = pairsOf(Similarity.lshNearPairsTables(vecs, "vec_id",
-      "embedding", bits = 6, minSim = 0.9, tables = 1))
     val single = pairsOf(Similarity.lshNearPairs(vecs, "vec_id",
-      "embedding", bits = 6, minSim = 0.9))
-    assert(one.toSet == single.toSet, "tables=1 must equal lshNearPairs")
+      "embedding", minSim = 0.9))
     val two = pairsOf(Similarity.lshNearPairsTables(vecs, "vec_id",
-      "embedding", bits = 6, minSim = 0.9, tables = 2))
-    val four = pairsOf(Similarity.lshNearPairsTables(vecs, "vec_id",
-      "embedding", bits = 6, minSim = 0.9, tables = 4))
-    // monotone recall: every single-table pair survives, more may appear
-    assert(single.toSet.subsetOf(two.toSet), s"2-table lost pairs")
-    assert(two.toSet.subsetOf(four.toSet), s"4-table lost pairs")
+      "embedding", minSim = 0.9))
+    // monotone recall: every single-table pair survives
+    assert(single.toSet.subsetOf(two.toSet), "2-table lost pairs")
     // OR-dedup: no (id_a, id_b) appears twice even when both tables agree
-    assert(four.distinct.size == four.size, "pairs must be deduped")
-    // at 4 tables × 6 bits the 10-member cluster is essentially complete
-    val clusterPairs = (for { a <- 0L until 10L; b <- (a + 1) until 10L }
-      yield (a, b)).toSet
-    assert((clusterPairs -- four.toSet).size <= 3,
-      s"4-table recall too low: missing ${clusterPairs -- four.toSet}")
-    // the lattice family keeps table 0 == hyperplaneSignatureLattice too
-    val latticeOne = pairsOf(Similarity.lshNearPairsTables(vecs, "vec_id",
-      "embedding", bits = 4, minSim = 0.9, tables = 1,
-      signatureAt = Similarity.hyperplaneSignatureLatticeAt))
-    val latticeSingle = pairsOf(Similarity.lshNearPairs(vecs, "vec_id",
-      "embedding", bits = 4, minSim = 0.9,
-      signature = Similarity.hyperplaneSignatureLattice))
-    assert(latticeOne.toSet == latticeSingle.toSet)
-    // per-table cap: 25 identical vectors collapse EVERY table's bucket;
-    // cap 10 refuses them in each table independently, near pair survives
-    val collapse = ((0L until 25L).map(i =>
-      (i, Array.tabulate(8)(j => (j + 1).toFloat))) ++ Seq(
-      (100L, Array.tabulate(8)(j => if (j % 2 == 0) -2f else 1f)),
-      (101L, Array.tabulate(8)(j => if (j % 2 == 0) -2f else 1f))))
-      .toDF("vec_id", "embedding")
-    val capped = pairsOf(Similarity.lshNearPairsTables(collapse, "vec_id",
-      "embedding", bits = 8, minSim = 0.99, tables = 2, maxBucket = 10))
-    assert(capped.toSet == Set((100L, 101L)), s"capped: $capped")
+    assert(two.distinct.size == two.size, "pairs must be deduped")
+    // the driver-side OR-construction: a collision in table 0 or table 1,
+    // verified by exact cosine
+    val v = raw.toMap
+    def sig(i: Long, t: Int) = SpecOracles.latticeSignature(v(i), 4, t)
+    val want = (for {
+      a <- 0L until 40L; b <- (a + 1) until 40L
+      if sig(a, 0) == sig(b, 0) || sig(a, 1) == sig(b, 1)
+      if SpecOracles.cosine(v(a), v(b)) >= 0.9
+    } yield (a, b)).toSet
+    assert(two.toSet == want, s"extra=${two.toSet -- want} " +
+      s"missing=${want -- two.toSet}")
+    val wantSingle = want.filter { case (a, b) => sig(a, 0) == sig(b, 0) }
+    assert(single.toSet == wantSingle)
   }
 
   test("multi-probe LSH: equals the declarative Hamming<=1 predicate, " +
-    "probes=0 degenerates to the single table, no duplicates, cap drops " +
-    "collapsed-bucket members entirely") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(13)
-    val base = Array.tabulate(16)(_ => rnd.nextGaussian().toFloat)
-    val vecs = ((0L until 40L).map { i =>
-      val v =
-        if (i < 12L) base.zipWithIndex.map { case (x, j) =>
-          x + (0.05 * ((i * 7 + j) % 5 - 2)).toFloat } // near-cluster of 12
-        else Array.tabulate(16)(_ => rnd.nextGaussian().toFloat)
-      (i, v)
-    }).toDF("vec_id", "embedding")
+    "no duplicates, home pairs kept") {
+    val raw = lshVectors(13)
+    val vecs = raw.toDF("vec_id", "embedding")
     def pairsOf(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").as[(Long, Long)].collect().toSeq
 
-    // driver-side reference: signatures from the SAME expression, pairs
-    // at Hamming <= 1, verified by exact cosine — the declarative form
-    val sigs = vecs.select(col("vec_id"),
-      Similarity.hyperplaneSignature(col("embedding"), 6).as("sig"))
-      .as[(Long, Long)].collect().toMap
-    val raw = vecs.as[(Long, Array[Float])].collect().toMap
-    def cosine(a: Array[Float], b: Array[Float]): Double = {
-      var dp = 0.0; var na = 0.0; var nb = 0.0
-      a.indices.foreach { j =>
-        dp += a(j).toDouble * b(j); na += a(j).toDouble * a(j)
-        nb += b(j).toDouble * b(j)
-      }
-      dp / math.sqrt(na * nb)
+    // driver-side reference: the lattice signatures, pairs at Hamming
+    // <= 1, verified by exact cosine — the declarative form
+    val v = raw.toMap
+    val sigs = v.map { case (i, x) => i -> SpecOracles.latticeSignature(x, 4, 0) }
+    for (minSim <- Seq(0.9, 0.1)) {
+      val want = (for {
+        a <- 0L until 40L; b <- (a + 1) until 40L
+        if SpecOracles.hamming64(sigs(a), sigs(b)) <= 1
+        if SpecOracles.cosine(v(a), v(b)) >= minSim
+      } yield (a, b)).toSet
+      val got = pairsOf(Similarity.lshNearPairsMultiProbe(vecs, "vec_id",
+        "embedding", minSim = minSim))
+      assert(got.distinct.size == got.size,
+        "each qualifying pair must be emitted exactly once")
+      assert(got.toSet == want, s"multiprobe != Hamming<=1 reference at " +
+        s"$minSim: extra=${got.toSet -- want} missing=${want -- got.toSet}")
+      // the probe set can only ADD pairs over the single table
+      val single = pairsOf(Similarity.lshNearPairs(vecs, "vec_id",
+        "embedding", minSim = minSim))
+      assert(single.toSet.subsetOf(got.toSet), "probing lost home pairs")
     }
-    val want = (for {
-      a <- 0L until 40L; b <- (a + 1) until 40L
-      if java.lang.Long.bitCount(sigs(a) ^ sigs(b)) <= 1
-      if cosine(raw(a), raw(b)) >= 0.9
-    } yield (a, b)).toSet
-
-    val got = pairsOf(Similarity.lshNearPairsMultiProbe(vecs, "vec_id",
-      "embedding", bits = 6, minSim = 0.9))
-    assert(got.distinct.size == got.size,
-      "each qualifying pair must be emitted exactly once")
-    assert(got.toSet == want, s"multiprobe != Hamming<=1 reference: " +
-      s"extra=${got.toSet -- want} missing=${want -- got.toSet}")
-
-    // probes = 0 is exactly the single-table pair set
-    val zero = pairsOf(Similarity.lshNearPairsMultiProbe(vecs, "vec_id",
-      "embedding", bits = 6, minSim = 0.9, probes = 0))
-    val single = pairsOf(Similarity.lshNearPairs(vecs, "vec_id",
-      "embedding", bits = 6, minSim = 0.9))
-    assert(zero.toSet == single.toSet, "probes=0 must equal lshNearPairs")
-    // and the full probe set can only ADD pairs over the single table
-    assert(single.toSet.subsetOf(got.toSet), "probing lost home pairs")
-
-    // cap contract: members of a refused home bucket produce no pairs AT
-    // ALL — not even through a Hamming-1 neighbor's bucket. minSim = -1
-    // disables the verify so any leaked candidate would surface.
-    val collapse = ((0L until 25L).map(i =>
-      (i, Array.tabulate(8)(j => (j + 1).toFloat))) ++ Seq(
-      (100L, Array.tabulate(8)(j => if (j % 2 == 0) -2f else 1f)),
-      (101L, Array.tabulate(8)(j => if (j % 2 == 0) -2f else 1f))))
-      .toDF("vec_id", "embedding")
-    val capped = pairsOf(Similarity.lshNearPairsMultiProbe(collapse,
-      "vec_id", "embedding", bits = 8, minSim = -1.0, maxBucket = 10))
-    assert(capped.toSet == Set((100L, 101L)), s"capped: $capped")
-
-    // lattice family: the board query's exact configuration agrees with
-    // the declarative predicate too (4-bit lattice signature)
-    val latSigs = vecs.select(col("vec_id"),
-      Similarity.hyperplaneSignatureLattice(col("embedding"), 4).as("sig"))
-      .as[(Long, Long)].collect().toMap
-    val latWant = (for {
-      a <- 0L until 40L; b <- (a + 1) until 40L
-      if java.lang.Long.bitCount(latSigs(a) ^ latSigs(b)) <= 1
-      if cosine(raw(a), raw(b)) >= 0.1
-    } yield (a, b)).toSet
-    val latGot = pairsOf(Similarity.lshNearPairsMultiProbe(vecs, "vec_id",
-      "embedding", bits = 4, minSim = 0.1,
-      signature = Similarity.hyperplaneSignatureLattice))
-    assert(latGot.toSet == latWant,
-      s"lattice multiprobe != reference: extra=${latGot.toSet -- latWant} " +
-        s"missing=${latWant -- latGot.toSet}")
 
     // scale shape: the candidate join is an equi-join on the bucket —
     // never a cartesian/nested-loop (the Hamming predicate must be
     // reached through probe-bucket expansion, not pair enumeration)
     val plan = Similarity.lshNearPairsMultiProbe(vecs, "vec_id",
-      "embedding", bits = 16, minSim = 0.9)
+      "embedding", minSim = 0.9)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
@@ -340,7 +286,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (3L, Array(0.0f, 1.0f, -0.5f))
     ).toDF("vec_id", "embedding")
     val got = Similarity.embeddingNearDup(vecs, "vec_id", "embedding",
-      bits = 8, minSim = 0.99)
+      minSim = 0.99)
       .as[(Long, Boolean, Long)].collect().toSet
     assert(got == Set((0L, false, -1L), (1L, true, 0L), (2L, true, 0L),
       (3L, false, -1L)))
@@ -355,14 +301,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (2L, "one two three four five six"), // 2 spans, 0 boiler
       (3L, "   ")              // filtered out
     ).toDF("doc_id", "text")
-    val got = Dedup.boilerplateSpans(docs, "doc_id", "text",
-      shingleN = 5, minDocs = 2)
+    val got = Dedup.boilerplateSpans(docs, "doc_id", "text")
       .select("doc_id", "n_distinct", "n_boiler")
       .as[(Long, Long, Long)].collect().toSet
     assert(got == Set((0L, 2L, 1L), (1L, 2L, 1L), (2L, 2L, 0L)))
     // both orders of the shared span's neighbors stay distinct spans; the
     // ratio column mirrors n_boiler / n_distinct
-    val ratios = Dedup.boilerplateSpans(docs, "doc_id", "text", 5, 2)
+    val ratios = Dedup.boilerplateSpans(docs, "doc_id", "text")
       .select("doc_id", "boiler_ratio").as[(Long, Double)].collect().toMap
     assert(ratios(0L) == 0.5 && ratios(2L) == 0.0)
   }
@@ -549,11 +494,10 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // directed: 1 ⊂ 2 at containment 1.0; the reverse direction fails
     // (2's shingles are mostly outside 1) and doc 3 pairs with nobody
     assert(got.toSeq == Seq((1L, 2L, 1.0)), got.toSeq)
-    // Jaccard at the same 3/4 threshold can't see the pair — the union is
+    // Jaccard at its 3/5 threshold can't see the pair — the union is
     // dominated by the long doc
-    val jacc = Dedup.prefixJaccardPairs(d, "doc_id", "text",
-      numT = 3, denT = 4).select("id_a", "id_b").as[(Long, Long)]
-      .collect()
+    val jacc = Dedup.prefixJaccardPairs(d, "doc_id", "text")
+      .select("id_a", "id_b").as[(Long, Long)].collect()
     assert(jacc.isEmpty, jacc.toSeq)
     // cap 1: the sub-sup witness shingles have dfreq 2 > 1 — documented
     // recall bound, same contract as the Jaccard prefix cap
@@ -615,11 +559,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       () => Dedup.containmentPairsOneSided(docs, "doc_id", "text",
         maxDocsPerTok = 0),
       () => Similarity.lshNearPairs(vecs, "vec_id", "embedding",
-        maxBucket = 0),
-      () => Similarity.lshNearPairsTables(vecs, "vec_id", "embedding",
-        maxBucket = 0),
-      () => Similarity.lshNearPairsMultiProbe(vecs, "vec_id", "embedding",
-        maxBucket = 0)
+        minSim = 0.9, maxBucket = 0)
     ).foreach(join => intercept[IllegalArgumentException](join()))
   }
 
@@ -676,7 +616,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // so a family pair missing here is lost to the banded leg, and the
     // quote may not even be a candidate
     val bandedSym = Dedup.minhashCandidatesPortable(d, "doc_id", "text",
-      shingleN = 3, numHashes = 16, bands = 8)
+      bands = 8)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val banded = bandedSym ++ bandedSym.map(_.swap)
     assert(famTruth.subsetOf(banded),
@@ -717,7 +657,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (1L, "shared header\nbody one\nbody one\ntail one"),
       (2L, "shared header\nbody two"),
       (3L, "shared header")).toDF("doc_id", "text")
-    val got = Dedup.lineDedup(docs, "doc_id", "text", minDocs = 2)
+    val got = Dedup.lineDedup(docs, "doc_id", "text")
       .select(col("doc_id").as[Long], col("text_clean").as[String],
         col("n_lines").as[Long], col("n_dropped").as[Long])
       .collect().map(r => r._1 -> ((r._2, r._3, r._4))).toMap
@@ -743,8 +683,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (3L, "a wholly unique document with original words"),
       (4L, p),
       (5L, "tiny doc")).toDF("doc_id", "text")
-    val got = Dedup.duplicatedSpanRemoval(docs, "doc_id", "text",
-        gramN = 5, minDocs = 2)
+    val got = Dedup.duplicatedSpanRemoval(docs, "doc_id", "text")
       .select(col("doc_id").as[Long], col("n_tokens").as[Long],
         col("n_dropped").as[Long], col("text_clean").as[String])
       .collect().map(r => r._1 -> ((r._2, r._3, r._4))).toMap
@@ -781,26 +720,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(got == brute)
   }
 
-  test("lineDedup treats the delimiter literally, not as a regex") {
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "shared|unique one"),
-      (2L, "shared|unique two")).toDF("doc_id", "text")
-    val got = Dedup.lineDedup(docs, "doc_id", "text", minDocs = 2, delim = "|")
-      .select(col("doc_id").as[Long], col("text_clean").as[String],
-        col("n_dropped").as[Long]).collect()
-      .map(r => r._1 -> ((r._2, r._3))).toMap
-    // '|' as a regex would split every character; literally it yields two
-    // segments, of which 'shared' is corpus-hot
-    assert(got(1L) == (("unique one", 1L)))
-    assert(got(2L) == (("unique two", 1L)))
-  }
-
   test("hardNegatives: similar-but-not-duplicate wins; near-dup and self excluded") {
     import spark.implicits._
     // anchor 0; vec 1 is a near-identical copy (near-dup → excluded);
     // vec 2 points the same general direction (the hard negative);
-    // vec 3 is orthogonal (easy negative); vec 4 is opposite.
+    // vec 3 is orthogonal (easy negative); vec 4 is opposite. At the
+    // joins' 4 lattice bits vec 0 and vec 1 share a bucket, so the
+    // exclusion sees the near-dup pair.
     val vecs = Seq(
       (0L, Array(1.0f, 0.0f, 0.0f, 0.0f)),
       (1L, Array(0.999f, 0.01f, 0.0f, 0.0f)),
@@ -809,8 +735,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (4L, Array(-1.0f, 0.0f, 0.0f, 0.0f))
     ).toDF("vec_id", "embedding")
     val got = Similarity.hardNegatives(vecs, "vec_id", "embedding",
-        anchorIds = Seq(0L), k = 3, bits = 2, minSim = 0.9,
-        signature = Similarity.hyperplaneSignatureLattice)
+        anchorIds = Seq(0L), k = 3, minSim = 0.9)
       .select(col("negative").as[Long], col("rnk").as[Long]).collect()
       .map(r => r._2 -> r._1).toMap
     // rank 1 = the hard negative (sim 0.8), never the near-dup or self
@@ -849,8 +774,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (1L, Array(0.5f, -0.25f, 1.0f)),
       (2L, Array(0.0f, 0.0f, 0.0f)),
       (3L, Array(-1.5f, 2.0f, 0.125f))).toDF("vec_id", "embedding")
-    val out = Similarity.randomProjection(vecs, "vec_id", "embedding",
-        outDim = 4)
+    val out = Similarity.randomProjection(vecs, "vec_id", "embedding")
       .orderBy("vec_id").collect()
     // driver-side reference: same quantization, same coefficient lattice
     def ref(v: Array[Float], i: Int): Long =
@@ -862,12 +786,12 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (3L, Array(-1.5f, 2.0f, 0.125f))).zip(out).foreach {
       case ((id, v), row) =>
         assert(row.getLong(0) == id)
-        (0 until 4).foreach { i =>
+        (0 until 8).foreach { i =>
           assert(row.getLong(1 + i) == ref(v, i), s"vec $id dim $i")
         }
     }
     // zero vector projects to exactly zero in every dim
-    assert((1 to 4).forall(i => out(1).getLong(i) == 0L))
+    assert((1 to 8).forall(i => out(1).getLong(i) == 0L))
     // non-degeneracy: a purely additive lattice ((31i+17j) mod 7) is a
     // function of (i+j) mod 7 — unit vectors 7 apart collide and row p7
     // repeats p0; the bilinear term must prevent both
@@ -875,15 +799,14 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (0L, Array.tabulate(16)(j => if (j == 0) 1.0f else 0.0f)),
       (7L, Array.tabulate(16)(j => if (j == 7) 1.0f else 0.0f)))
       .toDF("vec_id", "embedding")
-    val us = Similarity.randomProjection(units, "vec_id", "embedding",
-        outDim = 8)
+    val us = Similarity.randomProjection(units, "vec_id", "embedding")
       .orderBy("vec_id").collect()
     assert((1 to 8).exists(i => us(0).getLong(i) != us(1).getLong(i)),
       "e0 and e7 must project differently")
     val ramp = Seq((0L, Array.tabulate(16)(j => (j + 1) * 0.1f)))
       .toDF("vec_id", "embedding")
-    val rp = Similarity.randomProjection(ramp, "vec_id", "embedding",
-      outDim = 8).collect()(0)
+    val rp = Similarity.randomProjection(ramp, "vec_id", "embedding")
+      .collect()(0)
     assert(rp.getLong(8) != rp.getLong(1), "p7 must not repeat p0")
     // map-only: no Exchange at any corpus size
     val plan = Similarity.randomProjection(vecs, "vec_id", "embedding")
@@ -922,8 +845,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(docs.queryExecution.optimizedPlan.stats.sizeInBytes <
       BigInt(512L << 20), "LocalRelation input must stay under the bound")
     def run(d: org.apache.spark.sql.DataFrame) =
-      Dedup.minhashCandidatesPortable(d, "doc_id", "text",
-        shingleN = 3, numHashes = 16, bands = 8)
+      Dedup.minhashCandidatesPortable(d, "doc_id", "text", bands = 8)
         .as[(Long, Long)].collect().toSet
     assert(run(hugeStats) == run(docs))
   }

@@ -125,7 +125,7 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("RandomForest scoring over embeddings is distributed and deterministic") {
     val emb = Tables.embeddings(spark, sfDir)
-    val model = ModelScoring.trainOnArrays(emb, "embedding", "label", numTrees = 5)
+    val model = ModelScoring.trainOnArrays(emb, "embedding", "label")
     val scored = ModelScoring.score(model, emb, "embedding")
     assert(scored.columns.contains("prediction"))
     assert(scored.count() == emb.count())
@@ -157,20 +157,21 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("calibrationCurve: monotone fixture buckets, exact rates, hot score owns span") {
-    def curve(rows: Seq[(Long, Int)], b: Int) =
-      ModelScoring.calibrationCurve(rows.toDF("s", "y"), col("s"), col("y"), b)
+    def curve(rows: Seq[(Long, Int)]) =
+      ModelScoring.calibrationCurve(rows.toDF("s", "y"), col("s"), col("y"))
         .collect().map(r => r.getAs[Long]("bucket") ->
           (r.getAs[Long]("n"), r.getAs[Long]("n_pos"),
             r.getAs[Double]("pos_rate_r"))).toMap
-    // 8 distinct scores, perfectly calibrated upper half, 4 buckets
-    val rows = Seq((1L, 0), (2L, 0), (3L, 0), (4L, 0),
-      (5L, 1), (6L, 1), (7L, 1), (8L, 1))
-    assert(curve(rows, 4) == Map(0L -> ((2L, 0L, 0.0)), 1L -> ((2L, 0L, 0.0)),
-      2L -> ((2L, 2L, 1.0)), 3L -> ((2L, 2L, 1.0))))
-    // one hot score (4 copies, half positive) owns buckets 0-1's span
+    // 20 distinct scores, perfectly calibrated upper half: score k has
+    // k − 1 rows below it, so decile (k − 1)·10 DIV 20 holds two scores
+    val rows = (1L to 20L).map(k => (k, if (k > 10L) 1 else 0))
+    assert(curve(rows) == (0L until 10L).map(b =>
+      b -> ((2L, if (b >= 5L) 2L else 0L, if (b >= 5L) 1.0 else 0.0))).toMap)
+    // one hot score (4 copies, half positive) owns deciles 0-5's span:
+    // score 9 has 4 of 6 rows below it, decile 40 DIV 6 = 6
     val hot = Seq((1L, 0), (1L, 1), (1L, 0), (1L, 1), (9L, 1), (9L, 0))
-    val got = curve(hot, 3)
-    assert(got == Map(0L -> ((4L, 2L, 0.5)), 2L -> ((2L, 1L, 0.5))))
+    val got = curve(hot)
+    assert(got == Map(0L -> ((4L, 2L, 0.5)), 6L -> ((2L, 1L, 0.5))))
   }
 
   test("writeMonthOverwrite replaces only the targeted partition") {
@@ -202,7 +203,7 @@ class ExtensionsSpec extends AnyFunSuite {
       .collect()
     assert(chunks.length == 6)          // 5 tokens, size 3, stride 2 → 2/doc
     val pr = operators.Graph.integerPageRank(
-      Seq((1L, 2L)).toDF("id_a", "id_b"), iters = 1).collect()
+      Seq((1L, 2L)).toDF("id_a", "id_b")).collect()
     assert(pr.length == 2)
   }
 }

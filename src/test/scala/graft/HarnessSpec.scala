@@ -13,8 +13,9 @@ import graft.operators.Overlap
 /** The run harness around the queries: the one session policy, the
   * query/oracle contract, the bench's retest-reference resolution,
   * `Overlap.runAll`'s failure handling, the censuses of main-code
-  * reachability, knobs, session artifacts, schema-less parquet reads, cap
-  * decisions and scratch directories, and the specs' temp-dir census. */
+  * reachability, settable operator values, knobs and environment
+  * variables, session artifacts, schema-less parquet reads and scratch
+  * directories, and the specs' temp-dir census. */
 class HarnessSpec extends AnyFunSuite with TimeLimits {
   implicit val signaler: Signaler = ThreadSignaler
 
@@ -31,12 +32,71 @@ class HarnessSpec extends AnyFunSuite with TimeLimits {
   private lazy val stripped =
     files.map(f => f -> comments.replaceAllIn(Files.readString(f), ""))
 
-  /** Each use of `name` in main code that is not its definition, named by
-    * the file and the method it sits in. */
+  /** The index just past the string literal or bracketed span that starts
+    * at `i` (string literals inside a span are skipped whole), or `i + 1`
+    * for any other character. */
+  private def skip(src: String, i: Int): Int =
+    if (src.startsWith("\"\"\"", i)) {
+      val end = src.indexOf("\"\"\"", i + 3)
+      if (end < 0) src.length else end + 3
+    } else if (src(i) == '"') {
+      var j = i + 1
+      while (j < src.length && src(j) != '"') j += (if (src(j) == '\\') 2 else 1)
+      j + 1
+    } else if ("([{".contains(src(i))) {
+      var j = i + 1
+      while (j < src.length && !")]}".contains(src(j))) j = skip(src, j)
+      j + 1
+    } else i + 1
+
+  /** The top-level comma-separated items of `src(from until to)`, each as
+    * (start, end) offsets into `src`. */
+  private def items(src: String, from: Int, to: Int): Seq[(Int, Int)] = {
+    val out = Seq.newBuilder[(Int, Int)]
+    var start = from
+    var i = from
+    while (i < to) {
+      if (src(i) == ',') { out += (start -> i); start = i + 1 }
+      i = if (src(i) == ',') i + 1 else skip(src, i)
+    }
+    if (src.substring(start, to).trim.nonEmpty) out += (start -> to)
+    out.result()
+  }
+
+  /** A parameter: its name and, when it has one, its default's text and
+    * offsets. */
+  private final case class Param(name: String, default: Option[String],
+      span: (Int, Int))
+
+  /** The first parameter list of each `def` in `src`: (def offset, name,
+    * parameters). */
+  private def paramLists(src: String): Seq[(Int, String, Seq[Param])] =
+    """\bdef\s+(\w+)\s*(\[[^\]]*\])?\s*\(""".r.findAllMatchIn(src).map { m =>
+      val open = m.end - 1
+      val params = items(src, open + 1, skip(src, open) - 1).flatMap {
+        case (a, b) =>
+          """^\s*(?:implicit\s+)?(\w+)\s*:""".r
+            .findFirstMatchIn(src.substring(a, b)).map { n =>
+              // the default follows the first top-level `=` that is not `=>`
+              var i = a + n.end
+              while (i < b && !(src(i) == '=' && src(i + 1) != '>')) i = skip(src, i)
+              if (i < b) Param(n.group(1), Some(src.substring(i + 1, b).trim), (i + 1, b))
+              else Param(n.group(1), None, (b, b))
+            }
+      }
+      (m.start, m.group(1), params)
+    }.toSeq
+
+  /** Each use of `name` in main code that is not its definition and not a
+    * parameter's default value, named by the file and the method it sits
+    * in: a method only a default names is never called unless the default
+    * is taken, which the settable-value census below rules out. */
   private def uses(name: String): Seq[String] = stripped.flatMap { case (f, src) =>
+    val defaults = paramLists(src).flatMap(_._3.map(_.span))
     s"\\b$name\\b".r.findAllMatchIn(src).map(_.start)
       .filterNot(i =>
         defining.findFirstIn(src.substring(math.max(0, i - 16), i)).isDefined)
+      .filterNot(i => defaults.exists { case (a, b) => a <= i && i < b })
       .map { i =>
         val in = defName.findAllMatchIn(src.substring(0, i)).toSeq
           .lastOption.fold("<top>")(_.group(1))
@@ -212,6 +272,106 @@ class HarnessSpec extends AnyFunSuite with TimeLimits {
         (referenceMapped.keySet -- unreached))
     assert(unreached.filterNot(referenceMapped.contains).isEmpty,
       "a public method only specs reach; delete it or move it to test scope")
+  }
+
+  /** The one reason a defaulted operator parameter may keep a default no
+    * main-code call varies: a cap or size threshold the contract runs at
+    * this value, which the named spec lowers so that it binds on
+    * spec-sized data. */
+  private val specSized = Map(
+    "Dedup.connectedComponents.broadcastEdgeLimit" -> "DedupSimilaritySpec",
+    "Dedup.prefixJaccardPairs.maxDocsPerTok" -> "PropertySpec",
+    "Dedup.containmentPairs.maxDocsPerTok" -> "DedupSimilaritySpec",
+    "Dedup.containmentPairsOneSided.maxDocsPerTok" -> "DedupSimilaritySpec",
+    "Maintenance.compact.targetBytes" -> "ScaleSpec")
+
+  test("settable-value census: every defaulted operator parameter is varied " +
+      "by main code or sized for specs") {
+    assert(files.size > 10, "src/main/scala not found from the working dir")
+    val layer = stripped.filter { case (f, _) =>
+      Seq("operators", "streaming", "serving").contains(f.getParent.getFileName.toString)
+    }
+    // (object.def.param, taken, varied): `taken` call sites leave it out,
+    // `varied` ones pass a value other than the default
+    val census = layer.flatMap { case (f, src) =>
+      val obj = f.getFileName.toString.stripSuffix(".scala")
+      assert(src.contains(s"object $obj"), s"$f does not hold object $obj")
+      val members = memberDefs(src).collect {
+        case (name, mods) if !"""\boverride\b|\bprotected\b|\bprivate\b(?!\[)""".r
+            .findFirstIn(mods).isDefined => name
+      }.toSet
+      paramLists(src).filter(d => members.contains(d._2)).flatMap {
+        case (_, name, params) =>
+          // call sites: `Obj.name(` anywhere, a bare `name(` in its own file
+          val calls = stripped.flatMap { case (g, other) =>
+            val pat = if (g == f) s"""(?<![\\w.])$name\\s*\\(|\\b$obj\\s*\\.\\s*$name\\s*\\("""
+              else s"""\\b$obj\\s*\\.\\s*$name\\s*\\("""
+            pat.r.findAllMatchIn(other)
+              .filterNot(m => defining.findFirstIn(
+                other.substring(math.max(0, m.start - 16), m.start)).isDefined)
+              .map { m =>
+                items(other, m.end, skip(other, m.end - 1) - 1)
+                  .map { case (a, b) => other.substring(a, b).trim }
+              }
+          }
+          params.zipWithIndex.collect { case (Param(p, Some(dv), _), k) =>
+            val passed = calls.map { args =>
+              val (named, pos) = args.partition(_.matches("""(?s)\w+\s*=[^=>].*"""))
+              named.find(_.takeWhile(c => c != ' ' && c != '=') == p)
+                .map(_.dropWhile(_ != '=').drop(1).trim)
+                .orElse(pos.lift(k))
+            }
+            val taken = passed.count(_.isEmpty)
+            val varied = passed.flatten.count(_.replaceAll("\\s", "") !=
+              dv.replaceAll("\\s", ""))
+            (s"$obj.$name.$p", taken, varied)
+          }
+      }
+    }
+    assert(census.size > 5, "no defaulted operator parameter found")
+    val unvaried = census.collect {
+      case (site, taken, varied) if !(taken > 0 && varied > 0) => site
+    }
+    val unlisted = unvaried.filterNot(specSized.contains)
+    assert(unlisted.isEmpty, s"${unlisted.size} of ${census.size} defaulted " +
+      "parameters have a default main code never varies; make each a " +
+      s"constant (or drop a default no call takes): $unlisted")
+    // a listed cap runs at its default in every main-code call, and its
+    // spec does set it
+    census.filter(c => specSized.contains(c._1)).foreach {
+      case (site, taken, varied) =>
+        assert(taken > 0 && varied == 0, s"$site is varied by main code")
+        val param = site.split('.').last
+        val spec = Files.readString(
+          java.nio.file.Paths.get(s"src/test/scala/graft/${specSized(site)}.scala"))
+        assert(s"\\b$param\\s*=".r.findFirstIn(spec).isDefined,
+          s"${specSized(site)} does not set $site")
+    }
+    assert(specSized.keySet.forall(unvaried.contains),
+      "a listed cap is gone: " + (specSized.keySet -- unvaried))
+  }
+
+  test("env census: main code reads five environment variables, each for " +
+      "one reason") {
+    assert(files.size > 10, "src/main/scala not found from the working dir")
+    val read = """(?:sys\.env(?:\.\w+)?|System\.getenv)\(\s*"(\w+)"""".r
+    val reads = stripped.flatMap { case (f, src) =>
+      // a dynamic read (a computed name, the whole map) names no variable
+      assert("""sys\.env\b|getenv""".r.findAllIn(src).size ==
+        read.findAllIn(src).size, s"${f.getFileName} reads the environment by a computed name")
+      read.findAllMatchIn(src).map(m => m.group(1) -> f.getFileName.toString)
+    }.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
+    val reasons = Map(
+      "SPARK_GRAFT_SF_DIR" -> ("the corpus Bench times", Set("Bench.scala")),
+      "SPARK_GRAFT_CPUS" -> ("the local[cores] width of Bench and Verify",
+        Set("Bench.scala", "Verify.scala")),
+      "SPARK_GRAFT_NO_WARM" -> ("Bench without its warm-up pass", Set("Bench.scala")),
+      "SPARK_GRAFT_BENCH_SEED" -> ("Bench's query-order shuffle seed",
+        Set("Bench.scala")),
+      "SPARK_GRAFT_BENCH_REF" -> ("the reference board Bench compares to",
+        Set("Bench.scala")))
+    assert(reads == reasons.map { case (k, (_, in)) => k -> in },
+      "an environment variable was added, dropped or moved")
   }
 
   test("temp-dir census: specs take temp directories from one helper") {

@@ -317,7 +317,7 @@ object PropertySpec extends Properties("graft") {
     Prop.forAll(Gen.nonEmptyListOf(Gen.choose(-10000, 10000))) { cents =>
       val df = cents.map(_ / 100.0).map(Tuple1(_)).toDF("value")
       val r = graft.operators.Maintenance
-        .winsorizedStats(df, "value", 10, 90).collect()(0)
+        .winsorizedStats(df, "value").collect()(0)
       val (n, lo, hi) = (r.getAs[Long]("n"), r.getAs[Long]("lo_c"),
         r.getAs[Long]("hi_c"))
       val clips = r.getAs[Long]("n_clip_lo") + r.getAs[Long]("n_clip_hi")
@@ -653,18 +653,18 @@ object PropertySpec extends Properties("graft") {
       }.toDF("vec_id", "embedding")
       def pairs(cap: Int): Set[(Long, Long)] =
         graft.operators.Similarity.lshNearPairs(vecs, "vec_id", "embedding",
-            bits = 6, minSim = 0.8, maxBucket = cap)
+            minSim = 0.8, maxBucket = cap)
           .select("id_a", "id_b").as[(Long, Long)].collect().toSet
       val un =
         graft.operators.Similarity.lshNearPairs(vecs, "vec_id", "embedding",
-            bits = 6, minSim = 0.8)
+            minSim = 0.8)
           .select("id_a", "id_b").as[(Long, Long)].collect().toSet
       val c1 = 1 + rnd.nextInt(3)
       val c2 = c1 + rnd.nextInt(nVecs)
       // mass conservation: every vector lives in exactly one bucket, so
       // the hotness distribution accounts for the whole corpus
       val mass = graft.operators.Similarity
-        .bucketHotness(vecs, "vec_id", "embedding", bits = 6)
+        .bucketHotness(vecs, "vec_id", "embedding")
         .selectExpr("sum(m * n_buckets)").as[Long].head()
       pairs(c1).subsetOf(pairs(c2)) && pairs(c2).subsetOf(un) &&
         pairs(nVecs) == un && mass == nVecs.toLong

@@ -824,7 +824,7 @@ class ScaleSpec extends AnyFunSuite {
         graft.operators.Spread.fanOutScan(docs, col("doc_id")))) {
       val base = spread.filter(length(trim(col("text"))) > 0)
       val plan = graft.operators.Dedup
-        .shingleToksPlan(base, "doc_id", "text", 8)
+        .shingleToksPlan(base, "doc_id", "text")
         .queryExecution.optimizedPlan.toString
       val lines = plan.split("\n")
       // 1. no Filter anywhere re-deriving the shingling expression
@@ -863,8 +863,7 @@ class ScaleSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val vecs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val plan = graft.operators.Similarity.lshNearPairsTables(
-        vecs, "vec_id", "embedding", bits = 4, minSim = 0.1, tables = 2,
-        signatureAt = graft.operators.Similarity.hyperplaneSignatureLatticeAt)
+        vecs, "vec_id", "embedding", minSim = 0.1)
       .queryExecution.optimizedPlan.toString
     val lines = plan.split("\n")
     assert(!plan.contains("CartesianProduct") && !plan.contains("Window"),
@@ -886,18 +885,18 @@ class ScaleSpec extends AnyFunSuite {
     "probe explode (r17 item 5 lock)") {
     // The exactly-once pair-emission argument needs the probe buckets to
     // be flips of ONE evaluated signature. That used to lean on codegen
-    // subexpression elimination over nProbes+1 inline copies of the
-    // 16-plane expression; now the signature is projected as an
-    // attribute and the probe array is xor flips of it — robust to
-    // interpreted fallback. Lock: (1) the generator input array
-    // references the projected attribute, not an inline plane
-    // projection; (2) the signature expression appears exactly twice in
-    // the whole plan (home side + probe-side project), not 17 times;
-    // (3) no InferFiltersFromGenerate-derived filter re-derives it.
+    // subexpression elimination over bits+1 inline copies of the
+    // plane expression; now the signature is projected as an attribute
+    // and the probe array is xor flips of it — robust to interpreted
+    // fallback. Lock: (1) the generator input array references the
+    // projected attribute, not an inline plane projection; (2) the
+    // signature expression appears exactly twice in the whole plan (home
+    // side + probe-side project), not bits + 2 times; (3) no
+    // InferFiltersFromGenerate-derived filter re-derives it.
     import org.apache.spark.sql.functions._
     val vecs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val plan = graft.operators.Similarity.lshNearPairsMultiProbe(
-        vecs, "vec_id", "embedding", bits = 16, minSim = 0.9)
+        vecs, "vec_id", "embedding", minSim = 0.9)
       .queryExecution.optimizedPlan.toString
     val lines = plan.split("\n")
     val genLine = lines.filter(_.contains("Generate explode(array("))
@@ -906,12 +905,12 @@ class ScaleSpec extends AnyFunSuite {
       s"probe array no longer flips the projected sig attribute:\n$plan")
     assert(!genLine.head.contains("zip_with"),
       s"probe array re-inlines the plane projection:\n$plan")
-    // hyperplaneSignature's plane dot products print as zip_with(...)
-    // aggregates: one per signature site. Home side evaluates it once,
-    // the probe-side project once — 2 sites × 16 planes.
+    // the lattice signature's plane dot products print as zip_with(...)
+    // aggregates, one per plane. Home side evaluates it once, the
+    // probe-side project once — 2 sites × the joins' 4 planes.
     val planeSites = "zip_with\\(".r.findAllIn(plan).length
-    assert(planeSites == 2 * 16,
-      s"expected 32 plane sites (2 signature evaluations), got " +
+    assert(planeSites == 2 * 4,
+      s"expected 8 plane sites (2 signature evaluations), got " +
         s"$planeSites:\n$plan")
     assert(!lines.exists(l => l.contains("Filter") && l.contains("zip_with")),
       s"inferred filter re-derives the signature:\n$plan")
@@ -1072,16 +1071,19 @@ class ScaleSpec extends AnyFunSuite {
   test("winsorizedStats: exact-rank thresholds, clip accounting, robust mean") {
     import spark.implicits._
     import graft.operators.Maintenance
-    // cents 1..9 and one outlier 100; p10/p90 → lo=1, hi=9; the outlier
-    // clamps to 9: sum = 45 + 9 = 54 → mean 0.054
-    val vals = ((1 to 9).map(_ / 100.0) :+ 1.00)
+    // n = 200 cents: one low outlier −5000, 1..198, one high outlier
+    // 100000. p1 → the first value whose cumulative count reaches 2, lo = 1;
+    // p99 → cumulative 198, hi = 197. −5000 clamps up to 1, 198 and 100000
+    // clamp down to 197: sum = 1 + (1+…+197 = 19503) + 197 + 197 = 19898
+    // → mean 19898 / 20000 = 0.9949
+    val vals = (-50.00 +: (1 to 198).map(_ / 100.0)) :+ 1000.00
     val r = Maintenance.winsorizedStats(
-      vals.map(Tuple1(_)).toDF("value"), "value", pLow = 10, pHigh = 90)
+      vals.map(Tuple1(_)).toDF("value"), "value")
       .collect()(0)
     assert((r.getAs[Long]("n"), r.getAs[Long]("lo_c"), r.getAs[Long]("hi_c"),
       r.getAs[Long]("n_clip_lo"), r.getAs[Long]("n_clip_hi"),
       r.getAs[Long]("wins_sum_c"), r.getAs[Double]("wins_mean_r")) ==
-      ((10L, 1L, 9L, 0L, 1L, 54L, 0.054)))
+      ((200L, 1L, 197L, 1L, 2L, 19898L, 0.9949)))
   }
 
   test("numericDrift: identical period distributions → zero contributions") {
@@ -1092,7 +1094,7 @@ class ScaleSpec extends AnyFunSuite {
     val rows = for (d <- 0 to 3; v <- Seq(1.00, 2.00, 2.00)) yield
       (v, new java.sql.Timestamp(d * day * 1000))
     val got = Maintenance.numericDrift(rows.toDF("value", "ts"), "value",
-        "ts", bins = 4).collect()
+        "ts").collect()
     assert(got.nonEmpty)
     assert(got.forall(r => r.getAs[Long]("lr_ub") == 0L &&
       r.getAs[Double]("contrib_r") == 0.0), got.mkString("\n"))

@@ -21,6 +21,28 @@ object SpecOracles {
       .select(col(idCol), Similarity.cosine(col(vecCol), col("qe")).as("sim"))
       .orderBy(col("sim").desc, col(idCol)).limit(k)
 
+  /** Driver-side lattice hyperplane signature of one vector, the reference
+    * for [[Similarity.hyperplaneSignatureLatticeAt]]: bit i is set when
+    * Σ_j v_j · (((p·31 + j·17) mod 7) − 3) ≥ 0 for plane p = table·bits + i,
+    * summed in doubles in index order like the engine's fold. */
+  def latticeSignature(v: Array[Float], bits: Int, table: Int): Long =
+    (0 until bits).map { i =>
+      val p = table * bits + i
+      val proj = v.indices.foldLeft(0.0) { (acc, j) =>
+        acc + v(j).toDouble * (((p * 31 + j * 17) % 7) - 3).toDouble }
+      if (proj >= 0) 1L << i else 0L
+    }.sum
+
+  /** Exact cosine of two float vectors, summed in doubles. */
+  def cosine(a: Array[Float], b: Array[Float]): Double = {
+    var dp = 0.0; var na = 0.0; var nb = 0.0
+    a.indices.foreach { j =>
+      dp += a(j).toDouble * b(j); na += a(j).toDouble * a(j)
+      nb += b(j).toDouble * b(j)
+    }
+    dp / math.sqrt(na * nb)
+  }
+
   /** Inverse Hilbert walk (d → cell) on the 16-bit × 16-bit grid, the
     * round-trip partner of [[graft.functions.HilbertOps.xy2d16]]. */
   def d2xy16(d: Long): (Long, Long) = {

@@ -220,7 +220,7 @@ class TransformsSpec extends AnyFunSuite {
   test("deterministicShuffle: bijective permutation, partitioning-invariant") {
     val df = (0L until 1000L).toDF("id")
     def rows(d: org.apache.spark.sql.DataFrame) =
-      Transforms.deterministicShuffle(d, "id", shards = 8)
+      Transforms.deterministicShuffle(d, "id")
         .as[(Long, Long, Long)].collect().toSet
     val once = rows(df)
     // reproducible under any input partitioning — the scale property
@@ -271,7 +271,7 @@ class TransformsSpec extends AnyFunSuite {
       (u, t, new java.sql.Timestamp(s * 1000), id)
     }.toDF("user_id", "event_type", "ts", "event_id")
     val got = Transforms.sequenceFeatures(ev, "user_id", "event_type",
-        "ts", "event_id", k = 5)
+        "ts", "event_id")
       .collect().map(r => r.getAs[Long]("user_id") ->
         ((1 to 5).map(i => r.getAs[Long](s"f$i")),
           r.getAs[Long]("n_recent"))).toMap
@@ -320,7 +320,7 @@ class TransformsSpec extends AnyFunSuite {
       }.toDF("user_id", "event_type", "ts", "event_id", "value")
     val got = Transforms.linearAttribution(ev, "user_id", "event_type",
         "ts", "event_id", "value", Seq("view", "click"), "purchase",
-        lookbackSeconds = 100L, maxTouches = 5)
+        lookbackSeconds = 100L)
       .collect().map(r => r.getAs[String]("touch_type") ->
         (r.getAs[Long]("n_credits"), r.getAs[Long]("credit_u"),
           r.getAs[Long]("revenue_mu"))).toMap
@@ -346,7 +346,7 @@ class TransformsSpec extends AnyFunSuite {
       .toDF("user_id", "event_type", "ts", "event_id", "value")
     val got = Transforms.linearAttribution(ev, "user_id", "event_type",
         "ts", "event_id", "value", Seq("view", "click"), "purchase",
-        lookbackSeconds = 100L, maxTouches = 5)
+        lookbackSeconds = 100L)
       .collect().map(r => r.getAs[String]("touch_type") ->
         (r.getAs[Long]("n_credits"), r.getAs[Long]("credit_u"),
           r.getAs[Long]("revenue_mu"))).toMap
@@ -376,7 +376,7 @@ class TransformsSpec extends AnyFunSuite {
     val ev = Seq((1L, 0L), (2L, 20 * day), (3L, 20 * day), (3L, 0L))
       .map { case (u, s) => (u, new java.sql.Timestamp(s * 1000)) }
       .toDF("user_id", "ts")
-    val got = Transforms.churnSnapshot(ev, "user_id", "ts", 14)
+    val got = Transforms.churnSnapshot(ev, "user_id", "ts")
       .collect().map(r => r.getAs[Long]("days_inactive") ->
         (r.getAs[Long]("n_users"), r.getAs[Boolean]("is_churned"),
           r.getAs[Double]("share_r"))).toMap
@@ -483,7 +483,8 @@ class TransformsSpec extends AnyFunSuite {
     import spark.implicits._
     val day = 86400L
     val ev = Seq(
-      // user 1 active days 0 and 1 → covers days 0..7 but counts ONCE per day
+      // user 1 active days 0 and 1 → covers days 0..7 (the 7-day window)
+      // but counts ONCE per day
       (1L, 0L), (1L, day),
       // user 2 active day 3 only
       (2L, 3 * day),
@@ -491,7 +492,7 @@ class TransformsSpec extends AnyFunSuite {
       (1L, day + 100L)
     ).map { case (u, s) => (u, new java.sql.Timestamp(s * 1000)) }
       .toDF("user_id", "ts")
-    val got = Transforms.rollingActiveUsers(ev, "user_id", "ts", 3)
+    val got = Transforms.rollingActiveUsers(ev, "user_id", "ts")
       .collect().map(r => r.getAs[java.sql.Date]("day").toString ->
         (r.getAs[Long]("dau"), r.getAs[Long]("wau"),
           r.getAs[Double]("stickiness_r"))).toMap
@@ -513,7 +514,7 @@ class TransformsSpec extends AnyFunSuite {
       (2L, 7L, 6L)
     ).map { case (u, s, id) => (u, new java.sql.Timestamp(s * 1000), id) }
       .toDF("user_id", "ts", "event_id")
-    val got = Transforms.interEventGaps(ev, "user_id", "ts", "event_id", 20)
+    val got = Transforms.interEventGaps(ev, "user_id", "ts", "event_id")
       .collect().map(r => r.getAs[Long]("bucket") ->
         (r.getAs[Long]("n"), r.getAs[Long]("lo_s"), r.getAs[Long]("hi_s")))
       .toMap

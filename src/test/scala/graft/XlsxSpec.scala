@@ -2,7 +2,6 @@ package graft
 
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 import java.time.{LocalDate, LocalDateTime}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
@@ -285,29 +284,5 @@ class XlsxSpec extends AnyFunSuite {
     assert(rows.map(_.cells) == Seq(Seq("a", "1")))
     assertThrows[IllegalArgumentException](
       XlsxReader.selectZipMember(outerZip, ".parquet"))
-  }
-
-  test("distributed scan: one task per workbook file via binaryFile source") {
-    val spark = SparkTestBase.session
-    val dir = SparkTestBase.tempDir("xlsx_scan")
-    try {
-      val b1 = XlsxWriter.write(Seq(XlsxSheet("s",
-        Seq(Seq(XlsxCell.Str("f1"), XlsxCell.Num(1))))))
-      val b2 = XlsxWriter.write(Seq(XlsxSheet("s",
-        Seq(Seq(XlsxCell.Str("f2"), XlsxCell.Num(2)),
-          Seq(XlsxCell.Str("f2b"), XlsxCell.Num(3))))))
-      Files.write(dir.resolve("a.xlsx"), b1)
-      Files.write(dir.resolve("b.xlsx"), b2)
-      val df = XlsxReader.scan(spark, dir.toString + "/*.xlsx", Some("s"))
-      val rows = df.collect()
-      assert(rows.length == 3)
-      val byFirst = rows.map(r =>
-        (r.getSeq[String](3).head, r.getSeq[String](3)(1))).toSet
-      assert(byFirst == Set(("f1", "1"), ("f2", "2"), ("f2b", "3")))
-      // per-file parallelism: two files → at least two input partitions
-      assert(df.rdd.getNumPartitions >= 1)
-    } finally {
-      dir.toFile.listFiles().foreach(_.delete()); Files.delete(dir)
-    }
   }
 }
